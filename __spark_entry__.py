@@ -2,19 +2,13 @@
 
 ``entry``     — flagship extraction pipeline on sf0.001 (pages derived
                 deterministically from the documents table).
-``queries``   — one entry per implemented operator family (SURVEY.md §2
-                relational checklist + training-data ops); each callable
+``queries``   — every gate of ``GATES``, in order; each callable
                 takes (spark, sf_dir) and returns a DataFrame.
 ``oracle_sql``— matching ANSI SQL for DuckDB on the same parquet views.
                 Extraction-pipeline entries are rows-only (DuckDB cannot
                 parse HTML); their byte-identity gate is the pytest
                 golden suite (tests/test_local_golden.py,
                 tests/test_spark_pipeline.py).
-
-Column-name + value parity rules used throughout: every aggregate is
-aliased identically on both sides; doubles are rounded; sums of integers
-cast to bigint; hashes use the md5-based portable 60-bit hash so Spark
-and DuckDB agree bit-for-bit.
 """
 
 from __future__ import annotations
@@ -25,4840 +19,159 @@ from collections.abc import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import pandas as pd  # noqa: E402
-from pyspark.sql import DataFrame, SparkSession, Window  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 
-from origami_spark.operators import dedup as D  # noqa: E402
-from origami_spark.operators import similarity as S  # noqa: E402
-from origami_spark.operators import text as T  # noqa: E402
-from origami_spark.operators import multimodal as M  # noqa: E402
-from origami_spark.pipeline import extract  # noqa: E402
-from origami_spark.sources.corpus import PAGES_SCHEMA, generate_page  # noqa: E402
+from gates import (ROWS_ONLY, dedup, events, extract, graph,  # noqa: E402
+                   models, relational, sampling, similarity, sketch, text,
+                   web)
 
 SF_DEFAULT = "/root/testdata/sf0.001"
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def _spread(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Fan an unsplittable scan out to the session's parallelism.
-
-    The sf tables are single-row-group parquet files, so their scans
-    yield ONE non-empty partition and every scan-fused projection
-    (tokenize, md5, regexp, JSON extraction) runs on one core — the
-    "one huge unsplittable file" input-skew case of the optimization
-    guide (§2.5: repartition immediately after the read).  Repartition
-    never changes row content, only placement.  Pass ``key`` (a
-    unique/high-cardinality column) to hash-partition WITHOUT the
-    local sort that keyless round-robin pays first
-    (spark.sql.execution.sortBeforeRepartition, the SPARK-23207 retry
-    guard): on a one-partition source that sort runs serially over the
-    whole table — measured 2x on the 1M-row events table.  The target
-    derives from the session (never a hard-coded core count); when the
-    source already has that many partitions — a real cluster's
-    splittable inputs — no repartition node is added, so the scale
-    plan keeps scan-level pushdown and pays no extra exchange.
-    Applied per-query to the compute-heavy paths only, AFTER any
-    pushable filters."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    if key is not None:
-        return df.repartition(target, F.col(key))
-    return df.repartition(target)
-
-
-def _pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Common-Crawl-style pages keyed by doc_id (seed=42).
-
-    The corpus generator is a pure function of (seed, doc_id), so the
-    same sf_dir always yields the same pages on any cluster."""
-    ids = _t(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches):
-        for pdf in batches:
-            yield pd.DataFrame([generate_page(42, int(i)) for i in pdf["doc_id"]])
-
-    return ids.mapInPandas(gen, schema=PAGES_SCHEMA)
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full extraction pipeline at sf0.001."""
-    pages = _pages_from_documents(spark, SF_DEFAULT)
-    out = extract(spark, pages)
-    return out.select("url", "text", F.size("spans").alias("n_blocks"))
-
-
-# ---------------------------------------------------------------------------
-# relational checklist queries (SURVEY.md §2.10)
-# ---------------------------------------------------------------------------
-
-def q01_pricing_summary(spark, sf):
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "2024-09-01")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("sum_disc_price"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def q02_topk_orders(spark, sf):
-    return (
-        _t(spark, sf, "orders")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(10)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
-
-
-def q03_region_revenue(spark, sf):
-    li, o = _t(spark, sf, "lineitem"), _t(spark, sf, "orders")
-    c, n, r = (_t(spark, sf, "customer"), _t(spark, sf, "nation"),
-               _t(spark, sf, "region"))
-    # aggregate lineitem per order BEFORE the join (guide §2.3): the
-    # big side enters the orderkey exchange as one row per order
-    # instead of one per line item (6M -> 1.5M rows at sf1.0, measured
-    # 3.4 s -> 1.5 s).  Revenue is a double sum either way (partial
-    # aggregation already made its order partition-dependent), and the
-    # count is an exact integer sum of per-order counts — the oracle
-    # comparison is unchanged and hash-matches at every sf.
-    la = li.groupBy("l_orderkey").agg(
-        F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-        .alias("_rev"),
-        F.count(F.lit(1)).alias("_n"),
-    )
-    return (
-        la.join(o, la.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name")
-        .agg(
-            F.round(F.sum("_rev"), 2).alias("revenue"),
-            F.sum("_n").cast("bigint").alias("n_items"),
-        )
-    )
-
-
-def q04_anti_join(spark, sf):
-    c, o = _t(spark, sf, "customer"), _t(spark, sf, "orders")
-    inactive = c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-    return inactive.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_inactive")
-    )
-
-
-def q05_semi_join(spark, sf):
-    p, li = _t(spark, sf, "part"), _t(spark, sf, "lineitem")
-    heavy = p.join(
-        li.filter(F.col("l_quantity") > 45), p.p_partkey == li.l_partkey,
-        "left_semi",
-    )
-    return heavy.groupBy("p_brand").agg(F.count(F.lit(1)).alias("n_parts"))
-
-
-def q06_window_adjacency(spark, sf):
-    ev = _t(spark, sf, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    return (
-        ev.withColumn("new_session",
-                      F.when(gap.isNull() | (gap > 1800), 1).otherwise(0))
-        .groupBy("user_id")
-        .agg(
-            F.sum("new_session").cast("bigint").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-
-
-def q07_running_containment(spark, sf):
-    ev = _t(spark, sf, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return (
-        ev.withColumn("prev_max", F.max("value").over(w))
-        .withColumn(
-            "contained",
-            F.when(F.col("value") <= F.col("prev_max"), 1).otherwise(0),
-        )
-        .groupBy("user_id")
-        .agg(F.sum("contained").cast("bigint").alias("n_contained"))
-    )
-
-
-def q08_group_percentiles(spark, sf):
-    return (
-        _t(spark, sf, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.round(F.expr("percentile(o_totalprice, 0.5)"), 4).alias("median_price"),
-            F.round(F.expr("percentile(o_totalprice, 0.9)"), 4).alias("p90_price"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
-
-
-def q09_ordered_assembly(spark, sf):
-    li = _t(spark, sf, "lineitem")
-    return (
-        li.groupBy("l_orderkey")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("l_linenumber", "l_partkey"))
-                    ),
-                    lambda s: s["l_partkey"].cast("string"),
-                ),
-                ",",
-            ).alias("parts_in_line_order")
-        )
-    )
-
-
-def q10_interval_overlap(spark, sf):
-    ev = _t(spark, sf, "events").select("user_id", "event_id", "value")
-    a, b = ev.alias("a"), ev.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.user_id") == F.col("b.user_id"))
-        & (F.col("a.event_id") < F.col("b.event_id"))
-        & (F.col("a.value") < F.col("b.value") + 50)
-        & (F.col("b.value") < F.col("a.value") + 50),
-    )
-    return pairs.groupBy(F.col("a.user_id").alias("user_id")).agg(
-        F.count(F.lit(1)).alias("n_overlapping")
-    )
-
-
-def q11_rollup(spark, sf):
-    return (
-        _t(spark, sf, "events")
-        .rollup("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-    )
-
-
-def q12_week_buckets(spark, sf):
-    return (
-        _t(spark, sf, "events")
-        .groupBy(
-            F.date_format(F.date_trunc("week", "ts"), "yyyy-MM-dd").alias("week")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("value"), 4).alias("avg_value"),
-        )
-    )
-
-
-def q13_set_except(spark, sf):
-    ev = _t(spark, sf, "events")
-    signup = ev.filter("event_type = 'signup'").select("user_id").distinct()
-    errors = ev.filter("event_type = 'error'").select("user_id").distinct()
-    return signup.exceptAll(errors).select(F.col("user_id").alias("clean_user"))
-
-
-def q14_exploded_tokens(spark, sf):
-    docs = _t(spark, sf, "documents").filter(F.col("doc_id") < 50)
-    return docs.select(
-        "doc_id", F.posexplode(T.tokens_col()).alias("pos", "token")
-    ).withColumn("pos", (F.col("pos") + 1).cast("bigint"))
-
-
-def q15_cube(spark, sf):
-    return (
-        _t(spark, sf, "events")
-        .cube("event_type", F.year("ts").alias("yr"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.round(F.avg("value"), 4).alias("avg_value"))
-    )
-
-
-def q16_topk_per_group(spark, sf):
-    o = _t(spark, sf, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        o.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= 3)
-        .select("o_orderpriority", "o_orderkey", "o_totalprice", "rk")
-    )
-
-
-def q17_harmonize(spark, sf):
-    """Text harmonization chain (the reference's only golden-pair tests
-    live in its harmonization schema, custom/harmonizations/default.py:
-    36-50): regexp_replace pipeline + trim + lowercase, applied to
-    documents and grouped by outcome length."""
-    docs = _t(spark, sf, "documents")
-    harmonized = docs.select(
-        "doc_id",
-        F.trim(
-            F.regexp_replace(
-                F.regexp_replace(F.lower("text"), "[0-9]+", "#"),
-                "\\s+", " ",
-            )
-        ).alias("harm"),
-    )
-    return harmonized.select(
-        "doc_id",
-        F.length("harm").cast("bigint").alias("harm_len"),
-        F.substring("harm", 1, 20).alias("harm_head"),
-    )
-
-
-def q18_date_arithmetic(spark, sf):
-    o = _t(spark, sf, "orders")
-    return (
-        o.select(
-            "o_orderkey",
-            F.datediff(F.lit("2025-01-01").cast("date"),
-                       F.col("o_orderdate").cast("date"))
-            .cast("bigint").alias("age_days"),
-            F.dayofweek("o_orderdate").cast("bigint").alias("dow"),
-            F.date_format(F.add_months(F.col("o_orderdate"), 3), "yyyy-MM")
-            .alias("plus3m"),
-        )
-    )
-
-
-def q19_union_intersect(spark, sf):
-    ev = _t(spark, sf, "events")
-    a = ev.filter("event_type = 'click'").select("user_id").distinct()
-    b = ev.filter("event_type = 'purchase'").select("user_id").distinct()
-    return (
-        a.intersect(b).withColumn("kind", F.lit("both"))
-        .unionByName(
-            a.union(b).distinct().withColumn("kind", F.lit("either"))
-        )
-        .groupBy("kind").agg(F.count(F.lit(1)).alias("n_users"))
-    )
-
-
-def q20_salted_groupby(spark, sf):
-    """Two-phase skew-safe aggregation (SURVEY.md §4 skew handling):
-    salt the hot key, partial-agg per (key, salt), then final agg.
-    Must be value-identical to the direct groupBy — the oracle is the
-    direct form."""
-    ev = _t(spark, sf, "events")
-    salted = ev.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(8)))
-    partial = salted.groupBy("user_id", "_salt").agg(
-        F.count(F.lit(1)).alias("pn"),
-        F.sum("value").alias("psum"),
-    )
-    return partial.groupBy("user_id").agg(
-        F.sum("pn").alias("n_events"),
-        F.round(F.sum("psum"), 2).alias("sum_value"),
-    )
-
-
-def q21_correlated_subquery(spark, sf):
-    """Orders above their customer's average price (decorrelation —
-    Catalyst rewrites this to a join; the reference has no optimizer,
-    SURVEY.md §4)."""
-    o = _t(spark, sf, "orders")
-    o.createOrReplaceTempView("_orders_v")
-    return spark.sql("""
-        SELECT o.o_orderkey, o.o_custkey,
-               round(o.o_totalprice, 2) AS price
-        FROM _orders_v o
-        WHERE o.o_totalprice > 1.5 * (
-            SELECT avg(i.o_totalprice) FROM _orders_v i
-            WHERE i.o_custkey = o.o_custkey)
-    """)
-
-
-def q23_json_extract(spark, sf):
-    """JSON scalar extraction from the events props column (string/json
-    function family of the checklist)."""
-    ev = _t(spark, sf, "events")
-    return (
-        ev.select(
-            "event_id",
-            F.get_json_object("props", "$.k").cast("bigint").alias("k"),
-        )
-        .groupBy((F.col("k") % 10).alias("k_mod"))
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.sum("k").alias("sum_k"))
-    )
-
-
-def q22_distinct_counts(spark, sf):
-    ev = _t(spark, sf, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("exact_users"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def q24_top_supplier_per_nation(spark, sf):
-    """Top revenue supplier per nation: big-side agg -> dim joins
-    (nation broadcast) -> per-group top-1 window.  Completes table
-    coverage (supplier was the one driver table no query touched).
-
-    Parity note: ranking on a rounded float sum shares the known
-    boundary hazard of every rounded-sum oracle here (q01/q03/q08) —
-    engines summing in different orders could round a value straddling
-    a .005 boundary differently.  Verified value-identical at sf0.001
-    and sf0.01; the s_suppkey tie-break keeps equal-value ordering
-    deterministic."""
-    li = _t(spark, sf, "lineitem")
-    s, n = _t(spark, sf, "supplier"), _t(spark, sf, "nation")
-    rev = li.groupBy("l_suppkey").agg(
-        F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2)
-        .alias("revenue")
-    )
-    j = (
-        rev.join(s, rev.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-    )
-    w = Window.partitionBy("n_name").orderBy(F.desc("revenue"),
-                                             F.asc("s_suppkey"))
-    return (
-        j.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") == 1)
-        .select("n_name", "s_suppkey", "s_name", "revenue")
-    )
-
-
-# ---------------------------------------------------------------------------
-# training-data operators
-# ---------------------------------------------------------------------------
-
-def dedup_exact(spark, sf):
-    # min_count=1: the testdata corpus has no exact duplicates, so the
-    # evidence-bearing result is the full digest table the dedup join
-    # consumes (0 matching rows would be a trivially-true oracle)
-    return D.exact_duplicates(_t(spark, sf, "documents"), min_count=1)
-
-
-def dedup_exact_normalized(spark, sf):
-    """ccnet-normalized exact dedup (operators/dedup.ccnet_normalize,
-    Wenzek et al. 2020 §3.1): digests over lowercased, digit- and
-    punctuation-stripped, whitespace-collapsed text — catches the
-    trivially-differing re-serve class raw digests miss.  min_count=1
-    for the dedup_exact rationale (the full digest table is the
-    evidence; the synthetic corpus has no duplicates)."""
-    return D.exact_duplicates(_t(spark, sf, "documents"), min_count=1,
-                              normalized=True)
-
-
-def dedup_ngram_jaccard(spark, sf):
-    # max_df=5 exercises the hot-shingle cutoff (sf0.01 dfs reach 7):
-    # ubiquitous shingles leave the inverted index before the self-join
-    return D.ngram_jaccard_pairs(_t(spark, sf, "documents"), n=3,
-                                 threshold=0.2, max_df=5)
-
-
-def dedup_minhash_lsh(spark, sf):
-    return D.minhash_lsh_candidates(_t(spark, sf, "documents"), n=3, k=16, bands=4)
-
-
-def dedup_incremental(spark, sf):
-    """Incremental near-dup against a persisted signature index
-    (operators/dedup.py signature_index/incremental_candidates): the
-    corpus (doc_id % 4 != 0) is indexed once; the arriving batch
-    (doc_id % 4 == 0) emits only pairs touching the batch — corpus
-    pairs amortized away.  Banding identical to dedup_minhash_lsh, so
-    the oracle reuses its CTEs with the split as join predicates."""
-    docs = _t(spark, sf, "documents")
-    corpus = docs.filter(F.col("doc_id") % 4 != 0)
-    batch = docs.filter(F.col("doc_id") % 4 == 0)
-    idx = D.signature_index(corpus)
-    return D.incremental_candidates(batch, idx)
-
-
-def dedup_incremental_exact(spark, sf):
-    """Incremental EXACT dedup against a persisted digest index
-    (operators/dedup.digest_index/incremental_exact).  The corpus
-    ships no exact duplicates, so the query synthesizes them with a
-    deterministic source-id remap covering all three decision cases:
-    doc_ids ≡ {0,4,16} (mod 48) share the 48-multiple's text — groups
-    entirely in the batch (doc_id % 4 == 0), so the min id keeps;
-    ids ≡ {8,9,10} (mod 48) share the +8 member's text — the batch doc
-    (+8) collides with indexed corpus copies (+9,+10) and drops;
-    everything else is unique and keeps.  The oracle mirrors the remap
-    and the keep/dup_of rule in direct SQL."""
-    docs = _t(spark, sf, "documents")
-    src = docs.select(
-        "doc_id",
-        F.expr(
-            "CASE WHEN doc_id % 48 IN (0, 4, 16)"
-            "     THEN doc_id - doc_id % 48 "
-            "     WHEN doc_id % 48 IN (8, 9, 10)"
-            "     THEN doc_id - doc_id % 48 + 8 "
-            "     ELSE doc_id END").alias("src"),
-    )
-    texts = docs.select(F.col("doc_id").alias("src"), "text")
-    remapped = src.join(texts, "src").select("doc_id", "text")
-    corpus = remapped.filter(F.col("doc_id") % 4 != 0)
-    batch = remapped.filter(F.col("doc_id") % 4 == 0)
-    idx = D.digest_index(corpus)
-    return D.incremental_exact(batch, idx)
-
-
-def _component_keep(pairs, nodes, node_col="doc_id",
-                    src="doc_a", dst="doc_b"):
-    """Candidate pairs -> connected components -> (node, component,
-    keep = node == component min).  ONE copy of the transitive
-    keep-one labeling shared by every *_keep query; its oracle twin is
-    ``_reach_comp_cte``.  Eager-builder: the component loop executes
-    at build time (ann_ivf_topk trainer precedent)."""
-    from origami_spark.operators.components import connected_components
-
-    comp = connected_components(pairs, src=src, dst=dst,
-                                node_col=node_col, nodes=nodes)
-    return comp.select(
-        node_col, "component",
-        (F.col(node_col) == F.col("component")).alias("keep"))
-
-
-def dedup_components(spark, sf):
-    """Near-dup CLUSTERS from candidate pairs: alternating large/small
-    star connected components (operators/components.py, Kiveris et al.
-    2014) over the minhash banding graph, every document labeled with
-    its cluster's min doc_id plus the cluster size.  The oracle is a
-    DuckDB recursive CTE propagating min labels over the same pairs.
-    NB building this frame EXECUTES the clustering loop (per-round
-    eager checkpoints + convergence probes) — the same eager-builder
-    shape as ann_ivf_topk's trainer; plan-only consumers pay the run."""
-    from origami_spark.operators.components import connected_components
-
-    docs = _t(spark, sf, "documents")
-    cand = D.minhash_lsh_candidates(docs, n=3, k=16, bands=4)
-    comp = connected_components(cand, nodes=docs.select("doc_id"))
-    size = comp.groupBy("component").agg(F.count(F.lit(1)).alias("csize"))
-    return comp.join(size, "component").select("doc_id", "component", "csize")
-
-
-def dedup_substring(spark, sf):
-    # exact repeated-substring pairs (Lee et al. 2022 shape) via
-    # alignment-free winnowing fingerprints; max_df bounds the hot-key
-    # bucket a boilerplate fragment would otherwise create at scale
-    return D.substring_dup_pairs(_t(spark, sf, "documents"),
-                                 window=64, k=16, max_df=5)
-
-
-def dedup_span_removal(spark, sf):
-    # the APPLICATION step of exact-substring dedup (Lee et al. 2022):
-    # maximal duplicated spans to remove from all but the earliest copy.
-    # skip_covered=False = the exhaustive, order-independent extension —
-    # exactly what the DuckDB oracle reproduces via monotone
-    # substring-equality counting
-    return D.duplicate_spans(_t(spark, sf, "documents"),
-                             window=64, k=16, max_df=5,
-                             skip_covered=False)
-
-
-def dedup_simhash(spark, sf):
-    return D.simhash_near_dups(_t(spark, sf, "documents"), bits=32, bands=4,
-                               max_hamming=6)
-
-
-def dedup_substring_keep(spark, sf):
-    """Transitive keep-one over the winnowing SUBSTRING pair graph:
-    docs sharing any >= window-char passage (at any alignment) are
-    clustered via the alternating-star component loop and exactly one
-    per cluster keeps.  This is the whole-doc POLICY consumer of
-    dedup_substring's pair evidence (the passage-surgery consumer is
-    dedup_span_removal).  Same eager-builder caveat as
-    dedup_components."""
-    docs = _t(spark, sf, "documents")
-    pairs = D.substring_dup_pairs(docs, window=64, k=16, max_df=5)
-    return _component_keep(pairs, docs.select("doc_id"))
-
-
-def dedup_simhash_keep(spark, sf):
-    """Transitive keep-one over the SIMHASH pair graph: the verified
-    hamming<=6 pairs feed the same alternating-star component loop as
-    dedup_components (a~b~c is ONE cluster even when a,c share no
-    band), every doc labeled (component, keep = doc_id == component).
-    Same eager-builder caveat as dedup_components; the oracle chains
-    the dedup_simhash CTE into the recursive min-label reach."""
-    docs = _t(spark, sf, "documents")
-    pairs = D.simhash_near_dups(docs, bits=32, bands=4, max_hamming=6)
-    return _component_keep(pairs, docs.select("doc_id"))
-
-
-def dedup_embedding(spark, sf):
-    # max pairwise cosine in the testdata is ~0.51; 0.4 yields real pairs
-    return D.embedding_near_dups(_t(spark, sf, "embeddings"), threshold=0.4)
-
-
-def dedup_embedding_lsh(spark, sf):
-    # planes=8 -> 256 buckets/table keeps candidate sets small (the
-    # bucket-size/recall tradeoff: 4 tables still give ~0.9 recall at
-    # the cos>=0.95 design point); 6x8 was 30x more candidate pairs
-    return D.embedding_near_dups_lsh(_spread(_t(spark, sf, "embeddings"), "vec_id"),
-                                     threshold=0.4, planes=8, tables=8)
-
-
-def dedup_embedding_contamination(spark, sf):
-    """Semantic benchmark decontamination (operators/dedup.
-    embedding_contamination): corpus vectors flagged when any of the
-    10 'benchmark' vectors (ids 0..9 of the same table — real usage
-    is a disjoint suite) sits within cosine 0.4; bench signatures
-    broadcast, corpus never shuffles, flags broadcast back."""
-    emb = _spread(_t(spark, sf, "embeddings"), "vec_id")
-    bench = emb.filter(F.col("vec_id") < 10)
-    return D.embedding_contamination(emb, bench, threshold=0.4,
-                                     planes=8, tables=8)
-
-
-def ann_cosine_topk(spark, sf):
-    return S.cosine_topk(_spread(_t(spark, sf, "embeddings"), "vec_id"),
-                         list(range(8)), k=5, dim=64)
-
-
-def ann_lsh_topk(spark, sf):
-    # multi-table LSH approximate top-k; recall vs cosine_topk asserted
-    # in tests/test_similarity.py, value parity gated by the oracle below.
-    # planes=4/tables=16 is the weak-neighbour design point: this corpus's
-    # true top-5 sit at cos ~0.3 (theta ~72deg -> per-plane agreement
-    # ~0.6), so few planes + many tables buys recall ~0.95; a 0.95-cosine
-    # near-dup task uses 8 planes instead (see dedup_embedding_lsh)
-    return S.lsh_topk(_spread(_t(spark, sf, "embeddings"), "vec_id"),
-                      list(range(8)), k=5,
-                      planes=4, tables=16)
-
-
-# Cross-engine staging scratch paths (evidence/centroid tables the
-# DuckDB oracles re-read).  The correctness gate runs each Spark query
-# and then its oracle SEQUENTIALLY in one process, which is the only
-# supported pattern: two drivers staging concurrently on one host would
-# race on these paths (the oracle SQL is a static string, so it cannot
-# be parameterized per run).  Do not run two correctness gates at once.
-# The dir lives INSIDE the repo and is created mode 0700 (`_staged`):
-# a predictable world-writable /tmp path on a shared host could be
-# clobbered by any local user and silently feed the gate (ADVICE r3).
-_STAGE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          ".oracle_stage")
-IVF_CENTROIDS_PATH = os.path.join(_STAGE_DIR, "ivf_centroids.parquet")
-SEMDEDUP_CENTROIDS_PATH = os.path.join(_STAGE_DIR, "semdedup_centroids.parquet")
-LM_TABLE_PATH = os.path.join(_STAGE_DIR, "trigram_lm.parquet")
-NB_MODEL_PATH = os.path.join(_STAGE_DIR, "nb_model.parquet")
-PQ_CODEBOOKS_PATH = os.path.join(_STAGE_DIR, "pq_codebooks.parquet")
-IVFPQ_CENTROIDS_PATH = os.path.join(_STAGE_DIR, "ivfpq_centroids.parquet")
-IVFPQ_CODEBOOKS_PATH = os.path.join(_STAGE_DIR, "ivfpq_codebooks.parquet")
-BM25_STATS_PATH = os.path.join(_STAGE_DIR, "bm25_stats.parquet")
-DSIR_MODEL_PATH = os.path.join(_STAGE_DIR, "dsir_model.parquet")
-DSIR_GUMBEL_PATH = os.path.join(_STAGE_DIR, "dsir_gumbel.parquet")
-HTML_PAGES_PATH = os.path.join(_STAGE_DIR, "html_pages.parquet")
-CLUSTER_SAMPLE_CENTROIDS_PATH = os.path.join(
-    _STAGE_DIR, "cluster_sample_centroids.parquet")
-
-
-def _staged(path: str) -> str:
-    """Ensure the private staging dir exists before a write to ``path``."""
-    os.makedirs(_STAGE_DIR, mode=0o700, exist_ok=True)
-    return path
-
-
-def ann_ivf_topk(spark, sf):
-    """IVF approximate top-k, hash-gated: the k-means TRAINING stays
-    an iterative driver-loop (not SQL-expressible), but its output — the
-    centroid table — is staged to parquet; the SERVING path
-    (operators/similarity.ivf_topk_served) assigns the corpus through
-    the broadcast Arrow argmin kernel (zero Exchange/Sort before
-    assignment — tests/test_plan_quality.py), while the DuckDB oracle
-    reruns the bit-compatible relational window-argmin SQL over the
-    same staged centroids (parity: tests/test_similarity.py).  Recall
-    vs the exact scan is asserted in tests/test_similarity.py."""
-    # NO _spread here: this entry's serving contract is "zero Exchange/
-    # Sort between the scan and the Arrow argmin assignment"
-    # (test_plan_quality.test_ivf_assignment_is_exchange_free, VERDICT
-    # r3 item 1) — a scan fan-out would be a hashpartitioning(vec_id)
-    # exchange on the corpus side, exactly what the contract forbids
-    emb = _t(spark, sf, "embeddings")
-    staged = _stage_centroids(spark, emb, IVF_CENTROIDS_PATH, sf)
-    return S.ivf_topk_served(emb, staged, list(range(8)), k=5, nprobe=4)
-
-
-def ann_pq_topk(spark, sf):
-    """Product-quantization approximate top-k (similarity.pq_topk,
-    Jegou et al. 2011): the corpus compresses to M=8 one-byte codes per
-    vector, queries rank by an INTEGER asymmetric-distance sum (the
-    terms are floor-quantized micro-units, so the associative integer
-    sum — unlike a float sum — is identical under any partitioning and
-    in DuckDB), top-50 candidates re-rank with exact cosine.  Training
-    is the iterative driver loop (not SQL-expressible); its codebook
-    table is staged and the oracle re-derives codes, LUTs, and the ADC
-    ranking from the staged floats bit-for-bit."""
-    emb = _spread(_t(spark, sf, "embeddings"), "vec_id")
-    staged = _stage_pq_codebooks(spark, emb, PQ_CODEBOOKS_PATH, sf)
-    return S.pq_topk(emb, staged, list(range(8)), k=5, refine=50)
-
-
-# training is deterministic per corpus (lowest-vec_id init, fixed
-# iters), so within one process the staged model artifacts are
-# memoized per (path, sf): repeated calls (the bench's timed run after
-# its warm-up) measure the SERVE path, not Lloyd iterations + a stage
-# write; _TRAIN_CACHE holds the trained artifacts themselves (keyed by
-# kind + sf) so queries sharing a corpus never retrain byte-identical
-# tables just to stage them under their own per-query paths
-_TRAIN_STAGED: dict = {}
-_TRAIN_CACHE: dict = {}
-
-
-def _stage_pq_codebooks(spark, emb, path, sf):
-    """Stage the 8x16 PQ codebooks (sub, code, centroid, c_sq) to the
-    caller's per-query path; the TRAINING (5 Lloyd iterations per
-    subspace, all subspaces per job) runs once per (corpus) and its
-    output is shared — it is deterministic (lowest-vec_id init, fixed
-    iters), so every consumer would train byte-identical tables."""
-    if _TRAIN_STAGED.get(path) != sf:
-        key = ("pq", sf)
-        if key not in _TRAIN_CACHE:
-            _TRAIN_CACHE[key] = S.train_pq_codebooks(emb, iters=5)
-        cdf = S.pq_codebooks_df(spark, _TRAIN_CACHE[key])
-        cdf.coalesce(1).write.mode("overwrite").parquet(_staged(path))
-        _TRAIN_STAGED[path] = sf
-    return spark.read.parquet(path)
-
-
-def ann_ivfpq_topk(spark, sf):
-    """IVF-PQ composed serving (similarity.ivfpq_topk — the FAISS
-    IVFPQ architecture, by_residual=False): both trained artifacts
-    (coarse centroids + PQ codebooks, each its own staged parquet per
-    the per-query staging contract) drive a probe -> ADC -> exact-
-    refine plan whose corpus side is never exchanged before scoring;
-    the DuckDB oracle re-derives cluster assignment, probes, codes,
-    integer ADC, and the refine cut from the same staged floats."""
-    emb = _spread(_t(spark, sf, "embeddings"), "vec_id")
-    cents = _stage_centroids(spark, emb, IVFPQ_CENTROIDS_PATH, sf)
-    cbs = _stage_pq_codebooks(spark, emb, IVFPQ_CODEBOOKS_PATH, sf)
-    return S.ivfpq_topk(emb, cents, cbs, list(range(8)), k=5, nprobe=6,
-                        refine=40)
-
-
-def _stage_centroids(spark, emb, path, sf=None):
-    """Stage the 16-cluster/5-iter k-means quantizer as (cluster,
-    centroid, c_sq) to the caller's path — shared by ann_ivf_topk,
-    ann_ivfpq_topk, and dedup_semantic*, each staging its OWN file (the
-    gate's per-query contract: a query's oracle reads only what that
-    query staged).  Training is deterministic per corpus, so its output
-    is cached per sf and the stage write per (path, sf): repeated calls
-    in one process (the bench's warm-then-time protocol, the multi-SF
-    gate) never retrain byte-identical tables."""
-    if sf is None or _TRAIN_STAGED.get(path) != sf:
-        key = ("ivf", sf)
-        if sf is None or key not in _TRAIN_CACHE:
-            cents = S.train_ivf_centroids(emb, n_clusters=16, iters=5)
-            rows = [
-                (int(i), [float(v) for v in c],
-                 float(sum(float(v) * float(v) for v in c)))
-                for i, c in enumerate(cents)
-            ]
-            _TRAIN_CACHE[key] = rows
-        cdf = spark.createDataFrame(
-            _TRAIN_CACHE[key],
-            "cluster int, centroid array<double>, c_sq double")
-        cdf.coalesce(1).write.mode("overwrite").parquet(_staged(path))
-        if sf is not None:
-            _TRAIN_STAGED[path] = sf
-    return spark.read.parquet(path)
-
-
-def dedup_semantic(spark, sf):
-    """SemDeDup (operators/similarity.semantic_dedup_pairs): k-means
-    partition the embeddings (trainer = the same iterative driver loop
-    as ann_ivf_topk; centroids staged for the oracle), exact cosine
-    restricted to within-cluster pairs.  The oracle reruns the
-    bit-compatible relational assignment (window argmin over the
-    _round6 distance) and the same rounded-cosine filter.  Builds
-    eagerly — the ann_ivf_topk trainer precedent."""
-    emb = _spread(_t(spark, sf, "embeddings"), "vec_id")
-    staged = _stage_centroids(spark, emb, SEMDEDUP_CENTROIDS_PATH, sf)
-    # the testdata corpus has no true near-dup embeddings (max pairwise
-    # cosine ~0.5), so the evidence-bearing threshold sits at the
-    # moderate-similarity band like dedup_embedding's 0.4
-    return S.semantic_dedup_pairs(emb, staged, threshold=0.35)
-
-
-def dedup_semantic_keep(spark, sf):
-    """SemDeDup's APPLICATION step: transitive keep-one over the
-    within-cluster cosine pairs (operators/components.connected_
-    components over semantic_dedup_pairs; Abbas et al. 2023 keep the
-    cluster representative).  Every embedding labeled with its
-    semantic component and the keep decision (vec_id == component
-    min).  The oracle reruns the staged-centroid assignment + pair
-    filter, then recursive min-label propagation — the
-    dedup_components CTE shape.  Eager-builder (the clustering loop
-    runs at build time — ann_ivf_topk precedent)."""
-    emb = _spread(_t(spark, sf, "embeddings"), "vec_id")
-    staged = _stage_centroids(spark, emb, SEMDEDUP_CENTROIDS_PATH, sf)
-    pairs = S.semantic_dedup_pairs(emb, staged, threshold=0.35)
-    return _component_keep(pairs, emb.select("vec_id"),
-                           node_col="vec_id", src="vec_a", dst="vec_b")
-
-
-def text_lm_quality(spark, sf):
-    """ccnet-style LM quality scoring (operators/lm.py, Wenzek et al.
-    2020): an order-2 char Markov model estimated from the corpus,
-    log-probs quantized to integers (partition-order-independent sums).
-    The model table — the only float-log surface — is staged to parquet
-    and the DuckDB oracle re-reads it, redoing the trigram explode,
-    broadcast join, and integer aggregation."""
-    from origami_spark.operators.lm import char_trigram_lm, lm_score
-
-    docs = _t(spark, sf, "documents")
-    lm = char_trigram_lm(docs)
-    lm.coalesce(1).write.mode("overwrite").parquet(_staged(LM_TABLE_PATH))
-    staged = spark.read.parquet(LM_TABLE_PATH)
-    return lm_score(docs, staged)
-
-
-def text_lm_buckets(spark, sf):
-    """ccnet's head/middle/tail strata (operators/lm.lm_buckets): rank
-    every scored document by (bits_per_char, doc_id) and cut into 3
-    equal-count buckets.  The engine rank is the decomposed 256-bins-
-    per-bit prefix (no single-partition window); the oracle is the
-    SERIAL row_number over the identical staged-model scores —
-    decomposed == serial is exactly the claim under test."""
-    from origami_spark.operators.lm import (char_trigram_lm, lm_buckets,
-                                            lm_score)
-
-    docs = _t(spark, sf, "documents")
-    lm = char_trigram_lm(docs)
-    lm.coalesce(1).write.mode("overwrite").parquet(_staged(LM_TABLE_PATH))
-    staged = spark.read.parquet(LM_TABLE_PATH)
-    return lm_buckets(lm_score(docs, staged), buckets=3)
-
-
-# the pinned "reference corpus" label for the classifier queries — the
-# GPT-3 recipe's positives (curated sources) vs crawl negatives; the
-# DuckDB oracle applies the identical membership rule
-_REF_SOURCES = ("src0", "src1", "src2", "src3")
-
-
-def _stage_nb_model(spark, sf):
-    """Train the reference-source NB model once per corpus and stage it
-    (memoized per (path, sf) like every trained artifact): the scoring
-    queries and the bench's timed runs measure the SCORE path, not the
-    wordcount-shaped training pass."""
-    from origami_spark.operators.classifier import nb_train
-
-    if _TRAIN_STAGED.get(NB_MODEL_PATH) != sf:
-        docs = _t(spark, sf, "documents")
-        lab = docs.withColumn(
-            "y", F.col("source").isin(*_REF_SOURCES).cast("int"))
-        model = nb_train(lab, "y")
-        model.coalesce(1).write.mode("overwrite").parquet(
-            _staged(NB_MODEL_PATH))
-        _TRAIN_STAGED[NB_MODEL_PATH] = sf
-    return spark.read.parquet(NB_MODEL_PATH)
-
-
-def text_classifier_score(spark, sf):
-    """GPT-3-style reference-corpus quality classifier
-    (operators/classifier.py, Brown et al. 2020 appendix A):
-    multinomial Naive Bayes over hashed tokens, trained on a pinned
-    reference-source label, log-likelihood ratios quantized to
-    integers (partition-order-independent sums).  The dense B-row
-    model — the only float-log surface — is staged to parquet and the
-    DuckDB oracle re-reads it, redoing the token explode, bucket hash,
-    broadcast join, and integer aggregation."""
-    from origami_spark.operators.classifier import nb_score
-
-    docs = _spread(_t(spark, sf, "documents"), "doc_id")
-    staged = _stage_nb_model(spark, sf)
-    return nb_score(docs, staged)
-
-
-def text_classifier_keep(spark, sf):
-    """The classifier as a corpus gate (classifier.nb_keep): keep
-    documents whose length-normalized log-odds clears -0.52 bits/token,
-    plus zero-token documents the model has no opinion on.  With 4 of
-    20 sources as positives every shared token carries net-negative
-    evidence, so scores center near -0.52 at both gate SFs (measured
-    quantiles: p25 -0.535 / p75 -0.506) — the threshold splits the
-    corpus ~half/half instead of degenerating to keep-none at 0.0.
-    The corpus side never shuffles — the reject set joins left-anti.
-    The comparison divides the same integers by the same staged q in
-    both engines (exact IEEE), so the gate cannot flip between
-    them."""
-    from origami_spark.operators.classifier import nb_keep, nb_score
-
-    docs = _spread(_t(spark, sf, "documents"), "doc_id")
-    staged = _stage_nb_model(spark, sf)
-    kept = nb_keep(docs, nb_score(docs, staged),
-                   min_llr_per_token=-0.52)
-    return kept.select("doc_id", "source")
-
-
-def _stage_dsir_model(spark, sf):
-    """Train the DSIR importance-weight model once per corpus and stage
-    it (memoized per (path, sf) like every trained artifact): target =
-    the pinned reference sources, raw = the full crawl (the paper's
-    setup — the raw side is the distribution documents are drawn from,
-    so the reference docs appear on both sides)."""
-    from origami_spark.operators.dsir import dsir_train
-
-    if _TRAIN_STAGED.get(DSIR_MODEL_PATH) != sf:
-        docs = _t(spark, sf, "documents")
-        target = docs.where(F.col("source").isin(*_REF_SOURCES))
-        model = dsir_train(target, docs)
-        model.coalesce(1).write.mode("overwrite").parquet(
-            _staged(DSIR_MODEL_PATH))
-        _TRAIN_STAGED[DSIR_MODEL_PATH] = sf
-    return spark.read.parquet(DSIR_MODEL_PATH)
-
-
-def text_dsir_score(spark, sf):
-    """DSIR importance weights (operators/dsir.py, Xie et al. 2023):
-    the quantized log likelihood-ratio of the target (reference
-    sources) vs raw (full crawl) hashed unigram+bigram distributions,
-    summed per document as partition-order-independent integers.  The
-    dense model — the only float-log surface — is staged to parquet
-    and the DuckDB oracle re-reads it, redoing the feature explode,
-    bucket hash, broadcast join, and integer aggregation."""
-    from origami_spark.operators.dsir import dsir_score
-
-    docs = _spread(_t(spark, sf, "documents"), "doc_id")
-    return dsir_score(docs, _stage_dsir_model(spark, sf))
-
-
-def sample_dsir_topk(spark, sf):
-    """DSIR hard top-k selection (operators/dsir.dsir_topk): keep the
-    50 most reference-like documents by quantized importance weight.
-    The engine rank is the decomposed bin-prefix top-k (bins that
-    cannot reach rank k are pruned before any window runs); the oracle
-    is the SERIAL row_number over the identical staged-model weights —
-    decomposed == serial is exactly the claim under test."""
-    from origami_spark.operators.dsir import dsir_score, dsir_topk
-
-    docs = _spread(_t(spark, sf, "documents"), "doc_id")
-    scored = dsir_score(docs, _stage_dsir_model(spark, sf))
-    return dsir_topk(scored, 50)
-
-
-def _stage_gumbel(spark, sf):
-    """Stage the 65,536-row quantized-Gumbel lookup (dsir.gumbel_table)
-    — the variate is a pure function of (q, u_bits), so the table is
-    corpus-independent, but the stage write is memoized like every
-    artifact so repeated calls measure the serve path."""
-    from origami_spark.operators.dsir import gumbel_table
-
-    if _TRAIN_STAGED.get(DSIR_GUMBEL_PATH) != sf:
-        gumbel_table(spark).coalesce(1).write.mode("overwrite").parquet(
-            _staged(DSIR_GUMBEL_PATH))
-        _TRAIN_STAGED[DSIR_GUMBEL_PATH] = sf
-    return spark.read.parquet(DSIR_GUMBEL_PATH)
-
-
-def sample_dsir_gumbel(spark, sf):
-    """DSIR Gumbel-top-k importance resampling (dsir.dsir_sample):
-    sampling-without-replacement ∝ w, made deterministic — each doc's
-    Gumbel variate is LOOKED UP by its seeded 16-bit hash in the
-    staged gumbel_table (the lm.py recipe: the float log2 runs only in
-    the engine at table-build time; the oracle re-reads the identical
-    integers and joins on the same hash index, so no engine recomputes
-    a transcendental inside the gate).  The serial row_number over the
-    perturbed keys is the oracle formulation."""
-    from origami_spark.operators.dsir import dsir_sample, dsir_score
-
-    docs = _spread(_t(spark, sf, "documents"), "doc_id")
-    scored = dsir_score(docs, _stage_dsir_model(spark, sf))
-    return dsir_sample(scored, 50, seed="g0",
-                       noise=_stage_gumbel(spark, sf))
-
-
-def text_bpe_encode(spark, sf):
-    """Distributed BPE tokenizer training + encoding (operators/bpe.py,
-    Sennrich et al. 2016): 40 merges learned from the corpus word-count
-    table (one bounded pair-count aggregate + a one-row argmax + a
-    pure-Catalyst fold per round — the iterative-trainer shape), then
-    every document encoded through an Arrow kernel applying the staged
-    merges.  Training is iterative and argmax-dependent, hence not
-    SQL-expressible — this is a rows-only gate row (the
-    extract_compose precedent); exactness is pinned by
-    tests/test_bpe.py against a pure-Python reference implementation
-    (merge-sequence equality incl. tie-breaks, encode-count equality,
-    partition independence)."""
-    from origami_spark.operators.bpe import (bpe_encode, bpe_merges_df,
-                                             bpe_train)
-
-    docs = _t(spark, sf, "documents")
-    key = ("bpe", sf)
-    if key not in _TRAIN_CACHE:
-        _TRAIN_CACHE[key] = bpe_train(docs, n_merges=40)
-    return bpe_encode(docs, bpe_merges_df(spark, _TRAIN_CACHE[key]))
-
-
-def text_token_stats(spark, sf):
-    return T.token_stats(_t(spark, sf, "documents"))
-
-
-def text_bpe_pretokens(spark, sf):
-    """BPE-ish token counting (operators/text.bpe_pretokens): the
-    GPT-2 pre-tokenizer piece count via an RE2-safe pattern, so the
-    DuckDB oracle runs the IDENTICAL regex and the split — not just
-    the count — matches."""
-    return T.bpe_pretokens(_t(spark, sf, "documents"))
-
-
-def text_chunks(spark, sf):
-    """Sliding-window chunking (operators/text.chunk_documents): the
-    embedding/RAG primitive — 200-char windows, 40-char overlap; chunk
-    boundaries are pure integer arithmetic, so the DuckDB oracle emits
-    the identical windows from a generate_series."""
-    return T.chunk_documents(_t(spark, sf, "documents"), size=200,
-                             overlap=40)
-
-
-def text_readability(spark, sf):
-    """Flesch-Kincaid grade (operators/text.readability): integer
-    word/sentence/vowel-group counts from the shared tokenizer and
-    sentence pattern, one exact-IEEE expression tree quantized by the
-    floor form — the oracle reproduces the grade bit-for-bit."""
-    from origami_spark.operators.text import readability
-
-    return readability(_t(spark, sf, "documents"))
-
-
-def text_sentences(spark, sf):
-    """Deterministic sentence segmentation (operators/text.
-    split_sentences): maximal non-terminator runs plus their trailing
-    .!? run, edge-stripped, dense 0-based ids — one RE2-safe regexp
-    pass, zero exchanges; the oracle runs the identical pattern."""
-    from origami_spark.operators.text import split_sentences
-
-    return split_sentences(_t(spark, sf, "documents"))
-
-
-def text_hash_embedding(spark, sf):
-    """Feature-hashing document embeddings (operators/embed.py,
-    Weinberger et al. 2009) in sparse form: one row per non-zero
-    coordinate, ``weight = bucket-sign-count / sqrt(sum of squares)``
-    quantized via the shared floor form.  Every ranking input is an
-    integer and the two float ops (IEEE sqrt of an integer, one
-    division) are bit-identical across engines, so the gate
-    hash-compares the weights exactly.  dim=16 keeps the oracle's
-    window tiny; the engine default is 64."""
-    from origami_spark.operators.embed import hashed_embedding_rows
-
-    return hashed_embedding_rows(_spread(_t(spark, sf, "documents"), "doc_id"), dim=16)
-
-
-def text_bm25_topk(spark, sf):
-    """BM25 ranked retrieval (operators/retrieval.py, Robertson &
-    Zaragoza 2009) for a pinned 3-term query: the idf/avgdl floats are
-    computed once at index time and STAGED (the lm.py recipe — no
-    cross-engine libm in the gate); per-(doc, term) contributions come
-    from a fixed exact-IEEE expression tree over the staged values,
-    quantized to integer micro-units and integer-summed per doc; top-10
-    via the two-level hash-group window (no corpus-wide single-task
-    sort)."""
-    from origami_spark.operators.retrieval import bm25_stats, bm25_topk
-
-    docs = _t(spark, sf, "documents")
-    # index stats are built once per corpus (deterministic), staged,
-    # and memoized per (path, sf) like every trained artifact — the
-    # bench's timed run measures the QUERY path, not the index build
-    if _TRAIN_STAGED.get(BM25_STATS_PATH) != sf:
-        stats = bm25_stats(docs, ["spark", "window", "merge"])
-        stats.coalesce(1).write.mode("overwrite").parquet(
-            _staged(BM25_STATS_PATH))
-        _TRAIN_STAGED[BM25_STATS_PATH] = sf
-    staged = spark.read.parquet(BM25_STATS_PATH)
-    return bm25_topk(_spread(docs, "doc_id"), staged, k=10)
-
-
-def text_quality(spark, sf):
-    return T.quality_score(_t(spark, sf, "documents"))
-
-
-def text_langid(spark, sf):
-    return T.lang_id(_t(spark, sf, "documents"))
-
-
-def text_fingerprint(spark, sf):
-    return T.fingerprint(_t(spark, sf, "documents"))
-
-
-def text_url_canonical(spark, sf):
-    """URL canonicalization for crawl dedup (functions.canonical_url):
-    URLs synthesized deterministically from doc_id so the DuckDB oracle
-    applies the identical regexp chain to identical inputs."""
-    from origami_spark.functions import canonical_url
-
-    docs = _t(spark, sf, "documents")
-    url = F.concat(
-        F.lit("HTTPS://WWW.Site"), (F.col("doc_id") % 7).cast("string"),
-        F.lit(".COM:443/a/"), F.col("doc_id").cast("string"),
-        F.lit("/?utm_source=x&id="), F.col("doc_id").cast("string"),
-        F.lit("#f"),
-    )
-    curl = canonical_url(url)
-    return docs.select(
-        "doc_id",
-        curl.alias("curl"),
-        F.regexp_extract(curl, "^https://([^/]+)", 1).alias("chost"),
-    )
-
-
-def _lines8_cols(decorate: bool = False):
-    """Deterministic 8-token line synthesis over the documents corpus
-    (it ships without newlines): chunk the shared tokenizer's output
-    into 8-word lines.  With ``decorate``, C4-trigger suffixes are
-    attached by line index (every 3rd line lacks terminal punctuation,
-    every 7th mentions javascript) — mirrored verbatim in the DuckDB
-    oracles."""
-    toks = T.tokens_col()
-    nch = F.ceil(F.size(toks) / F.lit(8.0)).cast("int")
-    seq = F.when(F.size(toks) > 0, F.sequence(F.lit(1), nch)).otherwise(
-        F.array().cast("array<int>")
-    )
-    if not decorate:
-        line = lambda i: F.concat_ws(" ", F.slice(toks, (i - 1) * 8 + 1, 8))  # noqa: E731
-    else:
-        line = lambda i: F.concat(  # noqa: E731
-            F.concat_ws(" ", F.slice(toks, (i - 1) * 8 + 1, 8)),
-            F.when(i % 7 == 0, F.lit(" javascript")).otherwise(F.lit("")),
-            F.when(i % 3 != 0, F.lit(".")).otherwise(F.lit("")),
-        )
-    return F.transform(seq, line)
-
-
-def text_repetition(spark, sf):
-    """Gopher-style repetition signals (operators/clean.py) over
-    line-synthesized documents plus a deterministic boilerplate line
-    (doubled on even doc_ids so dup-line signals are non-trivially
-    distributed)."""
-    from origami_spark.operators.clean import repetition_stats
-
-    docs = _t(spark, sf, "documents")
-    sent = F.lit("\nthe copied boilerplate line")
-    text2 = F.concat(
-        F.concat_ws("\n", _lines8_cols()),
-        sent,
-        F.when(F.col("doc_id") % 2 == 0, sent).otherwise(F.lit("")),
-    )
-    return repetition_stats(docs.select("doc_id", text2.alias("text")))
-
-
-def text_clean_lines(spark, sf):
-    """C4-style line filter (operators/clean.py) over decorated
-    line-synthesized documents; every 13th doc gains a lorem-ipsum
-    line and every 17th a curly brace, tripping the page-level drop."""
-    from origami_spark.operators.clean import clean_lines
-
-    docs = _t(spark, sf, "documents")
-    text2 = F.concat(
-        F.concat_ws("\n", _lines8_cols(decorate=True)),
-        F.when(F.col("doc_id") % 13 == 0, F.lit("\nlorem ipsum filler")).otherwise(F.lit("")),
-        F.when(F.col("doc_id") % 17 == 0, F.lit("\nsee { config }")).otherwise(F.lit("")),
-    )
-    return clean_lines(docs.select("doc_id", text2.alias("text")))
-
-
-def text_pii_scrub(spark, sf):
-    """PII scrubbing (operators/clean.py): e-mail/IPv4/long-digit-run
-    masks with per-kind counts, over documents salted with deterministic
-    synthetic PII (the corpus itself carries none)."""
-    from origami_spark.operators.clean import pii_scrub
-
-    docs = _t(spark, sf, "documents")
-    did = F.col("doc_id")
-    text3 = F.concat(
-        F.col("text"),
-        F.lit(" contact bob"), did.cast("string"), F.lit("@example.com"),
-        F.when(
-            did % 3 != 2,
-            F.concat(F.lit(" at 10."), (did % 200).cast("string"), F.lit(".0.7")),
-        ).otherwise(F.lit("")),
-        F.when(
-            did % 2 == 0,
-            F.concat(F.lit(" ref 1234567"), F.lpad((did % 100).cast("string"), 2, "0")),
-        ).otherwise(F.lit("")),
-    )
-    return pii_scrub(docs.select("doc_id", text3.alias("text")))
-
-
-def text_gopher_gate(spark, sf):
-    """Composite Gopher-rule gate (operators/clean.py) over the same
-    line-synthesized corpus as text_repetition; thresholds tightened so
-    every rule fires for part of the corpus (docs span ~8-90 tokens and
-    even doc_ids carry a duplicated boilerplate line)."""
-    from origami_spark.operators.clean import gopher_gate
-
-    docs = _t(spark, sf, "documents")
-    sent = F.lit("\nthe copied boilerplate line")
-    text2 = F.concat(
-        F.concat_ws("\n", _lines8_cols()),
-        sent,
-        F.when(F.col("doc_id") % 2 == 0, sent).otherwise(F.lit("")),
-    )
-    return gopher_gate(
-        docs.select("doc_id", text2.alias("text")),
-        min_tokens=30,
-        max_tokens=80,
-        min_stop_hits=2,
-        max_dup_line_frac=0.12,
-        max_dup_line_char_frac=0.15,
-        max_top_2gram_frac=0.10,
-        max_dup_5gram_frac=0.05,
-    )
-
-
-def dedup_paragraphs(spark, sf):
-    """ccnet-style corpus-wide paragraph dedup (operators/dedup.py):
-    the line-synthesized corpus plus the boilerplate sentinel gives
-    every doc a paragraph shared corpus-wide — only its globally first
-    occurrence survives."""
-    docs = _spread(_t(spark, sf, "documents"), "doc_id")
-    sent = F.lit("\nthe copied boilerplate line")
-    text2 = F.concat(
-        F.concat_ws("\n", _lines8_cols()),
-        sent,
-        F.when(F.col("doc_id") % 2 == 0, sent).otherwise(F.lit("")),
-    )
-    return D.paragraph_dedup(docs.select("doc_id", text2.alias("text")))
-
-
-def _skewed_url_docs(spark, sf):
-    """Documents with synthesized Zipf-ish skewed urls: two thirds of
-    the corpus lands on one mega-host, the rest spreads over 20 small
-    hosts — mirrored verbatim in the host_* oracles."""
-    docs = _t(spark, sf, "documents")
-    host = F.when(
-        F.col("doc_id") % 3 != 0, F.lit("big.example.com")
-    ).otherwise(
-        F.concat(F.lit("site"), (F.col("doc_id") % 20).cast("string"),
-                 F.lit(".example.com"))
-    )
-    url = F.concat(F.lit("https://"), host, F.lit("/p/"),
-                   F.col("doc_id").cast("string"))
-    return docs.select("doc_id", url.alias("url"), "text")
-
-
-def sample_split(spark, sf):
-    """Deterministic train/val/test assignment
-    (operators/sampling.split_assign): 98/1/1 by the portable hash of
-    (seed, doc_id) — stable under corpus growth, zero exchanges; the
-    oracle applies the identical cumulative thresholds."""
-    from origami_spark.operators.sampling import split_assign
-
-    docs = _t(spark, sf, "documents")
-    return split_assign(docs.select("doc_id", "source"))
-
-
-def sample_hash(spark, sf):
-    """Deterministic hash-threshold sampling (operators/sampling.py):
-    rate 0.25, seed 's0' — the same docs survive on every run, every
-    partitioning, and in the DuckDB oracle."""
-    from origami_spark.operators.sampling import hash_sample
-
-    docs = _t(spark, sf, "documents")
-    return hash_sample(docs, 0.25).select("doc_id", "n_chars")
-
-
-def sample_stratified(spark, sf):
-    """Per-stratum deterministic sampling over the source column:
-    keep all of src1, half of src2, a tenth of src3, 2% elsewhere."""
-    from origami_spark.operators.sampling import stratified_sample
-
-    docs = _t(spark, sf, "documents")
-    return stratified_sample(
-        docs, "source", {"src1": 1.0, "src2": 0.5, "src3": 0.1},
-        default_rate=0.02,
-    ).select("doc_id", "source")
-
-
-def sample_upsample(spark, sf):
-    """Epoch-repetition mixture building (operators/sampling.
-    upsample_sources — the Gopher/Llama data-table recipe): src0 x3
-    epochs, src1 x2.5 (every doc twice + a hash-selected half once
-    more), src2 x0.4 (fractional only), src3 x1; all other sources
-    excluded.  Pure projection — the oracle unnests the identical
-    integer copy counts."""
-    from origami_spark.operators.sampling import upsample_sources
-
-    docs = _t(spark, sf, "documents")
-    return upsample_sources(
-        docs, {"src0": 3.0, "src1": 2.5, "src2": 0.4, "src3": 1.0},
-    ).select("doc_id", "source", "epoch")
-
-
-def sample_token_budget(spark, sf):
-    """Token budgeting per source (operators/sampling.py): 500 tokens
-    from each source in deterministic hash order (prefix cut — tight
-    enough that the cut bites at every test SF)."""
-    from origami_spark.operators.sampling import token_budget
-
-    docs = _t(spark, sf, "documents")
-    return token_budget(docs, 500, by="source")
-
-
-def sample_token_budget_global(spark, sf):
-    """Corpus-wide token budget (operators/sampling.py): the decomposed
-    prefix sum — 256-group offsets + parallel per-group windows — cut
-    at 3000 tokens over the whole corpus."""
-    from origami_spark.operators.sampling import token_budget_global
-
-    docs = _t(spark, sf, "documents")
-    return token_budget_global(docs, 3000)
-
-
-def sample_pack_sequences(spark, sf):
-    """Greedy concatenation packing (operators/sampling.pack_sequences):
-    docs concatenate in the deterministic shuffle order, the token
-    stream cuts every 512 tokens, and each doc is assigned the pack
-    where its first token lands (pack_id, pack_offset) — pure
-    arithmetic on the same decomposed prefix sum as
-    sample_token_budget_global.  The oracle is the SERIAL prefix sum
-    with the same floor/mod arithmetic."""
-    from origami_spark.operators.sampling import pack_sequences
-
-    return pack_sequences(_t(spark, sf, "documents"), seq_len=512)
-
-
-def sample_shuffle(spark, sf):
-    """Deterministic global training-order shuffle
-    (operators/sampling.shuffle_order): rank in (hash60(seed|id), id)
-    order via the decomposed 256-group prefix — no single-partition
-    window; the oracle is the SERIAL row_number, proving decomposed ==
-    serial."""
-    from origami_spark.operators.sampling import shuffle_order
-
-    return shuffle_order(_t(spark, sf, "documents"))
-
-
-def sample_interleave(spark, sf):
-    """Deterministic weighted source interleave
-    (operators/sampling.interleave_sources): within-source shuffle
-    positions (decomposed windows) + emit_key = src_pos / weight — the
-    mixture-sampling order made exact; sources outside the weight map
-    are excluded."""
-    from origami_spark.operators.sampling import interleave_sources
-
-    return interleave_sources(
-        _t(spark, sf, "documents"),
-        {"src0": 2.0, "src1": 1.0, "src2": 0.5})
-
-
-def dedup_contamination(spark, sf):
-    """Benchmark decontamination check (operators/dedup.py): every 50th
-    document plays the evaluation set; 8-gram collisions flag
-    contaminated training docs (each benchmark doc trivially flags
-    itself, plus any corpus near-copies)."""
-    docs = _t(spark, sf, "documents").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 50 == 0)
-    return D.benchmark_contamination(docs, bench, n=8, min_hits=1)
-
-
-def host_stats(spark, sf):
-    """Skew-safe per-host aggregation (operators/hosts.py): salted
-    two-phase groupBy; the oracle is the direct GROUP BY, proving value
-    identity."""
-    from origami_spark.operators.hosts import host_stats as hs
-
-    return hs(_skewed_url_docs(spark, sf), salt=8)
-
-
-def host_cap(spark, sf):
-    """Host frequency capping (operators/hosts.py): at most 5 pages
-    per host in deterministic url order."""
-    from origami_spark.operators.hosts import host_cap as hc
-
-    return hc(_skewed_url_docs(spark, sf), k=5).select(
-        "doc_id", "url", "host")
-
-
-def host_quality(spark, sf):
-    """Domain-level quality curation (operators/hosts.host_quality_gate,
-    the RefinedWeb/FineWeb recipe): per-host stopword ratio as a ratio
-    of INTEGER sums (associative — salted two-phase == direct groupBy
-    == oracle, bit-for-bit), hosts under 0.04 drop with every page;
-    rejected hosts join back broadcast left-anti so the page side never
-    shuffles.  Measured ratios cluster well clear of the threshold at
-    both gate SFs (nearest: 0.030 below / 0.045 above)."""
-    from origami_spark.operators.hosts import host_quality_gate
-
-    docs = _skewed_url_docs(spark, sf)
-    sig = docs.select(
-        "doc_id", "url",
-        T.stop_count(T.tokens_col()).alias("stops"),
-        F.size(T.tokens_col()).alias("toks"),
-    )
-    # known-tiny gate corpus -> explicit broadcast; at crawl scale
-    # callers leave broadcast_rejected=None (AQE sizes it at runtime)
-    return host_quality_gate(
-        sig, "stops", "toks", 0.04, broadcast_rejected=True
-    ).select("doc_id", "url", "host")
-
-
-def url_blocklist(spark, sf):
-    """URL blocklist gate (operators/urlfilter.py): domain rules block
-    a host and every subdomain via a suffix-chain equality join against
-    the broadcast domain list; term rules block urls containing the
-    term (case-insensitive) via a broadcast nested-loop join.  Urls are
-    synthesized deterministically: doc_id % 4 == 0 lands on a
-    tracker.net subdomain (domain rule), doc_id % 11 == 3 on the exact
-    host w3.example.org (exact-entry rule), doc_id % 9 == 0 carries
-    'casino' in the path (term rule); overlaps resolve to the
-    lexicographic min reason.  The oracle mirrors the synthesis and
-    unrolls the suffix chain with generate_series."""
-    from origami_spark.operators.urlfilter import url_blocklist as ub
-
-    docs = _t(spark, sf, "documents")
-    host = F.concat(
-        F.lit("w"), (F.col("doc_id") % 11).cast("string"), F.lit("."),
-        F.when(F.col("doc_id") % 4 == 0, F.lit("tracker.net"))
-        .otherwise(F.lit("example.org")))
-    tail = F.when(F.col("doc_id") % 9 == 0, F.lit("/casino-night")) \
-        .otherwise(F.lit("/p"))
-    pages = docs.select(
-        "doc_id",
-        F.concat(F.lit("https://"), host, tail, F.lit("/"),
-                 F.col("doc_id").cast("string")).alias("url"))
-    dom = spark.createDataFrame(
-        [("tracker.net",), ("w3.example.org",)], "domain string")
-    trm = spark.createDataFrame([("casino",)], "term string")
-    return ub(pages, dom, trm)
-
-
-def graph_degrees(spark, sf):
-    """Link-graph degree/strength table (operators/graph.py): the
-    transition graph is derived from the events log (per-user
-    consecutive props.k values, one lag window), then in/out degree and
-    strength fold in ONE aggregation shuffle via the two-sided
-    projection union.  The oracle is the direct per-side formulation."""
-    from origami_spark.operators.graph import degrees, event_edges
-
-    return degrees(event_edges(_spread(_t(spark, sf, "events"), "event_id")))
-
-
-def graph_pagerank(spark, sf):
-    """Damped PageRank, 6 synchronous iterations of fixed-point BIGINT
-    arithmetic (operators/graph.py) over the events transition graph.
-    Integer sums are order-independent, so the oracle — the SAME
-    recurrence unrolled as 6 chained CTEs in DuckDB — must hash-match
-    bit-for-bit: the claim under test is that a K-iteration distributed
-    graph algorithm can be made engine-exact."""
-    from origami_spark.operators.graph import event_edges, pagerank
-
-    return pagerank(event_edges(_spread(_t(spark, sf, "events"), "event_id")), iters=6)
-
-
-def graph_hits(spark, sf):
-    """HITS hubs & authorities (operators/graph.hits, Kleinberg 1999),
-    4 synchronous iterations of exact BIGINT fixed-point with max-norm
-    per half-step, over the same events transition graph as
-    graph_pagerank.  Integer arithmetic end to end, so the oracle —
-    the identical recurrence unrolled as chained CTEs with scalar-
-    subquery maxima — must hash-match bit-for-bit."""
-    from origami_spark.operators.graph import event_edges, hits
-
-    return hits(event_edges(_spread(_t(spark, sf, "events"), "event_id")), iters=4)
-
-
-def _stage_html_pages(spark, sf):
-    """Stage the deterministic corpus pages (url, html decoded to
-    string) once per sf, so the html-link-graph oracles can run the
-    identical regexp extraction over the identical bytes."""
-    if _TRAIN_STAGED.get(HTML_PAGES_PATH) != sf:
-        pages = _pages_from_documents(spark, sf).select(
-            "url", F.col("html").cast("string").alias("html"))
-        pages.write.mode("overwrite").parquet(_staged(HTML_PAGES_PATH))
-        _TRAIN_STAGED[HTML_PAGES_PATH] = sf
-    # NOT spread here: robots_allowed's gate contract keeps the page
-    # side un-hash-partitioned (test_robots); the regexp-heavy link/
-    # anchor consumers spread at their own call sites
-    return spark.read.parquet(HTML_PAGES_PATH)
-
-
-def graph_html_links(spark, sf):
-    """Page-level link graph straight from raw HTML
-    (operators/graph.html_link_edges): one Catalyst regexp projection
-    pulls every href, fragments strip, root-relative targets resolve
-    against the page origin, self-loops drop; (src, dst, weight) with
-    one bounded groupBy.  The crawl-native edge derivation (Common
-    Crawl's host graphs start here); the oracle runs the identical
-    RE2-safe regexp over the staged pages."""
-    from origami_spark.operators.graph import html_link_edges
-
-    return html_link_edges(_spread(_stage_html_pages(spark, sf), "url"))
-
-
-def graph_html_pagerank(spark, sf):
-    """Fixed-point integer PageRank over the html link graph: url
-    nodes hashed with the portable hash60, 4 synchronous iterations —
-    the full html -> edges -> centrality chain, hash-checked (the
-    oracle re-derives edges from the staged pages and unrolls the same
-    4 iterations)."""
-    from origami_spark.operators.graph import html_link_edges, pagerank
-    from origami_spark.operators.text import portable_hash60
-
-    e = html_link_edges(_spread(_stage_html_pages(spark, sf),
-                             "url")).select(
-        portable_hash60(F.col("src")).alias("src"),
-        portable_hash60(F.col("dst")).alias("dst"),
-        "weight",
-    )
-    return pagerank(e, iters=4)
-
-
-def graph_html_anchors(spark, sf):
-    """Anchor-text harvest (operators/graph.html_anchor_texts): the
-    link label a page attaches to each target — the raw material of
-    anchor-text datasets.  One regexp projection (href + inner text
-    captured from the same RE2-safe pattern), whitespace-normalized
-    labels, empty labels and self-links dropped.  The oracle zips the
-    same two capture groups over the staged pages."""
-    from origami_spark.operators.graph import html_anchor_texts
-
-    return html_anchor_texts(_spread(_stage_html_pages(spark, sf), "url"))
-
-
-ROBOTS_RULES_PATH = os.path.join(_STAGE_DIR, "robots_rules.parquet")
-
-# synthetic per-host robots.txt (same body per host — the corpus urls
-# are /{lang}/a{doc_id}, so these rules bite on every shape: prefix
-# block with a longer-allow override, a $-anchored wildcard, a whole
-# language subtree, a specific-agent group shadowing the star group,
-# stacked user-agent lines, a comment, an empty Disallow)
-_ROBOTS_TXT = """\
-# synthetic robots for the gate
-Sitemap: https://cdn.example.net/smap/root.xml
-
-User-agent: googlebot
-Disallow: /
-Sitemap: https://cdn.example.net/smap/extra.xml
-
-User-agent: origami
-
-User-agent: friendbot
-Disallow: /en/a1
-Allow: /en/a12*
-Disallow: /de/a*3$
-Disallow: /fr
-Disallow:
-
-User-agent: *
-Disallow: /es
-"""
-
-
-ROBOTS_BODIES_PATH = os.path.join(_STAGE_DIR, "robots_bodies.parquet")
-
-
-def _stage_robots_bodies(spark, sf):
-    """One synthetic robots.txt body per corpus host, staged — the raw
-    side both the rule parse and the sitemap harvest read."""
-    from origami_spark.operators.hosts import host_of
-
-    if _TRAIN_STAGED.get(ROBOTS_BODIES_PATH) != sf:
-        hosts = (_stage_html_pages(spark, sf)
-                 .select(host_of("url").alias("host")).distinct())
-        hosts.withColumn("content", F.lit(_ROBOTS_TXT)).coalesce(1) \
-            .write.mode("overwrite").parquet(_staged(ROBOTS_BODIES_PATH))
-        _TRAIN_STAGED[ROBOTS_BODIES_PATH] = sf
-    return spark.read.parquet(ROBOTS_BODIES_PATH)
-
-
-def _stage_robots_rules(spark, sf):
-    """Parse the staged robots bodies once per sf and stage the rule
-    table (host, allow, path, rule_len, pattern) — the trained-
-    artifact discipline: both engines consume the identical staged
-    parquet, so the regex strings can never drift between them.  The
-    parse itself is pytest-gated against an independent pure-Python
-    RFC 9309 reference (tests/test_robots.py)."""
-    from origami_spark.operators.robots import parse_robots
-
-    if _TRAIN_STAGED.get(ROBOTS_RULES_PATH) != sf:
-        robots = _stage_robots_bodies(spark, sf)
-        parse_robots(robots, agent="origami").coalesce(1) \
-            .write.mode("overwrite").parquet(_staged(ROBOTS_RULES_PATH))
-        _TRAIN_STAGED[ROBOTS_RULES_PATH] = sf
-    return spark.read.parquet(ROBOTS_RULES_PATH)
-
-
-def robots_sitemap_urls(spark, sf):
-    """Sitemap discovery (operators/robots.robots_sitemaps): the
-    group-independent ``Sitemap:`` records of every host's robots.txt
-    — one projection over the staged bodies; the oracle runs the
-    identical line parse in SQL."""
-    from origami_spark.operators.robots import robots_sitemaps
-
-    return robots_sitemaps(_stage_robots_bodies(spark, sf))
-
-
-def robots_allowed(spark, sf):
-    """robots.txt gating (operators/robots.py, RFC 9309): per url the
-    longest matching path spec of its host wins, allow wins ties, no
-    match means allowed.  One equality join on host + a regex match +
-    a per-url max over matched pairs; the oracle evaluates the
-    identical staged rule table relationally."""
-    from origami_spark.operators.robots import robots_gate
-
-    pages = _stage_html_pages(spark, sf).select("url")
-    rules = _stage_robots_rules(spark, sf)
-    # the staged gate rule table is known-tiny -> explicit broadcast;
-    # at crawl scale callers leave broadcast_rules=None (AQE decides)
-    return robots_gate(pages, rules, broadcast_rules=True).select(
-        "url", "host", "allowed")
-
-
-def html_metadata(spark, sf):
-    """Head-metadata harvest (operators/pagemeta.html_head_meta):
-    title / declared charset / lead h1 / meta description / canonical
-    url per page, one Catalyst regexp projection over the staged
-    pages, empties and no-matches unified to NULL in both engines."""
-    from origami_spark.operators.pagemeta import html_head_meta
-
-    return html_head_meta(_stage_html_pages(spark, sf))
-
-
-LINKED_PAGES_PATH = os.path.join(_STAGE_DIR, "linked_pages.parquet")
-
-
-def _stage_linked_pages(spark, sf):
-    """Staged pages for the HOST-graph gates: the corpus generator
-    emits only root-relative hrefs (every link stays on its own
-    host), which would make the host rollup vacuously empty — so one
-    deterministic cross-host anchor is appended per page, pointing at
-    the next doc_id's url (hosts are drawn per doc, so consecutive
-    docs usually live on different hosts).  The single-partition lead
-    window is stage-time-only machinery over the tiny gate corpus;
-    both engines read the staged parquet, so parity is unaffected."""
-    from pyspark.sql import Window
-
-    if _TRAIN_STAGED.get(LINKED_PAGES_PATH) != sf:
-        pages = _pages_from_documents(spark, sf).select(
-            F.regexp_extract("url", r"a(\d+)$", 1).cast("bigint")
-            .alias("_doc"),
-            "url", F.col("html").cast("string").alias("html"))
-        w = Window.orderBy("_doc")
-        linked = (
-            pages.withColumn("_nxt", F.lead("url").over(w))
-            .select(
-                "url",
-                # the max-doc_id page keeps its original html (no next
-                # target) rather than dropping out of the gate corpus
-                F.concat(
-                    F.col("html"),
-                    F.coalesce(
-                        F.concat(F.lit('<a href="'), F.col("_nxt"),
-                                 F.lit('">next</a>')),
-                        F.lit(""),
-                    ),
-                ).alias("html"),
-            )
-        )
-        linked.write.mode("overwrite").parquet(_staged(LINKED_PAGES_PATH))
-        _TRAIN_STAGED[LINKED_PAGES_PATH] = sf
-    # the staged parquet is one file; fan the regexp-heavy consumers out
-    return _spread(spark.read.parquet(LINKED_PAGES_PATH), "url")
-
-
-def graph_host_edges(spark, sf):
-    """Host-grain webgraph rollup (operators/graph.host_edges): the
-    page-level href graph aggregated to the host/domain form Common
-    Crawl publishes — intra-site edges dropped, multiplicities
-    summed, one bounded aggregation.  Runs over the cross-host-linked
-    staged pages (see _stage_linked_pages: the generator's own hrefs
-    never leave their host)."""
-    from origami_spark.operators.graph import host_edges, html_link_edges
-
-    return host_edges(html_link_edges(_stage_linked_pages(spark, sf)))
-
-
-def graph_host_pagerank(spark, sf):
-    """Host-level centrality — the full crawl-curation chain: raw html
-    -> href edges -> host rollup -> hash60 ids -> 4 integer PageRank
-    iterations, every stage engine-exact and the whole composition
-    hash-checked against the oracle's unrolled recurrence."""
-    from origami_spark.operators.graph import (host_edges,
-                                               html_link_edges, pagerank)
-    from origami_spark.operators.text import portable_hash60
-
-    e = host_edges(html_link_edges(_stage_linked_pages(spark, sf)))
-    e = e.select(portable_hash60(F.col("src")).alias("src"),
-                 portable_hash60(F.col("dst")).alias("dst"), "weight")
-    return pagerank(e, iters=4)
-
-
-def graph_anchor_topk(spark, sf):
-    """Per-target anchor profile (operators/graph.anchor_topk): the 3
-    most frequent anchor labels per link target under the total
-    (count desc, anchor asc) order — engine path uses the two-level
-    hash-group top-k so a mega-indegree target never sorts its whole
-    distinct-anchor set on one task; the oracle runs the
-    value-identical single-window form."""
-    from origami_spark.operators.graph import anchor_topk, html_anchor_texts
-
-    return anchor_topk(
-        html_anchor_texts(_spread(_stage_html_pages(spark, sf), "url")),
-        k=3)
-
-
-def sketch_kmv_distinct(spark, sf):
-    """Per-source distinct-token cardinality via the K-minimum-values
-    sketch (operators/sketch.py, Bar-Yossef et al. 2002 / Beyer et al.
-    2007): keep the 128 smallest portable 60-bit hashes per source,
-    estimate = floor(127·2^60 / kth) — one exact-IEEE division over
-    exactly-representable operands, so DuckDB reproduces the estimate
-    bit-for-bit.  The top-k runs decomposed (64 hash sub-groups) so no
-    task sorts a whole source's vocabulary."""
-    from origami_spark.operators.sketch import kmv_distinct
-    from origami_spark.operators.text import tokens_col
-
-    toks = _spread(_t(spark, sf, "documents"), "doc_id").select(
-        "source", F.explode(tokens_col("text")).alias("tok"))
-    return kmv_distinct(toks, "tok", k=128, by=["source"])
-
-
-def sketch_kmv_merge(spark, sf):
-    """Distributed-merge contract of the KMV sketch (operators/
-    sketch.kmv_build / kmv_merge): shard the corpus by
-    pmod(doc_id, 3), build one k-smallest-hash signature PER SHARD,
-    then merge the three signatures and estimate.  The merge is
-    lossless — any hash in the global k-minimum set is in its own
-    shard's k-minimum set — so the oracle is the plain whole-corpus
-    KMV SQL: cross-engine hash equality of this gate proves the merge
-    identity itself, not just the estimator.  This is the shape a
-    1000-executor crawl uses: per-shard signatures persisted, corpus
-    cardinality = merge over ≤ k-row relations, never a re-scan."""
-    from origami_spark.operators.sketch import kmv_build, kmv_merge
-    from origami_spark.operators.text import tokens_col
-
-    toks = _spread(_t(spark, sf, "documents"), "doc_id").select(
-        "source", F.pmod(F.col("doc_id"), F.lit(3)).alias("_shard"),
-        F.explode(tokens_col("text")).alias("tok"))
-    # ONE grouped build computes every shard's signature in a single
-    # corpus pass (by=[source, _shard] keeps the k smallest per shard
-    # exactly as three filtered builds would — the same rows); the
-    # merge then unions the per-shard signatures as before.  Three
-    # separate builds scanned and exploded the corpus three times.
-    sig = kmv_build(toks, "tok", k=96, by=["source", "_shard"])
-    return kmv_merge([sig.select("source", "h")], k=96, by=["source"])
-
-
-def sketch_kmv_jaccard(spark, sf):
-    """Corpus-overlap estimation from signatures alone (operators/
-    sketch.kmv_set_ops — Beyer et al. 2007 set operations): split the
-    corpus into two halves by pmod(doc_id, 2), build one KMV signature
-    per half, and estimate union cardinality / intersection / Jaccard
-    of their token vocabularies WITHOUT any corpus-vs-corpus join —
-    the two ≤ 128-row signatures are the only inputs to the estimate.
-    At crawl scale this is the "how much vocabulary do two
-    crawls/days/sources share" answer from persisted signature state.
-    The vocabulary is word BIGRAMS (shingles_expr, the dedup feature
-    space) so the corpus' distinct count exceeds k and the gate
-    exercises the ESTIMATOR arithmetic cross-engine, not just the
-    exact below-k path.  Portability: counts and the intersection
-    estimate are integer arithmetic; jaccard is one IEEE division of
-    exactly-representable integers — DuckDB reproduces every output
-    bit-for-bit."""
-    from origami_spark.operators.sketch import (kmv_build,
-                                                kmv_set_ops_grouped)
-    from origami_spark.operators.text import shingles_expr, tokens_col
-
-    # materialize the token array BEFORE shingling (the dsir._features
-    # pattern): passing the raw split expression into shingles_expr
-    # re-evaluates the split per element_at — measured 6.6 s vs 0.9 s
-    # at sf0.1
-    t = _spread(_t(spark, sf, "documents"), "doc_id").select(
-        F.pmod(F.col("doc_id"), F.lit(2)).alias("half"),
-        tokens_col("text").alias("_toks"))
-    grams = t.select(
-        "half", F.explode(shingles_expr("_toks", 2)).alias("tok"))
-    sig = kmv_build(grams, "tok", k=128, by=["half"])
-    return kmv_set_ops_grouped(sig, "half", 0, 1, k=128)
-
-
-def sketch_countmin(spark, sf):
-    """Count-min frequency sketch (operators/sketch.py, Cormode &
-    Muthukrishnan 2005) over the corpus token stream: 4 hash rows x
-    512 BIGINT counters, probed for the 20 most frequent tokens.
-    Returns (item, true_cnt, cm_est) — the oracle re-derives every
-    counter; the overestimate-only guarantee is pytest-checked."""
-    from origami_spark.operators.sketch import (countmin_build,
-                                                countmin_estimate)
-    from origami_spark.operators.text import tokens_col
-
-    toks = _spread(_t(spark, sf, "documents"), "doc_id").select(
-        F.explode(tokens_col("text")).alias("tok"))
-    # one shared (token, count) aggregation feeds the sketch build
-    # (weighted — integer sums make the counters bit-identical to the
-    # per-occurrence build), the true counts, AND the probe set; the
-    # md5 bucket hash runs per vocabulary entry instead of per
-    # occurrence (same restructuring as sketch_heavy_hitters)
-    tok_counts = toks.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("bigint").alias("true_cnt"))
-    sk = countmin_build(tok_counts, "tok", width=512, depth=4,
-                        weight_col="true_cnt")
-    top = (
-        tok_counts
-        .orderBy(F.desc("true_cnt"), F.asc("tok"))
-        .limit(20)
-        .withColumnRenamed("tok", "item")
-    )
-    est = countmin_estimate(sk, top, "item", width=512, depth=4)
-    return top.join(est, "item").select("item", "true_cnt", "cm_est")
-
-
-def sketch_bloom(spark, sf):
-    """Bloom membership probe (operators/sketch.py): build the filter
-    over orders.o_custkey (m=4096 bits, d=5 seeded md5 hashes — the
-    bit set is a <= m-row broadcast relation), probe every customer
-    key.  No false negatives by construction (pytest-checked); the
-    gate checks both engines derive the identical bit set and
-    verdicts."""
-    from origami_spark.operators.sketch import bloom_build, bloom_probe
-
-    orders = _t(spark, sf, "orders").select("o_custkey")
-    cust = _t(spark, sf, "customer").select("c_custkey")
-    bloom = bloom_build(orders, "o_custkey", m=4096, d=5)
-    return (
-        bloom_probe(bloom, cust, "c_custkey", m=4096, d=5)
-        .withColumnRenamed("item", "c_custkey")
-    )
-
-
-def sketch_hist_quantile(spark, sf):
-    """Mergeable histogram-quantile sketch (operators/sketch.py): 1024
-    equi-width BIGINT counters per order priority, p50 + p90 read off
-    the cumulative bin edge.  The scale story: Spark's exact
-    ``percentile`` buffers EVERY group value in one aggregation state
-    (q08's formulation — exact, but not 10^9-rows-per-group safe);
-    the histogram caps state at `bins` counters, merges by summing,
-    and prices the answer at <= one bin width (pytest-checked)."""
-    from origami_spark.operators.sketch import hist_build, hist_quantile
-
-    orders = _t(spark, sf, "orders")
-    h = hist_build(orders, "o_totalprice", lo=0.0, hi=600000.0,
-                   bins=1024, by=["o_orderpriority"])
-    p50 = hist_quantile(h, 1, 2, 0.0, 600000.0, 1024,
-                        by=["o_orderpriority"])
-    p90 = hist_quantile(h, 9, 10, 0.0, 600000.0, 1024,
-                        by=["o_orderpriority"])
-    return p50.unionByName(p90)
-
-
-def text_phrases(spark, sf):
-    """Count-based collocation mining (operators/text.phrase_scores —
-    the word2vec phrase-detection score, Mikolov et al. 2013 §4):
-    integer ``(c_ab - 1)·V·10^6 div (c_a·c_b)`` over two
-    wordcount-shaped aggregations, engine-exact because the score is
-    pure count arithmetic (no libm)."""
-    from origami_spark.operators.text import phrase_scores
-
-    return phrase_scores(_spread(_t(spark, sf, "documents"), "doc_id"), min_count=5)
-
-
-def multimodal_payload(spark, sf):
-    media = M.media_from_documents(_spread(_t(spark, sf, "documents"), "doc_id"))
-    feats = M.media_features(media)
-    return feats.groupBy("kind").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("n_bytes").alias("total_bytes"),
-        F.count(F.when(F.col("digest").startswith("0"), 1)).alias("digest_0"),
-    )
-
-
-def multimodal_near_dup(spark, sf):
-    """Perceptual payload near-dup (multimodal.media_near_dups,
-    block-mean hashing — Yang et al. 2006): every 17th document's
-    payload is re-served with ONE substituted byte (the planted
-    near-dup, media_id + 10^8), the banded 60-bit blockhash surfaces
-    the pairs, and the true hamming verifies them.  Every bit of the
-    hash is an integer cross-product, so the DuckDB oracle re-derives
-    the identical hashes from hex(payload)."""
-    docs = _t(spark, sf, "documents")
-    media = M.media_from_documents(docs).select(
-        "media_id", "kind", "payload")
-    spiked = docs.filter(
-        (F.col("doc_id") % 17 == 0) & (F.length("text") >= 12)
-    ).select(
-        (F.col("doc_id") + 100000000).alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.encode(
-            F.concat(F.expr("substring(text, 1, 10)"), F.lit("X"),
-                     F.expr("substring(text, 12)")), "utf-8"
-        ).alias("payload"),
-    )
-    return M.media_near_dups(media.unionByName(spiked), max_hamming=4)
-
-
-# ---------------------------------------------------------------------------
-# extraction pipeline (rows-only: DuckDB cannot parse HTML; byte-identity
-# is gated by the pytest golden suite instead)
-# ---------------------------------------------------------------------------
-
-def extract_compose(spark, sf):
-    pages = _pages_from_documents(spark, sf)
-    out = extract(spark, pages)
-    return out.select("url", "text", F.size("spans").alias("n_blocks"))
-
-
-def extract_blocks(spark, sf):
-    from origami_spark.pipeline import parse_stage
-
-    pages = _pages_from_documents(spark, sf)
-    return parse_stage(pages).select(
-        "url", "seq", "path", "label", "start", "end", "text_len", "link_len"
-    )
-
-
-def lines_confidence(spark, sf):
-    """S6 lines with real per-line confidence (non-link char share —
-    ConfidenceSampler analog).  Rows-only like the other extraction
-    entries (DuckDB cannot parse HTML); the value semantics are pinned
-    by tests/test_lines.py::test_line_confidence_real and the staged
-    artifact tests — and the arithmetic itself is hash-gated by the
-    ``lines_confidence_checked`` companion below."""
-    from origami_spark.operators.layout import refine
-    from origami_spark.operators.lines import lines_table
-    from origami_spark.pipeline import parse_stage
-
-    pages = _pages_from_documents(spark, sf)
-    return lines_table(refine(parse_stage(pages))).select(
-        "url", "path", "line_id", "raw_start", "raw_end", "confidence"
-    )
-
-
-LINES_EVIDENCE_PATH = os.path.join(_STAGE_DIR, "lines_evidence.parquet")
-
-
-def lines_confidence_checked(spark, sf):
-    """Hash-gated companion to ``lines_confidence``: DuckDB cannot parse
-    HTML, but the confidence ARITHMETIC (link chars -> non-link share ->
-    predicted label, operators/lines.py:50-76) is pure relational math.
-    The parse kernel stages its per-line evidence (line_len, link_len)
-    to parquet; this query computes the arithmetic over the staged
-    columns and the DuckDB oracle runs the identical SQL over the same
-    file — so the one formerly rows-only number is now value-checked."""
-    from origami_spark.operators.layout import refine
-    from origami_spark.pipeline import parse_stage
-
-    pages = _pages_from_documents(spark, sf)
-    refined = refine(parse_stage(pages))
-    evidence = refined.select(
-        "url",
-        F.col("path").alias("block_path"),
-        F.posexplode(
-            F.arrays_zip(F.split("text", "\n"), F.col("line_spans"))
-        ).alias("pos", "z"),
-    ).select(
-        "url",
-        "block_path",
-        (F.col("pos") + 1).cast("bigint").alias("line_id"),
-        F.length(F.col("z")["0"]).cast("bigint").alias("line_len"),
-        F.coalesce(F.col("z")["line_spans"]["link_len"], F.lit(0))
-        .cast("bigint").alias("link_len"),
-    ).filter(F.col("line_len") > 0)
-    evidence.write.mode("overwrite").parquet(_staged(LINES_EVIDENCE_PATH))
-
-    staged = spark.read.parquet(LINES_EVIDENCE_PATH)
-    conf = F.round(
-        (F.col("line_len") - F.col("link_len")).cast("double")
-        / F.col("line_len"),
-        4,
-    )
-    return staged.select(
-        "url", "block_path", "line_id", "line_len", "link_len",
-        conf.alias("confidence"),
-        F.when(conf >= 0.5, F.lit("TEXT")).otherwise(F.lit("LINK"))
-        .alias("predicted_label"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# round-5 additions: event-log family (as-of join, sessions, hypertable
-# rollup, funnel, retention) + TF-IDF / heavy hitters / reservoir
-# ---------------------------------------------------------------------------
-
-def events_asof_join(spark, sf):
-    """Backward as-of join (operators/events.asof_join — the brief's
-    named custom operator): each click event gains the value and
-    timestamp of the LATEST preceding view by the same user.  Spark
-    runs the union + ordered-window formulation (one shuffle on the
-    key); the oracle is DuckDB's NATIVE ``ASOF LEFT JOIN`` — a
-    genuinely independent implementation of the same semantics."""
-    from origami_spark.operators.events import TS_FMT, asof_join
-
-    ev = _t(spark, sf, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "value")
-    out = asof_join(clicks, views, key="user_id", value_cols=("value",))
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", TS_FMT).alias("click_ts"),
-        F.col("value_asof").alias("view_value"),
-        F.date_format("ts_asof", TS_FMT).alias("view_ts"),
-    )
-
-
-def events_asof_forward(spark, sf):
-    """Forward as-of join (operators/events.asof_join
-    direction='forward', the pandas merge_asof forward direction):
-    each click gains the value of the EARLIEST view at-or-after it by
-    the same user; oracle = DuckDB ASOF LEFT JOIN with ``<=``."""
-    from origami_spark.operators.events import TS_FMT, asof_join
-
-    ev = _t(spark, sf, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts")
-    views = ev.filter(F.col("event_type") == "view").select(
-        "user_id", "ts", "value")
-    out = asof_join(clicks, views, key="user_id", value_cols=("value",),
-                    direction="forward")
-    return out.select(
-        "event_id", "user_id",
-        F.date_format("ts", TS_FMT).alias("click_ts"),
-        F.col("value_asof").alias("view_value"),
-        F.date_format("ts_asof", TS_FMT).alias("view_ts"),
-    )
-
-
-def events_sessionize(spark, sf):
-    """Batch gaps-and-islands sessionization (operators/events.
-    sessionize, the batch mirror of streaming/sessions.py): a 6-hour
-    idle gap starts a new session; one row per session with exact
-    millisecond durations."""
-    from origami_spark.operators.events import sessionize
-
-    return sessionize(_t(spark, sf, "events"), gap_seconds=21600)
-
-
-def events_rollup(spark, sf):
-    """Hypertable-style multi-resolution rollup (operators/events.
-    time_rollup): hour grain from raw (the only corpus shuffle), day
-    grain derived FROM the hourly aggregate — continuous-aggregate
-    reuse, so the daily never rescans raw at 10^12 events."""
-    from origami_spark.operators.events import time_rollup
-
-    return time_rollup(_t(spark, sf, "events"))
-
-
-def events_funnel(spark, sf):
-    """Greedy ordered-step window funnel (operators/events.
-    window_funnel, the ClickHouse windowFunnel family): per user the
-    earliest view anchors, then the earliest later click and the
-    earliest still-later purchase inside a 7-day horizon
-    (microsecond-exact arithmetic); depth = steps reached.  The
-    oracle is the chained min-CTE form."""
-    from origami_spark.operators.events import window_funnel
-
-    return window_funnel(
-        _t(spark, sf, "events"), ("view", "click", "purchase"),
-        horizon_ms=7 * 24 * 3600 * 1000)
-
-
-def events_retention(spark, sf):
-    """Weekly cohort retention (operators/events.cohort_retention):
-    cohort = first active week per user; distinct active users per
-    (cohort_week, week_offset)."""
-    from origami_spark.operators.events import cohort_retention
-
-    return cohort_retention(_t(spark, sf, "events"))
-
-
-def text_tfidf_topk(spark, sf):
-    """Per-document top-5 TF-IDF terms (operators/text.tfidf_topk,
-    raw TF x smooth IDF): scores quantized with the portable
-    floor(x*1e4+0.5)/1e4 BEFORE ranking so ties break identically in
-    both engines."""
-    from origami_spark.operators.text import tfidf_topk
-
-    return tfidf_topk(_spread(_t(spark, sf, "documents"), "doc_id"), k=5)
-
-
-def sketch_heavy_hitters(spark, sf):
-    """Top-20 heavy hitters from the count-min sketch alone
-    (operators/sketch.countmin_topk): every distinct token is probed
-    against the 4x512 sketch and ranked by (estimate DESC, item ASC)
-    through the two-level decomposed top-k; the oracle re-derives
-    every counter and ranks with a single window — value-identical by
-    the host_cap argument."""
-    from origami_spark.operators.sketch import countmin_build, countmin_topk
-    from origami_spark.operators.text import tokens_col
-
-    toks = _spread(_t(spark, sf, "documents"), "doc_id").select(
-        F.explode(tokens_col("text")).alias("tok"))
-    # pre-aggregate to (token, count) once: the sketch counters are
-    # integer sums, so building from weighted distinct tokens is
-    # bit-identical to building from the raw stream, while the md5
-    # bucket hash runs per VOCABULARY entry instead of per occurrence
-    # (guide §2.3 aggregate-before-shuffle; both consumers share the
-    # same aggregation subtree, which Spark de-duplicates via
-    # ReuseExchange)
-    tok_counts = toks.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_w"))
-    sk = countmin_build(tok_counts, "tok", width=512, depth=4,
-                        weight_col="_w")
-    return countmin_topk(sk, tok_counts, "tok", k=20, width=512, depth=4)
-
-
-def sample_reservoir(spark, sf):
-    """Deterministic fixed-size per-stratum sample (operators/
-    sampling.reservoir_sample — the batch reservoir): 10 docs per
-    lang by portable-hash rank, exact output size, identical at any
-    parallelism; two-level decomposed rank so a mega-stratum never
-    sorts on one task."""
-    from origami_spark.operators.sampling import reservoir_sample
-
-    docs = _t(spark, sf, "documents").select("doc_id", "lang")
-    return reservoir_sample(docs, k=10, by="lang")
-
-
-def sample_cluster_balanced(spark, sf):
-    """Cluster-balanced diversity sample (the DCLM/SemDeDup-style
-    selection step): assign every embedding to its nearest staged
-    k-means centroid through the exchange-free Arrow argmin kernel
-    (similarity.cluster_assign — the ann_ivf_topk serving contract),
-    then keep a deterministic fixed-size reservoir per cluster
-    (sampling.reservoir_sample, two-level decomposed rank) — equal
-    representation across semantic clusters instead of the corpus'
-    frequency weighting.  The oracle reruns the staged-centroid
-    window-argmin assignment (the dedup_semantic form) and the
-    single-window reservoir over the same hash."""
-    from origami_spark.operators.sampling import reservoir_sample
-
-    emb = _spread(_t(spark, sf, "embeddings"), "vec_id")
-    staged = _stage_centroids(spark, emb, CLUSTER_SAMPLE_CENTROIDS_PATH, sf)
-    assigned = S.cluster_assign(emb, staged).select("vec_id", "cluster")
-    return reservoir_sample(assigned, k=5, by="cluster",
-                            id_col="vec_id", seed="cb0")
+    return extract.extract_compose(spark, SF_DEFAULT)
+
+
+# ORDER MATTERS: the driver's CORRECTNESS capture stamps only the FIRST
+# 50 entries per round.  Rounds 1-4 re-verified the same q01-q24/dedup/
+# sample prefix, leaving 49 oracled queries with no driver-green row ever
+# (VERDICT r4 "Next round" item 1, plus the round-5 additions).  Round 5
+# leads with one sentinel (extract_compose = byte-identity canary for the
+# north rule), then all 49 never-captured entries — exactly filling the
+# driver's 50-row window.  q01 (relational canary, driver-green in every
+# prior round) moves to slot 51; it and the remaining entries stay
+# covered by the local sf0.01 rehearsal + tests/test_oracle_parity.py.
+GATES = (
+    # -- sentinel (byte-identity canary, driver-green in every round) ---
+    extract.extract_compose,
+    # -- never driver-verified before round 5 (38 oracled + bpe_encode) --
+    web.host_quality,
+    web.url_blocklist,
+    graph.graph_degrees,
+    graph.graph_pagerank,
+    graph.graph_html_links,
+    graph.graph_html_pagerank,
+    graph.graph_html_anchors,
+    graph.graph_anchor_topk,
+    graph.graph_host_edges,
+    graph.graph_host_pagerank,
+    web.html_metadata,
+    web.robots_allowed,
+    web.robots_sitemap_urls,
+    sketch.sketch_kmv_distinct,
+    sketch.sketch_countmin,
+    sketch.sketch_bloom,
+    sketch.sketch_hist_quantile,
+    text.text_phrases,
+    similarity.dedup_semantic,
+    similarity.dedup_semantic_keep,
+    similarity.dedup_embedding_contamination,
+    similarity.ann_pq_topk,
+    similarity.ann_ivfpq_topk,
+    text.text_sentences,
+    text.text_readability,
+    text.text_hash_embedding,
+    models.text_bpe_pretokens,
+    models.text_bpe_encode,
+    text.text_chunks,
+    models.text_bm25_topk,
+    models.text_lm_quality,
+    models.text_lm_buckets,
+    models.text_classifier_score,
+    models.text_classifier_keep,
+    models.text_dsir_score,
+    text.text_clean_lines,
+    text.text_pii_scrub,
+    similarity.multimodal_near_dup,
+    extract.lines_confidence_checked,
+    # -- round-5 additions (slots 41..50 of the driver window) ----------
+    events.events_asof_join,
+    events.events_sessionize,
+    events.events_rollup,
+    events.events_funnel,
+    events.events_retention,
+    text.text_tfidf_topk,
+    sketch.sketch_heavy_hitters,
+    sampling.sample_reservoir,
+    graph.graph_hits,
+    events.events_asof_forward,
+    # -- previously driver-verified (r1-r4 green rows on file) ----------
+    relational.q01_pricing_summary,
+    relational.q02_topk_orders,
+    relational.q03_region_revenue,
+    relational.q04_anti_join,
+    relational.q05_semi_join,
+    relational.q06_window_adjacency,
+    relational.q07_running_containment,
+    relational.q08_group_percentiles,
+    relational.q09_ordered_assembly,
+    relational.q10_interval_overlap,
+    relational.q11_rollup,
+    relational.q12_week_buckets,
+    relational.q13_set_except,
+    relational.q14_exploded_tokens,
+    relational.q15_cube,
+    relational.q16_topk_per_group,
+    relational.q17_harmonize,
+    relational.q18_date_arithmetic,
+    relational.q19_union_intersect,
+    relational.q20_salted_groupby,
+    relational.q21_correlated_subquery,
+    relational.q22_distinct_counts,
+    relational.q23_json_extract,
+    relational.q24_top_supplier_per_nation,
+    dedup.dedup_exact,
+    dedup.dedup_exact_normalized,
+    dedup.dedup_ngram_jaccard,
+    dedup.dedup_minhash_lsh,
+    dedup.dedup_incremental,
+    dedup.dedup_incremental_exact,
+    dedup.dedup_components,
+    dedup.dedup_simhash,
+    dedup.dedup_simhash_keep,
+    dedup.dedup_substring_keep,
+    dedup.dedup_substring,
+    dedup.dedup_span_removal,
+    text.dedup_paragraphs,
+    dedup.dedup_contamination,
+    sampling.sample_hash,
+    sampling.sample_split,
+    sampling.sample_stratified,
+    sampling.sample_upsample,
+    sampling.sample_token_budget,
+    sampling.sample_token_budget_global,
+    sampling.sample_pack_sequences,
+    sampling.sample_shuffle,
+    sampling.sample_interleave,
+    models.sample_dsir_topk,
+    models.sample_dsir_gumbel,
+    web.host_stats,
+    web.host_cap,
+    similarity.dedup_embedding,
+    similarity.dedup_embedding_lsh,
+    similarity.ann_cosine_topk,
+    similarity.ann_lsh_topk,
+    similarity.ann_ivf_topk,
+    text.text_token_stats,
+    text.text_quality,
+    text.text_langid,
+    text.text_fingerprint,
+    text.text_url_canonical,
+    text.text_repetition,
+    text.text_gopher_gate,
+    similarity.multimodal_payload,
+    sketch.sketch_kmv_merge,
+    similarity.sample_cluster_balanced,
+    sketch.sketch_kmv_jaccard,
+    extract.extract_blocks,
+    extract.lines_confidence,
+)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's CORRECTNESS capture stamps only the FIRST
-    # 50 entries per round.  Rounds 1-4 re-verified the same q01-q24/dedup/
-    # sample prefix, leaving 49 oracled queries with no driver-green row ever
-    # (VERDICT r4 "Next round" item 1, plus the round-5 additions).  Round 5
-    # leads with one sentinel (extract_compose = byte-identity canary for the
-    # north rule), then all 49 never-captured entries — exactly filling the
-    # driver's 50-row window.  q01 (relational canary, driver-green in every
-    # prior round) moves to slot 51; it and the remaining entries stay
-    # covered by the local sf0.01 rehearsal + tests/test_oracle_parity.py.
-    return {
-        # -- sentinel (byte-identity canary, driver-green in every round) ---
-        "extract_compose": extract_compose,
-        # -- never driver-verified before round 5 (38 oracled + bpe_encode) --
-        "host_quality": host_quality,
-        "url_blocklist": url_blocklist,
-        "graph_degrees": graph_degrees,
-        "graph_pagerank": graph_pagerank,
-        "graph_html_links": graph_html_links,
-        "graph_html_pagerank": graph_html_pagerank,
-        "graph_html_anchors": graph_html_anchors,
-        "graph_anchor_topk": graph_anchor_topk,
-        "graph_host_edges": graph_host_edges,
-        "graph_host_pagerank": graph_host_pagerank,
-        "html_metadata": html_metadata,
-        "robots_allowed": robots_allowed,
-        "robots_sitemap_urls": robots_sitemap_urls,
-        "sketch_kmv_distinct": sketch_kmv_distinct,
-        "sketch_countmin": sketch_countmin,
-        "sketch_bloom": sketch_bloom,
-        "sketch_hist_quantile": sketch_hist_quantile,
-        "text_phrases": text_phrases,
-        "dedup_semantic": dedup_semantic,
-        "dedup_semantic_keep": dedup_semantic_keep,
-        "dedup_embedding_contamination": dedup_embedding_contamination,
-        "ann_pq_topk": ann_pq_topk,
-        "ann_ivfpq_topk": ann_ivfpq_topk,
-        "text_sentences": text_sentences,
-        "text_readability": text_readability,
-        "text_hash_embedding": text_hash_embedding,
-        "text_bpe_pretokens": text_bpe_pretokens,
-        "text_bpe_encode": text_bpe_encode,
-        "text_chunks": text_chunks,
-        "text_bm25_topk": text_bm25_topk,
-        "text_lm_quality": text_lm_quality,
-        "text_lm_buckets": text_lm_buckets,
-        "text_classifier_score": text_classifier_score,
-        "text_classifier_keep": text_classifier_keep,
-        "text_dsir_score": text_dsir_score,
-        "text_clean_lines": text_clean_lines,
-        "text_pii_scrub": text_pii_scrub,
-        "multimodal_near_dup": multimodal_near_dup,
-        "lines_confidence_checked": lines_confidence_checked,
-        # -- round-5 additions (slots 41..50 of the driver window) ----------
-        "events_asof_join": events_asof_join,
-        "events_sessionize": events_sessionize,
-        "events_rollup": events_rollup,
-        "events_funnel": events_funnel,
-        "events_retention": events_retention,
-        "text_tfidf_topk": text_tfidf_topk,
-        "sketch_heavy_hitters": sketch_heavy_hitters,
-        "sample_reservoir": sample_reservoir,
-        "graph_hits": graph_hits,
-        "events_asof_forward": events_asof_forward,
-        # -- previously driver-verified (r1-r4 green rows on file) ----------
-        "q01_pricing_summary": q01_pricing_summary,
-        "q02_topk_orders": q02_topk_orders,
-        "q03_region_revenue": q03_region_revenue,
-        "q04_anti_join": q04_anti_join,
-        "q05_semi_join": q05_semi_join,
-        "q06_window_adjacency": q06_window_adjacency,
-        "q07_running_containment": q07_running_containment,
-        "q08_group_percentiles": q08_group_percentiles,
-        "q09_ordered_assembly": q09_ordered_assembly,
-        "q10_interval_overlap": q10_interval_overlap,
-        "q11_rollup": q11_rollup,
-        "q12_week_buckets": q12_week_buckets,
-        "q13_set_except": q13_set_except,
-        "q14_exploded_tokens": q14_exploded_tokens,
-        "q15_cube": q15_cube,
-        "q16_topk_per_group": q16_topk_per_group,
-        "q17_harmonize": q17_harmonize,
-        "q18_date_arithmetic": q18_date_arithmetic,
-        "q19_union_intersect": q19_union_intersect,
-        "q20_salted_groupby": q20_salted_groupby,
-        "q21_correlated_subquery": q21_correlated_subquery,
-        "q22_distinct_counts": q22_distinct_counts,
-        "q23_json_extract": q23_json_extract,
-        "q24_top_supplier_per_nation": q24_top_supplier_per_nation,
-        "dedup_exact": dedup_exact,
-        "dedup_exact_normalized": dedup_exact_normalized,
-        "dedup_ngram_jaccard": dedup_ngram_jaccard,
-        "dedup_minhash_lsh": dedup_minhash_lsh,
-        "dedup_incremental": dedup_incremental,
-        "dedup_incremental_exact": dedup_incremental_exact,
-        "dedup_components": dedup_components,
-        "dedup_simhash": dedup_simhash,
-        "dedup_simhash_keep": dedup_simhash_keep,
-        "dedup_substring_keep": dedup_substring_keep,
-        "dedup_substring": dedup_substring,
-        "dedup_span_removal": dedup_span_removal,
-        "dedup_paragraphs": dedup_paragraphs,
-        "dedup_contamination": dedup_contamination,
-        "sample_hash": sample_hash,
-        "sample_split": sample_split,
-        "sample_stratified": sample_stratified,
-        "sample_upsample": sample_upsample,
-        "sample_token_budget": sample_token_budget,
-        "sample_token_budget_global": sample_token_budget_global,
-        "sample_pack_sequences": sample_pack_sequences,
-        "sample_shuffle": sample_shuffle,
-        "sample_interleave": sample_interleave,
-        "sample_dsir_topk": sample_dsir_topk,
-        "sample_dsir_gumbel": sample_dsir_gumbel,
-        "host_stats": host_stats,
-        "host_cap": host_cap,
-        "dedup_embedding": dedup_embedding,
-        "dedup_embedding_lsh": dedup_embedding_lsh,
-        "ann_cosine_topk": ann_cosine_topk,
-        "ann_lsh_topk": ann_lsh_topk,
-        "ann_ivf_topk": ann_ivf_topk,
-        "text_token_stats": text_token_stats,
-        "text_quality": text_quality,
-        "text_langid": text_langid,
-        "text_fingerprint": text_fingerprint,
-        "text_url_canonical": text_url_canonical,
-        "text_repetition": text_repetition,
-        "text_gopher_gate": text_gopher_gate,
-        "multimodal_payload": multimodal_payload,
-        "sketch_kmv_merge": sketch_kmv_merge,
-        "sample_cluster_balanced": sample_cluster_balanced,
-        "sketch_kmv_jaccard": sketch_kmv_jaccard,
-        "extract_blocks": extract_blocks,
-        "lines_confidence": lines_confidence,
-    }
-
-
-# ---------------------------------------------------------------------------
-# DuckDB oracles
-# ---------------------------------------------------------------------------
-
-_TOKENS = "list_filter(regexp_split_to_array(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-_H60 = "CAST(('0x' || substring(md5({x}), 1, 15)) AS BIGINT)"
-
-
-def _shingle_cte(n: int = 3) -> str:
-    return f"""
-toks AS (
-  SELECT doc_id, {_TOKENS} AS t FROM documents
-),
-shingles AS (
-  SELECT DISTINCT doc_id,
-         t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle
-  FROM toks, LATERAL unnest(range(1, greatest(len(t) - {n - 2}, 1))) AS r(i)
-  WHERE len(t) >= {n}
-)"""
-
-
-
-# the events transition graph shared by the graph_* oracles (mirrors
-# operators/graph.event_edges: per-user lag over (ts, event_id),
-# self-loops dropped)
-_GRAPH_EDGE_CTE = """ev AS (
-              SELECT event_id, ts, user_id,
-                     CAST(json_extract(props, '$.k') AS BIGINT) AS dst
-              FROM events),
-            seq AS (
-              SELECT dst,
-                     lag(dst) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS src
-              FROM ev),
-            edges AS (
-              SELECT src, dst, CAST(count(*) AS BIGINT) AS weight
-              FROM seq WHERE src IS NOT NULL AND src <> dst
-              GROUP BY 1, 2)"""
-
-
-def _anchors_cte() -> str:
-    """CTE chain ending in ``anchors(src, dst, anchor)`` — the oracle
-    mirror of operators/graph.html_anchor_texts, shared by the raw
-    harvest gate and the per-target top-k gate.  Two unnests from the
-    SAME pattern zip positionally in DuckDB, mirroring the engine's
-    arrays_zip of the two capture groups; regexp_replace needs the 'g'
-    flag (DuckDB default replaces only the first run, Spark all)."""
-    return f"""pages AS (
-              SELECT url, html FROM '{HTML_PAGES_PATH}/*.parquet'),
-            m AS (
-              SELECT url AS src,
-                     regexp_extract(url, '^(https?://[^/]+)', 1)
-                       AS origin,
-                     unnest(regexp_extract_all(html,
-                       '(?i)<a[ \t\n\r\f][^>]*href="([^"]*)"[^>]*>([^<]*)</a>',
-                       1)) AS href,
-                     unnest(regexp_extract_all(html,
-                       '(?i)<a[ \t\n\r\f][^>]*href="([^"]*)"[^>]*>([^<]*)</a>',
-                       2)) AS label
-              FROM pages),
-            r AS (
-              SELECT src,
-                     CASE WHEN h LIKE 'http://%' OR h LIKE 'https://%'
-                            THEN h
-                          WHEN h LIKE '/%' THEN origin || h
-                          ELSE NULL END AS dst,
-                     trim(regexp_replace(label,
-                          '[ \t\n\r\f]+', ' ', 'g')) AS anchor
-              FROM (SELECT src, origin, str_split(href, '#')[1] AS h,
-                           label
-                    FROM m)),
-            anchors AS (
-              SELECT src, dst, anchor FROM r
-              WHERE dst IS NOT NULL AND dst <> src AND anchor <> '')"""
-
-
-def _html_edge_cte(hashed: bool, name: str = "edges",
-                   path: str | None = None) -> str:
-    """The html link-graph edge CTE (mirrors
-    operators/graph.html_link_edges over the staged pages), ending at
-    ``<name>(src, dst, weight)`` — url strings, or hash60 node ids
-    when ``hashed`` (the pagerank form)."""
-    sel = (f"SELECT {_H60.format(x='src')} AS src, "
-           f"{_H60.format(x='dst')} AS dst, weight FROM eres"
-           if hashed else "SELECT src, dst, weight FROM eres")
-    return f"""pages AS (
-              SELECT url, html FROM '{path or HTML_PAGES_PATH}/*.parquet'),
-            links AS (
-              SELECT url AS src,
-                     regexp_extract(url, '^(https?://[^/]+)', 1) AS origin,
-                     unnest(regexp_extract_all(html,
-                       '(?i)href="([^"]*)"', 1)) AS href
-              FROM pages),
-            resolved AS (
-              SELECT src,
-                     CASE WHEN h LIKE 'http://%' OR h LIKE 'https://%'
-                            THEN h
-                          WHEN h LIKE '/%' THEN origin || h
-                          ELSE NULL END AS dst
-              FROM (SELECT src, origin, str_split(href, '#')[1] AS h
-                    FROM links)),
-            eres AS (
-              SELECT src, dst, CAST(count(*) AS BIGINT) AS weight
-              FROM resolved WHERE dst IS NOT NULL AND dst <> src
-              GROUP BY 1, 2),
-            {name} AS ({sel})"""
-
-
-_HOST_EXPR = ("lower(regexp_extract({u}, '^[A-Za-z][A-Za-z0-9+.-]*://"
-              "(?:[^/?#]*@)?([^/:?#@]+)', 1))")
-
-
-def _host_edge_cte() -> str:
-    """Host rollup of the html edge CTE with hash60 node ids, ending
-    at ``edges(src, dst, weight)`` — the graph_host_pagerank form
-    (mirrors operators/graph.host_edges over html_link_edges)."""
-    return f"""{_html_edge_cte(hashed=False, name='uedges',
-                               path=LINKED_PAGES_PATH)},
-            hroll AS (
-              SELECT {_HOST_EXPR.format(u='src')} AS hsrc,
-                     {_HOST_EXPR.format(u='dst')} AS hdst, weight
-              FROM uedges),
-            hedges AS (
-              SELECT hsrc, hdst, CAST(sum(weight) AS BIGINT) AS weight
-              FROM hroll
-              WHERE hsrc <> '' AND hdst <> '' AND hsrc <> hdst
-              GROUP BY hsrc, hdst),
-            edges AS (
-              SELECT {_H60.format(x='hsrc')} AS src,
-                     {_H60.format(x='hdst')} AS dst, weight
-              FROM hedges)"""
-
-
-def _pagerank_oracle_sql(iters: int = 6, scale: int = 1 << 20,
-                         d_num: int = 85, d_den: int = 100,
-                         edge_cte: str | None = None) -> str:
-    """The engine's integer PageRank recurrence unrolled as chained
-    CTEs (one per iteration).  `//` is DuckDB floor division — equal to
-    Spark's `div` on the all-positive operands here; the teleport base
-    is inlined as an exact integer literal on both sides
-    (operators/graph.pagerank_base).  ``edge_cte`` must end at
-    ``edges(src, dst, weight)``; default is the events transition
-    graph."""
-    from origami_spark.operators.graph import pagerank_base
-
-    base = pagerank_base(scale, d_num, d_den)
-    ctes = [
-        edge_cte or _GRAPH_EDGE_CTE,
-        """nodes AS (
-              SELECT src AS node FROM edges UNION SELECT dst FROM edges)""",
-        """outw AS (
-              SELECT src, CAST(sum(weight) AS BIGINT) AS out_w
-              FROM edges GROUP BY 1)""",
-        f"""s0 AS (SELECT node, CAST({scale} AS BIGINT) AS score
-                   FROM nodes)""",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(f"""s{i} AS (
-              SELECT n.node,
-                     CAST({base} + coalesce(c.recv, 0) AS BIGINT) AS score
-              FROM nodes n LEFT JOIN (
-                SELECT e.dst AS node,
-                       sum((s.score * e.weight * {d_num})
-                           // (o.out_w * {d_den})) AS recv
-                FROM edges e
-                JOIN outw o ON o.src = e.src
-                JOIN s{i - 1} s ON s.node = e.src
-                GROUP BY e.dst) c ON c.node = n.node)""")
-    return ("WITH " + ",\n            ".join(ctes)
-            + f"\n            SELECT node, score FROM s{iters}")
-
-
-def _hits_oracle_sql(iters: int = 4, scale: int = 1 << 16,
-                     edge_cte: str | None = None) -> str:
-    """The engine's integer HITS recurrence (operators/graph.hits)
-    unrolled as chained CTEs — two half-steps per iteration, each
-    max-normalized via a scalar subquery (the oracle twin of the
-    broadcast one-row cross join on the Spark side).  All-positive
-    operands, so DuckDB ``//`` == Spark ``div``."""
-    # every iteration CTE is referenced twice (main + the scalar-max
-    # subquery / the next half-step), and DuckDB INLINES plain CTEs —
-    # re-evaluating the whole chain per reference, exponential in
-    # iters (measured 0.15s/0.54s/13.7s for 1/2/3 iterations at
-    # sf0.001).  MATERIALIZED pins each half-step to one evaluation.
-    ctes = [
-        edge_cte or _GRAPH_EDGE_CTE,
-        """nodes AS MATERIALIZED (
-              SELECT src AS node FROM edges UNION SELECT dst FROM edges)""",
-        f"""h0 AS MATERIALIZED (
-              SELECT node, CAST({scale} AS BIGINT) AS hub FROM nodes)""",
-    ]
-    for i in range(1, iters + 1):
-        ctes.append(f"""ar{i} AS MATERIALIZED (
-              SELECT e.dst AS node,
-                     CAST(sum(h.hub * e.weight) AS BIGINT) AS raw
-              FROM edges e JOIN h{i - 1} h ON h.node = e.src
-              GROUP BY 1)""")
-        ctes.append(f"""a{i} AS MATERIALIZED (
-              SELECT node,
-                     CAST((raw * {scale}) // (SELECT max(raw) FROM ar{i})
-                          AS BIGINT) AS authority
-              FROM ar{i})""")
-        ctes.append(f"""hr{i} AS MATERIALIZED (
-              SELECT e.src AS node,
-                     CAST(sum(a.authority * e.weight) AS BIGINT) AS raw
-              FROM edges e JOIN a{i} a ON a.node = e.dst
-              GROUP BY 1)""")
-        ctes.append(f"""h{i} AS MATERIALIZED (
-              SELECT node,
-                     CAST((raw * {scale}) // (SELECT max(raw) FROM hr{i})
-                          AS BIGINT) AS hub
-              FROM hr{i})""")
-    return ("WITH " + ",\n            ".join(ctes) + f"""
-            SELECT n.node,
-                   CAST(coalesce(h.hub, 0) AS BIGINT) AS hub,
-                   CAST(coalesce(a.authority, 0) AS BIGINT) AS authority
-            FROM nodes n
-            LEFT JOIN h{iters} h ON h.node = n.node
-            LEFT JOIN a{iters} a ON a.node = n.node""")
-
-
-def _simhash_cand_cte() -> str:
-    """The banded-simhash candidate CTE chain (mirrors
-    operators/dedup.simhash + the band join), ending at
-    ``cand(doc_a, doc_b, ha, hb)`` — shared by dedup_simhash and
-    dedup_simhash_keep."""
-    return f"""toks AS (
-              SELECT doc_id, unnest({_TOKENS}) AS tok FROM documents),
-            th AS (SELECT doc_id, {_H60.format(x="tok")} AS h FROM toks),
-            votes AS (
-              SELECT doc_id, CAST(bit AS INT) AS bit,
-                     sum(CASE WHEN (h >> CAST(bit AS INT)) & 1 = 1
-                         THEN 1 ELSE -1 END) AS vote
-              FROM th, LATERAL unnest(range(0, 32)) AS r(bit)
-              GROUP BY doc_id, bit),
-            sh AS (
-              SELECT doc_id,
-                     CAST(sum(CASE WHEN vote > 0
-                              THEN (CAST(1 AS BIGINT) << bit)
-                              ELSE 0 END) AS BIGINT) AS simhash
-              FROM votes GROUP BY doc_id),
-            banded AS (
-              SELECT doc_id, simhash, CAST(band AS INT) AS band,
-                     (simhash >> (CAST(band AS INT) * 8)) & 255 AS bucket
-              FROM sh, LATERAL unnest(range(0, 4)) AS r(band)),
-            cand AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                     a.simhash AS ha, b.simhash AS hb
-              FROM banded a JOIN banded b
-                ON a.band = b.band AND a.bucket = b.bucket
-               AND a.doc_id < b.doc_id)"""
-
-
-def _global_cum_cte() -> str:
-    """The decomposed corpus-wide running token sum (mirror of
-    operators/sampling._global_cum), ending at ``c(doc_id, n_tokens,
-    cum_tokens)`` — shared by the global-budget and sequence-packing
-    oracles so the prefix-sum decomposition cannot drift between
-    them."""
-    return f"""t AS (
-              SELECT doc_id,
-                     CAST(len({_TOKENS}) AS BIGINT) AS n_tokens,
-                     CAST(('0x' || substring(md5('s0' || '|'
-                          || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % 1000000 AS b
-              FROM documents
-              WHERE doc_id IS NOT NULL),
-            tg AS (SELECT *, CAST(floor(b * 256 / 1000000) AS INT) AS g FROM t),
-            gs AS (SELECT g, sum(n_tokens) AS gsum FROM tg GROUP BY g),
-            pre AS (
-              SELECT g,
-                     CAST(sum(gsum) OVER (ORDER BY g
-                          ROWS UNBOUNDED PRECEDING) - gsum AS BIGINT) AS prefix
-              FROM gs),
-            c AS (
-              SELECT tg.doc_id, tg.n_tokens,
-                     CAST(pre.prefix + sum(tg.n_tokens) OVER (
-                          PARTITION BY tg.g ORDER BY tg.b, tg.doc_id
-                          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens
-              FROM tg JOIN pre USING (g))"""
-
-
-def _reach_comp_cte(u: str = "doc_a", v: str = "doc_b",
-                    nodes: str = "documents",
-                    node_col: str = "doc_id") -> str:
-    """Transitive min-label propagation over a preceding
-    ``pairs({u}, {v})`` CTE — the DuckDB oracle of
-    operators/components.connected_components.  Emits the ``e`` /
-    ``reach`` / ``comp`` chain (labels flow while label < node, so the
-    component min always spreads); append after the pairs CTE inside a
-    WITH RECURSIVE chain and SELECT from ``comp``.  ONE copy on
-    purpose: the propagation rule must stay identical across every
-    *_keep / components oracle."""
-    return f"""e AS (
-              SELECT {u} AS u, {v} AS v FROM pairs
-              UNION
-              SELECT {v}, {u} FROM pairs),
-            reach(node, label) AS (
-              SELECT {node_col}, {node_col} FROM {nodes}
-              UNION
-              SELECT e.v, r.label
-              FROM reach r JOIN e ON e.u = r.node
-              WHERE r.label < e.v),
-            comp AS (
-              SELECT node AS {node_col}, min(label) AS component
-              FROM reach GROUP BY node)"""
-
-
-def _bucket_array_sql(planes: int, tables: int, dim: int) -> str:
-    """The inlined multi-table bucket-array expression with the same
-    deterministic plane coefficients the Spark kernels use
-    (operators/similarity.plane_coefficients)."""
-    from origami_spark.operators.similarity import plane_coefficients
-
-    total = planes * tables
-    coeffs = plane_coefficients(total, dim)
-    table_buckets = []
-    for t in range(tables):
-        bits = []
-        for j in range(planes):
-            pidx = t * planes + j
-            # flat list_sum instead of chained '+': DuckDB's binder has
-            # a 128-deep recursion limit
-            terms = ", ".join(
-                f"CAST(embedding[{d + 1}] AS DOUBLE) * ({coeffs[pidx][d]!r})"
-                for d in range(dim)
-            )
-            bits.append(f"(CASE WHEN list_sum([{terms}]) >= 0 "
-                        f"THEN CAST({1 << j} AS BIGINT) ELSE 0 END)")
-        table_buckets.append(f"CAST(list_sum([{', '.join(bits)}]) AS BIGINT)")
-    return "[" + ", ".join(table_buckets) + "]"
-
-
-def _lsh_oracle_sql(planes: int = 6, tables: int = 8, dim: int = 64,
-                    threshold: float = 0.4) -> str:
-    """Programmatically build the multi-table hyperplane-LSH oracle with
-    the same inlined deterministic plane coefficients the Spark operator
-    uses (operators/dedup.embedding_near_dups_lsh)."""
-    buckets_arr = _bucket_array_sql(planes, tables, dim)
-    return f"""
-        WITH sig AS (
-          SELECT vec_id, embedding, {buckets_arr} AS buckets FROM embeddings),
-        banded AS (
-          SELECT vec_id, embedding, CAST(tbl AS INT) AS tbl,
-                 buckets[CAST(tbl AS INT) + 1] AS tbucket
-          FROM sig, LATERAL unnest(range(0, {tables})) AS r(tbl)),
-        cand AS (
-          SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
-          FROM banded a JOIN banded b
-            ON a.tbl = b.tbl AND a.tbucket = b.tbucket
-           AND a.vec_id < b.vec_id)
-        SELECT c.vec_a, c.vec_b,
-               round(CAST(list_cosine_similarity(ea.embedding, eb.embedding)
-                     AS DOUBLE), 4) AS cosine
-        FROM cand c
-        JOIN embeddings ea ON ea.vec_id = c.vec_a
-        JOIN embeddings eb ON eb.vec_id = c.vec_b
-        WHERE round(CAST(list_cosine_similarity(ea.embedding, eb.embedding)
-                    AS DOUBLE), 4) >= {threshold}"""
-
-
-def _emb_contam_oracle_sql(planes: int, tables: int, dim: int,
-                           threshold: float, bench_ids) -> str:
-    """Oracle mirror of operators/dedup.embedding_contamination: both
-    sides sign with the same inlined plane coefficients; candidates
-    are cross-set band collisions; exact cosine verifies; every corpus
-    row carries its flag."""
-    buckets_arr = _bucket_array_sql(planes, tables, dim)
-    ids = ", ".join(str(int(i)) for i in bench_ids)
-    return f"""
-        WITH sig AS (
-          SELECT vec_id, embedding, {buckets_arr} AS buckets FROM embeddings),
-        banded AS (
-          SELECT vec_id, CAST(tbl AS INT) AS tbl,
-                 buckets[CAST(tbl AS INT) + 1] AS tbucket
-          FROM sig, LATERAL unnest(range(0, {tables})) AS r(tbl)),
-        cand AS (
-          SELECT DISTINCT c.vec_id, b.vec_id AS bench_id
-          FROM banded c JOIN banded b
-            ON c.tbl = b.tbl AND c.tbucket = b.tbucket
-           AND b.vec_id IN ({ids}) AND c.vec_id <> b.vec_id),
-        hit AS (
-          SELECT DISTINCT c.vec_id
-          FROM cand c
-          JOIN embeddings ea ON ea.vec_id = c.vec_id
-          JOIN embeddings eb ON eb.vec_id = c.bench_id
-          WHERE round(CAST(list_cosine_similarity(ea.embedding,
-                eb.embedding) AS DOUBLE), 4) >= {threshold})
-        SELECT e.vec_id, (h.vec_id IS NOT NULL) AS contaminated
-        FROM embeddings e LEFT JOIN hit h ON e.vec_id = h.vec_id"""
-
-
-def _winnow_fp_cte(window: int = 64, k: int = 16, max_df: int = 5,
-                   all_positions: bool = False,
-                   max_positions: int = 16) -> str:
-    """Winnowing-fingerprint CTE chain ending in `fp` (doc_id, gram,
-    pos) — the exact relational form of operators/dedup.py's
-    substring_fingerprints + df cutoff, shared by the substring-pair
-    and span-removal oracles.  ``all_positions`` mirrors the operator
-    flag: every occurrence of a selected gram instead of the earliest
-    (df then counts DISTINCT docs)."""
-    w = window - k + 1
-    if all_positions:
-        # first max_positions occurrences per (doc, gram) — the same
-        # anchor-explosion bound the operator applies
-        fp0 = f"""fp0 AS (
-              SELECT doc_id, gram, pos FROM (
-                SELECT g.doc_id, g.gram, g.pos,
-                       row_number() OVER (PARTITION BY g.doc_id, g.gram
-                                          ORDER BY g.pos) AS rn
-                FROM g JOIN sel ON g.doc_id = sel.doc_id AND g.h = sel.h)
-              WHERE rn <= {max_positions})"""
-        rare = (f"rare AS (\n              SELECT gram FROM fp0 "
-                f"GROUP BY gram HAVING count(DISTINCT doc_id) <= {max_df})")
-    else:
-        fp0 = """fp0 AS (
-              SELECT g.doc_id, g.gram, min(g.pos) AS pos
-              FROM g JOIN sel ON g.doc_id = sel.doc_id AND g.h = sel.h
-              GROUP BY g.doc_id, g.gram)"""
-        rare = (f"rare AS (\n              SELECT gram FROM fp0 "
-                f"GROUP BY gram HAVING count(*) <= {max_df})")
-    return f"""grams AS (
-              SELECT doc_id, CAST(length(text) AS BIGINT) AS len,
-                     CAST(i AS BIGINT) AS pos,
-                     substr(text, CAST(i AS INT) + 1, {k}) AS gram
-              FROM documents,
-                   LATERAL unnest(range(0, length(text) - {k} + 1)) AS r(i)
-              WHERE length(text) >= {window}),
-            g AS (SELECT doc_id, len, pos, gram,
-                         {_H60.format(x="gram")} AS h
-                  FROM grams),
-            wm AS (
-              SELECT doc_id, len, pos,
-                     min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                                  ROWS BETWEEN CURRENT ROW AND {w - 1} FOLLOWING)
-                       AS mh
-              FROM g),
-            sel AS (
-              SELECT DISTINCT doc_id, mh AS h FROM wm
-              WHERE pos <= len - {window}),
-            {fp0},
-            {rare},
-            fp AS (SELECT fp0.* FROM fp0 JOIN rare USING (gram))"""
-
-
-def _span_removal_oracle_sql(window: int = 64, k: int = 16,
-                             max_df: int = 5,
-                             max_positions: int = 16) -> str:
-    """Oracle for the span-removal APPLICATION (duplicate_spans with
-    skip_covered=False): all-positions winnowing anchors, each extended
-    to the maximal exact match via MONOTONE substring-equality counting
-    (prefix equality at length L implies it at L-1, so count(matching
-    lengths) == max length), spans >= window kept, distinct, then the
-    same running-max interval merge the Spark side computes.  All
-    window/k literals derive from the parameters — the fingerprint CTE
-    and the extension arithmetic cannot drift apart."""
-    return f"""
-        WITH {_winnow_fp_cte(window, k, max_df, all_positions=True,
-                             max_positions=max_positions)},
-        anchors AS (
-          SELECT a.doc_id AS da, b.doc_id AS db,
-                 a.pos AS pa, b.pos AS pb
-          FROM fp a JOIN fp b
-            ON a.gram = b.gram AND a.doc_id < b.doc_id),
-        ax AS (
-          SELECT an.*, ta.text AS ta, tb.text AS tb,
-                 CAST(length(ta.text) AS BIGINT) AS la,
-                 CAST(length(tb.text) AS BIGINT) AS lb
-          FROM anchors an
-          JOIN documents ta ON ta.doc_id = an.da
-          JOIN documents tb ON tb.doc_id = an.db),
-        ext AS (
-          SELECT db AS doc_id, pb,
-            COALESCE((SELECT count(*)
-               FROM unnest(range(1, least(pa, pb) + 1)) AS r(l)
-               WHERE substr(ta, CAST(pa - l + 1 AS INT), CAST(l AS INT))
-                   = substr(tb, CAST(pb - l + 1 AS INT), CAST(l AS INT))),
-              0) AS lmax,
-            COALESCE((SELECT count(*)
-               FROM unnest(range(1, least(la - pa, lb - pb) - {k} + 1)) AS r(e)
-               WHERE substr(ta, CAST(pa + 1 AS INT), CAST({k} + e AS INT))
-                   = substr(tb, CAST(pb + 1 AS INT), CAST({k} + e AS INT))),
-              0) AS rext
-          FROM ax),
-        spans0 AS (
-          SELECT DISTINCT doc_id,
-                 CAST(pb - lmax AS BIGINT) AS start,
-                 CAST(pb + {k} + rext AS BIGINT) AS "end"
-          FROM ext WHERE lmax + {k} + rext >= {window}),
-        m1 AS (
-          SELECT doc_id, start, "end",
-                 max("end") OVER (PARTITION BY doc_id
-                   ORDER BY start, "end"
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                   AS prev_max
-          FROM spans0),
-        m2 AS (
-          SELECT *, CASE WHEN prev_max IS NULL OR start > prev_max
-                    THEN 1 ELSE 0 END AS ng
-          FROM m1),
-        m3 AS (
-          SELECT *, sum(ng) OVER (PARTITION BY doc_id
-                   ORDER BY start, "end"
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS grp
-          FROM m2)
-        SELECT doc_id, min(start) AS start, max("end") AS "end"
-        FROM m3 GROUP BY doc_id, grp"""
-
-
-def _lsh_topk_oracle_sql(planes: int = 8, tables: int = 8, dim: int = 64,
-                         k: int = 5, n_queries: int = 8) -> str:
-    """Oracle for the multi-table LSH approximate top-k
-    (operators/similarity.lsh_topk): identical bucket expressions,
-    candidate union across tables, exact-cosine re-rank."""
-    buckets_arr = _bucket_array_sql(planes, tables, dim)
-    return f"""
-        WITH sig AS (
-          SELECT vec_id, embedding, {buckets_arr} AS buckets FROM embeddings),
-        banded AS (
-          SELECT vec_id, CAST(tbl AS INT) AS tbl,
-                 buckets[CAST(tbl AS INT) + 1] AS tbucket
-          FROM sig, LATERAL unnest(range(0, {tables})) AS r(tbl)),
-        q AS (
-          SELECT vec_id AS query_id, tbl, tbucket FROM banded
-          WHERE vec_id < {n_queries}),
-        cand AS (
-          SELECT DISTINCT q.query_id, b.vec_id
-          FROM banded b JOIN q
-            ON b.tbl = q.tbl AND b.tbucket = q.tbucket
-           AND b.vec_id != q.query_id),
-        scored AS (
-          SELECT c.query_id, c.vec_id,
-                 round(CAST(list_cosine_similarity(eq.embedding, ec.embedding)
-                       AS DOUBLE), 4) AS cosine
-          FROM cand c
-          JOIN embeddings eq ON eq.vec_id = c.query_id
-          JOIN embeddings ec ON ec.vec_id = c.vec_id),
-        ranked AS (
-          SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rk
-          FROM scored)
-        SELECT query_id, vec_id, cosine, rk FROM ranked WHERE rk <= {k}"""
-
-
-def _l8_cte(decorated: bool = False) -> str:
-    """Shared line-synthesis CTEs (mirrors _lines8_cols): 8-token lines
-    of the shared tokenizer output, optionally with the C4-trigger
-    decorations."""
-    deco = ""
-    if decorated:
-        deco = """
-                              || CASE WHEN i % 7 = 0 THEN ' javascript' ELSE '' END
-                              || CASE WHEN i % 3 <> 0 THEN '.' ELSE '' END"""
-    return rf"""toks0 AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-            l8 AS (
-              SELECT doc_id,
-                     CASE WHEN len(t) > 0 THEN
-                       list_transform(range(1, CAST(ceil(len(t) / 8.0) AS INT) + 1),
-                         i -> array_to_string(t[((i-1)*8+1):((i-1)*8+8)], ' '){deco})
-                     ELSE CAST([] AS VARCHAR[]) END AS lines8
-              FROM toks0)"""
-
-
-# boilerplate-sentinel text used by the repetition / gate / paragraph
-# oracles (mirrors the Spark wrappers: one sentinel line for every doc,
-# a second on even doc_ids)
-_SENT_TX_CTE = """tx AS (
-              SELECT doc_id,
-                     array_to_string(lines8, chr(10))
-                     || chr(10) || 'the copied boilerplate line'
-                     || CASE WHEN doc_id % 2 = 0
-                             THEN chr(10) || 'the copied boilerplate line'
-                             ELSE '' END AS text2
-              FROM l8)"""
-
-
-# repetition-feature CTE chain over `tx` — shared verbatim by the
-# text_repetition and text_gopher_gate oracles (the gate's extra token
-# features ride along unused in the former)
-_REP_FEATURE_CTES = r"""base AS (
-              SELECT doc_id, length(text2) AS chars,
-                     list_filter(list_transform(
-                       regexp_split_to_array(text2, chr(10)),
-                       x -> regexp_replace(x,
-                         '\A[ \t\n\r\f\x0b\xa0]+|[ \t\n\r\f\x0b\xa0]+\z', '', 'g')),
-                       x -> x <> '') AS lines,
-                     list_filter(regexp_split_to_array(lower(text2), '[^a-z0-9]+'),
-                                 x -> x <> '') AS t
-              FROM tx),
-            lstat AS (
-              SELECT doc_id, chars, t, lines,
-                     CAST(len(t) AS BIGINT) AS n_tokens,
-                     round(coalesce(list_sum(list_transform(t, x -> length(x))), 0)
-                           * 1.0 / greatest(len(t), 1), 4) AS mean_len,
-                     len(list_intersect(list_distinct(t),
-                         ['the','a','of','and','to','in','is','on','for','it']))
-                       AS stop_hits,
-                     len(lines) AS n_lines,
-                     len(list_distinct(lines)) AS n_distinct_lines,
-                     coalesce(list_sum(list_transform(lines, x -> length(x))), 0)
-                       AS line_chars
-              FROM base),
-            lx AS (SELECT doc_id, unnest(lines) AS line FROM base),
-            lcnt AS (SELECT doc_id, line, count(*) AS c FROM lx GROUP BY 1, 2),
-            lc AS (SELECT doc_id, sum((c - 1) * length(line)) AS dup_chars
-                   FROM lcnt GROUP BY 1),
-            g AS (
-              SELECT doc_id,
-                     CASE WHEN len(t) >= 2 THEN
-                       list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])
-                     ELSE CAST([] AS VARCHAR[]) END AS g2,
-                     CASE WHEN len(t) >= 5 THEN
-                       list_transform(range(1, len(t) - 3),
-                                      i -> array_to_string(t[i:i+4], ' '))
-                     ELSE CAST([] AS VARCHAR[]) END AS g5
-              FROM lstat),
-            g2x AS (SELECT doc_id, unnest(g2) AS gram FROM g),
-            g2c AS (SELECT doc_id, gram, count(*) AS c FROM g2x GROUP BY 1, 2),
-            top2 AS (
-              SELECT doc_id, gram AS top_2gram, c AS top_c
-              FROM (SELECT doc_id, gram, c,
-                           row_number() OVER (PARTITION BY doc_id
-                                              ORDER BY c DESC, gram ASC) AS rn
-                    FROM g2c)
-              WHERE rn = 1),
-            g5s AS (SELECT doc_id, len(g5) AS n5, len(list_distinct(g5)) AS nd5 FROM g),
-            feat AS (
-              SELECT s.doc_id, s.chars, s.n_tokens, s.mean_len, s.stop_hits,
-                     s.n_lines,
-                     round((s.n_lines - s.n_distinct_lines) * 1.0
-                           / greatest(s.n_lines, 1), 4) AS dup_line_frac,
-                     round(coalesce(d.dup_chars, 0) * 1.0
-                           / greatest(s.line_chars, 1), 4) AS dup_line_char_frac,
-                     coalesce(t2.top_2gram, '') AS top_2gram,
-                     round(coalesce(t2.top_c * length(t2.top_2gram), 0) * 1.0
-                           / greatest(s.chars, 1), 4) AS top_2gram_frac,
-                     round((g5.n5 - g5.nd5) * 1.0 / greatest(g5.n5, 1), 4)
-                       AS dup_5gram_frac
-              FROM lstat s
-              LEFT JOIN lc d USING (doc_id)
-              LEFT JOIN top2 t2 USING (doc_id)
-              JOIN g5s g5 USING (doc_id))"""
+    return {g.__name__: g for g in GATES}
 
 
 def oracle_sql() -> dict[str, str]:
-
-    sql = {
-        "q01_pricing_summary": """
-            SELECT l_returnflag, l_linestatus,
-                   round(sum(l_quantity), 2) AS sum_qty,
-                   round(sum(l_extendedprice), 2) AS sum_base_price,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-                   round(avg(l_quantity), 4) AS avg_qty,
-                   count(*) AS count_order
-            FROM lineitem
-            WHERE l_shipdate <= TIMESTAMP '2024-09-01 00:00:00'
-            GROUP BY l_returnflag, l_linestatus""",
-        "q02_topk_orders": """
-            SELECT o_orderkey, o_custkey, o_totalprice
-            FROM orders ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 10""",
-        "q03_region_revenue": """
-            SELECT r_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-                   count(*) AS n_items
-            FROM lineitem
-            JOIN orders   ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation   ON c_nationkey = n_nationkey
-            JOIN region   ON n_regionkey = r_regionkey
-            GROUP BY r_name""",
-        "q04_anti_join": """
-            SELECT c_mktsegment, count(*) AS n_inactive
-            FROM customer
-            WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-            GROUP BY c_mktsegment""",
-        "q05_semi_join": """
-            SELECT p_brand, count(*) AS n_parts
-            FROM part
-            WHERE p_partkey IN (
-              SELECT l_partkey FROM lineitem WHERE l_quantity > 45)
-            GROUP BY p_brand""",
-        "q06_window_adjacency": """
-            WITH g AS (
-              SELECT user_id,
-                     epoch(ts) - epoch(lag(ts) OVER
-                       (PARTITION BY user_id ORDER BY ts, event_id)) AS gap
-              FROM events)
-            SELECT user_id,
-                   CAST(sum(CASE WHEN gap IS NULL OR gap > 1800
-                            THEN 1 ELSE 0 END) AS BIGINT) AS n_sessions,
-                   count(*) AS n_events
-            FROM g GROUP BY user_id""",
-        "q07_running_containment": """
-            WITH rm AS (
-              SELECT user_id, value,
-                     max(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
-              FROM events)
-            SELECT user_id,
-                   CAST(sum(CASE WHEN value <= prev_max THEN 1 ELSE 0 END)
-                        AS BIGINT) AS n_contained
-            FROM rm GROUP BY user_id""",
-        "q08_group_percentiles": """
-            SELECT o_orderpriority,
-                   round(CAST(quantile_cont(o_totalprice, 0.5) AS DOUBLE), 4)
-                     AS median_price,
-                   round(CAST(quantile_cont(o_totalprice, 0.9) AS DOUBLE), 4)
-                     AS p90_price,
-                   count(*) AS n_orders
-            FROM orders GROUP BY o_orderpriority""",
-        "q09_ordered_assembly": """
-            SELECT l_orderkey,
-                   string_agg(CAST(l_partkey AS VARCHAR), ','
-                              ORDER BY l_linenumber, l_partkey)
-                     AS parts_in_line_order
-            FROM lineitem GROUP BY l_orderkey""",
-        "q10_interval_overlap": """
-            SELECT a.user_id AS user_id, count(*) AS n_overlapping
-            FROM events a JOIN events b
-              ON a.user_id = b.user_id AND a.event_id < b.event_id
-             AND a.value < b.value + 50 AND b.value < a.value + 50
-            GROUP BY a.user_id""",
-        "q11_rollup": """
-            SELECT event_type, count(*) AS n, round(sum(value), 2) AS sum_value
-            FROM events GROUP BY ROLLUP(event_type)""",
-        "q12_week_buckets": """
-            SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-                   count(*) AS n, round(avg(value), 4) AS avg_value
-            FROM events GROUP BY 1""",
-        "q13_set_except": """
-            SELECT DISTINCT user_id AS clean_user FROM events
-            WHERE event_type = 'signup'
-            EXCEPT ALL
-            SELECT DISTINCT user_id FROM events WHERE event_type = 'error'""",
-        "q14_exploded_tokens": f"""
-            WITH toks AS (
-              SELECT doc_id, {_TOKENS} AS t FROM documents WHERE doc_id < 50)
-            SELECT doc_id, CAST(i AS BIGINT) AS pos, t[i] AS token
-            FROM toks, LATERAL unnest(range(1, len(t) + 1)) AS r(i)""",
-        "q15_cube": """
-            SELECT event_type, CAST(year(ts) AS INT) AS yr, count(*) AS n,
-                   round(avg(value), 4) AS avg_value
-            FROM events GROUP BY CUBE(event_type, year(ts))""",
-        "q16_topk_per_group": """
-            WITH r AS (
-              SELECT o_orderpriority, o_orderkey, o_totalprice,
-                     CAST(row_number() OVER (PARTITION BY o_orderpriority
-                       ORDER BY o_totalprice DESC, o_orderkey ASC) AS BIGINT)
-                       AS rk
-              FROM orders)
-            SELECT * FROM r WHERE rk <= 3""",
-        "q17_harmonize": """
-            WITH h AS (
-              SELECT doc_id,
-                     trim(regexp_replace(
-                       regexp_replace(lower(text), '[0-9]+', '#', 'g'),
-                       '\\s+', ' ', 'g')) AS harm
-              FROM documents)
-            SELECT doc_id, CAST(length(harm) AS BIGINT) AS harm_len,
-                   substring(harm, 1, 20) AS harm_head
-            FROM h""",
-        "q18_date_arithmetic": """
-            SELECT o_orderkey,
-                   CAST(date_diff('day', CAST(o_orderdate AS DATE),
-                        DATE '2025-01-01') AS BIGINT) AS age_days,
-                   CAST(dayofweek(o_orderdate) + 1 AS BIGINT) AS dow,
-                   strftime(CAST(o_orderdate AS DATE) + INTERVAL 3 MONTH,
-                            '%Y-%m') AS plus3m
-            FROM orders""",
-        "q19_union_intersect": """
-            WITH a AS (SELECT DISTINCT user_id FROM events
-                       WHERE event_type = 'click'),
-                 b AS (SELECT DISTINCT user_id FROM events
-                       WHERE event_type = 'purchase'),
-                 both_u AS (SELECT user_id FROM a INTERSECT
-                            SELECT user_id FROM b),
-                 either_u AS (SELECT user_id FROM a UNION
-                              SELECT user_id FROM b)
-            SELECT 'both' AS kind, count(*) AS n_users FROM both_u
-            UNION ALL
-            SELECT 'either' AS kind, count(*) AS n_users FROM either_u""",
-        "q20_salted_groupby": """
-            SELECT user_id, count(*) AS n_events,
-                   round(sum(value), 2) AS sum_value
-            FROM events GROUP BY user_id""",
-        "q21_correlated_subquery": """
-            SELECT o.o_orderkey, o.o_custkey,
-                   round(o.o_totalprice, 2) AS price
-            FROM orders o
-            WHERE o.o_totalprice > 1.5 * (
-                SELECT avg(i.o_totalprice) FROM orders i
-                WHERE i.o_custkey = o.o_custkey)""",
-        "q22_distinct_counts": """
-            SELECT event_type, count(DISTINCT user_id) AS exact_users,
-                   count(*) AS n
-            FROM events GROUP BY event_type""",
-        "q23_json_extract": """
-            SELECT k % 10 AS k_mod, count(*) AS n,
-                   CAST(sum(k) AS BIGINT) AS sum_k
-            FROM (SELECT CAST(json_extract(props, '$.k') AS BIGINT) AS k
-                  FROM events)
-            GROUP BY k % 10""",
-        "q24_top_supplier_per_nation": """
-            WITH rev AS (
-              SELECT l_suppkey,
-                     round(sum(l_extendedprice * (1 - l_discount)), 2)
-                       AS revenue
-              FROM lineitem GROUP BY l_suppkey),
-            ranked AS (
-              SELECT n_name, s_suppkey, s_name, revenue,
-                     CAST(row_number() OVER (PARTITION BY n_name
-                       ORDER BY revenue DESC, s_suppkey ASC) AS BIGINT) AS rk
-              FROM rev
-              JOIN supplier ON l_suppkey = s_suppkey
-              JOIN nation   ON s_nationkey = n_nationkey)
-            SELECT n_name, s_suppkey, s_name, revenue
-            FROM ranked WHERE rk = 1""",
-        "dedup_exact": """
-            SELECT md5(text) AS digest, min(doc_id) AS keeper,
-                   count(*) AS n_docs
-            FROM documents GROUP BY 1""",
-        "dedup_exact_normalized": """
-            SELECT md5(trim(regexp_replace(regexp_replace(
-                     regexp_replace(lower(text), '[0-9]+', '', 'g'),
-                     '[!-/:-@\\[-`{-~]+', '', 'g'),
-                     '[ \t\n\r\f]+', ' ', 'g'))) AS digest,
-                   min(doc_id) AS keeper, count(*) AS n_docs
-            FROM documents GROUP BY 1""",
-        "dedup_ngram_jaccard": f"""
-            WITH {_shingle_cte(3)},
-            sizes AS (SELECT doc_id, count(*) AS sz FROM shingles GROUP BY 1),
-            rare AS (
-              SELECT shingle FROM shingles GROUP BY 1 HAVING count(*) <= 5),
-            joinable AS (
-              SELECT s.doc_id, s.shingle FROM shingles s JOIN rare USING (shingle)),
-            pairs AS (
-              SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS common
-              FROM joinable a JOIN joinable b
-                ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-              GROUP BY 1, 2)
-            SELECT doc_a, doc_b, common,
-                   round(common * 1.0 / (sa.sz + sb.sz - common), 4) AS jaccard
-            FROM pairs
-            JOIN sizes sa ON sa.doc_id = doc_a
-            JOIN sizes sb ON sb.doc_id = doc_b
-            WHERE round(common * 1.0 / (sa.sz + sb.sz - common), 4) >= 0.2""",
-        "dedup_minhash_lsh": f"""
-            WITH {_shingle_cte(3)},
-            mh AS (
-              SELECT doc_id, i,
-                     min({_H60.format(x="CAST(i AS VARCHAR) || '|' || shingle")}) AS mh
-              FROM shingles, LATERAL unnest(range(0, 16)) AS r(i)
-              GROUP BY doc_id, i),
-            buckets AS (
-              SELECT doc_id, CAST(i // 4 AS INT) AS band,
-                     string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS bucket
-              FROM mh GROUP BY doc_id, band)
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM buckets a JOIN buckets b
-              ON a.band = b.band AND a.bucket = b.bucket
-             AND a.doc_id < b.doc_id""",
-        # incremental near-dup: the same banding CTEs as
-        # dedup_minhash_lsh, with the corpus/batch split expressed as
-        # join predicates — 'corpus' pairs an indexed doc with a batch
-        # doc (either id may be smaller), 'batch' pairs two batch docs
-        "dedup_incremental": f"""
-            WITH {_shingle_cte(3)},
-            mh AS (
-              SELECT doc_id, i,
-                     min({_H60.format(x="CAST(i AS VARCHAR) || '|' || shingle")}) AS mh
-              FROM shingles, LATERAL unnest(range(0, 16)) AS r(i)
-              GROUP BY doc_id, i),
-            buckets AS (
-              SELECT doc_id, CAST(i // 4 AS INT) AS band,
-                     string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS bucket
-              FROM mh GROUP BY doc_id, band)
-            SELECT DISTINCT c.doc_id AS doc_a, b.doc_id AS doc_b,
-                   'corpus' AS kind
-            FROM buckets c JOIN buckets b
-              ON c.band = b.band AND c.bucket = b.bucket
-             AND c.doc_id % 4 <> 0 AND b.doc_id % 4 = 0
-             AND c.doc_id <> b.doc_id
-            UNION ALL
-            SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   'batch' AS kind
-            FROM buckets a JOIN buckets b
-              ON a.band = b.band AND a.bucket = b.bucket
-             AND a.doc_id % 4 = 0 AND b.doc_id % 4 = 0
-             AND a.doc_id < b.doc_id""",
-        # incremental exact dedup: the same deterministic source-id
-        # remap, then the keep rule in direct SQL — digest absent from
-        # the corpus index AND min batch id per digest
-        "dedup_incremental_exact": """
-            WITH remapped AS (
-              SELECT m.doc_id, s.text
-              FROM (SELECT doc_id,
-                           CASE WHEN doc_id % 48 IN (0, 4, 16)
-                                THEN doc_id - doc_id % 48
-                                WHEN doc_id % 48 IN (8, 9, 10)
-                                THEN doc_id - doc_id % 48 + 8
-                                ELSE doc_id END AS src
-                    FROM documents) m
-              JOIN documents s ON s.doc_id = m.src),
-            idx AS (
-              SELECT md5(text) AS digest, min(doc_id) AS keeper
-              FROM remapped WHERE doc_id % 4 <> 0 GROUP BY 1),
-            b AS (
-              SELECT doc_id, md5(text) AS digest
-              FROM remapped WHERE doc_id % 4 = 0),
-            bmin AS (SELECT digest, min(doc_id) AS bkeep FROM b GROUP BY 1)
-            SELECT b.doc_id, b.digest,
-                   (idx.keeper IS NULL AND b.doc_id = bmin.bkeep) AS keep,
-                   CASE WHEN idx.keeper IS NOT NULL THEN idx.keeper
-                        WHEN b.doc_id <> bmin.bkeep THEN bmin.bkeep
-                   END AS dup_of
-            FROM b JOIN bmin USING (digest)
-            LEFT JOIN idx USING (digest)""",
-        # near-dup clusters: the minhash banding pairs (CTEs identical
-        # to dedup_minhash_lsh) fed through a recursive min-label
-        # propagation — label L spreads along an edge into node v only
-        # while L < v (a label >= v can never be v's component min, and
-        # the true min m < every other member, so its path is never
-        # pruned); min(label) per node == the alternating-star result
-        "dedup_components": f"""
-            WITH RECURSIVE {_shingle_cte(3)},
-            mh AS (
-              SELECT doc_id, i,
-                     min({_H60.format(x="CAST(i AS VARCHAR) || '|' || shingle")}) AS mh
-              FROM shingles, LATERAL unnest(range(0, 16)) AS r(i)
-              GROUP BY doc_id, i),
-            buckets AS (
-              SELECT doc_id, CAST(i // 4 AS INT) AS band,
-                     string_agg(CAST(mh AS VARCHAR), ',' ORDER BY i) AS bucket
-              FROM mh GROUP BY doc_id, band),
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM buckets a JOIN buckets b
-                ON a.band = b.band AND a.bucket = b.bucket
-               AND a.doc_id < b.doc_id),
-            {_reach_comp_cte()}
-            SELECT doc_id, component,
-                   count(*) OVER (PARTITION BY component) AS csize
-            FROM comp""",
-        # winnowing fingerprints (shared CTE below): window-min hash ->
-        # distinct fingerprint grams, df<=5 cutoff, equality join
-        # (mirrors substring_dup_pairs)
-        "dedup_substring": f"""
-            WITH {_winnow_fp_cte()}
-            SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                   count(*) AS n_shared,
-                   min(a.pos) AS a_pos_min, min(b.pos) AS b_pos_min
-            FROM fp a JOIN fp b
-              ON a.gram = b.gram AND a.doc_id < b.doc_id
-            GROUP BY 1, 2""",
-        "dedup_span_removal": _span_removal_oracle_sql(),
-        # substring pairs -> transitive min-label components -> keep-one
-        "dedup_substring_keep": f"""
-            WITH RECURSIVE {_winnow_fp_cte()},
-            pairs AS (
-              SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-              FROM fp a JOIN fp b
-                ON a.gram = b.gram AND a.doc_id < b.doc_id),
-            {_reach_comp_cte()}
-            SELECT doc_id, component, doc_id = component AS keep
-            FROM comp""",
-        "dedup_simhash": f"""
-            WITH {_simhash_cand_cte()}
-            SELECT doc_a, doc_b,
-                   CAST(bit_count(CAST(xor(ha, hb) AS BIGINT)) AS BIGINT) AS hamming
-            FROM cand
-            WHERE bit_count(CAST(xor(ha, hb) AS BIGINT)) <= 6""",
-        # simhash pairs -> transitive min-label components (the
-        # dedup_components reach shape) -> keep-one per cluster
-        "dedup_simhash_keep": f"""
-            WITH RECURSIVE {_simhash_cand_cte()},
-            pairs AS (
-              SELECT doc_a, doc_b FROM cand
-              WHERE bit_count(CAST(xor(ha, hb) AS BIGINT)) <= 6),
-            {_reach_comp_cte()}
-            SELECT doc_id, component, doc_id = component AS keep
-            FROM comp""",
-        "dedup_embedding": """
-            SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-                   round(CAST(list_cosine_similarity(a.embedding, b.embedding)
-                         AS DOUBLE), 4) AS cosine
-            FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE round(CAST(list_cosine_similarity(a.embedding, b.embedding) AS DOUBLE), 4) >= 0.4""",
-        "ann_cosine_topk": """
-            WITH scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS vec_id,
-                     round(CAST(list_cosine_similarity(q.embedding, c.embedding)
-                           AS DOUBLE), 4) AS cosine
-              FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
-              WHERE q.vec_id < 8),
-            ranked AS (
-              SELECT *, CAST(row_number() OVER
-                     (PARTITION BY query_id
-                      ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rk
-              FROM scored)
-            SELECT query_id, vec_id, cosine, rk FROM ranked WHERE rk <= 5""",
-        "text_token_stats": f"""
-            WITH toks AS (
-              SELECT doc_id, {_TOKENS} AS t, length(text) AS chars
-              FROM documents)
-            SELECT doc_id,
-                   CAST(len(t) AS BIGINT) AS n_tokens,
-                   CAST(len(list_distinct(t)) AS BIGINT) AS n_distinct,
-                   CAST(chars AS BIGINT) AS chars,
-                   round(list_sum(list_transform(t, x -> length(x))) * 1.0
-                         / greatest(len(t), 1), 4) AS mean_token_len
-            FROM toks""",
-        # list_sum of an empty list is NULL in DuckDB (Spark's
-        # aggregate fold starts at 0) -> coalesce; grade NULL when a
-        # count is zero rather than a division artifact
-        "text_readability": f"""
-            WITH b AS (
-              SELECT doc_id,
-                     CAST(len({_TOKENS}) AS BIGINT) AS n_words,
-                     CAST(len(list_filter(list_transform(
-                       regexp_extract_all(text, '[^.!?]+[.!?]*'),
-                       x -> regexp_replace(x,
-                         '^[ \t\n\r\f]+|[ \t\n\r\f]+$', '', 'g')),
-                       x -> x <> '')) AS BIGINT) AS n_sentences,
-                     CAST(coalesce(list_sum(list_transform({_TOKENS},
-                       x -> greatest(len(regexp_extract_all(x,
-                         '[aeiouy]+')), 1))), 0) AS BIGINT) AS n_syllables
-              FROM documents)
-            SELECT doc_id, n_words, n_sentences, n_syllables,
-                   CASE WHEN n_words > 0 AND n_sentences > 0 THEN
-                     floor((0.39 * (CAST(n_words AS DOUBLE) / n_sentences)
-                            + 11.8 * (CAST(n_syllables AS DOUBLE) / n_words)
-                            - 15.59) * 1e4 + 0.5) / 1e4
-                   END AS fk_grade
-            FROM b""",
-        "text_sentences": """
-            WITH s AS (
-              SELECT doc_id,
-                     list_filter(list_transform(
-                       regexp_extract_all(text, '[^.!?]+[.!?]*'),
-                       x -> regexp_replace(x,
-                         '^[ \t\n\r\f]+|[ \t\n\r\f]+$', '', 'g')),
-                       x -> x <> '') AS arr
-              FROM documents WHERE doc_id IS NOT NULL)
-            SELECT doc_id, CAST(i - 1 AS INT) AS sent_id,
-                   arr[CAST(i AS INT)] AS sentence
-            FROM s, LATERAL unnest(generate_series(1, len(arr))) AS g(i)""",
-        # integer bucket-sign counts; the only floats are sqrt of an
-        # integer and one division, then the shared floor quantization
-        # -- all exact-IEEE, so weights hash-match bit-for-bit
-        "text_hash_embedding": f"""
-            WITH toks AS (
-              SELECT doc_id, unnest({_TOKENS}) AS tok FROM documents
-              WHERE doc_id IS NOT NULL),
-            b AS (
-              SELECT doc_id,
-                     CAST({_H60.format(x="'b|' || tok")} % 16 AS INT)
-                       AS dim_id,
-                     CASE WHEN {_H60.format(x="'g|' || tok")} % 2 = 0
-                          THEN 1 ELSE -1 END AS s
-              FROM toks),
-            c AS (
-              SELECT doc_id, dim_id, CAST(SUM(s) AS BIGINT) AS c
-              FROM b GROUP BY doc_id, dim_id),
-            n AS (
-              SELECT doc_id, dim_id, c,
-                     CAST(SUM(c * c) OVER (PARTITION BY doc_id)
-                          AS BIGINT) AS ss
-              FROM c)
-            SELECT doc_id, dim_id,
-                   floor(c / sqrt(ss) * 1e6 + 0.5) / 1e6 AS weight
-            FROM n WHERE c <> 0""",
-        "text_quality": f"""
-            WITH base AS (
-              SELECT doc_id, length(text) AS chars, {_TOKENS} AS t,
-                     length(regexp_replace(text, '[^.,;:!?]', '', 'g')) * 1.0
-                       / greatest(length(text), 1) AS punct_ratio,
-                     length(regexp_replace(text, '[^0-9]', '', 'g')) * 1.0
-                       / greatest(length(text), 1) AS digit_ratio
-              FROM documents),
-            wr AS (
-              SELECT *, len(list_filter(t, x -> x IN
-                     ('the','a','of','and','to','in','is','on','for','it')))
-                     * 1.0 / greatest(len(t), 1) AS stop_ratio
-              FROM base)
-            SELECT doc_id, CAST(chars AS BIGINT) AS chars, CAST(len(t) AS BIGINT) AS n_tokens,
-                   round(punct_ratio, 4) AS punct_ratio,
-                   round(digit_ratio, 4) AS digit_ratio,
-                   round(stop_ratio, 4) AS stop_ratio,
-                   CASE WHEN len(t) >= 20 AND stop_ratio > 0.05 THEN 'high'
-                        WHEN len(t) >= 5 THEN 'medium'
-                        ELSE 'low' END AS quality
-            FROM wr""",
-        "text_langid": f"""
-            WITH toks AS (
-              SELECT doc_id, lang, {_TOKENS} AS t FROM documents),
-            scored AS (
-              SELECT doc_id, lang,
-                len(list_filter(t, x -> x IN ('the','and','of','to','in'))) AS s_en,
-                len(list_filter(t, x -> x IN ('der','die','und','das','ist'))) AS s_de,
-                len(list_filter(t, x -> x IN ('le','la','et','les','des'))) AS s_fr,
-                len(list_filter(t, x -> x IN ('el','la','los','que','de'))) AS s_es,
-                len(list_filter(t, x -> x IN ('de','shi','le','bu','wo'))) AS s_zh
-              FROM toks)
-            SELECT doc_id, lang,
-                   CASE
-                     WHEN s_zh > greatest(s_en, s_de, s_fr, s_es) THEN 'zh'
-                     WHEN s_es > greatest(s_en, s_de, s_fr) THEN 'es'
-                     WHEN s_fr > greatest(s_en, s_de) THEN 'fr'
-                     WHEN s_de > s_en THEN 'de'
-                     ELSE 'en' END AS pred_lang,
-                   CAST(greatest(s_en, s_de, s_fr, s_es, s_zh) AS BIGINT)
-                     AS best_score
-            FROM scored""",
-        "text_fingerprint": f"""
-            WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-            sh AS (
-              SELECT doc_id,
-                     CASE WHEN len(t) >= 3 THEN
-                       list_transform(range(1, len(t) - 1),
-                         i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])
-                     ELSE [] END AS shingles
-              FROM toks)
-            SELECT doc_id,
-                   CASE WHEN len(shingles) > 0 THEN
-                     list_min(list_transform(shingles,
-                       s -> {_H60.format(x="s")}))
-                   ELSE NULL END AS fp,
-                   CAST(len(shingles) AS BIGINT) AS n_shingles
-            FROM sh""",
-        "text_url_canonical": r"""
-            WITH u AS (
-              SELECT doc_id,
-                     'HTTPS://WWW.Site' || CAST(doc_id % 7 AS VARCHAR)
-                     || '.COM:443/a/' || CAST(doc_id AS VARCHAR)
-                     || '/?utm_source=x&id=' || CAST(doc_id AS VARCHAR)
-                     || '#f' AS url
-              FROM documents),
-            c1 AS (SELECT doc_id, regexp_replace(url, '#.*', '', 'g') AS x FROM u),
-            c2 AS (SELECT doc_id, regexp_replace(x,
-                     '([?&])(utm_[a-zA-Z]+|fbclid|gclid|ref)=[^&]*', '\1', 'g') AS x FROM c1),
-            c2b AS (SELECT doc_id, regexp_replace(x, '&&+', '&', 'g') AS x FROM c2),
-            c3 AS (SELECT doc_id, regexp_replace(x, '\?&', '?', 'g') AS x FROM c2b),
-            c4 AS (SELECT doc_id, regexp_replace(x, '[?&]$', '', 'g') AS x FROM c3),
-            c5 AS (SELECT doc_id,
-                     lower(regexp_extract(x, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*'))
-                     || regexp_replace(x, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*', '') AS x
-                   FROM c4),
-            c6 AS (SELECT doc_id, regexp_replace(x, '^(https?://)www\.', '\1') AS x FROM c5),
-            c7 AS (SELECT doc_id, regexp_replace(x,
-                     '^(http://[^/:?#]+):80([/?#]|$)', '\1\2') AS x FROM c6),
-            c8 AS (SELECT doc_id, regexp_replace(x,
-                     '^(https://[^/:?#]+):443([/?#]|$)', '\1\2') AS x FROM c7),
-            c9 AS (SELECT doc_id, regexp_replace(x, '/$', '') AS curl FROM c8)
-            SELECT doc_id, curl,
-                   regexp_extract(curl, '^https://([^/]+)', 1) AS chost
-            FROM c9""",
-        # line-synthesis CTE shared by the clean.py oracles mirrors
-        # _lines8_cols: 8-token chunks of the shared tokenizer output
-        "text_repetition": f"""
-            WITH {_l8_cte()},
-            {_SENT_TX_CTE},
-            {_REP_FEATURE_CTES}
-            SELECT doc_id, CAST(n_lines AS BIGINT) AS n_lines,
-                   dup_line_frac, dup_line_char_frac, top_2gram,
-                   top_2gram_frac, dup_5gram_frac
-            FROM feat""",
-        "text_gopher_gate": f"""
-            WITH {_l8_cte()},
-            {_SENT_TX_CTE},
-            {_REP_FEATURE_CTES},
-            gated AS (
-              SELECT doc_id, n_tokens,
-                     concat_ws(',',
-                       CASE WHEN n_tokens < 30 THEN 'too_few_tokens' END,
-                       CASE WHEN n_tokens > 80 THEN 'too_many_tokens' END,
-                       CASE WHEN mean_len < 3.0 THEN 'mean_len_low' END,
-                       CASE WHEN mean_len > 10.0 THEN 'mean_len_high' END,
-                       CASE WHEN stop_hits < 2 THEN 'too_few_stopwords' END,
-                       CASE WHEN dup_line_frac > 0.12 THEN 'dup_lines' END,
-                       CASE WHEN dup_line_char_frac > 0.15 THEN 'dup_line_chars' END,
-                       CASE WHEN top_2gram_frac > 0.10 THEN 'top_2gram' END,
-                       CASE WHEN dup_5gram_frac > 0.05 THEN 'dup_5grams' END
-                     ) AS reasons
-              FROM feat)
-            SELECT doc_id, n_tokens, (reasons = '') AS keep, reasons
-            FROM gated""",
-        "dedup_paragraphs": rf"""
-            WITH {_l8_cte()},
-            {_SENT_TX_CTE},
-            pl AS (
-              SELECT doc_id,
-                     list_filter(list_transform(
-                       regexp_split_to_array(text2, chr(10)),
-                       x -> regexp_replace(x,
-                         '\A[ \t\n\r\f\x0b\xa0]+|[ \t\n\r\f\x0b\xa0]+\z', '', 'g')),
-                       x -> x <> '') AS paras
-              FROM tx),
-            p AS (
-              SELECT doc_id, i AS idx, paras[i] AS para
-              FROM pl, LATERAL unnest(range(1, len(paras) + 1)) AS r(i)),
-            win AS (
-              SELECT doc_id, idx, para,
-                     count(*) OVER (PARTITION BY para) AS df,
-                     row_number() OVER (PARTITION BY para
-                                        ORDER BY doc_id, idx) AS rn
-              FROM p),
-            flagged AS (
-              SELECT doc_id, idx, para, (df < 2 OR rn = 1) AS keep FROM win)
-            SELECT d.doc_id,
-                   CAST(coalesce(f.n_paras, 0) AS BIGINT) AS n_paras,
-                   CAST(coalesce(f.n_dropped, 0) AS BIGINT) AS n_dropped,
-                   coalesce(f.kept_text, '') AS kept_text
-            FROM documents d
-            LEFT JOIN (
-              SELECT doc_id, count(*) AS n_paras,
-                     sum(CASE WHEN NOT keep THEN 1 ELSE 0 END) AS n_dropped,
-                     string_agg(CASE WHEN keep THEN para END, chr(10)
-                                ORDER BY idx) AS kept_text
-              FROM flagged GROUP BY doc_id) f USING (doc_id)""",
-        # deterministic sampling bucket shared by the sample_* oracles:
-        # pmod(hash60('s0|' || doc_id), 1e6) — mirrors sampling._bucket
-        "sample_split": """
-            SELECT doc_id, source,
-                   CASE WHEN CAST(('0x' || substring(
-                            md5('s0|' || CAST(doc_id AS VARCHAR)), 1, 15))
-                            AS BIGINT) % 1000000 < 980000 THEN 'train'
-                        WHEN CAST(('0x' || substring(
-                            md5('s0|' || CAST(doc_id AS VARCHAR)), 1, 15))
-                            AS BIGINT) % 1000000 < 990000 THEN 'val'
-                        ELSE 'test' END AS split
-            FROM documents""",
-        "sample_hash": """
-            SELECT doc_id, n_chars FROM documents
-            WHERE CAST(('0x' || substring(md5('s0|' || CAST(doc_id AS VARCHAR)),
-                       1, 15)) AS BIGINT) % 1000000 < 250000""",
-        "sample_stratified": """
-            SELECT doc_id, source FROM documents
-            WHERE CAST(('0x' || substring(md5('s0|' || CAST(doc_id AS VARCHAR)),
-                       1, 15)) AS BIGINT) % 1000000
-                  < CASE source WHEN 'src1' THEN 1000000
-                                WHEN 'src2' THEN 500000
-                                WHEN 'src3' THEN 100000
-                                ELSE 20000 END""",
-        # copy counts are integers (full epochs + one hash-gated
-        # fractional copy); range(n) is empty at n<=0, mirroring the
-        # engine's guarded sequence
-        "sample_upsample": """
-            WITH c AS (
-              SELECT doc_id, source,
-                     CASE source WHEN 'src0' THEN 3 WHEN 'src1' THEN 2
-                                 WHEN 'src2' THEN 0 ELSE 1 END
-                     + CASE WHEN CAST(('0x' || substring(
-                              md5('s0|' || CAST(doc_id AS VARCHAR)),
-                              1, 15)) AS BIGINT) % 1000000
-                            < CASE source WHEN 'src1' THEN 500000
-                                          WHEN 'src2' THEN 400000
-                                          ELSE 0 END
-                            THEN 1 ELSE 0 END AS n
-              FROM documents
-              WHERE source IN ('src0', 'src1', 'src2', 'src3')),
-            e AS (
-              SELECT doc_id, source, unnest(range(n)) AS epoch FROM c)
-            SELECT doc_id, source, CAST(epoch AS INT) AS epoch FROM e""",
-        "sample_token_budget": f"""
-            WITH t AS (
-              SELECT doc_id, source,
-                     CAST(len({_TOKENS}) AS BIGINT) AS n_tokens,
-                     CAST(('0x' || substring(md5('s0' || '|'
-                          || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % 1000000 AS b
-              FROM documents
-              WHERE doc_id IS NOT NULL),
-            c AS (
-              SELECT doc_id, source, n_tokens,
-                     sum(n_tokens) OVER (PARTITION BY source
-                                         ORDER BY b, doc_id
-                                         ROWS UNBOUNDED PRECEDING)
-                       AS cum_tokens
-              FROM t)
-            SELECT doc_id, source, n_tokens, CAST(cum_tokens AS BIGINT) AS cum_tokens
-            FROM c WHERE cum_tokens <= 500""",
-        "sample_token_budget_global": f"""
-            WITH {_global_cum_cte()}
-            SELECT doc_id, n_tokens, cum_tokens
-            FROM c WHERE cum_tokens <= 3000""",
-        # same running sum, pack arithmetic instead of a prefix cut
-        "sample_pack_sequences": f"""
-            WITH {_global_cum_cte()}
-            SELECT doc_id, n_tokens,
-                   (cum_tokens - n_tokens) // 512 AS pack_id,
-                   (cum_tokens - n_tokens) % 512 AS pack_offset
-            FROM c""",
-        # the decomposed-rank ops against their SERIAL formulations:
-        # decomposed == serial is exactly the claim under test
-        "sample_shuffle": """
-            WITH t AS (
-              SELECT doc_id,
-                     CAST(('0x' || substring(md5('s0' || '|'
-                          || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-              FROM documents WHERE doc_id IS NOT NULL)
-            SELECT doc_id,
-                   CAST(row_number() OVER (ORDER BY h, doc_id) AS BIGINT)
-                     AS shuffle_pos
-            FROM t""",
-        "sample_interleave": """
-            WITH w(source, wt) AS (
-              VALUES ('src0', 2.0), ('src1', 1.0), ('src2', 0.5)),
-            t AS (
-              SELECT doc_id, source,
-                     CAST(('0x' || substring(md5('s0' || '|'
-                          || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h,
-                     wt
-              FROM documents JOIN w USING (source)
-              WHERE doc_id IS NOT NULL),
-            r AS (
-              SELECT doc_id, source,
-                     CAST(row_number() OVER (PARTITION BY source
-                          ORDER BY h, doc_id) AS BIGINT) AS src_pos,
-                     wt
-              FROM t)
-            SELECT doc_id, source, src_pos, src_pos / wt AS emit_key
-            FROM r""",
-        "dedup_contamination": f"""
-            WITH toks AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-            g AS (
-              SELECT doc_id,
-                     list_distinct(CASE WHEN len(t) >= 8 THEN
-                       list_transform(range(1, len(t) - 6),
-                                      i -> array_to_string(t[i:i+7], ' '))
-                     ELSE CAST([] AS VARCHAR[]) END) AS gs
-              FROM toks),
-            cg AS (
-              SELECT doc_id, {_H60.format(x='gram')} AS gh
-              FROM (SELECT doc_id, unnest(gs) AS gram FROM g)),
-            bg AS (SELECT doc_id AS bench_id, gh FROM cg WHERE doc_id % 50 = 0),
-            hits AS (
-              SELECT c.doc_id,
-                     count(DISTINCT c.gh) AS n_hits,
-                     count(DISTINCT b.bench_id) AS n_benchmarks
-              FROM cg c JOIN bg b USING (gh) GROUP BY c.doc_id)
-            SELECT d.doc_id,
-                   CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-                   CAST(coalesce(h.n_benchmarks, 0) AS BIGINT) AS n_benchmarks,
-                   coalesce(h.n_hits, 0) >= 1 AS contaminated
-            FROM documents d LEFT JOIN hits h USING (doc_id)""",
-        "host_stats": """
-            WITH u AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 <> 0 THEN 'big.example.com'
-                          ELSE 'site' || CAST(doc_id % 20 AS VARCHAR)
-                               || '.example.com' END AS host,
-                     length(text) AS chars
-              FROM documents)
-            SELECT host,
-                   CAST(count(*) AS BIGINT) AS n_pages,
-                   CAST(sum(chars) AS BIGINT) AS total_chars,
-                   round(sum(chars) * 1.0 / count(*), 4) AS mean_chars
-            FROM u GROUP BY host""",
-        "host_cap": """
-            WITH u AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 <> 0 THEN 'big.example.com'
-                          ELSE 'site' || CAST(doc_id % 20 AS VARCHAR)
-                               || '.example.com' END AS host
-              FROM documents),
-            v AS (
-              SELECT doc_id, host,
-                     'https://' || host || '/p/' || CAST(doc_id AS VARCHAR) AS url
-              FROM u),
-            r AS (
-              SELECT doc_id, url, host,
-                     row_number() OVER (PARTITION BY host ORDER BY url) AS rk
-              FROM v)
-            SELECT doc_id, url, host FROM r WHERE rk <= 5""",
-        # domain-level quality gate: same url synthesis; the host ratio
-        # is integer-sum / integer-sum, so the direct GROUP BY here
-        # equals the engine's salted two-phase form exactly
-        "host_quality": """
-            WITH u AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 <> 0 THEN 'big.example.com'
-                          ELSE 'site' || CAST(doc_id % 20 AS VARCHAR)
-                               || '.example.com' END AS host,
-                     len(list_filter(
-                       list_filter(regexp_split_to_array(lower(text),
-                                                         '[^a-z0-9]+'),
-                                   x -> x <> ''),
-                       x -> list_contains(['the','a','of','and','to',
-                                           'in','is','on','for','it'], x)
-                     )) AS stops,
-                     len(list_filter(regexp_split_to_array(lower(text),
-                                                           '[^a-z0-9]+'),
-                                     x -> x <> '')) AS toks
-              FROM documents),
-            h AS (SELECT host, CAST(sum(stops) AS BIGINT) AS n,
-                         CAST(sum(toks) AS BIGINT) AS d
-                  FROM u GROUP BY host),
-            rej AS (SELECT host FROM h WHERE d > 0 AND n * 1.0 / d < 0.04)
-            SELECT u.doc_id,
-                   'https://' || u.host || '/p/'
-                     || CAST(u.doc_id AS VARCHAR) AS url,
-                   u.host
-            FROM u
-            WHERE u.host NOT IN (SELECT host FROM rej)""",
-        "graph_degrees": f"""
-            WITH {_GRAPH_EDGE_CTE},
-            sides AS (
-              SELECT src AS node, 1 AS o, weight FROM edges
-              UNION ALL
-              SELECT dst AS node, 0 AS o, weight FROM edges)
-            SELECT node,
-                   CAST(sum(o) AS BIGINT) AS out_deg,
-                   CAST(sum(1 - o) AS BIGINT) AS in_deg,
-                   CAST(sum(CASE WHEN o = 1 THEN weight ELSE 0 END)
-                        AS BIGINT) AS out_weight,
-                   CAST(sum(CASE WHEN o = 0 THEN weight ELSE 0 END)
-                        AS BIGINT) AS in_weight
-            FROM sides GROUP BY node""",
-        "graph_pagerank": _pagerank_oracle_sql(iters=6),
-        "graph_hits": _hits_oracle_sql(iters=4),
-        "graph_html_links": f"""
-            WITH {_html_edge_cte(hashed=False)}
-            SELECT src, dst, weight FROM edges""",
-        "graph_html_pagerank": _pagerank_oracle_sql(
-            iters=4, edge_cte=_html_edge_cte(hashed=True)),
-        "graph_host_pagerank": _pagerank_oracle_sql(
-            iters=4, edge_cte=_host_edge_cte()),
-        "graph_html_anchors": f"""
-            WITH {_anchors_cte()}
-            SELECT src, dst, anchor FROM anchors""",
-        "graph_host_edges": f"""
-            WITH {_html_edge_cte(hashed=False, path=LINKED_PAGES_PATH)},
-            he AS (
-              SELECT lower(regexp_extract(src,
-                       '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#@]+)',
-                       1)) AS hsrc,
-                     lower(regexp_extract(dst,
-                       '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#@]+)',
-                       1)) AS hdst,
-                     weight
-              FROM edges)
-            SELECT hsrc AS src, hdst AS dst,
-                   CAST(sum(weight) AS BIGINT) AS weight
-            FROM he
-            WHERE hsrc <> '' AND hdst <> '' AND hsrc <> hdst
-            GROUP BY hsrc, hdst""",
-        # the single-window rank is the oracle formulation; the engine
-        # runs the value-identical two-level split
-        "graph_anchor_topk": f"""
-            WITH {_anchors_cte()},
-            c AS (
-              SELECT dst, anchor, CAST(count(*) AS BIGINT) AS n
-              FROM anchors GROUP BY dst, anchor),
-            rr AS (
-              SELECT dst, anchor, n,
-                     CAST(row_number() OVER (
-                       PARTITION BY dst
-                       ORDER BY n DESC, anchor) AS BIGINT) AS rk
-              FROM c)
-            SELECT dst, anchor, n, rk FROM rr WHERE rk <= 3""",
-        # the rules are the STAGED parse output (both engines read the
-        # identical parquet); the verdict is the RFC 9309 evaluation:
-        # longest matching spec, allow wins ties, no match -> allowed
-        "robots_allowed": f"""
-            WITH p AS (
-              SELECT url FROM '{HTML_PAGES_PATH}/*.parquet'),
-            u AS (
-              SELECT url,
-                     lower(regexp_extract(url,
-                       '^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#@]+)',
-                       1)) AS host,
-                     coalesce(nullif(CASE WHEN rest LIKE '?%'
-                                          THEN '/' || rest
-                                          ELSE rest END, ''), '/') AS path
-              FROM (
-                SELECT url,
-                       regexp_extract(url,
-                         '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*([/?][^#]*)',
-                         1) AS rest
-                FROM p)),
-            m AS (
-              SELECT u.url, r.allow,
-                     row_number() OVER (
-                       PARTITION BY u.url
-                       ORDER BY r.rule_len DESC, r.allow DESC) AS rk
-              FROM u
-              JOIN '{ROBOTS_RULES_PATH}/*.parquet' r ON u.host = r.host
-              WHERE regexp_matches(u.path, r.pattern)),
-            v AS (SELECT url, allow FROM m WHERE rk = 1)
-            SELECT u.url, u.host,
-                   coalesce(v.allow = 1, TRUE) AS allowed
-            FROM u LEFT JOIN v USING (url)""",
-        # the same strip set as the engine's _strip ([ \t\r] edges);
-        # comment strip first, then key/value split at the FIRST colon
-        "robots_sitemap_urls": f"""
-            WITH b AS (
-              SELECT host, unnest(string_split(content, chr(10))) AS raw
-              FROM '{ROBOTS_BODIES_PATH}/*.parquet'),
-            c AS (
-              SELECT host,
-                     regexp_replace(regexp_replace(raw, '#.*', ''),
-                       '^[ \t\r]+|[ \t\r]+$', '', 'g') AS line
-              FROM b)
-            SELECT DISTINCT host,
-                   regexp_replace(
-                     regexp_extract(line, '^[A-Za-z-]+:(.*)$', 1),
-                     '^[ \t\r]+|[ \t\r]+$', '', 'g') AS sitemap
-            FROM c
-            WHERE lower(regexp_extract(line, '^([A-Za-z-]+):', 1))
-                    = 'sitemap'
-              AND regexp_replace(
-                    regexp_extract(line, '^[A-Za-z-]+:(.*)$', 1),
-                    '^[ \t\r]+|[ \t\r]+$', '', 'g') <> ''""",
-        # captures are [^<]*, so nested markup means no match; '' and
-        # whitespace-only unify to NULL via the shared normalize
-        "html_metadata": f"""
-            WITH pages AS (
-              SELECT url, html FROM '{HTML_PAGES_PATH}/*.parquet'),
-            raw AS (
-              SELECT url,
-                     regexp_extract(html,
-                       '(?i)<title>([^<]*)</title>', 1) AS title,
-                     regexp_extract(html,
-                       '(?i)<meta[ \t\n\r\f][^>]*charset="?([A-Za-z0-9_-]+)"?',
-                       1) AS charset,
-                     regexp_extract(html,
-                       '(?i)<h1[^>]*>([^<]*)</h1>', 1) AS h1,
-                     regexp_extract(html,
-                       '(?i)<meta[ \t\n\r\f][^>]*name="description"[^>]*content="([^"]*)"',
-                       1) AS description,
-                     regexp_extract(html,
-                       '(?i)<link[ \t\n\r\f][^>]*rel="canonical"[^>]*href="([^"]*)"',
-                       1) AS canonical
-              FROM pages)
-            SELECT url,
-                   nullif(trim(regexp_replace(title,
-                       '[ \t\n\r\f]+', ' ', 'g')), '') AS title,
-                   lower(nullif(trim(regexp_replace(charset,
-                       '[ \t\n\r\f]+', ' ', 'g')), '')) AS charset,
-                   nullif(trim(regexp_replace(h1,
-                       '[ \t\n\r\f]+', ' ', 'g')), '') AS h1,
-                   nullif(trim(regexp_replace(description,
-                       '[ \t\n\r\f]+', ' ', 'g')), '') AS description,
-                   nullif(trim(regexp_replace(canonical,
-                       '[ \t\n\r\f]+', ' ', 'g')), '') AS canonical
-            FROM raw""",
-        # KMV estimate: floor(127 * 2^60 / kth) in one exact-IEEE
-        # double division (127.0 * 2^60.0 is an exact product; int ->
-        # double rounding and the division are IEEE-identical in both
-        # engines — the bm25 fixed-expression-tree precedent).
-        "sketch_kmv_distinct": f"""
-            WITH toks AS (
-              SELECT source, unnest({_TOKENS}) AS tok FROM documents),
-            h AS (
-              SELECT DISTINCT source, {_H60.format(x="tok")} AS h
-              FROM toks),
-            r AS (
-              SELECT source, h,
-                     row_number() OVER (PARTITION BY source
-                                        ORDER BY h ASC) AS rn
-              FROM h),
-            agg AS (
-              SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
-                     CAST(max(h) AS BIGINT) AS kth_hash
-              FROM r WHERE rn <= 128 GROUP BY source)
-            SELECT source, n_kept, kth_hash,
-                   CAST(CASE WHEN n_kept < 128 THEN n_kept
-                        ELSE floor(127.0 * 1152921504606846976.0
-                                   / CAST(kth_hash AS DOUBLE))
-                        END AS BIGINT) AS est_distinct
-            FROM agg""",
-        # the merge identity makes the oracle the WHOLE-corpus KMV —
-        # matching it hash-for-hash proves merged shard signatures
-        # equal the unsharded sketch exactly.
-        "sketch_kmv_merge": f"""
-            WITH toks AS (
-              SELECT source, unnest({_TOKENS}) AS tok FROM documents),
-            h AS (
-              SELECT DISTINCT source, {_H60.format(x="tok")} AS h
-              FROM toks),
-            r AS (
-              SELECT source, h,
-                     row_number() OVER (PARTITION BY source
-                                        ORDER BY h ASC) AS rn
-              FROM h),
-            agg AS (
-              SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
-                     CAST(max(h) AS BIGINT) AS kth_hash
-              FROM r WHERE rn <= 96 GROUP BY source)
-            SELECT source, n_kept, kth_hash,
-                   CAST(CASE WHEN n_kept < 96 THEN n_kept
-                        ELSE floor(95.0 * 1152921504606846976.0
-                                   / CAST(kth_hash AS DOUBLE))
-                        END AS BIGINT) AS est_distinct
-            FROM agg""",
-        # KMV set operations: both half-signatures re-derived, the
-        # union's 128 smallest hashes flagged by membership, then the
-        # identical integer/one-IEEE-division arithmetic
-        "sketch_kmv_jaccard": f"""
-            WITH tt AS (
-              SELECT doc_id % 2 AS half, {_TOKENS} AS t FROM documents),
-            toks AS (
-              SELECT half, t[i] || ' ' || t[i + 1] AS tok
-              FROM tt, LATERAL unnest(range(1, len(t))) AS r(i)
-              WHERE len(t) >= 2),
-            ha AS (
-              SELECT DISTINCT {_H60.format(x="tok")} AS h
-              FROM toks WHERE half = 0),
-            hb AS (
-              SELECT DISTINCT {_H60.format(x="tok")} AS h
-              FROM toks WHERE half = 1),
-            sa AS (SELECT h FROM (
-                     SELECT h, row_number() OVER (ORDER BY h ASC) AS rn
-                     FROM ha) WHERE rn <= 128),
-            sb AS (SELECT h FROM (
-                     SELECT h, row_number() OVER (ORDER BY h ASC) AS rn
-                     FROM hb) WHERE rn <= 128),
-            u AS (
-              SELECT COALESCE(sa.h, sb.h) AS h,
-                     CASE WHEN sa.h IS NULL THEN 0 ELSE 1 END AS ia,
-                     CASE WHEN sb.h IS NULL THEN 0 ELSE 1 END AS ib
-              FROM sa FULL OUTER JOIN sb ON sa.h = sb.h),
-            kept AS (SELECT * FROM (
-                       SELECT *, row_number() OVER (ORDER BY h ASC) AS rn
-                       FROM u) WHERE rn <= 128),
-            agg AS (
-              SELECT CAST(count(*) AS BIGINT) AS n_kept,
-                     CAST(max(h) AS BIGINT) AS kth_hash,
-                     CAST(sum(ia * ib) AS BIGINT) AS n_both
-              FROM kept),
-            e AS (
-              SELECT n_kept, kth_hash, n_both,
-                     CAST(CASE WHEN n_kept < 128 THEN n_kept
-                          ELSE floor(127.0 * 1152921504606846976.0
-                                     / CAST(kth_hash AS DOUBLE))
-                          END AS BIGINT) AS est_union
-              FROM agg)
-            SELECT n_kept, kth_hash, est_union, n_both,
-                   CAST((n_both * est_union) // n_kept AS BIGINT)
-                     AS est_intersection,
-                   CAST(n_both AS DOUBLE) / CAST(n_kept AS DOUBLE)
-                     AS jaccard
-            FROM e""",
-        "sketch_countmin": f"""
-            WITH toks AS (
-              SELECT unnest({_TOKENS}) AS tok FROM documents),
-            sk AS (
-              SELECT CAST(i AS INT) AS row,
-                     {_H60.format(x="'cm' || CAST(i AS VARCHAR) || '|' || tok")}
-                       % 512 AS bucket,
-                     CAST(count(*) AS BIGINT) AS cnt
-              FROM toks, LATERAL unnest(range(0, 4)) AS r(i)
-              GROUP BY 1, 2),
-            top AS (
-              SELECT tok AS item, CAST(count(*) AS BIGINT) AS true_cnt
-              FROM toks GROUP BY 1
-              ORDER BY true_cnt DESC, item ASC LIMIT 20),
-            probe AS (
-              SELECT item, CAST(i AS INT) AS row,
-                     {_H60.format(x="'cm' || CAST(i AS VARCHAR) || '|' || item")}
-                       % 512 AS bucket
-              FROM top, LATERAL unnest(range(0, 4)) AS r(i)),
-            est AS (
-              SELECT p.item, CAST(min(s.cnt) AS BIGINT) AS cm_est
-              FROM probe p JOIN sk s
-                ON s.row = p.row AND s.bucket = p.bucket
-              GROUP BY 1)
-            SELECT t.item, t.true_cnt, e.cm_est
-            FROM top t JOIN est e ON e.item = t.item""",
-        # est mirrors the engine's exact expression order:
-        # lo + ((bin+1) * (hi-lo)) / bins, all IEEE doubles.
-        "sketch_hist_quantile": """
-            WITH h AS (
-              SELECT o_orderpriority,
-                     greatest(0, least(1023,
-                       CAST(floor(((o_totalprice - 0.0) * 1024.0)
-                                  / 600000.0) AS BIGINT))) AS bin,
-                     CAST(count(*) AS BIGINT) AS cnt
-              FROM orders GROUP BY 1, 2),
-            c AS (
-              SELECT o_orderpriority, bin, cnt,
-                     sum(cnt) OVER (PARTITION BY o_orderpriority
-                                    ORDER BY bin) AS cum,
-                     sum(cnt) OVER (PARTITION BY o_orderpriority) AS n
-              FROM h),
-            qs AS (SELECT * FROM (VALUES (1, 2), (9, 10))
-                   AS q(q_num, q_den)),
-            sel AS (
-              SELECT c.o_orderpriority, q.q_num, q.q_den,
-                     min(c.bin) AS bin
-              FROM c JOIN qs q
-                ON c.cum >= (c.n * q.q_num + q.q_den - 1) // q.q_den
-              GROUP BY 1, 2, 3)
-            SELECT o_orderpriority,
-                   CAST(q_num AS BIGINT) AS q_num,
-                   CAST(q_den AS BIGINT) AS q_den,
-                   CAST(bin AS BIGINT) AS bin,
-                   0.0 + (CAST(bin + 1 AS DOUBLE) * 600000.0) / 1024.0
-                     AS est
-            FROM sel""",
-        "text_phrases": f"""
-            WITH toks AS (SELECT {_TOKENS} AS t FROM documents),
-            uni AS (
-              SELECT w, CAST(count(*) AS BIGINT) AS c
-              FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
-            bi AS (
-              SELECT t[i] AS w1, t[i+1] AS w2,
-                     CAST(count(*) AS BIGINT) AS c_ab
-              FROM toks, LATERAL unnest(range(1, len(t))) AS r(i)
-              GROUP BY 1, 2 HAVING count(*) >= 5),
-            v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM uni)
-            SELECT w1, w2, c_ab,
-                   CAST((c_ab - 1) * v.v * 1000000 // (u1.c * u2.c)
-                        AS BIGINT) AS score_q
-            FROM bi
-            JOIN uni u1 ON u1.w = bi.w1
-            JOIN uni u2 ON u2.w = bi.w2
-            CROSS JOIN v""",
-        "sketch_bloom": f"""
-            WITH pos AS (
-              SELECT DISTINCT
-                {_H60.format(x="'bf' || CAST(i AS VARCHAR) || '|' || CAST(o_custkey AS VARCHAR)")}
-                  % 4096 AS pos
-              FROM orders, LATERAL unnest(range(0, 5)) AS r(i)),
-            probe AS (
-              SELECT c_custkey,
-                {_H60.format(x="'bf' || CAST(i AS VARCHAR) || '|' || CAST(c_custkey AS VARCHAR)")}
-                  % 4096 AS pos
-              FROM customer, LATERAL unnest(range(0, 5)) AS r(i)),
-            hits AS (
-              SELECT p.c_custkey,
-                     sum(CASE WHEN b.pos IS NULL THEN 0 ELSE 1 END) AS hits
-              FROM probe p LEFT JOIN pos b ON b.pos = p.pos
-              GROUP BY 1)
-            SELECT c_custkey,
-                   CAST(CASE WHEN hits = 5 THEN 1 ELSE 0 END AS BIGINT)
-                     AS is_member
-            FROM hits""",
-        # perceptual payload near-dup: DuckDB re-derives the 60-bit
-        # block-mean hash from hex(payload) — byte i -> segment
-        # i*60//n, bit = integer cross-product, identical to the kernel
-        "multimodal_near_dup": """
-            WITH base AS (
-              SELECT doc_id AS media_id, encode(text) AS payload
-              FROM documents
-              UNION ALL
-              SELECT doc_id + 100000000,
-                     encode(substr(text, 1, 10) || 'X' || substr(text, 12))
-              FROM documents
-              WHERE doc_id % 17 = 0 AND length(text) >= 12),
-            p AS (SELECT media_id, hex(payload) AS hx,
-                         CAST(octet_length(payload) AS BIGINT) AS n
-                  FROM base WHERE octet_length(payload) > 0),
-            bytes AS (
-              SELECT media_id, n,
-                     CAST(('0x' || substr(hx, CAST(i * 2 + 1 AS INT), 2))
-                          AS BIGINT) AS v,
-                     i * 60 // n AS k
-              FROM p, LATERAL unnest(range(0, n)) AS r(i)),
-            agg AS (
-              SELECT media_id, any_value(n) AS n, k,
-                     CAST(sum(v) AS BIGINT) AS seg_sum,
-                     CAST(count(*) AS BIGINT) AS seg_len
-              FROM bytes GROUP BY media_id, k),
-            tot AS (SELECT media_id, CAST(sum(v) AS BIGINT) AS total
-                    FROM bytes GROUP BY media_id),
-            bh0 AS (
-              SELECT a.media_id,
-                     -- HUGEINT: the cross-products pass int64 at
-                     -- ~1.4 GB payloads (the kernel compares in
-                     -- Python big ints for the same reason)
-                     CAST(sum(CASE WHEN CAST(a.seg_sum AS HUGEINT) * a.n
-                                        > CAST(t.total AS HUGEINT) * a.seg_len
-                                   THEN CAST(1 AS BIGINT) << CAST(a.k AS INT)
-                                   ELSE 0 END) AS BIGINT) AS bh
-              FROM agg a JOIN tot t USING (media_id)
-              GROUP BY a.media_id),
-            allbh AS (
-              SELECT base.media_id, coalesce(bh0.bh, 0) AS bh
-              FROM base LEFT JOIN bh0 USING (media_id)),
-            banded AS (
-              SELECT media_id, bh, band,
-                     (bh >> CAST(band * 12 AS INT)) & 4095 AS bval
-              FROM allbh, LATERAL unnest(range(0, 5)) AS r(band)),
-            pairs AS (
-              SELECT DISTINCT a.media_id AS media_a, b.media_id AS media_b,
-                     a.bh AS ha, b.bh AS hb
-              FROM banded a JOIN banded b
-                ON a.band = b.band AND a.bval = b.bval
-               AND a.media_id < b.media_id)
-            SELECT media_a, media_b,
-                   CAST(bit_count(xor(ha, hb)) AS INT) AS hamming
-            FROM pairs
-            WHERE bit_count(xor(ha, hb)) <= 4""",
-        # url blocklist: same url synthesis, suffix chain unrolled via
-        # generate_series, reasons resolved to the lexicographic min
-        "url_blocklist": """
-            WITH u AS (
-              SELECT doc_id,
-                     'w' || CAST(doc_id % 11 AS VARCHAR) || '.' ||
-                     CASE WHEN doc_id % 4 = 0 THEN 'tracker.net'
-                          ELSE 'example.org' END AS host,
-                     CASE WHEN doc_id % 9 = 0 THEN '/casino-night'
-                          ELSE '/p' END AS tail
-              FROM documents),
-            p AS (
-              SELECT doc_id, host,
-                     'https://' || host || tail || '/'
-                     || CAST(doc_id AS VARCHAR) AS url
-              FROM u),
-            dom(domain) AS (VALUES ('tracker.net'), ('w3.example.org')),
-            trm(term) AS (VALUES ('casino')),
-            parts AS (SELECT doc_id, string_split(host, '.') AS pa FROM p),
-            suf AS (
-              SELECT doc_id, unnest(generate_series(1, len(pa))) AS s, pa
-              FROM parts),
-            dmatch AS (
-              SELECT f.doc_id, 'domain:' || d.domain AS reason
-              FROM (SELECT doc_id, array_to_string(pa[s:], '.') AS domain
-                    FROM suf) f
-              JOIN dom d USING (domain)),
-            tmatch AS (
-              SELECT p.doc_id, 'term:' || t.term AS reason
-              FROM p JOIN trm t ON contains(lower(p.url), t.term)),
-            reasons AS (
-              SELECT doc_id, min(reason) AS reason
-              FROM (SELECT * FROM dmatch UNION ALL SELECT * FROM tmatch)
-              GROUP BY doc_id)
-            SELECT p.doc_id, p.url, p.host,
-                   r.reason IS NOT NULL AS blocked, r.reason
-            FROM p LEFT JOIN reasons r USING (doc_id)""",
-        "text_clean_lines": rf"""
-            WITH {_l8_cte(decorated=True)},
-            tx AS (
-              SELECT doc_id,
-                     array_to_string(lines8, chr(10))
-                     || CASE WHEN doc_id % 13 = 0
-                             THEN chr(10) || 'lorem ipsum filler' ELSE '' END
-                     || CASE WHEN doc_id % 17 = 0
-                             THEN chr(10) || 'see {{ config }}' ELSE '' END AS text2
-              FROM l8),
-            base AS (
-              SELECT doc_id,
-                     list_filter(list_transform(
-                       regexp_split_to_array(text2, chr(10)),
-                       x -> regexp_replace(x,
-                         '\A[ \t\n\r\f\x0b\xa0]+|[ \t\n\r\f\x0b\xa0]+\z', '', 'g')),
-                       x -> x <> '') AS lines,
-                     (NOT contains(lower(text2), 'lorem ipsum')
-                      AND NOT contains(text2, '{{')) AS page_ok
-              FROM tx),
-            k AS (
-              SELECT doc_id, page_ok, len(lines) AS n_lines,
-                     CASE WHEN page_ok THEN
-                       list_filter(lines, x ->
-                         regexp_matches(x, '[.!?"]$')
-                         AND len(list_filter(
-                               regexp_split_to_array(lower(x), '[^a-z0-9]+'),
-                               w -> w <> '')) >= 3
-                         AND NOT contains(lower(x), 'javascript'))
-                     ELSE CAST([] AS VARCHAR[]) END AS kept
-              FROM base)
-            SELECT doc_id, page_ok,
-                   CAST(len(kept) AS BIGINT) AS n_kept,
-                   CAST(n_lines - len(kept) AS BIGINT) AS n_dropped,
-                   coalesce(array_to_string(kept, chr(10)), '') AS clean_text
-            FROM k""",
-        "text_pii_scrub": r"""
-            WITH px AS (
-              SELECT doc_id,
-                     text || ' contact bob' || CAST(doc_id AS VARCHAR)
-                     || '@example.com'
-                     || CASE WHEN doc_id % 3 <> 2
-                             THEN ' at 10.' || CAST(doc_id % 200 AS VARCHAR) || '.0.7'
-                             ELSE '' END
-                     || CASE WHEN doc_id % 2 = 0
-                             THEN ' ref 1234567'
-                                  || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0')
-                             ELSE '' END AS text3
-              FROM documents)
-            SELECT doc_id,
-                   CAST(len(regexp_extract_all(text3,
-                     '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT)
-                     AS n_emails,
-                   CAST(len(regexp_extract_all(text3,
-                     '\b\d{1,3}(\.\d{1,3}){3}\b')) AS BIGINT) AS n_ips,
-                   CAST(len(regexp_extract_all(text3, '\b\d{9,}\b')) AS BIGINT)
-                     AS n_longnums,
-                   regexp_replace(regexp_replace(regexp_replace(text3,
-                     '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-                     '\b\d{1,3}(\.\d{1,3}){3}\b', '<IP>', 'g'),
-                     '\b\d{9,}\b', '<NUM>', 'g') AS scrubbed
-            FROM px""",
-        "multimodal_payload": """
-            WITH media AS (
-              SELECT doc_id,
-                     CASE WHEN doc_id % 3 = 0 THEN 'image'
-                          WHEN doc_id % 3 = 1 THEN 'audio'
-                          ELSE 'video' END AS kind,
-                     encode(text) AS payload, text
-              FROM documents)
-            SELECT kind, count(*) AS n,
-                   CAST(sum(octet_length(payload)) AS BIGINT) AS total_bytes,
-                   CAST(sum(CASE WHEN sha256(text) LIKE '0%'
-                            THEN 1 ELSE 0 END) AS BIGINT) AS digest_0
-            FROM media GROUP BY kind""",
-        # DuckDB's NATIVE ASOF JOIN vs the Spark union+window form —
-        # two independent implementations of the same semantics
-        "events_asof_join": """
-            WITH c AS (SELECT event_id, user_id, ts FROM events
-                       WHERE event_type = 'click'),
-                 v AS (SELECT user_id, ts, value FROM events
-                       WHERE event_type = 'view')
-            SELECT c.event_id, c.user_id,
-                   strftime(c.ts, '%Y-%m-%d %H:%M:%S.%f') AS click_ts,
-                   v.value AS view_value,
-                   strftime(v.ts, '%Y-%m-%d %H:%M:%S.%f') AS view_ts
-            FROM c ASOF LEFT JOIN v
-              ON c.user_id = v.user_id AND c.ts >= v.ts""",
-        "events_asof_forward": """
-            WITH c AS (SELECT event_id, user_id, ts FROM events
-                       WHERE event_type = 'click'),
-                 v AS (SELECT user_id, ts, value FROM events
-                       WHERE event_type = 'view')
-            SELECT c.event_id, c.user_id,
-                   strftime(c.ts, '%Y-%m-%d %H:%M:%S.%f') AS click_ts,
-                   v.value AS view_value,
-                   strftime(v.ts, '%Y-%m-%d %H:%M:%S.%f') AS view_ts
-            FROM c ASOF LEFT JOIN v
-              ON c.user_id = v.user_id AND c.ts <= v.ts""",
-        "events_sessionize": """
-            WITH m AS (SELECT user_id, ts, epoch_ms(ts) AS ms FROM events),
-            f AS (SELECT user_id, ts, ms,
-                  CASE WHEN lag(ms) OVER w IS NULL
-                            OR ms - lag(ms) OVER w > 21600000
-                       THEN 1 ELSE 0 END AS nw
-                  FROM m WINDOW w AS (PARTITION BY user_id ORDER BY ts)),
-            s AS (SELECT user_id, ts, ms,
-                  CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY ts
-                       ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_seq
-                  FROM f)
-            SELECT user_id, session_seq,
-                   CAST(count(*) AS BIGINT) AS n_events,
-                   strftime(min(ts), '%Y-%m-%d %H:%M:%S.%f')
-                     AS session_start,
-                   strftime(max(ts), '%Y-%m-%d %H:%M:%S.%f')
-                     AS session_end,
-                   CAST(max(ms) - min(ms) AS BIGINT) AS duration_ms
-            FROM s GROUP BY 1, 2""",
-        "events_rollup": """
-            WITH hourly AS (
-              SELECT date_trunc('hour', ts) AS b, event_type,
-                     CAST(count(*) AS BIGINT) AS n, sum(value) AS sv
-              FROM events GROUP BY 1, 2),
-            daily AS (
-              SELECT date_trunc('day', b) AS b, event_type,
-                     CAST(sum(n) AS BIGINT) AS n, sum(sv) AS sv
-              FROM hourly GROUP BY 1, 2)
-            SELECT 'hour' AS granularity,
-                   strftime(b, '%Y-%m-%d %H:%M:%S') AS bucket,
-                   event_type, n, round(sv, 2) AS sum_value FROM hourly
-            UNION ALL
-            SELECT 'day', strftime(b, '%Y-%m-%d %H:%M:%S'),
-                   event_type, n, round(sv, 2) FROM daily""",
-        "events_funnel": """
-            WITH t1 AS (
-              SELECT user_id, min(ts) AS t1 FROM events
-              WHERE event_type = 'view' GROUP BY 1),
-            t2 AS (
-              SELECT e.user_id, min(e.ts) AS t2
-              FROM events e JOIN t1 ON e.user_id = t1.user_id
-              WHERE e.event_type = 'click'
-                AND epoch_us(e.ts) > epoch_us(t1.t1)
-                AND epoch_us(e.ts) - epoch_us(t1.t1) <= 604800000000
-              GROUP BY 1),
-            t3 AS (
-              SELECT e.user_id, min(e.ts) AS t3
-              FROM events e
-              JOIN t2 ON e.user_id = t2.user_id
-              JOIN t1 ON e.user_id = t1.user_id
-              WHERE e.event_type = 'purchase'
-                AND epoch_us(e.ts) > epoch_us(t2.t2)
-                AND epoch_us(e.ts) - epoch_us(t1.t1) <= 604800000000
-              GROUP BY 1)
-            SELECT t1.user_id,
-                   CAST(CASE WHEN t3.t3 IS NOT NULL THEN 3
-                             WHEN t2.t2 IS NOT NULL THEN 2
-                             ELSE 1 END AS BIGINT) AS funnel_depth,
-                   strftime(t1.t1, '%Y-%m-%d %H:%M:%S.%f') AS t1
-            FROM t1
-            LEFT JOIN t2 ON t1.user_id = t2.user_id
-            LEFT JOIN t3 ON t1.user_id = t3.user_id""",
-        "events_retention": """
-            WITH wk AS (SELECT DISTINCT user_id,
-                               date_trunc('week', ts) AS wk FROM events),
-            f AS (SELECT user_id, min(wk) AS cohort FROM wk GROUP BY 1)
-            SELECT strftime(f.cohort, '%Y-%m-%d') AS cohort_week,
-                   CAST(date_diff('day', CAST(f.cohort AS DATE),
-                        CAST(wk.wk AS DATE)) / 7 AS BIGINT) AS week_offset,
-                   CAST(count(DISTINCT wk.user_id) AS BIGINT) AS n_active
-            FROM wk JOIN f ON wk.user_id = f.user_id
-            GROUP BY 1, 2""",
-        "text_tfidf_topk": """
-            WITH toks AS (
-              SELECT doc_id,
-                     unnest(list_filter(regexp_split_to_array(lower(text),
-                       '[^a-z0-9]+'), x -> x <> '')) AS term
-              FROM documents),
-            tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-                   FROM toks GROUP BY 1, 2),
-            dft AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-                    FROM tf GROUP BY 1),
-            nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-            scored AS (
-              SELECT tf.doc_id, tf.term, tf.tf,
-                     floor(CAST(tf.tf AS DOUBLE)
-                           * (ln(CAST(n + 1 AS DOUBLE)
-                                 / CAST(dft.df + 1 AS DOUBLE)) + 1)
-                           * 1e4 + 0.5) / 1e4 AS score
-              FROM tf JOIN dft ON tf.term = dft.term, nd),
-            r AS (SELECT doc_id, term, tf, score,
-                  CAST(row_number() OVER (PARTITION BY doc_id
-                       ORDER BY score DESC, term ASC) AS BIGINT) AS rk
-                  FROM scored)
-            SELECT doc_id, term, tf, score, rk FROM r WHERE rk <= 5""",
-        "sketch_heavy_hitters": """
-            WITH toks AS (
-              SELECT unnest(list_filter(regexp_split_to_array(lower(text),
-                       '[^a-z0-9]+'), x -> x <> '')) AS tok
-              FROM documents),
-            sk AS (
-              SELECT CAST(i AS INT) AS row,
-                     CAST(('0x' || substring(md5('cm' || CAST(i AS VARCHAR)
-                       || '|' || tok), 1, 15)) AS BIGINT) % 512 AS bucket,
-                     CAST(count(*) AS BIGINT) AS cnt
-              FROM toks, LATERAL unnest(range(0, 4)) AS r(i)
-              GROUP BY 1, 2),
-            items AS (SELECT DISTINCT tok AS item FROM toks),
-            probe AS (
-              SELECT item, CAST(i AS INT) AS row,
-                     CAST(('0x' || substring(md5('cm' || CAST(i AS VARCHAR)
-                       || '|' || item), 1, 15)) AS BIGINT) % 512 AS bucket
-              FROM items, LATERAL unnest(range(0, 4)) AS r(i)),
-            est AS (
-              SELECT item,
-                     CAST(min(coalesce(cnt, 0)) AS BIGINT) AS cm_est
-              FROM probe LEFT JOIN sk
-                ON probe.row = sk.row AND probe.bucket = sk.bucket
-              GROUP BY 1),
-            r AS (SELECT item, cm_est,
-                  CAST(row_number() OVER (ORDER BY cm_est DESC, item ASC)
-                       AS BIGINT) AS rk FROM est)
-            SELECT item, cm_est, rk FROM r WHERE rk <= 20""",
-        "sample_reservoir": """
-            WITH h AS (
-              SELECT doc_id, lang,
-                     CAST(('0x' || substring(md5('s0|'
-                       || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                       AS hh
-              FROM documents),
-            r AS (SELECT doc_id, lang,
-                  CAST(row_number() OVER (PARTITION BY lang
-                       ORDER BY hh ASC, doc_id ASC) AS BIGINT) AS rk
-                  FROM h)
-            SELECT doc_id, lang, rk FROM r WHERE rk <= 10""",
-    }
-    sql["dedup_embedding_lsh"] = _lsh_oracle_sql(8, 8, 64, 0.4)
-    sql["dedup_embedding_contamination"] = _emb_contam_oracle_sql(
-        8, 8, 64, 0.4, range(10))
-    sql["ann_lsh_topk"] = _lsh_topk_oracle_sql(4, 16, 64, 5, 8)
-    # the confidence ARITHMETIC over the evidence the Spark query staged
-    # (lines_confidence_checked writes it before returning); DuckDB
-    # reruns the identical division/rounding/labeling over that file
-    sql["lines_confidence_checked"] = f"""
-        SELECT url, block_path, line_id, line_len, link_len,
-               round(CAST(line_len - link_len AS DOUBLE) / line_len, 4)
-                 AS confidence,
-               CASE WHEN round(CAST(line_len - link_len AS DOUBLE)
-                               / line_len, 4) >= 0.5
-                    THEN 'TEXT' ELSE 'LINK' END AS predicted_label
-        FROM '{LINES_EVIDENCE_PATH}/*.parquet'"""
-    # IVF serving over the staged centroid table (training stays
-    # iterative and Spark-side; ann_ivf_topk stages centroids + c_sq
-    # before returning) — same rounded-distance argmin, same probes,
-    # same exact cosine re-rank
-    sql["ann_ivf_topk"] = f"""
-        WITH cen AS (
-          SELECT cluster, centroid, c_sq
-          FROM '{IVF_CENTROIDS_PATH}/*.parquet'),
-        e AS (SELECT vec_id, embedding FROM embeddings),
-        scored AS (
-          -- floor(x*1e6+0.5)/1e6, NOT round(x, 6): the engine's Arrow
-          -- argmin kernel, the Spark relational form, and this oracle
-          -- all compute the identical double expression bit-for-bit
-          -- (Spark F.round's BigDecimal HALF_UP diverges at half
-          -- boundaries; see similarity._round6)
-          SELECT e.vec_id, e.embedding, cen.cluster,
-                 floor((cen.c_sq - 2.0 * list_sum(
-                   [CAST(e.embedding[i] AS DOUBLE) * cen.centroid[i]
-                    for i in range(1, 65)])) * 1000000.0 + 0.5)
-                   / 1000000.0 AS dist
-          FROM e CROSS JOIN cen),
-        ranked AS (
-          SELECT *, row_number() OVER
-                 (PARTITION BY vec_id ORDER BY dist, cluster) AS ark
-          FROM scored),
-        assigned AS (
-          SELECT vec_id, embedding, cluster FROM ranked WHERE ark = 1),
-        probes AS (
-          SELECT vec_id AS query_id, cluster FROM ranked
-          WHERE vec_id < 8 AND ark <= 4),
-        qv AS (SELECT vec_id AS query_id, embedding AS qvec
-               FROM e WHERE vec_id < 8),
-        cand AS (
-          SELECT p.query_id, a.vec_id, a.embedding, q.qvec
-          FROM assigned a
-          JOIN probes p ON a.cluster = p.cluster AND a.vec_id != p.query_id
-          JOIN qv q ON q.query_id = p.query_id),
-        sc AS (
-          SELECT query_id, vec_id,
-                 round(CAST(list_cosine_similarity(qvec, embedding)
-                       AS DOUBLE), 4) AS cosine
-          FROM cand),
-        r2 AS (
-          SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rk
-          FROM sc)
-        SELECT query_id, vec_id, cosine, rk FROM r2 WHERE rk <= 5"""
-    # PQ over the staged codebooks (ann_pq_topk stages them before
-    # returning): DuckDB re-derives per-(vec, subspace) INTEGER distance
-    # terms — floor((c_sq - 2*dot)*1e6 + 0.5), the dot a left-to-right
-    # list_sum fold exactly like the kernel's _seq_dot — takes the
-    # argmin code, sums the query's term lookups (associative integer
-    # sum == the kernel's), cuts the top-50, and re-ranks exactly
-    sql["ann_pq_topk"] = f"""
-        WITH cb AS (
-          SELECT sub, code, centroid, c_sq
-          FROM '{PQ_CODEBOOKS_PATH}/*.parquet'),
-        e AS (SELECT vec_id, embedding FROM embeddings),
-        terms AS (
-          SELECT e.vec_id, cb.sub, cb.code,
-                 CAST(floor((cb.c_sq - 2.0 * list_sum(
-                   [CAST(e.embedding[cb.sub * 8 + i] AS DOUBLE)
-                    * cb.centroid[i] for i in range(1, 9)]))
-                   * 1000000.0 + 0.5) AS BIGINT) AS t
-          FROM e CROSS JOIN cb),
-        codes AS (
-          SELECT vec_id, sub, code FROM (
-            SELECT vec_id, sub, code,
-                   row_number() OVER (PARTITION BY vec_id, sub
-                                      ORDER BY t, code) AS rn
-            FROM terms) WHERE rn = 1),
-        qlut AS (
-          SELECT vec_id AS query_id, sub, code, t
-          FROM terms WHERE vec_id < 8),
-        adc AS (
-          SELECT q.query_id, c.vec_id, CAST(sum(q.t) AS BIGINT) AS dist_q
-          FROM codes c
-          JOIN qlut q ON c.sub = q.sub AND c.code = q.code
-                     AND c.vec_id <> q.query_id
-          GROUP BY q.query_id, c.vec_id),
-        cand AS (
-          SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY dist_q, vec_id) AS crk
-            FROM adc) WHERE crk <= 50),
-        qv AS (SELECT vec_id AS query_id, embedding AS qvec
-               FROM e WHERE vec_id < 8),
-        sc AS (
-          SELECT cand.query_id, cand.vec_id,
-                 round(CAST(list_cosine_similarity(q.qvec, e.embedding)
-                       AS DOUBLE), 4) AS cosine
-          FROM cand
-          JOIN e ON e.vec_id = cand.vec_id
-          JOIN qv q ON q.query_id = cand.query_id),
-        r2 AS (
-          SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rk
-          FROM sc)
-        SELECT query_id, vec_id, cosine, rk FROM r2 WHERE rk <= 5"""
-    # IVF-PQ over BOTH staged artifacts: cluster assignment + probes
-    # from the staged coarse centroids (the ann_ivf_topk shape), codes
-    # + integer ADC from the staged codebooks (the ann_pq_topk shape),
-    # ADC restricted to probed-list candidates, top-40 refine, exact
-    # cosine re-rank — every ranking quantity integer or _round6
-    sql["ann_ivfpq_topk"] = f"""
-        WITH cen AS (
-          SELECT cluster, centroid, c_sq
-          FROM '{IVFPQ_CENTROIDS_PATH}/*.parquet'),
-        cb AS (
-          SELECT sub, code, centroid, c_sq
-          FROM '{IVFPQ_CODEBOOKS_PATH}/*.parquet'),
-        e AS (SELECT vec_id, embedding FROM embeddings),
-        cscored AS (
-          SELECT e.vec_id, cen.cluster,
-                 floor((cen.c_sq - 2.0 * list_sum(
-                   [CAST(e.embedding[i] AS DOUBLE) * cen.centroid[i]
-                    for i in range(1, 65)])) * 1000000.0 + 0.5)
-                   / 1000000.0 AS dist
-          FROM e CROSS JOIN cen),
-        cranked AS (
-          SELECT *, row_number() OVER
-                 (PARTITION BY vec_id ORDER BY dist, cluster) AS ark
-          FROM cscored),
-        assigned AS (
-          SELECT vec_id, cluster FROM cranked WHERE ark = 1),
-        probes AS (
-          SELECT vec_id AS query_id, cluster FROM cranked
-          WHERE vec_id < 8 AND ark <= 6),
-        terms AS (
-          SELECT e.vec_id, cb.sub, cb.code,
-                 CAST(floor((cb.c_sq - 2.0 * list_sum(
-                   [CAST(e.embedding[cb.sub * 8 + i] AS DOUBLE)
-                    * cb.centroid[i] for i in range(1, 9)]))
-                   * 1000000.0 + 0.5) AS BIGINT) AS t
-          FROM e CROSS JOIN cb),
-        codes AS (
-          SELECT vec_id, sub, code FROM (
-            SELECT vec_id, sub, code,
-                   row_number() OVER (PARTITION BY vec_id, sub
-                                      ORDER BY t, code) AS rn
-            FROM terms) WHERE rn = 1),
-        qlut AS (
-          SELECT vec_id AS query_id, sub, code, t
-          FROM terms WHERE vec_id < 8),
-        candrows AS (
-          SELECT p.query_id, a.vec_id
-          FROM assigned a
-          JOIN probes p ON a.cluster = p.cluster
-                       AND a.vec_id <> p.query_id),
-        adc AS (
-          SELECT cr.query_id, cr.vec_id,
-                 CAST(sum(q.t) AS BIGINT) AS dist_q
-          FROM candrows cr
-          JOIN codes c ON c.vec_id = cr.vec_id
-          JOIN qlut q ON q.query_id = cr.query_id
-                     AND q.sub = c.sub AND q.code = c.code
-          GROUP BY cr.query_id, cr.vec_id),
-        cand AS (
-          SELECT query_id, vec_id FROM (
-            SELECT query_id, vec_id,
-                   row_number() OVER (PARTITION BY query_id
-                                      ORDER BY dist_q, vec_id) AS crk
-            FROM adc) WHERE crk <= 40),
-        qv AS (SELECT vec_id AS query_id, embedding AS qvec
-               FROM e WHERE vec_id < 8),
-        sc AS (
-          SELECT cand.query_id, cand.vec_id,
-                 round(CAST(list_cosine_similarity(q.qvec, e.embedding)
-                       AS DOUBLE), 4) AS cosine
-          FROM cand
-          JOIN e ON e.vec_id = cand.vec_id
-          JOIN qv q ON q.query_id = cand.query_id),
-        r2 AS (
-          SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, vec_id ASC) AS BIGINT) AS rk
-          FROM sc)
-        SELECT query_id, vec_id, cosine, rk FROM r2 WHERE rk <= 5"""
-    # ccnet-style LM scoring over the staged quantized-logprob table
-    # (text_lm_quality stages it before returning): DuckDB redoes the
-    # trigram explode, the model join, and the INTEGER sum — associative
-    # by construction, so no float-accumulation portability gap exists
-    sql["text_lm_quality"] = f"""
-        WITH lm AS (SELECT tg, qlp, q FROM '{LM_TABLE_PATH}/*.parquet'),
-        c AS (
-          -- the staged table carries its own constants: OOV = one bit
-          -- beyond the least likely seen trigram, q = the quantization
-          SELECT CAST(max(qlp) + max(q) AS BIGINT) AS oov,
-                 CAST(max(q) AS BIGINT) AS q
-          FROM lm),
-        t AS (
-          SELECT doc_id,
-                 unnest(CASE WHEN length(text) >= 3 THEN
-                   list_transform(range(1, length(text) - 1),
-                                  i -> substr(text, i, 3))
-                 ELSE CAST([] AS VARCHAR[]) END) AS tg
-          FROM documents),
-        s AS (
-          SELECT doc_id, count(*) AS n_trigrams, count(qlp) AS n_in,
-                 CAST(coalesce(sum(qlp), 0) AS BIGINT) AS s_in
-          FROM t LEFT JOIN lm USING (tg)
-          GROUP BY doc_id)
-        SELECT doc_id, CAST(n_trigrams AS BIGINT) AS n_trigrams,
-               CAST(s_in + (n_trigrams - n_in) * c.oov AS BIGINT)
-                 AS sum_qlp,
-               CAST(s_in + (n_trigrams - n_in) * c.oov AS BIGINT)
-                 / (n_trigrams * CAST(c.q AS DOUBLE)) AS bits_per_char
-        FROM s CROSS JOIN c"""
-    # lm_buckets against the SERIAL rank: DuckDB recomputes the staged-
-    # model scores (same integer sums as text_lm_quality), then one
-    # global row_number over (bits_per_char, doc_id) — proving the
-    # 256-bins-per-bit decomposed rank equals the serial formulation
-    sql["text_lm_buckets"] = f"""
-        WITH lm AS (SELECT tg, qlp, q FROM '{LM_TABLE_PATH}/*.parquet'),
-        c AS (
-          SELECT CAST(max(qlp) + max(q) AS BIGINT) AS oov,
-                 CAST(max(q) AS BIGINT) AS q
-          FROM lm),
-        t AS (
-          SELECT doc_id,
-                 unnest(CASE WHEN length(text) >= 3 THEN
-                   list_transform(range(1, length(text) - 1),
-                                  i -> substr(text, i, 3))
-                 ELSE CAST([] AS VARCHAR[]) END) AS tg
-          FROM documents),
-        s AS (
-          SELECT doc_id, count(*) AS n_trigrams, count(qlp) AS n_in,
-                 CAST(coalesce(sum(qlp), 0) AS BIGINT) AS s_in
-          FROM t LEFT JOIN lm USING (tg)
-          GROUP BY doc_id),
-        sc AS (
-          SELECT doc_id,
-                 CAST(s_in + (n_trigrams - n_in) * c.oov AS BIGINT)
-                   / (n_trigrams * CAST(c.q AS DOUBLE)) AS bits_per_char
-          FROM s CROSS JOIN c),
-        r AS (
-          SELECT doc_id,
-                 CAST(row_number() OVER (ORDER BY bits_per_char, doc_id)
-                      AS BIGINT) AS lm_rank,
-                 count(*) OVER () AS n
-          FROM sc)
-        SELECT doc_id, lm_rank,
-               CAST(floor((lm_rank - 1) * 3 / n) + 1 AS INT) AS lm_bucket
-        FROM r"""
-    # NB quality classifier over the staged dense model table
-    # (text_classifier_score stages it before returning): DuckDB redoes
-    # the token explode, the bucket hash, the model join (dense — every
-    # bucket hits), and the INTEGER log-likelihood-ratio sum
-    _NB_SCORE_CTE = f"""
-        WITH m AS (SELECT feat, qllr, qprior, q, b
-                   FROM '{NB_MODEL_PATH}/*.parquet'),
-        c AS (
-          -- the staged table carries its own constants: the class
-          -- prior, the quantization q, and the bucket count b
-          SELECT CAST(max(qprior) AS BIGINT) AS p,
-                 CAST(max(q) AS BIGINT) AS q
-          FROM m),
-        t AS (SELECT doc_id, unnest({_TOKENS}) AS tok FROM documents),
-        f AS (SELECT doc_id,
-                     {_H60.format(x="tok")} % (SELECT max(b) FROM m) AS feat
-              FROM t),
-        s AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-                 CAST(sum(qllr) AS BIGINT) AS s_in
-          FROM f JOIN m USING (feat)
-          GROUP BY doc_id)"""
-    sql["text_classifier_score"] = f"""{_NB_SCORE_CTE}
-        SELECT doc_id, n_tokens,
-               CAST(c.p + s.s_in AS BIGINT) AS score_q,
-               s.s_in / (n_tokens * CAST(c.q AS DOUBLE)) AS llr_per_token
-        FROM s CROSS JOIN c"""
-    # the gate: reject iff llr/token < -0.52 — the identical
-    # integer-by-staged-q division in both engines (exact IEEE);
-    # zero-token docs have no scored row and survive
-    sql["text_classifier_keep"] = f"""{_NB_SCORE_CTE}
-        SELECT d.doc_id, d.source
-        FROM documents d
-        WHERE d.doc_id NOT IN (
-          SELECT doc_id FROM s CROSS JOIN c
-          WHERE s.s_in / (s.n_tokens * CAST(c.q AS DOUBLE)) < -0.52)"""
-
-    # BM25 over the staged per-term stats: the oracle re-derives tf/dl
-    # from the shared tokenizer, reuses the STAGED qidf/avgdl floats,
-    # computes the identical fixed expression tree, quantizes to the
-    # same integer micro-units, and integer-sums — then the serial
-    # row_number proves the engine's two-level top-k equal
-    sql["text_bm25_topk"] = f"""
-        WITH s AS (SELECT term, qidf, avgdl
-                   FROM '{BM25_STATS_PATH}/*.parquet'),
-        t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
-        x AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
-                     unnest(toks) AS term
-              FROM t),
-        m AS (SELECT x.doc_id, x.term, x.dl, s.qidf, s.avgdl
-              FROM x JOIN s USING (term)),
-        c AS (
-          SELECT doc_id, term,
-                 CAST(floor(
-                   (CAST(any_value(qidf) AS DOUBLE) / 1000000.0)
-                   * (CAST(count(*) AS DOUBLE) * 2.2
-                      / (CAST(count(*) AS DOUBLE)
-                         + 1.2 * (0.25
-                                  + 0.75 * CAST(any_value(dl) AS DOUBLE)
-                                    / any_value(avgdl))))
-                   * 1000000.0 + 0.5) AS BIGINT) AS cq
-          FROM m GROUP BY doc_id, term),
-        sc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_terms_matched,
-                      CAST(sum(cq) AS BIGINT) AS score_q
-               FROM c GROUP BY doc_id),
-        r AS (SELECT *, CAST(row_number() OVER
-                     (ORDER BY score_q DESC, doc_id) AS BIGINT) AS rk
-              FROM sc)
-        SELECT doc_id, n_terms_matched, score_q,
-               score_q / 1000000.0 AS score, rk
-        FROM r WHERE rk <= 10"""
-    # GPT-2 pre-tokenizer piece count: the IDENTICAL RE2-safe pattern
-    # runs in DuckDB — derived mechanically from the single source of
-    # truth (operators/text.BPE_PRETOKEN_RE), never respelled;
-    # leftmost-first alternation in both engines makes the split equal
-    _BPE_RE_SQL = "'" + T.BPE_PRETOKEN_RE.replace("'", "''") + "'"
-    sql["text_bpe_pretokens"] = f"""
-        SELECT doc_id,
-               CAST(len(regexp_extract_all(text, {_BPE_RE_SQL})) AS BIGINT)
-                 AS n_pretokens,
-               CAST(len({_TOKENS}) AS BIGINT) AS n_ws_tokens,
-               CAST(length(text) AS BIGINT) AS chars,
-               CAST(length(text) AS DOUBLE)
-                 / greatest(len(regexp_extract_all(text, {_BPE_RE_SQL})), 1)
-                 AS chars_per_pretoken
-        FROM documents"""
-    # sliding-window chunking: size=200, overlap=40 -> stride=160; the
-    # chunk count and starts are the same integer arithmetic as
-    # text.chunk_documents, windows via generate_series
-    sql["text_chunks"] = """
-        WITH n AS (
-          SELECT doc_id, text, length(text) AS ln,
-                 CASE WHEN length(text) = 0 THEN 0
-                      WHEN length(text) <= 200 THEN 1
-                      ELSE 1 + (length(text) - 200 + 159) // 160
-                 END AS n_chunks
-          FROM documents)
-        SELECT doc_id,
-               CAST(k AS BIGINT) AS chunk_id,
-               CAST(k * 160 + 1 AS BIGINT) AS chunk_start,
-               substr(text, CAST(k * 160 + 1 AS INT), 200) AS chunk_text
-        FROM n, LATERAL unnest(range(0, n_chunks)) AS r(k)"""
-    # SemDeDup over the staged k-means partition (dedup_semantic stages
-    # its own centroid table before returning): the same bit-compatible
-    # floor-quantized argmin assignment, then exact rounded cosine over
-    # within-cluster pairs only
-    sql["dedup_semantic"] = f"""
-        WITH cen AS (
-          SELECT cluster, centroid, c_sq
-          FROM '{SEMDEDUP_CENTROIDS_PATH}/*.parquet'),
-        e AS (SELECT vec_id, embedding FROM embeddings),
-        scored AS (
-          SELECT e.vec_id, e.embedding, cen.cluster,
-                 floor((cen.c_sq - 2.0 * list_sum(
-                   [CAST(e.embedding[i] AS DOUBLE) * cen.centroid[i]
-                    for i in range(1, 65)])) * 1000000.0 + 0.5)
-                   / 1000000.0 AS dist
-          FROM e CROSS JOIN cen),
-        assigned AS (
-          SELECT vec_id, embedding, cluster FROM (
-            SELECT *, row_number() OVER
-                   (PARTITION BY vec_id ORDER BY dist, cluster) AS ark
-            FROM scored) WHERE ark = 1)
-        SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.cluster AS cluster,
-               round(CAST(list_cosine_similarity(a.embedding, b.embedding)
-                     AS DOUBLE), 4) AS cosine
-        FROM assigned a JOIN assigned b
-          ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-        WHERE round(CAST(list_cosine_similarity(a.embedding, b.embedding)
-                    AS DOUBLE), 4) >= 0.35"""
-    # cluster-balanced reservoir: the same staged-centroid
-    # window-argmin assignment, then the single-window form of the
-    # per-stratum reservoir (seed 'cb0') — value-identical to the
-    # engine's two-level decomposed rank
-    sql["sample_cluster_balanced"] = f"""
-        WITH cen AS (
-          SELECT cluster, centroid, c_sq
-          FROM '{CLUSTER_SAMPLE_CENTROIDS_PATH}/*.parquet'),
-        e AS (SELECT vec_id, embedding FROM embeddings),
-        scored AS (
-          SELECT e.vec_id, cen.cluster,
-                 floor((cen.c_sq - 2.0 * list_sum(
-                   [CAST(e.embedding[i] AS DOUBLE) * cen.centroid[i]
-                    for i in range(1, 65)])) * 1000000.0 + 0.5)
-                   / 1000000.0 AS dist
-          FROM e CROSS JOIN cen),
-        assigned AS (
-          SELECT vec_id, CAST(cluster AS BIGINT) AS cluster FROM (
-            SELECT *, row_number() OVER
-                   (PARTITION BY vec_id ORDER BY dist, cluster) AS ark
-            FROM scored) WHERE ark = 1),
-        h AS (
-          SELECT vec_id, cluster,
-                 CAST(('0x' || substring(md5('cb0'
-                   || '|' || CAST(vec_id AS VARCHAR)), 1, 15)) AS BIGINT)
-                   AS hh
-          FROM assigned),
-        r AS (SELECT vec_id, cluster,
-              CAST(row_number() OVER (PARTITION BY cluster
-                   ORDER BY hh ASC, vec_id ASC) AS BIGINT) AS rk
-              FROM h)
-        SELECT vec_id, cluster, rk FROM r WHERE rk <= 5"""
-    # SemDeDup keep-one: the same staged-centroid assignment + pair
-    # filter, fed through the dedup_components recursive min-label
-    # propagation (label spreads while label < node)
-    sql["dedup_semantic_keep"] = f"""
-        WITH RECURSIVE cen AS (
-          SELECT cluster, centroid, c_sq
-          FROM '{SEMDEDUP_CENTROIDS_PATH}/*.parquet'),
-        emb AS (SELECT vec_id, embedding FROM embeddings),
-        scored AS (
-          SELECT emb.vec_id, emb.embedding, cen.cluster,
-                 floor((cen.c_sq - 2.0 * list_sum(
-                   [CAST(emb.embedding[i] AS DOUBLE) * cen.centroid[i]
-                    for i in range(1, 65)])) * 1000000.0 + 0.5)
-                   / 1000000.0 AS dist
-          FROM emb CROSS JOIN cen),
-        assigned AS (
-          SELECT vec_id, embedding, cluster FROM (
-            SELECT *, row_number() OVER
-                   (PARTITION BY vec_id ORDER BY dist, cluster) AS ark
-            FROM scored) WHERE ark = 1),
-        pairs AS (
-          SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-          FROM assigned a JOIN assigned b
-            ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-          WHERE round(CAST(list_cosine_similarity(a.embedding, b.embedding)
-                      AS DOUBLE), 4) >= 0.35),
-        {_reach_comp_cte(u="vec_a", v="vec_b", nodes="embeddings",
-                         node_col="vec_id")}
-        SELECT vec_id, component, vec_id = component AS keep
-        FROM comp"""
-    # DSIR importance weights over the staged dense model table
-    # (text_dsir_score stages it before returning): DuckDB redoes the
-    # unigram+bigram explode, the bucket hash, the dense-model join,
-    # and the INTEGER log-ratio sum — associative, no float-
-    # accumulation portability gap
-    _DSIR_SCORE_CTE = f"""
-        WITH m AS (SELECT feat, qlw, q, b
-                   FROM '{DSIR_MODEL_PATH}/*.parquet'),
-        c AS (
-          -- the staged table carries its own constants: the
-          -- quantization q and the bucket count b
-          SELECT CAST(max(q) AS BIGINT) AS q,
-                 CAST(max(b) AS BIGINT) AS b
-          FROM m),
-        t AS (SELECT doc_id, {_TOKENS} AS t FROM documents),
-        g AS (SELECT doc_id,
-                     unnest(list_concat(t,
-                       list_transform(range(1, len(t)),
-                                      i -> t[i] || ' ' || t[i+1])))
-                       AS g
-              FROM t),
-        f AS (SELECT doc_id,
-                     {_H60.format(x="g")} % c.b AS feat
-              FROM g CROSS JOIN c),
-        s AS (
-          SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-                 CAST(sum(qlw) AS BIGINT) AS s_in
-          FROM f JOIN m USING (feat)
-          GROUP BY doc_id)"""
-    sql["text_dsir_score"] = f"""{_DSIR_SCORE_CTE}
-        SELECT doc_id, n_feats,
-               s_in AS qlw_sum,
-               CAST(c.q AS INT) AS q,
-               s_in / (n_feats * CAST(c.q AS DOUBLE)) AS log2w_per_feat
-        FROM s CROSS JOIN c"""
-    # DSIR top-k against the SERIAL rank: the engine's pruned-bin
-    # decomposed top-k must equal one global row_number over
-    # (qlw_sum DESC, doc_id)
-    sql["sample_dsir_topk"] = f"""{_DSIR_SCORE_CTE},
-        r AS (
-          SELECT doc_id, s_in AS qlw_sum,
-                 CAST(row_number() OVER (ORDER BY s_in DESC, doc_id)
-                      AS BIGINT) AS dsir_rank
-          FROM s)
-        SELECT doc_id, qlw_sum, dsir_rank FROM r WHERE dsir_rank <= 50"""
-    # DSIR Gumbel-top-k: the perturbation is LOOKED UP in the staged
-    # quantized-Gumbel table (sample_dsir_gumbel stages it) by the
-    # identical seeded 16-bit hash index — the gate never recomputes a
-    # log2 in either engine — then the serial rank
-    sql["sample_dsir_gumbel"] = f"""{_DSIR_SCORE_CTE},
-        gk AS (
-          SELECT s.doc_id, s.s_in AS qlw_sum,
-                 CAST(s.s_in + n.qg AS BIGINT) AS gkey
-          FROM s JOIN '{DSIR_GUMBEL_PATH}/*.parquet' n
-            ON n.h2 = {_H60.format(x="'g0|' || s.doc_id")} % 65536),
-        r AS (
-          SELECT *, CAST(row_number() OVER (ORDER BY gkey DESC, doc_id)
-                         AS BIGINT) AS dsir_rank
-          FROM gk)
-        SELECT doc_id, qlw_sum, gkey, dsir_rank
-        FROM r WHERE dsir_rank <= 50"""
-    return sql
+    return {g.__name__: g.oracle for g in GATES if g.oracle is not ROWS_ONLY}

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """End-to-end training-corpus build: archives in, clean JSONL out.
 
+    python jobs/make_bundle.py          # -> dist/origami_spark.zip
     spark-submit --driver-memory 8g \
         --py-files dist/origami_spark.zip jobs/corpus_job.py \
         --warc '/data/crawl/*.warc.gz'   \

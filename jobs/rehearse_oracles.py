@@ -1,17 +1,20 @@
-"""Driver-gate dry run: every `__spark_entry__.queries()` entry on
-Spark AND its `oracle_sql()` on DuckDB over the same parquet tables,
-compared by sorted column names + order-insensitive canonical values —
-the same contract as the external correctness capture and
-tests/test_oracle_parity.py, but at the driver's sf0.01 scale and over
-ALL entries (the external capture stamps only the first 50).
+"""Driver-gate dry run: `__spark_entry__.queries()` entries on Spark AND
+their `oracle_sql()` on DuckDB over the same parquet tables, compared by
+`origami_spark.oracle_compare.compare` — the same contract as the
+external correctness capture and tests/test_oracle_parity.py, but at the
+driver's sf0.01 scale and over ALL entries by default (the external
+capture stamps only the first 50).  Naming gates restricts the run to
+them, in the order given — the fast equivalence check after
+restructuring one gate's plan.
 
 Usage (from the repo root):
 
-    python jobs/rehearse_oracles.py [sf_dir] [cores]
+    python jobs/rehearse_oracles.py [gate ...] [--sf DIR]
 
 Prints one status line per gate and a final JSON summary
 (total / hash_exact / rows_only / mismatch / error / fails).
-Exit code 1 if any gate mismatches or errors.
+Exit code 1 if any gate mismatches or errors.  The session takes its
+cores from ``get_spark`` (``SPARK_GRAFT_CPUS``, else every core).
 
 Staging caveat (same as the external gate): queries that stage model
 artifacts write to the repo-local `.oracle_stage/` and their oracle
@@ -25,52 +28,51 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from origami_spark.oracle_compare import canon as _canon  # noqa: E402
-from origami_spark.oracle_compare import duck_connect  # noqa: E402
-
-
-def _duck(sql: str, sf_dir: str):
-    return duck_connect(sf_dir).execute(sql).df()
+from origami_spark.oracle_compare import compare, duck_connect  # noqa: E402
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    cores = int(sys.argv[2]) if len(sys.argv) > 2 else 24
+    names = sys.argv[1:]
+    sf_dir = "/root/testdata/sf0.01"
+    if "--sf" in names:
+        i = names.index("--sf")
+        sf_dir = names[i + 1]
+        del names[i:i + 2]
 
     from origami_spark.session import get_spark
     import __spark_entry__ as E
 
-    spark = get_spark("rehearse_oracles", cores=cores)
+    spark = get_spark("rehearse_oracles")
+    spark.sparkContext.setLogLevel("ERROR")
     qs, oracles = E.queries(), E.oracle_sql()
+    names = names or list(qs)
+    con = duck_connect(sf_dir)
     t0 = time.time()
     ok = rows_only = bad = err = 0
     fails = []
-    for i, (name, fn) in enumerate(qs.items()):
+    for i, name in enumerate(names):
         try:
-            sdf = fn(spark, sf_dir).toPandas()
+            sdf = qs[name](spark, sf_dir).toPandas()
             sql = oracles.get(name)
             if sql is None:
                 rows_only += 1
                 status = f"rows-only({len(sdf)})"
             else:
-                ddf = _duck(sql, sf_dir)
-                sc, sr = _canon(sdf)
-                dc, dr = _canon(ddf)
-                if sc == dc and sr == dr:
+                diff = compare(sdf, con.execute(sql).df())
+                if diff is None:
                     ok += 1
                     status = f"OK({len(sdf)})"
                 else:
                     bad += 1
                     fails.append(name)
-                    status = (f"MISMATCH rows {len(sr)} vs {len(dr)} "
-                              f"cols {sc} vs {dc}")
+                    status = "MISMATCH " + diff[:200]
         except Exception as e:  # keep going: report every gate
             err += 1
             fails.append(name)
-            status = "ERROR " + repr(e)[:120]
+            status = "ERROR " + repr(e)[:200]
         print("%3d %-32s %s" % (i + 1, name, status), flush=True)
     print(json.dumps({
-        "total": len(qs), "hash_exact": ok, "rows_only": rows_only,
+        "total": len(names), "hash_exact": ok, "rows_only": rows_only,
         "mismatch": bad, "error": err,
         "wall_s": round(time.time() - t0, 1), "fails": fails,
     }))

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Cluster entry point for the CONTINUOUS corpus pipeline.
 
+    python jobs/make_bundle.py          # -> dist/origami_spark.zip
     spark-submit --driver-memory 8g \
         --py-files dist/origami_spark.zip jobs/stream_corpus_job.py \
         --source /data/landing --output /data/corpus_stream \

@@ -1,9 +1,12 @@
-"""Single-document reference extractor (testing oracle, not the engine).
+"""Single-document extractor: the per-document engine of the fused path.
 
 Applies, in pure Python, exactly the rule sequence the Spark pipeline
-implements relationally (operators/layout.py + operators/compose.py), so
-spec bugs can be found without a SparkSession and the Spark pipeline can
-be asserted equal to this oracle *and* to the constructive goldens.
+implements relationally (operators/layout.py + operators/compose.py).
+``pipeline.extract_fused`` runs it inside one Arrow kernel per batch, so
+it is the engine behind ``extract_fused``, ``jobs/corpus_job.py`` and the
+perfbench workloads.  It also runs without a SparkSession, so spec bugs
+can be found in plain Python, and the relational pipeline is asserted
+equal to it *and* to the constructive goldens.
 
 Rule sequence (mirrors origami's layout rule pipeline,
 ``custom/layouts/bbz.py:50-86``, re-expressed for spans):

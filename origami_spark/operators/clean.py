@@ -19,7 +19,7 @@ after extraction and before dedup (all public-knowledge recipes):
 All three are pure Catalyst (whole-stage codegen, no Python in the hot
 path) and embarrassingly parallel: one row in, one row out, no shuffle,
 so they scale linearly with input splits at any corpus size.  Each has
-a value-identical DuckDB oracle in ``__spark_entry__.oracle_sql``.
+a value-identical DuckDB oracle in ``gates/text.py``.
 
 Per-document folds (duplicate-character counting, most-frequent-gram)
 run over *sorted* per-row arrays with ``aggregate`` struct accumulators

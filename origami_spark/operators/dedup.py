@@ -332,15 +332,14 @@ def _banded(sigs: DataFrame, k: int, bands: int,
 
 
 def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
-                           bands: int = 4, use_kernel: bool = True,
+                           bands: int = 4,
                            min_sig_agreement: float | None = None,
                            max_bucket: int | None = None) -> DataFrame:
     """LSH banding: docs sharing any band of minhashes become a candidate
     pair (shingle -> minhash -> band -> bucket equality join).
 
-    Signatures come from the Arrow kernel by default; pass
-    ``use_kernel=False`` for the pure-relational form (the two are
-    asserted bit-identical in tests/test_dedup.py).
+    Signatures come from the Arrow kernel, asserted bit-identical to
+    the pure-relational ``minhash_signatures`` in tests/test_dedup.py.
 
     ``min_sig_agreement`` VERIFIES candidates before returning them: the
     fraction of agreeing minhash components is an unbiased Jaccard
@@ -360,9 +359,7 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     None (default) keeps exact all-pairs semantics.  Residual skew
     below the cap is AQE's job — tests/test_skew.py plants a hot
     bucket and asserts the adaptive skew-join split actually fires."""
-    sigs = _tracked_cache(
-        (minhash_signatures_kernel if use_kernel
-         else minhash_signatures)(docs, n, k))
+    sigs = _tracked_cache(minhash_signatures_kernel(docs, n, k))
     banded = _banded(sigs, k, bands)
     if max_bucket is not None:
         stats = banded.groupBy("band", "bucket").agg(
@@ -416,7 +413,7 @@ def _sig_agreement(k: int) -> F.Column:
 
 
 def signature_index(docs: DataFrame, n: int = 3, k: int = 16,
-                    bands: int = 4, use_kernel: bool = True) -> DataFrame:
+                    bands: int = 4) -> DataFrame:
     """The PERSISTABLE near-dup index: one row per (doc, band) with the
     LSH bucket key and the full signature — ``(doc_id, band, bucket,
     sig)``.  At 100 TB a new crawl batch must not recompute the whole
@@ -426,14 +423,12 @@ def signature_index(docs: DataFrame, n: int = 3, k: int = 16,
     as a table bucketed on (band, bucket), the incremental join reads
     the corpus side with NO exchange — only the new batch shuffles
     (asserted in tests/test_dedup_incremental.py)."""
-    sigs = (minhash_signatures_kernel if use_kernel
-            else minhash_signatures)(docs, n, k)
+    sigs = minhash_signatures_kernel(docs, n, k)
     return _banded(sigs, k, bands, keep_sig=True)
 
 
 def incremental_candidates(new_docs: DataFrame, index: DataFrame,
                            n: int = 3, k: int = 16, bands: int = 4,
-                           use_kernel: bool = True,
                            min_sig_agreement: float | None = None,
                            new_index: DataFrame | None = None,
                            max_bucket: int | None = None,
@@ -478,7 +473,7 @@ def incremental_candidates(new_docs: DataFrame, index: DataFrame,
     be wasted stats work (the streaming sink's configuration)."""
     new_idx = _tracked_cache(
         new_index if new_index is not None
-        else signature_index(new_docs, n, k, bands, use_kernel=use_kernel))
+        else signature_index(new_docs, n, k, bands))
     within_small, star = new_idx, None
     if max_bucket is not None and cap_index:
         istats = index.groupBy("band", "bucket").agg(
@@ -542,7 +537,7 @@ def incremental_candidates(new_docs: DataFrame, index: DataFrame,
 
 def incremental_keep(new_docs: DataFrame, index: DataFrame,
                      id_col: str = "doc_id", n: int = 3, k: int = 16,
-                     bands: int = 4, use_kernel: bool = True,
+                     bands: int = 4,
                      min_sig_agreement: float | None = 0.5,
                      new_index: DataFrame | None = None,
                      max_bucket: int | None = None,
@@ -573,7 +568,7 @@ def incremental_keep(new_docs: DataFrame, index: DataFrame,
     from .components import connected_components
 
     cand = _tracked_cache(incremental_candidates(
-        new_docs, index, n, k, bands, use_kernel=use_kernel,
+        new_docs, index, n, k, bands,
         min_sig_agreement=min_sig_agreement, new_index=new_index,
         max_bucket=max_bucket, cap_index=cap_index))
 
@@ -753,11 +748,10 @@ def banded_hamming_pairs(hashed: DataFrame, id_col: str, hash_col: str,
 
 
 def simhash_near_dups(docs: DataFrame, bits: int = 32, bands: int = 4,
-                      max_hamming: int = 3,
-                      use_kernel: bool = True) -> DataFrame:
+                      max_hamming: int = 3) -> DataFrame:
     """Banded simhash near-dup pairs: any equal band (pigeonhole for
     hamming <= bands-1) -> candidate; verify hamming distance."""
-    sh = (simhash_kernel if use_kernel else simhash)(docs, bits)
+    sh = simhash_kernel(docs, bits)
     return banded_hamming_pairs(
         sh, "doc_id", "simhash", bits, bands, max_hamming,
     ).select(
@@ -924,8 +918,7 @@ def substring_fingerprints_kernel(docs: DataFrame, window: int = 64,
 
 def substring_dup_pairs(docs: DataFrame, window: int = 64,
                         k: int = 16,
-                        max_df: int | None = None,
-                        use_kernel: bool = True) -> DataFrame:
+                        max_df: int | None = None) -> DataFrame:
     """Exact repeated-substring detection between documents — the
     "deduplicate exact substrings, not just whole docs" operator of
     training-data pipelines (Lee et al. 2022, "Deduplicating Training
@@ -943,12 +936,10 @@ def substring_dup_pairs(docs: DataFrame, window: int = 64,
     — at web scale one cookie-banner gram must not form a quadratic
     bucket).
 
-    Fingerprints come from the Arrow kernel by default
-    (``use_kernel=False`` for the pure-relational oracle form; the two
-    are asserted bit-identical in tests/test_dedup.py)."""
-    fp = _tracked_cache(
-        (substring_fingerprints_kernel if use_kernel
-         else substring_fingerprints)(docs, window, k))
+    Fingerprints come from the Arrow kernel, asserted bit-identical to
+    the pure-relational ``substring_fingerprints`` (the oracle form) in
+    tests/test_dedup.py."""
+    fp = _tracked_cache(substring_fingerprints_kernel(docs, window, k))
     if max_df is not None:
         rare = (
             fp.groupBy("gram")
@@ -1078,7 +1069,6 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
 def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
                     max_df: int | None = None,
                     min_len: int | None = None,
-                    use_kernel: bool = True,
                     skip_covered: bool = True,
                     max_positions: int = 16) -> DataFrame:
     """The APPLICATION step of exact-substring dedup (Lee et al. 2022):
@@ -1118,8 +1108,7 @@ def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
     # every copy — min-pos fingerprints would leave later in-doc copies
     # unanchored and they would survive removal
     fp = _tracked_cache(
-        (substring_fingerprints_kernel if use_kernel
-         else substring_fingerprints)(docs, window, k, all_positions=True,
+        substring_fingerprints_kernel(docs, window, k, all_positions=True,
                                       max_positions=max_positions))
     if max_df is not None:
         rare = (

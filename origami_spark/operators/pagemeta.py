@@ -9,7 +9,7 @@ Catalyst regexp projection over the scan — no UDF, no kernel, no
 shuffle; html bytes never leave their partition.
 
 Contract notes (shared with the DuckDB oracle in
-``__spark_entry__``): all patterns are RE2-safe with explicit
+``gates/web.py``): all patterns are RE2-safe with explicit
 whitespace classes (the ``bpe_pretokens`` precedent — bare ``\\s``
 differs between Java and RE2); inner-text captures are ``[^<]*``, so
 an element whose content contains nested markup does not match and

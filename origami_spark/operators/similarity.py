@@ -339,8 +339,7 @@ def _probe_lists(q: DataFrame, centroids_df: DataFrame,
 
 
 def ivf_topk_served(emb: DataFrame, centroids_df: DataFrame, query_ids,
-                    k: int = 5, nprobe: int = 4,
-                    engine: str = "kernel") -> DataFrame:
+                    k: int = 5, nprobe: int = 4) -> DataFrame:
     """IVF SERVING over fixed, already-trained centroids.
 
     ``centroids_df``: (cluster int, centroid array<double>, c_sq double)
@@ -351,22 +350,12 @@ def ivf_topk_served(emb: DataFrame, centroids_df: DataFrame, query_ids,
     _seq_dot rationale).  Queries probe their `nprobe` nearest
     centroids; exact cosine re-rank inside the probed lists.
 
-    Two formulations of the SAME function (parity asserted in
-    tests/test_similarity.py):
-
-    * ``engine="kernel"`` (default, the scale path): the corpus is
-      assigned by :func:`assign_ivf` — a broadcast-matrix Arrow argmin,
-      zero Exchange/Sort between the scan and the assignment.  Only the
-      tiny filtered query side runs the relational crossJoin+window to
-      pick its probes.
-    * ``engine="relational"``: the pure-SQL crossJoin+window form, kept
-      ONLY as the engine-portable oracle shape (the DuckDB oracle in
-      __spark_entry__ runs this SQL verbatim) and as the small-scale
-      verifier of the kernel.  It hash-exchanges and sorts n*k rows —
-      do not serve through it."""
-    if engine == "relational":
-        return _ivf_topk_served_relational(emb, centroids_df, query_ids,
-                                           k, nprobe)
+    The corpus is assigned by :func:`assign_ivf` — a broadcast-matrix
+    Arrow argmin, zero Exchange/Sort between the scan and the
+    assignment.  Only the tiny filtered query side runs the relational
+    crossJoin+window to pick its probes.  The same function in pure SQL
+    is :func:`_ivf_topk_served_relational` (parity asserted in
+    tests/test_similarity.py)."""
     cmat, csq, cids = _load_centroids(centroids_df)
 
     e = emb.select(
@@ -391,7 +380,11 @@ def ivf_topk_served(emb: DataFrame, centroids_df: DataFrame, query_ids,
 def _ivf_topk_served_relational(emb: DataFrame, centroids_df: DataFrame,
                                 query_ids, k: int = 5,
                                 nprobe: int = 4) -> DataFrame:
-    """The oracle-shape formulation: see :func:`ivf_topk_served`."""
+    """:func:`ivf_topk_served` as a pure-SQL crossJoin+window, kept ONLY
+    as the engine-portable oracle shape (the ann_ivf_topk DuckDB oracle
+    in gates/similarity.py runs this SQL verbatim) and as the
+    small-scale verifier of the kernel.  It hash-exchanges and sorts
+    n*k rows — do not serve through it."""
     e = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),

@@ -3,7 +3,7 @@
 All pure DataFrame expressions (JVM-side, whole-stage codegen): token
 counting, quality scoring, language-ID heuristic, document
 fingerprinting.  Each has a matching DuckDB oracle in
-``__spark_entry__.oracle_sql`` — the tokenizer regex and the portable
+``gates/`` — the tokenizer regex and the portable
 md5-based hash are chosen so both engines compute bit-identical results.
 
 Reference parity note: origami has no text analytics, but its OCR
@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# shared with the DuckDB oracles — keep in sync with __spark_entry__
+# shared with the DuckDB oracles — keep in sync with gates._TOKENS
 TOKEN_SPLIT = "[^a-z0-9]+"
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "it")
 

@@ -1,9 +1,9 @@
-"""Shared canonicalization for the Spark-vs-DuckDB parity contract.
+"""The Spark-vs-DuckDB parity contract: canonicalization and compare.
 
 ONE implementation consumed by tests/test_oracle_parity.py and
 jobs/rehearse_oracles.py so the comparison semantics (float precision,
-NULL handling, the registered table list) cannot drift between the
-pytest mirror and the rehearsal job.
+NULL handling, the registered table list, the column/row-count/row-value
+checks) cannot drift between the pytest mirror and the rehearsal job.
 
 Precision note: canonicalization is PER COLUMN, not per row —
 ``DataFrame.iterrows`` materializes each row as a single-dtype Series,
@@ -45,3 +45,20 @@ def canon(df):
     columns = [[_cell(v) for v in df[c].tolist()] for c in cols]
     rows = sorted(zip(*columns)) if columns else []
     return cols, rows
+
+
+def compare(spark_df, duck_df) -> str | None:
+    """None when both results are equal under ``canon``; otherwise why
+    not: the sorted column names, the row count, or the first row that
+    differs."""
+    scols, srows = canon(spark_df)
+    dcols, drows = canon(duck_df)
+    if scols != dcols:
+        return f"columns {scols} != {dcols}"
+    if len(srows) != len(drows):
+        return f"rows {len(srows)} != {len(drows)}"
+    mism = [i for i, (a, b) in enumerate(zip(srows, drows)) if a != b]
+    if mism:
+        return (f"{len(mism)} mismatched rows, first: "
+                f"{srows[mism[0]]} != {drows[mism[0]]}")
+    return None

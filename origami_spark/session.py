@@ -20,10 +20,8 @@ ARROW_MAX_RECORDS = 512
 
 def get_spark(app: str = "origami_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sp = shuffle_partitions or int(
-        os.environ.get("ORIGAMI_SHUFFLE_PARTITIONS", str(max(cores, DEFAULT_SHUFFLE_PARTITIONS)))
-    )
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    sp = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
     builder = (
         SparkSession.builder.appName(app)
         .master(f"local[{cores}]")
@@ -36,17 +34,13 @@ def get_spark(app: str = "origami_spark", cores: int | None = None,
         # small corpora down to 1-4 tasks and serializes the relational
         # chain.  8m keeps local runs parallel; on a 100 TB cluster the
         # shuffles are far above either threshold so this is a no-op.
-        .config(
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-            os.environ.get("ORIGAMI_ADVISORY_PARTITION", "8m"),
-        )
+        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
         # allow shuffled-hash join where the per-partition build side
         # fits (guide §9/§3.1): SMJ pays a full sort of both sides that
         # a hash build avoids; AQE still rewrites to broadcast when a
         # side is small, and SMJ remains the planner's fallback when
         # the size conditions fail
-        .config("spark.sql.join.preferSortMergeJoin",
-                os.environ.get("ORIGAMI_PREFER_SMJ", "false"))
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS))
         .config("spark.sql.files.maxPartitionBytes", "128m")

@@ -1,9 +1,8 @@
-"""The committed spark-submit bundle must match the source tree.
-
-A stale dist/origami_spark.zip ships outdated extraction rules that
-silently diverge from the golden-tested source; this test fails until
-`python jobs/make_bundle.py` is re-run after any package change.
-No Spark needed — pure zip/file comparison.
+"""The spark-submit bundle built by jobs/make_bundle.py must match the
+source tree: every ``origami_spark/**/*.py`` file, byte-identical, and
+nothing else.  The bundle is built on demand (``python
+jobs/make_bundle.py``), never committed.  No Spark needed — pure
+zip/file comparison.
 """
 
 import os
@@ -11,9 +10,10 @@ import sys
 import zipfile
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-BUNDLE = os.path.join(ROOT, "dist", "origami_spark.zip")
 
 sys.path.insert(0, os.path.join(ROOT, "jobs"))
+
+import make_bundle  # noqa: E402
 
 
 def _source_files() -> dict:
@@ -30,20 +30,15 @@ def _source_files() -> dict:
     return out
 
 
-def test_bundle_matches_source_tree():
-    assert os.path.exists(BUNDLE), (
-        "dist/origami_spark.zip missing — run `python jobs/make_bundle.py`"
-    )
+def test_bundle_matches_source_tree(tmp_path):
+    bundle = make_bundle.main(str(tmp_path / "origami_spark.zip"))
     src = _source_files()
-    with zipfile.ZipFile(BUNDLE) as z:
+    with zipfile.ZipFile(bundle) as z:
         names = set(z.namelist())
         assert names == set(src), (
-            "bundle file set differs from source tree — rebuild via "
-            f"`python jobs/make_bundle.py`; only-in-zip={sorted(names - set(src))} "
+            "bundle file set differs from source tree: "
+            f"only-in-zip={sorted(names - set(src))} "
             f"only-in-src={sorted(set(src) - names)}"
         )
         for name, want in src.items():
-            assert z.read(name) == want, (
-                f"{name} is stale in dist/origami_spark.zip — rebuild via "
-                "`python jobs/make_bundle.py`"
-            )
+            assert z.read(name) == want, f"{name} differs in the bundle"

@@ -28,12 +28,18 @@ def test_minhash_kernel_matches_relational(spark):
     assert len(a) > 0
 
 
-def test_minhash_lsh_kernel_vs_relational_candidates(spark):
+def test_minhash_lsh_kernel_vs_relational_candidates(spark, monkeypatch):
+    """Banding over the relational signatures (the reference form, swapped
+    in for the kernel) yields the same candidate pairs."""
+    from origami_spark.operators import dedup
+
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     fast = {(r["doc_a"], r["doc_b"])
-            for r in minhash_lsh_candidates(docs, use_kernel=True).collect()}
+            for r in minhash_lsh_candidates(docs).collect()}
+    monkeypatch.setattr(dedup, "minhash_signatures_kernel",
+                        minhash_signatures)
     slow = {(r["doc_a"], r["doc_b"])
-            for r in minhash_lsh_candidates(docs, use_kernel=False).collect()}
+            for r in minhash_lsh_candidates(docs).collect()}
     assert fast == slow
 
 

@@ -1,21 +1,16 @@
 """Mimics the driver's correctness gate: run every queries() entry on
 Spark AND its oracle_sql() on DuckDB over the same parquet tables,
-compare row count + sorted column names + order-insensitive values.
+compare sorted column names + row count + order-insensitive values.
 
-Canonicalization is shared with jobs/rehearse_oracles.py via
+The compare is shared with jobs/rehearse_oracles.py via
 origami_spark.oracle_compare (one implementation, column-wise so
 BIGINTs never upcast through a row Series and lose >2^53 precision)."""
 
 import pytest
 
-from origami_spark.oracle_compare import canon as _canon
-from origami_spark.oracle_compare import duck_connect
+from origami_spark.oracle_compare import compare, duck_connect
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _duck(sql: str):
-    return duck_connect(SF_DIR).execute(sql).df()
 
 
 def _pairs():
@@ -31,15 +26,5 @@ def test_query_matches_oracle(spark, name, fn, sql):
     if sql is None:
         assert len(sdf) >= 0  # rows-only contract (non-SQL-expressible)
         return
-    ddf = _duck(sql)
-    scols, srows = _canon(sdf)
-    dcols, drows = _canon(ddf)
-    assert scols == dcols, f"{name}: columns {scols} != {dcols}"
-    assert len(srows) == len(drows), (
-        f"{name}: rows {len(srows)} != {len(drows)}"
-    )
-    mism = [i for i, (a, b) in enumerate(zip(srows, drows)) if a != b]
-    assert not mism, (
-        f"{name}: {len(mism)} mismatched rows, first: "
-        f"{srows[mism[0]]} != {drows[mism[0]]}"
-    )
+    diff = compare(sdf, duck_connect(SF_DIR).execute(sql).df())
+    assert diff is None, f"{name}: {diff}"

@@ -20,7 +20,7 @@ def plan_of(df) -> str:
 
 
 def test_q03_broadcasts_dimensions(spark):
-    plan = plan_of(E.q03_region_revenue(spark, SF))
+    plan = plan_of(E.queries()["q03_region_revenue"](spark, SF))
     assert "BroadcastHashJoin" in plan
     # the two big tables join however AQE prefers, but nation/region/
     # customer must never be shuffled: at most one sort-merge join
@@ -28,12 +28,12 @@ def test_q03_broadcasts_dimensions(spark):
 
 
 def test_q01_filter_pushed_to_scan(spark):
-    plan = plan_of(E.q01_pricing_summary(spark, SF))
+    plan = plan_of(E.queries()["q01_pricing_summary"](spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
 
 
 def test_q01_column_pruning(spark):
-    plan = plan_of(E.q01_pricing_summary(spark, SF))
+    plan = plan_of(E.queries()["q01_pricing_summary"](spark, SF))
     # scan must read only the 6 needed columns, not all 11
     scan_schema = plan.split("ReadSchema: ")[1].split("\n")[0]
     assert "l_comment" not in scan_schema
@@ -42,7 +42,7 @@ def test_q01_column_pruning(spark):
 
 
 def test_q04_uses_hash_anti_join(spark):
-    plan = plan_of(E.q04_anti_join(spark, SF))
+    plan = plan_of(E.queries()["q04_anti_join"](spark, SF))
     assert "LeftAnti" in plan
 
 
@@ -80,7 +80,7 @@ def test_extract_relational_chain_reuses_partitioning(spark, parquet_pages):
 
 
 def test_ann_topk_broadcasts_queries(spark):
-    plan = plan_of(E.ann_cosine_topk(spark, SF))
+    plan = plan_of(E.queries()["ann_cosine_topk"](spark, SF))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
@@ -127,7 +127,7 @@ def test_ivf_assignment_is_exchange_free(spark):
     assert "Sort" not in sub, sub
     assert "ArrowEvalPython" in sub
 
-    full = plan_of(E.ann_ivf_topk(spark, SF))
+    full = plan_of(E.queries()["ann_ivf_topk"](spark, SF))
     assert "hashpartitioning(vec_id" not in full, full
 
 
@@ -135,7 +135,7 @@ def test_dedup_substring_plan_shape(spark):
     """Winnowing dedup: the fingerprint relation is computed once and
     cached (both pair-join sides + the max_df branch read the cache),
     and nothing runs as per-row Python."""
-    plan = plan_of(E.dedup_substring(spark, SF))
+    plan = plan_of(E.queries()["dedup_substring"](spark, SF))
     assert "BatchEvalPython" not in plan
     assert "InMemoryTableScan" in plan
     assert "CartesianProduct" not in plan
@@ -157,7 +157,7 @@ def test_paragraph_dedup_two_exchanges(spark):
 def test_contamination_broadcasts_benchmarks(spark):
     """The benchmark gram side must broadcast — the training corpus
     never shuffles for the collision join."""
-    plan = plan_of(E.dedup_contamination(spark, SF))
+    plan = plan_of(E.queries()["dedup_contamination"](spark, SF))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan, plan
     assert "BatchEvalPython" not in plan
 

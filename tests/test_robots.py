@@ -200,7 +200,7 @@ def test_gate_plan_rules_broadcast_corpus_unshuffled(spark):
     and never re-joined."""
     import __spark_entry__ as E
 
-    df = E.robots_allowed(spark, "/root/testdata/sf0.001")
+    df = E.queries()["robots_allowed"](spark, E.SF_DEFAULT)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     # the only hash exchange folds the (small) RULE table per host;

@@ -114,6 +114,7 @@ def test_ivf_served_kernel_equals_relational(spark):
     centroids — distances fold left-to-right in both, rounding at 6
     decimals and the lowest-cluster tie-break match bitwise."""
     from origami_spark.operators.similarity import (
+        _ivf_topk_served_relational,
         ivf_topk_served,
         train_ivf_centroids,
     )
@@ -128,11 +129,11 @@ def test_ivf_served_kernel_equals_relational(spark):
     cdf = spark.createDataFrame(
         rows, "cluster int, centroid array<double>, c_sq double")
     kern = sorted(
-        map(tuple, ivf_topk_served(emb, cdf, QUERIES, k=K, nprobe=6,
-                                   engine="kernel").collect()))
+        map(tuple, ivf_topk_served(emb, cdf, QUERIES, k=K,
+                                   nprobe=6).collect()))
     rel = sorted(
-        map(tuple, ivf_topk_served(emb, cdf, QUERIES, k=K, nprobe=6,
-                                   engine="relational").collect()))
+        map(tuple, _ivf_topk_served_relational(emb, cdf, QUERIES, k=K,
+                                               nprobe=6).collect()))
     assert kern == rel
     assert len(kern) == len(QUERIES) * K
 
