@@ -46,7 +46,7 @@ RESCUE_MAX_LINK_SHARE = 0.2
 MEDIA_TAGS = frozenset("img picture figure video audio canvas".split())
 LIST_TAGS = frozenset(("ul", "ol", "menu", "dir"))
 TABLE_TAG = "table"
-_TERMINAL = tuple(".!?:;…")
+_TERMINAL = tuple(".!?:;…。！？")
 
 # a line that is only separator glyphs acts as an explicit T separator
 # (textual rule), like <hr> — SplitDetector analog
@@ -628,7 +628,9 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
         counters[b.label] = i + 1
         b.path = f"{b.label}/{i}"
 
-    # whitespace-gap adjacency flags (fragment-merge evidence)
+    # whitespace-gap adjacency flags (fragment-merge evidence); the
+    # spans index the transcoded page.data, not the caller's bytes
+    data = page.data
     for a, b in zip(blocks, blocks[1:]):
         if a.end <= b.start:
             a.ws_gap_next = bool(_WS_ONLY.fullmatch(data, a.end, b.start))

@@ -16,11 +16,14 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # pages never blows executor memory (the reference bounds worker RSS via
 # maxtasksperchild=4, processor.py:483 — same concern, Spark-native knob)
 ARROW_MAX_RECORDS = 512
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(app: str = "origami_spark", cores: int | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
+    # the cpus this process may run on (taskset), not the host's count
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS",
+                                        len(os.sched_getaffinity(0))))
     sp = shuffle_partitions or max(cores, DEFAULT_SHUFFLE_PARTITIONS)
     builder = (
         SparkSession.builder.appName(app)
@@ -52,6 +55,13 @@ def get_spark(app: str = "origami_spark", cores: int | None = None,
         # executor knows its core count; tell the local JVM the same.
         .config("spark.driver.extraJavaOptions",
                 f"-XX:ActiveProcessorCount={cores}")
+        # Python workers fork from worker.py, which evicts zip finders
+        # before each task's invalidate_caches() would make them re-read
+        # pyspark.zip and the spark-core jar (~250 ms per task).  The
+        # daemon is started by module name before any task ships code,
+        # so the root goes on the workers' path whatever the driver's cwd
+        .config("spark.python.daemon.module", "origami_spark.worker")
+        .config("spark.executorEnv.PYTHONPATH", _ROOT)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

@@ -57,3 +57,22 @@ def test_fixtures_spark_fused(spark):
            for r in extract_fused(spark, df, partitions=2).collect()}
     for case, _h, text in rows:
         assert got[case] == text, case
+
+
+UTF8_CASES = [c for c in CASES if not c.startswith("charset")]
+
+
+@pytest.mark.parametrize("case", UTF8_CASES)
+def test_utf8_bom_changes_nothing(case):
+    # the BOM is stripped by the transcode; spans index the transcoded
+    # bytes, so text, spans and fragment merges must not move
+    html, text, spans = load(case)
+    r = extract_document(b"\xef\xbb\xbf" + html)
+    assert r["text"] == text
+    assert r["spans"] == spans
+
+
+def test_latin1_page_extracts_like_its_utf8_twin():
+    html, text, _ = load("charset_latin1")
+    twin = html.decode("cp1252").replace("windows-1252", "utf-8").encode()
+    assert extract_document(twin)["text"] == text
