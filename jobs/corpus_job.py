@@ -43,347 +43,301 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
                  shuffle_seed: str = "s0") -> dict:
     """The corpus-build DAG; returns per-stage counts.
 
-    Cache cleanup is guaranteed (finally): a failure mid-build in a
-    long-lived driver must not leave this build's cached frames — or
-    the dedup module's tracked fingerprint caches — pinned in executor
-    storage memory."""
-    from origami_spark.operators import dedup as D
-
-    cached = []
-    try:
-        return _build_corpus(spark, pages, out_dir, min_tokens, near_dup,
-                             dedup_spans, dedup_paragraphs, host_cap,
-                             shard_mb, lm_max_bits, quality_ref,
-                             quality_min_llr, dsir_ref, dsir_top,
-                             dsir_gumbel, dsir_seed, block_domains,
-                             block_terms, robots_rules, shuffle_output,
-                             shuffle_seed, cached)
-    finally:
-        # best-effort: a dead session makes unpersist itself raise —
-        # that must neither mask the build's root-cause exception nor
-        # abort the remaining releases
-        for df in cached:
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        try:
-            D.release_caches()
-        except Exception:
-            pass
-
-
-def _build_corpus(spark, pages, out_dir, min_tokens, near_dup, dedup_spans,
-                  dedup_paragraphs, host_cap, shard_mb, lm_max_bits,
-                  quality_ref, quality_min_llr,
-                  dsir_ref, dsir_top, dsir_gumbel, dsir_seed,
-                  block_domains, block_terms, robots_rules,
-                  shuffle_output, shuffle_seed, cached) -> dict:
+    Every frame the build caches — its own stage boundaries and the
+    operators' intermediates — belongs to one cache_scope(), released
+    when the call returns or raises: a failure mid-build in a
+    long-lived driver must not leave them pinned in executor storage
+    memory."""
     from pyspark.sql import functions as F
 
     from origami_spark.operators import dedup as D
     from origami_spark.operators import text as T
     from origami_spark.operators.components import keep_one_per_component
     from origami_spark.pipeline import extract_fused
+    from origami_spark.session import cache, cache_scope
     from origami_spark.sinks import export_jsonl
 
-    counts = {"pages": pages.count()}
+    with cache_scope():
+        counts = {"pages": pages.count()}
 
-    if block_domains is not None or block_terms is not None:
-        # URL blocklist gate FIRST — no html bytes are read to reject a
-        # page, so it runs before extraction at full crawl width.  Only
-        # the BLOCKED url set (small by assumption, same as the
-        # operator's reason join) travels: left-anti against its
-        # broadcast keeps the corpus side exchange-free.
-        from origami_spark.operators.urlfilter import url_blocklist
+        if block_domains is not None or block_terms is not None:
+            # URL blocklist gate FIRST — no html bytes are read to reject a
+            # page, so it runs before extraction at full crawl width.  Only
+            # the BLOCKED url set (small by assumption, same as the
+            # operator's reason join) travels: left-anti against its
+            # broadcast keeps the corpus side exchange-free.
+            from origami_spark.operators.urlfilter import url_blocklist
 
-        empty = spark.createDataFrame([], "domain string")
-        lab = url_blocklist(
-            pages.select(F.col("url").alias("doc_id"), "url"),
-            block_domains if block_domains is not None else empty,
-            (block_terms if block_terms is not None
-             else empty.withColumnRenamed("domain", "term")))
-        # cache the (small) blocked set: it sits on the build side of
-        # the anti-join, and without the cache urlfilter's 3-scan
-        # labeling plan re-executes for the stage count AND again when
-        # extraction materializes the gated pages
-        blocked_urls = lab.filter("blocked").select(
-            F.col("doc_id").alias("url")).cache()
-        cached.append(blocked_urls)
-        pages = pages.join(F.broadcast(blocked_urls), "url", "left_anti")
-        counts["after_url_blocklist"] = pages.count()
+            empty = spark.createDataFrame([], "domain string")
+            lab = url_blocklist(
+                pages.select(F.col("url").alias("doc_id"), "url"),
+                block_domains if block_domains is not None else empty,
+                (block_terms if block_terms is not None
+                 else empty.withColumnRenamed("domain", "term")))
+            # cache the (small) blocked set: it sits on the build side of
+            # the anti-join, and without the cache urlfilter's 3-scan
+            # labeling plan re-executes for the stage count AND again when
+            # extraction materializes the gated pages
+            blocked_urls = lab.filter("blocked").select(
+                F.col("doc_id").alias("url")).transform(cache)
+            pages = pages.join(F.broadcast(blocked_urls), "url", "left_anti")
+            counts["after_url_blocklist"] = pages.count()
 
-    if robots_rules is not None:
-        # robots exclusion (RFC 9309) — url-grain like the blocklist,
-        # so it also runs before any html byte is read.  Only the url
-        # projection flows through the host-keyed rule join; the
-        # DISALLOWED url set (small by assumption — most pages are
-        # crawlable) comes back broadcast for a left-anti, so the page
-        # side with its html payloads never shuffles.
-        from origami_spark.operators.robots import robots_gate
+        if robots_rules is not None:
+            # robots exclusion (RFC 9309) — url-grain like the blocklist,
+            # so it also runs before any html byte is read.  Only the url
+            # projection flows through the host-keyed rule join; the
+            # DISALLOWED url set (small by assumption — most pages are
+            # crawlable) comes back broadcast for a left-anti, so the page
+            # side with its html payloads never shuffles.
+            from origami_spark.operators.robots import robots_gate
 
-        verdicts = robots_gate(pages.select("url"), robots_rules)
-        robots_blocked = verdicts.filter(~F.col("allowed")) \
-            .select("url").cache()
-        cached.append(robots_blocked)
-        pages = pages.join(F.broadcast(robots_blocked), "url", "left_anti")
-        counts["after_robots"] = pages.count()
+            verdicts = robots_gate(pages.select("url"), robots_rules)
+            robots_blocked = verdicts.filter(~F.col("allowed")) \
+                .select("url").transform(cache)
+            pages = pages.join(F.broadcast(robots_blocked), "url", "left_anti")
+            counts["after_robots"] = pages.count()
 
-    extracted = (
-        extract_fused(spark, pages)
-        .filter(F.col("text") != "")
-        .select("url", "text")
-        .cache()
-    )
-    counts["extracted"] = extracted.count()
+        extracted = (
+            extract_fused(spark, pages)
+            .filter(F.col("text") != "")
+            .select("url", "text")
+            .transform(cache)
+        )
+        counts["extracted"] = extracted.count()
 
-    # quality gate (same operators the driver queries verify)
-    docs = extracted.select(F.col("url").alias("doc_id"), "text")
-    q = T.quality_score(docs).select("doc_id", "n_tokens", "quality")
-    kept = (
-        docs.join(q, "doc_id")
-        .filter((F.col("quality") != "low") & (F.col("n_tokens") >= min_tokens))
-        .cache()
-    )
-    counts["after_quality"] = kept.count()
-
-    # every cached frame goes into the caller-owned `cached` list for
-    # the guaranteed finally-release (NB: `kept`/`uniq` are rebound by
-    # the optional stages below — track handles BEFORE any rebind, or
-    # the shadowed cache leaks in a long-lived driver)
-    cached += [extracted, kept]
-
-    if host_cap:
-        # single-domain dominance control (C4/ccnet recipe): keep at
-        # most host_cap pages per url host, deterministic url order
-        from origami_spark.operators.hosts import host_cap as _hc
-
+        # quality gate (same operators the driver queries verify)
+        docs = extracted.select(F.col("url").alias("doc_id"), "text")
+        q = T.quality_score(docs).select("doc_id", "n_tokens", "quality")
         kept = (
-            _hc(kept.withColumnRenamed("doc_id", "url"), k=host_cap)
-            .drop("host")
-            .withColumnRenamed("url", "doc_id")
-            .cache()
+            docs.join(q, "doc_id")
+            .filter((F.col("quality") != "low") & (F.col("n_tokens") >= min_tokens))
+            .transform(cache)
         )
-        cached.append(kept)
-        counts["after_host_cap"] = kept.count()
+        counts["after_quality"] = kept.count()
 
-    # exact dedup: keep the lexicographically-first url per content digest
-    keepers = D.exact_duplicates(kept, min_count=1).select(
-        F.col("keeper").alias("doc_id"))
-    uniq = kept.join(keepers, "doc_id").cache()
-    cached.append(uniq)
-    counts["after_exact_dedup"] = uniq.count()
+        if host_cap:
+            # single-domain dominance control (C4/ccnet recipe): keep at
+            # most host_cap pages per url host, deterministic url order
+            from origami_spark.operators.hosts import host_cap as _hc
 
-    if lm_max_bits:
-        # ccnet LM gate (operators/lm.py): an order-2 char model is
-        # estimated from the DEDUPED survivors (ccnet scores perplexity
-        # after dedup — estimating before would let duplicated
-        # boilerplate dominate the model and score itself "likely")
-        # and docs the corpus-own model finds too surprising drop
-        # (bits/char above the threshold — gibberish, wrong register,
-        # binary-ish text).  The drop is left-anti on the OVER-threshold
-        # set: a doc too short to score (< 3 chars, no lm_score row)
-        # carries no model opinion and passes through.  Self-estimation
-        # is the bootstrap form; pass a curated corpus' staged lm table
-        # for the calibrated form.
-        from origami_spark.operators.lm import char_trigram_lm, lm_score
+            kept = (
+                _hc(kept.withColumnRenamed("doc_id", "url"), k=host_cap)
+                .drop("host")
+                .withColumnRenamed("url", "doc_id")
+                .transform(cache)
+            )
+            counts["after_host_cap"] = kept.count()
 
-        lm = char_trigram_lm(uniq)
-        too_surprising = lm_score(uniq, lm).filter(
-            F.col("bits_per_char") > lm_max_bits).select("doc_id")
-        uniq = uniq.join(too_surprising, "doc_id", "left_anti").cache()
-        cached.append(uniq)
-        counts["after_lm_gate"] = uniq.count()
+        # exact dedup: keep the lexicographically-first url per content digest
+        keepers = D.exact_duplicates(kept, min_count=1).select(
+            F.col("keeper").alias("doc_id"))
+        uniq = kept.join(keepers, "doc_id").transform(cache)
+        counts["after_exact_dedup"] = uniq.count()
 
-    if quality_ref is not None:
-        # GPT-3-style reference classifier gate (operators/classifier):
-        # positives = the curated reference corpus, negatives = the
-        # crawl survivors themselves (the standard PU-learning
-        # approximation — reference-like crawl docs add label noise on
-        # the negative side, which only makes the gate conservative).
-        # Runs AFTER exact dedup for the same reason as the LM gate:
-        # duplicated boilerplate on the negative side would dominate
-        # the token counts.  Docs with no tokens carry no opinion and
-        # pass (nb_keep contract).
-        from origami_spark.operators.classifier import (nb_keep, nb_score,
-                                                        nb_train)
+        if lm_max_bits:
+            # ccnet LM gate (operators/lm.py): an order-2 char model is
+            # estimated from the DEDUPED survivors (ccnet scores perplexity
+            # after dedup — estimating before would let duplicated
+            # boilerplate dominate the model and score itself "likely")
+            # and docs the corpus-own model finds too surprising drop
+            # (bits/char above the threshold — gibberish, wrong register,
+            # binary-ish text).  The drop is left-anti on the OVER-threshold
+            # set: a doc too short to score (< 3 chars, no lm_score row)
+            # carries no model opinion and passes through.  Self-estimation
+            # is the bootstrap form; pass a curated corpus' staged lm table
+            # for the calibrated form.
+            from origami_spark.operators.lm import char_trigram_lm, lm_score
 
-        pos = quality_ref.select(F.lit(1).alias("_y"), F.col("text"))
-        neg = uniq.select(F.lit(0).alias("_y"), "text")
-        try:
-            model = nb_train(pos.unionByName(neg), "_y")
-        except ValueError as e:
-            # degenerate training set (empty survivors, or a reference
-            # parquet with no token evidence): a scheduled crawl
-            # refresh must land its (possibly empty) corpus, not crash
-            # — the skip is recorded, not silent
-            counts["classifier_skipped"] = str(e)
-        else:
-            uniq = nb_keep(
-                uniq, nb_score(uniq, model),
-                min_llr_per_token=quality_min_llr).cache()
-            cached.append(uniq)
-            counts["after_classifier"] = uniq.count()
+            lm = char_trigram_lm(uniq)
+            too_surprising = lm_score(uniq, lm).filter(
+                F.col("bits_per_char") > lm_max_bits).select("doc_id")
+            uniq = uniq.join(too_surprising, "doc_id", "left_anti") \
+                .transform(cache)
+            counts["after_lm_gate"] = uniq.count()
 
-    if near_dup:
-        # MinHash near-dup pruning over a 60-bit url-hash id (Arrow
-        # kernel signatures).  Candidates are VERIFIED (estimated
-        # jaccard >= 0.5 via signature agreement) before any drop —
-        # raw banding candidates carry false positives and would
-        # delete unrelated documents.  The drop itself is cluster
-        # keep-one (connected components, operators/components.py):
-        # with chained near-dups a~b~c, exactly one survivor per
-        # CLUSTER remains, where the former greedy any-pair rule
-        # could keep two transitive near-dups of each other
-        ids = uniq.select(
-            T.portable_hash60(F.col("doc_id")).alias("nid"), "doc_id", "text")
-        # max_bucket: the connected-component consumer only needs the
-        # duplicate GROUP connected, so hot buckets emit m-1 star pairs
-        # instead of m(m-1)/2 (the cap is exactly for this consumer —
-        # see minhash_lsh_candidates' docstring)
-        cand = D.minhash_lsh_candidates(
-            ids.select(F.col("nid").alias("doc_id"), "text"),
-            min_sig_agreement=0.5, max_bucket=128)
-        kept_ids = keep_one_per_component(ids, cand, id_col="nid")
-        uniq = kept_ids.select("doc_id", "text").cache()
-        cached.append(uniq)
-        counts["after_near_dup"] = uniq.count()
+        if quality_ref is not None:
+            # GPT-3-style reference classifier gate (operators/classifier):
+            # positives = the curated reference corpus, negatives = the
+            # crawl survivors themselves (the standard PU-learning
+            # approximation — reference-like crawl docs add label noise on
+            # the negative side, which only makes the gate conservative).
+            # Runs AFTER exact dedup for the same reason as the LM gate:
+            # duplicated boilerplate on the negative side would dominate
+            # the token counts.  Docs with no tokens carry no opinion and
+            # pass (nb_keep contract).
+            from origami_spark.operators.classifier import (nb_keep, nb_score,
+                                                            nb_train)
 
-    if dedup_spans:
-        # Lee et al. application: REMOVE duplicated passages (>= 64
-        # chars, any alignment) from all but the earliest copy.  Doc
-        # identity for "earliest" is the 60-bit url hash (deterministic);
-        # boilerplate fingerprints are df-capped like everywhere else.
-        ids = uniq.select(
-            T.portable_hash60(F.col("doc_id")).alias("nid"),
-            F.col("doc_id").alias("url_key"), "text")
-        # spans feeds both the removal and the summary count: cache it
-        # or the fingerprint self-join + extension kernel run twice
-        spans = D.duplicate_spans(
-            ids.select(F.col("nid").alias("doc_id"), "text"), max_df=50).cache()
-        cached.append(spans)
-        stripped = D.remove_duplicate_spans(
-            ids.select(F.col("nid").alias("doc_id"), "text"), spans)
-        uniq = (
-            ids.select("nid", "url_key")
-            .join(stripped.withColumnRenamed("doc_id", "nid"), "nid")
-            .select(F.col("url_key").alias("doc_id"), "text")
-            .cache()
+            pos = quality_ref.select(F.lit(1).alias("_y"), F.col("text"))
+            neg = uniq.select(F.lit(0).alias("_y"), "text")
+            try:
+                model = nb_train(pos.unionByName(neg), "_y")
+            except ValueError as e:
+                # degenerate training set (empty survivors, or a reference
+                # parquet with no token evidence): a scheduled crawl
+                # refresh must land its (possibly empty) corpus, not crash
+                # — the skip is recorded, not silent
+                counts["classifier_skipped"] = str(e)
+            else:
+                uniq = nb_keep(
+                    uniq, nb_score(uniq, model),
+                    min_llr_per_token=quality_min_llr).transform(cache)
+                counts["after_classifier"] = uniq.count()
+
+        if near_dup:
+            # MinHash near-dup pruning over a 60-bit url-hash id (Arrow
+            # kernel signatures).  Candidates are VERIFIED (estimated
+            # jaccard >= 0.5 via signature agreement) before any drop —
+            # raw banding candidates carry false positives and would
+            # delete unrelated documents.  The drop itself is cluster
+            # keep-one (connected components, operators/components.py):
+            # with chained near-dups a~b~c, exactly one survivor per
+            # CLUSTER remains, where the former greedy any-pair rule
+            # could keep two transitive near-dups of each other
+            ids = uniq.select(
+                T.portable_hash60(F.col("doc_id")).alias("nid"), "doc_id", "text")
+            # max_bucket: the connected-component consumer only needs the
+            # duplicate GROUP connected, so hot buckets emit m-1 star pairs
+            # instead of m(m-1)/2 (the cap is exactly for this consumer —
+            # see minhash_lsh_candidates' docstring)
+            cand = D.minhash_lsh_candidates(
+                ids.select(F.col("nid").alias("doc_id"), "text"),
+                min_sig_agreement=0.5, max_bucket=128)
+            kept_ids = keep_one_per_component(ids, cand, id_col="nid")
+            uniq = kept_ids.select("doc_id", "text").transform(cache)
+            counts["after_near_dup"] = uniq.count()
+
+        if dedup_spans:
+            # Lee et al. application: REMOVE duplicated passages (>= 64
+            # chars, any alignment) from all but the earliest copy.  Doc
+            # identity for "earliest" is the 60-bit url hash (deterministic);
+            # boilerplate fingerprints are df-capped like everywhere else.
+            ids = uniq.select(
+                T.portable_hash60(F.col("doc_id")).alias("nid"),
+                F.col("doc_id").alias("url_key"), "text")
+            # spans feeds both the removal and the summary count: cache it
+            # or the fingerprint self-join + extension kernel run twice
+            spans = D.duplicate_spans(
+                ids.select(F.col("nid").alias("doc_id"), "text"), max_df=50
+            ).transform(cache)
+            stripped = D.remove_duplicate_spans(
+                ids.select(F.col("nid").alias("doc_id"), "text"), spans)
+            uniq = (
+                ids.select("nid", "url_key")
+                .join(stripped.withColumnRenamed("doc_id", "nid"), "nid")
+                .select(F.col("url_key").alias("doc_id"), "text")
+                .transform(cache)
+            )
+            counts["span_deduped"] = spans.select("doc_id").distinct().count()
+
+        if dedup_paragraphs:
+            # ccnet-style corpus-wide paragraph dedup: any paragraph seen
+            # >= 2 times across the corpus survives only at its first
+            # (doc_id, position).  Afterwards every paragraph in the corpus
+            # is globally unique.  NB the survivors are rejoined with
+            # single newlines (paragraph-normalized output).
+            pd_out = D.paragraph_dedup(uniq.select("doc_id", "text"), min_df=2)
+            uniq = (
+                pd_out.filter(F.col("kept_text") != "")
+                .select("doc_id", F.col("kept_text").alias("text"))
+                .transform(cache)
+            )
+            counts["after_para_dedup"] = uniq.count()
+
+        if dsir_top or dsir_ref is not None:
+            # DSIR selection (operators/dsir.py, Xie et al. 2023): keep the
+            # dsir_top documents whose hashed-n-gram distribution looks most
+            # like the reference corpus (importance weight = target/raw
+            # likelihood ratio; raw = the survivors themselves, the paper's
+            # setup).  Runs LAST among the content stages so it scores the
+            # text that actually ships (span/paragraph surgery included).
+            # Unlike the classifier GATE this is a SELECTION: zero-token
+            # docs carry no weight evidence and cannot be selected.
+            # --dsir-gumbel switches hard top-k to the deterministic
+            # Gumbel-top-k draw (sampling without replacement ∝ w).
+            from origami_spark.operators.dsir import (dsir_sample, dsir_score,
+                                                      dsir_topk, dsir_train)
+
+            if dsir_ref is None or not dsir_top:
+                # both halves or neither: a --dsir-ref without --dsir-top
+                # must not silently ship the full unselected corpus (the
+                # classifier gate activates on the ref alone — same muscle
+                # memory), and --dsir-top without --dsir-ref has nothing to
+                # resemble
+                raise ValueError(
+                    "DSIR selection needs BOTH dsir_ref (the reference "
+                    "corpus to resemble) and dsir_top > 0 (the selection "
+                    f"size); got dsir_ref={'set' if dsir_ref is not None else None} "
+                    f"dsir_top={dsir_top}")
+            try:
+                model = dsir_train(dsir_ref, uniq)
+            except ValueError as e:
+                # degenerate corpus (no token evidence on a side): land the
+                # unselected corpus, record the skip — the classifier-gate
+                # convention
+                counts["dsir_skipped"] = str(e)
+            else:
+                scored = dsir_score(uniq, model)
+                sel = (dsir_sample(scored, dsir_top, seed=dsir_seed)
+                       if dsir_gumbel else dsir_topk(scored, dsir_top))
+                # left-semi: the selected set (<= dsir_top rows) is the
+                # small side; AQE broadcasts it at real scale
+                uniq = uniq.join(sel.select("doc_id"), "doc_id",
+                                 "left_semi").transform(cache)
+                counts["after_dsir"] = uniq.count()
+
+        # recompute the exported metrics over the text actually exported —
+        # span removal may have changed it (the original q fed the first
+        # gate) — and RE-APPLY the gate: a doc stripped below min_tokens or
+        # to quality 'low' must not ship.  uniq is narrowed to (doc_id,
+        # text) first: on the no-flags path it still carries kept's metric
+        # columns, which would make the re-join ambiguous.
+        if dedup_spans or dedup_paragraphs or near_dup:
+            # cut lineage before the export recompute: the stacked dedup
+            # stages compound into a plan tree whose AQE string rendering
+            # ALONE can exhaust a modest driver heap (observed in the
+            # everything-on integration test).  The survivors frame is
+            # small (doc_id + text), so the eager checkpoint is cheap; on
+            # a lossy cluster prefer a reliable checkpoint dir (the
+            # pagerank localCheckpoint note).
+            uniq = uniq.localCheckpoint(eager=True)
+        texts = uniq.select("doc_id", "text")
+        q_final = T.quality_score(texts).select("doc_id", "n_tokens", "quality")
+        final = (
+            texts.join(q_final, "doc_id")
+            .filter((F.col("quality") != "low")
+                    & (F.col("n_tokens") >= min_tokens))
+            .select(F.col("doc_id").alias("url"), "text", "n_tokens", "quality")
+            .transform(cache)
         )
-        cached.append(uniq)
-        counts["span_deduped"] = spans.select("doc_id").distinct().count()
+        counts["exported"] = final.count()
 
-    if dedup_paragraphs:
-        # ccnet-style corpus-wide paragraph dedup: any paragraph seen
-        # >= 2 times across the corpus survives only at its first
-        # (doc_id, position).  Afterwards every paragraph in the corpus
-        # is globally unique.  NB the survivors are rejoined with
-        # single newlines (paragraph-normalized output).
-        pd_out = D.paragraph_dedup(uniq.select("doc_id", "text"), min_df=2)
-        uniq = (
-            pd_out.filter(F.col("kept_text") != "")
-            .select("doc_id", F.col("kept_text").alias("text"))
-            .cache()
-        )
-        cached.append(uniq)
-        counts["after_para_dedup"] = uniq.count()
+        order_col = None
+        if shuffle_output:
+            # deterministic training order (operators/sampling.shuffle_order):
+            # every doc gets its reproducible global shuffle rank; the sink
+            # range-partitions on it to the EXACT shard count and sorts
+            # within partitions (export_jsonl order_col — a coalesce would
+            # group by locality on a real cluster and break contiguity).
+            # The joined frame is cached: the sink's sizing sample and the
+            # range partitioner's boundary sampling would otherwise each
+            # re-execute the rank join.
+            from origami_spark.operators.sampling import shuffle_order
 
-    if dsir_top or dsir_ref is not None:
-        # DSIR selection (operators/dsir.py, Xie et al. 2023): keep the
-        # dsir_top documents whose hashed-n-gram distribution looks most
-        # like the reference corpus (importance weight = target/raw
-        # likelihood ratio; raw = the survivors themselves, the paper's
-        # setup).  Runs LAST among the content stages so it scores the
-        # text that actually ships (span/paragraph surgery included).
-        # Unlike the classifier GATE this is a SELECTION: zero-token
-        # docs carry no weight evidence and cannot be selected.
-        # --dsir-gumbel switches hard top-k to the deterministic
-        # Gumbel-top-k draw (sampling without replacement ∝ w).
-        from origami_spark.operators.dsir import (dsir_sample, dsir_score,
-                                                  dsir_topk, dsir_train)
+            order = shuffle_order(
+                final.select(F.col("url").alias("doc_id")), seed=shuffle_seed,
+            ).withColumnRenamed("doc_id", "url")
+            final = final.join(order, "url").transform(cache)
+            order_col = "shuffle_pos"
 
-        if dsir_ref is None or not dsir_top:
-            # both halves or neither: a --dsir-ref without --dsir-top
-            # must not silently ship the full unselected corpus (the
-            # classifier gate activates on the ref alone — same muscle
-            # memory), and --dsir-top without --dsir-ref has nothing to
-            # resemble
-            raise ValueError(
-                "DSIR selection needs BOTH dsir_ref (the reference "
-                "corpus to resemble) and dsir_top > 0 (the selection "
-                f"size); got dsir_ref={'set' if dsir_ref is not None else None} "
-                f"dsir_top={dsir_top}")
-        try:
-            model = dsir_train(dsir_ref, uniq)
-        except ValueError as e:
-            # degenerate corpus (no token evidence on a side): land the
-            # unselected corpus, record the skip — the classifier-gate
-            # convention
-            counts["dsir_skipped"] = str(e)
-        else:
-            scored = dsir_score(uniq, model)
-            sel = (dsir_sample(scored, dsir_top, seed=dsir_seed)
-                   if dsir_gumbel else dsir_topk(scored, dsir_top))
-            # left-semi: the selected set (<= dsir_top rows) is the
-            # small side; AQE broadcasts it at real scale
-            uniq = uniq.join(sel.select("doc_id"), "doc_id",
-                             "left_semi").cache()
-            cached.append(uniq)
-            counts["after_dsir"] = uniq.count()
-
-    # recompute the exported metrics over the text actually exported —
-    # span removal may have changed it (the original q fed the first
-    # gate) — and RE-APPLY the gate: a doc stripped below min_tokens or
-    # to quality 'low' must not ship.  uniq is narrowed to (doc_id,
-    # text) first: on the no-flags path it still carries kept's metric
-    # columns, which would make the re-join ambiguous.
-    if dedup_spans or dedup_paragraphs or near_dup:
-        # cut lineage before the export recompute: the stacked dedup
-        # stages compound into a plan tree whose AQE string rendering
-        # ALONE can exhaust a modest driver heap (observed in the
-        # everything-on integration test).  The survivors frame is
-        # small (doc_id + text), so the eager checkpoint is cheap; on
-        # a lossy cluster prefer a reliable checkpoint dir (the
-        # pagerank localCheckpoint note).
-        uniq = uniq.localCheckpoint(eager=True)
-    texts = uniq.select("doc_id", "text")
-    q_final = T.quality_score(texts).select("doc_id", "n_tokens", "quality")
-    final = (
-        texts.join(q_final, "doc_id")
-        .filter((F.col("quality") != "low")
-                & (F.col("n_tokens") >= min_tokens))
-        .select(F.col("doc_id").alias("url"), "text", "n_tokens", "quality")
-        .cache()
-    )
-    cached.append(final)
-    counts["exported"] = final.count()
-
-    order_col = None
-    if shuffle_output:
-        # deterministic training order (operators/sampling.shuffle_order):
-        # every doc gets its reproducible global shuffle rank; the sink
-        # range-partitions on it to the EXACT shard count and sorts
-        # within partitions (export_jsonl order_col — a coalesce would
-        # group by locality on a real cluster and break contiguity).
-        # The joined frame is cached: the sink's sizing sample and the
-        # range partitioner's boundary sampling would otherwise each
-        # re-execute the rank join.
-        from origami_spark.operators.sampling import shuffle_order
-
-        order = shuffle_order(
-            final.select(F.col("url").alias("doc_id")), seed=shuffle_seed,
-        ).withColumnRenamed("doc_id", "url")
-        final = final.join(order, "url").cache()
-        cached.append(final)
-        order_col = "shuffle_pos"
-
-    # the exact row count is already paid for above — pass it through so
-    # the sink merges small shuffle partitions to the target shard count
-    # instead of leaving one file per partition
-    counts["shards"] = export_jsonl(final, out_dir, target_shard_mb=shard_mb,
-                                    total_rows=counts["exported"],
-                                    order_col=order_col)
-    return counts
+        # the exact row count is already paid for above — pass it through so
+        # the sink merges small shuffle partitions to the target shard count
+        # instead of leaving one file per partition
+        counts["shards"] = export_jsonl(final, out_dir, target_shard_mb=shard_mb,
+                                        total_rows=counts["exported"],
+                                        order_col=order_col)
+        return counts
 
 
 def main(argv=None):

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from .operators import layout as layout_op
 from .operators import order as order_op
+from .session import cache, cache_scope
 
 
 def explain_extraction(spark: SparkSession, pages: DataFrame,
@@ -31,12 +32,15 @@ def explain_extraction(spark: SparkSession, pages: DataFrame,
 
     Columns: url, seq, path, label, tag, span (start/end), text head,
     rule_outcome ('kept' | the rule that removed it | 'merged into X' |
-    'barrier'), rank (reading order, null unless kept).
+    'barrier'), rank (reading order, null unless kept).  The parsed
+    blocks are cached; materialize the result inside a ``cache_scope()``
+    to release them.
     """
     from .pipeline import parse_stage
 
     src = pages.filter(F.col("url") == url) if url is not None else pages
-    blocks = parse_stage(src, partitions=1 if url is not None else None).cache()
+    blocks = parse_stage(src, partitions=1 if url is not None else None) \
+        .transform(cache)
 
     classified = layout_op.classify(blocks)
     refined = layout_op.refine(blocks)
@@ -95,7 +99,8 @@ def explain_extraction_text(spark: SparkSession, pages: DataFrame,
     """The same explanation rendered as a psql-style table string."""
     from .html.render import render_table
 
-    rows = explain_extraction(spark, pages, url).collect()
+    with cache_scope():
+        rows = explain_extraction(spark, pages, url).collect()
     header = ["seq", "path", "label", "span", "rule_outcome", "rank", "text"]
     body = [
         [str(r["seq"]), r["path"], r["label"],

@@ -16,33 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cache
 from .text import portable_hash60, shingles_expr, tokens_col
-
-# Cached intermediates (signatures, shingles, fingerprints) registered
-# here so long-lived drivers can release executor memory: each operator
-# caches frames that feed 2+ downstream branches (both sides of a
-# self-join), which is a real plan-dedup win, but DataFrame caches are
-# held by Spark's CacheManager and are NOT freed on driver GC.  Callers
-# that run many dedup jobs in one driver (jobs/corpus_job.py) call
-# ``release_caches()`` after materializing their results.
-_CACHED: list = []
-
-
-def _tracked_cache(df: DataFrame) -> DataFrame:
-    out = df.cache()
-    _CACHED.append(out)
-    return out
-
-
-def release_caches() -> int:
-    """Unpersist every intermediate this module cached; returns count.
-    Safe to call any time after the returned DataFrames are materialized
-    (an unpersisted frame is still recomputable from lineage)."""
-    n = len(_CACHED)
-    while _CACHED:
-        _CACHED.pop().unpersist()
-    return n
-
 
 def content_digest(col) -> F.Column:
     """THE content-identity digest for exact dedup — batch
@@ -132,9 +107,9 @@ def incremental_exact(batch: DataFrame, index: DataFrame) -> DataFrame:
     per-digest min is resolved at read time, compaction is optional)
     yields the same decisions as a freshly grouped one; the aggregate
     is bounded by the batch's digest count."""
-    b = _tracked_cache(
+    b = cache(
         batch.select("doc_id", content_digest("text").alias("digest")))
-    bmin = _tracked_cache(
+    bmin = cache(
         b.groupBy("digest").agg(F.min("doc_id").alias("bkeep")))
     hits = (
         index.join(F.broadcast(bmin.select("digest")), "digest")
@@ -184,7 +159,7 @@ def ngram_jaccard_pairs(docs: DataFrame, n: int = 3,
     share nothing discriminative.  max_df=None keeps the exact
     semantics; at web scale pair this with minhash banding below as the
     pre-filter."""
-    sh = _tracked_cache(_shingles(docs, n))
+    sh = cache(_shingles(docs, n))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     joinable = sh
     if max_df is not None:
@@ -359,7 +334,7 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     None (default) keeps exact all-pairs semantics.  Residual skew
     below the cap is AQE's job — tests/test_skew.py plants a hot
     bucket and asserts the adaptive skew-join split actually fires."""
-    sigs = _tracked_cache(minhash_signatures_kernel(docs, n, k))
+    sigs = cache(minhash_signatures_kernel(docs, n, k))
     banded = _banded(sigs, k, bands)
     if max_bucket is not None:
         stats = banded.groupBy("band", "bucket").agg(
@@ -471,7 +446,7 @@ def incremental_candidates(new_docs: DataFrame, index: DataFrame,
     ``max_bucket`` to the BATCH side only (the star capping) — the
     shape for a pre-capped index, where read-time index capping would
     be wasted stats work (the streaming sink's configuration)."""
-    new_idx = _tracked_cache(
+    new_idx = cache(
         new_index if new_index is not None
         else signature_index(new_docs, n, k, bands))
     within_small, star = new_idx, None
@@ -567,7 +542,7 @@ def incremental_keep(new_docs: DataFrame, index: DataFrame,
     compaction's job, per the streaming contract)."""
     from .components import connected_components
 
-    cand = _tracked_cache(incremental_candidates(
+    cand = cache(incremental_candidates(
         new_docs, index, n, k, bands,
         min_sig_agreement=min_sig_agreement, new_index=new_index,
         max_bucket=max_bucket, cap_index=cap_index))
@@ -588,7 +563,7 @@ def incremental_keep(new_docs: DataFrame, index: DataFrame,
         .otherwise(_nonneg(F.col("doc_a"))).alias("doc_a"),
         _nonneg(F.col("doc_b")).alias("doc_b"),
     )
-    comp = _tracked_cache(connected_components(edges))
+    comp = cache(connected_components(edges))
     tainted = comp.filter(F.col("doc_id") < 0).select("component").distinct()
     batch_nodes = comp.filter(F.col("doc_id") >= 0)
     drop = (
@@ -714,7 +689,7 @@ def banded_hamming_pairs(hashed: DataFrame, id_col: str, hash_col: str,
     band) surviving the verify."""
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
-    sh = _tracked_cache(hashed.select(
+    sh = cache(hashed.select(
         F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")))
     banded = sh.select(
         "_id", "_h",
@@ -813,7 +788,7 @@ def substring_fingerprints(docs: DataFrame, window: int = 64,
         F.col("pos").cast("bigint").alias("pos"),
         F.substring("text", F.col("pos") + 1, F.lit(k)).alias("gram"),
     ).withColumn("h", portable_hash60(F.col("gram")))
-    grams = _tracked_cache(grams)  # feeds the window-min AND the join-back
+    grams = cache(grams)  # feeds the window-min AND the join-back
     win = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, w - 1)
     # valid winnowing windows are the full ones: start pos <= len - window
     selected = (
@@ -939,7 +914,7 @@ def substring_dup_pairs(docs: DataFrame, window: int = 64,
     Fingerprints come from the Arrow kernel, asserted bit-identical to
     the pure-relational ``substring_fingerprints`` (the oracle form) in
     tests/test_dedup.py."""
-    fp = _tracked_cache(substring_fingerprints_kernel(docs, window, k))
+    fp = cache(substring_fingerprints_kernel(docs, window, k))
     if max_df is not None:
         rare = (
             fp.groupBy("gram")
@@ -951,7 +926,7 @@ def substring_dup_pairs(docs: DataFrame, window: int = 64,
         # sides, and without this the rare-gram aggregate and the join
         # against it execute twice (the fp cache alone does not cover
         # the joined subtree)
-        fp = _tracked_cache(fp.join(rare, "gram"))
+        fp = cache(fp.join(rare, "gram"))
     return (
         fp.alias("a")
         .join(fp.alias("b"),
@@ -998,7 +973,7 @@ def embedding_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
     )
     # table t uses planes [t*planes, (t+1)*planes) of one coefficient
     # stream -> independent tables, still fully deterministic/portable
-    signed = _tracked_cache(
+    signed = cache(
         hyperplane_buckets(emb, planes, tables, dim).select(
             "vec_id", "buckets"))
     banded = signed.select(
@@ -1107,7 +1082,7 @@ def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
     # all_positions: a passage repeated WITHIN one doc must anchor at
     # every copy — min-pos fingerprints would leave later in-doc copies
     # unanchored and they would survive removal
-    fp = _tracked_cache(
+    fp = cache(
         substring_fingerprints_kernel(docs, window, k, all_positions=True,
                                       max_positions=max_positions))
     if max_df is not None:
@@ -1119,7 +1094,7 @@ def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
         )
         # cache the filtered relation: it feeds both self-join sides
         # (same rationale as substring_dup_pairs)
-        fp = _tracked_cache(fp.join(rare, "gram"))
+        fp = cache(fp.join(rare, "gram"))
     anchors = (
         fp.alias("a")
         .join(fp.alias("b"),

@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cache
 from .text import portable_hash60, shingles_expr, tokens_col
 
 __all__ = ["dsir_train", "dsir_score", "dsir_topk", "dsir_sample",
@@ -201,9 +202,7 @@ def _decomposed_topk(keyed: DataFrame, k: int, key_col: str,
     FIRST in the prefix window — inflating every real bin's offset —
     while DuckDB's serial rank puts NULLS LAST: the pair must encode
     one function)."""
-    from .dedup import _tracked_cache
-
-    t = _tracked_cache(
+    t = cache(
         keyed.filter(F.col(id_col).isNotNull()
                      & F.col(key_col).isNotNull())
         .withColumn(

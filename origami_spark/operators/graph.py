@@ -49,6 +49,8 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cache, cache_scope
+
 __all__ = ["event_edges", "html_link_edges", "degrees", "pagerank",
            "pagerank_base", "hits"]
 
@@ -368,67 +370,61 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
         raise ValueError("pagerank needs checkpoint_every >= 1")
     base = pagerank_base(scale, d_num, d_den)
 
-    # one edge-derivation pass: without this persist, each consumer
-    # below (out-weight agg, join, node-universe distinct) re-runs the
-    # full upstream edge derivation — for event/html graphs that is a
-    # corpus-wide window or regexp pass, paid 3x (guide §5 caching:
-    # reused AND expensive to recompute)
-    e = edges.select(F.col("src").cast("bigint"),
-                     F.col("dst").cast("bigint"),
-                     F.col("weight").cast("bigint")).persist()
-    # materializes the one edge-derivation pass AND sizes the
-    # iteration's shuffle width from the real edge count
-    n_edges = e.count()
-    spark = e.sparkSession
-    with _iteration_width(spark, n_edges) as width:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-        )
-        outw = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
-        # the big relation, partitioned by the join key ONCE and reused
-        # by every iteration (persist pins the output partitioning, so
-        # the per-iteration join re-shuffles only the small score
-        # relation)
-        ew = (
-            e.join(outw, "src")
-            .repartition(width, F.col("src"))
-            .persist()
-        )
-        nodes = nodes.persist()
+    with cache_scope():
+        # one edge-derivation pass: without this cache, each consumer
+        # below (out-weight agg, join, node-universe distinct) re-runs the
+        # full upstream edge derivation — for event/html graphs that is a
+        # corpus-wide window or regexp pass, paid 3x (guide §5 caching:
+        # reused AND expensive to recompute)
+        e = cache(edges.select(F.col("src").cast("bigint"),
+                               F.col("dst").cast("bigint"),
+                               F.col("weight").cast("bigint")))
+        # materializes the one edge-derivation pass AND sizes the
+        # iteration's shuffle width from the real edge count
+        n_edges = e.count()
+        spark = e.sparkSession
+        with _iteration_width(spark, n_edges) as width:
+            nodes = (
+                e.select(F.col("src").alias("node"))
+                .unionByName(e.select(F.col("dst").alias("node")))
+                .distinct()
+            )
+            outw = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
+            # the big relation, partitioned by the join key ONCE and
+            # reused by every iteration (the cache pins the output
+            # partitioning, so the per-iteration join re-shuffles only
+            # the small score relation)
+            ew = cache(e.join(outw, "src").repartition(width, F.col("src")))
+            nodes = cache(nodes)
 
-        scores = nodes.withColumn("score", F.lit(scale).cast("bigint"))
-        contrib_expr = F.expr(
-            f"(score * weight * {d_num}L) div (out_w * {d_den}L)")
-        for it in range(iters):
-            contribs = (
-                ew.join(scores.withColumnRenamed("node", "src"), "src")
-                .select(F.col("dst").alias("node"),
-                        contrib_expr.alias("contrib"))
-                .groupBy("node")
-                .agg(F.sum("contrib").alias("received"))
-            )
-            scores = nodes.join(contribs, "node", "left").select(
-                "node",
-                (F.lit(base).cast("bigint")
-                 + F.coalesce(F.col("received"), F.lit(0)).cast("bigint")
-                 ).alias("score"),
-            )
-            # Materialize every `checkpoint_every` rounds (and on the
-            # last) and cut lineage: the plan stays O(checkpoint_every)
-            # in K, and the persisted edge relation is actually hit
-            # instead of being re-derived inside one giant DAG.
-            # (localCheckpoint trades executor-loss recomputability for
-            # speed — swap for reliable checkpoint() on a lossy
-            # cluster.)
-            if (it + 1) % checkpoint_every == 0 or it + 1 == iters:
-                scores = scores.localCheckpoint(eager=True)
-    out = scores.select("node", F.col("score").cast("bigint").alias("score"))
-    ew.unpersist()
-    nodes.unpersist()
-    e.unpersist()
-    return out
+            scores = nodes.withColumn("score", F.lit(scale).cast("bigint"))
+            contrib_expr = F.expr(
+                f"(score * weight * {d_num}L) div (out_w * {d_den}L)")
+            for it in range(iters):
+                contribs = (
+                    ew.join(scores.withColumnRenamed("node", "src"), "src")
+                    .select(F.col("dst").alias("node"),
+                            contrib_expr.alias("contrib"))
+                    .groupBy("node")
+                    .agg(F.sum("contrib").alias("received"))
+                )
+                scores = nodes.join(contribs, "node", "left").select(
+                    "node",
+                    (F.lit(base).cast("bigint")
+                     + F.coalesce(F.col("received"), F.lit(0)).cast("bigint")
+                     ).alias("score"),
+                )
+                # Materialize every `checkpoint_every` rounds (and on the
+                # last) and cut lineage: the plan stays O(checkpoint_every)
+                # in K, and the persisted edge relation is actually hit
+                # instead of being re-derived inside one giant DAG.
+                # (localCheckpoint trades executor-loss recomputability for
+                # speed — swap for reliable checkpoint() on a lossy
+                # cluster.)
+                if (it + 1) % checkpoint_every == 0 or it + 1 == iters:
+                    scores = scores.localCheckpoint(eager=True)
+        return scores.select("node",
+                             F.col("score").cast("bigint").alias("score"))
 
 
 def hits(edges: DataFrame, iters: int = 4,
@@ -479,77 +475,73 @@ def hits(edges: DataFrame, iters: int = 4,
         raise ValueError("hits needs iters >= 1")
     if checkpoint_every < 1:
         raise ValueError("hits needs checkpoint_every >= 1")
-    # one edge-derivation pass shared by the node universe and both
-    # pre-partitioned edge relations (same rationale as pagerank);
-    # the count also sizes the iteration's shuffle width
-    e = edges.select(F.col("src").cast("bigint"),
-                     F.col("dst").cast("bigint"),
-                     F.col("weight").cast("bigint")).persist()
-    n_edges = e.count()
-    spark = e.sparkSession
-    with _iteration_width(spark, n_edges) as width:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .unionByName(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .persist()
-        )
-        e_src = e.repartition(width, F.col("src")).persist()
-        e_dst = e.repartition(width, F.col("dst")).persist()
+    with cache_scope():
+        # one edge-derivation pass shared by the node universe and both
+        # pre-partitioned edge relations (same rationale as pagerank);
+        # the count also sizes the iteration's shuffle width
+        e = cache(edges.select(F.col("src").cast("bigint"),
+                               F.col("dst").cast("bigint"),
+                               F.col("weight").cast("bigint")))
+        n_edges = e.count()
+        spark = e.sparkSession
+        with _iteration_width(spark, n_edges) as width:
+            nodes = cache(
+                e.select(F.col("src").alias("node"))
+                .unionByName(e.select(F.col("dst").alias("node")))
+                .distinct()
+            )
+            e_src = cache(e.repartition(width, F.col("src")))
+            e_dst = cache(e.repartition(width, F.col("dst")))
 
-        def norm(raw, col):
-            mx = raw.agg(F.max(col).alias("_mx"))
-            return (
-                raw.crossJoin(F.broadcast(mx))
-                .select("node",
-                        F.expr(f"({col} * {scale}L) div _mx").alias(col))
-            )
+            def norm(raw, col):
+                mx = raw.agg(F.max(col).alias("_mx"))
+                return (
+                    raw.crossJoin(F.broadcast(mx))
+                    .select("node",
+                            F.expr(f"({col} * {scale}L) div _mx").alias(col))
+                )
 
-        hub = nodes.withColumn("hub", F.lit(scale).cast("bigint"))
-        auth = None
-        for it in range(iters):
-            a_raw = (
-                e_src.join(hub.withColumnRenamed("node", "src"), "src")
-                .select(F.col("dst").alias("node"),
-                        (F.col("hub") * F.col("weight")).alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("authority"))
+            hub = nodes.withColumn("hub", F.lit(scale).cast("bigint"))
+            auth = None
+            for it in range(iters):
+                a_raw = (
+                    e_src.join(hub.withColumnRenamed("node", "src"), "src")
+                    .select(F.col("dst").alias("node"),
+                            (F.col("hub") * F.col("weight")).alias("c"))
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("authority"))
+                )
+                # only the hub half-step checkpoints: the auth relation
+                # feeds h_raw inside the same plan (its shuffle output is
+                # reused), so materializing it too just doubles the sync
+                # barriers — measured 16.1 s vs 7.7 s cold at sf0.01,
+                # values identical
+                auth = norm(a_raw, "authority")
+                h_raw = (
+                    e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
+                    .select(F.col("src").alias("node"),
+                            (F.col("authority") * F.col("weight")).alias("c"))
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("hub"))
+                )
+                hub = norm(h_raw, "hub")
+                if (it + 1) % checkpoint_every == 0 or it + 1 == iters:
+                    hub = hub.localCheckpoint(eager=True)
+            out = (
+                nodes.join(hub, "node", "left")
+                .join(auth, "node", "left")
+                .select(
+                    "node",
+                    F.coalesce("hub", F.lit(0)).cast("bigint").alias("hub"),
+                    F.coalesce("authority", F.lit(0)).cast("bigint")
+                    .alias("authority"),
+                )
             )
-            # only the hub half-step checkpoints: the auth relation
-            # feeds h_raw inside the same plan (its shuffle output is
-            # reused), so materializing it too just doubles the sync
-            # barriers — measured 16.1 s vs 7.7 s cold at sf0.01,
-            # values identical
-            auth = norm(a_raw, "authority")
-            h_raw = (
-                e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
-                .select(F.col("src").alias("node"),
-                        (F.col("authority") * F.col("weight")).alias("c"))
-                .groupBy("node")
-                .agg(F.sum("c").alias("hub"))
-            )
-            hub = norm(h_raw, "hub")
-            if (it + 1) % checkpoint_every == 0 or it + 1 == iters:
-                hub = hub.localCheckpoint(eager=True)
-        out = (
-            nodes.join(hub, "node", "left")
-            .join(auth, "node", "left")
-            .select(
-                "node",
-                F.coalesce("hub", F.lit(0)).cast("bigint").alias("hub"),
-                F.coalesce("authority", F.lit(0)).cast("bigint")
-                .alias("authority"),
-            )
-        )
-        # the final auth half-step and the node universe still
-        # reference the persisted relations; cut the result's lineage
-        # BEFORE unpersisting, or the caller's materialization
-        # re-derives the whole edge relation from scratch (measured: 2
-        # extra corpus passes at collect time).  |V| rows — the same
-        # materialization cadence as the per-iteration checkpoints.
-        out = out.localCheckpoint(eager=True)
-    e_src.unpersist()
-    e_dst.unpersist()
-    nodes.unpersist()
-    e.unpersist()
-    return out
+            # the final auth half-step and the node universe still
+            # reference the cached relations; cut the result's lineage
+            # BEFORE the scope releases them, or the caller's
+            # materialization re-derives the whole edge relation from
+            # scratch (measured: 2 extra corpus passes at collect time).
+            # |V| rows — the same materialization cadence as the
+            # per-iteration checkpoints.
+            return out.localCheckpoint(eager=True)

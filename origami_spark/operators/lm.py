@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import cache
 from .text import gram_positions
 
 __all__ = ["char_trigram_lm", "lm_score", "lm_buckets"]
@@ -162,9 +163,7 @@ def lm_buckets(scored: DataFrame, buckets: int = 3,
     oracle)."""
     from pyspark.sql import Window
 
-    from .dedup import _tracked_cache
-
-    b = _tracked_cache(scored.select(
+    b = cache(scored.select(
         id_col, "bits_per_char",
         F.floor(F.col("bits_per_char") * bins_per_bit).cast("int")
         .alias("_g"),

@@ -26,9 +26,12 @@ per doc.  Top-k is a window over docs that matched at least one term.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cache, cache_scope
 from .text import tokens_col
 
 __all__ = ["bm25_stats", "bm25_topk"]
@@ -50,42 +53,34 @@ def bm25_stats(docs: DataFrame, terms, text_col: str = "text",
     df = 0 (idf at its maximum).  Terms are DEDUPED after lowercasing
     — a duplicate stats row would double every matching token in
     bm25_topk's join and silently inflate tf.  The tokenized corpus is
-    cached LOCALLY for the two aggregates (corpus constants, per-term
-    df — one tokenization pass) and unpersisted before returning: a
-    registry-tracked cache would both leak in drivers that never call
-    release_caches and get plan-matched by bm25_topk's identical
-    projection, silently turning the benched query path into a
-    cache-serve.  Stage this table; the floats inside never recompute
-    downstream."""
+    cached for the two aggregates (corpus constants, per-term df — one
+    tokenization pass) in this function's own cache_scope(), released
+    before returning: a cache that outlived the call would get
+    plan-matched by bm25_topk's identical projection, silently turning
+    the benched query path into a cache-serve.  Stage this table; the
+    floats inside never recompute downstream."""
     terms = list(dict.fromkeys(t.lower() for t in terms))
     spark = docs.sparkSession
-    t = docs.select(F.col(id_col), tokens_col(text_col).alias("toks")).cache()
-    try:
-        return _bm25_stats_from(t, terms, spark, id_col)
-    finally:
-        t.unpersist()
-
-
-def _bm25_stats_from(t: DataFrame, terms, spark, id_col: str) -> DataFrame:
-    consts = t.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size("toks")).alias("total_tokens"),
-    ).collect()[0]
-    n_docs = int(consts["n_docs"])
-    total = int(consts["total_tokens"] or 0)
-    if not n_docs or not total:
-        raise ValueError("bm25_stats needs a non-empty tokenized corpus")
-    avgdl = total / n_docs
-    tdf = spark.createDataFrame([(x,) for x in terms], "term string")
-    df_rows = (
-        t.select(F.col(id_col), F.explode("toks").alias("term"))
-        .join(F.broadcast(tdf), "term")
-        .groupBy("term")
-        .agg(F.count_distinct(id_col).alias("df"))
-    )
-    import math
-
-    rows = {r["term"]: int(r["df"]) for r in df_rows.collect()}
+    with cache_scope():
+        t = cache(docs.select(F.col(id_col),
+                              tokens_col(text_col).alias("toks")))
+        consts = t.agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum(F.size("toks")).alias("total_tokens"),
+        ).collect()[0]
+        n_docs = int(consts["n_docs"])
+        total = int(consts["total_tokens"] or 0)
+        if not n_docs or not total:
+            raise ValueError("bm25_stats needs a non-empty tokenized corpus")
+        avgdl = total / n_docs
+        tdf = spark.createDataFrame([(x,) for x in terms], "term string")
+        df_rows = (
+            t.select(F.col(id_col), F.explode("toks").alias("term"))
+            .join(F.broadcast(tdf), "term")
+            .groupBy("term")
+            .agg(F.count_distinct(id_col).alias("df"))
+        )
+        rows = {r["term"]: int(r["df"]) for r in df_rows.collect()}
     out = []
     for term in terms:
         df = rows.get(term, 0)

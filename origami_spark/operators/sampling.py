@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import cache
 from .text import portable_hash60, tokens_col
 
 __all__ = ["hash_sample", "stratified_sample", "upsample_sources",
@@ -171,8 +172,6 @@ def token_budget(docs: DataFrame, budget_tokens: int, by: str = "source",
 
     Output: ``doc_id, <by>, n_tokens, cum_tokens`` for kept docs.
     """
-    from .dedup import _tracked_cache
-
     t = docs.select(
         id_col,
         by,
@@ -187,7 +186,7 @@ def token_budget(docs: DataFrame, budget_tokens: int, by: str = "source",
     # pair encodes one function.  The frame feeds both the group
     # aggregate and the prefix join — cache it or tokenization runs
     # twice per document.
-    t = _tracked_cache(t)
+    t = cache(t)
     gs = t.groupBy(by, "_g").agg(F.sum("n_tokens").alias("gsum"))
     wp = (
         Window.partitionBy(by)
@@ -260,8 +259,6 @@ def _global_cum(docs: DataFrame, text_col: str, seed: str,
     computed with NO single-partition window (256 contiguous hash
     ranges + a 256-row offset aggregate + parallel within-range
     windows)."""
-    from .dedup import _tracked_cache
-
     t = docs.select(
         id_col,
         F.size(tokens_col(text_col)).cast("bigint").alias("n_tokens"),
@@ -271,9 +268,9 @@ def _global_cum(docs: DataFrame, text_col: str, seed: str,
     # NULL ids excluded for the same reason as token_budget (a NULL
     # group would land in every real group's prefix via NULLS FIRST).
     # The frame feeds BOTH the group aggregate and the window join —
-    # cache it (dedup's tracked registry; release_caches() frees it)
-    # or tokenization+hashing runs twice per document
-    t = _tracked_cache(t)
+    # cache it (the caller's cache_scope() releases it) or
+    # tokenization+hashing runs twice per document
+    t = cache(t)
     gs = t.groupBy("_g").agg(F.sum("n_tokens").alias("gsum"))
     wp = (
         Window.orderBy("_g")
@@ -346,14 +343,12 @@ def shuffle_order(docs: DataFrame, seed: str = "s0",
     ``sortWithinPartitions`` — a distributed total order, no serial
     sort.  Rows with NULL ids drop (no deterministic position exists).
     Returns (``id_col``, shuffle_pos bigint)."""
-    from .dedup import _tracked_cache
-
     t = docs.select(id_col, _hash_order(id_col, seed).alias("_h")) \
         .filter(F.col("_h").isNotNull()) \
         .withColumn("_g",
                     F.floor(F.col("_h") / ((1 << 60) // groups))
                     .cast("int"))
-    t = _tracked_cache(t)
+    t = cache(t)
     gs = t.groupBy("_g").agg(F.count(F.lit(1)).alias("gn"))
     wp = (
         Window.orderBy("_g")
@@ -388,8 +383,6 @@ def interleave_sources(docs: DataFrame, weights: dict, by: str = "source",
     IEEE in both engines (bigint / double literal), so the oracle
     reproduces emit_key bit-identically.  Returns (``id_col``, ``by``,
     src_pos bigint, emit_key double)."""
-    from .dedup import _tracked_cache
-
     wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
     t = docs.select(
         id_col, by,
@@ -399,7 +392,7 @@ def interleave_sources(docs: DataFrame, weights: dict, by: str = "source",
         .withColumn("_g",
                     F.floor(F.col("_h") / ((1 << 60) // groups))
                     .cast("int"))
-    t = _tracked_cache(t)
+    t = cache(t)
     gs = t.groupBy(by, "_g").agg(F.count(F.lit(1)).alias("gn"))
     wp = (
         Window.partitionBy(by).orderBy("_g")

@@ -1,4 +1,5 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory with scale-oriented defaults, and the scoped
+``cache`` every cached intermediate goes through.
 
 Tuned for the pipeline's shape: wide binary payloads through Arrow
 kernels + relational glue.  On a real cluster the same settings apply;
@@ -8,8 +9,10 @@ only ``master`` changes (spark-submit provides it).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 # html payloads can be MBs; bound Arrow batch size so one batch of large
@@ -17,6 +20,45 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # maxtasksperchild=4, processor.py:483 — same concern, Spark-native knob)
 ARROW_MAX_RECORDS = 512
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# the frames of this thread's innermost open cache_scope() (None: none
+# open); a ContextVar, so no thread sees or releases another's frames
+_SCOPE: ContextVar[list | None] = ContextVar("cache_scope", default=None)
+
+
+def cache(df: DataFrame) -> DataFrame:
+    """``df.cache()``, owned by the innermost open :func:`cache_scope`
+    of the current thread; with no scope open the frame stays cached
+    for the session.  Shaped for ``df.transform(cache)``."""
+    out = df.cache()
+    frames = _SCOPE.get()
+    if frames is not None:
+        frames.append(out)
+    return out
+
+
+@contextmanager
+def cache_scope():
+    """Unpersist every frame :func:`cache` registered inside the block
+    when it exits, normally or by an exception — Spark's CacheManager
+    holds a cached frame until it is unpersisted, not until the driver
+    drops it.  Scopes nest: an inner scope releases only its own
+    frames.  A lazy frame that leaves the block stays correct but
+    recomputes from lineage, so materialize it inside (collect, write,
+    eager ``localCheckpoint``) when that matters."""
+    frames: list = []
+    token = _SCOPE.set(frames)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        for df in frames:
+            # best effort: a dead session makes unpersist itself raise —
+            # that must neither mask the block's exception nor skip the
+            # remaining releases
+            try:
+                df.unpersist()
+            except Exception:
+                pass
 
 
 def get_spark(app: str = "origami_spark", cores: int | None = None,

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import extract_fused
+from ..session import cache, cache_scope
 from ..sources.corpus import PAGES_SCHEMA
 from .ingest import start_stream_sink, stream_exact_dedup
 
@@ -118,15 +119,17 @@ def stream_corpus(
         # extract_fused emits (url, text, spans); carry warc_ts along
         # from the batch for the export surface.  Cache: `gated` joins
         # two frames derived from `extracted`, and without the cache
-        # the parse kernel — the dominant cost — would run twice
-        extracted = (
-            extract_fused(spark, one)
-            .filter(F.col("text") != "")
-            .join(one.select("url", "warc_ts"), "url")
-            .select("url", "text", "warc_ts")
-            .cache()
-        )
-        try:
+        # the parse kernel — the dominant cost — would run twice.  The
+        # scope is this micro-batch's: it runs on the foreachBatch
+        # thread and releases only what this batch cached
+        with cache_scope():
+            extracted = (
+                extract_fused(spark, one)
+                .filter(F.col("text") != "")
+                .join(one.select("url", "warc_ts"), "url")
+                .select("url", "text", "warc_ts")
+                .transform(cache)
+            )
             docs = extracted.select(F.col("url").alias("doc_id"), "text")
             q = quality_score(docs).select("doc_id", "n_tokens", "quality")
             gated = (
@@ -141,11 +144,6 @@ def stream_corpus(
                     min_sig_agreement, near_dup_max_bucket)
             gated.write.mode("overwrite").parquet(
                 f"{out_dir}/batch_id={batch_id}")
-        finally:
-            extracted.unpersist()
-            from ..operators.dedup import release_caches
-
-            release_caches()
 
     # the dedup must run INSIDE the streaming plan (it is the stateful
     # part); extraction/gating run per micro-batch in the sink so the
@@ -215,28 +213,28 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
 
     ids = gated.select(
         portable_hash60(F.col("url")).alias("doc_id"), "url", "text")
-    # three consumers (touched-bucket broadcast, the keep decision, the
-    # index append) — sign the batch once
-    new_idx = signature_index(ids.select("doc_id", "text")).cache()
-    touched = new_idx.select("band", "bucket").distinct()
     from pyspark.errors import AnalysisException
 
-    try:
-        corpus_idx = (
-            spark.read.schema(_INDEX_SCHEMA).parquet(index_dir)
-            .filter(F.col("batch_id") != batch_id)
-            .join(F.broadcast(touched), ["band", "bucket"], "semi")
-            .select("doc_id", "band", "bucket", "sig")
-            .localCheckpoint(eager=True)
-        )
-    except AnalysisException:   # first batch: no index dir yet
-        corpus_idx = spark.createDataFrame([], _INDEX_SCHEMA)
-    surv = incremental_keep(ids, corpus_idx, id_col="doc_id",
-                            min_sig_agreement=min_sig_agreement,
-                            new_index=new_idx,
-                            max_bucket=max_bucket,
-                            cap_index=False).cache()
-    try:
+    with cache_scope():
+        # three consumers (touched-bucket broadcast, the keep decision,
+        # the index append) — sign the batch once
+        new_idx = cache(signature_index(ids.select("doc_id", "text")))
+        touched = new_idx.select("band", "bucket").distinct()
+        try:
+            corpus_idx = (
+                spark.read.schema(_INDEX_SCHEMA).parquet(index_dir)
+                .filter(F.col("batch_id") != batch_id)
+                .join(F.broadcast(touched), ["band", "bucket"], "semi")
+                .select("doc_id", "band", "bucket", "sig")
+                .localCheckpoint(eager=True)
+            )
+        except AnalysisException:   # first batch: no index dir yet
+            corpus_idx = spark.createDataFrame([], _INDEX_SCHEMA)
+        surv = cache(incremental_keep(ids, corpus_idx, id_col="doc_id",
+                                      min_sig_agreement=min_sig_agreement,
+                                      new_index=new_idx,
+                                      max_bucket=max_bucket,
+                                      cap_index=False))
         surv_idx = new_idx.join(surv.select("doc_id"), "doc_id")
         if max_bucket is not None:
             from pyspark.sql import Window
@@ -257,13 +255,10 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
             )
         surv_idx.write.mode("overwrite").parquet(
             f"{index_dir}/batch_id={batch_id}")
+        # eager: materialize the kept rows while surv's cache is live —
+        # the caller writes after this scope has released it
         return gated.join(surv.select("url"), "url", "semi") \
             .localCheckpoint(eager=True)
-        # eager: materialize the kept rows while surv's cache is live —
-        # the caller writes AFTER release_caches() would drop it
-    finally:
-        surv.unpersist()
-        new_idx.unpersist()
 
 
 def compact_corpus(spark: SparkSession, out_dir: str,

@@ -2,8 +2,9 @@
 JSONL shards, with constructed duplicates proving each stage acts."""
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/jobs")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "jobs"))
 
 from corpus_job import build_corpus  # noqa: E402
 
@@ -45,7 +46,6 @@ def test_corpus_job_dedup_spans(spark, tmp_path):
     but one copy, and exported metrics reflect the stripped text."""
     import pyspark.sql.functions as F
 
-    from jobs.corpus_job import build_corpus
     from origami_spark.sources.corpus import pages_df
 
     pages = pages_df(spark, 30, num_partitions=2)
@@ -75,7 +75,6 @@ def test_corpus_job_default_path(spark, tmp_path):
     """The no-flags path must run clean (regression: the exported-metrics
     recompute made the q join ambiguous when uniq still carried kept's
     metric columns)."""
-    from jobs.corpus_job import build_corpus
     from origami_spark.sources.corpus import pages_df
 
     out = str(tmp_path / "plain")
@@ -92,7 +91,6 @@ def test_corpus_job_gate_reapplied_after_strip(spark, tmp_path):
     token gate and must NOT be exported."""
     import pyspark.sql.functions as F
 
-    from jobs.corpus_job import build_corpus
     from origami_spark.sources.corpus import pages_df
 
     pages = pages_df(spark, 20, num_partitions=1)
@@ -513,3 +511,37 @@ def test_corpus_job_full_chain(spark, tmp_path):
     # ordered export: every shuffle rank exactly once
     ranks = sorted(r["shuffle_pos"] for r in back.collect())
     assert ranks == list(range(1, counts["exported"] + 1))
+
+
+def test_build_corpus_releases_every_cache(spark, tmp_path):
+    """Every frame cached during a build — its stage boundaries and the
+    dedup operators' intermediates — is unpersisted when the build
+    returns, and when it raises mid-way (a --dsir-ref without
+    --dsir-top fails after extraction, quality and exact dedup have
+    cached)."""
+    from unittest.mock import patch
+
+    import pytest
+    from pyspark import StorageLevel
+
+    from origami_spark.sources.corpus import pages_df
+
+    pages = pages_df(spark, 20, num_partitions=2)
+    frame_cls = type(pages)  # the session's concrete DataFrame class
+    real_cache = frame_cls.cache
+    cached = []
+
+    def spy(df):
+        cached.append(real_cache(df))
+        return cached[-1]
+
+    with patch.object(frame_cls, "cache", spy):
+        build_corpus(spark, pages, str(tmp_path / "ok"), min_tokens=5,
+                     near_dup=True)
+        n_ok = len(cached)
+        with pytest.raises(ValueError, match="dsir_top"):
+            build_corpus(spark, pages, str(tmp_path / "bad"), min_tokens=5,
+                         dsir_ref=pages.select("text"))
+    assert n_ok >= 5 and len(cached) - n_ok >= 3, (n_ok, len(cached))
+    assert [df.storageLevel for df in cached] == \
+        [StorageLevel.NONE] * len(cached)

@@ -9,9 +9,9 @@ from origami_spark.operators.dedup import (
     incremental_candidates,
     incremental_keep,
     minhash_lsh_candidates,
-    release_caches,
     signature_index,
 )
+from origami_spark.session import cache_scope
 
 _X = ("the quick brown fox jumps over the lazy dog while the rain "
       "in spain falls mainly on the plain and the cat sat on the mat")
@@ -23,8 +23,8 @@ def _docs(spark, rows):
 
 @pytest.fixture(autouse=True)
 def _release():
-    yield
-    release_caches()
+    with cache_scope():
+        yield
 
 
 def _corpus(spark):

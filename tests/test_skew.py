@@ -60,18 +60,17 @@ def test_minhash_hot_bucket_star_cap_bounds_pairs(spark):
     emits the star (m-1 edges) instead — the duplicate GROUP stays
     connected (same connected components as the exact form) while the
     pair count collapses from quadratic to linear."""
-    from origami_spark.operators.dedup import minhash_lsh_candidates, release_caches
+    from origami_spark.operators.dedup import minhash_lsh_candidates
+    from origami_spark.session import cache_scope
 
     m = 120
     rows = [(i, "boilerplate cookie banner text repeated verbatim") for i in range(m)]
     rows += [(1000 + i, f"unique document number {i} with its own words {i*7}")
              for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    try:
+    with cache_scope():
         capped = minhash_lsh_candidates(docs, max_bucket=50).collect()
         exact = minhash_lsh_candidates(docs).collect()
-    finally:
-        release_caches()
     hot = [(r["doc_a"], r["doc_b"]) for r in capped
            if r["doc_a"] < m and r["doc_b"] < m]
     assert len(hot) == m - 1, len(hot)          # star, not quadratic
@@ -86,7 +85,8 @@ def test_aqe_skew_split_fires_on_hot_band_bucket(spark):
     7): plant one mega bucket, lower the AQE skew thresholds to test
     scale, force the sort-merge path, and assert the executed adaptive
     plan actually split the skewed partition (skew=true on the join)."""
-    from origami_spark.operators.dedup import minhash_lsh_candidates, release_caches
+    from origami_spark.operators.dedup import minhash_lsh_candidates
+    from origami_spark.session import cache_scope
 
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -109,13 +109,13 @@ def test_aqe_skew_split_fires_on_hot_band_bucket(spark):
         # full-pipeline aggregation and read ITS plan (a limit() would
         # short-circuit the shuffle; a count() on `cand` would execute
         # a different QueryExecution)
-        agg = minhash_lsh_candidates(docs, max_bucket=None).groupBy().count()
-        assert agg.collect()[0][0] == 3000 * 2999 // 2
-        plan = agg._jdf.queryExecution().executedPlan().toString()
+        with cache_scope():
+            agg = minhash_lsh_candidates(docs, max_bucket=None).groupBy().count()
+            assert agg.collect()[0][0] == 3000 * 2999 // 2
+            plan = agg._jdf.queryExecution().executedPlan().toString()
         assert "isFinalPlan=true" in plan
         assert "SortMergeJoin(skew=true)" in plan, plan[:4000]
     finally:
-        release_caches()
         for k, v in saved.items():
             if v is None:
                 spark.conf.unset(k)
