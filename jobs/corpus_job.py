@@ -43,22 +43,31 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
                  shuffle_seed: str = "s0") -> dict:
     """The corpus-build DAG; returns per-stage counts.
 
-    Every frame the build caches — its own stage boundaries and the
-    operators' intermediates — belongs to one cache_scope(), released
-    when the call returns or raises: a failure mid-build in a
-    long-lived driver must not leave them pinned in executor storage
-    memory."""
+    Each stage boundary is cached, counted (the stage's heavy job) and
+    checkpointed, so every later action plans one stage instead of the
+    whole lineage back to the archives.  Every frame the build caches
+    or checkpoints — its stage boundaries and the operators'
+    intermediates — belongs to one cache_scope(), released when the
+    call returns or raises: a failure mid-build in a long-lived driver
+    must not leave them pinned in executor storage memory."""
     from pyspark.sql import functions as F
 
     from origami_spark.operators import dedup as D
     from origami_spark.operators import text as T
     from origami_spark.operators.components import keep_one_per_component
     from origami_spark.pipeline import extract_fused
-    from origami_spark.session import cache, cache_scope
+    from origami_spark.session import cache, cache_scope, checkpoint
     from origami_spark.sinks import export_jsonl
 
+    counts = {}
+
+    def stage(key, df):
+        df = cache(df)
+        counts[key] = df.count()
+        return checkpoint(df)
+
     with cache_scope():
-        counts = {"pages": pages.count()}
+        counts["pages"] = pages.count()
 
         if block_domains is not None or block_terms is not None:
             # URL blocklist gate FIRST — no html bytes are read to reject a
@@ -98,42 +107,30 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
             pages = pages.join(F.broadcast(robots_blocked), "url", "left_anti")
             counts["after_robots"] = pages.count()
 
-        extracted = (
-            extract_fused(spark, pages)
-            .filter(F.col("text") != "")
-            .select("url", "text")
-            .transform(cache)
-        )
-        counts["extracted"] = extracted.count()
+        extracted = stage("extracted", extract_fused(spark, pages)
+                          .filter(F.col("text") != "")
+                          .select("url", "text"))
 
         # quality gate (same operators the driver queries verify)
         docs = extracted.select(F.col("url").alias("doc_id"), "text")
         q = T.quality_score(docs).select("doc_id", "n_tokens", "quality")
-        kept = (
-            docs.join(q, "doc_id")
-            .filter((F.col("quality") != "low") & (F.col("n_tokens") >= min_tokens))
-            .transform(cache)
-        )
-        counts["after_quality"] = kept.count()
+        kept = stage("after_quality", docs.join(q, "doc_id").filter(
+            (F.col("quality") != "low") & (F.col("n_tokens") >= min_tokens)))
 
         if host_cap:
             # single-domain dominance control (C4/ccnet recipe): keep at
             # most host_cap pages per url host, deterministic url order
             from origami_spark.operators.hosts import host_cap as _hc
 
-            kept = (
-                _hc(kept.withColumnRenamed("doc_id", "url"), k=host_cap)
-                .drop("host")
-                .withColumnRenamed("url", "doc_id")
-                .transform(cache)
-            )
-            counts["after_host_cap"] = kept.count()
+            kept = stage("after_host_cap",
+                         _hc(kept.withColumnRenamed("doc_id", "url"), k=host_cap)
+                         .drop("host")
+                         .withColumnRenamed("url", "doc_id"))
 
         # exact dedup: keep the lexicographically-first url per content digest
         keepers = D.exact_duplicates(kept, min_count=1).select(
             F.col("keeper").alias("doc_id"))
-        uniq = kept.join(keepers, "doc_id").transform(cache)
-        counts["after_exact_dedup"] = uniq.count()
+        uniq = stage("after_exact_dedup", kept.join(keepers, "doc_id"))
 
         if lm_max_bits:
             # ccnet LM gate (operators/lm.py): an order-2 char model is
@@ -152,9 +149,8 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
             lm = char_trigram_lm(uniq)
             too_surprising = lm_score(uniq, lm).filter(
                 F.col("bits_per_char") > lm_max_bits).select("doc_id")
-            uniq = uniq.join(too_surprising, "doc_id", "left_anti") \
-                .transform(cache)
-            counts["after_lm_gate"] = uniq.count()
+            uniq = stage("after_lm_gate",
+                         uniq.join(too_surprising, "doc_id", "left_anti"))
 
         if quality_ref is not None:
             # GPT-3-style reference classifier gate (operators/classifier):
@@ -180,10 +176,9 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
                 # — the skip is recorded, not silent
                 counts["classifier_skipped"] = str(e)
             else:
-                uniq = nb_keep(
+                uniq = stage("after_classifier", nb_keep(
                     uniq, nb_score(uniq, model),
-                    min_llr_per_token=quality_min_llr).transform(cache)
-                counts["after_classifier"] = uniq.count()
+                    min_llr_per_token=quality_min_llr))
 
         if near_dup:
             # MinHash near-dup pruning over a 60-bit url-hash id (Arrow
@@ -205,8 +200,7 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
                 ids.select(F.col("nid").alias("doc_id"), "text"),
                 min_sig_agreement=0.5, max_bucket=128)
             kept_ids = keep_one_per_component(ids, cand, id_col="nid")
-            uniq = kept_ids.select("doc_id", "text").transform(cache)
-            counts["after_near_dup"] = uniq.count()
+            uniq = stage("after_near_dup", kept_ids.select("doc_id", "text"))
 
         if dedup_spans:
             # Lee et al. application: REMOVE duplicated passages (>= 64
@@ -238,12 +232,9 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
             # is globally unique.  NB the survivors are rejoined with
             # single newlines (paragraph-normalized output).
             pd_out = D.paragraph_dedup(uniq.select("doc_id", "text"), min_df=2)
-            uniq = (
-                pd_out.filter(F.col("kept_text") != "")
-                .select("doc_id", F.col("kept_text").alias("text"))
-                .transform(cache)
-            )
-            counts["after_para_dedup"] = uniq.count()
+            uniq = stage("after_para_dedup",
+                         pd_out.filter(F.col("kept_text") != "")
+                         .select("doc_id", F.col("kept_text").alias("text")))
 
         if dsir_top or dsir_ref is not None:
             # DSIR selection (operators/dsir.py, Xie et al. 2023): keep the
@@ -283,9 +274,8 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
                        if dsir_gumbel else dsir_topk(scored, dsir_top))
                 # left-semi: the selected set (<= dsir_top rows) is the
                 # small side; AQE broadcasts it at real scale
-                uniq = uniq.join(sel.select("doc_id"), "doc_id",
-                                 "left_semi").transform(cache)
-                counts["after_dsir"] = uniq.count()
+                uniq = stage("after_dsir", uniq.join(sel.select("doc_id"),
+                                                     "doc_id", "left_semi"))
 
         # recompute the exported metrics over the text actually exported —
         # span removal may have changed it (the original q fed the first
@@ -293,15 +283,6 @@ def build_corpus(spark, pages, out_dir: str, min_tokens: int = 20,
         # to quality 'low' must not ship.  uniq is narrowed to (doc_id,
         # text) first: on the no-flags path it still carries kept's metric
         # columns, which would make the re-join ambiguous.
-        if dedup_spans or dedup_paragraphs or near_dup:
-            # cut lineage before the export recompute: the stacked dedup
-            # stages compound into a plan tree whose AQE string rendering
-            # ALONE can exhaust a modest driver heap (observed in the
-            # everything-on integration test).  The survivors frame is
-            # small (doc_id + text), so the eager checkpoint is cheap; on
-            # a lossy cluster prefer a reliable checkpoint dir (the
-            # pagerank localCheckpoint note).
-            uniq = uniq.localCheckpoint(eager=True)
         texts = uniq.select("doc_id", "text")
         q_final = T.quality_score(texts).select("doc_id", "n_tokens", "quality")
         final = (

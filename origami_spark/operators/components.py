@@ -22,7 +22,8 @@ that it SPLITS high-degree stars, so no round concentrates a
 component on one task; the only driver traffic is a per-round
 convergence checksum (count + hash sums — the classic iterative-
 algorithm shape, like the IVF trainer loop).  Lineage is truncated
-every round with ``localCheckpoint`` — on a real cluster set
+every round with ``session.checkpoint``, owned by the caller's
+``cache_scope()`` — on a real cluster set
 ``spark.sparkContext.setCheckpointDir`` and flip ``reliable=True`` so
 a lost executor cannot force a from-scratch recompute.
 
@@ -35,6 +36,8 @@ this module provides.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..session import checkpoint
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -112,8 +115,10 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     of executor-local ones."""
     from .graph import _iteration_width
 
-    e = _canonical_edges(edges, src, dst)
-    e = e.checkpoint(eager=True) if reliable else e.localCheckpoint(eager=True)
+    def cut(df):
+        return df.checkpoint(eager=True) if reliable else checkpoint(df)
+
+    e = cut(_canonical_edges(edges, src, dst))
     prev = _checksum(e)
     converged = prev[0] == 0
     # the initial checksum's count sizes the alternating rounds'
@@ -125,9 +130,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         for _ in range(max_iter):
             if converged:
                 break
-            e = _small_star(_large_star(e))
-            e = e.checkpoint(eager=True) if reliable \
-                else e.localCheckpoint(eager=True)
+            e = cut(_small_star(_large_star(e)))
             cur = _checksum(e)
             converged = cur == prev
             prev = cur
@@ -140,8 +143,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
             e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         lab = nbr.groupBy("u").agg(
             F.least(F.min("v"), F.col("u")).alias("component"))
-        out = lab.select(F.col("u").alias(node_col), "component") \
-            .localCheckpoint(eager=True)
+        out = checkpoint(lab.select(F.col("u").alias(node_col), "component"))
     if nodes is None:
         return out
     base = nodes.select(F.col(node_col).cast("bigint").alias(node_col)) \

@@ -1,5 +1,6 @@
 """SparkSession factory with scale-oriented defaults, and the scoped
-``cache`` every cached intermediate goes through.
+``cache`` / ``checkpoint`` every cached intermediate and lineage cut
+goes through.
 
 Tuned for the pipeline's shape: wide binary payloads through Arrow
 kernels + relational glue.  On a real cluster the same settings apply;
@@ -11,6 +12,7 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 from contextvars import ContextVar
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -20,9 +22,16 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 # maxtasksperchild=4, processor.py:483 — same concern, Spark-native knob)
 ARROW_MAX_RECORDS = 512
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# the frames of this thread's innermost open cache_scope() (None: none
-# open); a ContextVar, so no thread sees or releases another's frames
+# the releases owed by this thread's innermost open cache_scope()
+# (None: none open); a ContextVar, so no thread sees or releases
+# another's frames
 _SCOPE: ContextVar[list | None] = ContextVar("cache_scope", default=None)
+
+
+def _owe(release) -> None:
+    releases = _SCOPE.get()
+    if releases is not None:
+        releases.append(release)
 
 
 def cache(df: DataFrame) -> DataFrame:
@@ -30,33 +39,51 @@ def cache(df: DataFrame) -> DataFrame:
     of the current thread; with no scope open the frame stays cached
     for the session.  Shaped for ``df.transform(cache)``."""
     out = df.cache()
-    frames = _SCOPE.get()
-    if frames is not None:
-        frames.append(out)
+    _owe(out.unpersist)
+    return out
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``localCheckpoint`` of ``df``: the result's plan is one
+    ``LogicalRDD``, so every later action plans from here instead of
+    re-analyzing ``df``'s whole lineage.  A cached ``df`` is
+    unpersisted at once: the checkpoint job has read the cache, and
+    storage keeps one copy, not two.  The checkpoint's blocks are
+    owned like a cached frame's: by the innermost open
+    :func:`cache_scope` of the current thread, or with none open by the
+    session.  Shaped for ``df.transform(checkpoint)``."""
+    out = df.localCheckpoint(eager=True)
+    if df.is_cached:
+        df.unpersist()
+    # DataFrame.unpersist does not reach a checkpoint: its blocks belong
+    # to the RDD under the LogicalRDD the checkpoint is planned from
+    _owe(partial(out._jdf.queryExecution().logical().rdd().unpersist, False))
     return out
 
 
 @contextmanager
 def cache_scope():
-    """Unpersist every frame :func:`cache` registered inside the block
-    when it exits, normally or by an exception — Spark's CacheManager
-    holds a cached frame until it is unpersisted, not until the driver
-    drops it.  Scopes nest: an inner scope releases only its own
-    frames.  A lazy frame that leaves the block stays correct but
-    recomputes from lineage, so materialize it inside (collect, write,
-    eager ``localCheckpoint``) when that matters."""
-    frames: list = []
-    token = _SCOPE.set(frames)
+    """Release every frame :func:`cache` or :func:`checkpoint`
+    registered inside the block when it exits, normally or by an
+    exception — Spark holds a cached frame or a checkpoint's blocks
+    until they are released, not until the driver drops the frame.
+    Scopes nest: an inner scope releases only its own frames.  A lazy
+    frame that leaves the block over a released cache stays correct
+    but recomputes from lineage, so materialize it inside (collect,
+    write) when that matters; one over a released *checkpoint* cannot
+    recompute and fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``."""
+    releases: list = []
+    token = _SCOPE.set(releases)
     try:
         yield
     finally:
         _SCOPE.reset(token)
-        for df in frames:
-            # best effort: a dead session makes unpersist itself raise —
-            # that must neither mask the block's exception nor skip the
-            # remaining releases
+        for release in releases:
+            # best effort: a dead session makes the release itself
+            # raise — that must neither mask the block's exception nor
+            # skip the remaining releases
             try:
-                df.unpersist()
+                release()
             except Exception:
                 pass
 

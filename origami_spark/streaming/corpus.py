@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import extract_fused
-from ..session import cache, cache_scope
+from ..session import cache, cache_scope, checkpoint
 from ..sources.corpus import PAGES_SCHEMA
 from .ingest import start_stream_sink, stream_exact_dedup
 
@@ -226,7 +226,7 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
                 .filter(F.col("batch_id") != batch_id)
                 .join(F.broadcast(touched), ["band", "bucket"], "semi")
                 .select("doc_id", "band", "bucket", "sig")
-                .localCheckpoint(eager=True)
+                .transform(checkpoint)
             )
         except AnalysisException:   # first batch: no index dir yet
             corpus_idx = spark.createDataFrame([], _INDEX_SCHEMA)

@@ -514,11 +514,11 @@ def test_corpus_job_full_chain(spark, tmp_path):
 
 
 def test_build_corpus_releases_every_cache(spark, tmp_path):
-    """Every frame cached during a build — its stage boundaries and the
-    dedup operators' intermediates — is unpersisted when the build
-    returns, and when it raises mid-way (a --dsir-ref without
-    --dsir-top fails after extraction, quality and exact dedup have
-    cached)."""
+    """Every frame cached or checkpointed during a build — its stage
+    boundaries, the dedup operators' intermediates and the component
+    rounds' checkpoints — is released when the build returns, and when
+    it raises mid-way (a --dsir-ref without --dsir-top fails after
+    extraction, quality and exact dedup have been cut)."""
     from unittest.mock import patch
 
     import pytest
@@ -530,18 +530,57 @@ def test_build_corpus_releases_every_cache(spark, tmp_path):
     frame_cls = type(pages)  # the session's concrete DataFrame class
     real_cache = frame_cls.cache
     cached = []
+    jsc = spark.sparkContext._jsc
 
     def spy(df):
         cached.append(real_cache(df))
         return cached[-1]
 
+    def persistent():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = persistent()
     with patch.object(frame_cls, "cache", spy):
         build_corpus(spark, pages, str(tmp_path / "ok"), min_tokens=5,
                      near_dup=True)
         n_ok = len(cached)
+        # no new persistent RDD: checkpoint blocks are released too (an
+        # RDD the session held before may be cleaned meanwhile)
+        assert persistent() - before == set()
         with pytest.raises(ValueError, match="dsir_top"):
             build_corpus(spark, pages, str(tmp_path / "bad"), min_tokens=5,
                          dsir_ref=pages.select("text"))
+        assert persistent() - before == set()
     assert n_ok >= 5 and len(cached) - n_ok >= 3, (n_ok, len(cached))
     assert [df.storageLevel for df in cached] == \
         [StorageLevel.NONE] * len(cached)
+
+
+def test_near_dup_plans_from_a_checkpoint(spark, tmp_path):
+    """The frame build_corpus hands to minhash_lsh_candidates is planned
+    from the exact-dedup checkpoint: its analyzed plan's leaves are all
+    LogicalRDD, with no extraction kernel or source scan left to
+    re-analyze on every near-dup action."""
+    from unittest.mock import patch
+
+    from origami_spark.operators import dedup
+    from origami_spark.sources.corpus import pages_df
+
+    real = dedup.minhash_lsh_candidates
+    plans = []
+
+    def spy(docs, *args, **kwargs):
+        plan = docs._jdf.queryExecution().analyzed()
+        leaves = plan.collectLeaves()
+        plans.append((plan.toString(),
+                      {leaves.apply(i).nodeName() for i in range(leaves.size())}))
+        return real(docs, *args, **kwargs)
+
+    with patch.object(dedup, "minhash_lsh_candidates", spy):
+        counts = build_corpus(spark, pages_df(spark, 20, num_partitions=2),
+                              str(tmp_path / "out"), min_tokens=5,
+                              near_dup=True)
+    assert counts["after_near_dup"] > 0
+    [(tree, leaves)] = plans
+    assert leaves == {"LogicalRDD"}, tree
+    assert "MapInPandas" not in tree and "Range" not in tree, tree
