@@ -94,9 +94,8 @@ def events_asof_forward(spark, sf):
             FROM s GROUP BY 1, 2""")
 def events_sessionize(spark, sf):
     """Batch gaps-and-islands sessionization (operators/events.
-    sessionize, the batch mirror of streaming/sessions.py): a 6-hour
-    idle gap starts a new session; one row per session with exact
-    millisecond durations."""
+    sessionize): a 6-hour idle gap starts a new session; one row per
+    session with exact millisecond durations."""
     from origami_spark.operators.events import sessionize
 
     return sessionize(_t(spark, sf, "events"), gap_seconds=21600)

@@ -5,10 +5,11 @@ poke1024/origami's batch pipeline (page segmentation / separator detection /
 XY-cut reading order / compose), re-expressed for Common-Crawl-style web
 pages:
 
-* origami's pixel segmentation  -> DOM-node labeling         (kernels/segment.py)
-* raster->vector contours       -> DOM block extraction      (kernels/blocks.py)
-* flow/dewarp numeric kernel    -> byte-stream tokenizer +
-                                   per-block feature columns (kernels/features.py)
+* origami's pixel segmentation  -> byte-stream tokenizer +
+                                   DOM-node labeling         (html/tokenizer.py)
+* raster->vector contours       -> DOM block extraction      (html/blocks.py)
+* segment + contours stages     -> one Arrow parse kernel    (kernels/parse.py)
+* flow/dewarp numeric kernel    -> per-block feature columns (operators/features.py)
 * layout rule pipeline          -> relational span algebra   (operators/layout.py)
 * XY-cut reading order          -> deterministic block order (operators/order.py)
 * OCR + compose                 -> normalization + assembly  (operators/compose.py)

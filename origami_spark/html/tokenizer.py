@@ -292,10 +292,6 @@ def normalize_text(raw: str) -> str:
     return _WS_COLLAPSE_RE.sub(" ", _htmllib.unescape(raw)).strip()
 
 
-def decode_bytes(data: bytes) -> str:
-    return data.decode("utf-8", errors="replace")
-
-
 # ---------------------------------------------------------------------------
 # charset sniffing (the "decode raw input bytes" stage — the web analog
 # of origami's OCR decode, batch/detect/ocr.py:89-274).  A real crawl

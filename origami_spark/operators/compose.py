@@ -22,24 +22,22 @@ COMPOSE_SCHEMA_HINT = (
 )
 
 
-def compose(ranked: DataFrame, pages: DataFrame,
-            strict: bool = True) -> DataFrame:
+def compose(ranked: DataFrame, pages: DataFrame) -> DataFrame:
     """ranked blocks (rank,text,path,label,start,end) + pages -> S8 table.
 
     `pages` supplies the full url universe so documents with zero
     surviving blocks still emit a row with text='' (a page with no
     reliable regions still gets a compose artifact in the reference).
 
-    `strict` enforces the ``Document.get`` invariant (reference
+    It enforces the ``Document.get`` invariant (reference
     ``batch/detect/compose.py:451-466`` hard-errors when a referenced
     region is missing): every ranked block must land in exactly one
-    compose row.  A left join from `pages` silently DROPS ranked rows
-    whose url is missing from the page universe — strict mode joins
-    full-outer instead and raises from the text expression of any row
-    with no page side.  Same single join, same exchanges, no second
-    pass over the block lineage; the error fires whenever result rows
-    actually materialize (write/collect — a bare count() never
-    evaluates columns, like any Spark projection)."""
+    compose row.  A left join from `pages` would silently DROP ranked
+    rows whose url is missing from the page universe, so the join is
+    full-outer and the text expression raises for any row with no page
+    side.  One join, no second pass over the block lineage; the error
+    fires whenever result rows actually materialize (write/collect — a
+    bare count() never evaluates columns, like any Spark projection)."""
     per_url = ranked.groupBy("url").agg(
         F.array_sort(
             F.collect_list(F.struct("rank", "path", "label", "start", "end", "text"))
@@ -65,16 +63,6 @@ def compose(ranked: DataFrame, pages: DataFrame,
         "cast(array() as array<struct<path:string,label:string,"
         "start:bigint,end:bigint>>)"
     )
-    if not strict:
-        return (
-            pages.select("url")
-            .join(assembled, "url", "left")
-            .select(
-                "url",
-                F.coalesce("text", F.lit("")).alias("text"),
-                F.coalesce("spans", empty_spans).alias("spans"),
-            )
-        )
     pg = pages.select("url", F.lit(True).alias("_in_universe"))
     text = F.when(
         F.col("_in_universe").isNull(),

@@ -11,9 +11,9 @@ Spark engine must supply.  All five operators here are pure Catalyst
   right row with ``right_ts <= left_ts`` per key), the union trick:
   tag sides, ONE shuffle on the key, one ordered window pass with
   ``last(ignorenulls)``.  No range explosion, no per-key loop.
-* :func:`sessionize` — gaps-and-islands sessions (a batch mirror of
-  streaming/sessions.py): new session when the per-key gap exceeds
-  ``gap_seconds``; one window shuffle, one aggregate.
+* :func:`sessionize` — gaps-and-islands sessions: new session when
+  the per-key gap exceeds ``gap_seconds``; one window shuffle, one
+  aggregate.
 * :func:`time_rollup` — the hypertable/continuous-aggregate shape:
   hour-grain aggregate from raw (the only corpus shuffle), day grain
   derived FROM the hourly table (a second, tiny aggregate), both
@@ -149,8 +149,7 @@ def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
 def sessionize(events: DataFrame, key: str = "user_id",
                ts_col: str = "ts",
                gap_seconds: int = 1800) -> DataFrame:
-    """Gaps-and-islands sessionization (batch mirror of
-    ``streaming.sessions.sessionize``): a new session starts when the
+    """Gaps-and-islands sessionization: a new session starts when the
     per-key gap exceeds ``gap_seconds``.  Output one row per session:
     ``(key, session_seq, n_events, session_start, session_end,
     duration_ms)`` — timestamps as formatted strings, duration in

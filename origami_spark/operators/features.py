@@ -112,15 +112,3 @@ def _separator_border_features():
         (F.col("start") - header_cut).alias("rel_to_header"),
         (footer_cut - F.col("end")).alias("rel_to_footer"),
     ]
-
-
-def corpus_feature_stats(features: DataFrame) -> DataFrame:
-    """Corpus-level aggregates per label (stats-batch shape,
-    ``batch/utils/stats.py:88-103``)."""
-    return features.groupBy("label").agg(
-        F.count(F.lit(1)).alias("n_blocks"),
-        F.round(F.avg("text_density"), 6).alias("avg_text_density"),
-        F.round(F.avg("link_density"), 6).alias("avg_link_density"),
-        F.round(F.expr("percentile(median_line_len, 0.5)"), 2).alias("p50_line_len"),
-        F.round(F.expr("percentile(median_line_len, 0.9)"), 2).alias("p90_line_len"),
-    )

@@ -1,23 +1,19 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Images/audio/video ride as ``binary`` columns with a metadata struct;
-decode / feature-extraction are Arrow-batched kernels over
-``mapInPandas``.  The image/audio codecs are NOT in this container:
-``REAL_DECODE`` import-tries the public codec (Pillow) at module load
-— a PIL-equipped cluster gets the real ``media_decode`` path with no
-code edit (plus a skipped-unless-codec test), while here
-``decode_stub`` raises ``NotImplementedError`` and the payload-level
-kernels compute deterministic features (length, sha digest, byte
-histogram head) — the Spark-side plumbing (schema, batching,
-partitioning) is real and tested; only the codec call is absent
-(mirrors origami's OCR ``FAKE`` mode, ``batch/detect/ocr.py:97-101``,
-which exercises pipeline plumbing without models).
+feature extraction and perceptual hashing are Arrow-batched kernels
+over ``mapInPandas``.  The kernels need no image/audio codec: they
+compute deterministic payload-level features (length, sha digest, byte
+histogram head, block-mean hash over byte segments).  The Spark-side
+plumbing (schema, batching, partitioning) is real and tested; only
+pixel decode is absent (mirrors origami's OCR ``FAKE`` mode,
+``batch/detect/ocr.py:97-101``, which exercises pipeline plumbing
+without models).
 """
 
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,101 +30,6 @@ FEATURES_SCHEMA = (
 )
 
 
-def _detect_real_decode() -> bool:
-    """Codec availability, consulted once at import (VERDICT r4 item
-    8): a cluster whose Python env ships PIL gets the real image
-    decode path with NO code edit; this container does not, so the
-    stub stays in charge.  ``ORIGAMI_REAL_DECODE=0/1`` overrides both
-    ways (e.g. force the stub on a PIL-equipped dev box to reproduce
-    container behavior)."""
-    env = os.environ.get("ORIGAMI_REAL_DECODE")
-    if env is not None:
-        return env.strip().lower() not in ("", "0", "false", "no")
-    try:
-        import PIL.Image  # noqa: F401 — the public Pillow codec
-        return True
-    except ImportError:
-        return False
-
-
-REAL_DECODE = _detect_real_decode()
-
-
-def decode_stub(payload: bytes, kind: str):
-    """Placeholder for the codec call (resize / frame-sample / spectro).
-
-    Deliberately unimplemented in this container."""
-    raise NotImplementedError(
-        f"no {kind} codec in this environment; feature kernel uses "
-        "deterministic payload features instead"
-    )
-
-
-def decode_media(payload: bytes, kind: str) -> dict:
-    """THE codec seam: real decode when the codec is importable, the
-    honest stub otherwise.  Images decode via Pillow to
-    ``{width, height, mode}``; audio/video decode is not modeled in
-    this environment (no public pure-Python codec to import-try) and
-    always routes to the stub.  Callers that can run without pixels
-    (features / blockhash / resize plumbing) do NOT call this — their
-    deterministic payload kernels are the tested contract either way.
-    """
-    if not REAL_DECODE or kind != "image":
-        return decode_stub(payload, kind)
-    import io
-
-    from PIL import Image
-
-    with Image.open(io.BytesIO(payload)) as im:
-        im.load()
-        return {"width": im.width, "height": im.height, "mode": im.mode}
-
-
-DECODED_SCHEMA = (
-    "media_id bigint, kind string, ok boolean, width int, height int, "
-    "mode string, err string"
-)
-
-
-def media_decode(media: DataFrame) -> DataFrame:
-    """Real-decode operator over the media table: one Arrow batch per
-    call, one :func:`decode_media` per row, per-row failures caught
-    into ``(ok=false, err)`` rows instead of killing the job (a crawl
-    always carries truncated/forged payloads).  Raises at PLAN time in
-    a codec-less environment — an honest refusal beats 10^9 stub
-    exceptions at run time.  Covered by the skipped-unless-codec test
-    in tests/test_multimodal.py, so a PIL-equipped cluster gets
-    coverage without code edits."""
-    if not REAL_DECODE:
-        raise NotImplementedError(
-            "media_decode needs a codec (PIL) in the executor env; "
-            "this environment has none — set ORIGAMI_REAL_DECODE=1 "
-            "only where the import actually succeeds")
-
-    def kern(batches):
-        for pdf in batches:
-            rows = {k: [] for k in ("media_id", "kind", "ok", "width",
-                                    "height", "mode", "err")}
-            for mid, kind, payload in zip(pdf["media_id"], pdf["kind"],
-                                          pdf["payload"]):
-                data = bytes(payload) if payload is not None else b""
-                try:
-                    d = decode_media(data, kind)
-                    vals = (True, d["width"], d["height"], d["mode"], None)
-                except Exception as exc:  # noqa: BLE001 — per-row gate
-                    vals = (False, None, None, None,
-                            f"{type(exc).__name__}: {exc}"[:200])
-                rows["media_id"].append(int(mid))
-                rows["kind"].append(kind)
-                for k, v in zip(("ok", "width", "height", "mode", "err"),
-                                vals):
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return media.select("media_id", "kind", "payload").mapInPandas(
-        kern, schema=DECODED_SCHEMA)
-
-
 def media_features_kernel(batches):
     """mapInPandas kernel: payload -> deterministic features.
 
@@ -139,8 +40,7 @@ def media_features_kernel(batches):
                 ("media_id", "kind", "n_bytes", "digest", "head_histogram")}
         for mid, kind, payload in zip(pdf["media_id"], pdf["kind"], pdf["payload"]):
             data = bytes(payload) if payload is not None else b""
-            # payload-level by design — no codec consult; pixel-level
-            # features belong behind the media_decode seam
+            # payload-level by design: no codec in the executor env
             hist = [0] * 16
             for byte in data[:4096]:
                 hist[byte >> 4] += 1
@@ -178,101 +78,13 @@ def media_features(media: DataFrame) -> DataFrame:
     )
 
 
-RESIZED_SCHEMA = (
-    "media_id bigint, payload binary, "
-    "meta struct<width:int,height:int,sample_rate:int,duration_ms:int>"
-)
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize plumbing: one Arrow batch of payloads in, resized
-    payloads + updated metadata out.
-
-    The pixel work is the stub (no PIL in this container): the fake
-    "resize" is a deterministic byte resample — width*height bytes
-    strided from the source — so output sizes, metadata transforms,
-    batch shapes and determinism are all real and testable; swap the
-    body for `Image.resize` when the codec exists (REAL_DECODE)."""
-
-    def kern(batches):
-        for pdf in batches:
-            ids, payloads, metas = [], [], []
-            for mid, payload, meta in zip(pdf["media_id"], pdf["payload"],
-                                          pdf["meta"]):
-                data = bytes(payload) if payload is not None else b""
-                n = width * height
-                if data:
-                    stride = max(len(data) // n, 1)
-                    out = (data[::stride] * ((n // max(len(data[::stride]), 1)) + 1))[:n]
-                else:
-                    out = b"\x00" * n
-                ids.append(int(mid))
-                payloads.append(out)
-                m = dict(meta) if meta is not None else {}
-                metas.append({
-                    "width": width, "height": height,
-                    "sample_rate": m.get("sample_rate"),
-                    "duration_ms": m.get("duration_ms"),
-                })
-            yield pd.DataFrame(
-                {"media_id": ids, "payload": payloads, "meta": metas})
-
-    return (
-        media.filter(F.col("kind") == "image")
-        .select("media_id", "payload", "meta")
-        .mapInPandas(kern, schema=RESIZED_SCHEMA)
-    )
-
-
-FRAMES_SCHEMA = (
-    "media_id bigint, frame_idx int, ts_ms int, frame binary"
-)
-
-
-def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling plumbing: one video row explodes into one
-    row per sampled timestamp (the 1->N batch shape real frame decoders
-    need).  The frame bytes are a deterministic fake (a digest-seeded
-    slice of the payload at the frame's time offset); the time grid,
-    row explosion and schema are the real contract."""
-
-    def kern(batches):
-        for pdf in batches:
-            ids, idxs, tss, frames = [], [], [], []
-            for mid, payload, meta in zip(pdf["media_id"], pdf["payload"],
-                                          pdf["meta"]):
-                data = bytes(payload) if payload is not None else b""
-                duration = (meta["duration_ms"]
-                            if meta is not None and meta["duration_ms"]
-                            else 0)
-                for i, ts in enumerate(range(0, max(duration, 1), every_ms)):
-                    if data:
-                        off = (ts * 37) % max(len(data), 1)
-                        frame = (data[off:] + data[:off])[:64]
-                    else:
-                        frame = b""
-                    ids.append(int(mid))
-                    idxs.append(i)
-                    tss.append(ts)
-                    frames.append(frame)
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs,
-                                "ts_ms": tss, "frame": frames})
-
-    return (
-        media.filter(F.col("kind") == "video")
-        .select("media_id", "payload", "meta")
-        .mapInPandas(kern, schema=FRAMES_SCHEMA)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Perceptual near-dup over binary payloads: block-mean hashing (Yang,
 # Gao, Tian 2006, "Block Mean Value Based Image Perceptual Hashing" —
 # public; blockhash.io is the open implementation).  The real method
-# hashes pixel-block means; with codecs stubbed the SAME algorithm runs
-# over payload BYTE segments (swap the segment source for pixel rows
-# when REAL_DECODE lands) — a one-byte edit changes one segment's sum,
-# so near-identical payloads land within a few bits of each other.
+# hashes pixel-block means; with no codec the SAME algorithm runs over
+# payload BYTE segments — a one-byte edit changes one segment's sum, so
+# near-identical payloads land within a few bits of each other.
 #
 # Engine-portability: every bit is an INTEGER CROSS-MULTIPLICATION —
 # bit k = (seg_sum[k] * n_bytes > total_sum * seg_len[k]) — no

@@ -29,9 +29,8 @@ from ..session import cache
 from .text import portable_hash60, tokens_col
 
 __all__ = ["hash_sample", "stratified_sample", "upsample_sources",
-           "temperature_epochs", "token_budget",
-           "token_budget_global", "shuffle_order", "interleave_sources",
-           "split_assign"]
+           "token_budget", "token_budget_global", "shuffle_order",
+           "interleave_sources", "split_assign"]
 
 _SCALE = 1_000_000
 
@@ -113,41 +112,6 @@ def upsample_sources(docs: DataFrame, epochs: dict, by: str = "source",
         .otherwise(F.array().cast("array<int>"))
     return docs.filter(F.col(by).isin(list(epochs))) \
         .withColumn("epoch", F.explode(copies))
-
-
-def temperature_epochs(docs: DataFrame, alpha: float = 0.5,
-                       by: str = "source",
-                       total: int | None = None) -> dict:
-    """Mixture SPEC builder: per-source epoch factors from temperature
-    sampling (the mT5/XLM-R recipe, Xue et al. 2021 §3.2: sample
-    source s with probability p_s proportional to n_s^alpha — alpha < 1
-    flattens a skewed corpus toward the small sources).
-
-    Returns ``{source: epochs}`` such that source s contributes
-    ``p_s * total`` docs in expectation when fed to
-    :func:`upsample_sources` (``total`` defaults to the corpus size, a
-    pure reweight).  alpha=1 reproduces natural proportions (every
-    epoch 1.0 at the default total); alpha=0 equalizes contributions.
-
-    Driver-side by design: one bounded aggregation collects the
-    source counts (sources number dozens, not millions — the
-    interleave_sources contract), and the float ``pow`` runs ONCE in
-    one engine, feeding deterministic literals to the distributed
-    operators — the staged-artifact discipline every trained-float
-    consumer in this repo follows.
-    """
-    if alpha < 0:
-        raise ValueError(f"alpha must be >= 0, got {alpha}")
-    counts = {
-        r[by]: r["n"]
-        for r in docs.groupBy(by).agg(F.count(F.lit(1)).alias("n")).collect()
-        if r[by] is not None
-    }
-    if not counts:
-        return {}
-    n_total = total if total is not None else sum(counts.values())
-    z = sum(n ** alpha for n in counts.values())
-    return {s: (n ** alpha / z) * n_total / n for s, n in counts.items()}
 
 
 def token_budget(docs: DataFrame, budget_tokens: int, by: str = "source",

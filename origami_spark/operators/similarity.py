@@ -98,31 +98,6 @@ def plane_coefficients(planes: int, dim: int) -> list:
     ]
 
 
-def hyperplane_signature(emb: DataFrame, planes: int = 8,
-                         dim: int = 64) -> DataFrame:
-    """Sign-bit signature per vector from deterministic hyperplanes.
-
-    Computed as one Arrow-batched matmul (n x dim) @ (dim x planes) —
-    the inline-expression formulation is bit-identical but costs
-    seconds of janino codegen once planes*dim passes ~10^3 terms."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    mat = np.asarray(plane_coefficients(planes, dim), dtype=np.float64).T
-    weights = (np.int64(1) << np.arange(planes, dtype=np.int64))
-
-    @pandas_udf("bigint")
-    def bucket(col: pd.Series) -> pd.Series:
-        if len(col) == 0:
-            return pd.Series([], dtype="int64")
-        x = np.asarray(col.tolist(), dtype=np.float64)
-        bits = (_seq_dot(x, mat) >= 0).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return emb.select("vec_id", "embedding", bucket("embedding").alias("bucket"))
-
-
 def _seq_dot(x, mat):
     """Dot products accumulated strictly left-to-right over dimensions.
 
@@ -470,61 +445,6 @@ def semantic_dedup_pairs(emb: DataFrame, centroids_df: DataFrame,
         .select("vec_a", "vec_b", "cluster",
                 F.round(_cosine("ea", "eb", dim), 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-    )
-
-
-def ivf_topk(emb: DataFrame, query_ids, k: int = 5, n_clusters: int = 16,
-             nprobe: int = 4, iters: int = 5, dim: int = 64) -> DataFrame:
-    """IVF approximate top-k: k-means coarse quantizer; each query scans
-    only its `nprobe` nearest clusters' inverted lists, exact cosine
-    re-rank inside.
-
-    The scale path the brief names alongside LSH: the corpus is
-    partitioned once by cluster id (at 10^12 rows: a bucketed/
-    partitioned table), so a query touches nprobe/n_clusters of the
-    data.  Recall vs the exact scan is asserted in
-    tests/test_similarity.py."""
-    import numpy as np
-
-    centroids = train_ivf_centroids(emb, n_clusters, iters, dim)
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    assigned = _assign_clusters(e, centroids)
-
-    # probe lists: nprobe nearest centroids per query (driver-side — the
-    # query set is small and centroids already live here)
-    q_rows = e.filter(F.col("vec_id").isin(list(query_ids))).collect()
-    c = np.asarray(centroids)
-    c_sq = (c * c).sum(axis=1)
-    probes = []
-    for r in q_rows:
-        x = np.asarray(list(r["embedding"]), dtype=np.float64)
-        d = -2.0 * (c @ x) + c_sq
-        for cl in np.argsort(d, kind="stable")[:nprobe]:
-            probes.append((int(r["vec_id"]), int(cl)))
-    spark = emb.sparkSession
-    probe_df = spark.createDataFrame(probes, "query_id bigint, cluster int")
-    qv = spark.createDataFrame(
-        [(int(r["vec_id"]), list(r["embedding"])) for r in q_rows],
-        "query_id bigint, qv array<double>",
-    )
-
-    cand = (
-        assigned.join(F.broadcast(probe_df), "cluster")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(qv), "query_id")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id", "vec_id",
-            F.round(_cosine("qv", "embedding"), 4).alias("cosine"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
     )
 
 

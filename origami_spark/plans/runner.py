@@ -215,9 +215,10 @@ def run_stage(
     resume); the transform result is appended atomically.
 
     ``buckets``: write the stage table ``bucketBy(buckets, key)`` +
-    ``sortBy(key)`` (sources/bucketed.py rationale) so every downstream
-    join/window on `key` — the S5->S8 chain is nothing else — reads
-    co-located buckets instead of paying an Exchange per stage.  The
+    ``sortBy(key)``: bucketing pays the shuffle once at write time, so
+    every downstream join/window on `key` — the S5->S8 chain is nothing
+    else — reads co-located buckets instead of paying an Exchange per
+    stage.  The
     snapshot manifest stays the source of truth: the bucketed catalog
     view is returned only when the data directory holds exactly the
     committed files (no crashed-writer orphans); otherwise the reader

@@ -198,39 +198,6 @@ def read_warc(spark, path):
     return files.mapInPandas(pages_kernel, schema=WARC_PAGES_SCHEMA)
 
 
-WARC_STATS_SCHEMA = ("path string, pages bigint, skipped_records bigint, "
-                     "truncated bigint, corrupt_gzip_members bigint")
-
-
-def warc_scan_stats(spark, path):
-    """Per-archive integrity report: DataFrame(path, pages,
-    skipped_records, truncated, corrupt_gzip_members).  Run this (or
-    aggregate it) alongside an ingest so skipped/truncated records are a
-    queryable fact rather than an executor-log grep."""
-    import pandas as pd
-
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
-
-    def scan(batches):
-        for pdf in batches:
-            rows = []
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                stats: dict = {}
-                pages = parse_warc_bytes(bytes(content), stats)
-                rows.append({
-                    "path": fpath,
-                    "pages": len(pages),
-                    "skipped_records": stats["skipped_records"],
-                    "truncated": stats["truncated"],
-                    "corrupt_gzip_members": stats["corrupt_gzip_members"],
-                })
-            yield pd.DataFrame(
-                rows, columns=["path", "pages", "skipped_records",
-                               "truncated", "corrupt_gzip_members"])
-
-    return files.mapInPandas(scan, schema=WARC_STATS_SCHEMA)
-
-
 # ---------------------------------------------------------------------------
 # synthetic writer (tests)
 # ---------------------------------------------------------------------------

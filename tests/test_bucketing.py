@@ -1,63 +1,7 @@
-"""Bucketed co-located joins: the write-once-shuffle-never contract,
+"""Bucketed stage tables: the write-once-shuffle-never contract,
 asserted on the physical plan."""
 
 import pyspark.sql.functions as F
-
-from origami_spark.sources.bucketed import colocated_join, write_bucketed
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    orders = spark.read.parquet(f"{SF}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF}/lineitem.parquet")
-    write_bucketed(orders, "b_orders", str(tmp_path / "o"), "o_orderkey", 8)
-    write_bucketed(lineitem, "b_lineitem", str(tmp_path / "l"), "l_orderkey", 8)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # forbid broadcast so the test proves the BUCKET layout (not a
-        # small-table shortcut) is what removes the shuffle
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = colocated_join(spark, "b_orders", "b_lineitem",
-                                "o_orderkey", "l_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        # correctness: same result as the plain (shuffling) join
-        want = (
-            spark.read.parquet(f"{SF}/orders.parquet").alias("o")
-            .join(spark.read.parquet(f"{SF}/lineitem.parquet").alias("l"),
-                  F.col("o.o_orderkey") == F.col("l.l_orderkey"))
-            .count()
-        )
-        assert joined.count() == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
-def test_bucketed_aggregation_skips_shuffle(spark, tmp_path):
-    """A groupBy on the bucket key is planned without an Exchange —
-    partial and final aggregation fuse over the bucket layout."""
-    lineitem = spark.read.parquet(f"{SF}/lineitem.parquet")
-    write_bucketed(lineitem, "b_li_agg", str(tmp_path / "la"), "l_orderkey", 8)
-    try:
-        agg = (
-            spark.table("b_li_agg")
-            .groupBy("l_orderkey")
-            .agg(F.round(F.sum("l_quantity"), 2).alias("qty"))
-        )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        want = (
-            lineitem.groupBy("l_orderkey")
-            .agg(F.round(F.sum("l_quantity"), 2).alias("qty"))
-        )
-        assert agg.exceptAll(want).count() == 0
-        assert want.exceptAll(agg).count() == 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS b_li_agg")
 
 
 def test_staged_pipeline_bucketed_stages(spark, tmp_path):

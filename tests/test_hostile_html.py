@@ -6,10 +6,11 @@ No Spark needed: extract_document is the exact kernel all three
 execution paths share, so its invariants are the engine's invariants.
 """
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from origami_spark.extract_local import extract_document
+from origami_spark.html.tokenizer import to_utf8
 
 TAGS = ["p", "div", "span", "a", "li", "ul", "table", "tr", "td", "nav",
         "em", "br", "hr", "h1", "script", "style", "blockquote", "pre"]
@@ -46,7 +47,10 @@ def tag_soup(draw):
 
 def _check_invariants(data: bytes):
     r = extract_document(data)
-    n = len(data)
+    # Span offsets index the decoded (utf-8) document, which is the raw
+    # bytes themselves unless a BOM or <meta charset> forces a transcode.
+    doc = to_utf8(data)
+    n = len(doc)
     for s in r["spans"]:
         assert 0 <= s["start"] <= s["end"] <= n, (s, n)
     # spans in reading order are sorted by start
@@ -61,6 +65,8 @@ def _check_invariants(data: bytes):
 
 @settings(max_examples=300, deadline=None)
 @given(st.binary(max_size=400))
+# utf-16 BOM: the transcoded document is longer than the raw bytes
+@example(b"\xfe\xff\x01\x00\x08\x00\x00")
 def test_arbitrary_bytes_never_crash(data):
     _check_invariants(data)
 

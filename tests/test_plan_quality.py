@@ -73,7 +73,7 @@ def test_extract_relational_chain_reuses_partitioning(spark, parquet_pages):
     plan = plan_of(extract(spark, parquet_pages))
     # exchanges: explicit repartition before the kernel, ONE
     # hashpartitioning(url) for all windows/groupBys, and the final
-    # join's pages side (the strict compose invariant rides the same
+    # join's pages side (the compose invariant rides the same
     # full-outer join — zero extra exchanges).  Anything >4 means a rule
     # broke co-partitioning (e.g. a groupBy key stopped including url).
     assert plan.count("Exchange") <= 4, plan.count("Exchange")

@@ -445,41 +445,3 @@ def test_upsample_sources_partition_independent_and_no_shuffle(spark):
     import pytest as _pt
     with _pt.raises(ValueError):
         upsample_sources(docs, {"src0": -0.1})
-
-
-def test_temperature_epochs_spec(spark):
-    """alpha=1 is the identity reweight; alpha=0 equalizes expected
-    contributions; alpha=0.5 sits between and preserves total mass;
-    composing with upsample_sources realizes the spec in expectation."""
-    import pytest as _pt
-
-    from origami_spark.operators.sampling import (
-        temperature_epochs,
-        upsample_sources,
-    )
-
-    rows = ([(i, "big") for i in range(900)]
-            + [(900 + i, "small") for i in range(100)])
-    docs = spark.createDataFrame(rows, "doc_id bigint, source string")
-
-    nat = temperature_epochs(docs, alpha=1.0)
-    assert nat == {"big": _pt.approx(1.0), "small": _pt.approx(1.0)}
-
-    flat = temperature_epochs(docs, alpha=0.0)
-    # equal contributions: 500 expected docs each -> epochs 500/n_s
-    assert flat["big"] == _pt.approx(500 / 900)
-    assert flat["small"] == _pt.approx(500 / 100)
-
-    mid = temperature_epochs(docs, alpha=0.5)
-    assert flat["small"] > mid["small"] > 1.0 > mid["big"] > flat["big"]
-    # mass preserved: sum over sources of epochs*n == corpus size
-    assert mid["big"] * 900 + mid["small"] * 100 == _pt.approx(1000)
-
-    out = upsample_sources(docs, mid).groupBy("source").count().collect()
-    got = {r["source"]: r["count"] for r in out}
-    # realized counts within ~3 sigma of the expected contribution
-    assert abs(got["small"] - mid["small"] * 100) < 40
-    assert abs(got["big"] - mid["big"] * 900) < 60
-
-    with _pt.raises(ValueError):
-        temperature_epochs(docs, alpha=-1)

@@ -91,24 +91,6 @@ def test_truncated_payload_counted():
     assert stats["truncated"] >= 1
 
 
-def test_warc_scan_stats_table(spark, tmp_path):
-    """Integrity counters are queryable per archive file."""
-    from origami_spark.sources.warc import warc_scan_stats
-
-    pages = generate_pages(42, 4)
-    bad = (b"WARC/1.0\r\nWARC-Type: response\r\n"
-           b"WARC-Target-URI: http://bad.example/\r\n"
-           b"Content-Length: NaN\r\n\r\nx\r\n\r\n")
-    (tmp_path / "a.warc").write_bytes(synth_warc(pages[:2]) + bad)
-    (tmp_path / "b.warc").write_bytes(synth_warc(pages[2:]))
-    rows = {r["path"].rsplit("/", 1)[-1]: r
-            for r in warc_scan_stats(spark, str(tmp_path / "*.warc")).collect()}
-    assert rows["a.warc"]["pages"] == 2
-    assert rows["a.warc"]["skipped_records"] == 1
-    assert rows["b.warc"]["pages"] == 2
-    assert rows["b.warc"]["skipped_records"] == 0
-
-
 def test_warc_to_extraction_byte_identical(spark, tmp_path):
     """Archives in, golden text out: the WARC connector feeds the same
     engine and the output matches the constructive goldens bytewise."""
