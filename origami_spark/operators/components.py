@@ -17,15 +17,17 @@ shuffle) plus an edge rewire join (same key, reused exchange); the
 edge set converges to a union of stars centered at component minima in
 O(log^2 n) rounds w.h.p. — a 4096-node path takes ~12 rounds where
 naive min-label propagation needs ~4096.  Scale notes for the 100 TB
-bar: every step keys on node id; large-star's defining property is
+bar: the initial checksum's edge count picks the plan — up to
+``graph._KERNEL_EDGES`` edges one task labels them in numpy
+(:func:`_min_labels`), above it the star rounds run.  Every round
+keys on node id; large-star's defining property is
 that it SPLITS high-degree stars, so no round concentrates a
 component on one task; the only driver traffic is a per-round
 convergence checksum (count + hash sums — the classic iterative-
 algorithm shape, like the IVF trainer loop).  Lineage is truncated
 every round with ``session.checkpoint``, owned by the caller's
-``cache_scope()`` — on a real cluster set
-``spark.sparkContext.setCheckpointDir`` and flip ``reliable=True`` so
-a lost executor cannot force a from-scratch recompute.
+``cache_scope()`` (``reliable=True`` on a lossy cluster, so a lost
+executor cannot force a from-scratch recompute).
 
 Reference parity: the reference engine (per-page layout analysis) has
 no graph operator; this closes the loop for the grafted dedup family,
@@ -35,9 +37,11 @@ this module provides.
 """
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import checkpoint
+from . import graph
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -83,6 +87,23 @@ def _small_star(e: DataFrame) -> DataFrame:
     return center.unionByName(leaves).distinct()
 
 
+def _min_labels(u, v):
+    """Each node's smallest reachable id, in numpy: every root hooks to
+    the smallest root across its edges, pointer jumping flattens the
+    forest, and at the fixed point each component is one tree rooted
+    at its minimum (node ids sort with their index)."""
+    node, a, b = graph._node_index(u, v)
+    lab = np.arange(len(node))
+    while True:
+        prev = lab.copy()
+        np.minimum.at(lab, lab[a], lab[b])
+        np.minimum.at(lab, lab[b], lab[a])
+        while (lab != lab[lab]).any():
+            lab = lab[lab]
+        if (lab == prev).all():
+            return node, node[lab]
+
+
 def _checksum(e: DataFrame) -> tuple:
     """Canonical edge-set fingerprint: row count plus order-free sums of
     a 64-bit row hash and both endpoints.  One scalar row to the driver
@@ -110,23 +131,20 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     Deterministic: min-based throughout, no randomness.  Raises
     RuntimeError if the edge set has not converged after ``max_iter``
     alternating rounds (paper bound: O(log^2 n) w.h.p. — 50 covers any
-    realistic corpus; never silently mislabels).  ``reliable=True``
+    realistic corpus; never silently mislabels; the in-task kernel
+    has no round bound).  ``reliable=True``
     uses reliable checkpoints (requires ``setCheckpointDir``) instead
     of executor-local ones."""
-    from .graph import _iteration_width
-
     def cut(df):
         return df.checkpoint(eager=True) if reliable else checkpoint(df)
 
     e = cut(_canonical_edges(edges, src, dst))
     prev = _checksum(e)
-    converged = prev[0] == 0
-    # the initial checksum's count sizes the alternating rounds'
-    # shuffle width (graph._iteration_width: a ~12-round loop over a
-    # small edge set otherwise schedules hundreds of near-empty tasks;
-    # cluster-scale edge sets keep the configured width).  Star rounds
-    # only shrink the edge set, so the start count is an upper bound.
-    with _iteration_width(e.sparkSession, int(prev[0])):
+    if prev[0] <= graph._KERNEL_EDGES:
+        out = checkpoint(graph._in_task(
+            e, f"{node_col} bigint, component bigint", _min_labels))
+    else:
+        converged = prev[0] == 0
         for _ in range(max_iter):
             if converged:
                 break

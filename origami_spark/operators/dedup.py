@@ -563,7 +563,7 @@ def incremental_keep(new_docs: DataFrame, index: DataFrame,
         .otherwise(_nonneg(F.col("doc_a"))).alias("doc_a"),
         _nonneg(F.col("doc_b")).alias("doc_b"),
     )
-    comp = cache(connected_components(edges))
+    comp = connected_components(edges)
     tainted = comp.filter(F.col("doc_id") < 0).select("component").distinct()
     batch_nodes = comp.filter(F.col("doc_id") >= 0)
     drop = (

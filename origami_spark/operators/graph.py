@@ -29,13 +29,17 @@ leaks < 1 unit per edge per iteration.  Both are deliberate: this is a
 *ranking* signal, not a probability, and exactness-of-reproduction
 beats exactness-of-normalization for a corpus-curation join key.
 
-Scale design (100 TB / 10^9-node bar): the edge relation is the big
-side and is hash-partitioned by ``src`` ONCE and persisted; each
-iteration shuffles only the (node, score) relation — |V| rows — into
-that fixed partitioning, then one ``groupBy(dst)`` reduce per
-iteration (partial aggregation map-side).  K iterations = 2K exchanges
-of the *small* relation, zero re-exchanges of the edge relation.
-``localCheckpoint`` cuts the lineage so the plan does not grow with K.
+Scale design (100 TB / 10^9-node bar): the measured edge count, not
+a session setting, picks the plan.  Up to ``_KERNEL_EDGES`` edges the
+recurrence runs in one task as numpy int64 that raises wherever Spark
+ANSI raises (bit-identical, never wrapped).  Above it the edge
+relation is the big side and is hash-partitioned by ``src`` ONCE and
+persisted; each iteration shuffles only the (node, score) relation —
+|V| rows — into that fixed partitioning, then one ``groupBy(dst)``
+reduce per iteration (partial aggregation map-side).  K iterations =
+2K exchanges of the *small* relation, zero re-exchanges of the edge
+relation.  ``localCheckpoint`` cuts the lineage so the plan does not
+grow with K.
 
 Reference parity: origami has no graph stage (its XY-cut ordering is a
 page-local recursion, ``core/xycut.py``); this family extends the
@@ -44,8 +48,10 @@ engine for crawl-grade curation like operators/hosts.py does.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
+from functools import partial
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -54,49 +60,66 @@ from ..session import cache, cache_scope
 __all__ = ["event_edges", "html_link_edges", "degrees", "pagerank",
            "pagerank_base", "hits"]
 
-# iteration shuffle sizing: enough edge rows per reduce partition that
-# a K-iteration program is not dominated by empty-task scheduling
-_EDGE_ROWS_PER_PARTITION = 200_000
+# Edge count up to which pagerank, hits and connected_components run
+# as one in-task numpy kernel.  Measured on a 4-core VM (|V| = |E|/10),
+# kernel vs relational, pagerank / hits / components: 0.35 / 0.17 /
+# 0.33 s vs 3.7 / 5.7 / 1.9 s at 10^4 edges, 2.4 / 2.8 / 3.2 s vs 7.3 /
+# 19.8 / 9.3 s at 10^6; pagerank 13.2 vs 18.4 s at 4*10^6.  One task
+# does not grow with the cluster: cut where it still wins 3x on 4 cores.
+_KERNEL_EDGES = 1_000_000
+_MIN = np.iinfo(np.int64).min
 
 
-@contextmanager
-def _iteration_width(spark, n_edges: int):
-    """Scale the iterative program's shuffle width to the MEASURED edge
-    count instead of the session default (guide §2: make partitioning
-    scale-adaptive, never a constant).
+def _in_task(e: DataFrame, schema: str, kernel) -> DataFrame:
+    """``kernel(*columns)`` over all of ``e`` as int64 arrays in ONE task
+    (``coalesce(1)``, no shuffle); it returns the ``schema`` columns."""
+    def run(batches):
+        parts = [b for b in batches if len(b)]
+        if parts:
+            cols = pd.concat(parts)
+            yield pd.DataFrame(np.column_stack(
+                kernel(*(cols[c].to_numpy(np.int64) for c in cols))))
+    return e.coalesce(1).mapInPandas(run, schema)
 
-    A K-iteration fixed-point program issues ~2K exchanges; with the
-    session's static ``spark.sql.shuffle.partitions`` every one of them
-    launches that many tasks even when the graph has a few thousand
-    edges (AQE's coalescing keeps ``parallelismFirst`` semantics, so it
-    will not shrink below the default parallelism) — measured at sf1.0
-    the 9,900-edge event graph spent ~5 s scheduling near-empty tasks.
-    Width = ceil(edges / rows-per-partition), capped at the session
-    setting: a billion-edge cluster graph keeps the configured width,
-    only small graphs narrow.  The conf is runtime-scoped and restored
-    on exit; every eager materialization of the iteration (the
-    per-round checkpoints) happens inside the scope."""
-    key = "spark.sql.shuffle.partitions"
-    aqe_key = "spark.sql.adaptive.enabled"
-    old = spark.conf.get(key)
-    old_aqe = spark.conf.get(aqe_key)
-    width = max(1, min(int(old),
-                       (n_edges + _EDGE_ROWS_PER_PARTITION - 1)
-                       // _EDGE_ROWS_PER_PARTITION))
-    spark.conf.set(key, str(width))
-    if width == 1:
-        # a one-partition iteration leaves AQE nothing to adapt
-        # (no skew to split, nothing to coalesce) while each AQE
-        # query-stage materialization still inserts a barrier per
-        # exchange — ~2K of them.  Measured: 6-iteration pagerank on a
-        # 9.9k-edge graph 3.7 s -> 2.6 s with AQE off.  Cluster-scale
-        # graphs keep width > 1 and full AQE.
-        spark.conf.set(aqe_key, "false")
-    try:
-        yield width
-    finally:
-        spark.conf.set(key, old)
-        spark.conf.set(aqe_key, old_aqe)
+
+def _raise_if(bad, error: str):
+    if np.any(bad):
+        raise ArithmeticError(f"[{error}] in an in-task graph kernel")
+
+
+def _mul(a, b):
+    """BIGINT ``a * b``, raising where ANSI raises instead of wrapping."""
+    with np.errstate(all="ignore"):
+        p = a * b
+        _raise_if((a != 0) & ((p // np.where(a == 0, 1, a) != b)
+                              | ((a == -1) & (b == _MIN))),
+                  "ARITHMETIC_OVERFLOW")
+    return p
+
+
+def _div(a, b):
+    """BIGINT ``div`` (truncates toward zero), raising where ANSI does."""
+    _raise_if(b == 0, "DIVIDE_BY_ZERO")
+    _raise_if((a == _MIN) & (b == -1), "ARITHMETIC_OVERFLOW")
+    return (a - np.fmod(a, b)) // b
+
+
+def _sum(keys, x, n: int):
+    """Exact per-key sums of ``x`` into ``n`` BIGINTs (the 32-bit halves
+    cannot overflow; ``np.bincount(weights=)`` would sum in float64),
+    raising where ANSI ``sum`` does for the kernels' non-negative x."""
+    hi, lo = np.zeros(n, np.int64), np.zeros(n, np.int64)
+    np.add.at(hi, keys, x >> 32)
+    np.add.at(lo, keys, x & 0xFFFFFFFF)
+    hi += lo >> 32
+    _raise_if((hi < -(1 << 31)) | (hi >= 1 << 31), "ARITHMETIC_OVERFLOW")
+    return (hi << 32) | (lo & 0xFFFFFFFF)
+
+
+def _node_index(src, dst):
+    """Sorted node ids and each endpoint's index into them."""
+    node, idx = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    return node, idx[:len(src)], idx[len(src):]
 
 
 def _resolve_href(href_col, origin_col):
@@ -338,15 +361,29 @@ def pagerank_base(scale: int, d_num: int, d_den: int) -> int:
     return (scale * (d_den - d_num)) // d_den
 
 
+def _pagerank_kernel(src, dst, weight, iters, scale, d_num, d_den):
+    node, s, d = _node_index(src, dst)
+    n = len(node)
+    den = _mul(_sum(s, weight, n)[s], d_den)
+    # each node's teleport base rides along as one more addend
+    keys = np.concatenate([d, np.arange(n)])
+    base = np.full(n, pagerank_base(scale, d_num, d_den), np.int64)
+    score = np.full(n, scale, np.int64)
+    for _ in range(iters):
+        c = _div(_mul(_mul(score[s], weight), d_num), den)
+        score = _sum(keys, np.concatenate([c, base]), n)
+    return node, score
+
+
 def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
-             d_num: int = 85, d_den: int = 100,
-             checkpoint_every: int = 2) -> DataFrame:
+             d_num: int = 85, d_den: int = 100) -> DataFrame:
     """Damped PageRank, ``iters`` synchronous integer iterations.
 
-    ``edges``: (src, dst, weight) — weight > 0.  Damping factor is the
-    exact rational ``d_num / d_den`` (default 0.85).  Every node starts
-    with ``scale`` units of mass; each iteration a node keeps the
-    teleport ``base`` (see :func:`pagerank_base`) and receives
+    ``edges``: (src, dst, weight) — weight > 0, no NULL field (such a
+    row drops).  Damping factor is the exact rational ``d_num / d_den``
+    (default 0.85).  Every node starts with ``scale`` units of mass;
+    each iteration a node keeps the teleport ``base`` (see
+    :func:`pagerank_base`) and receives
     ``(score_src * weight * d_num) div (out_w_src * d_den)`` from each
     in-edge.  All arithmetic is BIGINT; see the module docstring for
     the determinism/overflow contract (products stay < 2^63 for
@@ -354,20 +391,10 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
     scale leaves weights up to ~10^5).
 
     Output: ``node, score`` (BIGINT fixed-point; divide by ``scale``
-    for the conventional per-node mass).
-
-    ``checkpoint_every`` sets the lineage-cut cadence: every eager
-    ``localCheckpoint`` is a synchronization barrier (a full job), so
-    batching two iterations per materialization halves the barrier
-    count while the integer arithmetic keeps the scores bit-identical
-    at ANY cadence (Spark reuses the identical exchange subtrees inside
-    the batched plan).  1 = cut every round (most conservative against
-    executor loss when swapped for reliable ``checkpoint()``).
+    for the conventional per-node mass), materialized.
     """
     if iters < 1:
         raise ValueError("pagerank needs iters >= 1")
-    if checkpoint_every < 1:
-        raise ValueError("pagerank needs checkpoint_every >= 1")
     base = pagerank_base(scale, d_num, d_den)
 
     with cache_scope():
@@ -378,57 +405,70 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
         # reused AND expensive to recompute)
         e = cache(edges.select(F.col("src").cast("bigint"),
                                F.col("dst").cast("bigint"),
-                               F.col("weight").cast("bigint")))
-        # materializes the one edge-derivation pass AND sizes the
-        # iteration's shuffle width from the real edge count
-        n_edges = e.count()
-        spark = e.sparkSession
-        with _iteration_width(spark, n_edges) as width:
-            nodes = (
-                e.select(F.col("src").alias("node"))
-                .unionByName(e.select(F.col("dst").alias("node")))
-                .distinct()
-            )
-            outw = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
-            # the big relation, partitioned by the join key ONCE and
-            # reused by every iteration (the cache pins the output
-            # partitioning, so the per-iteration join re-shuffles only
-            # the small score relation)
-            ew = cache(e.join(outw, "src").repartition(width, F.col("src")))
-            nodes = cache(nodes)
+                               F.col("weight").cast("bigint")).dropna())
+        # materializes the one edge-derivation pass AND picks the plan
+        if e.count() <= _KERNEL_EDGES:
+            return _in_task(e, "node bigint, score bigint", partial(
+                _pagerank_kernel, iters=iters, scale=scale, d_num=d_num,
+                d_den=d_den)).localCheckpoint(eager=True)
+        nodes = cache(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        outw = e.groupBy("src").agg(F.sum("weight").alias("out_w"))
+        # the big relation, partitioned by the join key ONCE and
+        # reused by every iteration (the cache pins the output
+        # partitioning, so the per-iteration join re-shuffles only
+        # the small score relation)
+        ew = cache(e.join(outw, "src").repartition(F.col("src")))
 
-            scores = nodes.withColumn("score", F.lit(scale).cast("bigint"))
-            contrib_expr = F.expr(
-                f"(score * weight * {d_num}L) div (out_w * {d_den}L)")
-            for it in range(iters):
-                contribs = (
-                    ew.join(scores.withColumnRenamed("node", "src"), "src")
-                    .select(F.col("dst").alias("node"),
-                            contrib_expr.alias("contrib"))
-                    .groupBy("node")
-                    .agg(F.sum("contrib").alias("received"))
-                )
-                scores = nodes.join(contribs, "node", "left").select(
-                    "node",
-                    (F.lit(base).cast("bigint")
-                     + F.coalesce(F.col("received"), F.lit(0)).cast("bigint")
-                     ).alias("score"),
-                )
-                # Materialize every `checkpoint_every` rounds (and on the
-                # last) and cut lineage: the plan stays O(checkpoint_every)
-                # in K, and the persisted edge relation is actually hit
-                # instead of being re-derived inside one giant DAG.
-                # (localCheckpoint trades executor-loss recomputability for
-                # speed — swap for reliable checkpoint() on a lossy
-                # cluster.)
-                if (it + 1) % checkpoint_every == 0 or it + 1 == iters:
-                    scores = scores.localCheckpoint(eager=True)
-        return scores.select("node",
-                             F.col("score").cast("bigint").alias("score"))
+        scores = nodes.withColumn("score", F.lit(scale).cast("bigint"))
+        contrib_expr = F.expr(
+            f"(score * weight * {d_num}L) div (out_w * {d_den}L)")
+        for it in range(iters):
+            contribs = (
+                ew.join(scores.withColumnRenamed("node", "src"), "src")
+                .select(F.col("dst").alias("node"),
+                        contrib_expr.alias("contrib"))
+                .groupBy("node")
+                .agg(F.sum("contrib").alias("received"))
+            )
+            scores = nodes.join(contribs, "node", "left").select(
+                "node",
+                (F.lit(base).cast("bigint")
+                 + F.coalesce(F.col("received"), F.lit(0)).cast("bigint")
+                 ).alias("score"),
+            )
+            # Materialize every 2 rounds (and on the last; each cut is
+            # a full job) and cut lineage: the plan stays O(1) in K, and
+            # the persisted edge relation is actually hit
+            # instead of being re-derived inside one giant DAG.
+            # (localCheckpoint trades executor-loss recomputability for
+            # speed — swap for reliable checkpoint() on a lossy
+            # cluster.)
+            if it % 2 == 1 or it + 1 == iters:
+                scores = scores.localCheckpoint(eager=True)
+        return scores
+
+
+def _hits_kernel(src, dst, weight, iters, scale):
+    node, s, d = _node_index(src, dst)
+    n = len(node)
+
+    def norm(raw, keys):
+        # the max runs over the nodes the step scored, as in the plan
+        return _div(_mul(raw, scale), raw[keys].max())
+
+    hub = np.full(n, scale, np.int64)
+    for _ in range(iters):
+        auth = norm(_sum(d, _mul(hub[s], weight), n), d)
+        hub = norm(_sum(s, _mul(auth[d], weight), n), s)
+    return node, hub, auth
 
 
 def hits(edges: DataFrame, iters: int = 4,
-         scale: int = 1 << 16, checkpoint_every: int = 1) -> DataFrame:
+         scale: int = 1 << 16) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, "Authoritative sources
     in a hyperlinked environment", JACM — public), ``iters``
     synchronous iterations in exact BIGINT fixed-point — the second
@@ -457,91 +497,77 @@ def hits(edges: DataFrame, iters: int = 4,
     fixed partitionings plus one partially-aggregated reduce per step.
     Zero re-exchanges of the edge relation, plan O(1) in K.
 
-    Output: ``(node, hub, authority)`` BIGINT fixed-point.
-
-    ``checkpoint_every`` batches that many full iterations per hub
-    lineage cut (same knob and same bit-identity argument as
-    :func:`pagerank`) — but unlike pagerank's LINEAR recurrence, every
-    HITS half-step references its raw aggregate twice (once in the
-    max-normalizer's broadcast subquery, once in the contribution
-    join), so an unmaterialized plan re-derives subtrees
-    exponentially in the batch depth — the Spark analog of DuckDB
-    inlining a multi-referenced CTE.  Measured at sf0.1 (iters=4):
-    cadence 1 = 5.8 s, cadence 2 = 10.3 s, cadence 4 > 500 s.  The
-    default therefore stays 1; raise it only if the normalizer is
-    removed.
+    Output: ``(node, hub, authority)`` BIGINT fixed-point, materialized.
+    Edges as in :func:`pagerank`.
     """
     if iters < 1:
         raise ValueError("hits needs iters >= 1")
-    if checkpoint_every < 1:
-        raise ValueError("hits needs checkpoint_every >= 1")
     with cache_scope():
         # one edge-derivation pass shared by the node universe and both
         # pre-partitioned edge relations (same rationale as pagerank);
-        # the count also sizes the iteration's shuffle width
+        # the count also picks the plan
         e = cache(edges.select(F.col("src").cast("bigint"),
                                F.col("dst").cast("bigint"),
-                               F.col("weight").cast("bigint")))
-        n_edges = e.count()
-        spark = e.sparkSession
-        with _iteration_width(spark, n_edges) as width:
-            nodes = cache(
-                e.select(F.col("src").alias("node"))
-                .unionByName(e.select(F.col("dst").alias("node")))
-                .distinct()
-            )
-            e_src = cache(e.repartition(width, F.col("src")))
-            e_dst = cache(e.repartition(width, F.col("dst")))
+                               F.col("weight").cast("bigint")).dropna())
+        if e.count() <= _KERNEL_EDGES:
+            return _in_task(e, "node bigint, hub bigint, authority bigint",
+                            partial(_hits_kernel, iters=iters, scale=scale)
+                            ).localCheckpoint(eager=True)
+        nodes = cache(
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        e_src = cache(e.repartition(F.col("src")))
+        e_dst = cache(e.repartition(F.col("dst")))
 
-            def norm(raw, col):
-                mx = raw.agg(F.max(col).alias("_mx"))
-                return (
-                    raw.crossJoin(F.broadcast(mx))
-                    .select("node",
-                            F.expr(f"({col} * {scale}L) div _mx").alias(col))
-                )
-
-            hub = nodes.withColumn("hub", F.lit(scale).cast("bigint"))
-            auth = None
-            for it in range(iters):
-                a_raw = (
-                    e_src.join(hub.withColumnRenamed("node", "src"), "src")
-                    .select(F.col("dst").alias("node"),
-                            (F.col("hub") * F.col("weight")).alias("c"))
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("authority"))
-                )
-                # only the hub half-step checkpoints: the auth relation
-                # feeds h_raw inside the same plan (its shuffle output is
-                # reused), so materializing it too just doubles the sync
-                # barriers — measured 16.1 s vs 7.7 s cold at sf0.01,
-                # values identical
-                auth = norm(a_raw, "authority")
-                h_raw = (
-                    e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
-                    .select(F.col("src").alias("node"),
-                            (F.col("authority") * F.col("weight")).alias("c"))
-                    .groupBy("node")
-                    .agg(F.sum("c").alias("hub"))
-                )
-                hub = norm(h_raw, "hub")
-                if (it + 1) % checkpoint_every == 0 or it + 1 == iters:
-                    hub = hub.localCheckpoint(eager=True)
-            out = (
-                nodes.join(hub, "node", "left")
-                .join(auth, "node", "left")
-                .select(
-                    "node",
-                    F.coalesce("hub", F.lit(0)).cast("bigint").alias("hub"),
-                    F.coalesce("authority", F.lit(0)).cast("bigint")
-                    .alias("authority"),
-                )
+        def norm(raw, col):
+            mx = raw.agg(F.max(col).alias("_mx"))
+            return (
+                raw.crossJoin(F.broadcast(mx))
+                .select("node",
+                        F.expr(f"({col} * {scale}L) div _mx").alias(col))
             )
-            # the final auth half-step and the node universe still
-            # reference the cached relations; cut the result's lineage
-            # BEFORE the scope releases them, or the caller's
-            # materialization re-derives the whole edge relation from
-            # scratch (measured: 2 extra corpus passes at collect time).
-            # |V| rows — the same materialization cadence as the
-            # per-iteration checkpoints.
-            return out.localCheckpoint(eager=True)
+
+        hub = nodes.withColumn("hub", F.lit(scale).cast("bigint"))
+        for _ in range(iters):
+            a_raw = (
+                e_src.join(hub.withColumnRenamed("node", "src"), "src")
+                .select(F.col("dst").alias("node"),
+                        (F.col("hub") * F.col("weight")).alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").alias("authority"))
+            )
+            # only the hub half-step checkpoints: the auth relation
+            # feeds h_raw inside the same plan (its shuffle output is
+            # reused), so materializing it too just doubles the sync
+            # barriers — measured 16.1 s vs 7.7 s cold at sf0.01,
+            # values identical
+            auth = norm(a_raw, "authority")
+            h_raw = (
+                e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
+                .select(F.col("src").alias("node"),
+                        (F.col("authority") * F.col("weight")).alias("c"))
+                .groupBy("node")
+                .agg(F.sum("c").alias("hub"))
+            )
+            # cut every round: an uncut round re-derives its aggregate twice
+            hub = norm(h_raw, "hub").localCheckpoint(eager=True)
+        out = (
+            nodes.join(hub, "node", "left")
+            .join(auth, "node", "left")
+            .select(
+                "node",
+                F.coalesce("hub", F.lit(0)).cast("bigint").alias("hub"),
+                F.coalesce("authority", F.lit(0)).cast("bigint")
+                .alias("authority"),
+            )
+        )
+        # the final auth half-step and the node universe still
+        # reference the cached relations; cut the result's lineage
+        # BEFORE the scope releases them, or the caller's
+        # materialization re-derives the whole edge relation from
+        # scratch (measured: 2 extra corpus passes at collect time).
+        # |V| rows — the same materialization cadence as the
+        # per-iteration checkpoints.
+        return out.localCheckpoint(eager=True)

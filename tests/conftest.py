@@ -9,3 +9,24 @@ def spark():
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def graph_paths():
+    """``graph_paths(run)`` -> ``[on the kernel, on the relational
+    program]``: ``run()`` twice, with ``operators.graph._KERNEL_EDGES``
+    forcing each plan in turn, checking that each took its plan."""
+    from unittest import mock
+
+    from origami_spark.operators import graph
+
+    def both(run):
+        out = []
+        for limit in (1 << 62, -1):
+            with mock.patch.object(graph, "_KERNEL_EDGES", limit), \
+                    mock.patch.object(graph, "_in_task",
+                                      wraps=graph._in_task) as kernel:
+                out.append(run())
+            assert kernel.called == (limit > 0)
+        return out
+    return both

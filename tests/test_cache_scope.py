@@ -190,3 +190,25 @@ def test_engine_caches_only_through_session():
     assert {h[:2] for h in hits} == set(_RAW_OK)
     # the scan does see session.py's own raw calls
     assert {h[1] for h in _raw_calls(session)} == {"cache", "localCheckpoint"}
+
+
+def _conf_writes(tree) -> list:
+    return [node.lineno for node in ast.walk(tree)
+            if isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("set", "unset")
+            and isinstance(node.func.value, ast.Attribute)
+            and node.func.value.attr == "conf"]
+
+
+def test_engine_never_writes_session_conf():
+    """No operator, gate or job rewrites a session-wide setting: a
+    ``conf.set`` / ``conf.unset`` made for one query changes the plan
+    of every query that overlaps it on the session."""
+    assert _conf_writes(ast.parse('spark.conf.set("k", "1")\n'
+                                  'e.sparkSession.conf.unset("k")')) == [1, 2]
+    files = [p for d in ("origami_spark", "gates", "jobs")
+             for p in sorted((_ROOT / d).rglob("*.py"))]
+    writes = [(p.relative_to(_ROOT).as_posix(), line) for p in files
+              for line in _conf_writes(ast.parse(p.read_text(), str(p)))]
+    assert writes == []

@@ -5,7 +5,10 @@ import random
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
+from origami_spark.operators import graph
 from origami_spark.operators.components import (
     connected_components,
     keep_one_per_component,
@@ -51,11 +54,12 @@ def test_matches_union_find_on_random_graphs(spark, seed, n, m):
     assert got == want
 
 
-def test_path_graph_converges_in_log_rounds(spark):
+def test_path_graph_converges_in_log_rounds(spark, monkeypatch):
     """A 256-node path is the adversarial case for naive min-label
     propagation (~256 rounds to drag 0 to the far end).  The
     alternating-star algorithm must finish within its O(log^2 n) bound
     — max_iter=20 both enforces that and proves the labels exact."""
+    monkeypatch.setattr(graph, "_KERNEL_EDGES", -1)
     edges = [(i, i + 1) for i in range(255)]
     got = _labels(connected_components(_edges_df(spark, edges), max_iter=20))
     assert got == {i: 0 for i in range(256)}
@@ -135,7 +139,38 @@ def test_star_capped_candidates_resolve_to_one_component(spark):
     assert got == {**{i: 0 for i in range(8)}, 100: 100}
 
 
-def test_unconverged_raises(spark):
+def test_unconverged_raises(spark, monkeypatch):
+    monkeypatch.setattr(graph, "_KERNEL_EDGES", -1)
     edges = [(i, i + 1) for i in range(64)]
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(_edges_df(spark, edges), max_iter=1)
+
+
+_ID = st.one_of(st.none(), st.integers(0, 9))
+
+
+# pairs with NULL endpoints, self-loops, duplicates and reversals, or a
+# chain; nodes 10 and 11 are always isolated
+@settings(max_examples=4, deadline=None)
+@example([])
+@example([(3, 2), (2, 1), (1, 0), (5, None), (7, 7), (8, 9), (9, 8)])
+@given(st.one_of(st.lists(st.tuples(_ID, _ID), max_size=25),
+                 st.integers(1, 9).map(
+                     lambda n: [(i + 1, i) for i in range(n)])))
+def test_kernel_equals_relational(spark, graph_paths, edges):
+    nodes = list(range(12))
+    nodes_df = spark.createDataFrame([(x,) for x in nodes], "doc_id bigint")
+    got = graph_paths(lambda: _labels(connected_components(
+        _edges_df(spark, edges), nodes=nodes_df)))
+    want = _union_find(nodes, [(a, b) for a, b in edges
+                               if None not in (a, b) and a != b])
+    assert got == [want] * 2
+
+
+def test_extreme_ids_on_both_paths(spark, graph_paths):
+    """Labels are ids, never arithmetic on them: the BIGINT extremes
+    come back unchanged on both plans."""
+    lo, hi = -(1 << 63), (1 << 63) - 1
+    got = graph_paths(lambda: _labels(connected_components(
+        _edges_df(spark, [(hi, lo), (0, hi), (lo + 1, lo)]))))
+    assert got == [{lo: lo, hi: lo, 0: lo, lo + 1: lo}] * 2

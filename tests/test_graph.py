@@ -7,12 +7,17 @@ is exact dict equality, not approximate."""
 
 import datetime as dt
 
+import numpy as np
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from origami_spark.operators import graph
 from origami_spark.operators.graph import (
     degrees,
     event_edges,
+    hits,
     pagerank,
     pagerank_base,
 )
@@ -75,9 +80,12 @@ def test_pagerank_mass_bound(spark, edges_df):
         assert n * base <= total <= n * SCALE
 
 
-def test_pagerank_plan_constant_in_iterations(spark, edges_df):
-    """localCheckpoint cuts lineage: the final plan must not grow with
-    (or even reference) the K-times-unrolled join chain."""
+def test_pagerank_plan_constant_in_iterations(spark, edges_df,
+                                              monkeypatch):
+    """localCheckpoint cuts lineage: the relational program's final plan
+    must not grow with (or even reference) the K-times-unrolled join
+    chain."""
+    monkeypatch.setattr(graph, "_KERNEL_EDGES", -1)
     plan = (
         pagerank(edges_df, iters=4)
         ._jdf.queryExecution().executedPlan().toString()
@@ -88,20 +96,79 @@ def test_pagerank_plan_constant_in_iterations(spark, edges_df):
 def test_pagerank_rejects_zero_iters(spark, edges_df):
     with pytest.raises(ValueError):
         pagerank(edges_df, iters=0)
-    with pytest.raises(ValueError):
-        pagerank(edges_df, iters=3, checkpoint_every=0)
 
 
-def test_pagerank_checkpoint_cadence_is_value_invariant(spark, edges_df):
-    """The lineage-cut cadence is a pure materialization knob: integer
-    fixed-point scores must be bit-identical at every cadence,
-    including 'never cut mid-run' (checkpoint_every > iters)."""
-    want = _py_pagerank(EDGES, iters=5)
-    for ck in (1, 2, 5, 99):
-        got = {r["node"]: r["score"]
-               for r in pagerank(edges_df, iters=5,
-                                 checkpoint_every=ck).collect()}
-        assert got == want, f"cadence {ck} diverged"
+# small weighted digraphs: self-loops, duplicate edges, sinks, chains
+# and the empty graph
+_GRAPHS = st.one_of(
+    st.lists(st.tuples(st.integers(0, 9), st.integers(0, 9),
+                       st.integers(1, 5)), max_size=25),
+    st.integers(1, 12).map(lambda n: [(i, i + 1, 1 + i % 3)
+                                      for i in range(n)]),
+)
+
+
+def _graph_df(spark, edges):
+    return spark.createDataFrame(edges, "src long, dst long, weight long")
+
+
+@settings(max_examples=4, deadline=None)
+@example([])
+@example([(0, 1, 2), (1, 2, 1), (2, 2, 4), (0, 1, 2), (3, 0, 1)])
+@given(_GRAPHS)
+def test_pagerank_kernel_equals_relational(spark, graph_paths, edges):
+    df = _graph_df(spark, edges)
+    got = graph_paths(lambda: {r["node"]: r["score"]
+                               for r in pagerank(df, iters=3).collect()})
+    assert got == [_py_pagerank(edges, iters=3)] * 2
+
+
+_LO, _HI = -(1 << 63), (1 << 63) - 1
+
+
+def test_kernel_arithmetic_is_ansi_bigint():
+    """The kernels' BIGINT helpers against Python ints: exact wherever
+    the result fits, raising wherever Spark ANSI raises."""
+    rng = np.random.default_rng(7)
+    keys = rng.integers(0, 4, 64)
+    x = rng.integers(0, 1 << 58, 64)   # group sums pass 2^32, fit 2^63
+    want = [sum(int(v) for v, k in zip(x, keys) if k == g)
+            for g in range(4)]
+    assert graph._sum(keys, x, 4).tolist() == want
+    with pytest.raises(ArithmeticError, match="ARITHMETIC_OVERFLOW"):
+        graph._sum(np.zeros(2, np.int64), np.array([_HI, 1]), 1)
+
+    pairs = [(_LO, -1), (-1, _LO), (_LO, 1), (1 << 32, 1 << 31),
+             (1 << 32, (1 << 31) - 1), (-(1 << 32), 1 << 31), (0, _LO),
+             (3037000500, 3037000500), (3037000499, -3037000499)]
+    pairs += [(int(a), int(b)) for a, b in zip(
+        rng.integers(_LO, _HI, 32), rng.integers(-(1 << 40), 1 << 40, 32))]
+    for a, b in pairs:
+        if _LO <= a * b <= _HI:
+            assert graph._mul(np.array([a]), np.array([b]))[0] == a * b
+        else:
+            with pytest.raises(ArithmeticError,
+                               match="ARITHMETIC_OVERFLOW"):
+                graph._mul(np.array([a]), np.array([b]))
+
+    # Spark's div truncates toward zero
+    got = graph._div(np.array([-7, 7, -7, 7, _LO]),
+                     np.array([2, -2, -2, 2, 1]))
+    assert got.tolist() == [-3, -3, 3, 3, _LO]
+    with pytest.raises(ArithmeticError, match="DIVIDE_BY_ZERO"):
+        graph._div(np.array([5]), np.array([0]))
+    with pytest.raises(ArithmeticError, match="ARITHMETIC_OVERFLOW"):
+        graph._div(np.array([_LO]), np.array([-1]))
+
+
+def test_pagerank_overflow_raises_on_both_paths(spark, graph_paths):
+    # score * weight = 2^20 * 2^50 leaves BIGINT in the first round
+    df = _graph_df(spark, [(1, 2, 1 << 50), (2, 1, 1)])
+
+    def run():
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            pagerank(df, iters=1).collect()
+    graph_paths(run)
 
 
 def test_degrees(spark, edges_df):
@@ -314,12 +381,23 @@ def test_hits_partition_invariance(spark, edges_df):
     assert a == b
 
 
-def test_hits_checkpoint_cadence_is_value_invariant(spark, edges_df):
-    from origami_spark.operators.graph import hits
+@settings(max_examples=4, deadline=None)
+@example([])
+@example([(0, 1, 2), (1, 2, 1), (2, 2, 4), (0, 1, 2), (3, 0, 1)])
+@given(_GRAPHS)
+def test_hits_kernel_equals_relational(spark, graph_paths, edges):
+    df = _graph_df(spark, edges)
+    got = graph_paths(lambda: {r["node"]: (r["hub"], r["authority"])
+                               for r in hits(df, iters=2).collect()})
+    assert got == [_py_hits(edges, iters=2) if edges else {}] * 2
 
-    want = _py_hits(EDGES, iters=3)
-    for ck in (1, 2, 99):
-        got = {r["node"]: (r["hub"], r["authority"])
-               for r in hits(edges_df, iters=3,
-                             checkpoint_every=ck).collect()}
-        assert got == want, f"cadence {ck} diverged"
+
+def test_hits_overflow_raises_on_both_paths(spark, graph_paths):
+    # hub * weight = 2^16 * 2^40 fits; authority * scale = 2^56 * 2^16
+    # leaves BIGINT at the max-norm
+    df = _graph_df(spark, [(1, 2, 1 << 40), (2, 1, 1)])
+
+    def run():
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            hits(df, iters=1).collect()
+    graph_paths(run)
