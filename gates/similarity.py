@@ -166,7 +166,10 @@ def dedup_embedding_contamination(spark, sf):
     10 'benchmark' vectors (ids 0..9 of the same table — real usage
     is a disjoint suite) sits within cosine 0.4; bench signatures
     broadcast, corpus never shuffles, flags broadcast back."""
-    emb = _spread(_t(spark, sf, "embeddings"), "vec_id")
+    # no _spread: with the cosine in one Arrow kernel, the sf0.1 gate
+    # ran 0.71 s without it against 0.91 s with it (median of 6
+    # interleaved bench_extra pairs, faster in 6/6, steal <= 0.02)
+    emb = _t(spark, sf, "embeddings")
     bench = emb.filter(F.col("vec_id") < 10)
     return D.embedding_contamination(emb, bench, threshold=0.4,
                                      planes=8, tables=8)
@@ -187,7 +190,7 @@ def dedup_embedding_contamination(spark, sf):
             SELECT query_id, vec_id, cosine, rk FROM ranked WHERE rk <= 5""")
 def ann_cosine_topk(spark, sf):
     return S.cosine_topk(_spread(_t(spark, sf, "embeddings"), "vec_id"),
-                         list(range(8)), k=5, dim=64)
+                         list(range(8)), k=5)
 
 
 @gate(_lsh_topk_oracle_sql(4, 16, 64, 5, 8))

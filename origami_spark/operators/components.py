@@ -17,9 +17,9 @@ shuffle) plus an edge rewire join (same key, reused exchange); the
 edge set converges to a union of stars centered at component minima in
 O(log^2 n) rounds w.h.p. — a 4096-node path takes ~12 rounds where
 naive min-label propagation needs ~4096.  Scale notes for the 100 TB
-bar: the initial checksum's edge count picks the plan — up to
-``graph._KERNEL_EDGES`` edges one task labels them in numpy
-(:func:`_min_labels`), above it the star rounds run.  Every round
+bar: the canonical edge count picks the plan — no edges, no further
+job; up to ``graph._KERNEL_EDGES`` edges one task labels them in numpy
+(:func:`_min_labels`); above it the star rounds run.  Every round
 keys on node id; large-star's defining property is
 that it SPLITS high-degree stars, so no round concentrates a
 component on one task; the only driver traffic is a per-round
@@ -139,19 +139,23 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
         return df.checkpoint(eager=True) if reliable else checkpoint(df)
 
     e = cut(_canonical_edges(edges, src, dst))
-    prev = _checksum(e)
-    if prev[0] <= graph._KERNEL_EDGES:
+    n_edges = e.count()
+    if n_edges == 0:
+        out = e.select(F.col("u").alias(node_col),
+                       F.col("v").alias("component"))
+    elif n_edges <= graph._KERNEL_EDGES:
         out = checkpoint(graph._in_task(
             e, f"{node_col} bigint, component bigint", _min_labels))
     else:
-        converged = prev[0] == 0
+        prev = _checksum(e)
+        converged = False
         for _ in range(max_iter):
-            if converged:
-                break
             e = cut(_small_star(_large_star(e)))
             cur = _checksum(e)
             converged = cur == prev
             prev = cur
+            if converged:
+                break
         if not converged:
             raise RuntimeError(
                 f"connected_components did not converge in {max_iter} "

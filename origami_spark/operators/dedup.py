@@ -955,26 +955,21 @@ def embedding_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
     At 10^12 rows this bucket-equality join is the only viable shape —
     the exact pair join below is the small-scale oracle.
 
-    Shuffle/codegen discipline (measured at sf1.0 — 20k vectors, 7.2M
+    Shuffle discipline (measured at sf1.0 — 20k vectors, 7.2M
     bucket-pair candidates, 20k verified pairs): the signature pass is
     cached (it feeds both self-join sides), each candidate pair is
     emitted once at its SMALLEST shared table (kept iff no earlier
     table's buckets also match — the banded_hamming_pairs recipe,
     value-identical to the old cross-table ``distinct`` but without
-    shuffling the 7M-row pair relation), and the verify runs the
-    dim-unrolled cosine (see :func:`~.similarity._cosine`) instead of
-    the interpreted higher-order fold."""
-    from .similarity import _cosine, hyperplane_buckets
+    shuffling the 7M-row pair relation), and the verify is the
+    :func:`~.similarity.pair_cosine` Arrow kernel over the attached
+    pairs."""
+    from .similarity import hyperplane_buckets, pair_cosine
 
-    dim = 64
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
     # table t uses planes [t*planes, (t+1)*planes) of one coefficient
     # stream -> independent tables, still fully deterministic/portable
     signed = cache(
-        hyperplane_buckets(emb, planes, tables, dim).select(
+        hyperplane_buckets(emb, planes, tables).select(
             "vec_id", "buckets"))
     banded = signed.select(
         "vec_id", "buckets",
@@ -999,44 +994,41 @@ def embedding_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
         .select(F.col("a.vec_id").alias("vec_a"),
                 F.col("b.vec_id").alias("vec_b"))
     )
+    pairs = (
+        cand.join(emb.select(F.col("vec_id").alias("vec_a"),
+                             F.col("embedding").alias("ea")), "vec_a")
+        .join(emb.select(F.col("vec_id").alias("vec_b"),
+                         F.col("embedding").alias("eb")), "vec_b")
+        .select("vec_a", "vec_b", "ea", "eb")
+    )
     return (
-        cand.join(e.select(F.col("vec_id").alias("vec_a"),
-                           F.col("embedding").alias("ea")), "vec_a")
-        .join(e.select(F.col("vec_id").alias("vec_b"),
-                       F.col("embedding").alias("eb")), "vec_b")
-        .select(
-            "vec_a", "vec_b",
-            F.round(_cosine("ea", "eb", dim), 4).alias("cosine"),
-        )
+        pair_cosine(pairs, "ea", "eb")
+        .select("vec_a", "vec_b", F.round("cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
 
 def embedding_near_dups(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
-    """Cosine >= threshold pairs.  Small-scale exact form (pair join on
-    vec_id inequality); the scale path is operators/similarity.py's LSH
-    bucketing — this operator is the verification kernel both share."""
-    dot = F.aggregate(
-        F.zip_with("a.embedding", "b.embedding", lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
-    )
-    norm = lambda side: F.sqrt(  # noqa: E731
-        F.aggregate(f"{side}.embedding", F.lit(0.0).cast("double"),
-                    lambda acc, x: acc + x * x)
-    )
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    return (
+    """Cosine >= threshold pairs.  Small-scale exact form: every pair
+    (vec_id inequality join) through the
+    :func:`~.similarity.pair_cosine` kernel; the scale path is
+    :func:`embedding_near_dups_lsh`."""
+    from .similarity import pair_cosine
+
+    e = emb.select("vec_id", "embedding")
+    pairs = (
         e.alias("a")
         .join(e.alias("b"), F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
-            F.round(dot / (norm("a") * norm("b")), 4).alias("cosine"),
+            F.col("a.embedding").alias("ea"),
+            F.col("b.embedding").alias("eb"),
         )
+    )
+    return (
+        pair_cosine(pairs, "ea", "eb")
+        .select("vec_a", "vec_b", F.round("cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -1347,17 +1339,10 @@ def embedding_contamination(emb: DataFrame, bench: DataFrame,
     when the sets are disjoint, which is real usage).  Recall follows
     the multi-table LSH bound documented on
     :func:`embedding_near_dups_lsh`."""
-    from .similarity import _cosine, hyperplane_buckets
+    from .similarity import hyperplane_buckets, pair_cosine
 
     def banded(df, id_alias):
-        signed = hyperplane_buckets(
-            df.select(
-                "vec_id",
-                F.transform("embedding",
-                            lambda x: x.cast("double")).alias("embedding"),
-            ),
-            planes, tables,
-        )
+        signed = hyperplane_buckets(df, planes, tables)
         return signed.select(
             F.col("vec_id").alias(id_alias),
             F.col("embedding").alias(f"_e_{id_alias}"),
@@ -1371,8 +1356,9 @@ def embedding_contamination(emb: DataFrame, bench: DataFrame,
         .dropDuplicates(["vec_id", "bench_id"])
     )
     hits = (
-        cand.filter(
-            F.round(_cosine("_e_vec_id", "_e_bench_id"), 4) >= threshold)
+        pair_cosine(cand.select("vec_id", "_e_vec_id", "_e_bench_id"),
+                    "_e_vec_id", "_e_bench_id")
+        .filter(F.round("cosine", 4) >= threshold)
         .select("vec_id")
         .distinct()
         .withColumn("_hit", F.lit(True))

@@ -1,8 +1,8 @@
 """Similarity search over embedding columns (array<float>).
 
 * ``cosine_topk`` — brute-force exact top-k: query set broadcast against
-  the corpus, cosine via zip_with/aggregate (JVM-side), window top-k.
-  The baseline and the verifier for the approximate path.
+  the corpus, cosine by the :func:`pair_cosine` Arrow kernel, window
+  top-k.  The baseline and the verifier for the approximate path.
 * ``lsh_topk`` — random-hyperplane LSH: deterministic pseudo-random
   hyperplanes derived from the portable md5 hash, sign-bit signatures,
   bucket-equality candidate join, exact cosine re-rank inside buckets.
@@ -17,67 +17,81 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _cosine(a: str, b: str, dim: int | None = None):
-    """Cosine of two equal-length double-array columns.
+def pair_cosine(pairs: DataFrame, a: str, b: str) -> DataFrame:
+    """``pairs`` with its array columns ``a`` and ``b`` replaced by their
+    raw float64 ``cosine``; every other column passes through.
 
-    With ``dim`` given, the three sums unroll into a flat expression
-    tree with the SAME left-to-right IEEE accumulation (0.0 init
-    included) as the higher-order fold — bit-identical results — but
-    whole-stage-codegen-compiled: Spark evaluates ``aggregate``/
-    ``zip_with`` lambdas interpreted per element, which dominates a
-    multi-million-pair verify (measured ~2.5 s of a 7M-pair verify at
-    sf1.0).  Callers must only pass ``dim`` when the arrays are exactly
-    that long (element_at past the end yields NULL and would drop the
-    row); dim=None keeps the length-generic fold."""
-    if dim is None:
-        dot = F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-        na = F.sqrt(F.aggregate(a, F.lit(0.0).cast("double"),
-                                lambda acc, x: acc + x * x))
-        nb = F.sqrt(F.aggregate(b, F.lit(0.0).cast("double"),
-                                lambda acc, x: acc + x * x))
-        return dot / (na * nb)
-    dot = F.lit(0.0).cast("double")
-    sa = F.lit(0.0).cast("double")
-    sb = F.lit(0.0).cast("double")
-    for i in range(1, dim + 1):
-        ea, eb = F.element_at(a, i), F.element_at(b, i)
-        dot = dot + ea * eb
-        sa = sa + ea * ea
-        sb = sb + eb * eb
-    return dot / (F.sqrt(sa) * F.sqrt(sb))
+    The one cosine of every embedding operator: an Arrow batch kernel
+    whose dot product and both squared norms accumulate one dimension
+    at a time from 0.0, vectorized across the batch's pairs.  That is
+    the left-to-right IEEE order of Spark's ``aggregate``/``zip_with``
+    fold, so the result is bit-identical to it (``@``, einsum and BLAS
+    reassociate the sums and are not).  The width comes from the data.
+    As under the ANSI fold, a null array, a null element or arrays of
+    unequal length give null, and a zero-norm or empty vector raises
+    ``DIVIDE_BY_ZERO``.  ``mapInArrow``, not ``mapInPandas``: the pandas
+    conversion turns a null element into NaN, where the fold returns
+    null for one and NaN for the other.  Float elements widen to double
+    exactly, as Spark's cast does, so callers need no cast."""
+    def run(batches):
+        for batch in batches:
+            cos = _cosines(batch.column(a), batch.column(b))
+            yield batch.drop_columns([a, b]).append_column("cosine", cos)
+
+    return pairs.mapInArrow(
+        run, pairs.drop(a, b).schema.add("cosine", "double"))
 
 
-def cosine_topk(emb: DataFrame, query_ids, k: int = 5,
-                dim: int | None = None) -> DataFrame:
+def _cosines(a, b):
+    """Per-row cosine of two Arrow list<float|double> arrays (see
+    :func:`pair_cosine`)."""
+    import numpy as np
+    import pyarrow as pa
+
+    ao = a.offsets.to_numpy().astype(np.int64)
+    bo = b.offsets.to_numpy().astype(np.int64)
+    width = ao[1:] - ao[:-1]
+    ok = ((width == bo[1:] - bo[:-1])
+          & a.is_valid().to_numpy(zero_copy_only=False)
+          & b.is_valid().to_numpy(zero_copy_only=False))
+    vals = []
+    for side, off in ((a, ao), (b, bo)):
+        v = side.values
+        if v.null_count:  # a row holding a null element is null
+            nulls = np.concatenate(
+                [[0], np.cumsum(v.is_null().to_numpy(zero_copy_only=False))])
+            ok &= nulls[off[1:]] == nulls[off[:-1]]
+        vals.append(v.to_numpy(zero_copy_only=False)
+                    .astype(np.float64, copy=False))
+    out = np.zeros(len(a))
+    for w in np.unique(width[ok]):
+        rows = np.flatnonzero(ok & (width == w))
+        d = np.arange(w)[:, None]
+        x = vals[0][ao[rows] + d]  # (w, pairs): one contiguous row per dim
+        y = vals[1][bo[rows] + d]
+        dot = sa = sb = np.zeros(len(rows))
+        for i in range(w):
+            dot = dot + x[i] * y[i]
+            sa = sa + x[i] * x[i]
+            sb = sb + y[i] * y[i]
+        den = np.sqrt(sa) * np.sqrt(sb)
+        if (den == 0).any():
+            raise ZeroDivisionError(
+                "[DIVIDE_BY_ZERO] cosine of a zero-norm or empty vector")
+        out[rows] = dot / den
+    return pa.array(out, mask=~ok)
+
+
+def cosine_topk(emb: DataFrame, query_ids, k: int = 5) -> DataFrame:
     """Exact top-k neighbours for the given query vec_ids (excluding
     self).  Query side is tiny -> broadcast join, no shuffle of the
-    corpus.  Pass ``dim`` when the embedding width is known to get the
-    codegen-unrolled cosine (bit-identical; see :func:`_cosine`)."""
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+    corpus; the pairs go through :func:`_exact_rerank`."""
+    e = emb.select("vec_id", "embedding")
     q = e.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    scored = (
-        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(_cosine("qv", "embedding", dim), 4).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _exact_rerank(
+        e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")), k)
 
 
 def plane_coefficients(planes: int, dim: int) -> list:
@@ -115,25 +129,29 @@ def _seq_dot(x, mat):
     return acc
 
 
-def hyperplane_buckets(emb: DataFrame, planes: int, tables: int,
-                       dim: int = 64) -> DataFrame:
+def hyperplane_buckets(emb: DataFrame, planes: int, tables: int) -> DataFrame:
     """Multi-table signatures: one bucket per table (array<bigint>),
     table t using planes [t*planes, (t+1)*planes) of the deterministic
-    coefficient stream.  Unlike packing all tables into one integer,
-    this has no 63-bit ceiling."""
+    coefficient stream, one coefficient per dimension of the batch's
+    vectors.  Unlike packing all tables into one integer, this has no
+    63-bit ceiling."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     total = planes * tables
-    mat = np.asarray(plane_coefficients(total, dim), dtype=np.float64).T
     w = (np.int64(1) << np.arange(planes, dtype=np.int64))
+    mats = {}  # width -> (width, total) planes, built once per task
 
     @pandas_udf("array<bigint>")
     def buckets(col: pd.Series) -> pd.Series:
         if len(col) == 0:
             return pd.Series([], dtype="object")
         x = np.asarray(col.tolist(), dtype=np.float64)
-        bits = (_seq_dot(x, mat) >= 0).astype(np.int64)  # (n, total)
+        dim = x.shape[1]
+        if dim not in mats:
+            mats[dim] = np.asarray(plane_coefficients(total, dim),
+                                   dtype=np.float64).T
+        bits = (_seq_dot(x, mats[dim]) >= 0).astype(np.int64)  # (n, total)
         per_table = bits.reshape(len(x), tables, planes) @ w  # (n, tables)
         return pd.Series(list(per_table))
 
@@ -141,14 +159,15 @@ def hyperplane_buckets(emb: DataFrame, planes: int, tables: int,
 
 
 def train_ivf_centroids(emb: DataFrame, n_clusters: int = 16,
-                        iters: int = 5, dim: int = 64):
+                        iters: int = 5):
     """Distributed k-means for the IVF coarse quantizer.
 
-    Init = the n_clusters lowest vec_ids (seed-free); each Lloyd
-    iteration is one Spark job: an Arrow-kernel argmin assignment
-    (broadcast centroid matrix, one matmul per batch) + a groupBy mean.
-    Only the k x dim centroid table ever reaches the driver — the
-    classic iterative-algorithm shape (driver loop, distributed step).
+    Init = the n_clusters lowest vec_ids (seed-free; their width is the
+    centroids'); each Lloyd iteration is one Spark job: an Arrow-kernel
+    argmin assignment (broadcast centroid matrix, one matmul per batch)
+    + a groupBy mean.  Only the k x dim centroid table ever reaches the
+    driver — the classic iterative-algorithm shape (driver loop,
+    distributed step).
 
     Determinism caveat: the centroid means are float aggregations whose
     rounding depends on partition/merge order, so two runs under
@@ -177,7 +196,7 @@ def train_ivf_centroids(emb: DataFrame, n_clusters: int = 16,
             .agg(
                 F.array(*[
                     F.avg(F.element_at("embedding", d + 1)).alias(f"c{d}")
-                    for d in range(dim)
+                    for d in range(centroids.shape[1])
                 ]).alias("mean"),
             )
             .collect()
@@ -214,11 +233,10 @@ def _exact_rerank(cand: DataFrame, k: int) -> DataFrame:
     """Shared tail of every top-k path: exact cosine over the candidate
     set (columns query_id, vec_id, qv, embedding), rank, cut at k."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
+    scored = pair_cosine(
+        cand.select("query_id", "vec_id", "qv", "embedding"), "qv", "embedding")
     return (
-        cand.select(
-            "query_id", "vec_id",
-            F.round(_cosine("qv", "embedding"), 4).alias("cosine"),
-        )
+        scored.select("query_id", "vec_id", F.round("cosine", 4).alias("cosine"))
         .withColumn("rk", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rk") <= k)
         .select("query_id", "vec_id", "cosine", "rk")
@@ -333,10 +351,7 @@ def ivf_topk_served(emb: DataFrame, centroids_df: DataFrame, query_ids,
     tests/test_similarity.py)."""
     cmat, csq, cids = _load_centroids(centroids_df)
 
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+    e = emb.select("vec_id", "embedding")
     assigned = assign_ivf(e, cmat, csq, cids)
 
     # probe selection touches ONLY the filtered query rows (a handful)
@@ -429,38 +444,33 @@ def semantic_dedup_pairs(emb: DataFrame, centroids_df: DataFrame,
     matters.  Consume pairs with ``components.keep_one_per_component``
     (src='vec_a', dst='vec_b') for the keep-one decision."""
     cmat, csq, cids = _load_centroids(centroids_df)
-    dim = cmat.shape[1]  # embeddings assigned against these centroids
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    assigned = assign_ivf(e, cmat, csq, cids)
+    assigned = assign_ivf(emb.select("vec_id", "embedding"), cmat, csq, cids)
     a = assigned.select(F.col("cluster"), F.col("vec_id").alias("vec_a"),
                         F.col("embedding").alias("ea"))
     b = assigned.select(F.col("cluster"), F.col("vec_id").alias("vec_b"),
                         F.col("embedding").alias("eb"))
-    return (
+    pairs = (
         a.join(b, "cluster")
         .filter(F.col("vec_a") < F.col("vec_b"))
+        .select("vec_a", "vec_b", "cluster", "ea", "eb")
+    )
+    return (
+        pair_cosine(pairs, "ea", "eb")
         .select("vec_a", "vec_b", "cluster",
-                F.round(_cosine("ea", "eb", dim), 4).alias("cosine"))
+                F.round("cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
 
 def lsh_topk(emb: DataFrame, query_ids, k: int = 5, planes: int = 8,
-             tables: int = 8, dim: int = 64) -> DataFrame:
+             tables: int = 8) -> DataFrame:
     """Approximate top-k: multi-table hyperplane LSH — a corpus vector is
     a candidate when it shares the query's bucket in ANY of `tables`
     independent hash tables (per-table recall (1 - theta/pi)^planes is
     lifted to 1 - (1 - r)^L); exact cosine re-rank inside the candidate
     union.  Queries are tiny -> broadcast; the corpus is scanned once
     and never shuffled before the candidate filter."""
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    signed = hyperplane_buckets(e, planes, tables, dim)
+    signed = hyperplane_buckets(emb, planes, tables)
     banded = signed.select(
         "vec_id", "embedding",
         F.posexplode("buckets").alias("tbl", "tbucket"),
@@ -481,18 +491,8 @@ def lsh_topk(emb: DataFrame, query_ids, k: int = 5, planes: int = 8,
         # a pair found in several tables must score once; every copy
         # carries the same vectors, so first-per-(query,vec) is exact
         .dropDuplicates(["query_id", "vec_id"])
-        .select("query_id", "vec_id", "qv", "embedding")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.select(
-            "query_id", "vec_id",
-            F.round(_cosine("qv", "embedding"), 4).alias("cosine"),
-        )
-        .withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _exact_rerank(cand, k)
 
 
 # ---------------------------------------------------------------------------
@@ -520,24 +520,24 @@ PQ_KSUB = 16      # codes per subspace
 
 
 def train_pq_codebooks(emb: DataFrame, m: int = PQ_M, ksub: int = PQ_KSUB,
-                       iters: int = 5, dim: int = 64):
+                       iters: int = 5):
     """Lloyd per subspace, all M subspaces per distributed job: one
     Arrow argmin assignment (codes array per row) + ONE groupBy
     (subspace, code) mean per iteration — 2 jobs x iters regardless of
     M.  Init = the sub-vectors of the ksub lowest vec_ids (seed-free,
-    the train_ivf_centroids convention).  Returns a (m, ksub, dim/m)
-    float64 array.  Same determinism contract as train_ivf_centroids:
-    the means are partition-order floats, so the TRAINED table is the
-    reproducibility boundary — stage it, and everything downstream is
-    bit-identical.  At 10^12 rows train on a sample (the published
-    practice); encoding still sees every row."""
+    the train_ivf_centroids convention; their width is dim).  Returns a
+    (m, ksub, dim/m) float64 array.  Same determinism contract as
+    train_ivf_centroids: the means are partition-order floats, so the
+    TRAINED table is the reproducibility boundary — stage it, and
+    everything downstream is bit-identical.  At 10^12 rows train on a
+    sample (the published practice); encoding still sees every row."""
     import numpy as np
 
-    dsub = dim // m
     init = (
         emb.orderBy("vec_id").limit(ksub)
         .select("embedding").collect()
     )
+    dsub = len(init[0]["embedding"]) // m
     cb = np.asarray(
         [[list(r["embedding"])[s * dsub:(s + 1) * dsub] for r in init]
          for s in range(m)], dtype=np.float64)        # (m, ksub, dsub)

@@ -15,18 +15,20 @@ def spark():
 def graph_paths():
     """``graph_paths(run)`` -> ``[on the kernel, on the relational
     program]``: ``run()`` twice, with ``operators.graph._KERNEL_EDGES``
-    forcing each plan in turn, checking that each took its plan."""
+    forcing each plan in turn, checking that each took its plan.
+    ``has_edges=False``: the graph has no edge, so neither plan runs and
+    the kernel must not be called."""
     from unittest import mock
 
     from origami_spark.operators import graph
 
-    def both(run):
+    def both(run, has_edges=True):
         out = []
         for limit in (1 << 62, -1):
             with mock.patch.object(graph, "_KERNEL_EDGES", limit), \
                     mock.patch.object(graph, "_in_task",
                                       wraps=graph._in_task) as kernel:
                 out.append(run())
-            assert kernel.called == (limit > 0)
+            assert kernel.called == (has_edges and limit > 0)
         return out
     return both

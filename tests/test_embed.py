@@ -132,7 +132,7 @@ def test_vectors_feed_semantic_dedup(spark):
 
     dim = 32
     emb = hashed_embedding_vectors(_docs_df(spark), dim=dim)
-    cents = train_ivf_centroids(emb, n_clusters=2, iters=2, dim=dim)
+    cents = train_ivf_centroids(emb, n_clusters=2, iters=2)
     cdf = spark.createDataFrame(
         [(int(i), [float(v) for v in c],
           float(sum(float(v) * float(v) for v in c)))
