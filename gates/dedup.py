@@ -3,6 +3,7 @@
 from pyspark.sql import functions as F
 
 from origami_spark.operators import dedup as D
+from origami_spark.session import cache
 
 from gates import _H60, _TOKENS, _t, gate
 
@@ -307,7 +308,7 @@ def dedup_incremental(spark, sf):
     corpus = docs.filter(F.col("doc_id") % 4 != 0)
     batch = docs.filter(F.col("doc_id") % 4 == 0)
     idx = D.signature_index(corpus)
-    return D.incremental_candidates(batch, idx)
+    return D.incremental_candidates(cache(D.signature_index(batch)), idx)
 
 
 # incremental exact dedup: the same deterministic source-id

@@ -13,6 +13,8 @@ DuckDB oracles reproduce results bit-identically.
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -282,30 +284,6 @@ def minhash_signatures_kernel(docs: DataFrame, n: int = 3,
     )
 
 
-def _banded(sigs: DataFrame, k: int, bands: int,
-            keep_sig: bool = False) -> DataFrame:
-    """(doc_id, sig) -> one row per (doc_id, band) with the band's
-    minhash slice serialized as the LSH bucket key; ``keep_sig``
-    carries the full signature along (the index/verification shape)."""
-    rows_per_band = k // bands
-    cols = ["doc_id", "band",
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at("sig", F.col("band") * rows_per_band + j + 1)
-                    .cast("string")
-                    for j in range(rows_per_band)
-                ],
-            ).alias("bucket")]
-    if keep_sig:
-        cols.append(F.col("sig"))
-    return sigs.select(
-        "doc_id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-        "sig",
-    ).select(*cols)
-
-
 def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
                            bands: int = 4,
                            min_sig_agreement: float | None = None,
@@ -314,7 +292,9 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     pair (shingle -> minhash -> band -> bucket equality join).
 
     Signatures come from the Arrow kernel, asserted bit-identical to
-    the pure-relational ``minhash_signatures`` in tests/test_dedup.py.
+    the pure-relational ``minhash_signatures`` in tests/test_dedup.py,
+    and ride along in the ``signature_index`` rows the pairs are built
+    from, so verification reads them off each pair with no re-join.
 
     ``min_sig_agreement`` VERIFIES candidates before returning them: the
     fraction of agreeing minhash components is an unbiased Jaccard
@@ -334,55 +314,66 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     None (default) keeps exact all-pairs semantics.  Residual skew
     below the cap is AQE's job — tests/test_skew.py plants a hot
     bucket and asserts the adaptive skew-join split actually fires."""
-    sigs = cache(minhash_signatures_kernel(docs, n, k))
-    banded = _banded(sigs, k, bands)
-    if max_bucket is not None:
-        stats = banded.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("_bn"), F.min("doc_id").alias("_rep"))
-        with_stats = banded.join(stats, ["band", "bucket"])
-        banded_small = with_stats.filter(
-            F.col("_bn") <= max_bucket).drop("_bn", "_rep")
-        star = (
-            with_stats.filter((F.col("_bn") > max_bucket)
-                              & (F.col("doc_id") != F.col("_rep")))
-            .select(F.col("_rep").alias("doc_a"),
-                    F.col("doc_id").alias("doc_b"))
-        )
-    else:
-        banded_small, star = banded, None
-    cand = (
-        banded_small.alias("a")
-        .join(banded_small.alias("b"), ["band", "bucket"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-    )
-    if star is not None:
-        cand = cand.unionByName(star)
-    cand = cand.distinct()
+    pairs = _bucket_pairs(cache(signature_index(docs, n, k, bands)),
+                          max_bucket)
     if min_sig_agreement is None:
-        return cand
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb"))
+        return pairs.select("doc_a", "doc_b").distinct()
     return (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .withColumn("sig_agreement", _sig_agreement(k))
+        pairs.withColumn("sig_agreement", _sig_agreement())
         .filter(F.col("sig_agreement") >= min_sig_agreement)
         .select("doc_a", "doc_b", "sig_agreement")
+        .distinct()
     )
 
 
-def _sig_agreement(k: int) -> F.Column:
+def _bucket_join(a: DataFrame, b: DataFrame, keep) -> DataFrame:
+    """``(doc_a, doc_b, sa, sb)`` for every row of ``a`` and row of
+    ``b`` in one (band, bucket) whose doc ids pass ``keep``."""
+    return (
+        a.alias("a").join(b.alias("b"), ["band", "bucket"])
+        .filter(keep(F.col("a.doc_id"), F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("doc_a"),
+                F.col("b.doc_id").alias("doc_b"),
+                F.col("a.sig").alias("sa"), F.col("b.sig").alias("sb"))
+    )
+
+
+def _bucket_pairs(idx: DataFrame, max_bucket: int | None) -> DataFrame:
+    """The one bucket-pair builder over ``signature_index`` rows:
+    ``(doc_a, doc_b, sa, sb)`` for each ``doc_a < doc_b`` sharing a
+    (band, bucket), with both signatures carried.  A bucket holding
+    more than ``max_bucket`` rows emits star pairs instead: its min
+    doc_id against every other member.  The hub's signature comes from
+    the same ``(band, bucket)`` aggregate as the count — ``min`` over
+    ``(doc_id, sig)`` structs orders by doc_id first.  Pairs repeat
+    once per shared band; callers dedupe."""
+    if max_bucket is None:
+        return _bucket_join(idx, idx, operator.lt)
+    stats = idx.groupBy("band", "bucket").agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.min(F.struct("doc_id", "sig")).alias("_hub"))
+    rows = idx.join(stats, ["band", "bucket"])
+    small = rows.filter(F.col("_n") <= max_bucket).drop("_n", "_hub")
+    star = (
+        rows.filter((F.col("_n") > max_bucket)
+                    & (F.col("doc_id") != F.col("_hub.doc_id")))
+        .select(F.col("_hub.doc_id").alias("doc_a"),
+                F.col("doc_id").alias("doc_b"),
+                F.col("_hub.sig").alias("sa"), F.col("sig").alias("sb"))
+    )
+    return _bucket_join(small, small, operator.lt).unionByName(star)
+
+
+def _sig_agreement() -> F.Column:
     """Fraction of agreeing minhash components between the ``sa`` and
     ``sb`` signature columns, rounded BEFORE any threshold filter (the
     oracle-portability rule) — an unbiased Jaccard estimate (MMDS
-    ch.3).  One shared expression so the full-corpus and incremental
-    verification paths can never drift apart."""
+    ch.3).  k is the signature's own length.  One shared expression so
+    the full-corpus and incremental verification paths can never drift
+    apart."""
     agree = (
         F.size(F.filter(F.zip_with("sa", "sb", lambda x, y: x == y),
-                        lambda m: m)).cast("double") / k
+                        lambda m: m)).cast("double") / F.size("sa")
     )
     return F.round(agree, 4)
 
@@ -390,143 +381,96 @@ def _sig_agreement(k: int) -> F.Column:
 def signature_index(docs: DataFrame, n: int = 3, k: int = 16,
                     bands: int = 4) -> DataFrame:
     """The PERSISTABLE near-dup index: one row per (doc, band) with the
-    LSH bucket key and the full signature — ``(doc_id, band, bucket,
-    sig)``.  At 100 TB a new crawl batch must not recompute the whole
-    corpus's signatures: write this once (per corpus snapshot), then
-    dedup each arriving batch with ``incremental_candidates`` /
-    ``incremental_keep``, appending the survivors' index rows.  Stored
-    as a table bucketed on (band, bucket), the incremental join reads
-    the corpus side with NO exchange — only the new batch shuffles
-    (asserted in tests/test_dedup_incremental.py)."""
-    sigs = minhash_signatures_kernel(docs, n, k)
-    return _banded(sigs, k, bands, keep_sig=True)
+    LSH bucket key (the band's minhash slice, comma-joined) and the full
+    signature — ``(doc_id, band, bucket, sig)``.  At 100 TB a new crawl
+    batch must not recompute the whole corpus's signatures: write this
+    once (per corpus snapshot), then dedup each arriving batch's own
+    index rows with ``incremental_candidates`` / ``incremental_keep``,
+    appending the survivors' rows.  Stored as a table bucketed on
+    (band, bucket), the incremental join reads the corpus side with NO
+    exchange — only the new batch shuffles (asserted in
+    tests/test_dedup_incremental.py)."""
+    rows_per_band = k // bands
+    return minhash_signatures_kernel(docs, n, k).select(
+        "doc_id",
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
+        "sig",
+    ).select(
+        "doc_id", "band",
+        F.concat_ws(
+            ",",
+            *[
+                F.element_at("sig", F.col("band") * rows_per_band + j + 1)
+                .cast("string")
+                for j in range(rows_per_band)
+            ],
+        ).alias("bucket"),
+        "sig",
+    )
 
 
-def incremental_candidates(new_docs: DataFrame, index: DataFrame,
-                           n: int = 3, k: int = 16, bands: int = 4,
+def incremental_candidates(batch_index: DataFrame, index: DataFrame,
                            min_sig_agreement: float | None = None,
-                           new_index: DataFrame | None = None,
-                           max_bucket: int | None = None,
-                           cap_index: bool = True) -> DataFrame:
-    """Near-dup candidates TOUCHING a new batch only, against a
-    prebuilt ``signature_index``: ``(doc_a, doc_b, kind)`` where
-    ``kind='corpus'`` pairs an indexed doc (doc_a) with a new doc
-    (doc_b), and ``kind='batch'`` pairs two new docs (doc_a < doc_b).
-    Banding is per-doc deterministic, so the union of both kinds equals
-    the pairs a full-corpus ``minhash_lsh_candidates`` run would emit
-    restricted to pairs touching the batch (asserted in tests) — the
-    corpus×corpus quadrant is exactly the work the index amortizes
-    away.  ``min_sig_agreement`` verifies pairs from the carried
-    signatures (same estimator as minhash_lsh_candidates), appending a
+                           max_bucket: int | None = None) -> DataFrame:
+    """Near-dup candidates TOUCHING a new batch only: ``batch_index``
+    is the batch's own ``signature_index`` rows, ``index`` the corpus's.
+    Returns ``(doc_a, doc_b, kind)`` where ``kind='corpus'`` pairs an
+    indexed doc (doc_a) with a batch doc (doc_b), and ``kind='batch'``
+    pairs two batch docs (doc_a < doc_b).  Banding is per-doc
+    deterministic, so the union of both kinds equals the pairs a
+    full-corpus ``minhash_lsh_candidates`` run would emit restricted to
+    pairs touching the batch (asserted in tests) — the corpus×corpus
+    quadrant is exactly the work the index amortizes away.
+    ``min_sig_agreement`` verifies pairs from the carried signatures
+    (same estimator as minhash_lsh_candidates), appending a
     ``sig_agreement`` column.  A re-crawled doc_id (present in both the
     index and the batch) pairs with itself only if contents still
     collide — callers wanting keep-newest semantics should digest-dedup
-    first (streaming/corpus.py does).  ``new_index`` supplies the
-    batch's own ``signature_index`` rows when the caller already
-    computed them (the streaming sink signs each batch once for both
-    the dedup and the index append).
+    first (streaming/corpus.py does).  ``batch_index`` is read by both
+    joins: pass it checkpointed (the streaming sink signs each batch
+    once for the dedup and the index append).
 
-    ``max_bucket`` bounds hot (band, bucket) keys — the long-running-
-    stream hazard where a templated page family accumulates O(stream
-    lifetime) index rows in one bucket and each new colliding doc pays
-    for all of them.  Index buckets larger than the cap join through
-    their min-doc_id representative row only; batch buckets larger
-    than the cap emit STAR pairs (member vs the bucket's min batch
-    doc).  As with ``minhash_lsh_candidates(max_bucket=...)``, capping
-    preserves the connectivity the keep/connected-component consumer
-    needs but can miss a verification-passing pairing that a capped-
-    away member would have supplied — it is not for exhaustive pair
-    listing, and under ``min_sig_agreement`` the pinned min-id
-    representative may chronically fail verification that capped-away
-    members would pass.  Prefer capping the index at APPEND time
-    (bounded, diverse members, verification sees all of them — what
-    the streaming sink does) and leave this OFF for pre-capped
-    indexes; note also that computing the index-side bucket stats here
-    costs a pass over the index per call.  ``cap_index=False`` applies
-    ``max_bucket`` to the BATCH side only (the star capping) — the
-    shape for a pre-capped index, where read-time index capping would
-    be wasted stats work (the streaming sink's configuration)."""
-    new_idx = cache(
-        new_index if new_index is not None
-        else signature_index(new_docs, n, k, bands))
-    within_small, star = new_idx, None
-    if max_bucket is not None and cap_index:
-        istats = index.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("_in"), F.min("doc_id").alias("_irep"))
-        index = (
-            index.join(istats, ["band", "bucket"])
-            .filter((F.col("_in") <= max_bucket)
-                    | (F.col("doc_id") == F.col("_irep")))
-            .drop("_in", "_irep")
-        )
-    if max_bucket is not None:
-        bstats = new_idx.groupBy("band", "bucket").agg(
-            F.count(F.lit(1)).alias("_bn"), F.min("doc_id").alias("_rep"))
-        with_stats = new_idx.join(bstats, ["band", "bucket"])
-        within_small = with_stats.filter(
-            F.col("_bn") <= max_bucket).drop("_bn", "_rep")
-        reps = (
-            with_stats.filter((F.col("_bn") > max_bucket)
-                              & (F.col("doc_id") == F.col("_rep")))
-            .select("band", "bucket", F.col("doc_id").alias("_rid"),
-                    F.col("sig").alias("_rsig"))
-        )
-        members = with_stats.filter(
-            (F.col("_bn") > max_bucket) & (F.col("doc_id") != F.col("_rep")))
-        star = (
-            members.join(reps, ["band", "bucket"])
-            .select(F.col("_rid").alias("doc_a"),
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("_rsig").alias("sa"), F.col("sig").alias("sb"))
-            .withColumn("kind", F.lit("batch"))
-        )
-    cross = (
-        index.alias("c").join(new_idx.alias("b"), ["band", "bucket"])
-        .filter(F.col("c.doc_id") != F.col("b.doc_id"))
-        .select(F.col("c.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("c.sig").alias("sa"), F.col("b.sig").alias("sb"))
+    ``max_bucket`` caps the BATCH side exactly as
+    ``minhash_lsh_candidates(max_bucket=...)`` does (the same builder):
+    a batch bucket larger than the cap emits star pairs against its
+    min batch doc, so a hot bucket arriving in one batch costs O(m)
+    pairs, not m(m-1)/2.  The corpus side is never capped here — bound
+    it at append time, as the streaming sink does, so verification
+    sees every (bounded, diverse) member of a hot bucket."""
+    cand = (
+        _bucket_join(index, batch_index, operator.ne)
         .withColumn("kind", F.lit("corpus"))
+        .unionByName(_bucket_pairs(batch_index, max_bucket)
+                     .withColumn("kind", F.lit("batch")))
+        # an index can hold two signature sets for one re-crawled
+        # doc_id, so dedupe before verifying: one verdict per pair
+        .dropDuplicates(["doc_a", "doc_b", "kind"])
     )
-    within = (
-        within_small.alias("a").join(within_small.alias("b"),
-                                     ["band", "bucket"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.sig").alias("sa"), F.col("b.sig").alias("sb"))
-        .withColumn("kind", F.lit("batch"))
-    )
-    cand = cross.unionByName(within)
-    if star is not None:
-        cand = cand.unionByName(star)
-    cand = cand.dropDuplicates(["doc_a", "doc_b", "kind"])
     if min_sig_agreement is None:
         return cand.select("doc_a", "doc_b", "kind")
     return (
-        cand.withColumn("sig_agreement", _sig_agreement(k))
+        cand.withColumn("sig_agreement", _sig_agreement())
         .filter(F.col("sig_agreement") >= min_sig_agreement)
         .select("doc_a", "doc_b", "kind", "sig_agreement")
     )
 
 
-def incremental_keep(new_docs: DataFrame, index: DataFrame,
-                     id_col: str = "doc_id", n: int = 3, k: int = 16,
-                     bands: int = 4,
+def incremental_keep(new_docs: DataFrame, batch_index: DataFrame,
+                     index: DataFrame,
                      min_sig_agreement: float | None = 0.5,
-                     new_index: DataFrame | None = None,
-                     max_bucket: int | None = None,
-                     cap_index: bool = True) -> DataFrame:
-    """The incremental dedup DECISION: batch docs surviving against the
-    corpus index and each other, under the SAME transitive cluster
-    rule the batch pipeline uses (components.keep_one_per_component):
-    connected components over ALL candidate pairs — corpus and batch
-    edges together.  A component containing any indexed doc keeps its
-    corpus copy, so every batch member drops (including one whose only
-    link to the corpus runs THROUGH another dropped batch doc — chain
-    corpus~A, A~B drops both A and B, matching 'a chain is ONE
-    cluster'); a corpus-free component keeps exactly its min-id batch
-    doc.  Defaults verify candidates (sig agreement >= 0.5); pass
+                     max_bucket: int | None = None) -> DataFrame:
+    """The incremental dedup DECISION: rows of ``new_docs`` (keyed by
+    ``doc_id``) surviving against the corpus ``index`` and each other,
+    given ``batch_index``, the ``signature_index`` rows of
+    ``new_docs``.  It applies the SAME transitive cluster rule the
+    batch pipeline uses (components.keep_one_per_component): connected
+    components over ALL ``incremental_candidates`` pairs — corpus and
+    batch edges together.  A component containing any indexed doc
+    keeps its corpus copy, so every batch member drops (including one
+    whose only link to the corpus runs THROUGH another dropped batch
+    doc — chain corpus~A, A~B drops both A and B, matching 'a chain is
+    ONE cluster'); a corpus-free component keeps exactly its min-id
+    batch doc.  Defaults verify candidates (sig agreement >= 0.5); pass
     ``min_sig_agreement=None`` only when the index was built from
     already-verified duplicates.
 
@@ -543,9 +487,8 @@ def incremental_keep(new_docs: DataFrame, index: DataFrame,
     from .components import connected_components
 
     cand = cache(incremental_candidates(
-        new_docs, index, n, k, bands,
-        min_sig_agreement=min_sig_agreement, new_index=new_index,
-        max_bucket=max_bucket, cap_index=cap_index))
+        batch_index, index, min_sig_agreement=min_sig_agreement,
+        max_bucket=max_bucket))
 
     def _nonneg(c):
         # loud guard: a negative batch id would be indistinguishable
@@ -572,9 +515,8 @@ def incremental_keep(new_docs: DataFrame, index: DataFrame,
             batch_nodes.join(tainted, "component", "left_anti")
             .filter(F.col("doc_id") != F.col("component"))
             .select("doc_id"))
-        .withColumnRenamed("doc_id", id_col)
     )
-    return new_docs.join(drop, id_col, "left_anti")
+    return new_docs.join(drop, "doc_id", "left_anti")
 
 
 def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:

@@ -416,10 +416,7 @@ def cluster_assign(emb: DataFrame, centroids_df: DataFrame) -> DataFrame:
 
     Output: the input columns plus ``cluster`` (BIGINT)."""
     cmat, csq, cids = _load_centroids(centroids_df)
-    e = emb.withColumn(
-        "embedding",
-        F.transform("embedding", lambda x: x.cast("double")))
-    return (assign_ivf(e, cmat, csq, cids)
+    return (assign_ivf(emb, cmat, csq, cids)
             .withColumn("cluster", F.col("cluster").cast("bigint")))
 
 
@@ -690,10 +687,7 @@ def pq_topk(emb: DataFrame, codebooks_df: DataFrame, query_ids,
     cb = _load_pq_codebooks(codebooks_df)
     m, ksub, dsub = cb.shape
     c_sq = _pq_csq(cb)
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+    e = emb.select("vec_id", "embedding")
     q_rows = sorted(
         e.filter(F.col("vec_id").isin(list(query_ids))).collect(),
         key=lambda r: r["vec_id"],
@@ -790,10 +784,7 @@ def ivfpq_topk(emb: DataFrame, centroids_df: DataFrame,
     cb = _load_pq_codebooks(codebooks_df)
     m, ksub, dsub = cb.shape
     c_sq = _pq_csq(cb)
-    e = emb.select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
+    e = emb.select("vec_id", "embedding")
     assigned = assign_ivf(e, cmat, csq, cids)
 
     q = e.filter(F.col("vec_id").isin(list(query_ids)))

@@ -190,12 +190,9 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
     lower-doc_id rows appended by this same batch (its OTHER band rows
     still land, so the doc stays discoverable through remaining bands).
     Append-time capping keeps up to ``max_bucket`` DIVERSE members per
-    bucket that verification runs against in full — unlike read-time
-    index capping, which funnels a hot bucket through one
-    representative whose agreement may fail where another member would
-    pass — so index-side read capping is OFF (cap_index=False); the
-    batch side keeps its star capping so a hot bucket arriving within
-    ONE micro-batch emits O(m) star pairs, not m(m-1)/2.
+    bucket that verification runs against in full; the batch side
+    keeps its star capping so a hot bucket arriving within ONE
+    micro-batch emits O(m) star pairs, not m(m-1)/2.
 
     Touched-bucket pruning: the decision only ever consults corpus
     rows whose (band, bucket) some batch doc also occupies
@@ -217,8 +214,10 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
 
     with cache_scope():
         # three consumers (touched-bucket broadcast, the keep decision,
-        # the index append) — sign the batch once
-        new_idx = cache(signature_index(ids.select("doc_id", "text")))
+        # the index append) — sign the batch once.  A checkpoint, not a
+        # cache: the candidate self-join re-instances its right side,
+        # which no longer matches a cached plan and re-runs extraction
+        new_idx = checkpoint(signature_index(ids.select("doc_id", "text")))
         touched = new_idx.select("band", "bucket").distinct()
         try:
             corpus_idx = (
@@ -230,11 +229,9 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
             )
         except AnalysisException:   # first batch: no index dir yet
             corpus_idx = spark.createDataFrame([], _INDEX_SCHEMA)
-        surv = cache(incremental_keep(ids, corpus_idx, id_col="doc_id",
+        surv = cache(incremental_keep(ids, new_idx, corpus_idx,
                                       min_sig_agreement=min_sig_agreement,
-                                      new_index=new_idx,
-                                      max_bucket=max_bucket,
-                                      cap_index=False))
+                                      max_bucket=max_bucket))
         surv_idx = new_idx.join(surv.select("doc_id"), "doc_id")
         if max_bucket is not None:
             from pyspark.sql import Window

@@ -11,7 +11,7 @@ from origami_spark.operators.dedup import (
     minhash_lsh_candidates,
     signature_index,
 )
-from origami_spark.session import cache_scope
+from origami_spark.session import cache, cache_scope
 
 _X = ("the quick brown fox jumps over the lazy dog while the rain "
       "in spain falls mainly on the plain and the cat sat on the mat")
@@ -54,7 +54,7 @@ def test_incremental_pairs_equal_full_run_restricted(spark):
     batch_ids = {r[0] for r in batch.select("doc_id").collect()}
 
     idx = signature_index(corpus)
-    inc = incremental_candidates(batch, idx)
+    inc = incremental_candidates(signature_index(batch), idx)
     got = {frozenset((r["doc_a"], r["doc_b"]))
            for r in inc.collect()}
     kinds = {frozenset((r["doc_a"], r["doc_b"])): r["kind"]
@@ -84,7 +84,8 @@ def test_incremental_keep_corpus_wins_and_batch_keeps_min(spark):
              "and register allocation strategies"),
     ])
     kept = sorted(r["doc_id"] for r in
-                  incremental_keep(batch, signature_index(corpus)).collect())
+                  incremental_keep(batch, signature_index(batch),
+                                   signature_index(corpus)).collect())
     # 10 drops (corpus wins); 11/12 cluster keeps 11; 13 untouched
     assert kept == [11, 13]
 
@@ -97,14 +98,15 @@ def test_chain_through_corpus_dropped_doc_is_one_cluster(spark):
     too, exactly as keep_one_per_component would decide over the same
     observed pairs."""
     batch = _docs(spark, [(0, _X), (1, _X.replace("dog", "wolf"))])
-    x_rows = signature_index(batch).filter(
+    batch_idx = signature_index(batch)
+    x_rows = batch_idx.filter(
         (F.col("doc_id") == 0) & (F.col("band") == 0))
     fake_idx = x_rows.withColumn("doc_id", F.lit(900))
-    cand = incremental_candidates(batch, fake_idx)
+    cand = incremental_candidates(batch_idx, fake_idx)
     assert {(r["doc_a"], r["doc_b"], r["kind"]) for r in cand.collect()} \
         == {(900, 0, "corpus"), (0, 1, "batch")}
     kept = sorted(r["doc_id"] for r in
-                  incremental_keep(batch, fake_idx,
+                  incremental_keep(batch, batch_idx, fake_idx,
                                    min_sig_agreement=None).collect())
     assert kept == []
 
@@ -119,32 +121,29 @@ def test_corpus_free_chain_keeps_min(spark):
     ])
     empty_idx = signature_index(_docs(spark, [])).limit(0)
     kept = sorted(r["doc_id"] for r in
-                  incremental_keep(batch, empty_idx).collect())
+                  incremental_keep(batch, signature_index(batch),
+                                   empty_idx).collect())
     assert kept == [5]
 
 
 def test_max_bucket_caps_hot_index_and_batch_buckets(spark):
-    """Hot-bucket bound for the long-running-stream hazard: an index
-    bucket past the cap joins through its min-id representative only
-    (candidate volume per batch doc bounded by the cap), a hot batch
-    bucket emits star pairs — and the keep decision is unchanged."""
+    """Hot-bucket bound for the long-running-stream hazard: a hot
+    batch bucket emits star pairs — and the keep decision is
+    unchanged."""
     corpus = _docs(spark, [(i, _X) for i in range(50, 58)])
     batch = _docs(spark, [(0, _X), (1, _X), (2, _X),
                           (9, "entirely unrelated words about glass "
                               "blowing furnaces and their upkeep")])
     idx = signature_index(corpus)
-    capped = incremental_candidates(batch, idx, max_bucket=3,
+    batch_idx = signature_index(batch)
+    capped = incremental_candidates(batch_idx, idx, max_bucket=3,
                                     min_sig_agreement=None)
     rows = capped.collect()
-    cross = {(r["doc_a"], r["doc_b"]) for r in rows if r["kind"] == "corpus"}
-    # all 8 index copies share every bucket -> only the representative
-    # (min id 50) reaches the join
-    assert cross == {(50, 0), (50, 1), (50, 2)}
     # batch bucket of 3 is within the cap -> ordinary pairs
     within = {(r["doc_a"], r["doc_b"]) for r in rows if r["kind"] == "batch"}
     assert within == {(0, 1), (0, 2), (1, 2)}
     # tighter cap -> star pairs only (min batch doc as hub)
-    starred = incremental_candidates(batch, idx, max_bucket=2,
+    starred = incremental_candidates(batch_idx, idx, max_bucket=2,
                                      min_sig_agreement=None)
     within2 = {(r["doc_a"], r["doc_b"])
                for r in starred.collect() if r["kind"] == "batch"}
@@ -152,20 +151,57 @@ def test_max_bucket_caps_hot_index_and_batch_buckets(spark):
     # decision identical with and without the cap
     for mb in (None, 3, 2):
         kept = sorted(r["doc_id"] for r in
-                      incremental_keep(batch, idx, max_bucket=mb).collect())
+                      incremental_keep(batch, batch_idx, idx,
+                                       max_bucket=mb).collect())
         assert kept == [9], mb
+
+
+def test_batch_pairs_equal_full_run_capped_and_verified(spark):
+    """One bucket-pair builder serves both paths: over an empty corpus
+    index, the kind='batch' rows equal the full-corpus run row for row,
+    for every hot-bucket cap and with and without verification."""
+    # 211 shares only band 0 with _X, at agreement 7/16: a band
+    # collision that verification rejects
+    far = ("the quick brown fox jumps red blue green owl tree sun moon "
+           "in spain falls mainly on the plain and the cat sat on the mat")
+    trio = "a short page on lighthouse keepers and their long night shifts"
+    hot = [(200 + i, _X) for i in range(4)] + [
+        (210, _X.replace("rain", "snow")), (211, far),
+        (220, trio), (221, trio), (222, trio),   # buckets of exactly 3
+    ]
+    docs = _corpus(spark).unionByName(_docs(spark, hot))
+    idx = cache(signature_index(docs))
+    empty_idx = idx.limit(0)
+    sizes = {}
+    for mb in (None, 2, 3):
+        for agree in (None, 0.5):
+            full = sorted(tuple(r) for r in minhash_lsh_candidates(
+                docs, max_bucket=mb, min_sig_agreement=agree).collect())
+            inc = sorted(
+                tuple(r) for r in incremental_candidates(
+                    idx, empty_idx, max_bucket=mb,
+                    min_sig_agreement=agree)
+                .filter(F.col("kind") == "batch").drop("kind").collect())
+            assert inc == full, (mb, agree)
+            sizes[mb, agree] = len(full)
+    # the planted bucket is hot under both caps: star pairs replace
+    # its all-pairs listing, and verification drops some pairs
+    assert sizes[2, None] < sizes[3, None] < sizes[None, None], sizes
+    assert sizes[None, 0.5] < sizes[None, None], sizes
 
 
 def test_verification_appends_agreement_and_filters(spark):
     corpus = _docs(spark, [(1, _X)])
     batch = _docs(spark, [(10, _X), (11, _X.replace("rain", "snow"))])
-    cand = incremental_candidates(batch, signature_index(corpus),
+    cand = incremental_candidates(signature_index(batch),
+                                  signature_index(corpus),
                                   min_sig_agreement=0.5)
     rows = {(r["doc_a"], r["doc_b"]): r["sig_agreement"]
             for r in cand.collect()}
     assert rows[(1, 10)] == 1.0          # identical text
     assert all(v >= 0.5 for v in rows.values())
-    strict = incremental_candidates(batch, signature_index(corpus),
+    strict = incremental_candidates(signature_index(batch),
+                                    signature_index(corpus),
                                     min_sig_agreement=1.0)
     # only the exact-duplicate pair survives agreement == 1.0
     assert {(r["doc_a"], r["doc_b"]) for r in strict.collect()} == {(1, 10)}
@@ -190,7 +226,7 @@ def test_bucketed_index_joins_without_corpus_exchange(spark, tmp_path):
         # a tiny test index would be broadcast (also exchange-free, but
         # not the shape under test); force the at-scale SMJ plan
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        cand = incremental_candidates(batch, idx)
+        cand = incremental_candidates(signature_index(batch), idx)
         cand.collect()
         plan = cand._jdf.queryExecution().executedPlan().toString()
         # AQE toString prints the final plan first, then echoes the
@@ -233,7 +269,8 @@ def test_recrawled_id_not_conflated_with_its_old_index_rows(spark):
         (9, _X),
     ])
     kept = sorted(r["doc_id"] for r in
-                  incremental_keep(batch, signature_index(corpus)).collect())
+                  incremental_keep(batch, signature_index(batch),
+                                   signature_index(corpus)).collect())
     assert kept == [7]
 
 
@@ -244,7 +281,8 @@ def test_negative_ids_raise_loudly(spark):
     batch = _docs(spark, [(-3, _X), (5, _X)])
     empty_idx = signature_index(_docs(spark, [])).limit(0)
     with pytest.raises(Exception, match="non-negative"):
-        incremental_keep(batch, empty_idx).collect()
+        incremental_keep(batch, signature_index(batch),
+                         empty_idx).collect()
 
 
 # --- incremental EXACT dedup against a digest index -----------------

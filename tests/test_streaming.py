@@ -382,6 +382,43 @@ def test_stream_index_append_capping(spark, tmp_path):
     assert sorted(r["band"] for r in appended.collect()) == [1, 2, 3]
 
 
+def test_stream_near_dup_candidates_read_the_signature_checkpoint(
+        spark, tmp_path):
+    """A micro-batch signs its docs once, into a checkpoint: the
+    executed plan of its candidate frame reads the signatures from
+    there and holds no MapInPandas — neither the signature kernel nor
+    anything upstream of it runs again inside the candidate joins."""
+    from unittest.mock import patch
+
+    from origami_spark.operators import dedup
+    from origami_spark.streaming.corpus import _near_dup_against_index
+
+    text = ("some reasonably long page text about the history of "
+            "mechanical clocks and their escapements through the ages")
+    gated = spark.createDataFrame(
+        [("u_a", text), ("u_b", text), ("u_c", text),
+         ("u_d", "a completely different page concerning tidal pools")],
+        "url string, text string")
+    real = dedup.incremental_candidates
+    plans = []
+
+    def spy(*args, **kwargs):
+        out = real(*args, **kwargs)
+        n = len(out.collect())
+        plans.append((n, out._jdf.queryExecution().executedPlan().toString()))
+        return out
+
+    with patch.object(dedup, "incremental_candidates", spy):
+        # max_bucket=2: the triplet's buckets are hot, so the star
+        # branch's stats join is in the plan too
+        kept = _near_dup_against_index(
+            spark, gated, str(tmp_path / "idx"), 0, 0.5, 2).collect()
+    assert len(kept) == 2
+    [(n, plan)] = plans
+    assert n > 0
+    assert "MapInPandas" not in plan, plan
+
+
 def test_stream_near_dup_replay_is_idempotent(spark, tmp_path):
     """Replaying a micro-batch AFTER its index append landed (crash
     before checkpoint commit) must reproduce the first run exactly: the
