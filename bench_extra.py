@@ -2,9 +2,11 @@
 """Round-6 optimization harness (bench.py is FROZEN — this file is the
 builder's own instrumentation, guide §1).
 
-Times individual queries() entries with EXACTLY the frozen bench's
-methodology (``q(spark, sf).agg(count(lit(1))).collect()``, warm-first
-for WARM_FIRST entries, min-of-k with the steal meter) and can dump
+Times individual queries() entries the way the frozen bench times one
+(``q(spark, sf).agg(count(lit(1))).collect()``, min-of-k with the steal
+meter), after one untimed pass over EVERY listed entry: the frozen
+bench warms only its WARM_FIRST entries, so there a reading depends on
+which entries ran before it in the session.  Also dumps
 ``.explain("formatted")`` plans to plans/r06/.
 
 Usage:
@@ -75,11 +77,12 @@ def main():
         return
 
     names = BENCH_QUERIES if mode == "all" else rest
+    for name in names:
+        spark.sparkContext.setJobDescription(f"warm:{name}")
+        qs[name](spark, sf).agg(F.count(F.lit(1))).collect()
     results = {}
     for name in names:
         spark.sparkContext.setJobDescription(f"time:{name}")
-        if name in WARM_FIRST:
-            qs[name](spark, sf).agg(F.count(F.lit(1))).collect()
         wall, _, steal = timed_with_steal(
             lambda: qs[name](spark, sf).agg(F.count(F.lit(1))).collect(),
             min_runs=runs)

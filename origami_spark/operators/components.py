@@ -2,7 +2,9 @@
 
 The near-dup operators (``minhash_lsh_candidates``, ``simhash_near_dups``,
 ``embedding_near_dups_lsh``, ``substring_dup_pairs``) emit candidate
-PAIRS; the keep-one dedup decision needs duplicate CLUSTERS.
+PAIRS — the LSH ones through ``dedup._band_pairs``, each pair once
+unless ``max_bucket`` caps a bucket; the keep-one dedup decision needs
+duplicate CLUSTERS.
 ``connected_components`` turns a pair list into a (node, component)
 labeling where the component id is the smallest node id reachable
 through the pairs — the transitive cluster-and-keep-one semantics the

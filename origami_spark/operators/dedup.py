@@ -311,69 +311,127 @@ def minhash_lsh_candidates(docs: DataFrame, n: int = 3, k: int = 16,
     dedup consumer needs.  A star edge can fail pairwise verification
     where some other pairing would pass, so the cap is for the
     connected-component consumer, not for exhaustive pair listing;
-    None (default) keeps exact all-pairs semantics.  Residual skew
+    None (default) keeps exact all-pairs semantics, each pair emitted
+    once by :func:`_band_pairs`.  The capped path emits a pair once
+    per shared band, so it dedupes after verifying.  Residual skew
     below the cap is AQE's job — tests/test_skew.py plants a hot
     bucket and asserts the adaptive skew-join split actually fires."""
-    pairs = _bucket_pairs(cache(signature_index(docs, n, k, bands)),
-                          max_bucket)
-    if min_sig_agreement is None:
-        return pairs.select("doc_a", "doc_b").distinct()
-    return (
-        pairs.withColumn("sig_agreement", _sig_agreement())
-        .filter(F.col("sig_agreement") >= min_sig_agreement)
-        .select("doc_a", "doc_b", "sig_agreement")
-        .distinct()
-    )
-
-
-def _bucket_join(a: DataFrame, b: DataFrame, keep) -> DataFrame:
-    """``(doc_a, doc_b, sa, sb)`` for every row of ``a`` and row of
-    ``b`` in one (band, bucket) whose doc ids pass ``keep``."""
-    return (
-        a.alias("a").join(b.alias("b"), ["band", "bucket"])
-        .filter(keep(F.col("a.doc_id"), F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-                F.col("a.sig").alias("sa"), F.col("b.sig").alias("sb"))
-    )
-
-
-def _bucket_pairs(idx: DataFrame, max_bucket: int | None) -> DataFrame:
-    """The one bucket-pair builder over ``signature_index`` rows:
-    ``(doc_a, doc_b, sa, sb)`` for each ``doc_a < doc_b`` sharing a
-    (band, bucket), with both signatures carried.  A bucket holding
-    more than ``max_bucket`` rows emits star pairs instead: its min
-    doc_id against every other member.  The hub's signature comes from
-    the same ``(band, bucket)`` aggregate as the count — ``min`` over
-    ``(doc_id, sig)`` structs orders by doc_id first.  Pairs repeat
-    once per shared band; callers dedupe."""
+    idx = cache(signature_index(docs, n, k, bands))
     if max_bucket is None:
-        return _bucket_join(idx, idx, operator.lt)
-    stats = idx.groupBy("band", "bucket").agg(
+        # every band's bucket as its signature slice: equal slices are
+        # exactly equal bucket strings
+        width = k // bands
+        idx = idx.withColumn("keys", _keys(
+            [f"slice(sig, {j * width + 1}, {width})" for j in range(bands)]))
+    pairs = _band_pairs(idx, None, max_bucket)
+    cols = [F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")]
+    if min_sig_agreement is not None:
+        pairs = (pairs.withColumn("sig_agreement", _sig_agreement())
+                 .filter(F.col("sig_agreement") >= min_sig_agreement))
+        cols.append("sig_agreement")
+    out = pairs.select(*cols)
+    return out if max_bucket is None else out.distinct()
+
+
+def _band_cols(item: str, keys: list, *payload: str) -> list:
+    """The select list that turns one row per item into
+    :func:`_band_pairs` rows: the ``item`` id, its ``payload`` columns,
+    the item's bucket in every band (``keys``: one SQL expression per
+    band) and one row per band with its ``bucket``."""
+    return [item, *payload, _keys(keys).alias("keys"),
+            F.expr(f"posexplode(array({', '.join(keys)})) AS (band, bucket)")]
+
+
+def _keys(keys: list) -> F.Column:
+    """An item's bucket in every band, one struct field per band, so
+    the band count is part of the schema.  SQL text, not Column
+    expressions: building a Column costs a JVM round trip per node."""
+    return F.expr("struct(" + ", ".join(
+        f"{k} AS `{i}`" for i, k in enumerate(keys)) + ")")
+
+
+def _band_pairs(a: DataFrame, b: DataFrame | None,
+                max_bucket: int | None) -> DataFrame:
+    """The one LSH band-pair join every near-dup and top-k operator
+    pairs through.  Rows hold one (item, band) each, as
+    :func:`_band_cols` lays them out: the item id first (same name on
+    both sides), then ``band``, ``bucket`` and payload columns in any
+    order.  Returns ``(id_a, id_b, <p>_a…, <p>_b…)`` with both sides'
+    payload carried (signature, hash, embedding), so no caller re-joins
+    to verify.  ``b=None`` pairs ``a`` with itself (``id_a < id_b``);
+    otherwise every ``a`` row meets every ``b`` row of its (band,
+    bucket) with ``id_a != id_b`` — wrap ``b`` in ``F.broadcast`` when
+    it is a small query or benchmark side.
+
+    Rows that carry ``keys`` (see :func:`_keys`) emit each pair exactly
+    once, at its first shared band: a joined row survives only when no
+    band before its own has equal keys on both sides.  That is the
+    per-band emission followed by a cross-band ``distinct``, without
+    shuffling the per-band copies (OPTIMIZATION_r06: a 2.5 GB exchange
+    at sf1.0), and the test compiles with the join stage.  Rows without
+    ``keys`` emit a pair once per shared band and the caller dedupes: a
+    persisted index may hold only some of a doc's bands (the streaming
+    sink caps appends per bucket), where the first shared band's row
+    can be missing.
+
+    ``max_bucket`` (self-join only) caps hot buckets: a (band, bucket)
+    holding more rows than the cap emits star pairs instead, its min
+    id against every other member; the hub's payload comes from the
+    same aggregate as the count (``min`` over ``(id, payload…)``
+    structs orders by id first).  A star edge in an earlier capped
+    bucket is not the pair's edge, so first-band emission would lose
+    pairs here: this path ignores ``keys`` and the caller dedupes after
+    verifying."""
+    item = a.columns[0]
+    payload = [c for c in a.columns[1:] if c not in _BAND_COLS]
+
+    def pairs(x, y, keep):
+        cond = keep(F.col(f"a.{item}"), F.col(f"b.{item}"))
+        if "keys" in x.columns:
+            cond &= F.expr("NOT (" + " OR ".join(
+                f"(band > {i} AND a.keys.`{f}` = b.keys.`{f}`)"
+                for i, f in enumerate(x.schema["keys"].dataType.names)) + ")")
+        cols = [F.col(f"a.{item}").alias("id_a"),
+                F.col(f"b.{item}").alias("id_b")]
+        for side, frame in (("a", x), ("b", y)):
+            cols += [F.col(f"{side}.{c}").alias(f"{c}_{side}")
+                     for c in frame.columns if c not in (item, *_BAND_COLS)]
+        return (x.alias("a").join(y.alias("b"), ["band", "bucket"])
+                .filter(cond).select(*cols))
+
+    if b is not None:
+        return pairs(a, b, operator.ne)
+    if max_bucket is None:
+        return pairs(a, a, operator.lt)
+    stats = a.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("_n"),
-        F.min(F.struct("doc_id", "sig")).alias("_hub"))
-    rows = idx.join(stats, ["band", "bucket"])
-    small = rows.filter(F.col("_n") <= max_bucket).drop("_n", "_hub")
+        F.min(F.struct(item, *payload)).alias("_hub"))
+    rows = a.join(stats, ["band", "bucket"])
+    small = rows.filter(F.col("_n") <= max_bucket).drop(
+        "_n", "_hub", "keys")
     star = (
         rows.filter((F.col("_n") > max_bucket)
-                    & (F.col("doc_id") != F.col("_hub.doc_id")))
-        .select(F.col("_hub.doc_id").alias("doc_a"),
-                F.col("doc_id").alias("doc_b"),
-                F.col("_hub.sig").alias("sa"), F.col("sig").alias("sb"))
+                    & (F.col(item) != F.col(f"_hub.{item}")))
+        .select(F.col(f"_hub.{item}").alias("id_a"), F.col(item).alias("id_b"),
+                *[F.col(f"_hub.{c}").alias(f"{c}_a") for c in payload],
+                *[F.col(c).alias(f"{c}_b") for c in payload])
     )
-    return _bucket_join(small, small, operator.lt).unionByName(star)
+    return pairs(small, small, operator.lt).unionByName(star)
+
+
+_BAND_COLS = ("band", "bucket", "keys")
 
 
 def _sig_agreement() -> F.Column:
-    """Fraction of agreeing minhash components between the ``sa`` and
-    ``sb`` signature columns, rounded BEFORE any threshold filter (the
-    oracle-portability rule) — an unbiased Jaccard estimate (MMDS
+    """Fraction of agreeing minhash components between the ``sig_a``
+    and ``sig_b`` signature columns, rounded BEFORE any threshold filter
+    (the oracle-portability rule) — an unbiased Jaccard estimate (MMDS
     ch.3).  k is the signature's own length.  One shared expression so
     the full-corpus and incremental verification paths can never drift
     apart."""
     agree = (
-        F.size(F.filter(F.zip_with("sa", "sb", lambda x, y: x == y),
-                        lambda m: m)).cast("double") / F.size("sa")
+        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+                        lambda m: m)).cast("double") / F.size("sig_a")
     )
     return F.round(agree, 4)
 
@@ -438,20 +496,23 @@ def incremental_candidates(batch_index: DataFrame, index: DataFrame,
     it at append time, as the streaming sink does, so verification
     sees every (bounded, diverse) member of a hot bucket."""
     cand = (
-        _bucket_join(index, batch_index, operator.ne)
+        _band_pairs(index, batch_index, None)
         .withColumn("kind", F.lit("corpus"))
-        .unionByName(_bucket_pairs(batch_index, max_bucket)
+        .unionByName(_band_pairs(batch_index, None, max_bucket)
                      .withColumn("kind", F.lit("batch")))
-        # an index can hold two signature sets for one re-crawled
-        # doc_id, so dedupe before verifying: one verdict per pair
-        .dropDuplicates(["doc_a", "doc_b", "kind"])
+        # no first-band emission here: an index can hold two signature
+        # sets for one re-crawled doc_id, and only some of a doc's
+        # bands (append caps), so dedupe before verifying
+        .dropDuplicates(["id_a", "id_b", "kind"])
     )
+    cols = [F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
+            "kind"]
     if min_sig_agreement is None:
-        return cand.select("doc_a", "doc_b", "kind")
+        return cand.select(*cols)
     return (
         cand.withColumn("sig_agreement", _sig_agreement())
         .filter(F.col("sig_agreement") >= min_sig_agreement)
-        .select("doc_a", "doc_b", "kind", "sig_agreement")
+        .select(*cols, "sig_agreement")
     )
 
 
@@ -601,80 +662,31 @@ def simhash_kernel(docs: DataFrame, bits: int = 32) -> DataFrame:
     )
 
 
-def banded_hamming_pairs(hashed: DataFrame, id_col: str, hash_col: str,
-                         bits: int, bands: int,
-                         max_hamming: int) -> DataFrame:
-    """Banded hamming near-dup pairs over a precomputed integer hash:
-    any equal band -> candidate (EXACT recall for hamming <= bands-1
-    by pigeonhole; probabilistic beyond — callers promising exact
-    recall must enforce the bound themselves), verified by the true
-    xor+bit_count distance before any pair is emitted.  Returns
-    ``(id_a, id_b, hamming)`` with id_a < id_b.
-
-    The hashed relation is CACHED: it feeds both self-join sides, and
-    without the cache its producer — often a kernel over every payload
-    byte — executes twice.  ONE implementation shared by
-    simhash_near_dups and multimodal.media_near_dups, so the pigeonhole
-    recipe cannot fork.
-
-    Shuffle discipline (guide §2.3/§2.4): the hamming verify runs
-    INSIDE the join stage, and each pair is emitted exactly once — at
-    its SMALLEST shared band index (kept iff no earlier band's bits
-    also match) — instead of once per shared band followed by a
-    cross-band ``distinct``.  The old distinct shuffled every verified
-    pair; on a dup-heavy corpus the pair relation is quadratic in the
-    hot-bucket size (measured at sf1.0: 50k docs, hottest bucket 7.6k
-    docs, 272M raw candidates, 107M verified pairs — the distinct was
-    a 2.5 GB exchange that the first-match-band filter removes
-    outright).  Emitting at the minimal equal band is value-identical
-    to the distinct: both yield one row per (pair with >= 1 equal
-    band) surviving the verify."""
-    band_bits = bits // bands
-    mask = (1 << band_bits) - 1
-    sh = cache(hashed.select(
-        F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")))
-    banded = sh.select(
-        "_id", "_h",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("band"),
-    ).withColumn(
-        "bucket",
-        F.expr(f"shiftright(_h, cast(band * {band_bits} as int)) & {mask}"),
-    )
-    # true iff some band j < band has equal bits on both sides — the
-    # pair already matched earlier, so this row is the duplicate
-    earlier_equal = F.lit(False)
-    for j in range(bands - 1):
-        earlier_equal = earlier_equal | (
-            (F.col("band") > j)
-            & (F.expr(f"shiftright(a._h, {j * band_bits}) & {mask}")
-               == F.expr(f"shiftright(b._h, {j * band_bits}) & {mask}"))
-        )
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), ["band", "bucket"])
-        .filter((F.col("a._id") < F.col("b._id")) & ~earlier_equal)
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.bit_count(F.col("a._h").bitwiseXOR(F.col("b._h")))
-            .cast("bigint").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return cand.select("id_a", "id_b", "hamming")
+def _bit_bands(h: str, bits: int, bands: int) -> list:
+    """The band keys of an integer hash column: ``bands`` slices of
+    ``bits // bands`` bits each, lowest first.  Any two hashes within
+    hamming ``bands - 1`` share a band (pigeonhole), which is what
+    makes banded hamming recall exact up to that distance."""
+    width = bits // bands
+    mask = (1 << width) - 1
+    return [f"shiftright({h}, {j * width}) & {mask}" for j in range(bands)]
 
 
 def simhash_near_dups(docs: DataFrame, bits: int = 32, bands: int = 4,
                       max_hamming: int = 3) -> DataFrame:
     """Banded simhash near-dup pairs: any equal band (pigeonhole for
-    hamming <= bands-1) -> candidate; verify hamming distance."""
-    sh = simhash_kernel(docs, bits)
-    return banded_hamming_pairs(
-        sh, "doc_id", "simhash", bits, bands, max_hamming,
-    ).select(
-        F.col("id_a").alias("doc_a"),
-        F.col("id_b").alias("doc_b"),
-        "hamming",
+    hamming <= bands-1) -> candidate; the true hamming distance
+    verifies each pair inside the join stage.  Returns ``(doc_a, doc_b,
+    hamming)`` with doc_a < doc_b.  The hashes are cached: they feed
+    both sides of the self-join, and the kernel reads every doc."""
+    rows = cache(simhash_kernel(docs, bits)).select(*_band_cols(
+        "doc_id", _bit_bands("simhash", bits, bands), "simhash"))
+    return (
+        _band_pairs(rows, None, None)
+        .select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"),
+                F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+                .cast("bigint").alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
     )
 
 
@@ -886,8 +898,8 @@ def substring_dup_pairs(docs: DataFrame, window: int = 64,
     )
 
 
-def embedding_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
-                            planes: int = 6, tables: int = 8) -> DataFrame:
+def embedding_near_dups_lsh(emb: DataFrame, threshold: float,
+                            planes: int, tables: int) -> DataFrame:
     """Scale path: multi-table random-hyperplane LSH — candidates share
     a bucket in ANY of `tables` independent hash tables; exact cosine
     verify inside buckets only.
@@ -897,55 +909,22 @@ def embedding_near_dups_lsh(emb: DataFrame, threshold: float = 0.95,
     At 10^12 rows this bucket-equality join is the only viable shape —
     the exact pair join below is the small-scale oracle.
 
-    Shuffle discipline (measured at sf1.0 — 20k vectors, 7.2M
-    bucket-pair candidates, 20k verified pairs): the signature pass is
-    cached (it feeds both self-join sides), each candidate pair is
-    emitted once at its SMALLEST shared table (kept iff no earlier
-    table's buckets also match — the banded_hamming_pairs recipe,
-    value-identical to the old cross-table ``distinct`` but without
-    shuffling the 7M-row pair relation), and the verify is the
-    :func:`~.similarity.pair_cosine` Arrow kernel over the attached
-    pairs."""
+    The signature pass is cached (it feeds both self-join sides) and
+    its rows carry the embedding, so :func:`_band_pairs` hands each
+    candidate pair, once, with both vectors straight to the
+    :func:`~.similarity.pair_cosine` kernel: no join back to ``emb``."""
     from .similarity import hyperplane_buckets, pair_cosine
 
     # table t uses planes [t*planes, (t+1)*planes) of one coefficient
     # stream -> independent tables, still fully deterministic/portable
-    signed = cache(
-        hyperplane_buckets(emb, planes, tables).select(
-            "vec_id", "buckets"))
-    banded = signed.select(
-        "vec_id", "buckets",
-        F.posexplode("buckets").alias("tbl", "tbucket"),
-    )
-    # true iff some table j < tbl also bucket-matches: the pair was
-    # already emitted there, so this row is the cross-table duplicate
-    earlier_equal = F.lit(False)
-    for j in range(tables - 1):
-        earlier_equal = earlier_equal | (
-            (F.col("a.tbl") > j)
-            & (F.element_at("a.buckets", j + 1)
-               == F.element_at("b.buckets", j + 1))
-        )
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"),
-              (F.col("a.tbl") == F.col("b.tbl"))
-              & (F.col("a.tbucket") == F.col("b.tbucket"))
-              & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .filter(~earlier_equal)
-        .select(F.col("a.vec_id").alias("vec_a"),
-                F.col("b.vec_id").alias("vec_b"))
-    )
-    pairs = (
-        cand.join(emb.select(F.col("vec_id").alias("vec_a"),
-                             F.col("embedding").alias("ea")), "vec_a")
-        .join(emb.select(F.col("vec_id").alias("vec_b"),
-                         F.col("embedding").alias("eb")), "vec_b")
-        .select("vec_a", "vec_b", "ea", "eb")
-    )
+    rows = cache(hyperplane_buckets(emb, planes, tables)).select(
+        *_band_cols("vec_id", [f"buckets[{t}]" for t in range(tables)],
+                    "embedding"))
+    pairs = _band_pairs(rows, None, None)
     return (
-        pair_cosine(pairs, "ea", "eb")
-        .select("vec_a", "vec_b", F.round("cosine", 4).alias("cosine"))
+        pair_cosine(pairs, "embedding_a", "embedding_b")
+        .select(F.col("id_a").alias("vec_a"), F.col("id_b").alias("vec_b"),
+                F.round("cosine", 4).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
@@ -1260,8 +1239,8 @@ def benchmark_contamination(docs: DataFrame, benchmarks: DataFrame,
 
 
 def embedding_contamination(emb: DataFrame, bench: DataFrame,
-                            threshold: float = 0.95, planes: int = 6,
-                            tables: int = 8) -> DataFrame:
+                            threshold: float, planes: int,
+                            tables: int) -> DataFrame:
     """SEMANTIC benchmark decontamination — the embedding analog of
     :func:`benchmark_contamination` (paraphrased eval leakage that
     n-gram collision misses; the decontamination step of the SemDeDup/
@@ -1274,7 +1253,8 @@ def embedding_contamination(emb: DataFrame, bench: DataFrame,
     :func:`benchmark_contamination` — the corpus never shuffles): both
     sides sign with the shared multi-table hyperplane LSH; the BENCH
     side is small (benchmark suites are thousands of rows) so its
-    banded signatures broadcast into the candidate join; exact cosine
+    banded rows broadcast into :func:`_band_pairs`, which hands each
+    (corpus, bench) candidate once with both vectors; exact cosine
     verifies candidates only; the flagged-id set (small by assumption)
     broadcasts back for the final flag join.  A benchmark vector id
     present in the corpus is excluded from matching itself (harmless
@@ -1283,25 +1263,17 @@ def embedding_contamination(emb: DataFrame, bench: DataFrame,
     :func:`embedding_near_dups_lsh`."""
     from .similarity import hyperplane_buckets, pair_cosine
 
-    def banded(df, id_alias):
-        signed = hyperplane_buckets(df, planes, tables)
-        return signed.select(
-            F.col("vec_id").alias(id_alias),
-            F.col("embedding").alias(f"_e_{id_alias}"),
-            F.posexplode("buckets").alias("tbl", "tbucket"),
-        )
+    def rows(df):
+        return hyperplane_buckets(df, planes, tables).select(*_band_cols(
+            "vec_id", [f"buckets[{t}]" for t in range(tables)],
+            "embedding"))
 
-    cand = (
-        banded(emb, "vec_id")
-        .join(F.broadcast(banded(bench, "bench_id")), ["tbl", "tbucket"])
-        .filter(F.col("vec_id") != F.col("bench_id"))
-        .dropDuplicates(["vec_id", "bench_id"])
-    )
+    pairs = _band_pairs(rows(emb), F.broadcast(rows(bench)), None)
     hits = (
-        pair_cosine(cand.select("vec_id", "_e_vec_id", "_e_bench_id"),
-                    "_e_vec_id", "_e_bench_id")
+        pair_cosine(pairs, "embedding_a", "embedding_b")
         .filter(F.round("cosine", 4) >= threshold)
-        .select("vec_id")
+        # one flag per corpus vector, however many bench vectors it hits
+        .select(F.col("id_a").alias("vec_id"))
         .distinct()
         .withColumn("_hit", F.lit(True))
     )

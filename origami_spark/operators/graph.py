@@ -82,6 +82,11 @@ def _in_task(e: DataFrame, schema: str, kernel) -> DataFrame:
     return e.coalesce(1).mapInPandas(run, schema)
 
 
+def _empty(e: DataFrame, schema: str) -> DataFrame:
+    """The result of an edgeless graph: no node, and no job to run."""
+    return e.sparkSession.createDataFrame([], schema)
+
+
 def _raise_if(bad, error: str):
     if np.any(bad):
         raise ArithmeticError(f"[{error}] in an in-task graph kernel")
@@ -407,7 +412,10 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
                                F.col("dst").cast("bigint"),
                                F.col("weight").cast("bigint")).dropna())
         # materializes the one edge-derivation pass AND picks the plan
-        if e.count() <= _KERNEL_EDGES:
+        n_edges = e.count()
+        if n_edges == 0:
+            return _empty(e, "node bigint, score bigint")
+        if n_edges <= _KERNEL_EDGES:
             return _in_task(e, "node bigint, score bigint", partial(
                 _pagerank_kernel, iters=iters, scale=scale, d_num=d_num,
                 d_den=d_den)).localCheckpoint(eager=True)
@@ -509,7 +517,10 @@ def hits(edges: DataFrame, iters: int = 4,
         e = cache(edges.select(F.col("src").cast("bigint"),
                                F.col("dst").cast("bigint"),
                                F.col("weight").cast("bigint")).dropna())
-        if e.count() <= _KERNEL_EDGES:
+        n_edges = e.count()
+        if n_edges == 0:
+            return _empty(e, "node bigint, hub bigint, authority bigint")
+        if n_edges <= _KERNEL_EDGES:
             return _in_task(e, "node bigint, hub bigint, authority bigint",
                             partial(_hits_kernel, iters=iters, scale=scale)
                             ).localCheckpoint(eager=True)

@@ -164,18 +164,22 @@ def media_near_dups(media: DataFrame, max_hamming: int = 4) -> DataFrame:
     media within a few bits — the block-mean family's documented
     weakness on flat content; gate on payload entropy first when the
     corpus has such degenerate media."""
-    from .dedup import banded_hamming_pairs
+    from ..session import cache
+    from .dedup import _band_cols, _band_pairs, _bit_bands
 
     if max_hamming > BH_BANDS - 1:
         raise ValueError(
             f"max_hamming={max_hamming} breaks the exact-recall "
             f"guarantee of {BH_BANDS} bands (pigeonhole holds only to "
             f"{BH_BANDS - 1}); raise BH_BANDS or lower the threshold")
-    return banded_hamming_pairs(
-        media_blockhash(media), "media_id", "bh",
-        BH_BITS, BH_BANDS, max_hamming,
-    ).select(
-        F.col("id_a").alias("media_a"),
-        F.col("id_b").alias("media_b"),
-        F.col("hamming").cast("int").alias("hamming"),
+    # cached: the hashes feed both self-join sides, and the kernel
+    # reads every payload byte
+    rows = cache(media_blockhash(media)).select(*_band_cols(
+        "media_id", _bit_bands("bh", BH_BITS, BH_BANDS), "bh"))
+    return (
+        _band_pairs(rows, None, None)
+        .select(F.col("id_a").alias("media_a"), F.col("id_b").alias("media_b"),
+                F.bit_count(F.col("bh_a").bitwiseXOR(F.col("bh_b")))
+                .cast("int").alias("hamming"))
+        .filter(F.col("hamming") <= max_hamming)
     )

@@ -466,29 +466,19 @@ def lsh_topk(emb: DataFrame, query_ids, k: int = 5, planes: int = 8,
     independent hash tables (per-table recall (1 - theta/pi)^planes is
     lifted to 1 - (1 - r)^L); exact cosine re-rank inside the candidate
     union.  Queries are tiny -> broadcast; the corpus is scanned once
-    and never shuffled before the candidate filter."""
-    signed = hyperplane_buckets(emb, planes, tables)
-    banded = signed.select(
-        "vec_id", "embedding",
-        F.posexplode("buckets").alias("tbl", "tbucket"),
-    )
-    q = banded.filter(F.col("vec_id").isin(list(query_ids))).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("tbl").alias("qtbl"),
-        F.col("tbucket").alias("qtbucket"),
-    )
-    cand = (
-        banded.join(
-            F.broadcast(q),
-            (F.col("tbl") == F.col("qtbl"))
-            & (F.col("tbucket") == F.col("qtbucket"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        # a pair found in several tables must score once; every copy
-        # carries the same vectors, so first-per-(query,vec) is exact
-        .dropDuplicates(["query_id", "vec_id"])
-    )
+    and never shuffled before the candidate filter.  Each (query,
+    vector) candidate comes once from :func:`~.dedup._band_pairs`,
+    both vectors carried."""
+    from .dedup import _band_cols, _band_pairs
+
+    rows = hyperplane_buckets(emb, planes, tables).select(
+        *_band_cols("vec_id", [f"buckets[{t}]" for t in range(tables)],
+                    "embedding"))
+    q = rows.filter(F.col("vec_id").isin(list(query_ids)))
+    cand = _band_pairs(rows, F.broadcast(q), None).select(
+        F.col("id_a").alias("vec_id"), F.col("id_b").alias("query_id"),
+        F.col("embedding_a").alias("embedding"),
+        F.col("embedding_b").alias("qv"))
     return _exact_rerank(cand, k)
 
 

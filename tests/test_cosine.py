@@ -154,3 +154,71 @@ def test_no_operator_takes_an_embedding_width():
             if any("DataFrame" in str(p.annotation)
                    for p in params.values()):
                 assert "dim" not in params, f"{mod.__name__}.{name}"
+
+
+# Band joins outside dedup._band_pairs, each with its reason: neither
+# pairs items, so neither can emit a duplicate pair.
+_BAND_JOIN_KEEP = {
+    ("origami_spark/streaming/corpus.py", "F.broadcast(touched)"):
+        "prunes the corpus index to the buckets a batch touches",
+    ("origami_spark/streaming/corpus.py", "F.broadcast(cur)"):
+        "counts a bucket's indexed rows to cap the append",
+}
+
+
+def _band_joins(source: str):
+    """``(function, first join argument)`` of every ``.join`` whose
+    arguments name a band column and a bucket column."""
+    import ast
+    import re
+
+    found = []
+    for fn in ast.parse(source).body:   # a nested def is its parent's
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for call in ast.walk(fn):
+            if not (isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "join" and call.args):
+                continue
+            names = {c.value for a in call.args + [k.value for k in
+                                                   call.keywords]
+                     for c in ast.walk(a)
+                     if isinstance(c, ast.Constant)
+                     and isinstance(c.value, str)}
+            if (any(re.search(r"(^|\.)(band|tbl)$", n) for n in names)
+                    and any(n.endswith("bucket") for n in names)):
+                found.append((fn.name, ast.unparse(call.args[0])))
+    return found
+
+
+def test_lsh_pairs_come_only_from_the_band_pair_builder():
+    """Every band join lives in ``dedup._band_pairs`` (or is listed
+    above with its reason), so each LSH operator emits a pair once and
+    carries its payload.  The positive control is the pre-builder shape
+    of two of those operators."""
+    import pathlib
+
+    old = '''
+def simhash_pairs(banded):
+    return banded.alias("a").join(banded.alias("b"), ["band", "bucket"])
+
+def embedding_pairs(banded):
+    return banded.alias("a").join(
+        banded.alias("b"), (F.col("a.tbl") == F.col("b.tbl"))
+        & (F.col("a.tbucket") == F.col("b.tbucket")))
+'''
+    assert [f for f, _ in _band_joins(old)] == ["simhash_pairs",
+                                                "embedding_pairs"]
+    root = pathlib.Path(__file__).resolve().parents[1]
+    stray = []
+    for path in sorted(root.glob("*/**/*.py")):
+        rel = path.relative_to(root).as_posix()
+        if rel.split("/")[0] not in ("origami_spark", "gates", "jobs"):
+            continue
+        for fn, arg in _band_joins(path.read_text()):
+            if ((rel, fn) != ("origami_spark/operators/dedup.py",
+                              "_band_pairs")
+                    and (rel, arg) not in _BAND_JOIN_KEEP):
+                stray.append((rel, fn, arg))
+    assert stray == []

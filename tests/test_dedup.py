@@ -515,11 +515,13 @@ def test_embedding_contamination_flags_near_bench(spark):
                  planes=4, tables=8).collect()}
     assert again == got
 
-    plan = (embedding_contamination(emb, bdf, threshold=0.9)
+    plan = (embedding_contamination(emb, bdf, threshold=0.9, planes=6,
+                                    tables=8)
             ._jdf.queryExecution().executedPlan().toString())
-    # candidate dedup + hit distinct are the only hash exchanges; the
-    # corpus side itself joins broadcast on both ends
-    assert plan.count("Exchange hashpartitioning") <= 2, plan
+    # the hit distinct is the only hash exchange (each candidate pair
+    # comes once, so nothing dedupes it); the corpus side itself joins
+    # broadcast on both ends
+    assert plan.count("Exchange hashpartitioning") <= 1, plan
     assert "BatchEvalPython" not in plan
 
 

@@ -119,7 +119,8 @@ def _graph_df(spark, edges):
 def test_pagerank_kernel_equals_relational(spark, graph_paths, edges):
     df = _graph_df(spark, edges)
     got = graph_paths(lambda: {r["node"]: r["score"]
-                               for r in pagerank(df, iters=3).collect()})
+                               for r in pagerank(df, iters=3).collect()},
+                      has_edges=bool(edges))
     assert got == [_py_pagerank(edges, iters=3)] * 2
 
 
@@ -388,7 +389,8 @@ def test_hits_partition_invariance(spark, edges_df):
 def test_hits_kernel_equals_relational(spark, graph_paths, edges):
     df = _graph_df(spark, edges)
     got = graph_paths(lambda: {r["node"]: (r["hub"], r["authority"])
-                               for r in hits(df, iters=2).collect()})
+                               for r in hits(df, iters=2).collect()},
+                      has_edges=bool(edges))
     assert got == [_py_hits(edges, iters=2) if edges else {}] * 2
 
 
