@@ -7,6 +7,10 @@
         --staged --artifacts            \
         --partitions 4096
 
+With --staged every stage is plain parquet under --output, committed
+through its snapshot manifest (``_snapshots/``); rerunning the same
+command resumes, computing only documents no snapshot holds yet.
+
 On a cluster, spark-submit provides master/executors; this script never
 calls .master().  Local smoke:
 
@@ -35,9 +39,6 @@ def main(argv=None):
                     help="with --staged: also commit features/lines/tables/orders")
     ap.add_argument("--relational", action="store_true",
                     help="use the relational operator chain instead of fused")
-    ap.add_argument("--buckets", type=int, default=None,
-                    help="with --staged: write stage tables bucketBy(N, url) "
-                         "so downstream stage joins/windows are exchange-free")
     ap.add_argument("--partitions", type=int, default=None)
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args(argv)
@@ -68,8 +69,7 @@ def main(argv=None):
     if args.staged:
         out = extract_staged(spark, pages, args.output,
                              partitions=args.partitions,
-                             artifacts=args.artifacts,
-                             buckets=args.buckets)
+                             artifacts=args.artifacts)
         n = out.count()
     else:
         fn = extract if args.relational else extract_fused

@@ -64,9 +64,11 @@ __all__ = ["event_edges", "html_link_edges", "degrees", "pagerank",
 # as one in-task numpy kernel.  Measured on a 4-core VM (|V| = |E|/10),
 # kernel vs relational, pagerank / hits / components: 0.35 / 0.17 /
 # 0.33 s vs 3.7 / 5.7 / 1.9 s at 10^4 edges, 2.4 / 2.8 / 3.2 s vs 7.3 /
-# 19.8 / 9.3 s at 10^6; pagerank 13.2 vs 18.4 s at 4*10^6.  One task
-# does not grow with the cluster: cut where it still wins 3x on 4 cores.
-_KERNEL_EDGES = 1_000_000
+# 19.8 / 9.3 s at 10^6; medians of 3 interleaved runs, 7.2 / 8.9 /
+# 7.8 s vs 18.5 / 45.3 / 24.6 s at 2*10^6; 13.2 / 11.4 / 12.2 s vs
+# 18.4 / 47.8 / 31.7 s at 4*10^6.  One task does not grow with the
+# cluster: cut where the kernel still wins all three by 2.5x on 4 cores.
+_KERNEL_EDGES = 2_000_000
 _MIN = np.iinfo(np.int64).min
 
 

@@ -110,33 +110,23 @@ def extract_fused(spark: SparkSession, pages: DataFrame,
 def extract_staged(spark: SparkSession, pages: DataFrame, work_dir: str,
                    partitions: int | None = None,
                    run_id: str | None = None,
-                   artifacts: bool = False,
-                   buckets: int | None = None) -> DataFrame:
+                   artifacts: bool = False) -> DataFrame:
     """Checkpointed chain with resume + lineage (see plans/runner.py).
 
     `artifacts=True` additionally commits the side artifact tables the
     reference writes per page (s4_features <- flow/dewarp features,
     s6_lines <- lines.3, s6_tables <- tables.json, s7_orders <-
     order.json) — each resumable and lineage-tracked like the main
-    chain.
-
-    `buckets=N` writes every stage table bucketed+sorted on url
-    (plans/runner.py): the S2->S5->S7 windows and the S8 compose join
-    all cluster on url, so co-located stage tables remove the per-stage
-    Exchange — at 10^12 documents that is one shuffle of the block table
-    per STAGE saved, paid once at write."""
+    chain."""
     blocks = run_stage(
         spark, "s2_blocks", pages,
         lambda df: parse_stage(df, partitions), work_dir, run_id=run_id,
-        buckets=buckets,
     )
     refined = run_stage(
         spark, "s5_layout", blocks, layout_op.refine, work_dir, run_id=run_id,
-        buckets=buckets,
     )
     ranked = run_stage(
         spark, "s7_order", refined, order_op.rank_blocks, work_dir, run_id=run_id,
-        buckets=buckets,
     )
     if artifacts:
         from .operators import features as features_op
@@ -144,18 +134,18 @@ def extract_staged(spark: SparkSession, pages: DataFrame, work_dir: str,
         from .operators import tables as tables_op
 
         run_stage(spark, "s4_features", blocks, features_op.block_features,
-                  work_dir, run_id=run_id, buckets=buckets)
+                  work_dir, run_id=run_id)
         run_stage(spark, "s6_tables", blocks, tables_op.table_cells,
-                  work_dir, run_id=run_id, buckets=buckets)
+                  work_dir, run_id=run_id)
         run_stage(spark, "s6_lines", refined, lines_op.lines_table,
-                  work_dir, run_id=run_id, buckets=buckets)
+                  work_dir, run_id=run_id)
         run_stage(spark, "s7_orders_map", ranked, order_op.orders_table,
-                  work_dir, run_id=run_id, buckets=buckets)
+                  work_dir, run_id=run_id)
     # compose resumes on the page universe: only not-yet-composed urls
     # (the `pg` passed to build) pull their ranked blocks via semi-join
     return run_stage(
         spark, "s8_compose", pages,
         lambda pg: compose_op.compose(
             ranked.join(pg.select("url"), "url", "left_semi"), pg),
-        work_dir, run_id=run_id, buckets=buckets,
+        work_dir, run_id=run_id,
     )

@@ -36,167 +36,6 @@ def _exists(path: str) -> bool:
     return os.path.exists(path)
 
 
-def _stage_table_name(work_dir: str, name: str) -> str:
-    """Catalog identifier for a bucketed stage table, unique per
-    (work_dir, stage)."""
-    import hashlib
-
-    return ("stage_" + hashlib.md5(work_dir.encode()).hexdigest()[:10]
-            + "_" + name)
-
-
-# bucketed part files carry a _NNNNN bucket-id suffix before the codec
-# extension (part-00000-<uuid>_00003.c000.snappy.parquet)
-_BUCKET_FILE_RE = None
-
-
-def _dir_is_bucketed(path: str, files: list | None = None) -> bool:
-    import re
-
-    global _BUCKET_FILE_RE
-    if _BUCKET_FILE_RE is None:
-        _BUCKET_FILE_RE = re.compile(r"_\d{5}\.")
-    if files is None:
-        from .snapshots import _data_files
-
-        files = _data_files(path)
-    return bool(files) and all(_BUCKET_FILE_RE.search(f) for f in files)
-
-
-def _bucket_meta_path(work_dir: str, name: str) -> str:
-    from .snapshots import SNAPSHOT_DIR
-
-    return os.path.join(work_dir, SNAPSHOT_DIR, f"{name}-buckets.json")
-
-
-def _record_bucket_spec(work_dir: str, name: str, key: str,
-                        buckets: int) -> None:
-    import json
-
-    path = _bucket_meta_path(work_dir, name)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    if not os.path.exists(path):
-        with open(path, "w") as f:
-            json.dump({"buckets": buckets, "key": key}, f)
-
-
-def _delete_bucket_spec(work_dir: str, name: str) -> None:
-    path = _bucket_meta_path(work_dir, name)
-    if os.path.exists(path):
-        os.remove(path)
-
-
-def _recorded_bucket_spec(work_dir: str, name: str) -> dict | None:
-    import json
-
-    path = _bucket_meta_path(work_dir, name)
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
-def _catalog_bucket_count(spark: SparkSession, tbl: str) -> int | None:
-    """Bucket count a registered table was created with, from DESCRIBE
-    EXTENDED (None when the row is absent or unparseable)."""
-    try:
-        for r in spark.sql(f"DESCRIBE TABLE EXTENDED `{tbl}`").collect():
-            if r["col_name"] == "Num Buckets":
-                return int(r["data_type"])
-    except Exception:
-        pass
-    return None
-
-
-def _prepare_bucketed_write(spark: SparkSession, work_dir: str, name: str,
-                            result: DataFrame, key: str,
-                            buckets: int) -> int | None:
-    """Make a bucketed append SAFE.  Returns the EFFECTIVE bucket count
-    to write with (None = downgrade this write to plain parquet).
-
-    Two hazards guarded here:
-
-    * the catalog is session-local (in-memory): on a resumed run in a
-      NEW driver the table entry is gone while the data directory
-      survives, and ``saveAsTable(mode='append')`` would fall back to
-      CREATE semantics and WIPE the committed files.  When the entry is
-      missing but bucket-suffixed data exists, the external table is
-      re-registered over the existing location — nothing rewritten.
-    * the bucket spec the FILES were written with is the only truth:
-      the spec is recorded at first bucketed write
-      (_snapshots/<stage>-buckets.json) and a resume requesting a
-      DIFFERENT count uses the recorded one — registering N=8 metadata
-      over mod-4-hashed files would silently drop join matches.
-
-    A directory that predates bucketing (plain part files) downgrades
-    this write to plain parquet: mixed layouts would lie to the
-    planner."""
-    out_path = os.path.join(work_dir, name)
-    tbl = _stage_table_name(work_dir, name)
-    recorded = _recorded_bucket_spec(work_dir, name)
-    if recorded and recorded.get("key") != key:
-        # bucket metadata over files hashed by a different column would
-        # elide exchanges the data does not justify — fail loudly; the
-        # caller must reset the stage to change its bucketing key
-        raise ValueError(
-            f"stage {name!r} was bucketed by {recorded['key']!r}; "
-            f"cannot resume it with key={key!r} (reset the stage first)")
-    effective = recorded["buckets"] if recorded else buckets
-    from .snapshots import _data_files
-
-    files = _data_files(out_path)
-    if spark.catalog.tableExists(tbl):
-        if files and not _dir_is_bucketed(out_path, files=files):
-            # plain files crept into the directory (out-of-band write):
-            # the catalog bucket metadata now lies about the files —
-            # drop BOTH the table and the recorded spec (a stale spec
-            # would resurrect bucketing on every later flag-less run)
-            spark.sql(f"DROP TABLE IF EXISTS `{tbl}`")
-            _delete_bucket_spec(work_dir, name)
-            return None
-        if recorded is None:
-            # spec file lost (e.g. stale-manifest recovery wiped
-            # _snapshots/): re-derive the count from the catalog entry
-            # — never the caller's argument, which may differ from what
-            # the surviving files were hashed with.  If the catalog row
-            # is unreadable, record NOTHING: a mismatched append will
-            # fail loudly on saveAsTable's own bucket-spec validation
-            # rather than persisting a possibly-wrong count
-            cat = _catalog_bucket_count(spark, tbl)
-            if cat:
-                effective = cat
-                _record_bucket_spec(work_dir, name, key, effective)
-        return effective
-
-    if not files:
-        _record_bucket_spec(work_dir, name, key, effective)
-        return effective  # fresh table: saveAsTable creates dir + entry
-    if not _dir_is_bucketed(out_path, files=files):
-        return None  # mixed layout would lie to the planner
-    if recorded is None:
-        # catalog entry AND recorded spec both gone, but bucket-suffixed
-        # files survive: registering the CALLER's count here would be
-        # the same silent-join-loss hazard the tableExists branch guards
-        # against (ADVICE r3).  The files' own bucket-id suffixes are
-        # only a LOWER bound on the count they were hashed with — a
-        # mod-16 table whose small key set happens to occupy ids 0..7
-        # is indistinguishable from a mod-8 table — so no argument is
-        # provable and the only safe move is to refuse: this and all
-        # later appends downgrade to plain parquet, which the manifest
-        # reader handles correctly (the bucket layout is lost, never
-        # the data; reset the stage to re-bucket).
-        return None
-    cols = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in result.schema.fields)
-    spark.sql(
-        f"CREATE TABLE {tbl} ({cols}) USING parquet "
-        f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {effective} BUCKETS "
-        f"LOCATION '{out_path}'"
-    )
-    _record_bucket_spec(work_dir, name, key, effective)
-    return effective
-
-
 def run_stage(
     spark: SparkSession,
     name: str,
@@ -205,25 +44,17 @@ def run_stage(
     work_dir: str,
     key: str = "url",
     run_id: str | None = None,
-    buckets: int | None = None,
 ) -> DataFrame:
     """Run one pipeline stage with resume + lineage; return the full
     committed stage table (previous snapshots + this run's appends).
 
     `build`: DataFrame -> DataFrame (kernels and/or relational ops).
     Only rows whose `key` is not yet committed are computed (anti-join
-    resume); the transform result is appended atomically.
-
-    ``buckets``: write the stage table ``bucketBy(buckets, key)`` +
-    ``sortBy(key)``: bucketing pays the shuffle once at write time, so
-    every downstream join/window on `key` — the S5->S8 chain is nothing
-    else — reads co-located buckets instead of paying an Exchange per
-    stage.  The
-    snapshot manifest stays the source of truth: the bucketed catalog
-    view is returned only when the data directory holds exactly the
-    committed files (no crashed-writer orphans); otherwise the reader
-    falls back to the manifest file list, which is always correct but
-    loses the bucket layout for that run.
+    resume); the transform result is appended as plain parquet and
+    committed through the snapshot manifest, the stage's only reader:
+    the returned frame reads exactly the head version's files, whatever
+    their naming (bucket-id-suffixed part files a bucketed writer left
+    read like any other).
     """
     out_path = os.path.join(work_dir, name)
     lineage_path = os.path.join(work_dir, LINEAGE_DIR)
@@ -244,14 +75,6 @@ def run_stage(
         # would make every future read_snapshot fail — treat them as
         # stale and recompute from scratch.
         delete_snapshots(work_dir, name)
-    if buckets is None:
-        recorded = _recorded_bucket_spec(work_dir, name)
-        if recorded:
-            # the stage was created bucketed: later runs must stay
-            # bucketed even when the caller omits the flag — a plain
-            # append would mix layouts under the catalog's bucket
-            # metadata and silently break exchange-elided joins
-            buckets = recorded["buckets"]
     if _exists(out_path):
         # resume against the COMMITTED view (snapshot manifests), not the
         # raw directory: a crash between the parquet append and the
@@ -266,8 +89,7 @@ def run_stage(
             done = committed.select(key).distinct()
             todo = src.join(done, key, "left_anti")
             if todo.isEmpty():  # fully resumed: nothing to commit
-                return _committed_view(spark, work_dir, name, buckets,
-                                       fallback=committed)
+                return committed
 
     t0 = time.monotonic()
     status = "COMPLETED"
@@ -279,25 +101,7 @@ def run_stage(
             .withColumn("_part_id", F.spark_partition_id())
             .withColumn("_run_id", F.lit(run_id))
         )
-        effective_buckets = (
-            _prepare_bucketed_write(spark, work_dir, name, result, key,
-                                    buckets)
-            if buckets else None
-        )
-        if effective_buckets:
-            # co-located stage table: the one-time shuffle here buys
-            # exchange-free joins/windows on `key` for every downstream
-            # stage (and every later run)
-            (
-                result.write.mode("append")
-                .bucketBy(effective_buckets, key)
-                .sortBy(key)
-                .option("path", out_path)
-                .format("parquet")
-                .saveAsTable(_stage_table_name(work_dir, name))
-            )
-        else:
-            result.write.mode("append").parquet(out_path)
+        result.write.mode("append").parquet(out_path)
         # versioned snapshot commit (Iceberg-commit analog, see
         # plans/snapshots.py): readers via read_snapshot get snapshot
         # isolation + time travel over the same parquet files
@@ -349,37 +153,15 @@ def run_stage(
     latest = snapshots(work_dir, name)[-1]
     if not latest["manifest"]:
         return result.limit(0).drop("_part_id", "_run_id")
-    return _committed_view(spark, work_dir, name, buckets)
-
-
-def _committed_view(spark: SparkSession, work_dir: str, name: str,
-                    buckets: int | None,
-                    fallback: DataFrame | None = None) -> DataFrame:
-    """The stage's committed rows, preferring the bucketed catalog table
-    (exchange-free downstream) when it provably equals the committed
-    view: the catalog table lists the whole directory, so it is only
-    safe when the directory holds exactly the latest manifest's files —
-    any crashed-writer orphan forces the manifest file list instead."""
-    from .snapshots import _data_files, read_snapshot, snapshots
-
-    if buckets:
-        tbl = _stage_table_name(work_dir, name)
-        clean = set(_data_files(os.path.join(work_dir, name))) == set(
-            snapshots(work_dir, name)[-1]["manifest"])
-        if clean and spark.catalog.tableExists(tbl):
-            return spark.table(tbl).drop("_part_id", "_run_id")
-    if fallback is not None:
-        return fallback
     return read_snapshot(spark, work_dir, name)
 
 
-def reset_stages(work_dir: str, stages, spark: SparkSession | None = None) -> list:
+def reset_stages(work_dir: str, stages) -> list:
     """Delete chosen stage checkpoints so they recompute on the next run
     (the `reset` batch analog, ``batch/utils/reset.py:14-60``; with
-    Iceberg this is a snapshot rollback / DROP TABLE).  Returns the
-    stages actually removed.  Pass the active session to also drop the
-    stage's bucketed catalog entry (same-session reset of a bucketed
-    run); without it the entry dies with the session anyway."""
+    Iceberg this is a snapshot rollback or a dropped table): each stage's
+    directory and snapshot manifests go.  Returns the stages whose
+    directory was removed."""
     import shutil
 
     from .snapshots import delete_snapshots
@@ -396,9 +178,6 @@ def reset_stages(work_dir: str, stages, spark: SparkSession | None = None) -> li
         # entries point at deleted data — the stage would then fail on
         # every read, permanently
         delete_snapshots(work_dir, stage)
-        if spark is not None:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {_stage_table_name(work_dir, stage)}")
     return removed
 
 
@@ -431,9 +210,11 @@ def cleanup_incomplete(work_dir: str) -> list:
 
 def sample_stage(spark: SparkSession, work_dir: str, stage: str,
                  fraction: float = 0.01, seed: int = 42) -> DataFrame:
-    """Deterministic sample of a stage table for eyeballing (the
-    `sample` export analog, ``batch/utils/sample.py``)."""
-    return spark.read.parquet(os.path.join(work_dir, stage)).sample(
+    """Deterministic sample of a stage's committed rows for eyeballing
+    (the `sample` export analog, ``batch/utils/sample.py``)."""
+    from .snapshots import read_snapshot
+
+    return read_snapshot(spark, work_dir, stage).sample(
         fraction=fraction, seed=seed
     )
 
@@ -459,19 +240,7 @@ def compact_stage(spark: SparkSession, work_dir: str, name: str,
     from the compacted files; every older version still time-travels
     over the original files until ``expire_snapshots`` + ``vacuum_stage``
     reclaim them — pass ``reclaim=True`` to do both immediately
-    (trading time travel for space).  NB raw-directory readers
-    (sample_stage) see BOTH generations until reclaim runs; snapshot
-    readers never do.
-
-    Bucketed stages compact through the bucketed writer with the
-    RECORDED spec (``target_files`` is ignored — the file count is the
-    bucket count): a ``repartition(N, key)`` pre-shuffle aligns tasks
-    with buckets, so the rewrite emits ~one file per bucket.  Until
-    ``reclaim`` runs, the directory holds both generations, so the
-    committed view falls back to the manifest file list (correct rows,
-    bucket layout unusable); after reclaim the directory equals the
-    manifest again and the catalog bucketed table serves the compacted
-    files exchange-free.
+    (trading time travel for space).
 
     At 10^5 partitions a long-appended stage accretes one small file
     per partition per run; reads then pay per-file open cost and the
@@ -485,8 +254,7 @@ def compact_stage(spark: SparkSession, work_dir: str, name: str,
     out_path = os.path.join(work_dir, name)
     # read the head manifest RAW (read_snapshot drops the internal
     # _part_id/_run_id lineage columns, but the rewrite must preserve
-    # the on-disk schema — the bucketed catalog table declares them,
-    # and plain stages keep one schema across their whole history)
+    # the on-disk schema: a stage keeps one schema across its history)
     head = snapshots(work_dir, name)
     if not head:
         raise ValueError(f"no snapshots committed for stage {name!r}")
@@ -495,35 +263,10 @@ def compact_stage(spark: SparkSession, work_dir: str, name: str,
     # inference from one arbitrary file would silently truncate
     df = spark.read.option("mergeSchema", "true").parquet(
         *[os.path.join(out_path, f) for f in head[-1]["manifest"]])
-    spec = _recorded_bucket_spec(work_dir, name)
     before = _data_files(out_path)
     # the source is a pinned file list (read_snapshot reads explicit
     # paths), so appending the rewrite into the same directory is safe
-    if spec:
-        # check the layout BEFORE _prepare_bucketed_write: its mixed-
-        # layout branch drops the table AND the spec file, which would
-        # make a retry silently compact as plain — checking first keeps
-        # this error idempotent (same message, no side effects)
-        files = _data_files(out_path)
-        if files and not _dir_is_bucketed(out_path, files=files):
-            raise ValueError(
-                f"stage {name!r} has a bucket spec but a mixed-layout "
-                "directory — reset the stage before compacting")
-        eff = _prepare_bucketed_write(spark, work_dir, name, df,
-                                      spec["key"], spec["buckets"])
-        if eff is None:  # unreachable given the check above; be loud
-            raise RuntimeError(
-                f"stage {name!r}: bucketed write preparation downgraded "
-                "unexpectedly")
-        (
-            df.repartition(eff, spec["key"])
-            .write.mode("append")
-            .bucketBy(eff, spec["key"]).sortBy(spec["key"])
-            .option("path", out_path).format("parquet")
-            .saveAsTable(_stage_table_name(work_dir, name))
-        )
-    else:
-        df.coalesce(target_files).write.mode("append").parquet(out_path)
+    df.coalesce(target_files).write.mode("append").parquet(out_path)
     snap = commit_snapshot(work_dir, name, run_id="compact-" + uuid.uuid4().hex[:8],
                            before_files=before, replace=True)
     if reclaim:

@@ -128,9 +128,8 @@ def expire_snapshots(work_dir: str, stage: str, keep_last: int = 1) -> int:
 def delete_snapshots(work_dir: str, stage: str) -> int:
     """Remove every snapshot of a stage (paired with deleting the stage
     table itself — stale manifests pointing at deleted files would make
-    read_snapshot fail forever), plus the stage's recorded bucket spec
-    (a reset stage may legitimately be rewritten with a different
-    bucket count).  Returns the number of snapshots removed."""
+    read_snapshot fail forever).  Returns the number of snapshots
+    removed."""
     snap_dir = os.path.join(work_dir, SNAPSHOT_DIR)
     removed = 0
     if os.path.isdir(snap_dir):
@@ -138,22 +137,18 @@ def delete_snapshots(work_dir: str, stage: str) -> int:
             if name.startswith(f"{stage}-v") and name.endswith(".json"):
                 os.remove(os.path.join(snap_dir, name))
                 removed += 1
-        spec = os.path.join(snap_dir, f"{stage}-buckets.json")
-        if os.path.exists(spec):
-            os.remove(spec)
     return removed
 
 
 def vacuum_stage(work_dir: str, stage: str) -> list:
     """Delete data files no snapshot manifest references — crashed
     writers' orphans whose work was recomputed (the table-format
-    expire/vacuum analog).  Raw-directory readers (e.g. sample_stage)
-    see orphan duplicates until this runs; snapshot readers never do.
-    NB after a REWRITE commit (compact_stage) the pre-compaction files
-    are still referenced by OLDER snapshots, so vacuum alone removes
-    nothing — run ``expire_snapshots`` first (or compact with
-    ``reclaim=True``) to release them.  Only safe while no writer is
-    appending to the stage.  Returns the removed file names."""
+    expire/vacuum analog).  NB after a REWRITE commit (compact_stage)
+    the pre-compaction files are still referenced by OLDER snapshots,
+    so vacuum alone removes nothing — run ``expire_snapshots`` first
+    (or compact with ``reclaim=True``) to release them.  Only safe
+    while no writer is appending to the stage.  Returns the removed
+    file names."""
     table_path = os.path.join(work_dir, stage)
     referenced: set = set()
     for snap in snapshots(work_dir, stage):

@@ -4,6 +4,7 @@ that keeps raw caching and checkpointing out of the engine."""
 
 import ast
 import itertools
+import re
 import threading
 from pathlib import Path
 
@@ -211,4 +212,52 @@ def test_engine_never_writes_session_conf():
              for p in sorted((_ROOT / d).rglob("*.py"))]
     writes = [(p.relative_to(_ROOT).as_posix(), line) for p in files
               for line in _conf_writes(ast.parse(p.read_text(), str(p)))]
+    assert writes == []
+
+
+_CATALOG_DDL = re.compile(r"\s*(CREATE|DROP\s+TABLE)\b", re.IGNORECASE)
+
+
+def _leading_text(node) -> str:
+    """The literal prefix of a str or f-string argument ('' otherwise)."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr) and node.values:
+        return _leading_text(node.values[0])
+    return ""
+
+
+def _touches_catalog(node) -> bool:
+    if isinstance(node, ast.Attribute):
+        return node.attr == "catalog"
+    if not (isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)):
+        return False
+    if node.func.attr == "saveAsTable":
+        return True
+    return (node.func.attr == "sql" and bool(node.args)
+            and bool(_CATALOG_DDL.match(_leading_text(node.args[0]))))
+
+
+def _catalog_writes(tree) -> list:
+    return sorted(node.lineno for node in ast.walk(tree)
+                  if _touches_catalog(node))
+
+
+def test_engine_never_touches_session_catalog():
+    """No operator, gate or job registers, drops or looks up a table in
+    the session catalog: its entries are session-wide names every
+    overlapping query shares, and a stage is read only through its
+    snapshot manifest."""
+    assert _catalog_writes(ast.parse(
+        'df.write.bucketBy(4, "k").saveAsTable("t")\n'
+        'spark.catalog.tableExists("t")\n'
+        'spark.sql("""\n  CREATE TABLE t (a int) USING parquet""")\n'
+        'spark.sql(f"drop table if exists {t}")\n'
+        'spark.sql("SELECT 1 AS created")\n'
+        'spark.sql(f"SELECT * FROM {t}")')) == [1, 2, 3, 5]
+    files = [p for d in ("origami_spark", "gates", "jobs")
+             for p in sorted((_ROOT / d).rglob("*.py"))]
+    writes = [(p.relative_to(_ROOT).as_posix(), line) for p in files
+              for line in _catalog_writes(ast.parse(p.read_text(), str(p)))]
     assert writes == []

@@ -44,3 +44,27 @@ def test_sample_stage_deterministic(spark, tmp_path):
     b = {r["url"] for r in sample_stage(spark, wd, "s8_compose", 0.3).collect()}
     assert a == b  # seeded => reproducible
     assert 0 < len(a) < 60
+
+
+def test_sample_stage_reads_only_committed_rows(spark, tmp_path):
+    """After a compaction without reclaim the stage directory holds both
+    file generations, and a crashed writer's orphan sits beside them:
+    a full sample is still exactly the committed rows, each once."""
+    import shutil
+
+    import pyspark.sql.functions as F
+
+    from origami_spark.plans.runner import compact_stage, run_stage
+    from origami_spark.plans.snapshots import _data_files, read_snapshot
+
+    wd = str(tmp_path / "wd")
+    df = spark.range(30).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
+    run_stage(spark, "s", df, lambda d: d.repartition(3), wd, run_id="r1")
+    compact_stage(spark, wd, "s", target_files=1)
+    path = f"{wd}/s"
+    shutil.copy(f"{path}/{_data_files(path)[0]}",
+                f"{path}/part-99999-orphan.parquet")
+    committed = sorted(r["url"] for r in read_snapshot(spark, wd, "s").collect())
+    assert len(committed) == 30
+    sampled = sorted(r["url"] for r in sample_stage(spark, wd, "s", 1.0).collect())
+    assert sampled == committed

@@ -322,50 +322,54 @@ def test_compact_stage_rewrites_head_keeps_time_travel(spark, tmp_path):
     assert len(_data_files(path)) == len(snap["manifest"])
 
 
-def test_compact_stage_bucketed_keeps_layout(spark, tmp_path):
-    """Compacting a bucketed stage rewrites through the bucketed writer
-    with the RECORDED spec: after reclaim the directory holds ~one file
-    per bucket, every file is bucket-named, content is unchanged, and
-    the committed view still serves the catalog bucketed table."""
-    import os
+def test_bucketed_workdir_from_older_engine_resumes_plain(spark, tmp_path):
+    """A stage that an older engine wrote bucketed (part files with a
+    bucket-id suffix, a leftover ``_snapshots/<stage>-buckets.json``)
+    resumes like any other: run_stage reads every committed row through
+    the manifest and appends only the new urls, as plain part files."""
+    import json
+    import re
 
     import pyspark.sql.functions as F
 
-    from origami_spark.plans.runner import (
-        _dir_is_bucketed,
-        compact_stage,
-        run_stage,
+    from origami_spark.plans.runner import run_stage
+    from origami_spark.plans.snapshots import (
+        SNAPSHOT_DIR,
+        _data_files,
+        commit_snapshot,
     )
-    from origami_spark.plans.snapshots import _data_files, read_snapshot
 
     wd = str(tmp_path / "wd")
+    path = os.path.join(wd, "s")
     mk = lambda hi: spark.range(hi).select(
         F.concat(F.lit("u"), F.col("id")).alias("url"),
         F.col("id").alias("v"))
-    run_stage(spark, "sb", mk(12), lambda d: d.repartition(4), wd,
-              run_id="r1", buckets=2)
-    run_stage(spark, "sb", mk(30), lambda d: d.repartition(4), wd,
-              run_id="r2", buckets=2)
-    path = os.path.join(wd, "sb")
-    files_before = len(_data_files(path))
-    want = sorted(r["url"] for r in read_snapshot(spark, wd, "sb").collect())
+    tbl = "old_bucketed_stage"
+    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+    try:
+        (mk(20).withColumn("_part_id", F.spark_partition_id())
+            .withColumn("_run_id", F.lit("r1"))
+            .write.bucketBy(4, "url").sortBy("url")
+            .option("path", path).format("parquet").saveAsTable(tbl))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")  # external: files stay
+    bucket_file = re.compile(r"_\d{5}\.")
+    old = _data_files(path)
+    assert old and all(bucket_file.search(f) for f in old)
+    commit_snapshot(wd, "s", "r1", before_files=[])
+    with open(os.path.join(wd, SNAPSHOT_DIR, "s-buckets.json"), "w") as f:
+        json.dump({"buckets": 4, "key": "url"}, f)
 
-    compact_stage(spark, wd, "sb", reclaim=True)
-    files = _data_files(path)
-    assert len(files) < files_before and len(files) <= 4
-    assert _dir_is_bucketed(path, files=files)
-    got = sorted(r["url"] for r in read_snapshot(spark, wd, "sb").collect())
-    assert got == want
-    # the committed view serves the bucketed catalog table again (dir ==
-    # manifest after reclaim), so a url-window plans with no exchange
-    from origami_spark.plans.runner import _committed_view
-    from pyspark.sql import Window
-
-    view = _committed_view(spark, wd, "sb", 2, fallback=None)
-    plan = (view.withColumn("rn", F.row_number().over(
-        Window.partitionBy("url").orderBy("v")))
-        ._jdf.queryExecution().executedPlan().toString())
-    assert "Exchange" not in plan, plan
+    out = run_stage(spark, "s", mk(50), lambda d: d, wd, run_id="r2")
+    got = sorted((r["url"], r["v"]) for r in out.collect())
+    assert got == sorted((f"u{i}", i) for i in range(50))
+    head = snapshots(wd, "s")[-1]
+    assert head["version"] == 2 and set(old) <= set(head["manifest"])
+    assert head["added"] and not any(
+        bucket_file.search(f) for f in head["added"])
+    added = spark.read.parquet(*[os.path.join(path, f) for f in head["added"]])
+    assert sorted(r["url"] for r in added.collect()) == sorted(
+        f"u{i}" for i in range(20, 50))
 
 
 def test_expire_snapshots_keeps_head(spark, tmp_path):
