@@ -239,7 +239,7 @@ def _touches_catalog(node) -> bool:
             and bool(_CATALOG_DDL.match(_leading_text(node.args[0]))))
 
 
-def _catalog_writes(tree) -> list:
+def _catalog_uses(tree) -> list:
     return sorted(node.lineno for node in ast.walk(tree)
                   if _touches_catalog(node))
 
@@ -249,7 +249,7 @@ def test_engine_never_touches_session_catalog():
     the session catalog: its entries are session-wide names every
     overlapping query shares, and a stage is read only through its
     snapshot manifest."""
-    assert _catalog_writes(ast.parse(
+    assert _catalog_uses(ast.parse(
         'df.write.bucketBy(4, "k").saveAsTable("t")\n'
         'spark.catalog.tableExists("t")\n'
         'spark.sql("""\n  CREATE TABLE t (a int) USING parquet""")\n'
@@ -259,5 +259,5 @@ def test_engine_never_touches_session_catalog():
     files = [p for d in ("origami_spark", "gates", "jobs")
              for p in sorted((_ROOT / d).rglob("*.py"))]
     writes = [(p.relative_to(_ROOT).as_posix(), line) for p in files
-              for line in _catalog_writes(ast.parse(p.read_text(), str(p)))]
+              for line in _catalog_uses(ast.parse(p.read_text(), str(p)))]
     assert writes == []
