@@ -33,12 +33,16 @@ Rule sequence (mirrors origami's layout rule pipeline,
 
 from __future__ import annotations
 
+from operator import itemgetter
+
 from .html.blocks import Block, extract_page
 
 LINK_DENSITY_MAX = 0.5
 # reclassification thresholds are single-sourced in html/blocks.py
 # (shared with the parse-time line re-homing and operators/layout.py)
 from .html.blocks import RESCUE_MAX_LINK_SHARE, RESCUE_MIN_CHARS  # noqa: E402
+
+_START_SEQ = itemgetter("start", "seq")
 
 
 def survives(b: Block) -> bool:
@@ -83,63 +87,57 @@ def merge_with_prev(prev: Block, cur: Block) -> bool:
 
 
 def extract_document(html: bytes) -> dict:
-    """-> {text, spans:[{label,start,end}], blocks:[Block]} for one page."""
-    blocks = extract_page(html)
-
+    """-> {text, spans:[{label,start,end}], blocks:[{label, path, seq,
+    start, end, text, merged_from}]} for one page."""
     # rules 1+2, but keep SEPARATOR rows as merge barriers (they only
     # drop after the merge step — see operators/layout.py).  Line-level
     # re-homing already happened inside extract_page: a rescued line
     # arrives as its own in_chrome=False block.
-    kept = [b for b in blocks if survives(b) or b.label == "SEPARATOR"]
-
     # rule 3: group consecutive mergeable blocks
     groups: list = []
     prev = None
-    for b in kept:
-        if groups and merge_with_prev(prev, b):
-            groups[-1].append(b)
-        else:
-            groups.append([b])
-        prev = b
+    for b in extract_page(html):
+        if b.label == "SEPARATOR" or survives(b):
+            if prev is not None and merge_with_prev(prev, b):
+                groups[-1].append(b)
+            else:
+                groups.append([b])
+            prev = b
 
     merged = []
     for g in groups:
-        if g[0].label == "SEPARATOR":
-            continue
         first = g[0]
-        text = " ".join(m.text for m in g)
-        merged.append(
-            {
-                "label": first.label,
-                "path": first.path,
-                "seq": first.seq,
-                "start": first.start,
-                "end": max(m.end for m in g),
-                "text": text,
-                "merged_from": [m.path for m in g[1:]],
-            }
-        )
+        if first.label == "SEPARATOR":
+            continue
+        merged.append({
+            "label": first.label,
+            "path": first.path,
+            "seq": first.seq,
+            "start": first.start,
+            "end": max([m.end for m in g]) if len(g) > 1 else first.end,
+            "text": " ".join([m.text for m in g]) if len(g) > 1 else first.text,
+            "merged_from": [m.path for m in g[1:]],
+        })
 
     # rule 4: drop blocks contained in an earlier block's span
     # (OverlapMerger analog — running-max containment, see
     # operators/layout.py drop_contained)
-    merged.sort(key=lambda m: (m["start"], m["seq"]))
+    merged.sort(key=_START_SEQ)
     max_end = -1
     deduped = []
     for m in merged:
         if m["end"] > max_end:
             deduped.append(m)
-        max_end = max(max_end, m["end"])
-    merged = deduped
+            max_end = m["end"]
 
     # rule 5: deterministic order (already sorted by start)
 
     # rule 6: compose
-    text = "\n\n".join(m["text"] for m in merged)
+    text = "\n\n".join([m["text"] for m in deduped])
     if text:
         text += "\n"
     spans = [
         {"label": m["label"], "start": m["start"], "end": m["end"]}
-        for m in merged
+        for m in deduped
     ]
-    return {"text": text, "spans": spans, "blocks": merged}
+    return {"text": text, "spans": spans, "blocks": deduped}

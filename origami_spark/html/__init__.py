@@ -2,11 +2,11 @@
 
 This is the web-text analog of origami's raster pipeline front half:
 
-* ``tokenizer.tokenize``   — page bytes -> tag/text events with byte spans
-  (analog of ``NetPredictor`` raster labeling, reference
-  ``core/predict.py:158-301``: the "pixels" of a web page are its bytes).
-* ``tokenizer.build_tree`` — events -> DOM node table (flat, document order)
-  (analog of ``cv2.findContours`` raster->vector, ``core/contours.py:122-154``).
+* ``tokenizer.build_tree`` — page bytes -> DOM node table (flat, document
+  order) with byte spans: one regex token scan labels the bytes (analog of
+  ``NetPredictor`` raster labeling, reference ``core/predict.py:158-301``:
+  the "pixels" of a web page are its bytes) and a tag stack vectorizes
+  them (analog of ``cv2.findContours``, ``core/contours.py:122-154``).
 * ``blocks.extract_page``  — node table -> text blocks / separators / tables
   (analog of the contours stage output ``contours.0.zip``).
 

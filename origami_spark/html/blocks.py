@@ -19,7 +19,8 @@ from __future__ import annotations
 
 import html as _htmllib
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from operator import attrgetter
 
 from .render import render_table
 from .tokenizer import (
@@ -27,7 +28,6 @@ from .tokenizer import (
     DROP_TAGS,
     _WS_COLLAPSE_RE,
     Node,
-    Page,
     build_tree,
     normalize_text,
     to_utf8,
@@ -64,8 +64,9 @@ _RULE_RE = re.compile(r"[-=*_~#]{3,}")
 SPLIT_MIN_BLANK_LINES = 2
 
 
-@dataclass
+@dataclass(slots=True)
 class Block:
+    # built positionally in the kernel: keep the field order
     seq: int           # document-order index among emitted blocks
     node_id: int
     parent_id: int
@@ -109,71 +110,42 @@ class Block:
     strength: float = 0.0
 
 
-def _is_block(tag: str) -> bool:
-    return tag in BLOCK_TAGS
+# walker dispatch by tag; a tag not listed is inline (figure is media
+# before it is a block)
+_DROP, _MEDIA, _HR, _TABLE, _LIST, _BLOCK = range(6)
+_KIND = {t: _BLOCK for t in BLOCK_TAGS}
+_KIND.update(dict.fromkeys(LIST_TAGS, _LIST))
+_KIND.update({TABLE_TAG: _TABLE, "hr": _HR})
+_KIND.update(dict.fromkeys(MEDIA_TAGS, _MEDIA))
+_KIND.update(dict.fromkeys(DROP_TAGS, _DROP))
+
+# inline gathering by tag: dropped, block (not descended into), line
+# break; a tag not listed is inline and descended into
+_SKIP, _NESTED, _BREAK = range(3)
+_GATHER = dict.fromkeys(BLOCK_TAGS, _NESTED)
+_GATHER.update(dict.fromkeys(DROP_TAGS, _SKIP))
+_GATHER["br"] = _BREAK
+
+# a text run that is exactly this character also breaks the line, as
+# <br> does (the sentinel the line assembler has always split on)
+_BR = "\x00"
+_BLANK = ("", None, None, 0, None)  # keep_blanks placeholder line
+_RULE_FIRST = frozenset("-=*_~#")
+_DOC_ORDER = attrgetter("start", "node_id")
 
 
-_BR = "\x00"  # line-break sentinel; never occurs in normalized text
-
-
-class _Gather:
-    """Inline-content accumulator: (text, raw-span, is_link) parts, link
-    parts, and whether nested block children were skipped (container
-    evidence).
-
-    Parts carry their raw byte spans so every *line* gets an exact hull
-    into the source document — the forward/inverse offset map of
-    origami's dewarp grid (``core/dewarp.py:496-576``), at the
-    granularity compose and the lines stage consume.  The is_link flag
-    feeds per-line link evidence (line confidence, the
-    ``ConfidenceSampler`` analog — reference ``batch/detect/lines.py:
-    25-54`` samples segmentation labels under each line; the label
-    evidence under a web line is which characters sit inside <a>)."""
-
-    def __init__(self):
-        self.parts: list = []        # (str, (s, e) | None, is_link)
-        self.link_parts: list = []
-        self.skipped_block = False
-
-
-def _gather_inline(page: Page, node: Node, g: _Gather, in_link: bool) -> None:
-    """Collect raw text fragments of `node`'s inline content into `g`.
-
-    Stops at nested block elements (marking `skipped_block`); recursion
-    through inline elements only."""
-    parts = g.parts
-    if not node.children:  # fast path: text-only node (most leaves)
-        for (s, e) in node.texts:
-            raw = page.text_of(s, e)
-            parts.append((raw, (s, e) if raw.strip() else None, in_link))
-            if in_link:
-                g.link_parts.append(raw)
-        return
-    if node.texts:
-        items = [(s, (s, e)) for (s, e) in node.texts]
-        items += [(page.nodes[cid].start, cid) for cid in node.children]
-        items.sort(key=lambda t: t[0])
-    else:  # children only: already in document order
-        items = [(0, cid) for cid in node.children]
-    for _, payload in items:
-        if type(payload) is tuple:
-            s, e = payload
-            raw = page.text_of(s, e)
-            parts.append((raw, (s, e) if raw.strip() else None, in_link))
-            if in_link:
-                g.link_parts.append(raw)
-        else:
-            child = page.nodes[payload]
-            ctag = child.tag
-            if ctag in DROP_TAGS:
-                continue
-            if ctag in BLOCK_TAGS:
-                g.skipped_block = True
-                continue
-            if ctag == "br":
-                parts.append((_BR, None, False))
-                continue
-            _gather_inline(page, child, g, in_link or ctag == "a")
+def _nests(node: Node) -> bool:
+    """True when an inline element holds a block element or an element
+    with children of its own — the only inline elements the walker
+    descends into (it may hide tag-soup blocks or media)."""
+    for c in node.content:
+        if type(c) is not tuple:
+            if c.tag in BLOCK_TAGS:
+                return True
+            for x in c.content:
+                if type(x) is not tuple:
+                    return True
+    return False
 
 
 # the WHATWG character-reference shape the stdlib's html.unescape
@@ -285,84 +257,136 @@ def _normalize_with_map(pieces, data: bytes):
     return "".join(c for c, _ in out), [o for _, o in out]
 
 
-def _assemble_lines(parts, keep_blanks: bool = False,
-                    char_maps: bool = False, data: bytes = b""):
-    """(text, span, is_link) parts -> list of (normalized_line, hull_s,
-    hull_e, link_len, char_map); empty lines dropped.  Hull = min/max
-    raw span of the line's contributing non-whitespace runs; link_len =
-    normalized char count of the line's <a> content (per-line
-    confidence evidence, same normalization as the block-level
-    link_len).
-
-    ``keep_blanks``: emit a ``("", None, None, 0, None)`` entry per
-    blank line instead of dropping it — the whitespace-valley evidence
-    the density-split in ``emit_text_groups`` consumes (blank runs
-    between text runs are invisible once dropped).
-
-    ``char_maps``: populate the 5th slot with the per-char raw-offset
-    array from :func:`_normalize_with_map` (None otherwise — the
-    default path never pays for the map)."""
-    lines = []
-    pbuf, lbuf = [], []
-    for text, span, is_link in parts:
-        if text == _BR:
-            lines.append((pbuf, lbuf))
-            pbuf, lbuf = [], []
-            continue
-        pbuf.append((text, span))
-        if is_link:
-            lbuf.append(text)
-    lines.append((pbuf, lbuf))
-    out = []
-    for pieces, lparts in lines:
-        raw = "".join(t for t, _ in pieces)
-        norm = normalize_text(raw)
-        if norm:
-            spans = [sp for _, sp in pieces if sp is not None]
-            hs = min(sp[0] for sp in spans) if spans else None
-            he = max(sp[1] for sp in spans) if spans else None
-            llen = len(normalize_text(" ".join(lparts))) if lparts else 0
-            cmap = None
-            if char_maps:
-                norm2, cmap = _normalize_with_map(pieces, data)
-                if norm2 != norm:   # contract breach — fail loudly
-                    raise ValueError(
-                        f"char-map normalization diverged: {norm2!r} != {norm!r}")
-            out.append((norm, hs, he, min(llen, len(norm)), cmap))
-        elif keep_blanks:
-            out.append(("", None, None, 0, None))
-    return out
+def _line(raws: list, hs, he, links: list, pieces, data: bytes):
+    """One line's raw text runs -> (normalized_line, hull_s, hull_e,
+    link_len, char_map), or None for a blank line.  Hull = raw span of
+    the line's first and last non-whitespace run (runs arrive in
+    document order); link_len = normalized char count of the line's <a>
+    content (per-line confidence evidence, same normalization as the
+    block-level link_len).  ``pieces`` — the line's (text, span-or-None)
+    runs — asks for the per-char raw-offset array of
+    :func:`_normalize_with_map` (None: the default path never pays for
+    the map)."""
+    if hs is None:  # whitespace-only runs normalize to ""
+        return None
+    norm = normalize_text("".join(raws))
+    if not norm:
+        return None
+    llen = min(len(normalize_text(" ".join(links))), len(norm)) if links else 0
+    cmap = None
+    if pieces is not None:
+        norm2, cmap = _normalize_with_map(pieces, data)
+        if norm2 != norm:   # contract breach — fail loudly
+            raise ValueError(
+                f"char-map normalization diverged: {norm2!r} != {norm!r}")
+    return (norm, hs, he, llen, cmap)
 
 
-def _inline_text(page: Page, node: Node, keep_blanks: bool = False,
+def _inline_text(data: bytes, doc, node: Node, keep_blanks: bool = False,
                  char_maps: bool = False):
-    """-> (lines, text_len, link_len, gather) where lines is a list of
-    (normalized_text, hull_start, hull_end, link_len, char_map)."""
-    g = _Gather()
-    _gather_inline(page, node, g, node.tag == "a")
-    lines = _assemble_lines(g.parts, keep_blanks=keep_blanks,
-                            char_maps=char_maps, data=page.data)
-    text_len = sum(len(ln) for (ln, _s, _e, _l, _c) in lines)
+    """Inline content of `node` -> (lines, text_len, link_len,
+    skipped_block), lines being (normalized_text, hull_start, hull_end,
+    link_len, char_map) with empty lines dropped.
+
+    Collects the direct text runs and those of inline descendants in
+    document order, stopping at nested block elements
+    (``skipped_block``: container evidence) and skipping dropped
+    subtrees; ``<br>`` ends a line.  Every line keeps an exact raw byte
+    hull into the source document — the forward/inverse offset map of
+    origami's dewarp grid (``core/dewarp.py:496-576``), at the
+    granularity compose and the lines stage consume.  Text inside <a>
+    feeds the link evidence (line confidence, the ``ConfidenceSampler``
+    analog — reference ``batch/detect/lines.py:25-54`` samples
+    segmentation labels under each line; the label evidence under a web
+    line is which characters sit inside <a>).
+
+    ``doc`` is ``data`` decoded when the page is ASCII (runs slice it
+    instead of decoding each), else None.  ``keep_blanks``: emit a
+    ``("", None, None, 0, None)`` entry per blank line instead of
+    dropping it — the whitespace-valley evidence the density split
+    consumes.  ``char_maps``: fill each line's char map."""
+    lines = []
+    raws, links, link_runs = [], [], []
+    pieces = [] if char_maps else None
+    hs = he = None
+    skipped = False
+    link = node.tag == "a"
+    suspended = []  # (iterator, in_link) of the enclosing inline elements
+    it = iter(node.content)
+    while True:
+        for x in it:
+            if type(x) is tuple:
+                s, e = x
+                raw = (doc[s:e] if doc is not None
+                       else data[s:e].decode("utf-8", "replace"))
+                if link:
+                    link_runs.append(raw)
+                if raw != _BR:
+                    raws.append(raw)
+                    if link:
+                        links.append(raw)
+                    if raw.isspace():
+                        if pieces is not None:
+                            pieces.append((raw, None))
+                    else:
+                        if hs is None:
+                            hs = s
+                        he = e
+                        if pieces is not None:
+                            pieces.append((raw, x))
+                    continue
+            else:
+                kind = _GATHER.get(x.tag)
+                if kind is None:  # inline element: descend
+                    suspended.append((it, link))
+                    link = link or x.tag == "a"
+                    it = iter(x.content)
+                    break
+                if kind != _BREAK:
+                    skipped = skipped or kind == _NESTED
+                    continue
+            ln = _line(raws, hs, he, links, pieces, data)
+            if ln is not None:
+                lines.append(ln)
+            elif keep_blanks:
+                lines.append(_BLANK)
+            raws, links, hs = [], [], None
+            if pieces is not None:
+                pieces = []
+        else:
+            if suspended:
+                it, link = suspended.pop()
+                continue
+            break
+    ln = _line(raws, hs, he, links, pieces, data)
+    if ln is not None:
+        lines.append(ln)
+    elif keep_blanks:
+        lines.append(_BLANK)
+    text_len = 0
+    for ln in lines:
+        text_len += len(ln[0])
     link_len = (
-        len(normalize_text(" ".join(g.link_parts))) if g.link_parts else 0
+        min(len(normalize_text(" ".join(link_runs))), text_len)
+        if link_runs else 0
     )
-    return lines, text_len, min(link_len, text_len), g
+    return lines, text_len, link_len, skipped
 
 
-def _table_cells(page: Page, table: Node):
+def _table_cells(data: bytes, doc, table: Node):
     """-> (rows:list[list[str]], has_header). Walks tr/td/th descendants."""
     rows, header_flags = [], []
 
     def walk(node: Node):
-        for cid in node.children:
-            child = page.nodes[cid]
+        for child in node.content:
+            if type(child) is tuple:
+                continue
             if child.tag == "tr":
                 cells, all_th = [], True
-                for gid in child.children:
-                    cell = page.nodes[gid]
-                    if cell.tag in ("td", "th"):
-                        lines, _, _, _g = _inline_text(page, cell)
-                        cells.append(" ".join(ln for (ln, _s, _e, _l, _c) in lines))
+                for cell in child.content:
+                    if type(cell) is not tuple and cell.tag in ("td", "th"):
+                        lines = _inline_text(data, doc, cell)[0]
+                        cells.append(" ".join([ln[0] for ln in lines]))
                         all_th = all_th and cell.tag == "th"
                 if cells:
                     rows.append(cells)
@@ -374,9 +398,18 @@ def _table_cells(page: Page, table: Node):
     return rows, has_header
 
 
-_WS_ONLY = re.compile(rb"[ \t\r\n\f]*")
+_GAP_WS = b" \t\r\n\f"
 _GAP_COMMENT = re.compile(rb"<!--.*?-->", re.S)
 _GAP_TAG = re.compile(rb"<[^>]*>")
+
+
+def _bare(seq: int, node: Node, label: str, tag_path: str, in_chrome: bool,
+          start: int, end: int, strength: float = 0.0) -> Block:
+    """A text-less SEPARATOR / ILLUSTRATION block."""
+    return Block(seq, node.node_id, node.parent_id, label, node.tag,
+                 tag_path, node.depth, start, end, "", 0, 0, 0, in_chrome,
+                 True, False, False, "", None, False, None, None, False,
+                 strength)
 
 
 def extract_page(data: bytes, char_maps: bool = False) -> list:
@@ -394,32 +427,13 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
     (relational kernels, fused kernel, and the local oracle all enter
     here)."""
     page = build_tree(to_utf8(data))
+    data = page.data
+    doc = data.decode("ascii") if data.isascii() else None
     blocks: list = []
-    tag_stack: list = []
+    add = blocks.append
 
-    def chrome(tag_path_parts) -> bool:
-        return any(t in CHROME_TAGS for t in tag_path_parts)
-
-    def emit(node: Node, label: str, text: str, n_lines: int,
-             text_len: int, link_len: int, path_parts,
-             span: tuple | None = None,
-             line_spans: list | None = None,
-             strength: float = 0.0,
-             char_maps: list | None = None) -> None:
-        start, end = span if span else (node.start, node.end)
-        blocks.append(Block(
-            seq=len(blocks), node_id=node.node_id, parent_id=node.parent_id,
-            label=label, tag=node.tag, tag_path="/".join(path_parts),
-            depth=node.depth, start=start, end=end, text=text,
-            n_lines=n_lines, text_len=text_len, link_len=link_len,
-            in_chrome=chrome(path_parts),
-            ends_clean=text.endswith(_TERMINAL) if text else True,
-            line_spans=line_spans,
-            strength=strength,
-            char_maps=char_maps,
-        ))
-
-    def emit_text_groups(child, lines, text_len, link_len, parts, g):
+    def emit_text_groups(node, lines, link_len, tag_path, in_chrome,
+                         skipped):
         """Emit TEXT blocks from assembled lines, splitting at textual
         rule lines AND at density valleys (SplitDetector analog,
         ``layout.py:915-1001``):
@@ -436,85 +450,91 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
           (``check_obstacles`` analog) exactly like an explicit rule.
           Leading/trailing blank runs never split (the reference's
           border exclusion); a piece with no text simply isn't emitted
-          (the SplitFilter's empty-side case)."""
-        groups, cur, blanks = [], [], 0
+          (the SplitFilter's empty-side case).
+
+        Non-blank lines always carry a hull, and lines come in
+        document order, so a group's hull is its first line's start and
+        its last line's end."""
+        groups, cur, blanks, n_text = [], None, 0, 0
         for ln in lines:
-            if ln[0] == "":
+            t = ln[0]
+            if not t:
                 blanks += 1
                 continue
-            if _RULE_RE.fullmatch(ln[0]):
-                groups.append(("sep", [ln]))
-                cur = []
-            elif cur and blanks >= SPLIT_MIN_BLANK_LINES:
-                groups.append(("gutter", blanks))
-                cur = [ln]
-                groups.append(("text", cur))
-            else:
-                if not cur:
-                    cur = []
-                    groups.append(("text", cur))
+            if t[0] in _RULE_FIRST and _RULE_RE.fullmatch(t):
+                groups.append(ln)
+                cur = None
+            elif cur is not None and blanks < SPLIT_MIN_BLANK_LINES:
                 cur.append(ln)
+            else:
+                if cur is not None:
+                    groups.append(blanks)  # gutter between two text groups
+                cur = [ln]
+                groups.append(cur)
+                n_text += 1
             blanks = 0
-        n_groups = sum(1 for k, _ in groups if k == "text")
-
-        def hull_of(gl):
-            return (
-                (min(s for (_t, s, _e, _l, _c) in gl if s is not None),
-                 max(e for (_t, _s, e, _l, _c) in gl if e is not None))
-                if any(s is not None for (_t, s, _e, _l, _c) in gl)
-                else None
-            )
-
-        for i, (kind, gl) in enumerate(groups):
-            if kind == "gutter":
-                # by construction a gutter sits between two text groups;
-                # its span is the raw byte gap between their hulls
-                ph = hull_of(groups[i - 1][1])
-                nh = hull_of(groups[i + 1][1])
-                span = (
-                    (min(ph[1], nh[0]), max(ph[1], nh[0]))
-                    if ph and nh else (child.start, child.end)
-                )
-                # strength scales with valley height: 2 blank lines =
-                # 1.0 (the default separator), 8+ = 4.0 (capped)
-                emit(child, "SEPARATOR", "", 0, 0, 0,
-                     parts, span=span,
-                     strength=round(min(gl / 2.0, 4.0), 2))
-                continue
-            hull = hull_of(gl)
-            if kind == "sep":
+        start, end = node.start, node.end
+        whole = n_text == 1 and not skipped
+        for i, g in enumerate(groups):
+            if type(g) is int:
+                # its span is the raw byte gap between the neighbouring
+                # text groups' hulls; strength scales with valley
+                # height: 2 blank lines = 1.0 (the default separator),
+                # 8+ = 4.0 (capped)
+                a, b = groups[i - 1][-1][2], groups[i + 1][0][1]
+                add(_bare(len(blocks), node, "SEPARATOR", tag_path,
+                          in_chrome, min(a, b), max(a, b),
+                          round(min(g / 2.0, 4.0), 2)))
+            elif type(g) is tuple:
                 # rule-line strength scales with glyph run length:
                 # '-----' (5) = 1.0, a 20-glyph rule = 4.0 (capped)
-                emit(child, "SEPARATOR", "", 0, 0, 0,
-                     parts, span=hull or (child.start, child.end),
-                     strength=round(min(len(gl[0][0]) / 5.0, 4.0), 2))
-                continue
-            texts = [t for (t, _s, _e, _l, _c) in gl]
-            tlen = sum(len(t) for t in texts)
-            # whole-element span only when this is the single group of a
-            # non-container element; otherwise the group's text hull
-            # (container rationale: a stray text run in <body> must not
-            # swallow sibling blocks via overlap dedupe)
-            span = None
-            if n_groups > 1 or (g is not None and g.skipped_block):
-                span = hull
-            emit(child, "TEXT", "\n".join(texts), len(texts),
-                 tlen, link_len if n_groups == 1 else 0, parts,
-                 span=span,
-                 line_spans=[(s, e, l) for (_t, s, e, l, _c) in gl],
-                 char_maps=(
-                     [c for (_t, _s, _e, _l, c) in gl]
-                     if any(c is not None for (_t, _s, _e, _l, c) in gl)
-                     else None))
+                add(_bare(len(blocks), node, "SEPARATOR", tag_path,
+                          in_chrome, g[1], g[2],
+                          round(min(len(g[0]) / 5.0, 4.0), 2)))
+            else:
+                # whole-element span only when this is the single group
+                # of a non-container element; otherwise the group's text
+                # hull (container rationale: a stray text run in <body>
+                # must not swallow sibling blocks via overlap dedupe)
+                texts = [ln[0] for ln in g]
+                text = "\n".join(texts)
+                add(Block(
+                    len(blocks), node.node_id, node.parent_id, "TEXT",
+                    node.tag, tag_path, node.depth,
+                    start if whole else g[0][1], end if whole else g[-1][2],
+                    text, len(texts), len(text) - len(texts) + 1,
+                    link_len if n_text == 1 else 0, in_chrome,
+                    text.endswith(_TERMINAL), False, False, "", None, False,
+                    [(ln[1], ln[2], ln[3]) for ln in g],
+                    [ln[4] for ln in g] if char_maps else None))
 
-    def walk(node: Node, path_parts: list) -> None:
-        for cid in node.children:
-            child = page.nodes[cid]
-            tag = child.tag
-            if tag in DROP_TAGS:
+    def walk(node: Node, prefix: str, chrome: bool) -> None:
+        for child in node.content:
+            if type(child) is tuple:
                 continue
-            parts = path_parts + [tag]
-            if tag == "hr":
+            tag = child.tag
+            kind = _KIND.get(tag)
+            if kind == _DROP:
+                continue
+            tag_path = prefix + tag
+            in_chrome = chrome or tag in CHROME_TAGS
+            if kind == _BLOCK:
+                lines, text_len, link_len, skipped = _inline_text(
+                    data, doc, child, True, char_maps)
+                if text_len:
+                    emit_text_groups(child, lines, link_len, tag_path,
+                                     in_chrome, skipped)
+                walk(child, tag_path + "/", in_chrome)
+            elif kind is None:
+                # inline element at block level: its text belongs to the
+                # nearest block ancestor, but it may still hide nested
+                # block elements (tag soup) — recurse to find them
+                if _nests(child):
+                    walk(child, tag_path + "/", in_chrome)
+            elif kind == _MEDIA:
+                add(_bare(len(blocks), child, "ILLUSTRATION", tag_path,
+                          in_chrome, child.start, child.end))
+            elif kind == _HR:
                 size = child.attrs.get("size", "")
                 # ascii-guard: '³'.isdigit() is True but float('³')
                 # raises, and Arabic-Indic digits would parse silently —
@@ -523,63 +543,52 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
                     round(min(max(float(size), 0.5), 4.0), 2)
                     if (size.isascii() and size.isdigit()) else 1.0
                 )
-                emit(child, "SEPARATOR", "", 0, 0, 0, parts,
-                     strength=strength)
-            elif tag == TABLE_TAG:
-                rows, has_header = _table_cells(page, child)
+                add(_bare(len(blocks), child, "SEPARATOR", tag_path,
+                          in_chrome, child.start, child.end, strength))
+            elif kind == _TABLE:
+                rows, has_header = _table_cells(data, doc, child)
                 text = render_table(rows, has_header)
-                tlen = sum(len(c) for r in rows for c in r)
-                emit(child, "TABULAR", text,
-                     text.count("\n") + 1 if text else 0, tlen, 0, parts)
-                blocks[-1].cells = rows
-                blocks[-1].has_header = has_header
-            elif tag in LIST_TAGS:
+                add(Block(
+                    len(blocks), child.node_id, child.parent_id, "TABULAR",
+                    tag, tag_path, child.depth, child.start, child.end,
+                    text, text.count("\n") + 1 if text else 0,
+                    sum(len(c) for r in rows for c in r), 0, in_chrome,
+                    text.endswith(_TERMINAL) if text else True, False,
+                    False, "", rows, has_header))
+            else:  # list: one line per <li>
                 lines = []
-                for gid in child.children:
-                    li = page.nodes[gid]
-                    if li.tag == "li":
-                        li_lines, _, _, _g = _inline_text(
-                            page, li, char_maps=char_maps)
-                        lines.extend(li_lines)
+                for li in child.content:
+                    if type(li) is not tuple and li.tag == "li":
+                        lines += _inline_text(data, doc, li, False,
+                                              char_maps)[0]
                 if lines:
-                    emit(child, "TEXT",
-                         "\n".join(ln for (ln, _s, _e, _l, _c) in lines), len(lines),
-                         sum(len(ln) for (ln, _s, _e, _l, _c) in lines), 0, parts,
-                         line_spans=[(s, e, l) for (_t, s, e, l, _c) in lines],
-                         char_maps=(
-                             [c for (_t, _s, _e, _l, c) in lines]
-                             if any(c is not None for (_t, _s, _e, _l, c) in lines)
-                             else None))
-            elif tag in MEDIA_TAGS:
-                emit(child, "ILLUSTRATION", "", 0, 0, 0, parts)
-            elif _is_block(tag):
-                lines, text_len, link_len, g = _inline_text(
-                    page, child, keep_blanks=True, char_maps=char_maps)
-                if lines:
-                    emit_text_groups(child, lines, text_len, link_len,
-                                     parts, g)
-                walk(child, parts)
-            else:
-                # inline element at block level: its text belongs to the
-                # nearest block ancestor, but it may still hide nested
-                # block elements (tag soup) — recurse to find them
-                if any(_is_block(page.nodes[g_].tag) or page.nodes[g_].children
-                       for g_ in child.children):
-                    walk(child, parts)
-    walk(page.nodes[0], [])
+                    texts = [ln[0] for ln in lines]
+                    text = "\n".join(texts)
+                    add(Block(
+                        len(blocks), child.node_id, child.parent_id, "TEXT",
+                        tag, tag_path, child.depth, child.start, child.end,
+                        text, len(texts), len(text) - len(texts) + 1, 0,
+                        in_chrome, text.endswith(_TERMINAL), False, False,
+                        "", None, False,
+                        [(ln[1], ln[2], ln[3]) for ln in lines],
+                        [ln[4] for ln in lines] if char_maps else None))
+    root = page.nodes[0]
+    walk(root, "", False)
 
     # bare text at document root (no enclosing block element — plain-text
     # payloads, fragments, sliced spans): gather it like any block
-    root = page.nodes[0]
-    if root.texts:
-        lines, text_len, link_len, g = _inline_text(
-            page, root, keep_blanks=True, char_maps=char_maps)
-        if lines:
-            emit_text_groups(root, lines, text_len, link_len, ["#root"], g)
+    for c in root.content:
+        if type(c) is tuple:
+            lines, text_len, link_len, skipped = _inline_text(
+                data, doc, root, True, char_maps)
+            if text_len:
+                emit_text_groups(root, lines, link_len, "#root", False,
+                                 skipped)
             # keep document order: root text precedes element blocks
-            blocks.sort(key=lambda b: (b.start, b.node_id))
+            blocks.sort(key=_DOC_ORDER)
             for i, b in enumerate(blocks):
                 b.seq = i
+            break
 
     # line-level re-homing (reference reclassification,
     # batch/detect/lines.py:108-127): a chrome TEXT block that fails the
@@ -607,15 +616,10 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
         for line, (s, e, l), cm in zip(b.text.split("\n"), b.line_spans, cms):
             if len(line) >= RESCUE_MIN_CHARS and l <= RESCUE_MAX_LINK_SHARE * len(line):
                 rehomed.append(Block(
-                    seq=0, node_id=b.node_id, parent_id=b.parent_id,
-                    label="TEXT", tag=b.tag, tag_path=b.tag_path,
-                    depth=b.depth, start=s, end=e, text=line, n_lines=1,
-                    text_len=len(line), link_len=l, in_chrome=False,
-                    ends_clean=line.endswith(_TERMINAL),
-                    line_spans=[(s, e, l)],
-                    char_maps=[cm] if cm is not None else None,
-                    rehomed=True,
-                ))
+                    0, b.node_id, b.parent_id, "TEXT", b.tag, b.tag_path,
+                    b.depth, s, e, line, 1, len(line), l, False,
+                    line.endswith(_TERMINAL), False, False, "", None, False,
+                    [(s, e, l)], [cm] if cm is not None else None, True))
     if len(rehomed) != len(blocks):
         blocks = rehomed
         for i, b in enumerate(blocks):
@@ -630,14 +634,12 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
 
     # whitespace-gap adjacency flags (fragment-merge evidence); the
     # spans index the transcoded page.data, not the caller's bytes
-    data = page.data
     for a, b in zip(blocks, blocks[1:]):
         if a.end <= b.start:
-            a.ws_gap_next = bool(_WS_ONLY.fullmatch(data, a.end, b.start))
-            if a.ws_gap_next:
-                a.gap_markup_only_next = True
-            else:
-                gap = _GAP_COMMENT.sub(b"", data[a.end:b.start])
-                gap = _GAP_TAG.sub(b"", gap)
-                a.gap_markup_only_next = bool(_WS_ONLY.fullmatch(gap))
+            gap = data[a.end:b.start]
+            if not gap.strip(_GAP_WS):
+                a.ws_gap_next = a.gap_markup_only_next = True
+            elif b"<" in gap:
+                gap = _GAP_TAG.sub(b"", _GAP_COMMENT.sub(b"", gap))
+                a.gap_markup_only_next = not gap.strip(_GAP_WS)
     return blocks

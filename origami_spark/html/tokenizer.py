@@ -15,25 +15,31 @@ from __future__ import annotations
 
 import html as _htmllib
 import re
-from dataclasses import dataclass, field
 
-# --- token patterns (bytes) -------------------------------------------------
+# --- token pattern (bytes) --------------------------------------------------
 
-_COMMENT_RE = re.compile(rb"<!--.*?-->", re.S)
-_DOCTYPE_RE = re.compile(rb"<![^>]*>", re.S)
+# One search per token, tried in this order at the next '<': a comment,
+# a '<!...>' declaration, a '<?...>' processing instruction, a start or
+# end tag, else the bare '<' alone (a stray '<' is text).  Comments,
+# declarations and PIs leave group 2 (the tag name) empty.
+#
 # '<?...' follows the HTML bogus-comment rule: consume to the FIRST
 # '>' (which is also how an XHTML prolog <?xml ...?> terminates, since
 # its first '>' is the one in '?>').  A lazy '<\?.*?\?>' would instead
 # swallow arbitrary page text between a stray '<?' and any later '?>'
 # — content loss browsers don't have.
-_PI_BOGUS_RE = re.compile(rb"<\?[^>]*>", re.S)
+#
+# The attribute group is greedy, so an XHTML self-close '/' ends up as
+# its last byte; build_tree strips it from there.
+_TOKEN_RE = re.compile(
+    rb"<(?:!--.*?-->|![^>]*>|\?[^>]*>"
+    rb"|(/?)([a-zA-Z][a-zA-Z0-9-]*)((?:[^>\"']|\"[^\"]*\"|'[^']*')*)>|)",
+    re.S,
+)
 _RAWTEXT_RE = {
     b"script": re.compile(rb"</script\s*>", re.I),
     b"style": re.compile(rb"</style\s*>", re.I),
 }
-_TAG_RE = re.compile(
-    rb"<(/?)([a-zA-Z][a-zA-Z0-9-]*)((?:[^>\"']|\"[^\"]*\"|'[^']*')*)(/?)>", re.S
-)
 _ATTR_RE = re.compile(
     rb"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
 )
@@ -70,38 +76,66 @@ _IMPLICIT_CLOSE = {
     "dt": {"dd", "dt"},
 }
 
+# raw tag-name bytes -> (tag, implicit-close set, is block, may have
+# content, raw-text end pattern); bounded because names are page data
+_TAG_INFO: dict = {}
+_TAG_INFO_MAX = 4096
 
-@dataclass
+
+def _tag_info(tagb: bytes) -> tuple:
+    tag = tagb.decode("ascii").lower()
+    info = (tag, _IMPLICIT_CLOSE.get(tag), tag in BLOCK_TAGS,
+            tag not in VOID_TAGS, _RAWTEXT_RE.get(tagb.lower()))
+    if len(_TAG_INFO) < _TAG_INFO_MAX:
+        _TAG_INFO[tagb] = info
+    return info
+
+
 class Node:
     """One DOM element. ``start``/``end`` are byte offsets of the whole
     element (open tag through close tag); ``inner_start``/``inner_end``
-    bound its content.  Attributes parse lazily (`attrs`): most nodes
-    never need them, and eager parsing showed up as ~6% of kernel time."""
+    bound its content.  ``content`` holds the element's direct text runs
+    (``(start, end)`` tuples) and child ``Node``s in document order;
+    ``texts`` and ``children`` are views of it.  Attributes parse lazily
+    (`attrs`): most nodes never need them."""
 
-    node_id: int
-    parent_id: int
-    tag: str
-    depth: int
-    start: int
-    end: int
-    inner_start: int
-    inner_end: int
-    attrs_raw: bytes = b""
-    children: list = field(default_factory=list)  # node_ids
-    texts: list = field(default_factory=list)  # (start, end) direct text runs
+    __slots__ = ("node_id", "parent_id", "tag", "depth", "start", "end",
+                 "inner_start", "inner_end", "attrs_raw", "content")
+
+    def __init__(self, node_id: int, parent_id: int, tag: str, depth: int,
+                 start: int, end: int, attrs_raw: bytes = b""):
+        self.node_id = node_id
+        self.parent_id = parent_id
+        self.tag = tag
+        self.depth = depth
+        self.start = start
+        self.end = end
+        self.inner_start = end
+        self.inner_end = end
+        self.attrs_raw = attrs_raw
+        self.content = []
+
+    @property
+    def children(self) -> list:
+        """node_ids of the child elements, in document order."""
+        return [c.node_id for c in self.content if type(c) is Node]
+
+    @property
+    def texts(self) -> list:
+        """(start, end) of the direct text runs, in document order."""
+        return [c for c in self.content if type(c) is tuple]
 
     @property
     def attrs(self) -> dict:
         return _parse_attrs(self.attrs_raw)
 
 
-@dataclass
 class Page:
-    nodes: list  # list[Node], document order; nodes[0] is synthetic root
-    data: bytes
+    __slots__ = ("nodes", "data")
 
-    def text_of(self, start: int, end: int) -> str:
-        return self.data[start:end].decode("utf-8", errors="replace")
+    def __init__(self, nodes: list, data: bytes):
+        self.nodes = nodes  # list[Node], document order; nodes[0] is synthetic root
+        self.data = data
 
 
 def _parse_attrs(raw: bytes) -> dict:
@@ -117,57 +151,6 @@ def _parse_attrs(raw: bytes) -> dict:
     return attrs
 
 
-def tokenize(data: bytes):
-    """Yield (kind, payload) events over the byte stream.
-
-    kinds: ("open", tag:str, attrs_raw:bytes, start, end, selfclose:bool),
-           ("close", tag:str, start, end), ("text", start, end).
-    Comments/doctype/script/style bodies are skipped (DROP semantics).
-    """
-    pos, n = 0, len(data)
-    while pos < n:
-        lt = data.find(b"<", pos)
-        if lt < 0:
-            yield ("text", pos, n)
-            break
-        if lt > pos:
-            yield ("text", pos, lt)
-        if data[lt : lt + 2] in (b"<!", b"<?"):
-            m = (_COMMENT_RE.match(data, lt) or _DOCTYPE_RE.match(data, lt)
-                 or _PI_BOGUS_RE.match(data, lt))
-            if m:
-                pos = m.end()
-                continue
-        m = _TAG_RE.match(data, lt)
-        if not m:
-            # stray '<' — treat as text up to next '<'
-            nxt = data.find(b"<", lt + 1)
-            nxt = n if nxt < 0 else nxt
-            yield ("text", lt, nxt)
-            pos = nxt
-            continue
-        closing, tagb, attrs_raw, selfclose = m.group(1, 2, 3, 4)
-        if not selfclose and attrs_raw.endswith(b"/"):
-            selfclose = b"/"
-            attrs_raw = attrs_raw[:-1]
-        tag = tagb.decode("ascii", "replace").lower()
-        if closing:
-            yield ("close", tag, lt, m.end())
-            pos = m.end()
-            continue
-        yield ("open", tag, attrs_raw, lt, m.end(), bool(selfclose))
-        pos = m.end()
-        # raw-text elements: skip body to the matching end tag
-        raw_re = _RAWTEXT_RE.get(tagb.lower())
-        if raw_re and not selfclose:
-            em = raw_re.search(data, pos)
-            if em:
-                yield ("close", tag, em.start(), em.end())
-                pos = em.end()
-            else:
-                pos = n
-
-
 def build_tree(data: bytes) -> Page:
     """Build a flat node table (document order) with byte spans.
 
@@ -175,112 +158,99 @@ def build_tree(data: bytes) -> Page:
     ancestor or are ignored; unclosed elements close at document end
     (matches the reference's tolerance of imperfect inputs —
     ``Decompose``/``buffer(0)`` fixes, ``core/contours.py:157-164``).
+    Text runs split at every '<', a stray one included.
     """
     n = len(data)
-    root = Node(0, -1, "#root", 0, 0, n, 0, n, b"")
+    root = Node(0, -1, "#root", 0, 0, n)
+    root.inner_start = 0
     nodes = [root]
     stack = [root]  # open elements
-
-    # scanning inlined (no event-generator hop: the tokenizer yielded
-    # ~160 tuples/doc, measurable at millions of docs); the standalone
-    # `tokenize` remains the documented event API
-    pos = 0
-    tag_match = _TAG_RE.match
-    find = data.find
-    while pos < n:
-        lt = find(b"<", pos)
-        if lt < 0:
-            stack[-1].texts.append((pos, n))
+    top = root
+    content = root.content  # top.content
+    search = _TOKEN_RE.search
+    info_of = _TAG_INFO.get
+    pos = scan = 0  # start of the pending text run / of the next search
+    while True:
+        m = search(data, scan)
+        if m is None:
+            if pos < n:
+                content.append((pos, n))
             break
+        lt = m.start()
         if lt > pos:
-            stack[-1].texts.append((pos, lt))
-        if data[lt + 1 : lt + 2] in (b"!", b"?"):
-            m = (_COMMENT_RE.match(data, lt) or _DOCTYPE_RE.match(data, lt)
-                 or _PI_BOGUS_RE.match(data, lt))
-            if m:
-                pos = m.end()
-                continue
-        m = tag_match(data, lt)
-        if not m:
-            nxt = find(b"<", lt + 1)
-            nxt = n if nxt < 0 else nxt
-            stack[-1].texts.append((lt, nxt))
-            pos = nxt
+            content.append((pos, lt))
+        closing, tagb, attrs_raw = m.groups()
+        scan = m.end()
+        if tagb is None:
+            # comment, declaration or PI: skipped; a stray '<' starts a
+            # text run that ends at the next '<'
+            pos = lt if scan == lt + 1 else scan
             continue
-        closing, tagb, attrs_raw, selfclose = m.group(1, 2, 3, 4)
-        # the greedy attrs group eats a trailing '/' (XHTML self-close)
-        # before the optional group 4 can see it — recover it here
-        if not selfclose and attrs_raw.endswith(b"/"):
-            selfclose = b"/"
-            attrs_raw = attrs_raw[:-1]
-        tag = tagb.decode("ascii", "replace").lower()
-        pos = m.end()
+        pos = scan
+        tag, implicit, is_block, has_content, raw_re = (
+            info_of(tagb) or _tag_info(tagb))
         if closing:
-            # find matching open element; unmatched close tags are ignored
-            for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == tag:
-                    while len(stack) > i + 1:  # implicitly close children
-                        top = stack.pop()
-                        top.inner_end = lt
-                        top.end = lt
-                    matched = stack.pop()
-                    matched.inner_end = lt
-                    matched.end = pos
-                    break
+            # the nearest open element of that name closes, with every
+            # element above it; unmatched close tags are ignored
+            if top.tag != tag:
+                for i in range(len(stack) - 2, 0, -1):
+                    if stack[i].tag == tag:
+                        for t in stack[i + 1:]:
+                            t.inner_end = t.end = lt
+                        del stack[i + 1:]
+                        top = stack[i]
+                        break
+                else:
+                    continue
+            top.inner_end = lt
+            top.end = pos
+            stack.pop()
+            top = stack[-1]
+            content = top.content
             continue
         # open tag
-        implicit = _IMPLICIT_CLOSE.get(tag)
-        if implicit:
-            while len(stack) > 1 and stack[-1].tag in implicit:
-                top = stack.pop()
-                top.inner_end = lt
-                top.end = lt
+        if implicit is not None and top.tag in implicit:
+            while top.tag in implicit:
+                top.inner_end = top.end = lt
+                stack.pop()
+                top = stack[-1]
+            content = top.content
         # HTML5: any block-level start tag implies </p> for an open <p>,
         # popping through any unclosed inline formatting elements
-        if tag in BLOCK_TAGS:
+        if is_block and (top.tag == "p" or top.tag not in BLOCK_TAGS):
             for i in range(len(stack) - 1, 0, -1):
-                if stack[i].tag == "p":
-                    while len(stack) > i:
-                        top = stack.pop()
-                        top.inner_end = lt
-                        top.end = lt
+                t = stack[i].tag
+                if t == "p":
+                    for t in stack[i:]:
+                        t.inner_end = t.end = lt
+                    del stack[i:]
+                    top = stack[-1]
+                    content = top.content
                     break
-                if stack[i].tag in BLOCK_TAGS:
+                if t in BLOCK_TAGS:
                     break
-        parent = stack[-1]
-        node = Node(
-            node_id=len(nodes),
-            parent_id=parent.node_id,
-            tag=tag,
-            depth=len(stack),
-            start=lt,
-            end=pos,
-            inner_start=pos,
-            inner_end=pos,
-            attrs_raw=attrs_raw,
-        )
+        node = Node(len(nodes), top.node_id, tag, len(stack), lt, pos,
+                    attrs_raw)
         nodes.append(node)
-        parent.children.append(node.node_id)
-        if not selfclose and tag not in VOID_TAGS:
-            stack.append(node)
-            # raw-text elements: skip body to the matching end tag
-            raw_re = _RAWTEXT_RE.get(tagb.lower())
-            if raw_re:
+        content.append(node)
+        if attrs_raw[-1:] == b"/":  # XHTML self-close
+            node.attrs_raw = attrs_raw[:-1]
+        elif has_content:
+            if raw_re is None:
+                stack.append(node)
+                top = node
+                content = node.content
+            else:
+                # raw-text element: skip its body to the matching end tag
                 em = raw_re.search(data, pos)
-                stack.pop()
                 if em:
                     node.inner_end = em.start()
-                    node.end = em.end()
-                    pos = em.end()
+                    node.end = pos = scan = em.end()
                 else:
-                    node.inner_end = n
-                    node.end = n
-                    pos = n
-    while len(stack) > 1:
-        top = stack.pop()
-        top.inner_end = n
-        top.end = n
-    return Page(nodes=nodes, data=data)
+                    node.inner_end = node.end = pos = scan = n
+    for t in stack[1:]:
+        t.inner_end = t.end = n
+    return Page(nodes, data)
 
 
 def normalize_text(raw: str) -> str:
@@ -289,7 +259,11 @@ def normalize_text(raw: str) -> str:
     The web analog of origami's harmonization/LetterFilter normalization
     (``batch/detect/compose.py:588-593``): deterministic, idempotent.
     """
-    return _WS_COLLAPSE_RE.sub(" ", _htmllib.unescape(raw)).strip()
+    if "&" in raw:
+        raw = _htmllib.unescape(raw)
+    # str.split() splits on exactly the characters r"\s" matches, so
+    # this is the r"\s+" -> " " collapse plus strip
+    return " ".join(raw.split())
 
 
 # ---------------------------------------------------------------------------
