@@ -80,11 +80,9 @@ def _fused_kernel(batches):
             r = extract_document(bytes(html) if html is not None else b"")
             urls.append(url)
             texts.append(r["text"])
-            spans.append([
-                {"path": m["path"], "label": m["label"],
-                 "start": m["start"], "end": m["end"]}
-                for m in r["blocks"]
-            ])
+            # Arrow reads only the struct's fields (path, label, start,
+            # end) from each block dict
+            spans.append(r["blocks"])
         yield pd.DataFrame({"url": urls, "text": texts, "spans": spans})
 
 
