@@ -156,3 +156,29 @@ def test_extract_page_char_maps_are_pinned():
 def test_extract_document_output_is_pinned():
     assert _digest(extract_document(d) for d in _inputs()) == (
         "206db51ddb317c92d266f3540d77a080ce272b10fbc0199aba102c93ff27cd9d")
+
+
+def test_trace_seams_called_once_per_document(monkeypatch):
+    """perfbench's per-layer split patches ``blocks.build_tree`` and
+    ``extract_local.extract_page`` by name; a kernel that inlined either
+    would silently zero ``html.tokenizer.us_per_doc`` or fold it into
+    ``html.blocks.self_us_per_doc``."""
+    from origami_spark import extract_local
+    from origami_spark.html import blocks
+
+    calls = {"build_tree": 0, "extract_page": 0}
+
+    def counting(name, fn):
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(blocks, "build_tree",
+                        counting("build_tree", blocks.build_tree))
+    monkeypatch.setattr(extract_local, "extract_page",
+                        counting("extract_page", extract_local.extract_page))
+    docs = [p["html"] for p in generate_pages(42, 20)] + TAG_SOUP + HOSTILE
+    for d in docs:
+        extract_local.extract_document(d)
+    assert calls == {"build_tree": len(docs), "extract_page": len(docs)}
