@@ -39,7 +39,9 @@ def main(argv=None):
                     help="with --staged: also commit features/lines/tables/orders")
     ap.add_argument("--relational", action="store_true",
                     help="use the relational operator chain instead of fused")
-    ap.add_argument("--partitions", type=int, default=None)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="parse partitions of the relational and staged "
+                         "chains (the fused pass sizes its own)")
     ap.add_argument("--seed", type=int, default=42)
     args = ap.parse_args(argv)
 
@@ -72,8 +74,8 @@ def main(argv=None):
                              artifacts=args.artifacts)
         n = out.count()
     else:
-        fn = extract if args.relational else extract_fused
-        out = fn(spark, pages, partitions=args.partitions)
+        out = (extract(spark, pages, partitions=args.partitions)
+               if args.relational else extract_fused(spark, pages))
         out.write.mode("overwrite").parquet(args.output)
         n = spark.read.parquet(args.output).count()
     wall = time.monotonic() - t0

@@ -86,8 +86,7 @@ def _fused_kernel(batches):
         yield pd.DataFrame({"url": urls, "text": texts, "spans": spans})
 
 
-def extract_fused(spark: SparkSession, pages: DataFrame,
-                  partitions: int | None = None) -> DataFrame:
+def extract_fused(spark: SparkSession, pages: DataFrame) -> DataFrame:
     """Zero-shuffle-after-repartition fast path: the full rule sequence
     runs per document inside one Arrow kernel.
 
@@ -101,7 +100,7 @@ def extract_fused(spark: SparkSession, pages: DataFrame,
     form because its checkpoint tables are the resume + lineage story.
     """
     src = pages.select("url", "html")
-    n = partitions or src.sparkSession.sparkContext.defaultParallelism * 4
+    n = src.sparkSession.sparkContext.defaultParallelism * 4
     return src.repartition(n, "url").mapInPandas(_fused_kernel, schema=FUSED_SCHEMA)
 
 

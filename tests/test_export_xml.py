@@ -31,7 +31,7 @@ def test_xml_escaping(spark):
     html = "<body><p>AT&amp;T says 1 &lt; 2 &amp; \"x\".</p></body>".encode()
     pages = spark.createDataFrame([("u", bytearray(html))],
                                   "url string, html binary")
-    xml = to_xml(extract_fused(spark, pages, partitions=1)).first()["xml"]
+    xml = to_xml(extract_fused(spark, pages)).first()["xml"]
     root = ET.fromstring(xml)
     assert root.find("Text").text.strip() == 'AT&T says 1 < 2 & "x".'
 

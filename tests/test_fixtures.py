@@ -54,7 +54,7 @@ def test_fixtures_spark_fused(spark):
     df = spark.createDataFrame([(c, h) for c, h, _t in rows],
                                "url string, html binary")
     got = {r["url"]: r["text"]
-           for r in extract_fused(spark, df, partitions=2).collect()}
+           for r in extract_fused(spark, df).collect()}
     for case, _h, text in rows:
         assert got[case] == text, case
 

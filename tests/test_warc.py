@@ -104,7 +104,7 @@ def test_warc_to_extraction_byte_identical(spark, tmp_path):
 
     df = read_warc(spark, str(tmp_path / "*.warc*"))
     assert df.count() == 60
-    out = extract_fused(spark, df, partitions=4)
+    out = extract_fused(spark, df)
     golden = spark.createDataFrame(
         [(p["url"], p["text"]) for p in pages], "url string, golden string")
     cmp = out.join(golden, "url")
