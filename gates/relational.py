@@ -431,16 +431,16 @@ def q21_correlated_subquery(spark, sf):
     """Orders above their customer's average price (decorrelation —
     Catalyst rewrites this to a join; the reference has no optimizer,
     SURVEY.md §4)."""
-    o = _t(spark, sf, "orders")
-    o.createOrReplaceTempView("_orders_v")
+    # the formatter binds {o} to a uuid-named view it drops after
+    # analysis, so overlapping builds share no catalog name
     return spark.sql("""
         SELECT o.o_orderkey, o.o_custkey,
                round(o.o_totalprice, 2) AS price
-        FROM _orders_v o
+        FROM {o} o
         WHERE o.o_totalprice > 1.5 * (
-            SELECT avg(i.o_totalprice) FROM _orders_v i
+            SELECT avg(i.o_totalprice) FROM {o} i
             WHERE i.o_custkey = o.o_custkey)
-    """)
+    """, o=_t(spark, sf, "orders"))
 
 
 @gate("""

@@ -227,13 +227,22 @@ def _leading_text(node) -> str:
     return ""
 
 
+# registering a (temp) view names it in the session catalog, where an
+# overlapping query can replace it; spark.sql(query, df=df) registers a
+# uuid-named view and drops it after analysis instead
+_CATALOG_WRITES = frozenset((
+    "saveAsTable", "createOrReplaceTempView", "createTempView",
+    "createGlobalTempView", "createOrReplaceGlobalTempView",
+    "registerTempTable"))
+
+
 def _touches_catalog(node) -> bool:
     if isinstance(node, ast.Attribute):
         return node.attr == "catalog"
     if not (isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)):
         return False
-    if node.func.attr == "saveAsTable":
+    if node.func.attr in _CATALOG_WRITES:
         return True
     return (node.func.attr == "sql" and bool(node.args)
             and bool(_CATALOG_DDL.match(_leading_text(node.args[0]))))
@@ -245,8 +254,8 @@ def _catalog_uses(tree) -> list:
 
 
 def test_engine_never_touches_session_catalog():
-    """No operator, gate or job registers, drops or looks up a table in
-    the session catalog: its entries are session-wide names every
+    """No operator, gate or job registers, drops or looks up a table or a
+    temp view in the session catalog: its entries are session-wide names every
     overlapping query shares, and a stage is read only through its
     snapshot manifest."""
     assert _catalog_uses(ast.parse(
@@ -255,7 +264,12 @@ def test_engine_never_touches_session_catalog():
         'spark.sql("""\n  CREATE TABLE t (a int) USING parquet""")\n'
         'spark.sql(f"drop table if exists {t}")\n'
         'spark.sql("SELECT 1 AS created")\n'
-        'spark.sql(f"SELECT * FROM {t}")')) == [1, 2, 3, 5]
+        'spark.sql(f"SELECT * FROM {t}")\n'
+        'o.createOrReplaceTempView("_v")\n'
+        'o.createTempView("_v")\n'
+        'o.createGlobalTempView("_v")\n'
+        'o.registerTempTable("_v")\n'
+        'spark.sql("SELECT * FROM {o}", o=o)')) == [1, 2, 3, 5, 8, 9, 10, 11]
     files = [p for d in ("origami_spark", "gates", "jobs")
              for p in sorted((_ROOT / d).rglob("*.py"))]
     writes = [(p.relative_to(_ROOT).as_posix(), line) for p in files
