@@ -109,13 +109,17 @@ def extract_document(html: bytes) -> dict:
         first = g[0]
         if first.label == "SEPARATOR":
             continue
+        end, text = first.end, first.text
+        if len(g) > 1:
+            end = max([m.end for m in g])
+            text = " ".join([m.text for m in g])
         merged.append({
             "label": first.label,
             "path": first.path,
             "seq": first.seq,
             "start": first.start,
-            "end": max([m.end for m in g]) if len(g) > 1 else first.end,
-            "text": " ".join([m.text for m in g]) if len(g) > 1 else first.text,
+            "end": end,
+            "text": text,
             "merged_from": [m.path for m in g[1:]],
         })
 

@@ -305,6 +305,18 @@ def _inline_text(data: bytes, doc, node: Node, keep_blanks: bool = False,
     ``("", None, None, 0, None)`` entry per blank line instead of
     dropping it — the whitespace-valley evidence the density split
     consumes.  ``char_maps``: fill each line's char map."""
+    content = node.content
+    if len(content) == 1 and not char_maps and node.tag != "a":
+        x = content[0]
+        if type(x) is tuple:  # one text run: the common leaf block
+            s, e = x
+            raw = (doc[s:e] if doc is not None
+                   else data[s:e].decode("utf-8", "replace"))
+            if raw != _BR:
+                norm = "" if raw.isspace() else normalize_text(raw)
+                if norm:
+                    return [(norm, s, e, 0, None)], len(norm), 0, False
+                return [_BLANK] if keep_blanks else [], 0, 0, False
     lines = []
     raws, links, link_runs = [], [], []
     pieces = [] if char_maps else None
@@ -312,7 +324,7 @@ def _inline_text(data: bytes, doc, node: Node, keep_blanks: bool = False,
     skipped = False
     link = node.tag == "a"
     suspended = []  # (iterator, in_link) of the enclosing inline elements
-    it = iter(node.content)
+    it = iter(content)
     while True:
         for x in it:
             if type(x) is tuple:
@@ -412,6 +424,24 @@ def _bare(seq: int, node: Node, label: str, tag_path: str, in_chrome: bool,
                  strength)
 
 
+def _text_block(seq: int, node: Node, tag_path: str, in_chrome: bool,
+                start: int, end: int, lines: list, link_len: int,
+                char_maps: bool) -> Block:
+    """A TEXT block of non-blank lines."""
+    texts = [ln[0] for ln in lines]
+    text = "\n".join(texts)
+    return Block(seq, node.node_id, node.parent_id, "TEXT", node.tag,
+                 tag_path, node.depth, start, end, text, len(texts),
+                 len(text) - len(texts) + 1, link_len, in_chrome,
+                 text.endswith(_TERMINAL), False, False, "", None, False,
+                 [(ln[1], ln[2], ln[3]) for ln in lines],
+                 [ln[4] for ln in lines] if char_maps else None)
+
+
+def _is_rule(line: str) -> bool:
+    return line[0] in _RULE_FIRST and bool(_RULE_RE.fullmatch(line))
+
+
 def extract_page(data: bytes, char_maps: bool = False) -> list:
     """html bytes -> list[Block] in document order.
 
@@ -455,13 +485,20 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
         Non-blank lines always carry a hull, and lines come in
         document order, so a group's hull is its first line's start and
         its last line's end."""
+        if len(lines) == 1 and not _is_rule(lines[0][0]):
+            ln = lines[0]
+            add(_text_block(
+                len(blocks), node, tag_path, in_chrome,
+                ln[1] if skipped else node.start,
+                ln[2] if skipped else node.end, lines, link_len, char_maps))
+            return
         groups, cur, blanks, n_text = [], None, 0, 0
         for ln in lines:
             t = ln[0]
             if not t:
                 blanks += 1
                 continue
-            if t[0] in _RULE_FIRST and _RULE_RE.fullmatch(t):
+            if _is_rule(t):
                 groups.append(ln)
                 cur = None
             elif cur is not None and blanks < SPLIT_MIN_BLANK_LINES:
@@ -496,17 +533,10 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
                 # of a non-container element; otherwise the group's text
                 # hull (container rationale: a stray text run in <body>
                 # must not swallow sibling blocks via overlap dedupe)
-                texts = [ln[0] for ln in g]
-                text = "\n".join(texts)
-                add(Block(
-                    len(blocks), node.node_id, node.parent_id, "TEXT",
-                    node.tag, tag_path, node.depth,
+                add(_text_block(
+                    len(blocks), node, tag_path, in_chrome,
                     start if whole else g[0][1], end if whole else g[-1][2],
-                    text, len(texts), len(text) - len(texts) + 1,
-                    link_len if n_text == 1 else 0, in_chrome,
-                    text.endswith(_TERMINAL), False, False, "", None, False,
-                    [(ln[1], ln[2], ln[3]) for ln in g],
-                    [ln[4] for ln in g] if char_maps else None))
+                    g, link_len if n_text == 1 else 0, char_maps))
 
     def walk(node: Node, prefix: str, chrome: bool) -> None:
         for child in node.content:
@@ -562,16 +592,9 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
                         lines += _inline_text(data, doc, li, False,
                                               char_maps)[0]
                 if lines:
-                    texts = [ln[0] for ln in lines]
-                    text = "\n".join(texts)
-                    add(Block(
-                        len(blocks), child.node_id, child.parent_id, "TEXT",
-                        tag, tag_path, child.depth, child.start, child.end,
-                        text, len(texts), len(text) - len(texts) + 1, 0,
-                        in_chrome, text.endswith(_TERMINAL), False, False,
-                        "", None, False,
-                        [(ln[1], ln[2], ln[3]) for ln in lines],
-                        [ln[4] for ln in lines] if char_maps else None))
+                    add(_text_block(len(blocks), child, tag_path, in_chrome,
+                                    child.start, child.end, lines, 0,
+                                    char_maps))
     root = page.nodes[0]
     walk(root, "", False)
 

@@ -134,7 +134,8 @@ class Page:
     __slots__ = ("nodes", "data")
 
     def __init__(self, nodes: list, data: bytes):
-        self.nodes = nodes  # list[Node], document order; nodes[0] is synthetic root
+        # list[Node] in document order; nodes[0] is the synthetic root
+        self.nodes = nodes
         self.data = data
 
 
@@ -167,87 +168,88 @@ def build_tree(data: bytes) -> Page:
     stack = [root]  # open elements
     top = root
     content = root.content  # top.content
-    search = _TOKEN_RE.search
     info_of = _TAG_INFO.get
-    pos = scan = 0  # start of the pending text run / of the next search
+    pos = 0  # start of the pending text run
+    tokens = _TOKEN_RE.finditer(data)
     while True:
-        m = search(data, scan)
-        if m is None:
-            if pos < n:
-                content.append((pos, n))
-            break
-        lt = m.start()
-        if lt > pos:
-            content.append((pos, lt))
-        closing, tagb, attrs_raw = m.groups()
-        scan = m.end()
-        if tagb is None:
-            # comment, declaration or PI: skipped; a stray '<' starts a
-            # text run that ends at the next '<'
-            pos = lt if scan == lt + 1 else scan
-            continue
-        pos = scan
-        tag, implicit, is_block, has_content, raw_re = (
-            info_of(tagb) or _tag_info(tagb))
-        if closing:
-            # the nearest open element of that name closes, with every
-            # element above it; unmatched close tags are ignored
-            if top.tag != tag:
-                for i in range(len(stack) - 2, 0, -1):
-                    if stack[i].tag == tag:
-                        for t in stack[i + 1:]:
-                            t.inner_end = t.end = lt
-                        del stack[i + 1:]
-                        top = stack[i]
-                        break
-                else:
-                    continue
-            top.inner_end = lt
-            top.end = pos
-            stack.pop()
-            top = stack[-1]
-            content = top.content
-            continue
-        # open tag
-        if implicit is not None and top.tag in implicit:
-            while top.tag in implicit:
-                top.inner_end = top.end = lt
+        for m in tokens:
+            lt, end = m.span()
+            if lt > pos:
+                content.append((pos, lt))
+            closing, tagb, attrs_raw = m.groups()
+            if tagb is None:
+                # comment, declaration or PI: skipped; a stray '<' starts a
+                # text run that ends at the next '<'
+                pos = lt if end == lt + 1 else end
+                continue
+            pos = end
+            tag, implicit, is_block, has_content, raw_re = (
+                info_of(tagb) or _tag_info(tagb))
+            if closing:
+                # the nearest open element of that name closes, with every
+                # element above it; unmatched close tags are ignored
+                if top.tag != tag:
+                    for i in range(len(stack) - 2, 0, -1):
+                        if stack[i].tag == tag:
+                            for t in stack[i + 1:]:
+                                t.inner_end = t.end = lt
+                            del stack[i + 1:]
+                            top = stack[i]
+                            break
+                    else:
+                        continue
+                top.inner_end = lt
+                top.end = pos
                 stack.pop()
                 top = stack[-1]
-            content = top.content
-        # HTML5: any block-level start tag implies </p> for an open <p>,
-        # popping through any unclosed inline formatting elements
-        if is_block and (top.tag == "p" or top.tag not in BLOCK_TAGS):
-            for i in range(len(stack) - 1, 0, -1):
-                t = stack[i].tag
-                if t == "p":
-                    for t in stack[i:]:
-                        t.inner_end = t.end = lt
-                    del stack[i:]
+                content = top.content
+                continue
+            # open tag
+            if implicit is not None and top.tag in implicit:
+                while top.tag in implicit:
+                    top.inner_end = top.end = lt
+                    stack.pop()
                     top = stack[-1]
-                    content = top.content
-                    break
-                if t in BLOCK_TAGS:
-                    break
-        node = Node(len(nodes), top.node_id, tag, len(stack), lt, pos,
-                    attrs_raw)
-        nodes.append(node)
-        content.append(node)
-        if attrs_raw[-1:] == b"/":  # XHTML self-close
-            node.attrs_raw = attrs_raw[:-1]
-        elif has_content:
-            if raw_re is None:
-                stack.append(node)
-                top = node
-                content = node.content
-            else:
-                # raw-text element: skip its body to the matching end tag
-                em = raw_re.search(data, pos)
-                if em:
-                    node.inner_end = em.start()
-                    node.end = pos = scan = em.end()
+                content = top.content
+            # HTML5: any block-level start tag implies </p> for an open <p>,
+            # popping through any unclosed inline formatting elements
+            if is_block and (top.tag == "p" or top.tag not in BLOCK_TAGS):
+                for i in range(len(stack) - 1, 0, -1):
+                    t = stack[i].tag
+                    if t == "p":
+                        for t in stack[i:]:
+                            t.inner_end = t.end = lt
+                        del stack[i:]
+                        top = stack[-1]
+                        content = top.content
+                        break
+                    if t in BLOCK_TAGS:
+                        break
+            node = Node(len(nodes), top.node_id, tag, len(stack), lt, pos,
+                        attrs_raw)
+            nodes.append(node)
+            content.append(node)
+            if attrs_raw[-1:] == b"/":  # XHTML self-close
+                node.attrs_raw = attrs_raw[:-1]
+            elif has_content:
+                if raw_re is None:
+                    stack.append(node)
+                    top = node
+                    content = node.content
                 else:
-                    node.inner_end = node.end = pos = scan = n
+                    # raw-text element: skip its body to the matching end tag
+                    em = raw_re.search(data, pos)
+                    if em:
+                        node.inner_end = em.start()
+                        node.end = pos = em.end()
+                    else:
+                        node.inner_end = node.end = pos = n
+                    tokens = _TOKEN_RE.finditer(data, pos)
+                    break
+        else:
+            break
+    if pos < n:
+        content.append((pos, n))
     for t in stack[1:]:
         t.inner_end = t.end = n
     return Page(nodes, data)
