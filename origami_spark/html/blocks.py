@@ -663,6 +663,8 @@ def extract_page(data: bytes, char_maps: bool = False) -> list:
             if not gap.strip(_GAP_WS):
                 a.ws_gap_next = a.gap_markup_only_next = True
             elif b"<" in gap:
-                gap = _GAP_TAG.sub(b"", _GAP_COMMENT.sub(b"", gap))
+                if b"<!--" in gap:
+                    gap = _GAP_COMMENT.sub(b"", gap)
+                gap = _GAP_TAG.sub(b"", gap)
                 a.gap_markup_only_next = not gap.strip(_GAP_WS)
     return blocks

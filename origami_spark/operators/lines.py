@@ -14,7 +14,7 @@ line to get per-class evidence (``ConfidenceSampler``, ``lines.py:
 content vs chrome: fraction of non-link characters — 1.0 for pure text,
 dropping toward 0 for fully-linked lines.  The evidence (per-line
 normalized link-char count) is collected in the parse kernel
-(html/blocks._assemble_lines) and carried through layout in the
+(html/blocks._inline_text) and carried through layout in the
 ``line_spans`` struct; this stage only divides.  Blocks were already
 link-filtered, so this is a per-line refinement signal, not a gate —
 the *block-level* form of the same evidence also drives the
