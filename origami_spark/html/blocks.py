@@ -126,8 +126,8 @@ _GATHER = dict.fromkeys(BLOCK_TAGS, _NESTED)
 _GATHER.update(dict.fromkeys(DROP_TAGS, _SKIP))
 _GATHER["br"] = _BREAK
 
-# a text run that is exactly this character also breaks the line, as
-# <br> does (the sentinel the line assembler has always split on)
+# a text run that is exactly U+0000 also ends a line, as <br> does (the
+# block-table pin fixes this, hostile inputs included)
 _BR = "\x00"
 _BLANK = ("", None, None, 0, None)  # keep_blanks placeholder line
 _RULE_FIRST = frozenset("-=*_~#")

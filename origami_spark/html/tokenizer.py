@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import html as _htmllib
 import re
+from dataclasses import dataclass
 
 # --- token pattern (bytes) --------------------------------------------------
 
@@ -76,19 +77,27 @@ _IMPLICIT_CLOSE = {
     "dt": {"dd", "dt"},
 }
 
-# raw tag-name bytes -> (tag, implicit-close set, is block, may have
-# content, raw-text end pattern); bounded because names are page data
-_TAG_INFO: dict = {}
-_TAG_INFO_MAX = 4096
-
 
 def _tag_info(tagb: bytes) -> tuple:
+    """Raw tag-name bytes -> (tag, implicit-close set, is block, may have
+    content, raw-text end pattern)."""
     tag = tagb.decode("ascii").lower()
-    info = (tag, _IMPLICIT_CLOSE.get(tag), tag in BLOCK_TAGS,
+    return (tag, _IMPLICIT_CLOSE.get(tag), tag in BLOCK_TAGS,
             tag not in VOID_TAGS, _RAWTEXT_RE.get(tagb.lower()))
-    if len(_TAG_INFO) < _TAG_INFO_MAX:
-        _TAG_INFO[tagb] = info
-    return info
+
+
+# _tag_info of the HTML element names in lower and upper case; other
+# spellings are looked up per tag
+_TAG_INFO = {
+    b: _tag_info(b)
+    for t in BLOCK_TAGS | VOID_TAGS | DROP_TAGS | _IMPLICIT_CLOSE.keys() | {
+        "a", "abbr", "audio", "b", "bdi", "bdo", "big", "button", "canvas",
+        "center", "cite", "code", "data", "del", "dfn", "em", "font", "i",
+        "ins", "kbd", "label", "mark", "nobr", "optgroup", "picture", "q",
+        "s", "samp", "select", "small", "span", "strong", "sub", "sup",
+        "textarea", "time", "u", "var", "video"}
+    for b in (t.encode(), t.upper().encode())
+}
 
 
 class Node:
@@ -130,13 +139,10 @@ class Node:
         return _parse_attrs(self.attrs_raw)
 
 
+@dataclass(slots=True)
 class Page:
-    __slots__ = ("nodes", "data")
-
-    def __init__(self, nodes: list, data: bytes):
-        # list[Node] in document order; nodes[0] is the synthetic root
-        self.nodes = nodes
-        self.data = data
+    nodes: list  # list[Node], document order; nodes[0] is synthetic root
+    data: bytes
 
 
 def _parse_attrs(raw: bytes) -> dict:
