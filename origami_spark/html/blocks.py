@@ -375,9 +375,7 @@ def _inline_text(data: bytes, doc, node: Node, keep_blanks: bool = False,
         lines.append(ln)
     elif keep_blanks:
         lines.append(_BLANK)
-    text_len = 0
-    for ln in lines:
-        text_len += len(ln[0])
+    text_len = sum([len(ln[0]) for ln in lines])
     link_len = (
         min(len(normalize_text(" ".join(link_runs))), text_len)
         if link_runs else 0
