@@ -6,10 +6,11 @@ contours (raster->vector, ``batch/detect/contours.py``) stages: for HTML
 the DOM parse yields labeled vector blocks directly, so splitting them
 into two passes would only re-parse the same bytes.
 
-The per-document work is pure Python over bytes (the tokenizer), executed
-batch-at-a-time inside mapInPandas — the web analog of origami's numpy
-raster kernels: no Spark-level per-row Python, and the expensive inner
-loop is a compiled regex scanner.
+The per-document work is pure Python over bytes (tree builder and block
+walker), executed batch-at-a-time inside mapInPandas — the web analog of
+origami's numpy raster kernels: no Spark-level per-row Python.  The
+token regex is a minority of it; most of the time is the interpreted
+tree building and block walking around it.
 """
 
 from __future__ import annotations
