@@ -122,19 +122,19 @@ def _host_edge_cte() -> str:
               FROM hedges)"""
 
 
-def _pagerank_oracle_sql(iters: int = 6, scale: int = 1 << 20,
-                         d_num: int = 85, d_den: int = 100,
+def _pagerank_oracle_sql(iters: int = 6,
                          edge_cte: str | None = None) -> str:
     """The engine's integer PageRank recurrence unrolled as chained
     CTEs (one per iteration).  `//` is DuckDB floor division — equal to
-    Spark's `div` on the all-positive operands here; the teleport base
-    is inlined as an exact integer literal on both sides
-    (operators/graph.pagerank_base).  ``edge_cte`` must end at
+    Spark's `div` on the all-positive operands here; the scale, the
+    damping rational and the teleport base are the operator's own
+    constants (operators/graph.PAGERANK_*), inlined as exact integer
+    literals on both sides.  ``edge_cte`` must end at
     ``edges(src, dst, weight)``; default is the events transition
     graph."""
-    from origami_spark.operators.graph import pagerank_base
+    from origami_spark.operators.graph import (DAMPING_DEN, DAMPING_NUM,
+                                               PAGERANK_BASE, PAGERANK_SCALE)
 
-    base = pagerank_base(scale, d_num, d_den)
     ctes = [
         edge_cte or _GRAPH_EDGE_CTE,
         """nodes AS (
@@ -142,17 +142,17 @@ def _pagerank_oracle_sql(iters: int = 6, scale: int = 1 << 20,
         """outw AS (
               SELECT src, CAST(sum(weight) AS BIGINT) AS out_w
               FROM edges GROUP BY 1)""",
-        f"""s0 AS (SELECT node, CAST({scale} AS BIGINT) AS score
+        f"""s0 AS (SELECT node, CAST({PAGERANK_SCALE} AS BIGINT) AS score
                    FROM nodes)""",
     ]
     for i in range(1, iters + 1):
         ctes.append(f"""s{i} AS (
               SELECT n.node,
-                     CAST({base} + coalesce(c.recv, 0) AS BIGINT) AS score
+                     CAST({PAGERANK_BASE} + coalesce(c.recv, 0) AS BIGINT) AS score
               FROM nodes n LEFT JOIN (
                 SELECT e.dst AS node,
-                       sum((s.score * e.weight * {d_num})
-                           // (o.out_w * {d_den})) AS recv
+                       sum((s.score * e.weight * {DAMPING_NUM})
+                           // (o.out_w * {DAMPING_DEN})) AS recv
                 FROM edges e
                 JOIN outw o ON o.src = e.src
                 JOIN s{i - 1} s ON s.node = e.src
@@ -161,13 +161,15 @@ def _pagerank_oracle_sql(iters: int = 6, scale: int = 1 << 20,
             + f"\n            SELECT node, score FROM s{iters}")
 
 
-def _hits_oracle_sql(iters: int = 4, scale: int = 1 << 16,
+def _hits_oracle_sql(iters: int = 4,
                      edge_cte: str | None = None) -> str:
     """The engine's integer HITS recurrence (operators/graph.hits)
     unrolled as chained CTEs — two half-steps per iteration, each
-    max-normalized via a scalar subquery (the oracle twin of the
-    broadcast one-row cross join on the Spark side).  All-positive
-    operands, so DuckDB ``//`` == Spark ``div``."""
+    max-normalized to ``HITS_SCALE`` via a scalar subquery (the oracle
+    twin of the broadcast one-row cross join on the Spark side).
+    All-positive operands, so DuckDB ``//`` == Spark ``div``."""
+    from origami_spark.operators.graph import HITS_SCALE
+
     # every iteration CTE is referenced twice (main + the scalar-max
     # subquery / the next half-step), and DuckDB INLINES plain CTEs —
     # re-evaluating the whole chain per reference, exponential in
@@ -178,7 +180,7 @@ def _hits_oracle_sql(iters: int = 4, scale: int = 1 << 16,
         """nodes AS MATERIALIZED (
               SELECT src AS node FROM edges UNION SELECT dst FROM edges)""",
         f"""h0 AS MATERIALIZED (
-              SELECT node, CAST({scale} AS BIGINT) AS hub FROM nodes)""",
+              SELECT node, CAST({HITS_SCALE} AS BIGINT) AS hub FROM nodes)""",
     ]
     for i in range(1, iters + 1):
         ctes.append(f"""ar{i} AS MATERIALIZED (
@@ -188,7 +190,7 @@ def _hits_oracle_sql(iters: int = 4, scale: int = 1 << 16,
               GROUP BY 1)""")
         ctes.append(f"""a{i} AS MATERIALIZED (
               SELECT node,
-                     CAST((raw * {scale}) // (SELECT max(raw) FROM ar{i})
+                     CAST((raw * {HITS_SCALE}) // (SELECT max(raw) FROM ar{i})
                           AS BIGINT) AS authority
               FROM ar{i})""")
         ctes.append(f"""hr{i} AS MATERIALIZED (
@@ -198,7 +200,7 @@ def _hits_oracle_sql(iters: int = 4, scale: int = 1 << 16,
               GROUP BY 1)""")
         ctes.append(f"""h{i} AS MATERIALIZED (
               SELECT node,
-                     CAST((raw * {scale}) // (SELECT max(raw) FROM hr{i})
+                     CAST((raw * {HITS_SCALE}) // (SELECT max(raw) FROM hr{i})
                           AS BIGINT) AS hub
               FROM hr{i})""")
     return ("WITH " + ",\n            ".join(ctes) + f"""

@@ -35,12 +35,15 @@ from __future__ import annotations
 
 from operator import itemgetter
 
-from .html.blocks import Block, extract_page
-
-LINK_DENSITY_MAX = 0.5
-# reclassification thresholds are single-sourced in html/blocks.py
-# (shared with the parse-time line re-homing and operators/layout.py)
-from .html.blocks import RESCUE_MAX_LINK_SHARE, RESCUE_MIN_CHARS  # noqa: E402
+# the rule thresholds are single-sourced in html/blocks.py (shared with
+# the parse-time line re-homing and operators/layout.py)
+from .html.blocks import (
+    LINK_DENSITY_MAX,
+    RESCUE_MAX_LINK_SHARE,
+    RESCUE_MIN_CHARS,
+    Block,
+    extract_page,
+)
 
 _START_SEQ = itemgetter("start", "seq")
 

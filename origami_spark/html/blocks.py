@@ -43,6 +43,9 @@ CHROME_TAGS = frozenset("nav header footer aside form button".split())
 # batch/detect/lines.py:108-127)
 RESCUE_MIN_CHARS = 80
 RESCUE_MAX_LINK_SHARE = 0.2
+# the block-level link-density drop (operators/layout.classify +
+# extract_local.survives): a block more than half link text is chrome
+LINK_DENSITY_MAX = 0.5
 MEDIA_TAGS = frozenset("img picture figure video audio canvas".split())
 LIST_TAGS = frozenset(("ul", "ol", "menu", "dir"))
 TABLE_TAG = "table"
@@ -126,9 +129,6 @@ _GATHER = dict.fromkeys(BLOCK_TAGS, _NESTED)
 _GATHER.update(dict.fromkeys(DROP_TAGS, _SKIP))
 _GATHER["br"] = _BREAK
 
-# a text run that is exactly U+0000 also ends a line, as <br> does (the
-# block-table pin fixes this, hostile inputs included)
-_BR = "\x00"
 _BLANK = ("", None, None, 0, None)  # keep_blanks placeholder line
 _RULE_FIRST = frozenset("-=*_~#")
 _DOC_ORDER = attrgetter("start", "node_id")
@@ -312,11 +312,10 @@ def _inline_text(data: bytes, doc, node: Node, keep_blanks: bool = False,
             s, e = x
             raw = (doc[s:e] if doc is not None
                    else data[s:e].decode("utf-8", "replace"))
-            if raw != _BR:
-                norm = "" if raw.isspace() else normalize_text(raw)
-                if norm:
-                    return [(norm, s, e, 0, None)], len(norm), 0, False
-                return [_BLANK] if keep_blanks else [], 0, 0, False
+            norm = "" if raw.isspace() else normalize_text(raw)
+            if norm:
+                return [(norm, s, e, 0, None)], len(norm), 0, False
+            return [_BLANK] if keep_blanks else [], 0, 0, False
     lines = []
     raws, links, link_runs = [], [], []
     pieces = [] if char_maps else None
@@ -331,32 +330,29 @@ def _inline_text(data: bytes, doc, node: Node, keep_blanks: bool = False,
                 s, e = x
                 raw = (doc[s:e] if doc is not None
                        else data[s:e].decode("utf-8", "replace"))
+                raws.append(raw)
                 if link:
+                    links.append(raw)
                     link_runs.append(raw)
-                if raw != _BR:
-                    raws.append(raw)
-                    if link:
-                        links.append(raw)
-                    if raw.isspace():
-                        if pieces is not None:
-                            pieces.append((raw, None))
-                    else:
-                        if hs is None:
-                            hs = s
-                        he = e
-                        if pieces is not None:
-                            pieces.append((raw, x))
-                    continue
-            else:
-                kind = _GATHER.get(x.tag)
-                if kind is None:  # inline element: descend
-                    suspended.append((it, link))
-                    link = link or x.tag == "a"
-                    it = iter(x.content)
-                    break
-                if kind != _BREAK:
-                    skipped = skipped or kind == _NESTED
-                    continue
+                if raw.isspace():
+                    if pieces is not None:
+                        pieces.append((raw, None))
+                else:
+                    if hs is None:
+                        hs = s
+                    he = e
+                    if pieces is not None:
+                        pieces.append((raw, x))
+                continue
+            kind = _GATHER.get(x.tag)
+            if kind is None:  # inline element: descend
+                suspended.append((it, link))
+                link = link or x.tag == "a"
+                it = iter(x.content)
+                break
+            if kind != _BREAK:
+                skipped = skipped or kind == _NESTED
+                continue
             ln = _line(raws, hs, he, links, pieces, data)
             if ln is not None:
                 lines.append(ln)

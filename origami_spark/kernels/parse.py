@@ -31,33 +31,16 @@ BLOCKS_SCHEMA = (
     "line_spans array<struct<start:bigint,end:bigint,link_len:bigint>>"
 )
 
-# opt-in char-granularity offset map (reference core/dewarp.py:496-576
-# Grid/Transformer): per line, normalized-char-pos -> raw byte offset.
-# Aligned with line_spans (both filter span-less lines identically).
-CHARMAP_BLOCKS_SCHEMA = BLOCKS_SCHEMA + ", line_char_maps array<array<bigint>>"
-
 _COLS = [f.split()[0] for f in BLOCKS_SCHEMA.split(", ")]
 
 
 def parse_blocks(batches):
     """mapInPandas kernel: (url, html[, ...]) -> block rows."""
-    yield from _parse(batches, char_maps=False)
-
-
-def parse_blocks_charmaps(batches):
-    """mapInPandas kernel variant emitting ``line_char_maps`` (use with
-    CHARMAP_BLOCKS_SCHEMA).  Opt-in: the map costs ~2x parse time, so
-    the default pipeline never pays for it."""
-    yield from _parse(batches, char_maps=True)
-
-
-def _parse(batches, char_maps: bool):
-    cols = _COLS + (["line_char_maps"] if char_maps else [])
     for pdf in batches:
-        out = {c: [] for c in cols}
+        out = {c: [] for c in _COLS}
         for url, html in zip(pdf["url"], pdf["html"]):
             data = bytes(html) if html is not None else b""
-            for b in extract_page(data, char_maps=char_maps):
+            for b in extract_page(data):
                 out["url"].append(url)
                 out["seq"].append(b.seq)
                 out["path"].append(b.path)
@@ -87,14 +70,4 @@ def _parse(batches, char_maps: bool):
                      for (s_, e_, l_) in b.line_spans if s_ is not None]
                     if b.line_spans is not None else None
                 )
-                if char_maps:
-                    # same span-less-line filter as line_spans so the
-                    # two arrays stay index-aligned
-                    out["line_char_maps"].append(
-                        [cm for (s_, _e, _l), cm
-                         in zip(b.line_spans, b.char_maps or [])
-                         if s_ is not None]
-                        if b.line_spans is not None and b.char_maps
-                        else None
-                    )
         yield pd.DataFrame(out)

@@ -12,14 +12,12 @@ Scale design: training never leaves the WORD-COUNT table — one
 wordcount-shaped shuffle builds it (bounded by distinct words, not
 corpus tokens), and each merge round is (a) one pair-count aggregate
 over that table (map-side combine; the pair space is bounded by total
-symbol transitions), (b) a driver-side selection over its top window
-(top-k via TakeOrderedAndProject — no global sort), and (c) a
-pure-Catalyst left-to-right fold per selected pair that rewrites the
-symbol arrays (no Python).  The word table is locally checkpointed
-each round (the connected-components recipe) so the plan does not
-nest ``n_merges`` aggregates.  ``bpe_train(batch=k)`` merges up to
-``k`` symbol-disjoint pairs per round, dividing the job count by
-``~k`` at a realistic vocab size (see :func:`bpe_train`).  Encoding is a ``mapInPandas`` Arrow kernel (the sanctioned
+symbol transitions), (b) a driver-side pick of its top pair (top-k
+via TakeOrderedAndProject — no global sort), and (c) a pure-Catalyst
+left-to-right fold that rewrites the symbol arrays with that pair (no
+Python).  The word table is locally checkpointed each round (the
+connected-components recipe) so the plan does not nest ``n_merges``
+aggregates.  Encoding is a ``mapInPandas`` Arrow kernel (the sanctioned
 Python surface) applying the staged merges in rank order with a
 per-batch word cache — the corpus is never shuffled to encode.
 
@@ -53,11 +51,11 @@ __all__ = ["word_counts", "bpe_train", "bpe_merges_df", "bpe_encode"]
 EOW = "</w>"
 
 
-def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def word_counts(docs: DataFrame) -> DataFrame:
     """The corpus word-frequency table ``(word, n)`` — one
     wordcount-shaped shuffle, bounded by DISTINCT words."""
     return (
-        docs.select(F.explode(tokens_col(text_col)).alias("word"))
+        docs.select(F.explode(tokens_col("text")).alias("word"))
         .groupBy("word").agg(F.count(F.lit(1)).alias("n"))
     )
 
@@ -95,29 +93,21 @@ def _pair_counts(sym: DataFrame) -> DataFrame:
     return pairs.groupBy("p.left", "p.right").agg(F.sum("n").alias("cnt"))
 
 
-# pair-key separator for the round's lookup map; outside every possible
+# pair-key separator for the merge's lookup map; outside every possible
 # symbol alphabet (word chars [a-z0-9] + the EOW marker's '</w>' chars
 # and their concatenations), so 'last SEP current' keys are unambiguous
 _SEP = "\x1f"
 
 
-def _merge_fold(pairs):
-    """Left-to-right greedy merge of a ROUND's pairs — all symbol-
-    disjoint by :func:`_select_batch` — in ONE pure-Catalyst fold:
-    running through the symbols once, replacing the accumulator's last
-    element with ``left+right`` whenever ``(last, current)`` is one of
-    the round's pairs (a constant-map lookup).  After a replacement the
-    new last element is the concatenation, so overlapping occurrences —
-    'aaa' under (a,a) — resolve exactly like the serial reference:
-    [aa, a].  Disjointness makes the single pass value-identical to
-    applying the pairs' folds sequentially in any order (no pair
-    consumes or produces a symbol another pair touches), which is what
-    the batched pytest mirror does; one fold per ROUND instead of one
-    per PAIR keeps the generated code linear in rounds, not merges
-    (64 nested folds took janino minutes to compile)."""
-    mapping = F.create_map(
-        *[lit for a, b in pairs
-          for lit in (F.lit(a + _SEP + b), F.lit(a + b))])
+def _merge_fold(a: str, b: str):
+    """Left-to-right greedy merge of the pair ``(a, b)`` in ONE
+    pure-Catalyst fold: running through the symbols once, replacing the
+    accumulator's last element with ``a+b`` whenever ``(last,
+    current)`` is the pair (a constant-map lookup).  After a
+    replacement the new last element is the concatenation, so
+    overlapping occurrences — 'aaa' under (a,a) — resolve exactly like
+    the serial reference: [aa, a]."""
+    mapping = F.create_map(F.lit(a + _SEP + b), F.lit(a + b))
     sep = F.lit(_SEP)
 
     def step(acc, s):
@@ -132,76 +122,32 @@ def _merge_fold(pairs):
         F.col("symbols"), F.array().cast("array<string>"), step)
 
 
-def _select_batch(rows, batch: int, min_pair_count: int):
-    """Greedy disjoint-symbol selection over a (cnt DESC, left, right)-
-    ordered candidate window: accept a pair only when its left symbol,
-    right symbol AND concatenation are all unused by earlier accepts of
-    the same round.  Disjointness makes the round's folds commute (no
-    merge consumes or produces a symbol another merge of the round
-    touches), so applying them in one pass is well-defined; the window
-    is pre-sorted, so the first sub-threshold count ends the scan.
-    Deterministic and engine-independent — the pure-Python mirror in
-    tests/test_bpe.py implements the identical rule."""
-    chosen, used = [], set()
-    for r in rows:
-        if r["cnt"] < min_pair_count:
-            break
-        a, b = r["left"], r["right"]
-        if a in used or b in used or (a + b) in used:
-            continue
-        chosen.append((a, b))
-        used.update((a, b, a + b))
-        if len(chosen) >= batch:
-            break
-    return chosen
-
-
-def bpe_train(docs: DataFrame, n_merges: int = 200,
-              text_col: str = "text",
-              min_pair_count: int = 2,
-              batch: int = 1) -> list[tuple[str, str]]:
+def bpe_train(docs: DataFrame, n_merges: int = 200) -> list[tuple[str, str]]:
     """Learn up to ``n_merges`` BPE merges from the corpus; returns the
-    ranked merge list ``[(left, right), ...]``.  Stops early when the
-    best remaining pair's weighted count falls below
-    ``min_pair_count`` (merging hapax pairs memorizes the corpus).
-    Each round: one bounded pair-count aggregate, a driver-side
-    selection over its top window (top-k via TakeOrderedAndProject —
-    no global sort), one Catalyst fold rewrite per selected pair, one
-    local checkpoint — the iterative-trainer shape shared with
-    ``similarity.train_ivf_centroids``.
-
-    ``batch`` (VERDICT r4 item 7 — synchronous BPE at a realistic
-    vocab is 32k merges = 32k Spark jobs): with ``batch > 1`` each
-    round selects up to ``batch`` pairs under the disjoint-symbol rule
-    (:func:`_select_batch`) from the round's top ``8 * batch``
-    candidates and applies them in one pass, cutting the job count to
-    ``~n_merges / batch`` aggregates (32k merges at batch=64 = ~500
-    rounds).  Exactness contract: ``batch=1`` is EXACTLY the serial
-    Sennrich et al. sequence (the default, pinned against the
-    pure-Python reference).  ``batch > 1`` is the documented batched
-    approximation — a merge applied later in a round does not see the
-    pairs the round's earlier merges create (e.g. after (a,b)->ab the
-    new pair (ab,ab) may outrank the round's remaining picks, which
-    serial BPE would honor) — deterministic, order-preserving within a
-    round, and pinned against a batched pure-Python mirror instead.
-    The alternative scale recipe (train on a hash-sampled corpus slice
-    with ``sampling.hash_sample``, encode everything) composes with
-    either mode."""
-    sym = _initial_symbols(word_counts(docs, text_col))
+    ranked merge list ``[(left, right), ...]`` — exactly the serial
+    Sennrich et al. sequence, pinned against the pure-Python reference.
+    Stops early when the best remaining pair's weighted count falls
+    below 2 (merging hapax pairs memorizes the corpus).  Each round:
+    one bounded pair-count aggregate, a driver-side pick of its top
+    pair (TakeOrderedAndProject — no global sort), one Catalyst fold
+    rewrite, one local checkpoint — the iterative-trainer shape shared
+    with ``similarity.train_ivf_centroids``.  The scale recipe (train
+    on a hash-sampled corpus slice with ``sampling.hash_sample``,
+    encode everything) composes with it."""
+    sym = _initial_symbols(word_counts(docs))
     sym = sym.localCheckpoint(eager=True)
     merges: list[tuple[str, str]] = []
     while len(merges) < n_merges:
-        k = min(batch, n_merges - len(merges))
-        rows = (
+        top = (
             _pair_counts(sym)
             .orderBy(F.desc("cnt"), F.asc("left"), F.asc("right"))
-            .limit(max(8 * k, 8)).collect()
+            .first()
         )
-        chosen = _select_batch(rows, k, min_pair_count)
-        if not chosen:
+        if top is None or top["cnt"] < 2:
             break
-        merges.extend(chosen)
-        sym = sym.select(_merge_fold(chosen).alias("symbols"), "n") \
+        merges.append((top["left"], top["right"]))
+        sym = sym.select(_merge_fold(top["left"], top["right"])
+                         .alias("symbols"), "n") \
             .localCheckpoint(eager=True)
     return merges
 
@@ -243,11 +189,9 @@ def _encode_word(word: str, ranks: dict) -> list[str]:
     return syms
 
 
-def bpe_encode(docs: DataFrame, merges_df: DataFrame,
-               text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def bpe_encode(docs: DataFrame, merges_df: DataFrame) -> DataFrame:
     """Encode documents with a trained merge table: returns
-    ``(id_col, n_words bigint, n_bpe_tokens bigint, bpe_per_word
+    ``(doc_id, n_words bigint, n_bpe_tokens bigint, bpe_per_word
     double)``.  The merges collect to the driver (n_merges rows) and
     ship inside a ``mapInPandas`` kernel that tokenizes with the SAME
     regex as ``text.tokens_col`` and applies the reference BPE per
@@ -262,7 +206,7 @@ def bpe_encode(docs: DataFrame, merges_df: DataFrame,
         for r in merges_df.collect()
     }
     token_re = re.compile("[^a-z0-9]+")
-    out_schema = (f"{id_col} bigint, n_words bigint, n_bpe_tokens bigint, "
+    out_schema = ("doc_id bigint, n_words bigint, n_bpe_tokens bigint, "
                   "bpe_per_word double")
 
     def kernel(batches):
@@ -279,13 +223,13 @@ def bpe_encode(docs: DataFrame, merges_df: DataFrame,
 
         for pdf in batches:
             rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
+            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
                 words = [w for w in token_re.split((text or "").lower()) if w]
                 n_bpe = sum(count(w) for w in words)
                 rows.append((doc_id, len(words), n_bpe,
                              n_bpe / len(words) if words else 0.0))
             yield pd.DataFrame(
-                rows, columns=[id_col, "n_words", "n_bpe_tokens",
+                rows, columns=["doc_id", "n_words", "n_bpe_tokens",
                                "bpe_per_word"])
 
-    return docs.select(id_col, text_col).mapInPandas(kernel, out_schema)
+    return docs.select("doc_id", "text").mapInPandas(kernel, out_schema)

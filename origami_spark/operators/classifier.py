@@ -51,13 +51,12 @@ _Q = 4096
 _B = 4096
 
 
-def nb_train(docs: DataFrame, label_col: str, text_col: str = "text",
-             buckets: int = _B) -> DataFrame:
+def nb_train(docs: DataFrame, label_col: str) -> DataFrame:
     """Estimate the classifier from labeled documents
     (``label_col`` = 1 for the reference corpus, 0 for crawl):
-    for every hash bucket ``f`` in ``[0, buckets)``,
+    for every hash bucket ``f`` in ``[0, B)`` (``B`` = ``_B`` = 4096),
 
-        ``p(f|c) = (count(f in class c) + 1) / (tokens(c) + buckets)``
+        ``p(f|c) = (count(f in class c) + 1) / (tokens(c) + B)``
 
     (add-one smoothing over the bucket space), returned DENSE as
     ``(feat bigint, qllr bigint, qprior bigint, q int, b bigint)`` with
@@ -72,20 +71,20 @@ def nb_train(docs: DataFrame, label_col: str, text_col: str = "text",
     prior is ±inf."""
     spark = docs.sparkSession
     lab = docs.select(
-        text_col,
+        "text",
         F.col(label_col).cast("int").alias("_y"),
     )
     # carry the label through the explode — joining it back on doc id
     # would re-shuffle the full token relation
     feats = lab.select(
-        "_y", F.explode(tokens_col(text_col)).alias("tok")
+        "_y", F.explode(tokens_col("text")).alias("tok")
     ).select(
         "_y",
-        F.pmod(portable_hash60(F.col("tok")), F.lit(buckets))
+        F.pmod(portable_hash60(F.col("tok")), F.lit(_B))
         .cast("bigint").alias("feat"),
     )
     # one wordcount-shaped shuffle on the bounded bucket key — the
-    # collect MATERIALIZES it (<= buckets rows), so the corpus-wide
+    # collect MATERIALIZES it (<= B rows), so the corpus-wide
     # token explode executes exactly once: the returned model's
     # lineage is driver-local rows + range, never the corpus
     cnt_rows = feats.groupBy("feat").agg(
@@ -113,28 +112,27 @@ def nb_train(docs: DataFrame, label_col: str, text_col: str = "text",
         [(r["feat"], r["c1"], r["c0"]) for r in cnt_rows],
         "feat bigint, c1 bigint, c0 bigint")
     return (
-        spark.range(buckets).select(F.col("id").alias("feat"))
+        spark.range(_B).select(F.col("id").alias("feat"))
         .join(F.broadcast(cnt), "feat", "left")
         .select(
             "feat",
             F.floor(
                 (F.log2((F.coalesce("c1", F.lit(0)) + 1)
-                        .cast("double") / (n1 + buckets))
+                        .cast("double") / (n1 + _B))
                  - F.log2((F.coalesce("c0", F.lit(0)) + 1)
-                          .cast("double") / (n0 + buckets)))
+                          .cast("double") / (n0 + _B)))
                 * _Q + F.lit(0.5)
             ).cast("bigint").alias("qllr"),
             F.lit(qprior).cast("bigint").alias("qprior"),
             F.lit(_Q).alias("q"),
-            F.lit(buckets).cast("bigint").alias("b"),
+            F.lit(_B).cast("bigint").alias("b"),
         )
     )
 
 
-def nb_score(docs: DataFrame, model: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def nb_score(docs: DataFrame, model: DataFrame) -> DataFrame:
     """Score documents against an :func:`nb_train` table: returns
-    ``(id_col, n_tokens bigint, score_q bigint, llr_per_token double)``
+    ``(doc_id, n_tokens bigint, score_q bigint, llr_per_token double)``
     where ``score_q = qprior + sum(qllr over token buckets)`` — the
     quantized log-odds that the document came from the reference
     distribution (positive = reference-like, the keep signal) — and
@@ -151,23 +149,22 @@ def nb_score(docs: DataFrame, model: DataFrame, text_col: str = "text",
     consts = model.agg(F.max("qprior").alias("_p"), F.max("q").alias("_q"),
                        F.max("b").alias("_b"))
     feats = (
-        docs.select(F.col(id_col), F.explode(tokens_col(text_col))
-                    .alias("tok"))
+        docs.select("doc_id", F.explode(tokens_col("text")).alias("tok"))
         .crossJoin(F.broadcast(consts.select("_b")))
         .select(
-            id_col,
+            "doc_id",
             F.pmod(portable_hash60(F.col("tok")), F.col("_b"))
             .cast("bigint").alias("feat"),
         )
     )
     return (
         feats.join(F.broadcast(model.select("feat", "qllr")), "feat")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_tokens"),
              F.sum("qllr").alias("_s"))
         .crossJoin(F.broadcast(consts))
         .select(
-            id_col,
+            "doc_id",
             "n_tokens",
             (F.col("_p") + F.col("_s")).cast("bigint").alias("score_q"),
             (F.col("_s").cast("bigint")
@@ -178,8 +175,7 @@ def nb_score(docs: DataFrame, model: DataFrame, text_col: str = "text",
 
 
 def nb_keep(docs: DataFrame, scored: DataFrame,
-            min_llr_per_token: float = 0.0,
-            id_col: str = "doc_id") -> DataFrame:
+            min_llr_per_token: float = 0.0) -> DataFrame:
     """Gate a corpus on the classifier: keep documents whose
     length-normalized log-odds clears the threshold, PLUS documents the
     model has no opinion on (zero tokens — no ``scored`` row); the
@@ -188,5 +184,5 @@ def nb_keep(docs: DataFrame, scored: DataFrame,
     set at real scale, a plain left-anti here)."""
     reject = scored.where(
         F.col("llr_per_token") < F.lit(float(min_llr_per_token))
-    ).select(id_col)
-    return docs.join(reject, id_col, "left_anti")
+    ).select("doc_id")
+    return docs.join(reject, "doc_id", "left_anti")

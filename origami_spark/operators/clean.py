@@ -11,7 +11,7 @@ after extraction and before dedup (all public-knowledge recipes):
   fraction.
 * :func:`clean_lines` — C4-style line filtering (Raffel et al. 2020,
   public): keep lines that end in terminal punctuation, have at least
-  ``min_words`` words, and don't mention "javascript"; drop whole pages
+  three words, and don't mention "javascript"; drop whole pages
   containing "lorem ipsum" or a curly brace.
 * :func:`pii_scrub` — masks e-mail addresses, IPv4 literals and long
   digit runs with typed placeholders, returning per-kind match counts.
@@ -54,8 +54,8 @@ IPV4_RE = r"\b\d{1,3}(\.\d{1,3}){3}\b"
 LONGNUM_RE = r"\b\d{9,}\b"
 
 
-def _lines_expr(text_col: str) -> Column:
-    """Non-empty trimmed lines of ``text_col`` (order preserved)."""
+def _lines_expr() -> Column:
+    """Non-empty trimmed lines of ``text`` (order preserved)."""
     # Full-whitespace trim (regexp, not F.trim — Spark/DuckDB trim()
     # strips 0x20 only, so a tab-only line would survive as "content").
     # The class is ENUMERATED, never \s: Java's \s includes \x0b while
@@ -67,7 +67,7 @@ def _lines_expr(text_col: str) -> Column:
     strip = lambda x: F.regexp_replace(  # noqa: E731
         x, r"\A[ \t\n\r\f\x0b\xa0]+|[ \t\n\r\f\x0b\xa0]+\z", "")
     return F.filter(
-        F.transform(F.split(F.col(text_col), "\n"), strip),
+        F.transform(F.split(F.col("text"), "\n"), strip),
         lambda x: x != "",
     )
 
@@ -123,7 +123,7 @@ def _top_gram_fold(sorted_grams: Column) -> Column:
     )
 
 
-def _repetition_features(docs: DataFrame, text_col: str) -> DataFrame:
+def _repetition_features(docs: DataFrame) -> DataFrame:
     """Shared raw-feature projection behind :func:`repetition_stats`
     and :func:`gopher_gate`: per doc — ``chars``, ``toks``, line counts
     and duplicate-line characters, the top-2-gram fold, and 5-gram
@@ -131,9 +131,9 @@ def _repetition_features(docs: DataFrame, text_col: str) -> DataFrame:
     use."""
     t = docs.select(
         "doc_id",
-        F.length(text_col).cast("bigint").alias("chars"),
-        _lines_expr(text_col).alias("lines"),
-        tokens_col(text_col).alias("toks"),
+        F.length("text").cast("bigint").alias("chars"),
+        _lines_expr().alias("lines"),
+        tokens_col("text").alias("toks"),
     )
     return t.select(
         "doc_id",
@@ -182,7 +182,7 @@ def _repetition_ratios() -> list:
     ]
 
 
-def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_stats(docs: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document.
 
     Output columns (all ratios rounded to 4 decimals):
@@ -199,7 +199,7 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     * ``dup_5gram_frac`` — word 5-grams occurring more than once, as
       surplus occurrences over total 5-grams
     """
-    t = _repetition_features(docs, text_col)
+    t = _repetition_features(docs)
     ratios = _repetition_ratios()
     return t.select(
         "doc_id",
@@ -212,11 +212,11 @@ def repetition_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def clean_lines(docs: DataFrame, text_col: str = "text", min_words: int = 3) -> DataFrame:
+def clean_lines(docs: DataFrame) -> DataFrame:
     """C4-style line filter (Raffel et al. 2020).
 
     A line is kept when it ends in terminal punctuation (``. ! ? "``),
-    has at least ``min_words`` tokens, and does not contain
+    has at least 3 tokens, and does not contain
     "javascript" (case-insensitive).  A page is dropped wholesale
     (``page_ok`` false, ``clean_text`` empty, zero kept) when it
     contains "lorem ipsum" or ``{``.
@@ -225,15 +225,15 @@ def clean_lines(docs: DataFrame, text_col: str = "text", min_words: int = 3) -> 
     """
     keep = lambda x: (  # noqa: E731 — inline predicate shared below
         x.rlike('[.!?"]$')
-        & (F.size(F.filter(F.split(F.lower(x), "[^a-z0-9]+"), lambda w: w != "")) >= min_words)
+        & (F.size(F.filter(F.split(F.lower(x), "[^a-z0-9]+"), lambda w: w != "")) >= 3)
         & ~F.contains(F.lower(x), F.lit("javascript"))
     )
     t = docs.select(
         "doc_id",
-        _lines_expr(text_col).alias("lines"),
+        _lines_expr().alias("lines"),
         (
-            ~F.contains(F.lower(text_col), F.lit("lorem ipsum"))
-            & ~F.contains(F.col(text_col), F.lit("{"))
+            ~F.contains(F.lower("text"), F.lit("lorem ipsum"))
+            & ~F.contains(F.col("text"), F.lit("{"))
         ).alias("page_ok"),
     )
     t = t.select(
@@ -253,7 +253,7 @@ def clean_lines(docs: DataFrame, text_col: str = "text", min_words: int = 3) -> 
     )
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """Mask e-mails, IPv4 literals and 9+-digit runs with typed
     placeholders; count matches of each kind before replacing.
 
@@ -261,7 +261,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     an IPv4's octets are never re-counted as digit runs.  Counts are
     taken per-pattern on the *original* text.
     """
-    c = F.col(text_col)
+    c = F.col("text")
     n_emails = F.size(F.regexp_extract_all(c, F.lit(EMAIL_RE), 0)).cast("bigint")
     n_ips = F.size(F.regexp_extract_all(c, F.lit(IPV4_RE), 0)).cast("bigint")
     n_longnums = F.size(F.regexp_extract_all(c, F.lit(LONGNUM_RE), 0)).cast("bigint")
@@ -283,11 +283,8 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def gopher_gate(
     docs: DataFrame,
-    text_col: str = "text",
     min_tokens: int = 50,
     max_tokens: int = 100_000,
-    min_mean_len: float = 3.0,
-    max_mean_len: float = 10.0,
     min_stop_hits: int = 2,
     max_dup_line_frac: float = 0.30,
     max_dup_line_char_frac: float = 0.20,
@@ -295,7 +292,7 @@ def gopher_gate(
     max_dup_5gram_frac: float = 0.30,
 ) -> DataFrame:
     """Composite Gopher-style document gate (Rae et al. 2021 rules,
-    public): token-count window, mean-token-length window, minimum
+    public): token-count window, mean-token-length window [3, 10], minimum
     distinct-stopword hits, and the repetition ceilings.
 
     One narrow projection per document — all features come from the
@@ -311,7 +308,7 @@ def gopher_gate(
     from .text import STOPWORDS
 
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    t = _repetition_features(docs, text_col)
+    t = _repetition_features(docs)
     one = _one_bigint()
     t = t.select(
         "doc_id",
@@ -330,8 +327,8 @@ def gopher_gate(
     rules = [
         (F.col("n_tokens") < min_tokens, "too_few_tokens"),
         (F.col("n_tokens") > max_tokens, "too_many_tokens"),
-        (F.col("mean_len") < min_mean_len, "mean_len_low"),
-        (F.col("mean_len") > max_mean_len, "mean_len_high"),
+        (F.col("mean_len") < 3.0, "mean_len_low"),
+        (F.col("mean_len") > 10.0, "mean_len_high"),
         (F.col("stop_hits") < min_stop_hits, "too_few_stopwords"),
         (F.col("dup_line_frac") > max_dup_line_frac, "dup_lines"),
         (F.col("dup_line_char_frac") > max_dup_line_char_frac, "dup_line_chars"),

@@ -45,6 +45,10 @@ from pyspark.sql import DataFrame, functions as F
 from ..session import checkpoint
 from . import graph
 
+# round bound of the relational star program (paper bound: O(log^2 n)
+# w.h.p. — 50 covers any realistic corpus)
+_MAX_ROUNDS = 50
+
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(src, dst) pairs -> distinct canonical (u < v) bigint edges;
@@ -122,7 +126,7 @@ def _checksum(e: DataFrame) -> tuple:
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b", nodes: DataFrame | None = None,
-                         node_col: str = "doc_id", max_iter: int = 50,
+                         node_col: str = "doc_id",
                          reliable: bool = False) -> DataFrame:
     """Label every node with the smallest node id reachable through
     ``edges``.  Returns (``node_col`` bigint, ``component`` bigint);
@@ -131,9 +135,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     shape: keep exactly the rows where node == component.
 
     Deterministic: min-based throughout, no randomness.  Raises
-    RuntimeError if the edge set has not converged after ``max_iter``
-    alternating rounds (paper bound: O(log^2 n) w.h.p. — 50 covers any
-    realistic corpus; never silently mislabels; the in-task kernel
+    RuntimeError if the edge set has not converged after ``_MAX_ROUNDS``
+    alternating rounds (never silently mislabels; the in-task kernel
     has no round bound).  ``reliable=True``
     uses reliable checkpoints (requires ``setCheckpointDir``) instead
     of executor-local ones."""
@@ -151,7 +154,7 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
     else:
         prev = _checksum(e)
         converged = False
-        for _ in range(max_iter):
+        for _ in range(_MAX_ROUNDS):
             e = cut(_small_star(_large_star(e)))
             cur = _checksum(e)
             converged = cur == prev
@@ -160,9 +163,8 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
                 break
         if not converged:
             raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                f"rounds (edge checksum still moving: {prev}) — raise "
-                f"max_iter")
+                f"connected_components did not converge in {_MAX_ROUNDS} "
+                f"rounds (edge checksum still moving: {prev})")
         nbr = e.unionByName(
             e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         lab = nbr.groupBy("u").agg(
@@ -182,17 +184,15 @@ def connected_components(edges: DataFrame, src: str = "doc_a",
 
 
 def keep_one_per_component(docs: DataFrame, pairs: DataFrame,
-                           id_col: str = "doc_id", src: str = "doc_a",
-                           dst: str = "doc_b",
-                           max_iter: int = 50) -> DataFrame:
+                           id_col: str = "doc_id") -> DataFrame:
     """The dedup APPLICATION: drop every doc that is not its near-dup
-    cluster's minimum id.  Docs in no pair survive untouched.  Unlike
-    the greedy any-pair drop (keep rows never appearing as the larger
-    side of a pair), this keeps exactly ONE doc per connected cluster:
+    cluster's minimum id (``pairs`` as ``(doc_a, doc_b)``).  Docs in no
+    pair survive untouched.  Unlike the greedy any-pair drop (keep rows
+    never appearing as the larger side of a pair), this keeps exactly
+    ONE doc per connected cluster:
     with edges b~c and a~c (a<b<c), greedy keeps both a and b — two
     mutual near-dups-by-transitivity — while this keeps only a."""
-    comp = connected_components(pairs, src=src, dst=dst,
-                                node_col=id_col, max_iter=max_iter)
+    comp = connected_components(pairs, node_col=id_col)
     drop = comp.filter(F.col(id_col) != F.col("component")) \
         .select(id_col)
     return docs.join(drop, id_col, "left_anti")

@@ -690,10 +690,14 @@ def simhash_near_dups(docs: DataFrame, bits: int = 32, bands: int = 4,
     )
 
 
+# occurrence positions kept per (doc, selected gram) when every position
+# is asked for (substring_fingerprints and its kernel)
+_MAX_POSITIONS = 16
+
+
 def substring_fingerprints(docs: DataFrame, window: int = 64,
                            k: int = 16,
-                           all_positions: bool = False,
-                           max_positions: int = 16) -> DataFrame:
+                           all_positions: bool = False) -> DataFrame:
     """Winnowing fingerprints (Schleimer, Wilkerson, Aiken, SIGMOD 2003,
     public): per document, hash every `k`-char gram, then keep the
     minimum hash of each sliding window of ``w = window - k + 1``
@@ -706,7 +710,7 @@ def substring_fingerprints(docs: DataFrame, window: int = 64,
 
     Returns (doc_id, gram, pos): the distinct fingerprint grams per doc
     with each gram's earliest occurrence offset (0-based) — or, with
-    ``all_positions=True``, the first ``max_positions`` occurrence
+    ``all_positions=True``, the first ``_MAX_POSITIONS`` occurrence
     positions of each selected gram (what span removal needs: a passage
     repeated within one doc must anchor at every copy, or the later
     copies survive removal).  The per-(doc, gram) cap bounds the anchor
@@ -758,7 +762,7 @@ def substring_fingerprints(docs: DataFrame, window: int = 64,
         return (
             joined.select("doc_id", "gram", "pos")
             .withColumn("rn", F.row_number().over(pw))
-            .filter(F.col("rn") <= max_positions)
+            .filter(F.col("rn") <= _MAX_POSITIONS)
             .drop("rn")
         )
     return joined.groupBy("doc_id", "gram").agg(F.min("pos").alias("pos"))
@@ -766,8 +770,7 @@ def substring_fingerprints(docs: DataFrame, window: int = 64,
 
 def substring_fingerprints_kernel(docs: DataFrame, window: int = 64,
                                   k: int = 16,
-                                  all_positions: bool = False,
-                                  max_positions: int = 16) -> DataFrame:
+                                  all_positions: bool = False) -> DataFrame:
     """Arrow-kernel form of ``substring_fingerprints`` — bit-identical
     output (same md5-based hash, same window-min selection, same
     min-pos-per-gram), none of the per-char explode / window-sort /
@@ -815,12 +818,12 @@ def substring_fingerprints_kernel(docs: DataFrame, window: int = 64,
                 # gram, or every occurrence in all_positions mode
                 if all_positions:
                     # positions ascend; cap per gram mirrors the
-                    # relational row_number <= max_positions
+                    # relational row_number <= _MAX_POSITIONS
                     counts: dict = {}
                     for i in np.flatnonzero(np.isin(hs, sel)):
                         g = text[i : i + k]
                         c = counts.get(g, 0)
-                        if c >= max_positions:
+                        if c >= _MAX_POSITIONS:
                             continue
                         counts[g] = c + 1
                         doc_ids.append(doc_id)
@@ -956,9 +959,7 @@ def embedding_near_dups(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
 
 def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
                     max_df: int | None = None,
-                    min_len: int | None = None,
-                    skip_covered: bool = True,
-                    max_positions: int = 16) -> DataFrame:
+                    skip_covered: bool = True) -> DataFrame:
     """The APPLICATION step of exact-substring dedup (Lee et al. 2022):
     locate the maximal duplicated passages so they can be REMOVED from
     all but one copy, not just flagged as pairs.
@@ -966,8 +967,8 @@ def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
     Returns (doc_id, start, end): char spans of text in `doc_id` that
     also occur verbatim in an EARLIER document (lower doc_id — the
     keep-first convention of ``exact_duplicates``), maximally extended
-    and merged per doc.  ``min_len`` (default: `window`) drops matches
-    shorter than the guarantee threshold.
+    and merged per doc.  Matches shorter than `window` (the guarantee
+    threshold) drop.
 
     Shape for 100 TB: winnowing fingerprints give (pair, anchor)
     candidates by equality join — data movement is proportional to the
@@ -991,13 +992,11 @@ def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
     form."""
     import pandas as pd
 
-    min_len = window if min_len is None else min_len
     # all_positions: a passage repeated WITHIN one doc must anchor at
     # every copy — min-pos fingerprints would leave later in-doc copies
     # unanchored and they would survive removal
     fp = cache(
-        substring_fingerprints_kernel(docs, window, k, all_positions=True,
-                                      max_positions=max_positions))
+        substring_fingerprints_kernel(docs, window, k, all_positions=True))
     if max_df is not None:
         rare = (
             fp.groupBy("gram")
@@ -1052,7 +1051,7 @@ def duplicate_spans(docs: DataFrame, window: int = 64, k: int = 16,
                     while (pa + right < len(ta) and pb + right < len(tb)
                            and ta[pa + right] == tb[pb + right]):
                         right += 1
-                    if left + right >= min_len:
+                    if left + right >= window:
                         found.append((pb - left, pb + right))
                 for s, e in found:
                     ids.append(doc_b)
@@ -1128,8 +1127,7 @@ def remove_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     )
 
 
-def paragraph_dedup(docs: DataFrame, text_col: str = "text",
-                    min_df: int = 2) -> DataFrame:
+def paragraph_dedup(docs: DataFrame, min_df: int = 2) -> DataFrame:
     """Corpus-wide paragraph dedup in the ccnet style (Wenzek et al.
     2020, public): a paragraph (newline-delimited, trimmed, non-empty)
     occurring at least ``min_df`` times across the whole corpus is
@@ -1153,7 +1151,7 @@ def paragraph_dedup(docs: DataFrame, text_col: str = "text",
 
     paras = docs.select(
         "doc_id",
-        F.posexplode_outer(_lines_expr(text_col)).alias("idx", "para"),
+        F.posexplode_outer(_lines_expr()).alias("idx", "para"),
     )
     h = portable_hash60(F.col("para"))
     w = Window.partitionBy(h, "para")

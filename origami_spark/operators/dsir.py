@@ -67,11 +67,11 @@ _B = 4096
 _U_BITS = 16
 
 
-def _features(docs: DataFrame, text_col: str, *cols) -> DataFrame:
+def _features(docs: DataFrame, *cols) -> DataFrame:
     """One row per (carried cols, feature string): hashed-feature input
     — word unigrams plus word bigrams (the DSIR paper's feature space).
     Docs with zero tokens contribute nothing."""
-    t = docs.select(*cols, tokens_col(text_col).alias("_toks"))
+    t = docs.select(*cols, tokens_col("text").alias("_toks"))
     return t.select(
         *cols,
         F.explode(
@@ -88,14 +88,13 @@ def _bucketed(feats: DataFrame, buckets, *cols) -> DataFrame:
     )
 
 
-def dsir_train(target: DataFrame, raw: DataFrame, text_col: str = "text",
-               buckets: int = _B) -> DataFrame:
+def dsir_train(target: DataFrame, raw: DataFrame) -> DataFrame:
     """Estimate the importance-weight model from a TARGET (reference)
     corpus and a RAW (crawl) corpus: for every hash bucket ``f`` in
-    ``[0, buckets)``,
+    ``[0, B)`` (``B`` = ``_B`` = 4096),
 
-        ``p_f = (count_target(f) + 1) / (feats_target + buckets)``
-        ``q_f = (count_raw(f)    + 1) / (feats_raw    + buckets)``
+        ``p_f = (count_target(f) + 1) / (feats_target + B)``
+        ``q_f = (count_raw(f)    + 1) / (feats_raw    + B)``
 
     (add-one smoothing over the bucket space), returned DENSE as
     ``(feat bigint, qlw bigint, q int, b bigint)`` with
@@ -107,14 +106,14 @@ def dsir_train(target: DataFrame, raw: DataFrame, text_col: str = "text",
 
     Both corpora must contribute at least one feature — a degenerate
     side raises rather than emitting a model whose ratios are ±inf.
-    Per-bucket counts collect to the driver (≤ ``buckets`` rows per
+    Per-bucket counts collect to the driver (≤ ``B`` rows per
     side — bounded by the hash space, not the corpus), so the returned
     model's lineage is driver-local rows + ``range``: staging it never
     re-runs the corpus passes."""
     spark = target.sparkSession
 
     def counts(side: DataFrame):
-        f = _bucketed(_features(side, text_col), F.lit(buckets))
+        f = _bucketed(_features(side), F.lit(_B))
         return f.groupBy("feat").agg(F.count(F.lit(1)).alias("c")).collect()
 
     ct = counts(target)
@@ -130,28 +129,27 @@ def dsir_train(target: DataFrame, raw: DataFrame, text_col: str = "text",
     rdf = spark.createDataFrame([(r["feat"], r["c"]) for r in cr],
                                 "feat bigint, cr bigint")
     return (
-        spark.range(buckets).select(F.col("id").alias("feat"))
+        spark.range(_B).select(F.col("id").alias("feat"))
         .join(F.broadcast(tdf), "feat", "left")
         .join(F.broadcast(rdf), "feat", "left")
         .select(
             "feat",
             F.floor(
                 (F.log2((F.coalesce("ct", F.lit(0)) + 1)
-                        .cast("double") / (nt + buckets))
+                        .cast("double") / (nt + _B))
                  - F.log2((F.coalesce("cr", F.lit(0)) + 1)
-                          .cast("double") / (nr + buckets)))
+                          .cast("double") / (nr + _B)))
                 * _Q + F.lit(0.5)
             ).cast("bigint").alias("qlw"),
             F.lit(_Q).alias("q"),
-            F.lit(buckets).cast("bigint").alias("b"),
+            F.lit(_B).cast("bigint").alias("b"),
         )
     )
 
 
-def dsir_score(docs: DataFrame, model: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def dsir_score(docs: DataFrame, model: DataFrame) -> DataFrame:
     """Score documents against a :func:`dsir_train` table: returns
-    ``(id_col, n_feats bigint, qlw_sum bigint, q int,
+    ``(doc_id, n_feats bigint, qlw_sum bigint, q int,
     log2w_per_feat double)`` where ``qlw_sum`` is the quantized log
     importance weight (positive = target-like) and ``log2w_per_feat =
     qlw_sum / (n_feats * q)`` the length-normalized form.  ``q`` is
@@ -165,17 +163,17 @@ def dsir_score(docs: DataFrame, model: DataFrame, text_col: str = "text",
     training would silently mis-hash every feature."""
     consts = model.agg(F.max("q").alias("_q"), F.max("b").alias("_b"))
     feats = _bucketed(
-        _features(docs, text_col, id_col)
+        _features(docs, "doc_id")
         .crossJoin(F.broadcast(consts.select("_b"))),
-        F.col("_b"), id_col)
+        F.col("_b"), "doc_id")
     return (
         feats.join(F.broadcast(model.select("feat", "qlw")), "feat")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_feats"),
              F.sum("qlw").alias("_s"))
         .crossJoin(F.broadcast(consts.select("_q")))
         .select(
-            id_col,
+            "doc_id",
             "n_feats",
             F.col("_s").cast("bigint").alias("qlw_sum"),
             F.col("_q").cast("int").alias("q"),
@@ -187,9 +185,10 @@ def dsir_score(docs: DataFrame, model: DataFrame, text_col: str = "text",
 
 
 def _decomposed_topk(keyed: DataFrame, k: int, key_col: str,
-                     id_col: str, out_cols, bin_width: int) -> DataFrame:
-    """Exact top-k by (``key_col`` DESC, ``id_col`` ASC) without a
-    global sort: integer keys bin by floor division (monotone, so bins
+                     out_cols) -> DataFrame:
+    """Exact top-k by (``key_col`` DESC, ``doc_id`` ASC) without a
+    global sort: integer keys bin by floor division by ``_Q``
+    (monotone, so bins
     are contiguous key ranges), a small per-bin count aggregate yields
     exclusive prefix offsets in descending-bin order, bins whose prefix
     already reaches k are PRUNED before any window runs, and ranks
@@ -203,10 +202,10 @@ def _decomposed_topk(keyed: DataFrame, k: int, key_col: str,
     while DuckDB's serial rank puts NULLS LAST: the pair must encode
     one function)."""
     t = cache(
-        keyed.filter(F.col(id_col).isNotNull()
+        keyed.filter(F.col("doc_id").isNotNull()
                      & F.col(key_col).isNotNull())
         .withColumn(
-            "_g", F.floor(-F.col(key_col) / F.lit(bin_width))
+            "_g", F.floor(-F.col(key_col) / F.lit(_Q))
             .cast("bigint")))
     gs = t.groupBy("_g").agg(F.count(F.lit(1)).alias("gn"))
     wp = (
@@ -219,7 +218,7 @@ def _decomposed_topk(keyed: DataFrame, k: int, key_col: str,
         .where(F.col("prefix") < k)
         .select("_g", "prefix")
     )
-    wg = Window.partitionBy("_g").orderBy(F.desc(key_col), F.asc(id_col))
+    wg = Window.partitionBy("_g").orderBy(F.desc(key_col), F.asc("doc_id"))
     return (
         t.join(F.broadcast(pre), "_g")
         .withColumn("dsir_rank",
@@ -230,24 +229,22 @@ def _decomposed_topk(keyed: DataFrame, k: int, key_col: str,
     )
 
 
-def dsir_topk(scored: DataFrame, k: int, id_col: str = "doc_id",
-              bin_width: int = _Q) -> DataFrame:
+def dsir_topk(scored: DataFrame, k: int) -> DataFrame:
     """Hard top-k selection: keep the ``k`` documents with the largest
     importance weight, deterministic tie-break on id.  Returns
-    (``id_col``, qlw_sum bigint, dsir_rank bigint) with ``dsir_rank``
+    (``doc_id``, qlw_sum bigint, dsir_rank bigint) with ``dsir_rank``
     the 1-based position in the (qlw_sum DESC, id ASC) order — the
     DSIR paper's "top-k variant" of importance resampling."""
     return _decomposed_topk(
-        scored.select(id_col, "qlw_sum"), k, "qlw_sum", id_col,
-        [id_col, "qlw_sum"], bin_width)
+        scored.select("doc_id", "qlw_sum"), k, "qlw_sum",
+        ["doc_id", "qlw_sum"])
 
 
-def gumbel_table(spark, q: int = _Q, u_bits: int = _U_BITS) -> DataFrame:
+def gumbel_table(spark) -> DataFrame:
     """The quantized-Gumbel lookup: for every dyadic uniform value
-    ``u = (h2 + 0.5) / 2^u_bits`` over ``h2 in [0, 2^u_bits)``, the
-    variate ``qg = floor(-log2(-log2(u)) * q + 0.5)`` — 65,536 rows at
-    the default, a pure function of (q, u_bits).  Returns ``(h2 int,
-    qg bigint)``.
+    ``u = (h2 + 0.5) / 2^16`` over ``h2 in [0, 2^16)``, the variate
+    ``qg = floor(-log2(-log2(u)) * q + 0.5)`` at ``q`` = ``_Q`` —
+    65,536 rows.  Returns ``(h2 int, qg bigint)``.
 
     This table is the ONLY transcendental surface of
     :func:`dsir_sample`, isolated here so it can be STAGED like every
@@ -255,19 +252,18 @@ def gumbel_table(spark, q: int = _Q, u_bits: int = _U_BITS) -> DataFrame:
     it to parquet and the DuckDB oracle re-reads the identical
     integers — no engine ever recomputes a log2 inside the gate, so a
     last-ulp libm divergence can never flip a floor at a quantization
-    boundary.  ``q`` must match the weight model's quantization
+    boundary.  ``q`` matches the weight model's quantization
     (dsir_train's ``_Q`` — the shared module constant)."""
-    denom = float(1 << u_bits)
+    denom = float(1 << _U_BITS)
     u = (F.col("id").cast("double") + 0.5) / F.lit(denom)
-    return spark.range(1 << u_bits).select(
+    return spark.range(1 << _U_BITS).select(
         F.col("id").cast("int").alias("h2"),
-        F.floor(-F.log2(-F.log2(u)) * q + F.lit(0.5))
+        F.floor(-F.log2(-F.log2(u)) * _Q + F.lit(0.5))
         .cast("bigint").alias("qg"),
     )
 
 
 def dsir_sample(scored: DataFrame, k: int, seed: str = "s0",
-                id_col: str = "doc_id", bin_width: int = _Q,
                 noise: DataFrame | None = None) -> DataFrame:
     """Gumbel-top-k importance resampling — the DSIR paper's sampled
     selection (sampling without replacement with probability ∝ w),
@@ -278,7 +274,7 @@ def dsir_sample(scored: DataFrame, k: int, seed: str = "s0",
     ``gkey = qlw_sum + qg`` are exactly a Gumbel-top-k draw over the
     quantized weights (base-2 logs are the natural-log Gumbel machinery
     scaled by 1/ln2 — a monotone transform, so the selection
-    distribution is unchanged).  Returns (``id_col``, qlw_sum bigint,
+    distribution is unchanged).  Returns (``doc_id``, qlw_sum bigint,
     gkey bigint, dsir_rank bigint).  Changing ``seed`` redraws
     independently; the draw is a pure function of (seed, id), so it is
     stable across runs, partitionings, and engines.  Pass ``noise`` to
@@ -289,14 +285,14 @@ def dsir_sample(scored: DataFrame, k: int, seed: str = "s0",
         noise = gumbel_table(scored.sparkSession)
     h2 = F.pmod(
         portable_hash60(
-            F.concat(F.lit(seed + "|"), F.col(id_col).cast("string"))),
+            F.concat(F.lit(seed + "|"), F.col("doc_id").cast("string"))),
         F.lit(1 << _U_BITS),
     ).cast("int")
     keyed = (
-        scored.select(id_col, "qlw_sum", h2.alias("h2"))
+        scored.select("doc_id", "qlw_sum", h2.alias("h2"))
         .join(F.broadcast(noise), "h2")
-        .select(id_col, "qlw_sum",
+        .select("doc_id", "qlw_sum",
                 (F.col("qlw_sum") + F.col("qg")).alias("gkey"))
     )
-    return _decomposed_topk(keyed, k, "gkey", id_col,
-                            [id_col, "qlw_sum", "gkey"], bin_width)
+    return _decomposed_topk(keyed, k, "gkey",
+                            ["doc_id", "qlw_sum", "gkey"])

@@ -43,9 +43,7 @@ from origami_spark.operators.text import portable_hash60, tokens_col
 __all__ = ["hashed_embedding_rows", "hashed_embedding_vectors"]
 
 
-def hashed_embedding_rows(docs: DataFrame, dim: int = 64,
-                          id_col: str = "doc_id",
-                          text_col: str = "text") -> DataFrame:
+def hashed_embedding_rows(docs: DataFrame, dim: int = 64) -> DataFrame:
     """Sparse hashed embedding: one row per non-zero coordinate.
 
     Output: ``(doc_id, dim_id int, weight double)`` with
@@ -58,9 +56,9 @@ def hashed_embedding_rows(docs: DataFrame, dim: int = 64,
     is not a coordinate of the sparse vector).  NULL-id rows drop (the
     sampling-module convention) — without the guard every NULL-id doc
     would aggregate into ONE garbage vector."""
-    tok = docs.filter(F.col(id_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens_col(text_col)).alias("tok"),
+    tok = docs.filter(F.col("doc_id").isNotNull()).select(
+        "doc_id",
+        F.explode(tokens_col("text")).alias("tok"),
     )
     c = (
         tok.select(
@@ -89,17 +87,15 @@ def hashed_embedding_rows(docs: DataFrame, dim: int = 64,
     )
 
 
-def hashed_embedding_vectors(docs: DataFrame, dim: int = 64,
-                             id_col: str = "doc_id",
-                             text_col: str = "text") -> DataFrame:
-    """Dense form for the ANN/SemDeDup consumers:
+def hashed_embedding_vectors(docs: DataFrame) -> DataFrame:
+    """Dense 64-dim form for the ANN/SemDeDup consumers:
     ``(vec_id, embedding array<double>)``, zero-filled at cancelled or
     untouched buckets.  Docs with no tokens are absent (there is no
     meaningful unit vector for them).  Groups on the partitioning the
     sparse form already established, so assembly adds no corpus-sized
     exchange; map lookup keeps the result independent of
     ``collect_list`` order."""
-    rows = hashed_embedding_rows(docs, dim, id_col, text_col)
+    rows = hashed_embedding_rows(docs)
     m = F.map_from_entries(F.collect_list(F.struct("dim_id", "weight")))
     return (
         rows.groupBy("doc_id")
@@ -107,7 +103,7 @@ def hashed_embedding_vectors(docs: DataFrame, dim: int = 64,
         .select(
             F.col("doc_id").alias("vec_id"),
             F.transform(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
+                F.sequence(F.lit(0), F.lit(63)),
                 lambda i: F.coalesce(
                     F.element_at("_m", i.cast("int")),
                     F.lit(0.0),

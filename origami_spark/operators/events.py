@@ -8,7 +8,7 @@ Spark engine must supply.  All five operators here are pure Catalyst
 (zero Python in the data path) and single-shuffle-per-grain:
 
 * :func:`asof_join` — backward as-of (each left row gets the latest
-  right row with ``right_ts <= left_ts`` per key), the union trick:
+  right row at or before its ``ts`` per key), the union trick:
   tag sides, ONE shuffle on the key, one ordered window pass with
   ``last(ignorenulls)``.  No range explosion, no per-key loop.
 * :func:`sessionize` — gaps-and-islands sessions: new session when
@@ -72,23 +72,20 @@ def _us(c):
 
 
 def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
-              left_ts: str = "ts", right_ts: str = "ts",
               value_cols: tuple = ("value",),
-              suffix: str = "_asof",
-              tolerance_ms: int | None = None,
               direction: str = "backward") -> DataFrame:
-    """As-of join (the pandas ``merge_asof`` directions): every
-    ``left`` row keeps all its columns and gains ``<c><suffix>`` for
-    each of the right's ``value_cols`` plus ``<right_ts><suffix>`` —
-    the values of the matched right row on the same ``key``:
+    """As-of join (the pandas ``merge_asof`` directions) on the ``ts``
+    columns of both sides: every ``left`` row keeps all its columns and
+    gains ``<c>_asof`` for each of the right's ``value_cols`` plus
+    ``ts_asof`` — the values of the matched right row on the same
+    ``key``:
 
     * ``backward`` (default) — the LATEST right row with
-      ``right_ts <= left_ts``;
-    * ``forward`` — the EARLIEST right row with ``right_ts >=
-      left_ts``.
+      ``right.ts <= left.ts``;
+    * ``forward`` — the EARLIEST right row with ``right.ts >=
+      left.ts``.
 
-    NULLs when no right row qualifies, or when the match is further
-    than ``tolerance_ms`` away.
+    NULLs when no right row qualifies.
 
     Plan: union the tagged sides (the right row at an EQUAL timestamp
     sorts on the matchable side of the left row — the inclusive
@@ -105,10 +102,10 @@ def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
     lcols = left.columns
     rvals = list(value_cols)
     l = left.select(
-        F.col(key).alias("_k"), F.col(left_ts).alias("_ts"),
+        F.col(key).alias("_k"), F.col("ts").alias("_ts"),
         F.lit(1).alias("_side"), *[F.col(c) for c in lcols])
     r = right.select(
-        F.col(key).alias("_k"), F.col(right_ts).alias("_ts"),
+        F.col(key).alias("_k"), F.col("ts").alias("_ts"),
         F.lit(0).alias("_side"),
         *[F.col(c).alias(f"_r_{c}") for c in rvals])
     u = l.unionByName(r, allowMissingColumns=True)
@@ -119,7 +116,6 @@ def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
              .orderBy(F.col("_ts").asc(), F.col("_side").asc())
              .rowsBetween(Window.unboundedPreceding, Window.currentRow))
         nearest = lambda c: F.last(c, ignorenulls=True).over(w)
-        gap = lambda: _ms(F.col("_ts")) - _ms(F.col("_m_ts"))
     else:
         # left (1) before right (0) at equal ts; take the FIRST right
         # value at or after the current row
@@ -127,74 +123,62 @@ def asof_join(left: DataFrame, right: DataFrame, key: str = "user_id",
              .orderBy(F.col("_ts").asc(), F.col("_side").desc())
              .rowsBetween(Window.currentRow, Window.unboundedFollowing))
         nearest = lambda c: F.first(c, ignorenulls=True).over(w)
-        gap = lambda: _ms(F.col("_m_ts")) - _ms(F.col("_ts"))
     out = u.withColumn(
         "_m_ts",
         nearest(F.when(F.col("_side") == 0, F.col("_ts"))))
     for c in rvals:
-        out = out.withColumn(f"{c}{suffix}", nearest(F.col(f"_r_{c}")))
-    out = out.filter(F.col("_side") == 1)
-    if tolerance_ms is not None:
-        fresh = (F.col("_m_ts").isNotNull()
-                 & (gap() <= int(tolerance_ms)))
-        for c in rvals:
-            out = out.withColumn(
-                f"{c}{suffix}", F.when(fresh, F.col(f"{c}{suffix}")))
-        out = out.withColumn("_m_ts", F.when(fresh, F.col("_m_ts")))
-    return out.select(
-        *lcols, *[f"{c}{suffix}" for c in rvals],
-        F.col("_m_ts").alias(f"{right_ts}{suffix}"))
+        out = out.withColumn(f"{c}_asof", nearest(F.col(f"_r_{c}")))
+    return out.filter(F.col("_side") == 1).select(
+        *lcols, *[f"{c}_asof" for c in rvals],
+        F.col("_m_ts").alias("ts_asof"))
 
 
-def sessionize(events: DataFrame, key: str = "user_id",
-               ts_col: str = "ts",
-               gap_seconds: int = 1800) -> DataFrame:
-    """Gaps-and-islands sessionization: a new session starts when the
-    per-key gap exceeds ``gap_seconds``.  Output one row per session:
-    ``(key, session_seq, n_events, session_start, session_end,
-    duration_ms)`` — timestamps as formatted strings, duration in
-    exact millisecond integers.  One window shuffle on the key plus
-    the same-partitioned aggregate."""
-    ms = _ms(F.col(ts_col))
-    wo = Window.partitionBy(key).orderBy(F.col(ts_col).asc())
+def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+    """Gaps-and-islands sessionization of ``(user_id, ts)`` events: a
+    new session starts when the per-user gap exceeds ``gap_seconds``.
+    Output one row per session: ``(user_id, session_seq, n_events,
+    session_start, session_end, duration_ms)`` — timestamps as
+    formatted strings, duration in exact millisecond integers.  One
+    window shuffle on the key plus the same-partitioned aggregate."""
+    ms = _ms(F.col("ts"))
+    wo = Window.partitionBy("user_id").orderBy(F.col("ts").asc())
     prev = F.lag(ms).over(wo)
     is_new = (prev.isNull()
               | ((ms - prev) > int(gap_seconds) * 1000)).cast("int")
-    run = (Window.partitionBy(key).orderBy(F.col(ts_col).asc())
+    run = (Window.partitionBy("user_id").orderBy(F.col("ts").asc())
            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    marked = events.select(key, ts_col).withColumn("_new", is_new) \
+    marked = events.select("user_id", "ts").withColumn("_new", is_new) \
         .withColumn("session_seq", F.sum("_new").over(run).cast("bigint"))
     return (
-        marked.groupBy(key, "session_seq")
+        marked.groupBy("user_id", "session_seq")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.date_format(F.min(ts_col), TS_FMT).alias("session_start"),
-            F.date_format(F.max(ts_col), TS_FMT).alias("session_end"),
-            (_ms(F.max(ts_col)) - _ms(F.min(ts_col)))
+            F.date_format(F.min("ts"), TS_FMT).alias("session_start"),
+            F.date_format(F.max("ts"), TS_FMT).alias("session_end"),
+            (_ms(F.max("ts")) - _ms(F.min("ts")))
             .cast("bigint").alias("duration_ms"),
         )
     )
 
 
-def time_rollup(events: DataFrame, ts_col: str = "ts",
-                by: str = "event_type",
-                value_col: str = "value") -> DataFrame:
+def time_rollup(events: DataFrame) -> DataFrame:
     """Hypertable-style multi-resolution rollup with continuous-
     aggregate reuse: the hour grain aggregates RAW events (the only
     corpus-sized shuffle); the day grain aggregates THE HOURLY TABLE
-    (<= 24 rows per (day, by) — at 10^12 events the daily rollup
-    costs nothing and never rescans raw).  Output:
-    ``(granularity, bucket, <by>, n, sum_value)`` with bucket as a
-    formatted string and the double sum rounded only here."""
+    (<= 24 rows per (day, event_type) — at 10^12 events the daily
+    rollup costs nothing and never rescans raw).  Output:
+    ``(granularity, bucket, event_type, n, sum_value)`` with bucket as
+    a formatted string and the double sum of ``value`` rounded only
+    here."""
     hourly = (
         events.groupBy(
-            F.date_trunc("hour", ts_col).alias("_bucket"), by)
+            F.date_trunc("hour", "ts").alias("_bucket"), "event_type")
         .agg(F.count(F.lit(1)).alias("_n"),
-             F.sum(value_col).alias("_sv"))
+             F.sum("value").alias("_sv"))
     )
     daily = (
         hourly.groupBy(
-            F.date_trunc("day", "_bucket").alias("_bucket"), by)
+            F.date_trunc("day", "_bucket").alias("_bucket"), "event_type")
         .agg(F.sum("_n").alias("_n"), F.sum("_sv").alias("_sv"))
     )
     fmt = "yyyy-MM-dd HH:mm:ss"
@@ -203,7 +187,7 @@ def time_rollup(events: DataFrame, ts_col: str = "ts",
         return df.select(
             F.lit(gran).alias("granularity"),
             F.date_format("_bucket", fmt).alias("bucket"),
-            by,
+            "event_type",
             F.col("_n").cast("bigint").alias("n"),
             F.round("_sv", 2).alias("sum_value"),
         )
@@ -212,14 +196,13 @@ def time_rollup(events: DataFrame, ts_col: str = "ts",
 
 
 def window_funnel(events: DataFrame, steps: tuple,
-                  horizon_ms: int, key: str = "user_id",
-                  ts_col: str = "ts",
-                  type_col: str = "event_type") -> DataFrame:
-    """Greedy ordered-step funnel: per key, ``t1`` is the earliest
-    step-1 event; each subsequent step takes its earliest event
-    STRICTLY after the previous step and within ``horizon_ms`` of
-    ``t1`` (microsecond-exact comparisons).  Output one row per key
-    that reached step 1: ``(key, funnel_depth, t1)``.
+                  horizon_ms: int) -> DataFrame:
+    """Greedy ordered-step funnel over ``(user_id, ts, event_type)``
+    events: per user, ``t1`` is the earliest step-1 event; each
+    subsequent step takes its earliest event STRICTLY after the
+    previous step and within ``horizon_ms`` of ``t1``
+    (microsecond-exact comparisons).  Output one row per user that
+    reached step 1: ``(user_id, funnel_depth, t1)``.
 
     Plan: one conditional window-aggregate per step over the SAME
     key partitioning — Catalyst plans one exchange and stacked Window
@@ -228,24 +211,24 @@ def window_funnel(events: DataFrame, steps: tuple,
     oracle), so the greedy choice is externally verified."""
     if len(steps) < 2:
         raise ValueError("a funnel needs at least two steps")
-    w = Window.partitionBy(key)
-    us = _us(F.col(ts_col))
-    cur = events.select(key, ts_col, type_col).withColumn(
-        "_t1", F.min(F.when(F.col(type_col) == steps[0],
-                            F.col(ts_col))).over(w))
+    w = Window.partitionBy("user_id")
+    us = _us(F.col("ts"))
+    cur = events.select("user_id", "ts", "event_type").withColumn(
+        "_t1", F.min(F.when(F.col("event_type") == steps[0],
+                            F.col("ts"))).over(w))
     horizon_us = int(horizon_ms) * 1000
     prev = "_t1"
     for i, step in enumerate(steps[1:], start=2):
         ok = (
             F.col(prev).isNotNull()
-            & (F.col(type_col) == step)
+            & (F.col("event_type") == step)
             & (us > _us(F.col(prev)))
             & (us - _us(F.col("_t1")) <= horizon_us)
         )
         cur = cur.withColumn(
-            f"_t{i}", F.min(F.when(ok, F.col(ts_col))).over(w))
+            f"_t{i}", F.min(F.when(ok, F.col("ts"))).over(w))
         prev = f"_t{i}"
-    collapsed = cur.groupBy(key).agg(
+    collapsed = cur.groupBy("user_id").agg(
         *[F.max(f"_t{i}").alias(f"_t{i}")
           for i in range(1, len(steps) + 1)])
     depth = F.lit(0)
@@ -254,7 +237,7 @@ def window_funnel(events: DataFrame, steps: tuple,
                        F.lit(i)).otherwise(depth)
     return (
         collapsed.select(
-            key,
+            "user_id",
             depth.cast("bigint").alias("funnel_depth"),
             F.date_format("_t1", TS_FMT).alias("t1"),
         )
@@ -262,23 +245,22 @@ def window_funnel(events: DataFrame, steps: tuple,
     )
 
 
-def cohort_retention(events: DataFrame, key: str = "user_id",
-                     ts_col: str = "ts") -> DataFrame:
-    """Weekly cohort retention: cohort = the key's first active week;
+def cohort_retention(events: DataFrame) -> DataFrame:
+    """Weekly cohort retention: cohort = the user's first active week;
     one output row per (cohort_week, week_offset) with the distinct
-    keys active that week.  Distinct (key, week) first (one shuffle,
+    users active that week.  Distinct (user_id, week) first (one shuffle,
     corpus collapses to activity grain), first-week per key and the
     join back are both key-partitioned (exchange reuse), the final
     aggregate is cohort-grain tiny."""
     wk = events.select(
-        key, F.date_trunc("week", ts_col).alias("_wk")).distinct()
-    first = wk.groupBy(key).agg(F.min("_wk").alias("_cohort"))
-    j = wk.join(first, key)
+        "user_id", F.date_trunc("week", "ts").alias("_wk")).distinct()
+    first = wk.groupBy("user_id").agg(F.min("_wk").alias("_cohort"))
+    j = wk.join(first, "user_id")
     return (
         j.groupBy(
             F.date_format("_cohort", "yyyy-MM-dd").alias("cohort_week"),
             (F.datediff(F.col("_wk"), F.col("_cohort")) / 7)
             .cast("bigint").alias("week_offset"),
         )
-        .agg(F.count_distinct(F.col(key)).cast("bigint").alias("n_active"))
+        .agg(F.count_distinct(F.col("user_id")).cast("bigint").alias("n_active"))
     )

@@ -151,7 +151,6 @@ def merge_free_line_regions(ranked: DataFrame) -> DataFrame:
 
 
 def to_page_xml(ranked: DataFrame, creator: str = "origami_spark",
-                created: str = "2024-01-01T00:00:00Z",
                 lines: DataFrame | None = None,
                 merge_free_lines: bool = True) -> DataFrame:
     """ranked blocks (url, rank, path, label, start, end, text) ->
@@ -184,7 +183,6 @@ def to_page_xml(ranked: DataFrame, creator: str = "origami_spark",
     # header params are driver-side strings: escape at build time (data
     # columns go through _esc)
     creator = escape(creator)
-    created = escape(created)
     if merge_free_lines:
         # reference semantics by default: consecutive free lines become
         # one MergedTextRegion whose TextLine children are the members
@@ -288,8 +286,8 @@ def to_page_xml(ranked: DataFrame, creator: str = "origami_spark",
               f'<PcGts xmlns="{PAGE_NS}">\n'
               "  <Metadata>\n"
               f"    <Creator>{creator}</Creator>\n"
-              f"    <Created>{created}</Created>\n"
-              f"    <LastChange>{created}</LastChange>\n"
+              "    <Created>2024-01-01T00:00:00Z</Created>\n"
+              "    <LastChange>2024-01-01T00:00:00Z</LastChange>\n"
               "  </Metadata>\n"
               '  <Page imageFilename="'),
         _esc(F.col("url")),

@@ -13,9 +13,9 @@ a graph family next to dedup/sampling:
 * :func:`pagerank` — damped PageRank over ``K`` synchronous iterations.
 
 Determinism contract (the property the DuckDB oracle checks): scores
-are **fixed-point BIGINTs** (``scale`` = one unit of mass) and every
-per-edge contribution is computed with *integer* floor division
-``(score * weight * d_num) div (out_w * d_den)``.  Integer sums are
+are **fixed-point BIGINTs** (``PAGERANK_SCALE`` = one unit of mass) and
+every per-edge contribution is computed with *integer* floor division
+``(score * weight * 85) div (out_w * 100)``.  Integer sums are
 associative/commutative, so the result is bit-identical at any
 partitioning, any engine — the oracle unrolls the same K iterations as
 chained CTEs and must hash-match exactly.  (A float PageRank would
@@ -58,7 +58,18 @@ from pyspark.sql import functions as F
 from ..session import cache, cache_scope
 
 __all__ = ["event_edges", "html_link_edges", "degrees", "pagerank",
-           "pagerank_base", "hits"]
+           "hits", "PAGERANK_SCALE", "DAMPING_NUM", "DAMPING_DEN",
+           "PAGERANK_BASE", "HITS_SCALE"]
+
+# Fixed-point PageRank: one unit of mass, the exact damping rational
+# DAMPING_NUM / DAMPING_DEN (0.85), and the teleport mass per node per
+# iteration, floor(scale * (1 - d)) in exact integer arithmetic —
+# inlined as a literal on both engine and oracle sides so neither ever
+# evaluates a float.  HITS max-normalizes to its own fixed-point unit.
+PAGERANK_SCALE = 1 << 20
+DAMPING_NUM, DAMPING_DEN = 85, 100
+PAGERANK_BASE = PAGERANK_SCALE * (DAMPING_DEN - DAMPING_NUM) // DAMPING_DEN
+HITS_SCALE = 1 << 16
 
 # Edge count up to which pagerank, hits and connected_components run
 # as one in-task numpy kernel.  Measured on a 4-core VM (|V| = |E|/10),
@@ -145,11 +156,10 @@ def _resolve_href(href_col, origin_col):
     )
 
 
-def html_link_edges(pages: DataFrame, url_col: str = "url",
-                    html_col: str = "html") -> DataFrame:
-    """Weighted page-level link graph from raw HTML — the crawl-native
-    edge derivation (Common Crawl's host/domain graphs start exactly
-    here: href extraction over WARC payloads).
+def html_link_edges(pages: DataFrame) -> DataFrame:
+    """Weighted page-level link graph from raw ``(url, html)`` pages —
+    the crawl-native edge derivation (Common Crawl's host/domain graphs
+    start exactly here: href extraction over WARC payloads).
 
     Pure Catalyst end-to-end: one ``regexp_extract_all`` projection
     pulls every ``href="..."`` value, fragments are stripped, and the
@@ -168,12 +178,12 @@ def html_link_edges(pages: DataFrame, url_col: str = "url",
     ``groupBy(src, dst)`` with map-side combine.  The downstream
     host-graph rollup is one more bounded aggregation.
     """
-    origin = F.regexp_extract(F.col(url_col), r"^(https?://[^/]+)", 1)
+    origin = F.regexp_extract(F.col("url"), r"^(https?://[^/]+)", 1)
     # (?i): attribute names are case-insensitive html (HREF= is legal)
     hrefs = F.regexp_extract_all(
-        F.col(html_col).cast("string"), F.lit(r'(?i)href="([^"]*)"'), 1)
+        F.col("html").cast("string"), F.lit(r'(?i)href="([^"]*)"'), 1)
     raw = pages.select(
-        F.col(url_col).alias("src"),
+        F.col("url").alias("src"),
         origin.alias("_origin"),
         F.explode(hrefs).alias("_href"),
     )
@@ -186,14 +196,12 @@ def html_link_edges(pages: DataFrame, url_col: str = "url",
     )
 
 
-def event_edges(events: DataFrame, entity_col: str = "user_id",
-                order_cols: tuple = ("ts", "event_id"),
-                node_expr: str = "CAST(get_json_object(props, '$.k') AS BIGINT)",
-                ) -> DataFrame:
+def event_edges(events: DataFrame) -> DataFrame:
     """Weighted transition graph from an ordered event log.
 
-    Consecutive events of one entity form a directed edge
-    ``prev_node -> node`` (self-loops dropped — they carry no ranking
+    Consecutive events of one ``user_id`` in ``(ts, event_id)`` order
+    form a directed edge ``prev_node -> node``, the node being the
+    event's ``props`` key ``$.k`` (self-loops dropped — they carry no ranking
     information and would let a node launder mass to itself); edge
     weight = number of such transitions corpus-wide.
 
@@ -204,10 +212,11 @@ def event_edges(events: DataFrame, entity_col: str = "user_id",
     for power-law entities apply the two-level split of
     :func:`~origami_spark.operators.hosts.host_cap` first.
     """
-    w = Window.partitionBy(entity_col).orderBy(
-        *[F.col(c).asc() for c in order_cols])
-    t = events.select(F.expr(node_expr).alias("dst"),
-                      F.col(entity_col), *[F.col(c) for c in order_cols])
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").asc(), F.col("event_id").asc())
+    t = events.select(
+        F.expr("CAST(get_json_object(props, '$.k') AS BIGINT)").alias("dst"),
+        "user_id", "ts", "event_id")
     seq = t.withColumn("src", F.lag("dst").over(w))
     return (
         seq.filter(F.col("src").isNotNull() & (F.col("src") != F.col("dst")))
@@ -216,8 +225,7 @@ def event_edges(events: DataFrame, entity_col: str = "user_id",
     )
 
 
-def html_anchor_texts(pages: DataFrame, url_col: str = "url",
-                      html_col: str = "html") -> DataFrame:
+def html_anchor_texts(pages: DataFrame) -> DataFrame:
     """(src, dst, anchor) rows — the link text a page attaches to each
     target (the raw material of anchor-text datasets: web-grade
     titles/descriptions harvested from citing pages, as in Common
@@ -244,10 +252,10 @@ def html_anchor_texts(pages: DataFrame, url_col: str = "url",
     # pattern scans each page ONCE (group 0); href/label then extract
     # from the short matched elements instead of re-scanning the page.
     pat = r'(?i)<a[ \t\n\r\f][^>]*href="([^"]*)"[^>]*>([^<]*)</a>'
-    origin = F.regexp_extract(F.col(url_col), r"^(https?://[^/]+)", 1)
-    h = F.col(html_col).cast("string")
+    origin = F.regexp_extract(F.col("url"), r"^(https?://[^/]+)", 1)
+    h = F.col("html").cast("string")
     raw = pages.select(
-        F.col(url_col).alias("src"),
+        F.col("url").alias("src"),
         origin.alias("_origin"),
         F.explode(F.regexp_extract_all(h, F.lit(pat), 0)).alias("el"),
     )
@@ -290,7 +298,7 @@ def host_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def anchor_topk(anchors: DataFrame, k: int = 3, salt: int = 64) -> DataFrame:
+def anchor_topk(anchors: DataFrame, k: int = 3) -> DataFrame:
     """Per-target anchor-text profile: the ``k`` most frequent labels
     pointing at each dst — the aggregation that turns the raw anchor
     harvest (:func:`html_anchor_texts`) into a per-target text
@@ -304,8 +312,8 @@ def anchor_topk(anchors: DataFrame, k: int = 3, salt: int = 64) -> DataFrame:
     the two-level deterministic top-k (the host_cap/bm25 recipe): a
     single per-dst window would sort a mega-indegree target's whole
     distinct-anchor set on one task; phase 1 ranks within
-    ``(dst, hash-of-anchor % salt)`` and keeps k, phase 2 ranks the
-    <= salt*k survivors.  Value-identical to the single-window form
+    ``(dst, hash-of-anchor % 64)`` and keeps k, phase 2 ranks the
+    <= 64*k survivors.  Value-identical to the single-window form
     (any global top-k member is its group's top-k member), which
     stays the oracle formulation.
     """
@@ -316,7 +324,7 @@ def anchor_topk(anchors: DataFrame, k: int = 3, salt: int = 64) -> DataFrame:
     w1 = Window.partitionBy("dst", "_g").orderBy(F.desc("n"), F.asc("anchor"))
     w2 = Window.partitionBy("dst").orderBy(F.desc("n"), F.asc("anchor"))
     return (
-        c.withColumn("_g", F.pmod(F.xxhash64("anchor"), F.lit(salt)))
+        c.withColumn("_g", F.pmod(F.xxhash64("anchor"), F.lit(64)))
         .withColumn("_r1", F.row_number().over(w1))
         .filter(F.col("_r1") <= k)
         .withColumn("rk", F.row_number().over(w2).cast("bigint"))
@@ -359,50 +367,40 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_base(scale: int, d_num: int, d_den: int) -> int:
-    """Teleport mass per node per iteration, in fixed-point units.
-
-    ``floor(scale * (1 - d))`` computed in exact integer arithmetic —
-    inlined as a literal on both engine and oracle sides so neither
-    ever evaluates a float."""
-    return (scale * (d_den - d_num)) // d_den
-
-
-def _pagerank_kernel(src, dst, weight, iters, scale, d_num, d_den):
+def _pagerank_kernel(src, dst, weight, iters):
     node, s, d = _node_index(src, dst)
     n = len(node)
-    den = _mul(_sum(s, weight, n)[s], d_den)
+    den = _mul(_sum(s, weight, n)[s], DAMPING_DEN)
     # each node's teleport base rides along as one more addend
     keys = np.concatenate([d, np.arange(n)])
-    base = np.full(n, pagerank_base(scale, d_num, d_den), np.int64)
-    score = np.full(n, scale, np.int64)
+    base = np.full(n, PAGERANK_BASE, np.int64)
+    score = np.full(n, PAGERANK_SCALE, np.int64)
     for _ in range(iters):
-        c = _div(_mul(_mul(score[s], weight), d_num), den)
+        c = _div(_mul(_mul(score[s], weight), DAMPING_NUM), den)
         score = _sum(keys, np.concatenate([c, base]), n)
     return node, score
 
 
-def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
-             d_num: int = 85, d_den: int = 100) -> DataFrame:
+def pagerank(edges: DataFrame, iters: int = 6) -> DataFrame:
     """Damped PageRank, ``iters`` synchronous integer iterations.
 
     ``edges``: (src, dst, weight) — weight > 0, no NULL field (such a
-    row drops).  Damping factor is the exact rational ``d_num / d_den``
-    (default 0.85).  Every node starts with ``scale`` units of mass;
-    each iteration a node keeps the teleport ``base`` (see
-    :func:`pagerank_base`) and receives
-    ``(score_src * weight * d_num) div (out_w_src * d_den)`` from each
+    row drops).  Damping factor is the exact rational
+    ``DAMPING_NUM / DAMPING_DEN`` (0.85).  Every node starts with
+    ``PAGERANK_SCALE`` units of mass; each iteration a node keeps the
+    teleport ``PAGERANK_BASE`` and receives
+    ``(score_src * weight * 85) div (out_w_src * 100)`` from each
     in-edge.  All arithmetic is BIGINT; see the module docstring for
     the determinism/overflow contract (products stay < 2^63 for
-    |V| * scale * max_weight * d_num < 2^63 — 10^9 nodes at the default
-    scale leaves weights up to ~10^5).
+    |V| * scale * max_weight * 85 < 2^63 — 10^9 nodes leaves weights
+    up to ~10^5).
 
-    Output: ``node, score`` (BIGINT fixed-point; divide by ``scale``
-    for the conventional per-node mass), materialized.
+    Output: ``node, score`` (BIGINT fixed-point; divide by
+    ``PAGERANK_SCALE`` for the conventional per-node mass),
+    materialized.
     """
     if iters < 1:
         raise ValueError("pagerank needs iters >= 1")
-    base = pagerank_base(scale, d_num, d_den)
 
     with cache_scope():
         # one edge-derivation pass: without this cache, each consumer
@@ -419,8 +417,7 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
             return _empty(e, "node bigint, score bigint")
         if n_edges <= _KERNEL_EDGES:
             return _in_task(e, "node bigint, score bigint", partial(
-                _pagerank_kernel, iters=iters, scale=scale, d_num=d_num,
-                d_den=d_den)).localCheckpoint(eager=True)
+                _pagerank_kernel, iters=iters)).localCheckpoint(eager=True)
         nodes = cache(
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
@@ -433,9 +430,9 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
         # the small score relation)
         ew = cache(e.join(outw, "src").repartition(F.col("src")))
 
-        scores = nodes.withColumn("score", F.lit(scale).cast("bigint"))
+        scores = nodes.withColumn("score", F.lit(PAGERANK_SCALE).cast("bigint"))
         contrib_expr = F.expr(
-            f"(score * weight * {d_num}L) div (out_w * {d_den}L)")
+            f"(score * weight * {DAMPING_NUM}L) div (out_w * {DAMPING_DEN}L)")
         for it in range(iters):
             contribs = (
                 ew.join(scores.withColumnRenamed("node", "src"), "src")
@@ -446,7 +443,7 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
             )
             scores = nodes.join(contribs, "node", "left").select(
                 "node",
-                (F.lit(base).cast("bigint")
+                (F.lit(PAGERANK_BASE).cast("bigint")
                  + F.coalesce(F.col("received"), F.lit(0)).cast("bigint")
                  ).alias("score"),
             )
@@ -462,30 +459,29 @@ def pagerank(edges: DataFrame, iters: int = 6, scale: int = 1 << 20,
         return scores
 
 
-def _hits_kernel(src, dst, weight, iters, scale):
+def _hits_kernel(src, dst, weight, iters):
     node, s, d = _node_index(src, dst)
     n = len(node)
 
     def norm(raw, keys):
         # the max runs over the nodes the step scored, as in the plan
-        return _div(_mul(raw, scale), raw[keys].max())
+        return _div(_mul(raw, HITS_SCALE), raw[keys].max())
 
-    hub = np.full(n, scale, np.int64)
+    hub = np.full(n, HITS_SCALE, np.int64)
     for _ in range(iters):
         auth = norm(_sum(d, _mul(hub[s], weight), n), d)
         hub = norm(_sum(s, _mul(auth[d], weight), n), s)
     return node, hub, auth
 
 
-def hits(edges: DataFrame, iters: int = 4,
-         scale: int = 1 << 16) -> DataFrame:
+def hits(edges: DataFrame, iters: int = 4) -> DataFrame:
     """HITS hubs & authorities (Kleinberg 1999, "Authoritative sources
     in a hyperlinked environment", JACM — public), ``iters``
     synchronous iterations in exact BIGINT fixed-point — the second
     classic link-centrality signal next to :func:`pagerank` (crawl
     curation uses authority scores to seed quality lists).
 
-    Recurrence per iteration (all integer):
+    Recurrence per iteration (all integer, ``scale`` = ``HITS_SCALE``):
 
         a_raw(v) = sum over in-edges (u, v, w) of  h(u) * w
         a(v)     = (a_raw(v) * scale) div max_v a_raw   -- max-norm
@@ -498,8 +494,8 @@ def hits(edges: DataFrame, iters: int = 4,
     a broadcast one-row relation (cross join), NOT a driver collect —
     the whole K-iteration program is one lazy Catalyst plan with
     per-round localCheckpoints.  Overflow bound: ``a_raw * scale <
-    2^63`` needs weighted in-degree < 2^63 / scale^2 = 2^31 at the
-    default scale — two billion per node, beyond any real host graph.
+    2^63`` needs weighted in-degree < 2^63 / scale^2 = 2^31 — two
+    billion per node, beyond any real host graph.
 
     Scale shape: the edge relation is persisted TWICE, pre-partitioned
     by src (the a-step join) and by dst (the h-step join); each
@@ -524,7 +520,7 @@ def hits(edges: DataFrame, iters: int = 4,
             return _empty(e, "node bigint, hub bigint, authority bigint")
         if n_edges <= _KERNEL_EDGES:
             return _in_task(e, "node bigint, hub bigint, authority bigint",
-                            partial(_hits_kernel, iters=iters, scale=scale)
+                            partial(_hits_kernel, iters=iters)
                             ).localCheckpoint(eager=True)
         nodes = cache(
             e.select(F.col("src").alias("node"))
@@ -539,10 +535,10 @@ def hits(edges: DataFrame, iters: int = 4,
             return (
                 raw.crossJoin(F.broadcast(mx))
                 .select("node",
-                        F.expr(f"({col} * {scale}L) div _mx").alias(col))
+                        F.expr(f"({col} * {HITS_SCALE}L) div _mx").alias(col))
             )
 
-        hub = nodes.withColumn("hub", F.lit(scale).cast("bigint"))
+        hub = nodes.withColumn("hub", F.lit(HITS_SCALE).cast("bigint"))
         for _ in range(iters):
             a_raw = (
                 e_src.join(hub.withColumnRenamed("node", "src"), "src")

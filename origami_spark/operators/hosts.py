@@ -45,16 +45,15 @@ def host_of(url_col) -> Column:
         c, "^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#]*@)?([^/:?#@]+)", 1))
 
 
-def host_stats(pages: DataFrame, url_col: str = "url",
-               text_col: str = "text", salt: int = 8) -> DataFrame:
+def host_stats(pages: DataFrame, salt: int = 8) -> DataFrame:
     """Pages / total and mean text chars per host, skew-safely.
 
     Output: ``host, n_pages, total_chars, mean_chars`` (mean rounded to
     4 decimals)."""
     t = pages.select(
-        host_of(url_col).alias("host"),
-        F.pmod(F.xxhash64(url_col), F.lit(salt)).alias("_salt"),
-        F.length(text_col).cast("bigint").alias("chars"),
+        host_of("url").alias("host"),
+        F.pmod(F.xxhash64("url"), F.lit(salt)).alias("_salt"),
+        F.length("text").cast("bigint").alias("chars"),
     )
     partial = t.groupBy("host", "_salt").agg(
         F.count(F.lit(1)).alias("pn"),
@@ -69,8 +68,7 @@ def host_stats(pages: DataFrame, url_col: str = "url",
     )
 
 
-def host_cap(pages: DataFrame, url_col: str = "url", k: int = 100,
-             salt: int = 32) -> DataFrame:
+def host_cap(pages: DataFrame, k: int = 100) -> DataFrame:
     """Keep at most ``k`` pages per host (first ``k`` in url order —
     deterministic at any parallelism).  Returns the input columns plus
     ``host``.
@@ -78,18 +76,18 @@ def host_cap(pages: DataFrame, url_col: str = "url", k: int = 100,
     Two-level deterministic top-k (VERDICT r3 item 3): a single
     ``row_number over partitionBy(host)`` would sort a Zipf mega-host's
     entire row set on one task.  Phase 1 ranks within
-    ``(host, salt-of-url)`` — each sort partition holds at most
-    ~host_rows/salt rows — and keeps ``k`` per salt; phase 2 ranks the
-    <= salt*k survivors per host, so its partitions are tiny by
+    ``(host, url hash mod 32)`` — each sort partition holds at most
+    ~host_rows/32 rows — and keeps ``k`` per salt; phase 2 ranks the
+    <= 32*k survivors per host, so its partitions are tiny by
     construction.  A host's ``k`` url-smallest pages all survive phase 1
     (each is url-smallest within its own salt too), so the result is
     value-identical to the single-window form — which remains the
     DuckDB-oracle formulation."""
-    w1 = Window.partitionBy("host", "_salt").orderBy(F.col(url_col))
-    w2 = Window.partitionBy("host").orderBy(F.col(url_col))
+    w1 = Window.partitionBy("host", "_salt").orderBy(F.col("url"))
+    w2 = Window.partitionBy("host").orderBy(F.col("url"))
     return (
-        pages.withColumn("host", host_of(url_col))
-        .withColumn("_salt", F.pmod(F.xxhash64(url_col), F.lit(salt)))
+        pages.withColumn("host", host_of("url"))
+        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(32)))
         .withColumn("_rk1", F.row_number().over(w1))
         .filter(F.col("_rk1") <= k)
         .withColumn("_rk", F.row_number().over(w2))
@@ -99,8 +97,7 @@ def host_cap(pages: DataFrame, url_col: str = "url", k: int = 100,
 
 
 def host_quality_gate(pages: DataFrame, num_col: str, den_col: str,
-                      min_ratio: float, url_col: str = "url",
-                      salt: int = 8,
+                      min_ratio: float,
                       broadcast_rejected: bool | None = None) -> DataFrame:
     """Domain-level quality curation (the RefinedWeb/FineWeb recipe:
     judge the DOMAIN, drop every page of a bad one): aggregate a
@@ -131,9 +128,9 @@ def host_quality_gate(pages: DataFrame, num_col: str, den_col: str,
       rate is tiny; the page side then never shuffles).
     * ``False`` — force a shuffled hash anti-join (the adversarial
       many-rejected-hosts path)."""
-    t = pages.withColumn("host", host_of(url_col))
+    t = pages.withColumn("host", host_of("url"))
     partial = t.groupBy(
-        "host", F.pmod(F.xxhash64(url_col), F.lit(salt)).alias("_salt")
+        "host", F.pmod(F.xxhash64("url"), F.lit(8)).alias("_salt")
     ).agg(
         F.sum(F.col(num_col).cast("bigint")).alias("pn"),
         F.sum(F.col(den_col).cast("bigint")).alias("pd"),

@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-LINK_DENSITY_MAX = 0.5
 # reclassification rescue: a TEXT block assigned to chrome whose own
 # evidence says content — long enough and nearly link-free — is
 # re-homed into the document instead of dropped.  The reference scores
@@ -42,7 +41,11 @@ LINK_DENSITY_MAX = 0.5
 # ("Home") can never be rescued.  Thresholds are single-sourced in
 # html/blocks.py, where the line-granularity form of the same rule
 # runs at parse time.
-from ..html.blocks import RESCUE_MAX_LINK_SHARE, RESCUE_MIN_CHARS  # noqa: E402
+from ..html.blocks import (
+    LINK_DENSITY_MAX,
+    RESCUE_MAX_LINK_SHARE,
+    RESCUE_MIN_CHARS,
+)
 
 _SEQ_WIN = lambda: Window.partitionBy("url").orderBy("seq")  # noqa: E731
 

@@ -47,24 +47,22 @@ __all__ = ["char_trigram_lm", "lm_score", "lm_buckets"]
 _Q = 4096
 
 
-def _trigrams(docs: DataFrame, text_col: str,
-              id_col: str) -> DataFrame:
-    """One row per (doc, position): the 3-char substring starting
-    there.  Docs shorter than 3 chars contribute nothing
+def _trigrams(docs: DataFrame) -> DataFrame:
+    """One row per (doc_id, position in text): the 3-char substring
+    starting there.  Docs shorter than 3 chars contribute nothing
     (gram_positions guards Spark's descending sequence(1, 0))."""
     return docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.transform(
-                gram_positions(F.length(text_col), 3),
-                lambda i: F.col(text_col).substr(i, F.lit(3)),
+                gram_positions(F.length("text"), 3),
+                lambda i: F.col("text").substr(i, F.lit(3)),
             )
         ).alias("tg"),
     )
 
 
-def char_trigram_lm(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def char_trigram_lm(docs: DataFrame) -> DataFrame:
     """Estimate the order-2 character LM: for every corpus trigram
     ``c1c2c3``, ``p = (count(c1c2c3) + 1) / (count(c1c2*) + V)`` with
     V = distinct trigram types (add-one smoothing), returned as
@@ -75,7 +73,7 @@ def char_trigram_lm(docs: DataFrame, text_col: str = "text",
     never scale with a mismatched constant).  Persist this table (the
     driver query stages it to parquet) and score any corpus against it
     with :func:`lm_score`."""
-    tg = _trigrams(docs, text_col, id_col)
+    tg = _trigrams(docs)
     tri = tg.groupBy("tg").agg(F.count(F.lit(1)).alias("c3"))
     v = tri.select(F.count(F.lit(1)).alias("v"))
     # the bigram-prefix table is bounded by charset^2 — broadcast it
@@ -100,10 +98,9 @@ def char_trigram_lm(docs: DataFrame, text_col: str = "text",
     )
 
 
-def lm_score(docs: DataFrame, lm: DataFrame, text_col: str = "text",
-             id_col: str = "doc_id") -> DataFrame:
+def lm_score(docs: DataFrame, lm: DataFrame) -> DataFrame:
     """Score documents against a ``char_trigram_lm`` table: returns
-    ``(id_col, n_trigrams bigint, sum_qlp bigint, bits_per_char
+    ``(doc_id, n_trigrams bigint, sum_qlp bigint, bits_per_char
     double)`` where bits_per_char = sum_qlp / (n_trigrams * q) — the
     model's cross-entropy per character; HIGH values mean the corpus
     LM finds the text surprising (the ccnet quality signal, inverted:
@@ -120,16 +117,16 @@ def lm_score(docs: DataFrame, lm: DataFrame, text_col: str = "text",
         (F.max("qlp") + F.max("q")).alias("_oov"),
         F.max("q").alias("_q"),
     )
-    tg = _trigrams(docs, text_col, id_col)
+    tg = _trigrams(docs)
     scored = tg.join(F.broadcast(lm.select("tg", "qlp")), "tg", "left")
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_trigrams"),
              F.count("qlp").alias("_n_in"),
              F.sum("qlp").alias("_s_in"))
         .crossJoin(F.broadcast(consts))
         .select(
-            id_col,
+            "doc_id",
             "n_trigrams",
             (F.coalesce("_s_in", F.lit(0))
              + (F.col("n_trigrams") - F.col("_n_in")) * F.col("_oov"))
@@ -143,18 +140,16 @@ def lm_score(docs: DataFrame, lm: DataFrame, text_col: str = "text",
     )
 
 
-def lm_buckets(scored: DataFrame, buckets: int = 3,
-               id_col: str = "doc_id",
-               bins_per_bit: int = 256) -> DataFrame:
+def lm_buckets(scored: DataFrame, buckets: int = 3) -> DataFrame:
     """ccnet's head/middle/tail split: rank documents by
     (bits_per_char, id) and cut into ``buckets`` equal-count groups —
     bucket 1 = the head (text the model likes best), the training-mix
-    strata ccnet publishes.  Returns (``id_col``, lm_rank bigint,
+    strata ccnet publishes.  Returns (``doc_id``, lm_rank bigint,
     lm_bucket int).
 
     The global rank is decomposed WITHOUT a single-partition window
     (the shuffle_order recipe, adapted to a VALUE key): bits_per_char
-    falls into fixed bins of 1/``bins_per_bit`` bits — deterministic,
+    falls into fixed bins of 1/256 bits — deterministic,
     engine-free, and each bin is a contiguous key range — a small
     per-bin count aggregate yields exclusive prefix offsets, and
     within-bin ranks run in parallel windows.  Bucket =
@@ -164,8 +159,8 @@ def lm_buckets(scored: DataFrame, buckets: int = 3,
     from pyspark.sql import Window
 
     b = cache(scored.select(
-        id_col, "bits_per_char",
-        F.floor(F.col("bits_per_char") * bins_per_bit).cast("int")
+        "doc_id", "bits_per_char",
+        F.floor(F.col("bits_per_char") * 256).cast("int")
         .alias("_g"),
     ))
     gs = b.groupBy("_g").agg(F.count(F.lit(1)).alias("gn"))
@@ -177,7 +172,7 @@ def lm_buckets(scored: DataFrame, buckets: int = 3,
         "prefix", (F.sum("gn").over(wp) - F.col("gn")).cast("bigint")
     ).select("_g", "prefix")
     n = gs.agg(F.sum("gn").cast("bigint").alias("_n"))
-    wg = Window.partitionBy("_g").orderBy("bits_per_char", id_col)
+    wg = Window.partitionBy("_g").orderBy("bits_per_char", "doc_id")
     return (
         b.join(F.broadcast(pre), "_g")
         .withColumn("lm_rank",
@@ -185,7 +180,7 @@ def lm_buckets(scored: DataFrame, buckets: int = 3,
                     .cast("bigint"))
         .crossJoin(F.broadcast(n))
         .select(
-            id_col,
+            "doc_id",
             "lm_rank",
             (F.floor((F.col("lm_rank") - 1) * buckets / F.col("_n")) + 1)
             .cast("int").alias("lm_bucket"),

@@ -45,8 +45,7 @@ def _norm(col):
         F.trim(F.regexp_replace(col, f"{_WS}+", " ")), F.lit(""))
 
 
-def html_head_meta(pages: DataFrame, url_col: str = "url",
-                   html_col: str = "html") -> DataFrame:
+def html_head_meta(pages: DataFrame) -> DataFrame:
     """One row per page: ``url, title, charset, h1, description,
     canonical`` (all nullable strings).
 
@@ -60,7 +59,7 @@ def html_head_meta(pages: DataFrame, url_col: str = "url",
     """
     # (?i): HTML tag/attribute names are case-insensitive (<TITLE>,
     # <META CHARSET=...> are legal); captured VALUES keep their case
-    h = F.col(html_col).cast("string")
+    h = F.col("html").cast("string")
     title = F.regexp_extract(h, r"(?i)<title>([^<]*)</title>", 1)
     charset = F.regexp_extract(
         h, f'(?i)<meta{_WS}[^>]*charset="?([A-Za-z0-9_-]+)"?', 1)
@@ -73,7 +72,7 @@ def html_head_meta(pages: DataFrame, url_col: str = "url",
     canonical = F.regexp_extract(
         h, f'(?i)<link{_WS}[^>]*rel="canonical"[^>]*href="([^"]*)"', 1)
     return pages.select(
-        F.col(url_col).alias("url"),
+        "url",
         _norm(title).alias("title"),
         F.lower(_norm(charset)).alias("charset"),
         _norm(h1).alias("h1"),

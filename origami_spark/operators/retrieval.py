@@ -41,8 +41,7 @@ K1 = 1.2
 B = 0.75
 
 
-def bm25_stats(docs: DataFrame, terms, text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def bm25_stats(docs: DataFrame, terms) -> DataFrame:
     """Per-term index statistics for the given query terms, plus the
     corpus constants every row carries (the lm.py convention):
     ``(term, df bigint, qidf bigint, n_docs bigint, avgdl double)``
@@ -62,8 +61,8 @@ def bm25_stats(docs: DataFrame, terms, text_col: str = "text",
     terms = list(dict.fromkeys(t.lower() for t in terms))
     spark = docs.sparkSession
     with cache_scope():
-        t = cache(docs.select(F.col(id_col),
-                              tokens_col(text_col).alias("toks")))
+        t = cache(docs.select(F.col("doc_id"),
+                              tokens_col("text").alias("toks")))
         consts = t.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.size("toks")).alias("total_tokens"),
@@ -75,10 +74,10 @@ def bm25_stats(docs: DataFrame, terms, text_col: str = "text",
         avgdl = total / n_docs
         tdf = spark.createDataFrame([(x,) for x in terms], "term string")
         df_rows = (
-            t.select(F.col(id_col), F.explode("toks").alias("term"))
+            t.select(F.col("doc_id"), F.explode("toks").alias("term"))
             .join(F.broadcast(tdf), "term")
             .groupBy("term")
-            .agg(F.count_distinct(id_col).alias("df"))
+            .agg(F.count_distinct("doc_id").alias("df"))
         )
         rows = {r["term"]: int(r["df"]) for r in df_rows.collect()}
     out = []
@@ -92,8 +91,7 @@ def bm25_stats(docs: DataFrame, terms, text_col: str = "text",
              "avgdl double")
 
 
-def bm25_topk(docs: DataFrame, stats: DataFrame, k: int = 10,
-              text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def bm25_topk(docs: DataFrame, stats: DataFrame, k: int = 10) -> DataFrame:
     """Top-k documents for the staged query-term stats: per (doc,
     term), ``contrib = idf * tf * (k1+1) / (tf + k1 * (1 - b + b * dl
     / avgdl))`` with idf = qidf/1e6 — a fixed expression tree over one
@@ -104,22 +102,22 @@ def bm25_topk(docs: DataFrame, stats: DataFrame, k: int = 10,
     rk)``, rk <= k by (score_q desc, doc_id).  Only documents matching
     at least one term appear."""
     t = docs.select(
-        F.col(id_col),
-        tokens_col(text_col).alias("toks"),
+        F.col("doc_id"),
+        tokens_col("text").alias("toks"),
     ).select(
-        id_col,
+        "doc_id",
         F.size("toks").cast("bigint").alias("dl"),
         F.explode("toks").alias("term"),
     )
     matched = t.join(F.broadcast(stats), "term")
     contrib = (
-        matched.groupBy(id_col, "term")
+        matched.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"),
              F.first("dl").alias("dl"),
              F.first("qidf").alias("qidf"),
              F.first("avgdl").alias("avgdl"))
         .select(
-            id_col,
+            "doc_id",
             F.floor(
                 (F.col("qidf").cast("double") / _Q)
                 * (F.col("tf").cast("double") * (K1 + 1.0)
@@ -137,13 +135,13 @@ def bm25_topk(docs: DataFrame, stats: DataFrame, k: int = 10,
     # hash group (any global top-k member is its group's top-k member
     # under the total (score_q desc, id) order), phase 2 ranks the
     # <= 64*k survivors.
-    w1 = Window.partitionBy("_g").orderBy(F.desc("score_q"), F.asc(id_col))
-    w2 = Window.orderBy(F.desc("score_q"), F.asc(id_col))
+    w1 = Window.partitionBy("_g").orderBy(F.desc("score_q"), F.asc("doc_id"))
+    w2 = Window.orderBy(F.desc("score_q"), F.asc("doc_id"))
     return (
-        contrib.groupBy(id_col)
+        contrib.groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_terms_matched"),
              F.sum("cq").cast("bigint").alias("score_q"))
-        .withColumn("_g", F.pmod(F.xxhash64(id_col), F.lit(64)))
+        .withColumn("_g", F.pmod(F.xxhash64("doc_id"), F.lit(64)))
         .withColumn("_r1", F.row_number().over(w1))
         .filter(F.col("_r1") <= k)
         .withColumn("score", F.col("score_q") / F.lit(float(_Q)))

@@ -88,9 +88,8 @@ def _pattern_expr(path_col) -> Column:
                     F.when(anchored, F.lit("$")).otherwise(F.lit("")))
 
 
-def parse_robots(robots: DataFrame, agent: str, host_col: str = "host",
-                 content_col: str = "content") -> DataFrame:
-    """robots.txt bodies -> rule rows for ``agent``.
+def parse_robots(robots: DataFrame, agent: str) -> DataFrame:
+    """robots.txt ``(host, content)`` rows -> rule rows for ``agent``.
 
     Output: ``host, allow (int 1/0), path (the raw spec), rule_len
     (its length — the RFC's specificity measure), pattern (the
@@ -100,8 +99,8 @@ def parse_robots(robots: DataFrame, agent: str, host_col: str = "host",
     """
     agent_l = agent.lower()
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.posexplode(F.split(F.col(content_col), "\n")).alias("ln", "raw"),
+        "host",
+        F.posexplode(F.split(F.col("content"), "\n")).alias("ln", "raw"),
     )
     cleaned = _strip(F.regexp_replace(F.col("raw"), "#.*", ""))
     d = lines.select(
@@ -151,8 +150,7 @@ def parse_robots(robots: DataFrame, agent: str, host_col: str = "host",
     )
 
 
-def robots_sitemaps(robots: DataFrame, host_col: str = "host",
-                    content_col: str = "content") -> DataFrame:
+def robots_sitemaps(robots: DataFrame) -> DataFrame:
     """Sitemap discovery — the other thing crawl pipelines read out of
     robots.txt (the sitemaps.org protocol's ``Sitemap:`` records,
     which RFC 9309 treats as group-INDEPENDENT: they apply regardless
@@ -160,8 +158,8 @@ def robots_sitemaps(robots: DataFrame, host_col: str = "host",
     per distinct ``(host, sitemap)``; the value keeps its case (urls).
     Pure projection: line explode + key filter, zero joins."""
     lines = robots.select(
-        F.col(host_col).alias("host"),
-        F.explode(F.split(F.col(content_col), "\n")).alias("raw"),
+        "host",
+        F.explode(F.split(F.col("content"), "\n")).alias("raw"),
     )
     cleaned = _strip(F.regexp_replace(F.col("raw"), "#.*", ""))
     key = F.lower(F.regexp_extract(cleaned, "^([A-Za-z-]+):", 1))
@@ -175,7 +173,6 @@ def robots_sitemaps(robots: DataFrame, host_col: str = "host",
 
 
 def robots_gate(pages: DataFrame, rules: DataFrame,
-                url_col: str = "url",
                 broadcast_rules: bool | None = None) -> DataFrame:
     """+ ``host``, ``allowed`` (boolean) per input row.
 
@@ -216,8 +213,8 @@ def robots_gate(pages: DataFrame, rules: DataFrame,
     elif broadcast_rules is False:
         per_host = per_host.hint("shuffle_hash")
     p = (
-        pages.withColumn("host", host_of(url_col))
-        .withColumn("_path", url_path(url_col))
+        pages.withColumn("host", host_of("url"))
+        .withColumn("_path", url_path("url"))
         .join(per_host, "host", "left")
     )
     best = F.expr("""

@@ -33,16 +33,18 @@ __all__ = ["hash_sample", "stratified_sample", "upsample_sources",
            "interleave_sources", "split_assign"]
 
 _SCALE = 1_000_000
+# contiguous hash ranges a decomposed prefix sum or rank splits into
+_GROUPS = 256
 
 
-def _bucket(id_col: str, seed: str) -> F.Column:
-    """Deterministic bucket in [0, 1e6) from (seed, doc id).  NB:
+def _bucket() -> F.Column:
+    """Deterministic bucket in [0, 1e6) from ('s0', doc id).  NB:
     ``concat`` (not ``concat_ws``) so a NULL id yields a NULL bucket
     and the row filters out — exactly what the DuckDB ``||`` oracle
     computes; concat_ws would silently skip the NULL and keep the
     row on the Spark side only."""
     return F.pmod(
-        portable_hash60(F.concat(F.lit(seed + "|"), F.col(id_col).cast("string"))),
+        portable_hash60(F.concat(F.lit("s0|"), F.col("doc_id").cast("string"))),
         F.lit(_SCALE),
     )
 
@@ -54,43 +56,39 @@ def _threshold(rate: float) -> int:
     return int(round(rate * _SCALE))
 
 
-def hash_sample(docs: DataFrame, rate: float, seed: str = "s0",
-                id_col: str = "doc_id") -> DataFrame:
+def hash_sample(docs: DataFrame, rate: float) -> DataFrame:
     """Keep a deterministic ``rate`` fraction: doc survives iff its
-    hash bucket < rate * 1e6.  Changing ``seed`` draws an independent
-    sample; the same seed always selects the same docs."""
-    return docs.filter(_bucket(id_col, seed) < _threshold(rate))
+    hash bucket < rate * 1e6, so a re-run selects the same docs."""
+    return docs.filter(_bucket() < _threshold(rate))
 
 
 def stratified_sample(docs: DataFrame, strata_col: str, rates: dict,
-                      default_rate: float = 0.0, seed: str = "s0",
-                      id_col: str = "doc_id") -> DataFrame:
+                      default_rate: float = 0.0) -> DataFrame:
     """Per-stratum hash sampling: ``rates`` maps stratum value ->
     fraction; unmapped strata use ``default_rate``."""
     thr = F.lit(_threshold(default_rate))
     for value, rate in sorted(rates.items()):
         thr = F.when(F.col(strata_col) == value,
                      F.lit(_threshold(rate))).otherwise(thr)
-    return docs.filter(_bucket(id_col, seed) < thr)
+    return docs.filter(_bucket() < thr)
 
 
-def upsample_sources(docs: DataFrame, epochs: dict, by: str = "source",
-                     seed: str = "s0", id_col: str = "doc_id") -> DataFrame:
+def upsample_sources(docs: DataFrame, epochs: dict) -> DataFrame:
     """Epoch repetition for mixture building — the published recipe
     when a mixture weight EXCEEDS a source's natural share (Gopher /
     Llama data tables: wikipedia x3 epochs, books x2.35, ...):
-    every doc of source ``s`` appears ``floor(epochs[s])`` times, plus
-    once more for a deterministic ``frac(epochs[s])`` share of docs
-    (hash-selected — the :func:`hash_sample` bucket, so the fractional
-    epoch is the same docs at any parallelism, and re-runs are
-    idempotent).  Sources absent from ``epochs`` are EXCLUDED (a
+    every doc whose ``source`` is ``s`` appears ``floor(epochs[s])``
+    times, plus once more for a deterministic ``frac(epochs[s])`` share
+    of docs (hash-selected — the :func:`hash_sample` bucket, so the
+    fractional epoch is the same docs at any parallelism, and re-runs
+    are idempotent).  Sources absent from ``epochs`` are EXCLUDED (a
     mixture spec enumerates its members — the ``interleave_sources``
     convention); an epoch of 0.4 repeats nothing but keeps a 40%
     sample.
 
     Output: the input columns plus ``epoch`` (int, 0-based copy
     index).  Downstream, ``interleave_sources``/``shuffle_order`` over
-    ``(id_col, epoch)`` spread the copies through the training order.
+    ``(doc_id, epoch)`` spread the copies through the training order.
 
     Plan shape: a single projection — per-source copy counts resolve
     to a CASE literal, the copy explode is ``explode(sequence(...))``
@@ -102,33 +100,32 @@ def upsample_sources(docs: DataFrame, epochs: dict, by: str = "source",
     for value, e in sorted(epochs.items()):
         if e < 0:
             raise ValueError(f"epochs[{value!r}] = {e}: must be >= 0")
-        full = F.when(F.col(by) == value, F.lit(int(e))).otherwise(full)
-        thr = F.when(F.col(by) == value,
+        full = F.when(F.col("source") == value, F.lit(int(e))).otherwise(full)
+        thr = F.when(F.col("source") == value,
                      F.lit(_threshold(e - int(e)))).otherwise(thr)
-    n = full + F.when(_bucket(id_col, seed) < thr, 1).otherwise(0)
+    n = full + F.when(_bucket() < thr, 1).otherwise(0)
     # sequence(0, -1) is a DESCENDING [0, -1], not empty (the
     # gram_positions gotcha) — guard the zero-copy case explicitly
     copies = F.when(n >= 1, F.sequence(F.lit(0), n - 1)) \
         .otherwise(F.array().cast("array<int>"))
-    return docs.filter(F.col(by).isin(list(epochs))) \
+    return docs.filter(F.col("source").isin(list(epochs))) \
         .withColumn("epoch", F.explode(copies))
 
 
-def token_budget(docs: DataFrame, budget_tokens: int, by: str = "source",
-                 text_col: str = "text", seed: str = "s0",
-                 id_col: str = "doc_id", groups: int = 256) -> DataFrame:
+def token_budget(docs: DataFrame, budget_tokens: int,
+                 by: str = "source") -> DataFrame:
     """Keep docs in deterministic hash order until each ``by`` group's
     running token total reaches ``budget_tokens``: a doc is kept iff
     the prefix sum *including it* is within budget — a pure prefix
-    cut, so the kept set is a deterministic function of (seed, budget)
+    cut, so the kept set is a deterministic function of the budget
     alone, independent of partitioning and engine.
 
     The prefix sum is DECOMPOSED exactly like
     :func:`token_budget_global` (VERDICT r3 item 3): a corpus that is
     40% one source must not serialize that source's running sum on one
-    window task.  Docs fall into ``groups`` contiguous hash ranges per
+    window task.  Docs fall into 256 contiguous hash ranges per
     source; a tiny per-(source, group) aggregate + a per-source window
-    over ``groups`` rows yields exclusive prefix offsets, which join
+    over 256 rows yields exclusive prefix offsets, which join
     back (broadcast — sources x groups rows; mixture specs name dozens
     of sources, not millions) so every (source, group) computes its own
     parallel within-group running sum.  Value-identical to the serial
@@ -137,12 +134,12 @@ def token_budget(docs: DataFrame, budget_tokens: int, by: str = "source",
     Output: ``doc_id, <by>, n_tokens, cum_tokens`` for kept docs.
     """
     t = docs.select(
-        id_col,
+        "doc_id",
         by,
-        F.size(tokens_col(text_col)).cast("bigint").alias("n_tokens"),
-        _bucket(id_col, seed).alias("_b"),
+        F.size(tokens_col("text")).cast("bigint").alias("n_tokens"),
+        _bucket().alias("_b"),
     ).filter(F.col("_b").isNotNull()) \
-        .withColumn("_g", F.floor(F.col("_b") * groups / _SCALE).cast("int"))
+        .withColumn("_g", F.floor(F.col("_b") * _GROUPS / _SCALE).cast("int"))
     # ^ a NULL id must be EXCLUDED, not sorted: Spark's window would
     # order it NULLS FIRST (consuming budget invisibly) while DuckDB
     # sorts NULLS LAST (its cum is still non-NULL, so it could even be
@@ -165,7 +162,7 @@ def token_budget(docs: DataFrame, budget_tokens: int, by: str = "source",
     ).select(F.col(by).alias("_pby"), F.col("_g").alias("_pg"), "prefix")
     wg = (
         Window.partitionBy(by, "_g")
-        .orderBy("_b", id_col)
+        .orderBy("_b", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # NB: deliberately the prefix-cut rule, not greedy first-fit —
@@ -184,18 +181,16 @@ def token_budget(docs: DataFrame, budget_tokens: int, by: str = "source",
     )
     return (
         cum.filter(F.col("cum_tokens") <= budget_tokens)
-        .select(id_col, by, "n_tokens", "cum_tokens")
+        .select("doc_id", by, "n_tokens", "cum_tokens")
     )
 
 
-def token_budget_global(docs: DataFrame, budget_tokens: int,
-                        text_col: str = "text", seed: str = "s0",
-                        id_col: str = "doc_id", groups: int = 256) -> DataFrame:
+def token_budget_global(docs: DataFrame, budget_tokens: int) -> DataFrame:
     """Corpus-wide token budget without a single-partition window.
 
     A naive global prefix cut would sort every doc in ONE window
     partition — a serial bottleneck at 10^12 docs.  Instead the
-    deterministic hash order is decomposed: docs fall into ``groups``
+    deterministic hash order is decomposed: docs fall into 256
     contiguous hash ranges; a tiny aggregate (one row per group)
     yields each group's token sum, a window over that 256-row table
     yields exclusive prefix offsets, and the offsets broadcast back so
@@ -207,28 +202,27 @@ def token_budget_global(docs: DataFrame, budget_tokens: int,
     Output: ``doc_id, n_tokens, cum_tokens`` for kept docs (prefix cut,
     same contract as :func:`token_budget`).
     """
-    cum = _global_cum(docs, text_col, seed, id_col, groups)
+    cum = _global_cum(docs)
     return (
         cum.filter(F.col("cum_tokens") <= budget_tokens)
-        .select(id_col, "n_tokens", "cum_tokens")
+        .select("doc_id", "n_tokens", "cum_tokens")
     )
 
 
-def _global_cum(docs: DataFrame, text_col: str, seed: str,
-                id_col: str, groups: int) -> DataFrame:
+def _global_cum(docs: DataFrame) -> DataFrame:
     """The decomposed corpus-wide running token sum shared by
     :func:`token_budget_global` and :func:`pack_sequences`:
-    ``(id_col, n_tokens, cum_tokens)`` where cum_tokens is the
+    ``(doc_id, n_tokens, cum_tokens)`` where cum_tokens is the
     inclusive prefix sum in the deterministic (hash, id) order,
     computed with NO single-partition window (256 contiguous hash
     ranges + a 256-row offset aggregate + parallel within-range
     windows)."""
     t = docs.select(
-        id_col,
-        F.size(tokens_col(text_col)).cast("bigint").alias("n_tokens"),
-        _bucket(id_col, seed).alias("_b"),
+        "doc_id",
+        F.size(tokens_col("text")).cast("bigint").alias("n_tokens"),
+        _bucket().alias("_b"),
     ).filter(F.col("_b").isNotNull()) \
-        .withColumn("_g", F.floor(F.col("_b") * groups / _SCALE).cast("int"))
+        .withColumn("_g", F.floor(F.col("_b") * _GROUPS / _SCALE).cast("int"))
     # NULL ids excluded for the same reason as token_budget (a NULL
     # group would land in every real group's prefix via NULLS FIRST).
     # The frame feeds BOTH the group aggregate and the window join —
@@ -245,7 +239,7 @@ def _global_cum(docs: DataFrame, text_col: str, seed: str,
     ).select("_g", "prefix")
     wg = (
         Window.partitionBy("_g")
-        .orderBy("_b", id_col)
+        .orderBy("_b", "doc_id")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
@@ -257,9 +251,7 @@ def _global_cum(docs: DataFrame, text_col: str, seed: str,
     )
 
 
-def pack_sequences(docs: DataFrame, seq_len: int,
-                   text_col: str = "text", seed: str = "s0",
-                   id_col: str = "doc_id", groups: int = 256) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int) -> DataFrame:
     """Greedy concatenation packing — the training-loader "example
     packing" step (concatenate docs, cut the token stream every
     ``seq_len``; T5/GPT-style, cf. Krell et al. 2021, public): each
@@ -274,27 +266,26 @@ def pack_sequences(docs: DataFrame, seq_len: int,
     partitionings, and engines.  A doc longer than ``seq_len`` spans
     packs (its continuation packs contain no starting doc); a
     zero-token doc sits at its neighbor's boundary and consumes no
-    width.  Output: ``(id_col, n_tokens, pack_id, pack_offset)``.
+    width.  Output: ``(doc_id, n_tokens, pack_id, pack_offset)``.
     Rows with NULL ids drop (no deterministic position exists)."""
-    cum = _global_cum(docs, text_col, seed, id_col, groups)
+    cum = _global_cum(docs)
     excl = F.col("cum_tokens") - F.col("n_tokens")
     return cum.select(
-        id_col, "n_tokens",
+        "doc_id", "n_tokens",
         F.floor(excl / seq_len).cast("bigint").alias("pack_id"),
         (excl % seq_len).cast("bigint").alias("pack_offset"),
     )
 
 
-def _hash_order(id_col: str, seed: str) -> F.Column:
+def _hash_order(seed: str) -> F.Column:
     """The full 60-bit deterministic order key (same hash family as
     :func:`_bucket`, unreduced — mod 1e6 would collide constantly at
     corpus scale and make ordering id-dominated)."""
     return portable_hash60(
-        F.concat(F.lit(seed + "|"), F.col(id_col).cast("string")))
+        F.concat(F.lit(seed + "|"), F.col("doc_id").cast("string")))
 
 
-def shuffle_order(docs: DataFrame, seed: str = "s0",
-                  id_col: str = "doc_id", groups: int = 256) -> DataFrame:
+def shuffle_order(docs: DataFrame, seed: str = "s0") -> DataFrame:
     """Deterministic GLOBAL shuffle position per document — the
     reproducible training-order primitive (epoch ordering must be
     replayable across runs, partitionings, and engines; ``rand()`` is
@@ -306,11 +297,11 @@ def shuffle_order(docs: DataFrame, seed: str = "s0",
     physical order: ``repartitionByRange('shuffle_pos')`` +
     ``sortWithinPartitions`` — a distributed total order, no serial
     sort.  Rows with NULL ids drop (no deterministic position exists).
-    Returns (``id_col``, shuffle_pos bigint)."""
-    t = docs.select(id_col, _hash_order(id_col, seed).alias("_h")) \
+    Returns (``doc_id``, shuffle_pos bigint)."""
+    t = docs.select("doc_id", _hash_order(seed).alias("_h")) \
         .filter(F.col("_h").isNotNull()) \
         .withColumn("_g",
-                    F.floor(F.col("_h") / ((1 << 60) // groups))
+                    F.floor(F.col("_h") / ((1 << 60) // _GROUPS))
                     .cast("int"))
     t = cache(t)
     gs = t.groupBy("_g").agg(F.count(F.lit(1)).alias("gn"))
@@ -321,19 +312,17 @@ def shuffle_order(docs: DataFrame, seed: str = "s0",
     pre = gs.withColumn(
         "prefix", (F.sum("gn").over(wp) - F.col("gn")).cast("bigint")
     ).select("_g", "prefix")
-    wg = Window.partitionBy("_g").orderBy("_h", id_col)
+    wg = Window.partitionBy("_g").orderBy("_h", "doc_id")
     return (
         t.join(F.broadcast(pre), "_g")
         .withColumn("shuffle_pos",
                     (F.col("prefix") + F.row_number().over(wg))
                     .cast("bigint"))
-        .select(id_col, "shuffle_pos")
+        .select("doc_id", "shuffle_pos")
     )
 
 
-def interleave_sources(docs: DataFrame, weights: dict, by: str = "source",
-                       seed: str = "s0", id_col: str = "doc_id",
-                       groups: int = 256) -> DataFrame:
+def interleave_sources(docs: DataFrame, weights: dict) -> DataFrame:
     """Deterministic weighted source interleave — the mixture-order
     primitive: each source's docs get a within-source shuffle position
     ``src_pos`` (decomposed per (source, hash-range) exactly like the
@@ -345,80 +334,58 @@ def interleave_sources(docs: DataFrame, weights: dict, by: str = "source",
     deterministic.  Sources ABSENT from ``weights`` are excluded (a
     mixture spec enumerates its members).  The division stays exact
     IEEE in both engines (bigint / double literal), so the oracle
-    reproduces emit_key bit-identically.  Returns (``id_col``, ``by``,
-    src_pos bigint, emit_key double)."""
+    reproduces emit_key bit-identically.  Returns (``doc_id``,
+    ``source``, src_pos bigint, emit_key double)."""
     wmap = F.create_map(*[F.lit(x) for kv in weights.items() for x in kv])
     t = docs.select(
-        id_col, by,
-        _hash_order(id_col, seed).alias("_h"),
-        wmap[F.col(by)].cast("double").alias("_w"),
+        "doc_id", "source",
+        _hash_order("s0").alias("_h"),
+        wmap[F.col("source")].cast("double").alias("_w"),
     ).filter(F.col("_h").isNotNull() & F.col("_w").isNotNull()) \
         .withColumn("_g",
-                    F.floor(F.col("_h") / ((1 << 60) // groups))
+                    F.floor(F.col("_h") / ((1 << 60) // _GROUPS))
                     .cast("int"))
     t = cache(t)
-    gs = t.groupBy(by, "_g").agg(F.count(F.lit(1)).alias("gn"))
+    gs = t.groupBy("source", "_g").agg(F.count(F.lit(1)).alias("gn"))
     wp = (
-        Window.partitionBy(by).orderBy("_g")
+        Window.partitionBy("source").orderBy("_g")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     pre = gs.withColumn(
         "prefix", (F.sum("gn").over(wp) - F.col("gn")).cast("bigint")
-    ).select(by, "_g", "prefix")
-    wg = Window.partitionBy(by, "_g").orderBy("_h", id_col)
+    ).select("source", "_g", "prefix")
+    wg = Window.partitionBy("source", "_g").orderBy("_h", "doc_id")
     return (
-        t.join(F.broadcast(pre), [by, "_g"])
+        t.join(F.broadcast(pre), ["source", "_g"])
         .withColumn("src_pos",
                     (F.col("prefix") + F.row_number().over(wg))
                     .cast("bigint"))
         .withColumn("emit_key", F.col("src_pos") / F.col("_w"))
-        .select(id_col, by, "src_pos", "emit_key")
+        .select("doc_id", "source", "src_pos", "emit_key")
     )
 
 
-def split_assign(docs: DataFrame, splits=None, seed: str = "s0",
-                 id_col: str = "doc_id") -> DataFrame:
+def split_assign(docs: DataFrame) -> DataFrame:
     """Deterministic train/validation/test assignment — every eval
     pipeline's first step: each doc gets the split whose cumulative
-    weight interval contains its hash bucket, so the assignment is a
-    pure function of (seed, id) — stable across runs, partitionings,
-    engines, and corpus GROWTH (a new doc never moves an old one, the
-    property a random split lacks).  ``splits``: ordered (name,
-    weight) pairs, weights summing to 1 (validated; thresholds use the
-    rounded-integer rule so the last split absorbs the rounding
-    remainder).  Returns input + ``split``.  Zero exchanges — a
-    scan-time projection at any scale.  Changing ``seed`` redraws
-    independently; use a different seed than any sampler gating the
-    same corpus or the split inherits that sampler's selection bias."""
-    splits = list(splits or (("train", 0.98), ("val", 0.01),
-                             ("test", 0.01)))
-    total = sum(w for _, w in splits)
-    if abs(total - 1.0) > 1e-9:
-        raise ValueError(f"split weights must sum to 1, got {total}")
-    if any(w <= 0 for _, w in splits):
-        # a negative weight sums to 1 just fine while scrambling every
-        # cumulative interval — reject the nonsensical spec loudly
-        raise ValueError(f"split weights must be positive, got {splits}")
+    weight interval (98/1/1) contains its hash bucket, so the
+    assignment is a pure function of the id — stable across runs,
+    partitionings, engines, and corpus GROWTH (a new doc never moves
+    an old one, the property a random split lacks).  Returns input +
+    ``split``.  Zero exchanges — a scan-time projection at any scale."""
     # the module's NULL-id convention (_bucket): a NULL id yields a
     # NULL bucket and the row FILTERS OUT — without this, the
     # when-chain's otherwise() would silently dump every undefined-
     # identity row into the last split
-    docs = docs.filter(F.col(id_col).isNotNull())
-    b = _bucket(id_col, seed)
-    cum = 0.0
-    expr = None
-    for name, w in splits[:-1]:
-        cum += w
-        cond = b < F.lit(_threshold(cum))
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    last = splits[-1][0]
-    expr = F.lit(last) if expr is None else expr.otherwise(last)
-    return docs.withColumn("split", expr)
+    b = _bucket()
+    return docs.filter(F.col("doc_id").isNotNull()).withColumn(
+        "split", F.when(b < _threshold(0.98), "train")
+        .when(b < _threshold(0.99), "val").otherwise("test"))
 
 
 def reservoir_sample(docs: DataFrame, k: int = 10, by: str = "lang",
                      id_col: str = "doc_id",
-                     seed: str = "s0", salt: int = 32) -> DataFrame:
+                     seed: str = "s0") -> DataFrame:
     """Deterministic fixed-SIZE sample per stratum — the batch analog
     of per-group reservoir sampling: rank every row by the portable
     hash of (seed, id) inside its stratum and keep the k smallest.
@@ -427,8 +394,8 @@ def reservoir_sample(docs: DataFrame, k: int = 10, by: str = "lang",
     and changing ``seed`` draws an independent sample.
 
     Two-level decomposed rank (the host_cap recipe): phase 1 ranks
-    within (stratum, salt-of-hash) so a Zipf mega-stratum never sorts
-    on one task; phase 2 ranks the <= salt*k survivors.  A stratum's k
+    within (stratum, hash mod 32) so a Zipf mega-stratum never sorts
+    on one task; phase 2 ranks the <= 32*k survivors.  A stratum's k
     hash-smallest rows all survive phase 1 (each is hash-smallest
     within its own salt too), so the result is value-identical to the
     single-window form — which is the DuckDB-oracle formulation.
@@ -441,7 +408,7 @@ def reservoir_sample(docs: DataFrame, k: int = 10, by: str = "lang",
     w2 = Window.partitionBy(by).orderBy(F.asc("_h"), F.asc(id_col))
     return (
         docs.withColumn("_h", h)
-        .withColumn("_salt", F.pmod(F.col("_h"), F.lit(salt)))
+        .withColumn("_salt", F.pmod(F.col("_h"), F.lit(32)))
         .withColumn("_rk1", F.row_number().over(w1))
         .filter(F.col("_rk1") <= k)
         .withColumn("rk", F.row_number().over(w2).cast("bigint"))

@@ -506,28 +506,28 @@ PQ_M = 8          # subspaces
 PQ_KSUB = 16      # codes per subspace
 
 
-def train_pq_codebooks(emb: DataFrame, m: int = PQ_M, ksub: int = PQ_KSUB,
-                       iters: int = 5):
-    """Lloyd per subspace, all M subspaces per distributed job: one
+def train_pq_codebooks(emb: DataFrame, iters: int = 5):
+    """Lloyd per subspace, all ``PQ_M`` subspaces per distributed job: one
     Arrow argmin assignment (codes array per row) + ONE groupBy
     (subspace, code) mean per iteration — 2 jobs x iters regardless of
-    M.  Init = the sub-vectors of the ksub lowest vec_ids (seed-free,
-    the train_ivf_centroids convention; their width is dim).  Returns a
-    (m, ksub, dim/m) float64 array.  Same determinism contract as
-    train_ivf_centroids: the means are partition-order floats, so the
+    M.  Init = the sub-vectors of the ``PQ_KSUB`` lowest vec_ids
+    (seed-free, the train_ivf_centroids convention; their width is
+    dim).  Returns a (PQ_M, PQ_KSUB, dim/PQ_M) float64 array.  Same
+    determinism contract as train_ivf_centroids: the means are
+    partition-order floats, so the
     TRAINED table is the reproducibility boundary — stage it, and
     everything downstream is bit-identical.  At 10^12 rows train on a
     sample (the published practice); encoding still sees every row."""
     import numpy as np
 
     init = (
-        emb.orderBy("vec_id").limit(ksub)
+        emb.orderBy("vec_id").limit(PQ_KSUB)
         .select("embedding").collect()
     )
-    dsub = len(init[0]["embedding"]) // m
+    dsub = len(init[0]["embedding"]) // PQ_M
     cb = np.asarray(
         [[list(r["embedding"])[s * dsub:(s + 1) * dsub] for r in init]
-         for s in range(m)], dtype=np.float64)        # (m, ksub, dsub)
+         for s in range(PQ_M)], dtype=np.float64)     # (m, ksub, dsub)
     e = emb.select(
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),

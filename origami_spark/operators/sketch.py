@@ -97,8 +97,7 @@ def _kmv_estimate_col(k: int):
 
 
 def kmv_distinct(df: DataFrame, col: str, k: int = 256,
-                 by: list[str] | None = None,
-                 groups: int = 64) -> DataFrame:
+                 by: list[str] | None = None) -> DataFrame:
     """K-minimum-values distinct-count estimate per group.
 
     Hash every value with the portable 60-bit hash, keep the ``k``
@@ -114,16 +113,16 @@ def kmv_distinct(df: DataFrame, col: str, k: int = 256,
     aggregation bounds the shuffle by per-partition vocabulary), hash
     only the survivors, then re-distinct the ≤-vocabulary hash relation
     (hash collisions must still merge for bit-exactness) and run the
-    decomposed two-level top-k — rank inside ``pmod(hash, groups)``
+    decomposed two-level top-k — rank inside ``pmod(hash, 64)``
     sub-groups first (any global top-k member is its sub-group's top-k
     member under the total hash order), so the final per-group rank
-    sees ≤ groups·k rows.  No single task ever sorts a whole group.
+    sees ≤ 64·k rows.  No single task ever sorts a whole group.
     Hashing after the distinct runs the md5 per vocabulary entry, not
     per occurrence — measured 2.5x on a 2.7M-occurrence corpus.
     """
     by = list(by or [])
     vals = _kmv_vals(df, col, by)
-    return _kmv_finalize(_kmv_topk(vals, k, by, groups), k, by)
+    return _kmv_finalize(_kmv_topk(vals, k, by), k, by)
 
 
 def _kmv_vals(df: DataFrame, col: str, by: list[str]) -> DataFrame:
@@ -136,12 +135,11 @@ def _kmv_vals(df: DataFrame, col: str, by: list[str]) -> DataFrame:
     )
 
 
-def _kmv_topk(vals: DataFrame, k: int, by: list[str],
-              groups: int) -> DataFrame:
+def _kmv_topk(vals: DataFrame, k: int, by: list[str]) -> DataFrame:
     """Keep the k smallest hashes per group from a distinct ``(by...,
-    h)`` relation, via the decomposed two-level rank (no task sorts a
-    whole group)."""
-    sub = F.pmod(F.col("h"), F.lit(groups))
+    h)`` relation, via the decomposed two-level rank over 64 hash
+    sub-groups (no task sorts a whole group)."""
+    sub = F.pmod(F.col("h"), F.lit(64))
     w1 = Window.partitionBy(*by, "_g").orderBy(F.asc("h"))
     w2 = Window.partitionBy(*by).orderBy(F.asc("h"))
     return (
@@ -172,8 +170,7 @@ def _kmv_finalize(kept: DataFrame, k: int, by: list[str]) -> DataFrame:
 
 
 def kmv_build(df: DataFrame, col: str, k: int = 256,
-              by: list[str] | None = None,
-              groups: int = 64) -> DataFrame:
+              by: list[str] | None = None) -> DataFrame:
     """Build the persistable KMV *signature*: the k smallest distinct
     hashes per group, as a ``(by..., h)`` relation (≤ k rows/group).
 
@@ -183,12 +180,11 @@ def kmv_build(df: DataFrame, col: str, k: int = 256,
     persisted-index pattern as dedup.digest_index.
     """
     by = list(by or [])
-    return _kmv_topk(_kmv_vals(df, col, by), k, by, groups)
+    return _kmv_topk(_kmv_vals(df, col, by), k, by)
 
 
 def kmv_merge(sigs: list[DataFrame], k: int = 256,
-              by: list[str] | None = None,
-              groups: int = 64) -> DataFrame:
+              by: list[str] | None = None) -> DataFrame:
     """Merge KMV signatures and estimate: union → distinct → keep the
     k smallest per group → the same estimator as :func:`kmv_distinct`.
 
@@ -198,7 +194,7 @@ def kmv_merge(sigs: list[DataFrame], k: int = 256,
     top-k — so ``kmv_merge(map(kmv_build, shards)) ==
     kmv_distinct(union(shards))`` exactly, not approximately.  That
     associativity is what makes the sketch distributable: shards never
-    exchange raw values, only ≤ k·groups hashes each.
+    exchange raw values, only ≤ k hashes per group each.
 
     Precondition: ``k`` must be ≤ the smallest k the signatures were
     BUILT with (a signature carries no k metadata).  Merging DOWN
@@ -215,14 +211,13 @@ def kmv_merge(sigs: list[DataFrame], k: int = 256,
     for s in sigs[1:]:
         u = u.unionByName(s)
     vals = u.select(*by, "h").distinct()
-    return _kmv_finalize(_kmv_topk(vals, k, by, groups), k, by)
+    return _kmv_finalize(_kmv_topk(vals, k, by), k, by)
 
 
-def kmv_set_ops(sig_a: DataFrame, sig_b: DataFrame, k: int = 256,
-                by: list[str] | None = None,
-                groups: int = 64) -> DataFrame:
+def kmv_set_ops(sig_a: DataFrame, sig_b: DataFrame) -> DataFrame:
     """Set-operation estimates from two KMV signatures (Beyer et al.,
-    SIGMOD 2007 §4): take the k smallest distinct hashes of the union;
+    SIGMOD 2007 §4): take the k = 256 smallest distinct hashes of the
+    union;
     of those, count ``n_both`` present in BOTH signatures.  Then
 
     * ``est_union``        — the standard KMV estimator over the union
@@ -235,34 +230,32 @@ def kmv_set_ops(sig_a: DataFrame, sig_b: DataFrame, k: int = 256,
     This answers "how much vocabulary do two crawls share?" from two
     ≤ k-row signatures — no corpus join, no re-scan; the signatures
     are the same persistable state :func:`kmv_build` emits for
-    :func:`kmv_merge`, under the same precondition: ``k`` ≤ the
+    :func:`kmv_merge`, under the same precondition: 256 ≤ the
     smallest build k.  Portability: counts and the intersection
     estimate are integer arithmetic; ``jaccard`` is one IEEE division
     of two exactly-representable integers — bit-identical in DuckDB.
 
-    Output: ``by..., n_kept, kth_hash, est_union, n_both,
+    Output: ``n_kept, kth_hash, est_union, n_both,
     est_intersection (BIGINT), jaccard (DOUBLE)``.
     """
-    by = list(by or [])
-    a = sig_a.select(*by, "h").distinct().withColumn("_a", F.lit(1))
-    b = sig_b.select(*by, "h").distinct().withColumn("_b", F.lit(1))
-    u = a.join(b, [*by, "h"], "full_outer").select(
-        *by, "h",
+    a = sig_a.select("h").distinct().withColumn("_a", F.lit(1))
+    b = sig_b.select("h").distinct().withColumn("_b", F.lit(1))
+    u = a.join(b, "h", "full_outer").select(
+        "h",
         F.coalesce(F.col("_a"), F.lit(0)).alias("_a"),
         F.coalesce(F.col("_b"), F.lit(0)).alias("_b"),
     )
-    return _kmv_setops_finalize(u, k, by, groups)
+    return _kmv_setops_finalize(u, 256)
 
 
 def kmv_set_ops_grouped(sig: DataFrame, side_col: str, a_val, b_val,
-                        k: int = 256, by: list[str] | None = None,
-                        groups: int = 64) -> DataFrame:
+                        k: int = 256) -> DataFrame:
     """:func:`kmv_set_ops` from ONE grouped signature relation —
     ``kmv_build(..., by=[side_col])`` computes BOTH sides' signatures
     in a single corpus pass, and this derives the membership flags by
     grouping on ``h`` instead of a two-relation join.
 
-    Value-identical to ``kmv_set_ops(sig.filter(side=a),
+    Value-identical at k = 256 to ``kmv_set_ops(sig.filter(side=a),
     sig.filter(side=b))`` (within the union's k smallest, membership
     in a side's top-k equals membership in the side: the union's kth
     hash is <= each side's kth), but the two-filter form scans the
@@ -274,24 +267,21 @@ def kmv_set_ops_grouped(sig: DataFrame, side_col: str, a_val, b_val,
     without the filter their hashes would enter the union top-k with
     both flags 0 and deflate every estimate.
     """
-    by = list(by or [])
     sig = sig.filter(F.col(side_col).isin(a_val, b_val))
-    u = sig.groupBy(*by, "h").agg(
+    u = sig.groupBy("h").agg(
         F.max(F.when(F.col(side_col) == a_val, 1).otherwise(0))
         .alias("_a"),
         F.max(F.when(F.col(side_col) == b_val, 1).otherwise(0))
         .alias("_b"),
     )
-    return _kmv_setops_finalize(u, k, by, groups)
+    return _kmv_setops_finalize(u, k)
 
 
-def _kmv_setops_finalize(u: DataFrame, k: int, by: list[str],
-                         groups: int) -> DataFrame:
+def _kmv_setops_finalize(u: DataFrame, k: int) -> DataFrame:
     """Shared tail: union top-k over the flagged hash relation, then
     the integer/one-IEEE-division estimate arithmetic."""
-    kept = _kmv_topk(u.select(*by, "h"), k, by, groups).join(
-        u, [*by, "h"])
-    agg = kept.groupBy(*by).agg(
+    kept = _kmv_topk(u.select("h"), k, []).join(u, "h")
+    agg = kept.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_kept"),
         F.max("h").cast("bigint").alias("kth_hash"),
         F.sum((F.col("_a") * F.col("_b")).cast("bigint"))
@@ -302,10 +292,10 @@ def _kmv_setops_finalize(u: DataFrame, k: int, by: list[str],
         .otherwise(_kmv_estimate_col(k))
         .cast("bigint")
     )
-    out = agg.select(*by, "n_kept", "kth_hash",
+    out = agg.select("n_kept", "kth_hash",
                      est_union.alias("est_union"), "n_both")
     return out.select(
-        *by, "n_kept", "kth_hash", "est_union", "n_both",
+        "n_kept", "kth_hash", "est_union", "n_both",
         F.expr("(n_both * est_union) div n_kept")
         .cast("bigint").alias("est_intersection"),
         (F.col("n_both").cast("double")
@@ -335,17 +325,15 @@ def bloom_merge(blooms: list[DataFrame]) -> DataFrame:
     return u.select("pos").distinct()
 
 
-def hist_merge(hists: list[DataFrame],
-               by: list[str] | None = None) -> DataFrame:
+def hist_merge(hists: list[DataFrame]) -> DataFrame:
     """Union of equi-width histograms (same lo/hi/bins) = per-bin
     count sum; merged histogram ≡ histogram of the concatenated input,
     so :func:`hist_quantile` over the merge carries the same ≤ one-bin
     error bound."""
-    by = list(by or [])
     u = hists[0]
     for h in hists[1:]:
         u = u.unionByName(h)
-    return (u.groupBy(*by, "bin")
+    return (u.groupBy("bin")
             .agg(F.sum("cnt").cast("bigint").alias("cnt")))
 
 
@@ -447,34 +435,32 @@ def bloom_build(df: DataFrame, col: str, m: int = 8192,
 
 
 def bloom_probe(bloom: DataFrame, df: DataFrame, col: str,
-                m: int = 8192, d: int = 5,
-                keep_cols: list[str] | None = None) -> DataFrame:
+                m: int = 8192, d: int = 5) -> DataFrame:
     """Membership probe: a candidate is a member iff ALL d of its bit
     positions are set.  No false negatives (every inserted key probes
     the exact positions it set); false positives at the classic
     ``(1 - e^{-dn/m})^d`` rate, measured in the tests.
 
-    Output: ``keep_cols..., item, is_member`` (is_member BIGINT 0/1 —
+    Output: ``item, is_member`` (is_member BIGINT 0/1 —
     integer for gate-hash portability).
 
     The bloom relation is broadcast; the candidate side incurs one
     groupBy on its own key only.
     """
-    keep_cols = list(keep_cols or [])
     idx = F.array(*[F.lit(i) for i in range(d)])
     probes = (
-        df.select(*keep_cols, F.col(col).alias("item"))
-        .select(*keep_cols, "item", F.explode(idx).alias("i"))
-        .select(*keep_cols, "item",
+        df.select(F.col(col).alias("item"))
+        .select("item", F.explode(idx).alias("i"))
+        .select("item",
                 _bloom_pos(F.col("item"), F.col("i"), m).alias("pos"))
     )
     marked = probes.join(
         F.broadcast(bloom.select("pos").withColumn("_set", F.lit(1))),
         "pos", "left")
     return (
-        marked.groupBy(*keep_cols, "item")
+        marked.groupBy("item")
         .agg(F.sum(F.coalesce(F.col("_set"), F.lit(0))).alias("_hits"))
-        .select(*keep_cols, "item",
+        .select("item",
                 (F.col("_hits") == d).cast("bigint").alias("is_member"))
     )
 
@@ -551,16 +537,16 @@ def hist_quantile(hist: DataFrame, q_num: int, q_den: int,
 
 
 def countmin_topk(sketch: DataFrame, items: DataFrame, col: str,
-                  k: int = 10, width: int = 1024, depth: int = 4,
-                  salt: int = 32) -> DataFrame:
+                  k: int = 10, width: int = 1024, depth: int = 4) -> DataFrame:
     """Heavy hitters from a count-min sketch: estimate every candidate
     item (:func:`countmin_estimate` — sketch broadcast, probe side
     groupBy bounded by the candidate set) and keep the global top-k by
     (estimate DESC, item ASC).
 
     The rank is the two-level decomposed top-k (the host_cap recipe):
-    phase 1 ranks within a hash-salt of the item so no task ever sorts
-    the full candidate set; phase 2 ranks the <= salt*k survivors.
+    phase 1 ranks within one of 32 hash salts of the item so no task
+    ever sorts the full candidate set; phase 2 ranks the <= 32*k
+    survivors.
     CM guarantees est >= true count, so every true heavy hitter whose
     count clears the epsilon-N noise floor survives — the candidate
     set can be the full distinct-item relation at any corpus size.
@@ -574,7 +560,7 @@ def countmin_topk(sketch: DataFrame, items: DataFrame, col: str,
         est.withColumn(
             "_salt",
             F.pmod(portable_hash60(F.concat(F.lit("hh|"), F.col("item"))),
-                   F.lit(salt)))
+                   F.lit(32)))
         .withColumn("_rk1", F.row_number().over(w1))
         .filter(F.col("_rk1") <= k)
         .withColumn("rk", F.row_number().over(w2).cast("bigint"))

@@ -197,11 +197,11 @@ def lang_id(docs: DataFrame) -> DataFrame:
                     best.cast("bigint").alias("best_score"))
 
 
-def fingerprint(docs: DataFrame, n: int = 3) -> DataFrame:
+def fingerprint(docs: DataFrame) -> DataFrame:
     """Winnowing-lite document fingerprint: min portable hash over
-    word n-gram shingles (rolling-hash analog, deterministic)."""
+    word 3-gram shingles (rolling-hash analog, deterministic)."""
     t = docs.select("doc_id", tokens_col().alias("toks"))
-    sh = t.select("doc_id", shingles_expr("toks", n).alias("shingles"))
+    sh = t.select("doc_id", shingles_expr("toks", 3).alias("shingles"))
     hashed = sh.select(
         "doc_id",
         F.transform("shingles",
@@ -272,8 +272,7 @@ def sentences_col(text_col: str = "text"):
     )
 
 
-def split_sentences(docs: DataFrame, text_col: str = "text",
-                    id_col: str = "doc_id") -> DataFrame:
+def split_sentences(docs: DataFrame) -> DataFrame:
     """Deterministic sentence segmentation — the grain between
     documents (dedup, LM gates) and tokens (BPE, stats): sentence
     corpora for alignment-style training, sentence-level dedup, and
@@ -290,18 +289,16 @@ def split_sentences(docs: DataFrame, text_col: str = "text",
     one regexp pass + posexplode, zero exchanges at any corpus size.
     NULL-id rows drop (the sampling-module convention).
     """
-    arr = sentences_col(text_col)
+    arr = sentences_col("text")
     return (
-        docs.filter(F.col(id_col).isNotNull())
-        .select(F.col(id_col).alias("doc_id"),
-                F.posexplode(arr).alias("sent_id", "sentence"))
+        docs.filter(F.col("doc_id").isNotNull())
+        .select("doc_id", F.posexplode(arr).alias("sent_id", "sentence"))
         .select("doc_id", F.col("sent_id").cast("int").alias("sent_id"),
                 "sentence")
     )
 
 
-def readability(docs: DataFrame, text_col: str = "text",
-                id_col: str = "doc_id") -> DataFrame:
+def readability(docs: DataFrame) -> DataFrame:
     """Flesch-Kincaid grade level (Kincaid et al. 1975 — the classic
     readability signal corpus-quality recipes bin on):
     ``0.39 * words/sentences + 11.8 * syllables/words - 15.59``.
@@ -319,8 +316,8 @@ def readability(docs: DataFrame, text_col: str = "text",
     Output: ``(doc_id, n_words, n_sentences, n_syllables,
     fk_grade)``.  Pure projection: zero exchanges at any scale.
     """
-    toks = tokens_col(text_col)
-    sents = sentences_col(text_col)
+    toks = tokens_col("text")
+    sents = sentences_col("text")
     syl = F.aggregate(
         toks,
         F.lit(0).cast("bigint"),
@@ -330,7 +327,7 @@ def readability(docs: DataFrame, text_col: str = "text",
         ),
     )
     base = docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.size(toks).cast("bigint").alias("n_words"),
         F.size(sents).cast("bigint").alias("n_sentences"),
         syl.alias("n_syllables"),
@@ -349,17 +346,15 @@ def readability(docs: DataFrame, text_col: str = "text",
     )
 
 
-def phrase_scores(docs: DataFrame, min_count: int = 3,
-                  delta: int = 1, scale: int = 1_000_000,
-                  text_col: str = "text") -> DataFrame:
+def phrase_scores(docs: DataFrame, min_count: int = 3) -> DataFrame:
     """Count-based collocation mining — the word2vec phrase-detection
     score (Mikolov et al. 2013, "Distributed Representations of Words
     and Phrases", section 4; the gensim Phrases default):
 
         score(a, b) = (count(ab) - delta) * V / (count(a) * count(b))
 
-    with V = vocabulary size, computed here as the INTEGER
-    ``floor((c_ab - delta) * V * scale / (c_a * c_b))`` so the result
+    with V = vocabulary size and delta = 1, computed here as the INTEGER
+    ``floor((c_ab - 1) * V * 10^6 / (c_a * c_b))`` so the result
     is partition- and engine-exact (the score is count arithmetic —
     no libm — which is exactly why this detector suits a cross-engine
     gate better than PMI).  Pairs scoring above a caller threshold
@@ -378,13 +373,13 @@ def phrase_scores(docs: DataFrame, min_count: int = 3,
     hit the one floor-vs-truncate divergence between Spark's ``div``
     and DuckDB's ``//`` (everywhere else this repo divides positives).
     """
-    if min_count <= delta:
+    if min_count <= 1:
         raise ValueError(
-            f"min_count ({min_count}) must be > delta ({delta}): "
+            f"min_count ({min_count}) must be > delta (1): "
             "a negative score numerator is engine-divergent (div "
             "truncates, // floors) and a pair at or below the "
             "discount carries no signal anyway")
-    toks = docs.select(tokens_col(text_col).alias("t"))
+    toks = docs.select(tokens_col("text").alias("t"))
     uni = (
         toks.select(F.explode("t").alias("w"))
         .groupBy("w").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
@@ -414,21 +409,19 @@ def phrase_scores(docs: DataFrame, min_count: int = 3,
         .crossJoin(F.broadcast(vocab))
         .select(
             "w1", "w2", "c_ab",
-            F.expr(f"((c_ab - {delta}) * v * {scale}L) div (c1 * c2)")
+            F.expr("((c_ab - 1) * v * 1000000L) div (c1 * c2)")
             .cast("bigint").alias("score_q"),
         )
     )
 
 
-def tfidf_topk(docs: DataFrame, k: int = 5,
-               text_col: str = "text",
-               id_col: str = "doc_id") -> DataFrame:
+def tfidf_topk(docs: DataFrame, k: int = 5) -> DataFrame:
     """Per-document top-k TF-IDF terms — the classic keyword/feature
     extractor a curation pipeline runs before retrieval or clustering
     (the raw-count TF x smoothed IDF of the standard formulation,
     idf = ln((N + 1) / (df + 1)) + 1, scikit-learn's smooth_idf).
 
-    Output: ``(id_col, term, tf, score, rk)`` with ``score`` quantized
+    Output: ``(doc_id, term, tf, score, rk)`` with ``score`` quantized
     via the portable floor(x * 1e4 + 0.5) / 1e4 (the readability
     recipe) BEFORE ranking, so rank ties break identically in both
     engines ((score DESC, term ASC) on the quantized value).
@@ -439,9 +432,8 @@ def tfidf_topk(docs: DataFrame, k: int = 5,
     as a broadcast literal row, and a per-document window top-k whose
     partitions are bounded by a document's distinct terms."""
     tf = (
-        docs.select(F.col(id_col), F.explode(tokens_col(text_col))
-                    .alias("term"))
-        .groupBy(id_col, "term")
+        docs.select("doc_id", F.explode(tokens_col("text")).alias("term"))
+        .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     )
     df_t = tf.groupBy("term").agg(
@@ -456,11 +448,11 @@ def tfidf_topk(docs: DataFrame, k: int = 5,
         tf.join(df_t, "term")
         .crossJoin(F.broadcast(n_docs))
         .select(
-            id_col, "term", "tf",
+            "doc_id", "term", "tf",
             (F.floor(raw * 1e4 + F.lit(0.5)) / 1e4).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("score"), F.asc("term"))
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("bigint"))

@@ -64,10 +64,10 @@ def domain_suffixes(host_col) -> Column:
 
 
 def url_blocklist(pages: DataFrame, domains: DataFrame,
-                  terms: DataFrame, url_col: str = "url") -> DataFrame:
+                  terms: DataFrame) -> DataFrame:
     """Label every page against a URL blocklist.
 
-    ``pages`` needs ``doc_id`` and ``url_col``; ``domains`` one
+    ``pages`` needs ``doc_id`` and ``url``; ``domains`` one
     ``domain`` column (blocks the host and all subdomains); ``terms``
     one ``term`` column (blocks urls containing it, case-insensitive).
     Rule lists are canonicalized defensively: lower-cased (hosts are
@@ -80,8 +80,8 @@ def url_blocklist(pages: DataFrame, domains: DataFrame,
     Keep = ``filter(~blocked)`` downstream; the labeled form is kept so
     reject reasons can be audited, as in operators/clean.gopher_gate."""
     base = pages.select(
-        "doc_id", F.col(url_col).alias("url"),
-        host_of(url_col).alias("host"))
+        "doc_id", "url",
+        host_of("url").alias("host"))
     # no .distinct() on the rule lists: duplicate entries only produce
     # duplicate match rows, which the min-reason groupBy collapses —
     # and a distinct here would add a rule-list shuffle to the plan

@@ -28,13 +28,8 @@ from .operators import order as order_op
 from .plans.runner import run_stage
 
 
-def parse_stage(pages: DataFrame, partitions: int | None = None,
-                char_maps: bool = False) -> DataFrame:
+def parse_stage(pages: DataFrame, partitions: int | None = None) -> DataFrame:
     """S1+S2: pages -> exploded block rows.
-
-    ``char_maps=True`` adds the opt-in ``line_char_maps`` column (per
-    line, normalized-char-pos -> raw byte offset — the char-granularity
-    dewarp map; see kernels/parse.py).
 
     The explicit url-hash repartition before the kernel is the SURVEY §4
     physical plan's one-shuffle-per-stage: it (a) balances documents
@@ -46,11 +41,6 @@ def parse_stage(pages: DataFrame, partitions: int | None = None,
     is bounded by the Arrow max-records batch knob in session.py."""
     src = pages.select("url", "html")
     n = partitions or src.sparkSession.sparkContext.defaultParallelism * 4
-    if char_maps:
-        from .kernels.parse import CHARMAP_BLOCKS_SCHEMA, parse_blocks_charmaps
-
-        return src.repartition(n, "url").mapInPandas(
-            parse_blocks_charmaps, schema=CHARMAP_BLOCKS_SCHEMA)
     return src.repartition(n, "url").mapInPandas(parse_blocks, schema=BLOCKS_SCHEMA)
 
 

@@ -110,15 +110,15 @@ def evaluate_cer(extracted: DataFrame, truth: DataFrame) -> DataFrame:
     )
 
 
-def track_changes(new: DataFrame, old: DataFrame, key: str = "url",
-                  payload: str = "text") -> DataFrame:
-    """Recompute-diff two snapshots: per-key status changed/checked/new/
-    gone (TrackChangeWriter's .changed/.checked markers, io.py:419-475)."""
-    n = new.select(F.col(key).alias("k"), F.sha2(F.col(payload), 256).alias("nh"))
-    o = old.select(F.col(key).alias("k"), F.sha2(F.col(payload), 256).alias("oh"))
+def track_changes(new: DataFrame, old: DataFrame) -> DataFrame:
+    """Recompute-diff two snapshots: per-url status changed/checked/new/
+    gone of the ``text`` (TrackChangeWriter's .changed/.checked markers,
+    io.py:419-475)."""
+    n = new.select(F.col("url").alias("k"), F.sha2(F.col("text"), 256).alias("nh"))
+    o = old.select(F.col("url").alias("k"), F.sha2(F.col("text"), 256).alias("oh"))
     j = n.join(o, "k", "full")
     return j.select(
-        F.col("k").alias(key),
+        F.col("k").alias("url"),
         F.when(F.col("nh").isNull(), "gone")
         .when(F.col("oh").isNull(), "new")
         .when(F.col("nh") == F.col("oh"), "checked")

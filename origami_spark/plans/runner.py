@@ -42,14 +42,13 @@ def run_stage(
     src: DataFrame,
     build,
     work_dir: str,
-    key: str = "url",
     run_id: str | None = None,
 ) -> DataFrame:
     """Run one pipeline stage with resume + lineage; return the full
     committed stage table (previous snapshots + this run's appends).
 
     `build`: DataFrame -> DataFrame (kernels and/or relational ops).
-    Only rows whose `key` is not yet committed are computed (anti-join
+    Only rows whose `url` is not yet committed are computed (anti-join
     resume); the transform result is appended as plain parquet and
     committed through the snapshot manifest, the stage's only reader:
     the returned frame reads exactly the head version's files, whatever
@@ -86,8 +85,8 @@ def run_stage(
         # uncommitted, so the full src recomputes.
         if snapshots(work_dir, name):
             committed = read_snapshot(spark, work_dir, name)
-            done = committed.select(key).distinct()
-            todo = src.join(done, key, "left_anti")
+            done = committed.select("url").distinct()
+            todo = src.join(done, "url", "left_anti")
             if todo.isEmpty():  # fully resumed: nothing to commit
                 return committed
 
@@ -123,7 +122,7 @@ def run_stage(
                     .groupBy("_part_id")
                     .agg(
                         F.count(F.lit(1)).alias("doc_count"),
-                        F.expr(f"bit_xor(xxhash64({key}))").alias("digest"),
+                        F.expr("bit_xor(xxhash64(url))").alias("digest"),
                     )
                     .select(
                         F.lit(name).alias("stage"),
@@ -208,15 +207,12 @@ def cleanup_incomplete(work_dir: str) -> list:
     return removed
 
 
-def sample_stage(spark: SparkSession, work_dir: str, stage: str,
-                 fraction: float = 0.01, seed: int = 42) -> DataFrame:
-    """Deterministic sample of a stage's committed rows for eyeballing
+def sample_stage(spark: SparkSession, work_dir: str, stage: str) -> DataFrame:
+    """Deterministic 1% sample of a stage's committed rows for eyeballing
     (the `sample` export analog, ``batch/utils/sample.py``)."""
     from .snapshots import read_snapshot
 
-    return read_snapshot(spark, work_dir, stage).sample(
-        fraction=fraction, seed=seed
-    )
+    return read_snapshot(spark, work_dir, stage).sample(fraction=0.01, seed=42)
 
 
 def lineage_stats(spark: SparkSession, work_dir: str) -> DataFrame:
@@ -231,16 +227,13 @@ def lineage_stats(spark: SparkSession, work_dir: str) -> DataFrame:
     )
 
 
-def compact_stage(spark: SparkSession, work_dir: str, name: str,
-                  target_files: int = 1, reclaim: bool = False) -> dict:
+def compact_stage(spark: SparkSession, work_dir: str, name: str) -> dict:
     """Small-file compaction for a committed stage (the Iceberg
     rewrite-data-files analog): read the latest snapshot, rewrite it as
-    ``target_files`` larger parquet files in the same directory, and
-    commit the result as a REWRITE snapshot.  The new head serves reads
-    from the compacted files; every older version still time-travels
-    over the original files until ``expire_snapshots`` + ``vacuum_stage``
-    reclaim them — pass ``reclaim=True`` to do both immediately
-    (trading time travel for space).
+    one parquet file in the same directory, and commit the result as a
+    REWRITE snapshot.  The new head serves reads from the compacted
+    file; every older version still time-travels over the original
+    files until ``expire_snapshots`` + ``vacuum_stage`` reclaim them.
 
     At 10^5 partitions a long-appended stage accretes one small file
     per partition per run; reads then pay per-file open cost and the
@@ -266,12 +259,6 @@ def compact_stage(spark: SparkSession, work_dir: str, name: str,
     before = _data_files(out_path)
     # the source is a pinned file list (read_snapshot reads explicit
     # paths), so appending the rewrite into the same directory is safe
-    df.coalesce(target_files).write.mode("append").parquet(out_path)
-    snap = commit_snapshot(work_dir, name, run_id="compact-" + uuid.uuid4().hex[:8],
+    df.coalesce(1).write.mode("append").parquet(out_path)
+    return commit_snapshot(work_dir, name, run_id="compact-" + uuid.uuid4().hex[:8],
                            before_files=before, replace=True)
-    if reclaim:
-        from .snapshots import expire_snapshots, vacuum_stage
-
-        expire_snapshots(work_dir, name, keep_last=1)
-        vacuum_stage(work_dir, name)
-    return snap

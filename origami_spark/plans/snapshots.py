@@ -110,15 +110,12 @@ def commit_snapshot(work_dir: str, stage: str, run_id: str,
     return snap
 
 
-def expire_snapshots(work_dir: str, stage: str, keep_last: int = 1) -> int:
-    """Drop all but the newest ``keep_last`` snapshot versions (the
-    Iceberg expire-snapshots analog).  Afterwards ``vacuum_stage``
+def expire_snapshots(work_dir: str, stage: str) -> int:
+    """Drop every snapshot version but the head (the Iceberg
+    expire-snapshots analog).  Afterwards ``vacuum_stage``
     reclaims any data file no surviving manifest references — the
     second half of the compaction story.  Returns versions removed."""
-    snaps = snapshots(work_dir, stage)
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1 (a table needs a head)")
-    to_drop = snaps[:-keep_last]
+    to_drop = snapshots(work_dir, stage)[:-1]
     snap_dir = os.path.join(work_dir, SNAPSHOT_DIR)
     for s in to_drop:
         os.remove(os.path.join(snap_dir, f"{stage}-v{s['version']}.json"))
@@ -146,7 +143,7 @@ def vacuum_stage(work_dir: str, stage: str) -> list:
     expire/vacuum analog).  NB after a REWRITE commit (compact_stage)
     the pre-compaction files are still referenced by OLDER snapshots,
     so vacuum alone removes nothing — run ``expire_snapshots`` first
-    (or compact with ``reclaim=True``) to release them.  Only safe
+    to release them.  Only safe
     while no writer is appending to the stage.  Returns the removed
     file names."""
     table_path = os.path.join(work_dir, stage)

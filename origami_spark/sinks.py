@@ -16,6 +16,9 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# rows the shard-size estimate serializes
+_SAMPLE_ROWS = 2048
+
 
 def _count_part_files(spark, path: str) -> int:
     """Number of part- files the write produced (any Hadoop fs)."""
@@ -29,14 +32,12 @@ def _count_part_files(spark, path: str) -> int:
 
 
 def export_jsonl(df: DataFrame, path: str, target_shard_mb: int = 256,
-                 compression: str = "gzip",
-                 sample_rows: int = 2048,
                  total_rows: int | None = None,
                  order_col: str | None = None) -> int:
-    """Write `df` as JSONL shards of ~`target_shard_mb` (uncompressed
+    """Write `df` as gzip JSONL shards of ~`target_shard_mb` (uncompressed
     estimate).  Returns the number of part files written.
 
-    Sizing: serialize only the first ``sample_rows`` rows (a LIMIT — one
+    Sizing: serialize only the first ``_SAMPLE_ROWS`` rows (a LIMIT — one
     tiny job, typically one upstream partition) to estimate bytes/row,
     convert the target size to rows-per-file, and let the writer split
     files via ``maxRecordsPerFile``.  The data itself is read exactly
@@ -69,7 +70,7 @@ def export_jsonl(df: DataFrame, path: str, target_shard_mb: int = 256,
     # so this job touches ~one upstream partition — an agg on top would
     # force a LocalLimit per partition and evaluate them ALL
     sampled = (
-        df.limit(sample_rows)
+        df.limit(_SAMPLE_ROWS)
         .select(F.octet_length(F.to_json(F.struct(*df.columns))).alias("b"))
         .collect()
     )
@@ -86,13 +87,13 @@ def export_jsonl(df: DataFrame, path: str, target_shard_mb: int = 256,
         # caller-supplied exact count: coalesce to the exact shard count
         shards = max(1, math.ceil(total_rows * bytes_per_row / target_bytes))
         df = df.coalesce(shards)
-    elif sample["n"] and sample["n"] < sample_rows:
+    elif sample["n"] and sample["n"] < _SAMPLE_ROWS:
         # the LIMIT exhausted the table: sample IS the table, sizing is
         # exact — coalesce small exports instead of leaving one file per
         # upstream partition
         shards = max(1, math.ceil(sample["b"] / target_bytes))
         df = df.coalesce(shards)
-    writer = df.write.mode("overwrite").option("compression", compression)
+    writer = df.write.mode("overwrite").option("compression", "gzip")
     if sample["n"]:
         rows_per_shard = max(1, target_bytes // bytes_per_row)
         writer = writer.option("maxRecordsPerFile", rows_per_shard)

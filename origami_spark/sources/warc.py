@@ -22,7 +22,6 @@ synthetic writer below makes tests hermetic.
 from __future__ import annotations
 
 import datetime as _dt
-import gzip as _gzip
 import io
 import zlib
 
@@ -202,8 +201,10 @@ def read_warc(spark, path):
 # synthetic writer (tests)
 # ---------------------------------------------------------------------------
 
-def synth_warc(pages, per_record_gzip: bool = False) -> bytes:
-    """pages: iterable of {url, warc_ts, html} -> WARC bytes."""
+def synth_warc(pages) -> bytes:
+    """pages: iterable of {url, warc_ts, html} -> WARC bytes.  A
+    per-record gzip archive is the concatenation of each one-page
+    archive's gzip member."""
     out = io.BytesIO()
     for p in pages:
         ts = p.get("warc_ts") or _dt.datetime(2024, 1, 1)
@@ -218,11 +219,5 @@ def synth_warc(pages, per_record_gzip: bool = False) -> bytes:
             + f"Content-Length: {len(http)}\r\n".encode()
             + b"\r\n"
         )
-        record = head + http + b"\r\n\r\n"
-        if per_record_gzip:
-            buf = io.BytesIO()
-            with _gzip.GzipFile(fileobj=buf, mode="wb") as g:
-                g.write(record)
-            record = buf.getvalue()
-        out.write(record)
+        out.write(head + http + b"\r\n\r\n")
     return out.getvalue()

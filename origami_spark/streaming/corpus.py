@@ -28,7 +28,7 @@ duplicating rows (same recipe as ingest._start_extract_sink).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..pipeline import extract_fused
@@ -48,9 +48,6 @@ def stream_corpus(
     max_files_per_trigger: int = 64,
     available_now: bool = False,
     near_dup_index_dir: str | None = None,
-    min_sig_agreement: float = 0.5,
-    near_dup_max_bucket: int | None = 128,
-    robots_rules: DataFrame | None = None,
 ):
     """Start the continuous corpus query; returns the handle.
 
@@ -90,8 +87,6 @@ def stream_corpus(
     )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
         # one row per url per micro-batch: a url re-crawled with
         # DIFFERENT bytes inside one trigger survives the digest dedup
         # twice, and duplicate urls would cross-multiply through the
@@ -103,19 +98,6 @@ def stream_corpus(
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        if robots_rules is not None:
-            # robots exclusion (RFC 9309) — url-grain, so it gates
-            # BEFORE extraction like the batch job's flag.  The rule
-            # table is a static side input: robots_gate folds it to a
-            # broadcast per-host array, so the micro-batch never
-            # shuffles for the verdict.
-            from ..operators.robots import robots_gate
-
-            one = (
-                robots_gate(one, robots_rules)
-                .filter(F.col("allowed"))
-                .drop("host", "allowed")
-            )
         # extract_fused emits (url, text, spans); carry warc_ts along
         # from the batch for the export surface.  Cache: `gated` joins
         # two frames derived from `extracted`, and without the cache
@@ -140,8 +122,7 @@ def stream_corpus(
             )
             if near_dup_index_dir is not None:
                 gated = _near_dup_against_index(
-                    spark, gated, near_dup_index_dir, batch_id,
-                    min_sig_agreement, near_dup_max_bucket)
+                    spark, gated, near_dup_index_dir, batch_id)
             gated.write.mode("overwrite").parquet(
                 f"{out_dir}/batch_id={batch_id}")
 
@@ -160,12 +141,15 @@ def stream_corpus(
 
 
 _INDEX_SCHEMA = "doc_id bigint, band int, bucket string, sig array<bigint>"
+# continuous near-dup: the signature agreement a pair must reach, and
+# the rows one (band, bucket) may hold — in the batch's star pairing
+# and in the index append alike
+_MIN_SIG_AGREEMENT = 0.5
+_MAX_BUCKET = 128
 
 
 def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
-                            index_dir: str, batch_id: int,
-                            min_sig_agreement: float,
-                            max_bucket: int | None = 128) -> DataFrame:
+                            index_dir: str, batch_id: int) -> DataFrame:
     """One micro-batch of continuous near-dup: keep gated rows that
     survive ``incremental_keep`` against the accumulated signature
     index, then land the survivors' signature rows under this batch's
@@ -186,10 +170,10 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
 
     Hot-bucket bound: the cap is enforced at APPEND time — a survivor's
     index row lands only while its (band, bucket) holds fewer than
-    ``max_bucket`` rows COUNTING both the existing corpus rows and the
+    ``_MAX_BUCKET`` rows COUNTING both the existing corpus rows and the
     lower-doc_id rows appended by this same batch (its OTHER band rows
     still land, so the doc stays discoverable through remaining bands).
-    Append-time capping keeps up to ``max_bucket`` DIVERSE members per
+    Append-time capping keeps up to ``_MAX_BUCKET`` DIVERSE members per
     bucket that verification runs against in full; the batch side
     keeps its star capping so a hot bucket arriving within ONE
     micro-batch emits O(m) star pairs, not m(m-1)/2.
@@ -201,7 +185,7 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
     so the corpus read semi-joins the batch's touched-bucket set
     BEFORE the eager materialization.  Per-batch work is then
     proportional to the BATCH (bounded by batch_docs x bands x
-    max_bucket rows), not the accumulated corpus — without this, every
+    _MAX_BUCKET rows), not the accumulated corpus — without this, every
     micro-batch localCheckpoints the whole index.  The broadcast
     touched set is batch_docs x bands rows at most — small by the
     micro-batch contract."""
@@ -230,26 +214,23 @@ def _near_dup_against_index(spark: SparkSession, gated: DataFrame,
         except AnalysisException:   # first batch: no index dir yet
             corpus_idx = spark.createDataFrame([], _INDEX_SCHEMA)
         surv = cache(incremental_keep(ids, new_idx, corpus_idx,
-                                      min_sig_agreement=min_sig_agreement,
-                                      max_bucket=max_bucket))
-        surv_idx = new_idx.join(surv.select("doc_id"), "doc_id")
-        if max_bucket is not None:
-            from pyspark.sql import Window
-
-            # corpus_idx is already pruned to touched buckets
-            cur = (
-                corpus_idx
-                .groupBy("band", "bucket")
-                .agg(F.count(F.lit(1)).alias("_n"))
-            )
-            bw = Window.partitionBy("band", "bucket").orderBy("doc_id")
-            surv_idx = (
-                surv_idx.join(F.broadcast(cur), ["band", "bucket"], "left")
-                .withColumn("_r", F.row_number().over(bw))
-                .filter(F.coalesce(F.col("_n"), F.lit(0)) + F.col("_r")
-                        <= max_bucket)
-                .drop("_n", "_r")
-            )
+                                      min_sig_agreement=_MIN_SIG_AGREEMENT,
+                                      max_bucket=_MAX_BUCKET))
+        # corpus_idx is already pruned to touched buckets
+        cur = (
+            corpus_idx
+            .groupBy("band", "bucket")
+            .agg(F.count(F.lit(1)).alias("_n"))
+        )
+        bw = Window.partitionBy("band", "bucket").orderBy("doc_id")
+        surv_idx = (
+            new_idx.join(surv.select("doc_id"), "doc_id")
+            .join(F.broadcast(cur), ["band", "bucket"], "left")
+            .withColumn("_r", F.row_number().over(bw))
+            .filter(F.coalesce(F.col("_n"), F.lit(0)) + F.col("_r")
+                    <= _MAX_BUCKET)
+            .drop("_n", "_r")
+        )
         surv_idx.write.mode("overwrite").parquet(
             f"{index_dir}/batch_id={batch_id}")
         # eager: materialize the kept rows while surv's cache is live —
@@ -271,8 +252,6 @@ def compact_corpus(spark: SparkSession, out_dir: str,
     hazard (unlike host_cap, where one KEY can own the corpus).
     Writes ``dest_dir`` (url, text, warc_ts, n_tokens, quality) and
     returns the compacted frame."""
-    from pyspark.sql import Window
-
     landed = spark.read.parquet(out_dir)
     w = Window.partitionBy("url").orderBy(
         F.desc("warc_ts"), F.desc("batch_id"), "text")

@@ -56,23 +56,22 @@ def stream_extract(
     source_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    trigger_seconds: int = 10,
-    max_files_per_trigger: int = 64,
     available_now: bool = False,
 ):
     """Drain parquet page files landing in `source_dir` into extracted
-    (url, text, spans) parquet under `out_dir`.  Returns the query
-    handle (call .awaitTermination() / .stop()).
+    (url, text, spans) parquet under `out_dir`, up to 64 files per
+    10-second trigger.  Returns the query handle (call
+    .awaitTermination() / .stop()).
 
     `available_now=True` processes everything currently available and
     stops — the batch-catch-up mode (and the test mode)."""
     pages = (
         spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 64)
         .parquet(source_dir)
     )
     return _start_extract_sink(spark, pages, out_dir, checkpoint_dir,
-                               trigger_seconds, available_now)
+                               10, available_now)
 
 
 def stream_extract_warc(
@@ -80,8 +79,6 @@ def stream_extract_warc(
     archive_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    trigger_seconds: int = 10,
-    max_files_per_trigger: int = 8,
     available_now: bool = False,
 ):
     """Streaming WARC ingest: archives LANDING in `archive_dir` (the
@@ -89,7 +86,8 @@ def stream_extract_warc(
     time) are parsed with the same tolerant kernel as the batch reader
     (sources/warc.py: per-record gzip, framing resync, loss counters)
     and extracted into the same exactly-once batch_id-keyed sink as
-    ``stream_extract``.  One archive file is the unit of both
+    ``stream_extract``, up to 8 archives per 10-second trigger.  One
+    archive file is the unit of both
     source-offset tracking and parallelism, so a restart never re-emits
     a processed archive and never misses a half-landed one (binaryFile
     lists completed files only).  Returns the query handle."""
@@ -101,22 +99,21 @@ def stream_extract_warc(
         # stated explicitly
         .schema("path string, modificationTime timestamp, "
                 "length long, content binary")
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 8)
         .option("pathGlobFilter", "*.warc*")
         .load(archive_dir)
         .select("path", "content")
     )
     pages = files.mapInPandas(pages_kernel, schema=WARC_PAGES_SCHEMA)
     return _start_extract_sink(spark, pages, out_dir, checkpoint_dir,
-                               trigger_seconds, available_now)
+                               10, available_now)
 
 
-def stream_exact_dedup(pages, ts_col: str = "warc_ts",
-                       text_col: str = "text",
+def stream_exact_dedup(pages, text_col: str = "text",
                        watermark: str = "1 day") -> DataFrame:
     """Continuous exact dedup on a stream: digest the text and keep the
-    first arrival per digest, with state bounded by the event-time
-    watermark (``dropDuplicatesWithinWatermark`` — a digest seen again
+    first arrival per digest, with state bounded by the ``warc_ts``
+    event-time watermark (``dropDuplicatesWithinWatermark`` — a digest seen again
     within the horizon is dropped; after the watermark passes, its
     state is evicted, so a re-crawl far outside the horizon is treated
     as new content, which is the standard continuous-ingest contract).
@@ -130,6 +127,6 @@ def stream_exact_dedup(pages, ts_col: str = "warc_ts",
 
     return (
         pages.withColumn("digest", content_digest(text_col))
-        .withWatermark(ts_col, watermark)
+        .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["digest"])
     )

@@ -126,3 +126,17 @@ def test_gutter_and_rule_lines_compose():
         "TEXT", "SEPARATOR", "TEXT", "SEPARATOR", "TEXT"]
     assert [b.text for b in blocks if b.label == "TEXT"] == [
         "part a.", "part b.", "part c."]
+
+
+def test_nul_only_run_is_text_not_a_break():
+    """A text run that is exactly U+0000 is text like any run holding a
+    NUL: it neither ends a line nor drops out of the link evidence."""
+    (split,) = extract_page(b"<p>alpha<b>\x00</b>beta</p>")
+    (whole,) = extract_page(b"<p>alpha\x00beta</p>")
+    assert split.n_lines == whole.n_lines == 1
+    assert split.text == whole.text == "alpha\x00beta"
+    assert split.text_len == whole.text_len
+    (split_a,) = extract_page(b"<p><a href='/'>alpha<b>\x00</b>beta</a></p>")
+    (whole_a,) = extract_page(b"<p><a href='/'>alpha\x00beta</a></p>")
+    assert split_a.text == whole_a.text == "alpha\x00beta"
+    assert split_a.link_len == whole_a.link_len == whole_a.text_len

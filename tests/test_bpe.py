@@ -53,59 +53,6 @@ def _ref_train(wc, n_merges, min_pair_count=2):
     return merges
 
 
-def _ref_train_batched_rounds(wc, n_merges, batch, min_pair_count=2):
-    """Pure-Python mirror of the batched round: full pair counts,
-    sorted by (count DESC, left, right), top 8*k window, greedy
-    disjoint-symbol selection, all accepted merges applied in one
-    pass in accepted order.  Returns the per-round pair lists."""
-    syms = {w: list(w) + [EOW] for w in wc}
-    rounds = []
-
-    def apply(pair):
-        a, b = pair
-        for w, s in syms.items():
-            out, i = [], 0
-            while i < len(s):
-                if i + 1 < len(s) and s[i] == a and s[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(s[i])
-                    i += 1
-            syms[w] = out
-
-    done = 0
-    while done < n_merges:
-        k = min(batch, n_merges - done)
-        stats = Counter()
-        for w, s in syms.items():
-            for i in range(len(s) - 1):
-                stats[(s[i], s[i + 1])] += wc[w]
-        window = sorted(stats, key=lambda p: (-stats[p], p))[:max(8 * k, 8)]
-        chosen, used = [], set()
-        for a, b in window:
-            if stats[(a, b)] < min_pair_count:
-                break
-            if a in used or b in used or (a + b) in used:
-                continue
-            chosen.append((a, b))
-            used.update((a, b, a + b))
-            if len(chosen) >= k:
-                break
-        if not chosen:
-            break
-        rounds.append(chosen)
-        done += len(chosen)
-        for pair in chosen:
-            apply(pair)
-    return rounds
-
-
-def _ref_train_batched(wc, n_merges, batch, min_pair_count=2):
-    return [p for rnd in _ref_train_batched_rounds(
-        wc, n_merges, batch, min_pair_count) for p in rnd]
-
-
 TEXTS = ["the lower the newer the wider",
          "low lower lowest new newer newest",
          "wide wider widest low low low new new",
@@ -120,41 +67,11 @@ def test_train_matches_python_reference(spark):
     assert len(got) > 5  # the corpus supports a real merge sequence
 
 
-def test_train_batched_matches_batched_reference(spark):
-    """batch>1 is the documented approximation: Spark must equal the
-    batched pure-Python mirror pair-for-pair (same window, same
-    disjoint-symbol greedy, same in-round application order)."""
-    docs = _docs(spark, TEXTS)
-    wc = _ref_word_counts(TEXTS)
-    for batch in (2, 4, 8):
-        got = bpe_train(docs, n_merges=20, batch=batch, min_pair_count=1)
-        want = _ref_train_batched(wc, 20, batch, min_pair_count=1)
-        assert got == want, (batch, got, want)
-        assert len(got) > 5
-
-
 def test_train_batch1_is_exactly_serial(spark):
-    """batch=1 through the batched code path is the serial Sennrich
-    sequence (the batched mirror with k=1 degenerates to it too)."""
+    """One merge per round is exactly the serial Sennrich sequence."""
     docs = _docs(spark, TEXTS)
-    wc = _ref_word_counts(TEXTS)
-    serial = _ref_train(wc, 12)
-    assert bpe_train(docs, n_merges=12, batch=1) == serial
-    assert _ref_train_batched(wc, 12, 1) == serial
-
-
-def test_train_batched_disjointness_within_round():
-    """No round may contain two pairs sharing a symbol (or a pair
-    consuming another's concatenation) — the commutation invariant
-    that makes one-pass application well-defined."""
-    wc = _ref_word_counts(TEXTS)
-    rounds = _ref_train_batched_rounds(wc, 24, 4, min_pair_count=1)
-    assert sum(len(r) for r in rounds) > 8
-    for rnd in rounds:
-        used = set()
-        for a, b in rnd:
-            assert a not in used and b not in used and (a + b) not in used
-            used.update((a, b, a + b))
+    assert bpe_train(docs, n_merges=12) == _ref_train(
+        _ref_word_counts(TEXTS), 12)
 
 
 def test_train_tie_break_and_overlap(spark):
@@ -164,18 +81,18 @@ def test_train_tie_break_and_overlap(spark):
     # lexicographically ('</w>' < 'aa'), exactly like the reference
     texts = ["aaaa aaaa aaaa"]
     docs = _docs(spark, texts)
-    got = bpe_train(docs, n_merges=3, min_pair_count=1)
-    want = _ref_train(_ref_word_counts(texts), 3, min_pair_count=1)
+    got = bpe_train(docs, n_merges=3)
+    want = _ref_train(_ref_word_counts(texts), 3)
     assert got == want
     assert got[0] == ("a", "a") and got[1] == ("aa", EOW)
 
 
 def test_train_early_stop_on_rare_pairs(spark):
-    # every word unique, each pair weight 1 -> min_pair_count=2 learns
+    # every word unique, each pair weight 1 -> the count-2 floor learns
     # only the pairs shared across words
     texts = ["ab cd ef"]
     docs = _docs(spark, texts)
-    got = bpe_train(docs, n_merges=10, min_pair_count=2)
+    got = bpe_train(docs, n_merges=10)
     assert got == _ref_train(_ref_word_counts(texts), 10)
 
 

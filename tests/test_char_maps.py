@@ -1,7 +1,6 @@
 """Char-granularity offset map (the dewarp Grid/Transformer analog,
 reference core/dewarp.py:496-576): per normalized char, the raw byte
-offset it originates from — opt-in via extract_page(char_maps=True) /
-parse_stage(char_maps=True).
+offset it originates from — opt-in via extract_page(char_maps=True).
 
 The exactness contract has two halves:
 
@@ -165,26 +164,3 @@ def test_goldens_unaffected_by_flag():
         assert r["text"] == p["text"]
         assert r["spans"] == json.loads(p["spans_json"])
 
-
-def test_kernel_emits_aligned_char_maps(spark):
-    """Spark surface: parse_stage(char_maps=True) emits line_char_maps
-    aligned with line_spans, and each map's offsets sit inside its
-    line's hull."""
-    from origami_spark.pipeline import parse_stage
-    from origami_spark.sources.corpus import pages_df
-
-    rows = (
-        parse_stage(pages_df(spark, 30, num_partitions=2), char_maps=True)
-        .filter("label = 'TEXT' AND line_char_maps IS NOT NULL")
-        .select("text", "line_spans", "line_char_maps")
-        .collect()
-    )
-    assert rows
-    for r in rows:
-        assert len(r["line_spans"]) == len(r["line_char_maps"])
-        for line, sp, cm in zip(r["text"].split("\n"), r["line_spans"],
-                                r["line_char_maps"]):
-            assert len(cm) == len(line)
-            for o in cm:
-                if o >= 0:
-                    assert sp["start"] <= o < sp["end"]

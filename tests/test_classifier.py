@@ -142,11 +142,13 @@ def test_score_plan_broadcasts_model_single_exchange(spark):
 
 def test_bucket_count_travels_with_model(spark):
     """nb_score derives the hash modulus FROM the model table (b
-    column) — a non-default training bucket count must score exactly,
-    with no way to pass a mismatched count."""
+    column) — a model built over another bucket count must score
+    exactly, with no way to pass a mismatched count."""
     docs = _docs(spark, ROWS)
-    model = nb_train(docs, "y", buckets=512)
     ref, qprior = _ref_model(ROWS, buckets=512)
+    model = spark.createDataFrame(
+        [(f, llr, qprior, Q, 512) for f, llr in ref.items()],
+        "feat bigint, qllr bigint, qprior bigint, q int, b bigint")
     got = {r["doc_id"]: r["score_q"]
            for r in nb_score(docs, model).collect()}
     exp = {i: qprior + sum(ref[_h60(t) % 512] for t in _toks(text))

@@ -106,11 +106,6 @@ def test_clean_lines_page_drop(spark, bad):
     assert r["n_dropped"] == 2  # every line of a dropped page counts
 
 
-def test_clean_lines_min_words_configurable(spark):
-    r = _one(clean_lines(_docs(spark, [(1, "Too few.")]), min_words=2), 1)
-    assert r["n_kept"] == 1
-
-
 # ---------------------------------------------------------------------------
 # pii_scrub
 # ---------------------------------------------------------------------------
@@ -177,12 +172,11 @@ def test_gopher_gate_reason_order_is_fixed(spark):
 
 
 def test_gopher_gate_token_window(spark):
-    many = " ".join(["the", "of"] * 40)  # 80 tokens of the/of
+    many = " ".join(["the", "and"] * 40)  # 80 tokens, mean length 3.0
     r = _one(
         gopher_gate(
             _docs(spark, [(1, many)]),
             min_tokens=1, max_tokens=50,
-            min_mean_len=0.0, max_mean_len=99.0,
             max_top_2gram_frac=1.0, max_dup_5gram_frac=1.0,
         ),
         1,

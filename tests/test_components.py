@@ -9,7 +9,7 @@ import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
-from origami_spark.operators import graph
+from origami_spark.operators import components, graph
 from origami_spark.operators.components import (
     connected_components,
     keep_one_per_component,
@@ -59,10 +59,12 @@ def test_path_graph_converges_in_log_rounds(spark, monkeypatch):
     """A 256-node path is the adversarial case for naive min-label
     propagation (~256 rounds to drag 0 to the far end).  The
     alternating-star algorithm must finish within its O(log^2 n) bound
-    — max_iter=20 both enforces that and proves the labels exact."""
+    — a 20-round bound both enforces that and proves the labels
+    exact."""
     monkeypatch.setattr(graph, "_KERNEL_EDGES", -1)
+    monkeypatch.setattr(components, "_MAX_ROUNDS", 20)
     edges = [(i, i + 1) for i in range(255)]
-    got = _labels(connected_components(_edges_df(spark, edges), max_iter=20))
+    got = _labels(connected_components(_edges_df(spark, edges)))
     assert got == {i: 0 for i in range(256)}
 
 
@@ -146,9 +148,29 @@ def test_star_capped_candidates_resolve_to_one_component(spark):
 
 def test_unconverged_raises(spark, monkeypatch):
     monkeypatch.setattr(graph, "_KERNEL_EDGES", -1)
+    monkeypatch.setattr(components, "_MAX_ROUNDS", 1)
     edges = [(i, i + 1) for i in range(64)]
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(_edges_df(spark, edges), max_iter=1)
+        connected_components(_edges_df(spark, edges))
+
+
+def test_reliable_checkpoints_label_like_local(spark, monkeypatch,
+                                               tmp_path):
+    """``reliable=True`` (fault recovery on a lossy cluster) cuts every
+    relational round with a reliable checkpoint instead of a local one;
+    the labels must not change, and the checkpoint files must land in
+    the context's checkpoint dir."""
+    monkeypatch.setattr(graph, "_KERNEL_EDGES", -1)
+    ckpt = tmp_path / "ckpt"
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    edges = _edges_df(spark, [(i, i + 1) for i in range(20)]
+                      + [(30, 31), (31, 32)])
+    local = _labels(connected_components(edges))
+    assert not ckpt.exists() or not any(ckpt.rglob("part-*"))
+    reliable = _labels(connected_components(edges, reliable=True))
+    assert reliable == local
+    assert local == {**{i: 0 for i in range(21)}, 30: 30, 31: 30, 32: 30}
+    assert any(ckpt.rglob("part-*"))
 
 
 _ID = st.one_of(st.none(), st.integers(0, 9))

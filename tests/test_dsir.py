@@ -116,11 +116,17 @@ def test_topk_equals_serial_rank(spark):
                 .limit(k).collect())
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
         assert [r["dsir_rank"] for r in got] == list(range(1, len(want) + 1))
-    # tiny bins force multi-bin decomposition; result must not change
-    got = dsir_topk(scored, 2, bin_width=1).orderBy("dsir_rank").collect()
-    want = (scored.orderBy(F.desc("qlw_sum"), F.asc("doc_id"))
-            .limit(2).collect())
-    assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
+    # weights spread over many 4096-wide bins (ties included) force the
+    # multi-bin decomposition; the result must equal the serial rank
+    wide = spark.createDataFrame(
+        [(i, (i * 7919) % 50_000 - 25_000) for i in range(300)]
+        + [(300 + i, 12_000) for i in range(5)],
+        "doc_id bigint, qlw_sum bigint")
+    for k in (1, 7, 40):
+        got = dsir_topk(wide, k).orderBy("dsir_rank").collect()
+        want = (wide.orderBy(F.desc("qlw_sum"), F.asc("doc_id"))
+                .limit(k).collect())
+        assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
 
 
 def test_gumbel_sample_exact_and_seeded(spark):

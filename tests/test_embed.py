@@ -66,9 +66,9 @@ def test_rows_partition_independent(spark):
 
 
 def test_vectors_unit_norm_and_dense_shape(spark):
-    dim = 16
+    dim = 64
     vecs = {r["vec_id"]: list(r["embedding"])
-            for r in hashed_embedding_vectors(_docs_df(spark), dim=dim).collect()}
+            for r in hashed_embedding_vectors(_docs_df(spark)).collect()}
     assert set(vecs) == {1, 2, 3, 4}
     for v in vecs.values():
         assert len(v) == dim
@@ -83,7 +83,7 @@ def test_vectors_feed_cosine_topk(spark):
     cosine 1.0 through the unmodified ANN baseline."""
     from origami_spark.operators.similarity import cosine_topk
 
-    emb = hashed_embedding_vectors(_docs_df(spark), dim=32)
+    emb = hashed_embedding_vectors(_docs_df(spark))
     top = cosine_topk(emb, [1], k=1).collect()
     assert [(r["query_id"], r["vec_id"], r["cosine"]) for r in top] == [
         (1, 2, 1.0)
@@ -114,7 +114,7 @@ def test_sign_cancellation_drops_coordinate(spark):
 
 def test_plan_no_python_udf_and_two_exchanges(spark):
     df = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-    plan = (hashed_embedding_vectors(df, dim=16)
+    plan = (hashed_embedding_vectors(df)
             ._jdf.queryExecution().executedPlan().toString())
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     # explode -> (doc_id, bucket) agg is one exchange; the norm window,
@@ -130,8 +130,7 @@ def test_vectors_feed_semantic_dedup(spark):
         train_ivf_centroids,
     )
 
-    dim = 32
-    emb = hashed_embedding_vectors(_docs_df(spark), dim=dim)
+    emb = hashed_embedding_vectors(_docs_df(spark))
     cents = train_ivf_centroids(emb, n_clusters=2, iters=2)
     cdf = spark.createDataFrame(
         [(int(i), [float(v) for v in c],

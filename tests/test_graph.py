@@ -18,8 +18,8 @@ from origami_spark.operators.graph import (
     degrees,
     event_edges,
     hits,
+    PAGERANK_BASE,
     pagerank,
-    pagerank_base,
 )
 
 SCALE = 1 << 20
@@ -59,7 +59,7 @@ def test_pagerank_single_iteration(spark, edges_df):
     got = {r["node"]: r["score"] for r in pagerank(edges_df, iters=1).collect()}
     assert got == _py_pagerank(EDGES, iters=1)
     # node 1's only in-edge is 3->1 (weight 5 of 3's total 7)
-    base = pagerank_base(SCALE, 85, 100)
+    base = PAGERANK_BASE
     assert got[1] == base + (SCALE * 5 * 85) // (7 * 100)
 
 
@@ -74,7 +74,7 @@ def test_pagerank_mass_bound(spark, edges_df):
     """Mass only leaks (dangling node + per-edge flooring): the total
     stays within [n*base, n*scale] at every iteration count."""
     n = 4
-    base = pagerank_base(SCALE, 85, 100)
+    base = PAGERANK_BASE
     for it in (1, 3, 6):
         total = sum(r["score"] for r in pagerank(edges_df, iters=it).collect())
         assert n * base <= total <= n * SCALE
@@ -285,7 +285,7 @@ def test_anchor_topk_two_level_equals_single_window(spark):
     anchors = spark.createDataFrame(
         [("s", d, a) for d, a in rows], "src string, dst string, anchor string")
 
-    got = sorted(map(tuple, anchor_topk(anchors, k=3, salt=4).collect()))
+    got = sorted(map(tuple, anchor_topk(anchors, k=3).collect()))
     # oracle-form single window over the same counts
     c = anchors.groupBy("dst", "anchor").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -297,7 +297,7 @@ def test_anchor_topk_two_level_equals_single_window(spark):
     assert ("hot", "a0", 10, 1) in got and ("cold", "only", 1, 1) in got
     # partition independence
     again = sorted(map(tuple, anchor_topk(
-        anchors.repartition(7), k=3, salt=4).collect()))
+        anchors.repartition(7), k=3).collect()))
     assert again == got
 
 

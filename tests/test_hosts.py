@@ -82,7 +82,7 @@ def test_host_of_strips_userinfo(spark):
 def test_host_cap_two_level_equals_single_window(spark):
     """The salted two-phase top-k must be value-identical to the naive
     single window (the oracle shape), including on an all-one-host
-    corpus and across salt settings."""
+    corpus."""
     from pyspark.sql import Window
 
     rows = [(f"https://mega.com/p/{i:04d}", "t") for i in range(300)]
@@ -95,10 +95,8 @@ def test_host_cap_two_level_equals_single_window(spark):
         .filter(F.col("_rk") <= 7).drop("_rk")
     )
     want = sorted(r["url"] for r in naive.collect())
-    for salt in (1, 4, 32):
-        got = sorted(r["url"]
-                     for r in host_cap(pages, k=7, salt=salt).collect())
-        assert got == want, salt
+    got = sorted(r["url"] for r in host_cap(pages, k=7).collect())
+    assert got == want
 
 
 def test_host_cap_mega_host_spreads_over_salts(spark):
@@ -109,7 +107,7 @@ def test_host_cap_mega_host_spreads_over_salts(spark):
     n, salt = 2000, 32
     rows = [(f"https://mega.com/p/{i:05d}", "t") for i in range(n)]
     pages = _pages(spark, rows)
-    out = host_cap(pages, k=5, salt=salt)
+    out = host_cap(pages, k=5)
     assert sorted(r["url"] for r in out.collect()) == \
         [f"https://mega.com/p/{i:05d}" for i in range(5)]
     occ = (

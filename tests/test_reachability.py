@@ -1,11 +1,15 @@
-"""Import-graph reachability: every ``origami_spark`` module is reached
-from a shipped entry point, or is listed in ``_KEEP`` with its reason.
+"""Reachability: every ``origami_spark`` module is reached from a
+shipped entry point, or is listed in ``_KEEP`` with its reason; every
+defaulted parameter is set by some shipped call, or is listed in
+``_KEEP_OPTIONS`` with its reason.
 
 Pure AST, no Spark.  The walk follows ``import`` / ``from ... import``
 edges (module level and function-local alike) transitively from the
 shipped entry points into ``origami_spark``.  A module that nothing
 ships reaches only its tests; it either gains a caller or is deleted
-together with them.
+together with them.  Likewise an option no caller sets is a
+configuration that no gate, job or benchmark runs: its default goes
+inline and the parameter goes.
 """
 
 import ast
@@ -35,6 +39,48 @@ _KEEP = {
         "synthetic PDF fixtures with constructive goldens",
     "origami_spark.plans.evaluate":
         "origami's evaluate.py",
+}
+
+# Defaulted parameters no shipped call sets, kept on purpose.  Key:
+# ``module.qualname(param)``.  Options of ``_KEEP`` modules may be set
+# by tests alone.
+_KEEP_OPTIONS = {
+    "origami_spark.html.blocks.extract_page(char_maps)":
+        "the kernel-level char offset map (dewarp Grid/Transformer "
+        "analog) that test_char_maps and the block-table pin check",
+    "origami_spark.operators.components.connected_components(reliable)":
+        "fault recovery: reliable checkpoints on a lossy cluster",
+    "origami_spark.operators.dedup.minhash_signatures(n)":
+        "reference twin of minhash_signatures_kernel(n, k)",
+    "origami_spark.operators.dedup.minhash_signatures(k)":
+        "reference twin of minhash_signatures_kernel(n, k)",
+    "origami_spark.operators.dedup.simhash(bits)":
+        "reference twin of simhash_kernel(bits)",
+    "origami_spark.operators.dedup.substring_fingerprints(window)":
+        "reference twin of substring_fingerprints_kernel",
+    "origami_spark.operators.dedup.substring_fingerprints(k)":
+        "reference twin of substring_fingerprints_kernel",
+    "origami_spark.operators.dedup.substring_fingerprints(all_positions)":
+        "reference twin of substring_fingerprints_kernel",
+    "origami_spark.operators.order.xy_cut_1d(separators)":
+        "origami's separator-aware gap scoring (ObstacleSampler), the "
+        "parity form of the 1-D XY-cut",
+    "origami_spark.operators.similarity._ivf_topk_served_relational(k)":
+        "reference twin of ivf_topk_served(k, nprobe)",
+    "origami_spark.operators.similarity._ivf_topk_served_relational(nprobe)":
+        "reference twin of ivf_topk_served(k, nprobe)",
+    "origami_spark.pipeline.extract_staged(run_id)":
+        "data addressing: the run a resumed stage commits under",
+    "origami_spark.plans.snapshots.read_snapshot(version)":
+        "data addressing: time travel to a committed version",
+    "origami_spark.plans.snapshots.snapshot_diff(to_version)":
+        "data addressing: the upper version of a snapshot range",
+    "origami_spark.session.get_spark(shuffle_partitions)":
+        "deployment: the cluster's shuffle width",
+    "origami_spark.streaming.ingest.stream_extract(available_now)":
+        "deployment: catch-up drain or continuous trigger",
+    "origami_spark.streaming.ingest.stream_extract_warc(available_now)":
+        "deployment: catch-up drain or continuous trigger",
 }
 
 
@@ -111,3 +157,143 @@ def test_every_package_module_is_shipped_or_kept():
     unreached = set(modules) - _reached(modules)
     assert unreached == set(_KEEP)
 
+
+
+def _options(tree, module: str):
+    """``(key, callee names, position)`` for every defaulted parameter
+    of every ``def`` in ``tree``, methods and nested functions alike.
+    ``position`` counts the positional arguments a call passes before
+    it (``self``/``cls`` excluded), None for keyword-only ones; a
+    constructor call names the class."""
+    out = []
+
+    def visit(node, qual, cls):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.ClassDef):
+                visit(child, qual + child.name + ".", child.name)
+            elif isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = child.args
+                pos = a.posonlyargs + a.args
+                static = any(isinstance(d, ast.Name)
+                             and d.id == "staticmethod"
+                             for d in child.decorator_list)
+                shift = 1 if cls and not static else 0
+                names = {cls} if cls and child.name == "__init__" \
+                    else {child.name}
+                for i in range(len(pos) - len(a.defaults), len(pos)):
+                    out.append((f"{module}.{qual}{child.name}({pos[i].arg})",
+                                names, i - shift))
+                for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                    if d is not None:
+                        out.append((f"{module}.{qual}{child.name}({arg.arg})",
+                                    names, None))
+                visit(child, qual + child.name + ".", None)
+            else:
+                visit(child, qual, cls)
+
+    visit(tree, "", None)
+    return out
+
+
+def _calls(tree):
+    """``(callee name, positional count, keyword names)`` per call.  The
+    callee is matched by name: a bare name (through ``from m import f
+    as g`` aliases) or the last attribute (``D.fn``, ``obj.method``),
+    which can only over-accept.  ``*args`` passes every position and
+    ``**kw`` every keyword (None); ``partial(fn, ...)`` calls ``fn``."""
+    alias = {a.asname: a.name for node in ast.walk(tree)
+             if isinstance(node, ast.ImportFrom)
+             for a in node.names if a.asname}
+
+    def name(func):
+        if isinstance(func, ast.Name):
+            return alias.get(func.id, func.id)
+        if isinstance(func, ast.Attribute):
+            return func.attr
+        return None
+
+    out = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        callee, args = name(node.func), node.args
+        if callee == "partial" and args:
+            callee, args = name(args[0]), args[1:]
+        if callee is None:
+            continue
+        n_pos = (float("inf") if any(isinstance(x, ast.Starred) for x in args)
+                 else len(args))
+        kws = {k.arg for k in node.keywords}
+        out.append((callee, n_pos, None if None in kws else kws))
+    return out
+
+
+def _unset_options(package: dict, shipped: list, tests: list,
+                   kept_modules=()) -> set:
+    """Keys of the defaulted parameters in ``package`` (module -> source)
+    that no call in ``shipped`` (sources) sets; for ``kept_modules`` a
+    call in ``tests`` counts too."""
+    shipped_calls = [c for src in shipped for c in _calls(ast.parse(src))]
+    test_calls = [c for src in tests for c in _calls(ast.parse(src))]
+
+    def sets(names, pos, param, calls):
+        return any(callee in names and (
+            kws is None or param in kws or (pos is not None and n_pos > pos))
+            for callee, n_pos, kws in calls)
+
+    unset = set()
+    for module, src in package.items():
+        kept = any(module == m or module.startswith(m + ".")
+                   for m in kept_modules)
+        calls = shipped_calls + (test_calls if kept else [])
+        for key, names, pos in _options(ast.parse(src), module):
+            if not sets(names, pos, key[key.rindex("(") + 1:-1], calls):
+                unset.add(key)
+    return unset
+
+
+def test_every_option_has_a_caller():
+    modules = _modules()
+    entries = {p for g in _ENTRY_GLOBS for p in _ROOT.glob(g)}
+    unset = _unset_options(
+        {m: p.read_text() for m, p in modules.items()},
+        [p.read_text() for p in [*modules.values(), *entries]],
+        [p.read_text() for p in (_ROOT / "tests").rglob("*.py")],
+        _KEEP)
+    assert unset == set(_KEEP_OPTIONS)
+
+
+def test_option_guard_flags_an_unset_option():
+    """Positive control: a planted operator with options nothing sets is
+    flagged; a module-attribute call, an import alias, a positional
+    argument and a constructor all count as setting one."""
+    planted = {"origami_spark.planted": """
+def op(df, a, col="x", salt=8, seed="s0"):
+    return df
+
+
+class Sketch:
+    def __init__(self, width=4):
+        self.width = width
+
+    def merge(self, other, depth=2):
+        return self
+"""}
+    shipped = ["""
+import origami_spark.planted as P
+from origami_spark.planted import op as _op
+
+_op(df, 1, "y")
+P.op(df, 1, salt=2)
+P.Sketch(8).merge(None)
+"""]
+    tests = ["from origami_spark.planted import op\nop(df, 1, seed='t')\n"]
+    flagged = {"origami_spark.planted.op(seed)",
+               "origami_spark.planted.Sketch.merge(depth)"}
+    assert _unset_options(planted, shipped, tests) == flagged
+    # without the alias call, `col` is unset too
+    assert _unset_options(planted, [shipped[0].replace('_op(df, 1, "y")', "")],
+                          tests) == flagged | {"origami_spark.planted.op(col)"}
+    # a kept module's options may be set by tests alone
+    assert _unset_options(planted, shipped, tests, {"origami_spark.planted"}) \
+        == {"origami_spark.planted.Sketch.merge(depth)"}

@@ -38,18 +38,24 @@ def test_cleanup_incomplete(spark, tmp_path):
 
 
 def test_sample_stage_deterministic(spark, tmp_path):
+    import pyspark.sql.functions as F
+
+    from origami_spark.plans.runner import run_stage
+
     wd = str(tmp_path / "wd")
-    extract_staged(spark, pages_df(spark, 60, num_partitions=4), wd)
-    a = {r["url"] for r in sample_stage(spark, wd, "s8_compose", 0.3).collect()}
-    b = {r["url"] for r in sample_stage(spark, wd, "s8_compose", 0.3).collect()}
+    df = spark.range(3000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
+    run_stage(spark, "s", df, lambda d: d.repartition(4), wd, run_id="r1")
+    a = {r["url"] for r in sample_stage(spark, wd, "s").collect()}
+    b = {r["url"] for r in sample_stage(spark, wd, "s").collect()}
     assert a == b  # seeded => reproducible
-    assert 0 < len(a) < 60
+    assert 0 < len(a) < 3000 * 0.02
 
 
 def test_sample_stage_reads_only_committed_rows(spark, tmp_path):
-    """After a compaction without reclaim the stage directory holds both
+    """After a compaction without expire/vacuum the stage directory holds both
     file generations, and a crashed writer's orphan sits beside them:
-    a full sample is still exactly the committed rows, each once."""
+    the 1% sample still draws from the committed rows, each once.  A
+    raw-directory read would sample every url at least twice over."""
     import shutil
 
     import pyspark.sql.functions as F
@@ -58,13 +64,14 @@ def test_sample_stage_reads_only_committed_rows(spark, tmp_path):
     from origami_spark.plans.snapshots import _data_files, read_snapshot
 
     wd = str(tmp_path / "wd")
-    df = spark.range(30).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
+    df = spark.range(3000).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
     run_stage(spark, "s", df, lambda d: d.repartition(3), wd, run_id="r1")
-    compact_stage(spark, wd, "s", target_files=1)
+    compact_stage(spark, wd, "s")
     path = f"{wd}/s"
     shutil.copy(f"{path}/{_data_files(path)[0]}",
                 f"{path}/part-99999-orphan.parquet")
     committed = sorted(r["url"] for r in read_snapshot(spark, wd, "s").collect())
-    assert len(committed) == 30
-    sampled = sorted(r["url"] for r in sample_stage(spark, wd, "s", 1.0).collect())
-    assert sampled == committed
+    assert len(committed) == 3000
+    sampled = [r["url"] for r in sample_stage(spark, wd, "s").collect()]
+    assert 0 < len(sampled) == len(set(sampled)) < 3000 * 0.02
+    assert set(sampled) <= set(committed)

@@ -18,9 +18,6 @@ def test_hash_sample_is_deterministic_and_nested(spark):
     small = {r["doc_id"] for r in
              hash_sample(docs, 0.1).select("doc_id").collect()}
     assert small <= a  # threshold sampling nests across rates
-    other = {r["doc_id"] for r in
-             hash_sample(docs, 0.3, seed="s1").select("doc_id").collect()}
-    assert other != a  # a new seed draws an independent sample
     # rate is approximately honored
     assert 0.2 < len(a) / docs.count() < 0.4
 
@@ -85,7 +82,7 @@ def test_token_budget_decomposed_equals_serial_per_source(spark):
         serial = frame.select(
             "doc_id", "source",
             F.size(tokens_col()).cast("bigint").alias("n_tokens"),
-            _bucket("doc_id", "s0").alias("_b"),
+            _bucket().alias("_b"),
         )
         w = Window.partitionBy("source").orderBy("_b", "doc_id").rowsBetween(
             Window.unboundedPreceding, Window.currentRow)
@@ -104,19 +101,19 @@ def test_token_budget_one_source_spreads_over_groups(spark):
     than 2/groups of the rows (VERDICT r3 item 3 'done' criterion)."""
     import pyspark.sql.functions as F
 
-    from origami_spark.operators.sampling import _SCALE, _bucket
+    from origami_spark.operators.sampling import _GROUPS, _SCALE, _bucket
 
-    n, groups = 2000, 64
+    n, groups = 32 * _GROUPS, _GROUPS
     rows = [(i, "only", "tok " * 5) for i in range(n)]
     docs = spark.createDataFrame(rows, "doc_id bigint, source string, text string")
-    out = token_budget(docs, 10**9, groups=groups)
+    out = token_budget(docs, 10**9)
     # value sanity: everything kept under an unlimited budget
     assert out.count() == n
     # the physical partitioning key is (source, _g): measure the actual
     # group occupancy the window tasks would see
     occ = (
         docs.select(
-            F.floor(_bucket("doc_id", "s0") * groups / _SCALE).alias("g"))
+            F.floor(_bucket() * groups / _SCALE).alias("g"))
         .groupBy("g").count().collect()
     )
     assert len(occ) == groups
@@ -161,7 +158,7 @@ def test_token_budget_global_equals_serial_prefix_cut(spark):
     serial = docs.select(
         "doc_id",
         F.size(tokens_col()).cast("bigint").alias("n_tokens"),
-        _bucket("doc_id", "s0").alias("_b"),
+        _bucket().alias("_b"),
     )
     w = Window.orderBy("_b", "doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
@@ -218,7 +215,7 @@ def test_shuffle_order_decomposed_equals_serial(spark):
     serial = {
         r["doc_id"]: r["pos"]
         for r in docs.select(
-            "doc_id", _hash_order("doc_id", "s0").alias("_h"))
+            "doc_id", _hash_order("s0").alias("_h"))
         .withColumn("pos", F.row_number().over(
             Window.orderBy("_h", "doc_id")).cast("bigint"))
         .collect()
@@ -293,7 +290,7 @@ def test_pack_sequences_equals_serial_packing(spark):
     serial = docs.select(
         "doc_id",
         F.size(tokens_col()).cast("bigint").alias("n_tokens"),
-        _bucket("doc_id", "s0").alias("_b"),
+        _bucket().alias("_b"),
     )
     w = Window.orderBy("_b", "doc_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow)
@@ -340,40 +337,25 @@ def test_pack_sequences_excludes_null_ids(spark):
 
 def test_split_assign_is_stable_under_growth_and_partitioning(spark):
     """Every doc keeps its split when the corpus grows or repartitions;
-    weights land near-exact; bad weights raise."""
-    import pytest
+    the 98/1/1 weights land near-exact."""
+    from collections import Counter
 
     from origami_spark.operators.sampling import split_assign
 
     docs = spark.createDataFrame(
-        [(i, f"d{i}") for i in range(4000)], "doc_id bigint, text string")
+        [(i, f"d{i}") for i in range(20000)], "doc_id bigint, text string")
     small = {r["doc_id"]: r["split"]
-             for r in split_assign(docs.limit(1000),
-                                   [("train", 0.8), ("val", 0.1),
-                                    ("test", 0.1)]).collect()}
+             for r in split_assign(docs.limit(5000)).collect()}
     full = {r["doc_id"]: r["split"]
-            for r in split_assign(docs.repartition(13),
-                                  [("train", 0.8), ("val", 0.1),
-                                   ("test", 0.1)]).collect()}
+            for r in split_assign(docs.repartition(13)).collect()}
     assert all(full[i] == s for i, s in small.items())
-    from collections import Counter
     c = Counter(full.values())
-    assert 0.77 < c["train"] / 4000 < 0.83
-    assert 0.07 < c["val"] / 4000 < 0.13
-    assert 0.07 < c["test"] / 4000 < 0.13
-    # a different seed redraws; identical seed reproduces exactly
-    redraw = {r["doc_id"]: r["split"]
-              for r in split_assign(docs, [("train", 0.8), ("val", 0.1),
-                                           ("test", 0.1)],
-                                    seed="s1").collect()}
-    assert redraw != full
-    with pytest.raises(ValueError, match="sum to 1"):
-        split_assign(docs, [("a", 0.5), ("b", 0.2)])
+    assert 0.975 < c["train"] / 20000 < 0.985
+    assert 0.005 < c["val"] / 20000 < 0.015
+    assert 0.005 < c["test"] / 20000 < 0.015
 
 
-def test_split_assign_rejects_bad_weights_and_drops_null_ids(spark):
-    import pytest
-
+def test_split_assign_drops_null_ids(spark):
     from origami_spark.operators.sampling import split_assign
 
     docs = spark.createDataFrame(
@@ -382,8 +364,6 @@ def test_split_assign_rejects_bad_weights_and_drops_null_ids(spark):
     out = split_assign(docs).collect()
     # NULL-id convention: the row filters out, never lands in a split
     assert {r["doc_id"] for r in out} == {1, 2}
-    with pytest.raises(ValueError, match="positive"):
-        split_assign(docs, [("a", 1.1), ("b", -0.2), ("c", 0.1)])
 
 
 def test_upsample_sources_exact_reference(spark):

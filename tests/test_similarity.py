@@ -260,10 +260,9 @@ def test_semantic_dedup_pairs_matches_bruteforce_within_cluster(spark):
     # keep-one composes: one survivor per cosine-cluster component
     from origami_spark.operators.components import keep_one_per_component
 
-    pairs = semantic_dedup_pairs(emb, cdf, threshold=0.3)
-    kept = keep_one_per_component(
-        emb.select("vec_id"), pairs, id_col="vec_id",
-        src="vec_a", dst="vec_b")
+    pairs = semantic_dedup_pairs(emb, cdf, threshold=0.3).select(
+        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
+    kept = keep_one_per_component(emb.select("vec_id"), pairs, id_col="vec_id")
     dropped = emb.count() - kept.count()
     assert dropped > 0
     comp_members = {v for ab in got for v in ab}

@@ -48,13 +48,13 @@ def words_df(spark):
 
 def test_kmv_exact_below_k(spark):
     df = spark.createDataFrame([(f"x{i}",) for i in range(37)], "v string")
-    row = kmv_distinct(df, "v", k=256).collect()[0]
+    row = kmv_distinct(df, "v").collect()[0]
     assert row["n_kept"] == 37
     assert row["est_distinct"] == 37
 
 
 def test_kmv_matches_python_reference_exactly(spark, words_df):
-    row = kmv_distinct(words_df, "v", k=256).collect()[0]
+    row = kmv_distinct(words_df, "v").collect()[0]
     n_kept, kth, est = _py_kmv([f"w{i}" for i in range(5000)], 256)
     assert (row["n_kept"], row["kth_hash"], row["est_distinct"]) == (
         n_kept, kth, est)
@@ -63,7 +63,7 @@ def test_kmv_matches_python_reference_exactly(spark, words_df):
 def test_kmv_relative_error_bound(spark, words_df):
     # KMV std error ~ 1/sqrt(k-1) = 6.3% at k=256; 20% is a >3-sigma
     # bound on a fixed (hash-deterministic, not random) instance.
-    est = kmv_distinct(words_df, "v", k=256).collect()[0]["est_distinct"]
+    est = kmv_distinct(words_df, "v").collect()[0]["est_distinct"]
     assert abs(est - 5000) / 5000 < 0.20
 
 
@@ -337,7 +337,7 @@ def test_kmv_set_ops_exact_below_k(spark):
     b_vals = [f"x{i}" for i in range(30, 70)]      # 30..69, overlap 10
     mk = lambda vs: spark.createDataFrame([(v,) for v in vs], "v string")
     out = kmv_set_ops(kmv_build(mk(a_vals), "v", k=256),
-                      kmv_build(mk(b_vals), "v", k=256), k=256).collect()
+                      kmv_build(mk(b_vals), "v", k=256)).collect()
     assert len(out) == 1
     r = out[0]
     assert r["n_kept"] == 70 and r["est_union"] == 70
@@ -355,7 +355,7 @@ def test_kmv_set_ops_estimates_within_bound(spark):
     b_vals = [f"v{i}" for i in range(2500, 7500)]
     mk = lambda vs: spark.createDataFrame([(v,) for v in vs], "v string")
     r = kmv_set_ops(kmv_build(mk(a_vals), "v", k=256),
-                    kmv_build(mk(b_vals), "v", k=256), k=256).collect()[0]
+                    kmv_build(mk(b_vals), "v", k=256)).collect()[0]
     true_j = 2500 / 7500
     se = (true_j * (1 - true_j) / 256) ** 0.5
     assert abs(r["jaccard"] - true_j) < 3 * se
@@ -382,9 +382,8 @@ def test_kmv_set_ops_grouped_equivalence(spark):
             + [(2, f"w{i}") for i in range(2000)])
     df = spark.createDataFrame(rows, "half int, v string")
     two = kmv_set_ops(
-        kmv_build(df.filter("half = 0"), "v", k=64),
-        kmv_build(df.filter("half = 1"), "v", k=64), k=64).collect()
+        kmv_build(df.filter("half = 0"), "v"),
+        kmv_build(df.filter("half = 1"), "v")).collect()
     one = kmv_set_ops_grouped(
-        kmv_build(df, "v", k=64, by=["half"]), "half", 0, 1,
-        k=64).collect()
+        kmv_build(df, "v", by=["half"]), "half", 0, 1).collect()
     assert sorted(map(tuple, one)) == sorted(map(tuple, two))

@@ -302,7 +302,7 @@ def test_compact_stage_rewrites_head_keeps_time_travel(spark, tmp_path):
     assert files_before >= 12
 
     want = sorted(r["url"] for r in read_snapshot(spark, wd, "s").collect())
-    snap = compact_stage(spark, wd, "s", target_files=1)
+    snap = compact_stage(spark, wd, "s")
     assert snap["version"] == 3 and len(snap["manifest"]) <= 2
 
     # head reads the compacted files, identical content
@@ -313,7 +313,7 @@ def test_compact_stage_rewrites_head_keeps_time_travel(spark, tmp_path):
     assert read_snapshot(spark, wd, "s", version=2).count() == 35
 
     # expire everything but the head, vacuum the unreferenced originals
-    assert expire_snapshots(wd, "s", keep_last=1) == 2
+    assert expire_snapshots(wd, "s") == 2
     removed = vacuum_stage(wd, "s")
     assert len(removed) == files_before
     assert [s["version"] for s in snapshots(wd, "s")] == [3]
@@ -374,7 +374,6 @@ def test_bucketed_workdir_from_older_engine_resumes_plain(spark, tmp_path):
 
 def test_expire_snapshots_keeps_head(spark, tmp_path):
     import pyspark.sql.functions as F
-    import pytest
 
     from origami_spark.plans.runner import run_stage
     from origami_spark.plans.snapshots import expire_snapshots, snapshots
@@ -382,16 +381,14 @@ def test_expire_snapshots_keeps_head(spark, tmp_path):
     wd = str(tmp_path / "wd")
     df = spark.range(5).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
     run_stage(spark, "s", df, lambda d: d, wd, run_id="r1")
-    assert expire_snapshots(wd, "s", keep_last=1) == 0  # nothing to drop
+    assert expire_snapshots(wd, "s") == 0  # nothing to drop
     assert [s["version"] for s in snapshots(wd, "s")] == [1]
-    with pytest.raises(ValueError):
-        expire_snapshots(wd, "s", keep_last=0)
 
 
 def test_compact_reclaim_removes_old_generation_immediately(spark, tmp_path):
-    """compact_stage(reclaim=True) leaves only the compacted files on
-    disk (raw-dir readers see one generation) and only the head
-    snapshot."""
+    """compact_stage then expire_snapshots + vacuum_stage leaves only
+    the compacted files on disk (raw-dir readers see one generation)
+    and only the head snapshot."""
     import os
 
     import pyspark.sql.functions as F
@@ -399,14 +396,18 @@ def test_compact_reclaim_removes_old_generation_immediately(spark, tmp_path):
     from origami_spark.plans.runner import compact_stage, run_stage
     from origami_spark.plans.snapshots import (
         _data_files,
+        expire_snapshots,
         read_snapshot,
         snapshots,
+        vacuum_stage,
     )
 
     wd = str(tmp_path / "wd")
     df = spark.range(30).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
     run_stage(spark, "s", df, lambda d: d.repartition(5), wd, run_id="r1")
-    snap = compact_stage(spark, wd, "s", target_files=1, reclaim=True)
+    snap = compact_stage(spark, wd, "s")
+    expire_snapshots(wd, "s")
+    vacuum_stage(wd, "s")
     path = os.path.join(wd, "s")
     assert sorted(_data_files(path)) == sorted(snap["manifest"])
     assert [x["version"] for x in snapshots(wd, "s")] == [snap["version"]]
@@ -465,7 +466,7 @@ def test_snapshot_diff_schema_and_rewrite_barrier(spark, tmp_path):
     read_snapshot(spark, wd, "s").unionByName(
         snapshot_diff(spark, wd, "s", 1, 2)).count()
 
-    compact_stage(spark, wd, "s", target_files=1)
+    compact_stage(spark, wd, "s")
     with pytest.raises(ValueError, match="rewrite commit"):
         snapshot_diff(spark, wd, "s", 1)
     # diffs entirely after the rewrite work again

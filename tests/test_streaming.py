@@ -37,6 +37,8 @@ def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
     """Archives dropped across two drain cycles stream into the
     exactly-once sink; the union is byte-identical to the batch path
     (WARC -> engine -> goldens) with zero duplicates."""
+    import gzip
+
     from origami_spark.sources.corpus import generate_pages
     from origami_spark.sources.warc import synth_warc
     from origami_spark.streaming.ingest import stream_extract_warc
@@ -54,7 +56,7 @@ def test_streaming_warc_ingest_matches_batch(spark, tmp_path):
     # second archive (per-record gzip) lands later; drain again from the
     # same checkpoint — the first archive must NOT be reprocessed
     (arch / "b.warc.gz").write_bytes(
-        synth_warc(pages[25:], per_record_gzip=True))
+        b"".join(gzip.compress(synth_warc([p])) for p in pages[25:]))
     q2 = stream_extract_warc(spark, str(arch), out, ckpt, available_now=True)
     q2.awaitTermination(120)
 
@@ -344,9 +346,9 @@ def test_stream_corpus_continuous_near_dup_index(spark, tmp_path):
     assert idx2.select(F.input_file_name()).distinct().count() >= 2
 
 
-def test_stream_index_append_capping(spark, tmp_path):
+def test_stream_index_append_capping(spark, tmp_path, monkeypatch):
     """The hot-bucket cap is enforced at index-APPEND time: a
-    survivor's row for a (band, bucket) already holding max_bucket rows
+    survivor's row for a (band, bucket) already holding _MAX_BUCKET rows
     is skipped, while its other band rows land — the doc stays
     discoverable through its remaining bands and the index bucket never
     exceeds the cap."""
@@ -354,8 +356,10 @@ def test_stream_index_append_capping(spark, tmp_path):
 
     from origami_spark.operators.dedup import signature_index
     from origami_spark.operators.text import portable_hash60
+    from origami_spark.streaming import corpus
     from origami_spark.streaming.corpus import _near_dup_against_index
 
+    monkeypatch.setattr(corpus, "_MAX_BUCKET", 2)
     text = ("the quick brown fox jumps over the lazy dog while the rain "
             "in spain falls mainly on the plain and the cat sat on the mat")
     gated = spark.createDataFrame([("u1", text)], "url string, text string")
@@ -373,8 +377,7 @@ def test_stream_index_append_capping(spark, tmp_path):
     idx_dir = str(tmp_path / "cap_idx")
     fake.write.parquet(f"{idx_dir}/batch_id=0")
 
-    out = _near_dup_against_index(spark, gated, idx_dir, 1, 0.5,
-                                  max_bucket=2)
+    out = _near_dup_against_index(spark, gated, idx_dir, 1)
     assert out.count() == 1   # agreement 0 vs the seeded sigs: kept
     appended = spark.read.parquet(f"{idx_dir}/batch_id=1")
     # band 0's bucket was full (2 >= cap): skipped; bands 1-3 landed
@@ -383,7 +386,7 @@ def test_stream_index_append_capping(spark, tmp_path):
 
 
 def test_stream_near_dup_candidates_read_the_signature_checkpoint(
-        spark, tmp_path):
+        spark, tmp_path, monkeypatch):
     """A micro-batch signs its docs once, into a checkpoint: the
     executed plan of its candidate frame reads the signatures from
     there and holds no MapInPandas — neither the signature kernel nor
@@ -391,6 +394,7 @@ def test_stream_near_dup_candidates_read_the_signature_checkpoint(
     from unittest.mock import patch
 
     from origami_spark.operators import dedup
+    from origami_spark.streaming import corpus
     from origami_spark.streaming.corpus import _near_dup_against_index
 
     text = ("some reasonably long page text about the history of "
@@ -408,11 +412,12 @@ def test_stream_near_dup_candidates_read_the_signature_checkpoint(
         plans.append((n, out._jdf.queryExecution().executedPlan().toString()))
         return out
 
+    # a 2-row bucket cap: the triplet's buckets are hot, so the star
+    # branch's stats join is in the plan too
+    monkeypatch.setattr(corpus, "_MAX_BUCKET", 2)
     with patch.object(dedup, "incremental_candidates", spy):
-        # max_bucket=2: the triplet's buckets are hot, so the star
-        # branch's stats join is in the plan too
         kept = _near_dup_against_index(
-            spark, gated, str(tmp_path / "idx"), 0, 0.5, 2).collect()
+            spark, gated, str(tmp_path / "idx"), 0).collect()
     assert len(kept) == 2
     [(n, plan)] = plans
     assert n > 0
@@ -439,7 +444,7 @@ def test_stream_near_dup_replay_is_idempotent(spark, tmp_path):
     idx_dir = str(tmp_path / "replay_idx")
 
     first = sorted(r["url"] for r in _near_dup_against_index(
-        spark, gated, idx_dir, 5, 0.5, 128).collect())
+        spark, gated, idx_dir, 5).collect())
     idx_first = sorted(
         (r["doc_id"], r["band"]) for r in
         spark.read.parquet(idx_dir).collect())
@@ -447,7 +452,7 @@ def test_stream_near_dup_replay_is_idempotent(spark, tmp_path):
     assert len(first) == 2 and "u_c" in first
 
     replay = sorted(r["url"] for r in _near_dup_against_index(
-        spark, gated, idx_dir, 5, 0.5, 128).collect())
+        spark, gated, idx_dir, 5).collect())
     idx_replay = sorted(
         (r["doc_id"], r["band"]) for r in
         spark.read.parquet(idx_dir).collect())
@@ -484,48 +489,9 @@ def test_stream_near_dup_untouched_buckets_pruned_and_irrelevant(spark,
     idx_dir = str(tmp_path / "pruned_idx")
     foreign.write.parquet(f"{idx_dir}/batch_id=0")
 
-    out = _near_dup_against_index(spark, gated, idx_dir, 1, 0.5, 128)
+    out = _near_dup_against_index(spark, gated, idx_dir, 1)
     # untouched-bucket twin is invisible: the doc survives
     assert [r["url"] for r in out.collect()] == ["u1"]
     # and its own rows landed under batch_id=1 as usual
     assert spark.read.parquet(f"{idx_dir}/batch_id=1").count() == 4
 
-
-def test_stream_corpus_robots_gate(spark, tmp_path):
-    """robots_rules gates urls BEFORE extraction inside the stream:
-    disallowed language subtrees never land, allowed pages match the
-    ungated run minus the blocked set."""
-    import pyspark.sql.functions as F
-
-    from origami_spark.operators.robots import parse_robots, robots_gate
-    from origami_spark.streaming.corpus import stream_corpus
-
-    land = str(tmp_path / "rb_land")
-    out = str(tmp_path / "rb_out")
-    ckpt = str(tmp_path / "rb_ckpt")
-    pages = pages_df(spark, 40, num_partitions=2).cache()
-    pages.write.mode("append").parquet(land)
-
-    hosts = pages.select(
-        F.regexp_extract("url", "://([^/]+)", 1).alias("host")).distinct()
-    rules = parse_robots(
-        hosts.withColumn(
-            "content", F.lit("User-agent: *\nDisallow: /fr\nDisallow: /es\n")),
-        agent="origami").cache()
-    blocked = {r["url"] for r in robots_gate(pages.select("url"), rules)
-               .filter("NOT allowed").collect()}
-    assert blocked
-
-    q = stream_corpus(spark, land, out, ckpt, min_tokens=5,
-                      max_files_per_trigger=2, available_now=True,
-                      robots_rules=rules)
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out)
-    got_urls = {r["url"] for r in got.select("url").collect()}
-    assert not (got_urls & blocked)
-    assert got.filter(F.col("url").contains("/fr/")
-                      | F.col("url").contains("/es/")).count() == 0
-    assert got.count() > 0
-    pages.unpersist()
-    rules.unpersist()

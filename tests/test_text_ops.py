@@ -172,7 +172,7 @@ def test_phrase_scores_rejects_negative_numerator(spark):
 
     docs = spark.createDataFrame([("a b",)], "text string")
     with _pt.raises(ValueError):
-        phrase_scores(docs, min_count=1, delta=1)
+        phrase_scores(docs, min_count=1)
 
 
 def test_split_sentences_reference_and_contracts(spark):

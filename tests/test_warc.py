@@ -1,16 +1,24 @@
 """WARC source: parse round-trip (plain + per-record gzip) and the full
 WARC -> engine -> golden-text path."""
 
+import gzip
+
 import pyspark.sql.functions as F
 
 from origami_spark.sources.corpus import generate_pages
 from origami_spark.sources.warc import parse_warc_bytes, read_warc, synth_warc
 
 
+def _gz_warc(pages):
+    """Per-record gzip archive (Common Crawl style): one gzip member
+    per record."""
+    return b"".join(gzip.compress(synth_warc([p])) for p in pages)
+
+
 def test_parse_roundtrip_plain_and_gzip():
     pages = generate_pages(42, 30)
     for gz in (False, True):
-        data = synth_warc(pages, per_record_gzip=gz)
+        data = _gz_warc(pages) if gz else synth_warc(pages)
         got = parse_warc_bytes(data)
         assert [g["url"] for g in got] == [p["url"] for p in pages]
         for g, p in zip(got, pages):
@@ -33,9 +41,9 @@ def test_corrupt_gzip_member_resyncs_and_counts():
     decompression resyncs at the next gzip magic, so members after the
     bad one are recovered, and the loss is counted."""
     pages = generate_pages(42, 6)
-    good = synth_warc(pages[:3], per_record_gzip=True)
+    good = _gz_warc(pages[:3])
     garbage = b"\x1f\x8b\x08\x00BROKEN-NOT-REALLY-GZIP-DATA"
-    tail = synth_warc(pages[3:], per_record_gzip=True)
+    tail = _gz_warc(pages[3:])
     stats = {}
     got = parse_warc_bytes(good + garbage + tail, stats)
     assert [g["url"] for g in got] == [p["url"] for p in pages]
@@ -100,7 +108,7 @@ def test_warc_to_extraction_byte_identical(spark, tmp_path):
     # two archives, one plain + one per-record gzip (Common Crawl style)
     (tmp_path / "a.warc").write_bytes(synth_warc(pages[:30]))
     (tmp_path / "b.warc.gz").write_bytes(
-        synth_warc(pages[30:], per_record_gzip=True))
+        _gz_warc(pages[30:]))
 
     df = read_warc(spark, str(tmp_path / "*.warc*"))
     assert df.count() == 60
