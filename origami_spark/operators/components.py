@@ -2,9 +2,14 @@
 
 The near-dup operators (``minhash_lsh_candidates``, ``simhash_near_dups``,
 ``embedding_near_dups_lsh``, ``substring_dup_pairs``) emit candidate
-PAIRS — the LSH ones through ``dedup._band_pairs``, each pair once
-unless ``max_bucket`` caps a bucket; the keep-one dedup decision needs
-duplicate CLUSTERS.
+PAIRS — the LSH ones through ``dedup._band_pairs``, each pair once;
+the keep-one dedup decision needs duplicate CLUSTERS.  The capped
+``minhash_lsh_candidates`` (``max_bucket`` set, as ``build_corpus``
+runs it) emits at most ``bands * docs * max_bucket / 2`` pairs, so up
+to ``dedup._KERNEL_SIGNATURES`` signatures one task bands, verifies
+and dedupes them; above it, and always when uncapped, the pairs come
+from the relational band join, because an uncapped hot bucket's pairs
+grow with its square and must never land in one task.
 ``connected_components`` turns a pair list into a (node, component)
 labeling where the component id is the smallest node id reachable
 through the pairs — the transitive cluster-and-keep-one semantics the

@@ -88,11 +88,11 @@ def test_band_pairs_equal_reference(spark, table, cap):
 
 
 def _nodes(plan, seen, inside=False):
-    """``(class name, inside a cached plan)`` for every node of an
+    """``(class name, inside a cached plan, node)`` for every node of an
     executed plan, through AQE stages; a cached relation is walked once
     however many scans read it, and a reused exchange where it runs."""
     name = plan.getClass().getSimpleName()
-    yield name, inside
+    yield name, inside, plan
     if name == "InMemoryRelation":
         builder = plan.cacheBuilder()
         if any(builder.equals(b) for b in seen):
@@ -123,29 +123,49 @@ def _media(spark):
         "media_id", "kind", "payload")
 
 
-@pytest.mark.parametrize("op, kernel", [
-    (lambda s: dedup.minhash_lsh_candidates(
-        _docs(s), min_sig_agreement=0.5, max_bucket=128), "MapInPandasExec"),
+def _minhash_capped(spark):
+    return dedup.minhash_lsh_candidates(
+        _docs(spark), min_sig_agreement=0.5, max_bucket=128)
+
+
+@pytest.mark.parametrize("op, kernel, in_task", [
+    (_minhash_capped, "MapInPandasExec", False),
+    (_minhash_capped, "MapInPandasExec", True),
     (lambda s: dedup.minhash_lsh_candidates(_docs(s), min_sig_agreement=0.5),
-     "MapInPandasExec"),
+     "MapInPandasExec", None),
     (lambda s: dedup.simhash_near_dups(_docs(s), max_hamming=6),
-     "MapInPandasExec"),
-    (lambda s: multimodal.media_near_dups(_media(s)), "MapInPandasExec"),
+     "MapInPandasExec", None),
+    (lambda s: multimodal.media_near_dups(_media(s)), "MapInPandasExec", None),
     (lambda s: dedup.embedding_near_dups_lsh(
         s.read.parquet(f"{SF}/embeddings.parquet"), threshold=0.3,
-        planes=4, tables=4), "ArrowEvalPythonExec"),
-], ids=["minhash_capped", "minhash", "simhash", "media", "embedding"])
-def test_signing_kernel_runs_once_inside_its_cache(spark, op, kernel):
+        planes=4, tables=4), "ArrowEvalPythonExec", None),
+], ids=["minhash_capped", "minhash_capped_kernel", "minhash", "simhash",
+        "media", "embedding"])
+def test_signing_kernel_runs_once_inside_its_cache(spark, monkeypatch, op,
+                                                   kernel, in_task):
     """Every reader of an LSH family's signature rows scans one cached
     relation, and the signing kernel runs only inside it: the self-join
-    re-signs nothing."""
+    re-signs nothing.  ``in_task`` forces the capped minhash path
+    through ``dedup._KERNEL_SIGNATURES``: the relational self-join, or
+    the in-task pair kernel, which runs outside the cache in one task."""
     from origami_spark.session import cache_scope
 
+    if in_task is not None:
+        monkeypatch.setattr(dedup, "_KERNEL_SIGNATURES",
+                            1 << 62 if in_task else -1)
     with cache_scope():
         df = op(spark)
         df.collect()
         seen = []
         nodes = list(_nodes(df._jdf.queryExecution().executedPlan(), seen))
     assert len(seen) == 1
-    assert [inside for name, inside in nodes if name == kernel] == [True]
-    assert sum(name == "InMemoryTableScanExec" for name, _ in nodes) >= 2
+    kernels = [(inside, node) for name, inside, node in nodes
+               if name == kernel]
+    scans = sum(name == "InMemoryTableScanExec" for name, _, _ in nodes)
+    if in_task:
+        assert [inside for inside, _ in kernels] == [False, True]
+        assert kernels[0][1].outputPartitioning().numPartitions() == 1
+        assert scans == 1
+    else:
+        assert [inside for inside, _ in kernels] == [True]
+        assert scans >= 2

@@ -584,3 +584,55 @@ def test_near_dup_plans_from_a_checkpoint(spark, tmp_path):
     [(tree, leaves)] = plans
     assert leaves == {"LogicalRDD"}, tree
     assert "MapInPandas" not in tree and "Range" not in tree, tree
+
+
+def test_trace_seams_called_once_per_build(spark, tmp_path):
+    """perfbench's traced corpus tour wraps ``dedup.minhash_lsh_candidates``,
+    ``components.keep_one_per_component`` and ``sinks.export_jsonl`` by
+    name, and matches every ``DataFrame.count`` made outside them
+    against ``CORPUS_STAGES`` in order.  So a near-dup build calls each
+    seam once, and the counts an operator makes to pick its plan stay
+    inside its seam."""
+    from unittest.mock import patch
+
+    from origami_spark import sinks
+    from origami_spark.operators import components, dedup
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "perfbench"))
+    from workloads import CORPUS_STAGES
+
+    (tmp_path / "a.warc").write_bytes(synth_warc(generate_pages(42, 80)))
+    frame_cls = type(spark.range(1))
+    count = frame_cls.count
+    depth, top, calls = [0], [], {}
+
+    def counted(df):
+        rows = count(df)
+        if not depth[0]:
+            top.append(rows)
+        return rows
+
+    def seam(module, name):
+        fn = getattr(module, name)
+
+        def wrapped(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            depth[0] += 1
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                depth[0] -= 1
+        return patch.object(module, name, wrapped)
+
+    with patch.object(frame_cls, "count", counted), \
+            seam(dedup, "minhash_lsh_candidates"), \
+            seam(components, "keep_one_per_component"), \
+            seam(sinks, "export_jsonl"):
+        counts = build_corpus(
+            spark, read_warc(spark, str(tmp_path / "*.warc")),
+            str(tmp_path / "out"), min_tokens=5, near_dup=True,
+            block_domains=spark.createDataFrame([("blocked.example",)],
+                                                "domain string"))
+    assert calls == {"minhash_lsh_candidates": 1,
+                     "keep_one_per_component": 1, "export_jsonl": 1}
+    assert top == [counts[key] for key, _ in CORPUS_STAGES]

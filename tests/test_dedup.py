@@ -1,7 +1,11 @@
 """Dedup operators: Arrow-kernel/relational MinHash parity, hot-shingle
 df-cutoff bounds, banding candidate semantics."""
 
+from unittest import mock
+
 import pyspark.sql.functions as F
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from origami_spark.operators.dedup import (
     minhash_lsh_candidates,
@@ -26,6 +30,16 @@ def test_minhash_kernel_matches_relational(spark):
          for r in minhash_signatures(docs, n=3, k=16).collect()}
     assert a == b
     assert len(a) > 0
+
+
+def test_minhash_kernel_signs_nothing_without_shingles(spark):
+    """A batch whose docs are all NULL or shorter than n tokens yields
+    no signature rows, like the relational form, instead of failing
+    the Arrow conversion of an empty list column."""
+    docs = spark.createDataFrame([(0, None), (1, "two words")],
+                                 "doc_id bigint, text string")
+    assert minhash_signatures_kernel(docs, n=3, k=16).count() == 0
+    assert minhash_signatures(docs, n=3, k=16).count() == 0
 
 
 def test_minhash_lsh_kernel_vs_relational_candidates(spark, monkeypatch):
@@ -91,6 +105,89 @@ def test_minhash_verification_rejects_band_collisions(spark):
     assert (0, 1) in verified
     assert verified[(0, 1)] >= 0.5
     assert (0, 2) not in verified and (1, 2) not in verified
+
+
+_VOCAB = ("alpha beta gamma delta epsilon zeta eta theta iota kappa lambda "
+          "mu nu xi omicron pi rho sigma tau upsilon phi chi psi omega").split()
+
+
+def _near_text(template: int, edits: int) -> str:
+    """24 distinct words of one template, the first ``edits`` of every
+    sixth word replaced: texts one edit apart are near-dups, so edits
+    0..3 of one template form a chain."""
+    words = [f"{_VOCAB[(5 * template + 7 * i) % len(_VOCAB)]}{template}"
+             for i in range(len(_VOCAB))]
+    for e in range(edits):
+        words[6 * e] = f"edit{e}"
+    return " ".join(words)
+
+
+_ODD_TEXTS = st.sampled_from([None, "", "two words", "one"])
+
+
+@settings(max_examples=8, deadline=None)
+@given(st.data())
+def test_capped_minhash_kernel_equals_relational(spark, data):
+    """The capped minhash_lsh_candidates gives the same rows and schema
+    from the in-task kernel as from the relational path, verified or
+    not.  Planted exact-copy clusters make buckets exactly at, one above
+    and far above the cap; near-dup chains, docs shorter than n tokens,
+    NULL text and duplicate doc_ids ride along."""
+    from origami_spark.operators import dedup
+    from origami_spark.session import cache_scope
+
+    cap = data.draw(st.integers(1, 3), label="max_bucket")
+    texts = [_near_text(t, 0)
+             for t, m in enumerate((cap, cap + 1, 3 * cap + 2))
+             for _ in range(m)]
+    texts += data.draw(st.lists(st.one_of(
+        st.builds(_near_text, st.integers(3, 4), st.integers(0, 3)),
+        _ODD_TEXTS), max_size=10), label="extra")
+    ids = data.draw(st.permutations(range(len(texts))), label="ids")
+    rows = list(zip(ids, texts)) + data.draw(st.lists(st.tuples(
+        st.sampled_from(ids),
+        st.one_of(st.builds(_near_text, st.integers(0, 4),
+                            st.integers(0, 3)), _ODD_TEXTS)),
+        max_size=3), label="duplicate ids")
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    for agreement in (None, 0.5):
+        got = []
+        for limit in (1 << 62, -1):
+            with mock.patch.object(dedup, "_KERNEL_SIGNATURES", limit), \
+                    cache_scope():
+                df = dedup.minhash_lsh_candidates(
+                    docs, min_sig_agreement=agreement, max_bucket=cap)
+                got.append((df.schema, sorted(map(tuple, df.collect()))))
+        assert got[0] == got[1]
+        assert got[0][1], "the planted clusters pair"
+
+
+def test_sig_agreement_matches_spark_rounding(spark):
+    """For every agreement count c of k = 1..64 components, the in-task
+    kernel's sig_agreement is bit-identical to Spark's ``round(c / k,
+    4)`` (HALF_UP on the double's decimal string), and so is every
+    threshold decision on it."""
+    import numpy as np
+
+    from origami_spark.operators.dedup import _agreements, _sig_agreement
+
+    rows = [(k, c, list(range(k)), list(range(c)) + [-1] * (k - c))
+            for k in range(1, 65) for c in range(k + 1)]
+    df = spark.createDataFrame(
+        rows, "k int, c int, sig_a array<bigint>, sig_b array<bigint>"
+    ).select("k", "c", _sig_agreement().alias("v"))
+    thresholds = [0.5, 0.0313, 0.0312, 0.6667, 0.3333, 0.15625]
+    spark_rows = df.select(
+        "k", "c", "v", *[(F.col("v") >= t).alias(f"t{i}")
+                         for i, t in enumerate(thresholds)]).collect()
+    assert len(spark_rows) == len(rows)
+    for r in spark_rows:
+        value = np.array(_agreements(r["k"]))[r["c"]]
+        assert value.hex() == r["v"].hex(), (r["k"], r["c"])
+        assert [bool(value >= t) for t in thresholds] == \
+            [r[f"t{i}"] for i in range(len(thresholds))]
+    # the tie 1/32 = 0.03125 rounds up, where Python's round() gives 0.0312
+    assert _agreements(32)[1] == 0.0313
 
 
 def test_substring_dup_constructed(spark):

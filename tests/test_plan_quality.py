@@ -207,3 +207,31 @@ def test_dsir_topk_prunes_before_window(spark):
     # running-sum-minus-group expression) survives into the plan
     assert re.search(r"\(\(_we\d+#\d+L - gn#\d+L\) < 5\)", plan) \
         or re.search(r"prefix#\d+L < 5", plan), plan
+
+
+def test_capped_minhash_job_count(spark):
+    """A capped, verified ``minhash_lsh_candidates`` over ~1,000 docs
+    builds, verifies and dedupes its pairs in one in-task kernel: 6
+    Spark jobs on the test session, where the relational pair path ran 16
+    for the same 48 pairs.  A plan change that slips back to the
+    relational path fails here."""
+    from origami_spark.operators.dedup import minhash_lsh_candidates
+    from origami_spark.operators.text import portable_hash60
+    from origami_spark.session import cache_scope, checkpoint
+
+    sc = spark.sparkContext
+    with cache_scope():
+        pages = pages_df(spark, 1000).select(
+            portable_hash60(F.col("url")).alias("doc_id"), "text")
+        # exact copies under new ids: clusters for the kernel to pair
+        docs = checkpoint(pages.unionByName(pages.limit(50).select(
+            (F.col("doc_id") + 1).alias("doc_id"), "text")))
+        sc.setJobGroup("capped-minhash", "job-count probe")
+        try:
+            pairs = minhash_lsh_candidates(
+                docs, min_sig_agreement=0.5, max_bucket=128).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("capped-minhash")
+    assert len(pairs) >= 40
+    assert len(jobs) <= 6, sorted(jobs)
