@@ -7,11 +7,12 @@ Times individual queries() entries the way the frozen bench times one
 meter), after one untimed pass over EVERY listed entry: the frozen
 bench warms only its WARM_FIRST entries, so there a reading depends on
 which entries ran before it in the session.  Also dumps
-``.explain("formatted")`` plans to plans/r06/.
+``.explain("formatted")`` plans, by default to ``.plan_dumps/``
+(git-ignored).
 
 Usage:
   python bench_extra.py time <query> [<query> ...] [--sf DIR] [--runs K]
-  python bench_extra.py plan <query> [--sf DIR] [--out plans/r06/<q>_before.txt]
+  python bench_extra.py plan <query> [--sf DIR] [--out .plan_dumps/<q>_before.txt]
   python bench_extra.py all [--sf DIR]          # every BENCH_QUERIES row once
 """
 
@@ -68,7 +69,7 @@ def main():
             df = qs[name](spark, sf)
             txt = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
-            dest = out_path or f"plans/r06/{name}.txt"
+            dest = out_path or f".plan_dumps/{name}.txt"
             os.makedirs(os.path.dirname(dest), exist_ok=True)
             with open(dest, "w") as f:
                 f.write(txt)

@@ -3,8 +3,8 @@
 The similarity/semantic-dedup stack (``operators/similarity.py``,
 ``dedup.embedding_near_dups*``) consumes an ``embedding array`` column;
 real pipelines produce it with a neural encoder, which this container
-does not have.  ``hashed_embedding_*`` closes that gap with the
-*hashing trick* (Weinberger et al. 2009, "Feature Hashing for Large
+does not have.  ``hashed_embedding_rows`` gives a model-free
+embedding in sparse form with the *hashing trick* (Weinberger et al. 2009, "Feature Hashing for Large
 Scale Multitask Learning", ICML — public): each token hashes to one of
 ``dim`` buckets with a pseudo-random sign, bucket counts are summed,
 and the vector is L2-normalized.  Sparse bag-of-words cosine is a real
@@ -19,14 +19,12 @@ Plan shape (the 100 TB story): one token explode feeds ONE hash
 aggregation on ``(doc_id, bucket)`` with map-side partial combine —
 data movement is bounded by ``min(tokens, dim)`` rows per doc, <= dim
 after the combine.  The per-doc norm is a window over those <= dim
-rows (never the corpus), and the dense-vector assembly reuses the same
-``doc_id`` partitioning, so the whole chain costs two compact
+rows (never the corpus), so the whole chain costs two compact
 exchanges regardless of corpus size.
 
 Reference parity: origami has no embedding stage; this extends the
 grafted corpus-curation family (the SURVEY §2.10 "beyond the
-reference" charter) and is the bridge that lets SemDeDup/ANN run from
-raw ``documents.text`` with no external model artifact.
+reference" charter); the ``text_hash_embedding`` gate runs it.
 """
 
 from __future__ import annotations
@@ -40,7 +38,7 @@ from pyspark.sql import functions as F
 from origami_spark.operators.similarity import _round6 as _quant6
 from origami_spark.operators.text import portable_hash60, tokens_col
 
-__all__ = ["hashed_embedding_rows", "hashed_embedding_vectors"]
+__all__ = ["hashed_embedding_rows"]
 
 
 def hashed_embedding_rows(docs: DataFrame, dim: int = 64) -> DataFrame:
@@ -83,31 +81,5 @@ def hashed_embedding_rows(docs: DataFrame, dim: int = 64) -> DataFrame:
         .select(
             "doc_id", "dim_id",
             _quant6(F.col("c") / F.sqrt(F.col("ss"))).alias("weight"),
-        )
-    )
-
-
-def hashed_embedding_vectors(docs: DataFrame) -> DataFrame:
-    """Dense 64-dim form for the ANN/SemDeDup consumers:
-    ``(vec_id, embedding array<double>)``, zero-filled at cancelled or
-    untouched buckets.  Docs with no tokens are absent (there is no
-    meaningful unit vector for them).  Groups on the partitioning the
-    sparse form already established, so assembly adds no corpus-sized
-    exchange; map lookup keeps the result independent of
-    ``collect_list`` order."""
-    rows = hashed_embedding_rows(docs)
-    m = F.map_from_entries(F.collect_list(F.struct("dim_id", "weight")))
-    return (
-        rows.groupBy("doc_id")
-        .agg(m.alias("_m"))
-        .select(
-            F.col("doc_id").alias("vec_id"),
-            F.transform(
-                F.sequence(F.lit(0), F.lit(63)),
-                lambda i: F.coalesce(
-                    F.element_at("_m", i.cast("int")),
-                    F.lit(0.0),
-                ),
-            ).alias("embedding"),
         )
     )

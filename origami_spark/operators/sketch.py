@@ -32,14 +32,12 @@ sum (associative — partition-order independent); the single division
 in the KMV estimate is one exact-IEEE double expression over exactly
 representable operands (the bm25_topk precedent), floored to BIGINT.
 
-Every sketch is an associative monoid with an explicit merge
-(:func:`kmv_merge`, :func:`countmin_merge`, :func:`bloom_merge`,
-:func:`hist_merge`): shards/days persist small signature relations and
-the corpus-wide answer is a merge over signatures, never a re-scan.
-The merges are LOSSLESS — merged state is bit-identical to state built
-over the concatenated input (tested per sketch) — which is the
-property that lets a 1000-executor job combine per-partition sketches
-without any accuracy cliff.
+KMV signatures merge (:func:`kmv_merge`): shards/days persist small
+signature relations and the corpus-wide answer is a merge over
+signatures, never a re-scan.  The merge is LOSSLESS — the merged
+signature is bit-identical to the one built over the concatenated
+input — which is the property that lets a 1000-executor job combine
+per-partition sketches without any accuracy cliff.
 
 Scale design: KMV shuffles the distinct (group, hash) relation once,
 then ranks inside 64 hash sub-groups so no task ever sorts more than
@@ -69,13 +67,10 @@ __all__ = [
     "kmv_set_ops_grouped",
     "countmin_build",
     "countmin_estimate",
-    "countmin_merge",
     "bloom_build",
     "bloom_probe",
-    "bloom_merge",
     "hist_build",
     "hist_quantile",
-    "hist_merge",
     "countmin_topk",
 ]
 
@@ -301,40 +296,6 @@ def _kmv_setops_finalize(u: DataFrame, k: int) -> DataFrame:
         (F.col("n_both").cast("double")
          / F.col("n_kept").cast("double")).alias("jaccard"),
     )
-
-
-def countmin_merge(sketches: list[DataFrame]) -> DataFrame:
-    """Union of count-min sketches = per-cell counter sum (integer
-    addition is associative/commutative, so the merged sketch is
-    bit-identical to one built over the concatenated input).  The
-    aggregation key space stays ≤ d·w regardless of shard count."""
-    u = sketches[0]
-    for s in sketches[1:]:
-        u = u.unionByName(s)
-    return (u.groupBy("row", "bucket")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt")))
-
-
-def bloom_merge(blooms: list[DataFrame]) -> DataFrame:
-    """Union of Bloom filters = bitwise OR = distinct union of set bit
-    positions (≤ m rows).  Merged filter ≡ filter built over the
-    concatenated keys — no false negatives survive a merge."""
-    u = blooms[0]
-    for b in blooms[1:]:
-        u = u.unionByName(b)
-    return u.select("pos").distinct()
-
-
-def hist_merge(hists: list[DataFrame]) -> DataFrame:
-    """Union of equi-width histograms (same lo/hi/bins) = per-bin
-    count sum; merged histogram ≡ histogram of the concatenated input,
-    so :func:`hist_quantile` over the merge carries the same ≤ one-bin
-    error bound."""
-    u = hists[0]
-    for h in hists[1:]:
-        u = u.unionByName(h)
-    return (u.groupBy("bin")
-            .agg(F.sum("cnt").cast("bigint").alias("cnt")))
 
 
 def _cm_bucket(item_col, row_col, width: int):

@@ -62,15 +62,3 @@ def table_cells(blocks: DataFrame) -> DataFrame:
         "text",
         (F.col("has_header") & (F.col("row") == 1)).alias("is_header"),
     )
-
-
-def tables_summary(blocks: DataFrame) -> DataFrame:
-    """tables.json-shaped structure table: per table, the row/column
-    counts and divider positions (row indices — explicit in HTML)."""
-    cells = table_cells(blocks)
-    return cells.groupBy("url", "table_path").agg(
-        F.max("row").alias("n_rows"),
-        F.max("col").alias("n_cols"),
-        F.max(F.when(F.col("is_header"), 1).otherwise(0)).cast("boolean").alias("has_header"),
-        F.sort_array(F.collect_set("row")).alias("dividers"),
-    )

@@ -15,8 +15,6 @@ The Spark-native survivor of origami's whole batch framework
 * runtime.json lineage          (``processor.py:628-662``)  ->
   `_lineage` rows per (stage, partition): doc count, order-insensitive
   url digest (bit_xor of xxhash64), wall time, status
-* stats batch                   (``batch/utils/stats.py:88-103``) ->
-  `lineage_stats`: count + min/median/p90 over wall times
 """
 
 from __future__ import annotations
@@ -153,112 +151,3 @@ def run_stage(
     if not latest["manifest"]:
         return result.limit(0).drop("_part_id", "_run_id")
     return read_snapshot(spark, work_dir, name)
-
-
-def reset_stages(work_dir: str, stages) -> list:
-    """Delete chosen stage checkpoints so they recompute on the next run
-    (the `reset` batch analog, ``batch/utils/reset.py:14-60``; with
-    Iceberg this is a snapshot rollback or a dropped table): each stage's
-    directory and snapshot manifests go.  Returns the stages whose
-    directory was removed."""
-    import shutil
-
-    from .snapshots import delete_snapshots
-
-    removed = []
-    for stage in stages:
-        path = os.path.join(work_dir, stage)
-        if os.path.exists(path):
-            shutil.rmtree(path)
-            removed.append(stage)
-        # drop snapshots even when the table dir is already gone
-        # (removed out-of-band): a surviving stale manifest would make
-        # the next run_stage extend it with fresh files while its old
-        # entries point at deleted data — the stage would then fail on
-        # every read, permanently
-        delete_snapshots(work_dir, stage)
-    return removed
-
-
-def cleanup_incomplete(work_dir: str) -> list:
-    """Remove stage dirs whose write never committed (no _SUCCESS) — the
-    corrupt-artifact cleanup analog (``batch/utils/cleanup.py:14-50``).
-    Parquet dir writes are atomic-at-commit, so a missing marker means a
-    crashed writer left partial files."""
-    import shutil
-
-    from .snapshots import SNAPSHOT_DIR
-
-    removed = []
-    if not os.path.isdir(work_dir):
-        return removed
-    for stage in os.listdir(work_dir):
-        if stage == SNAPSHOT_DIR:  # catalog metadata, not a parquet table
-            continue
-        path = os.path.join(work_dir, stage)
-        if os.path.isdir(path) and not os.path.exists(
-            os.path.join(path, "_SUCCESS")
-        ):
-            shutil.rmtree(path)
-            from .snapshots import delete_snapshots
-
-            delete_snapshots(work_dir, stage)
-            removed.append(stage)
-    return removed
-
-
-def sample_stage(spark: SparkSession, work_dir: str, stage: str) -> DataFrame:
-    """Deterministic 1% sample of a stage's committed rows for eyeballing
-    (the `sample` export analog, ``batch/utils/sample.py``)."""
-    from .snapshots import read_snapshot
-
-    return read_snapshot(spark, work_dir, stage).sample(fraction=0.01, seed=42)
-
-
-def lineage_stats(spark: SparkSession, work_dir: str) -> DataFrame:
-    """Per-stage doc counts + wall-time quantiles (stats.py analog)."""
-    lin = spark.read.parquet(os.path.join(work_dir, LINEAGE_DIR))
-    return lin.groupBy("stage", "run_id", "status").agg(
-        F.sum("doc_count").alias("docs"),
-        F.count(F.lit(1)).alias("partitions"),
-        F.min("wall_time").alias("wall_min"),
-        F.expr("percentile(wall_time, 0.5)").alias("wall_median"),
-        F.expr("percentile(wall_time, 0.9)").alias("wall_p90"),
-    )
-
-
-def compact_stage(spark: SparkSession, work_dir: str, name: str) -> dict:
-    """Small-file compaction for a committed stage (the Iceberg
-    rewrite-data-files analog): read the latest snapshot, rewrite it as
-    one parquet file in the same directory, and commit the result as a
-    REWRITE snapshot.  The new head serves reads from the compacted
-    file; every older version still time-travels over the original
-    files until ``expire_snapshots`` + ``vacuum_stage`` reclaim them.
-
-    At 10^5 partitions a long-appended stage accretes one small file
-    per partition per run; reads then pay per-file open cost and the
-    driver pays listing cost.  Compaction is the standard maintenance
-    pass — run it between ingest waves, never concurrently with a
-    writer (single-writer-per-stage is already the snapshot-commit
-    contract).
-    """
-    from .snapshots import _data_files, commit_snapshot, snapshots
-
-    out_path = os.path.join(work_dir, name)
-    # read the head manifest RAW (read_snapshot drops the internal
-    # _part_id/_run_id lineage columns, but the rewrite must preserve
-    # the on-disk schema: a stage keeps one schema across its history)
-    head = snapshots(work_dir, name)
-    if not head:
-        raise ValueError(f"no snapshots committed for stage {name!r}")
-    # mergeSchema: a head manifest can mix schemas (files from an
-    # older engine version may lack the lineage columns) — schema
-    # inference from one arbitrary file would silently truncate
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(out_path, f) for f in head[-1]["manifest"]])
-    before = _data_files(out_path)
-    # the source is a pinned file list (read_snapshot reads explicit
-    # paths), so appending the rewrite into the same directory is safe
-    df.coalesce(1).write.mode("append").parquet(out_path)
-    return commit_snapshot(work_dir, name, run_id="compact-" + uuid.uuid4().hex[:8],
-                           before_files=before, replace=True)

@@ -44,15 +44,9 @@ def _data_files(table_path: str) -> list:
 
 
 def commit_snapshot(work_dir: str, stage: str, run_id: str,
-                    before_files: list, replace: bool = False) -> dict:
-    """Record the files added since `before_files` as a new version.
-
-    ``replace=False`` (append commit): the new manifest extends the
-    previous one — the table grows.  ``replace=True`` (rewrite commit,
-    the compaction case): the new manifest is EXACTLY the added files —
-    the rewrite output replaces the table content going forward, while
-    every older snapshot still references the old files, so time travel
-    keeps working until those snapshots are expired.
+                    before_files: list) -> dict:
+    """Record the files added since `before_files` as a new version
+    (an append commit: the new manifest extends the previous one).
 
     Returns the snapshot dict (version, run_id, added/total files)."""
     table_path = os.path.join(work_dir, stage)
@@ -60,10 +54,7 @@ def commit_snapshot(work_dir: str, stage: str, run_id: str,
     added = sorted(set(after) - set(before_files))
     snaps = snapshots(work_dir, stage)
     version = (snaps[-1]["version"] + 1) if snaps else 1
-    if replace:
-        manifest = added
-    else:
-        manifest = (snaps[-1]["manifest"] if snaps else []) + added
+    manifest = (snaps[-1]["manifest"] if snaps else []) + added
     snap = {
         "stage": stage,
         "version": version,
@@ -110,18 +101,6 @@ def commit_snapshot(work_dir: str, stage: str, run_id: str,
     return snap
 
 
-def expire_snapshots(work_dir: str, stage: str) -> int:
-    """Drop every snapshot version but the head (the Iceberg
-    expire-snapshots analog).  Afterwards ``vacuum_stage``
-    reclaims any data file no surviving manifest references — the
-    second half of the compaction story.  Returns versions removed."""
-    to_drop = snapshots(work_dir, stage)[:-1]
-    snap_dir = os.path.join(work_dir, SNAPSHOT_DIR)
-    for s in to_drop:
-        os.remove(os.path.join(snap_dir, f"{stage}-v{s['version']}.json"))
-    return len(to_drop)
-
-
 def delete_snapshots(work_dir: str, stage: str) -> int:
     """Remove every snapshot of a stage (paired with deleting the stage
     table itself — stale manifests pointing at deleted files would make
@@ -134,27 +113,6 @@ def delete_snapshots(work_dir: str, stage: str) -> int:
             if name.startswith(f"{stage}-v") and name.endswith(".json"):
                 os.remove(os.path.join(snap_dir, name))
                 removed += 1
-    return removed
-
-
-def vacuum_stage(work_dir: str, stage: str) -> list:
-    """Delete data files no snapshot manifest references — crashed
-    writers' orphans whose work was recomputed (the table-format
-    expire/vacuum analog).  NB after a REWRITE commit (compact_stage)
-    the pre-compaction files are still referenced by OLDER snapshots,
-    so vacuum alone removes nothing — run ``expire_snapshots`` first
-    to release them.  Only safe
-    while no writer is appending to the stage.  Returns the removed
-    file names."""
-    table_path = os.path.join(work_dir, stage)
-    referenced: set = set()
-    for snap in snapshots(work_dir, stage):
-        referenced.update(snap["manifest"])
-    removed = []
-    for f in _data_files(table_path):
-        if f not in referenced:
-            os.remove(os.path.join(table_path, f))
-            removed.append(f)
     return removed
 
 
@@ -194,57 +152,3 @@ def read_snapshot(spark: SparkSession, work_dir: str, stage: str,
     table_path = os.path.join(work_dir, stage)
     paths = [os.path.join(table_path, f) for f in snap["manifest"]]
     return spark.read.parquet(*paths).drop("_part_id", "_run_id")
-
-
-def snapshot_diff(spark: SparkSession, work_dir: str, stage: str,
-                  from_version: int, to_version: int | None = None) -> DataFrame:
-    """Rows added between two snapshot versions (the incremental-read /
-    changelog analog): reads ONLY the files that entered the manifest
-    after ``from_version`` — an incremental consumer pays for the delta,
-    never a full-table diff.
-
-    Append commits make the delta exactly the appended rows.  A rewrite
-    commit (compact_stage) replaces the manifest, so a range spanning
-    one has no meaningful row delta — the whole table would masquerade
-    as "added" and an incremental consumer would re-ingest everything.
-    Such ranges RAISE; consume increments between append commits and
-    treat the rewrite as a compaction barrier.
-
-    Schema matches ``read_snapshot`` (internal ``_part_id``/``_run_id``
-    columns dropped) whether or not the delta is empty."""
-    snaps = snapshots(work_dir, stage)
-    by_v = {s["version"]: s for s in snaps}
-    if from_version not in by_v:
-        raise ValueError(
-            f"stage {stage!r} has no snapshot v{from_version}; "
-            f"available: {sorted(by_v)}")
-    to = to_version if to_version is not None else snaps[-1]["version"]
-    if to not in by_v:
-        raise ValueError(
-            f"stage {stage!r} has no snapshot v{to}; available: {sorted(by_v)}")
-    if to < from_version:
-        raise ValueError("to_version must be >= from_version")
-    for v in range(from_version + 1, to + 1):
-        prev, cur = by_v.get(v - 1), by_v.get(v)
-        if prev and cur and not set(cur["manifest"]) >= set(prev["manifest"]):
-            # manifest shrank/was replaced: a rewrite commit, not an
-            # append — there is no row-level delta across it
-            raise ValueError(
-                f"stage {stage!r} v{v} is a rewrite commit "
-                f"(run {cur['run_id']!r}); snapshot_diff cannot span it")
-    base = set(by_v[from_version]["manifest"])
-    new_files = [f for f in by_v[to]["manifest"] if f not in base]
-    table_path = os.path.join(work_dir, stage)
-    if not new_files:
-        if not by_v[to]["manifest"]:
-            raise ValueError(
-                f"stage {stage!r} v{to} has no data files — no schema "
-                "to shape an empty delta from")
-        # schema-only: one manifest file carries the schema — don't
-        # touch every footer of a possibly-huge table for zero rows
-        one = os.path.join(table_path, by_v[to]["manifest"][0])
-        return spark.read.parquet(one).drop("_part_id", "_run_id").limit(0)
-    return (
-        spark.read.parquet(*[os.path.join(table_path, f) for f in new_files])
-        .drop("_part_id", "_run_id")
-    )

@@ -1,18 +1,12 @@
 """Hashed (feature-hashing) embeddings: exact parity with a
-pure-Python reference, partition independence, unit norm, and the
-bridge into the ANN consumers."""
+pure-Python reference, partition independence, sign cancellation and
+plan shape."""
 
 import hashlib
 import math
 import re
 
-import pytest
-from pyspark.sql import functions as F
-
-from origami_spark.operators.embed import (
-    hashed_embedding_rows,
-    hashed_embedding_vectors,
-)
+from origami_spark.operators.embed import hashed_embedding_rows
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog"),
@@ -65,31 +59,6 @@ def test_rows_partition_independent(spark):
     assert a == b and len(a) > 0
 
 
-def test_vectors_unit_norm_and_dense_shape(spark):
-    dim = 64
-    vecs = {r["vec_id"]: list(r["embedding"])
-            for r in hashed_embedding_vectors(_docs_df(spark)).collect()}
-    assert set(vecs) == {1, 2, 3, 4}
-    for v in vecs.values():
-        assert len(v) == dim
-        # 6-decimal quantization moves each coordinate <= 5e-7, so the
-        # squared norm sits within ~2*sqrt(dim)*5e-7 of exactly 1
-        assert abs(sum(x * x for x in v) - 1.0) < 1e-5
-    assert vecs[1] == vecs[2]   # identical text -> identical vector
-
-
-def test_vectors_feed_cosine_topk(spark):
-    """The bridge contract: exact duplicates rank each other first with
-    cosine 1.0 through the unmodified ANN baseline."""
-    from origami_spark.operators.similarity import cosine_topk
-
-    emb = hashed_embedding_vectors(_docs_df(spark))
-    top = cosine_topk(emb, [1], k=1).collect()
-    assert [(r["query_id"], r["vec_id"], r["cosine"]) for r in top] == [
-        (1, 2, 1.0)
-    ]
-
-
 def test_sign_cancellation_drops_coordinate(spark):
     """Two tokens in the same bucket with opposite signs contribute
     nothing; the doc's remaining coordinates still normalize to 1."""
@@ -114,32 +83,12 @@ def test_sign_cancellation_drops_coordinate(spark):
 
 def test_plan_no_python_udf_and_two_exchanges(spark):
     df = spark.createDataFrame(DOCS, "doc_id bigint, text string")
-    plan = (hashed_embedding_vectors(df)
+    plan = (hashed_embedding_rows(df)
             ._jdf.queryExecution().executedPlan().toString())
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # explode -> (doc_id, bucket) agg is one exchange; the norm window,
-    # zero-filter, and dense assembly all reuse the doc_id partitioning
+    # explode -> (doc_id, bucket) agg is one exchange; the per-doc norm
+    # window is the other
     assert plan.count("Exchange hashpartitioning") <= 2, plan
-
-
-def test_vectors_feed_semantic_dedup(spark):
-    """End-to-end text -> hashed vectors -> k-means -> SemDeDup: the
-    exact-duplicate doc pair lands in one cluster with cosine 1.0."""
-    from origami_spark.operators.similarity import (
-        semantic_dedup_pairs,
-        train_ivf_centroids,
-    )
-
-    emb = hashed_embedding_vectors(_docs_df(spark))
-    cents = train_ivf_centroids(emb, n_clusters=2, iters=2)
-    cdf = spark.createDataFrame(
-        [(int(i), [float(v) for v in c],
-          float(sum(float(v) * float(v) for v in c)))
-         for i, c in enumerate(cents)],
-        "cluster int, centroid array<double>, c_sq double")
-    pairs = semantic_dedup_pairs(emb, cdf, threshold=0.95).collect()
-    assert [(r["vec_a"], r["vec_b"], r["cosine"])
-            for r in pairs] == [(1, 2, 1.0)]
 
 
 def test_null_ids_drop_instead_of_merging(spark):

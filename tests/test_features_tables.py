@@ -1,7 +1,7 @@
 """S4 features + table-structure stages."""
 
 from origami_spark.operators.features import block_features
-from origami_spark.operators.tables import table_cells, tables_summary
+from origami_spark.operators.tables import table_cells
 from origami_spark.pipeline import parse_stage
 from origami_spark.sources.corpus import pages_df
 
@@ -60,14 +60,12 @@ def test_table_cells_roundtrip(spark):
         (3, 1, "c", False), (3, 2, "d", False),
     ]
     assert cells[0]["cell_path"] == "TABULAR/0.1.1.1"
-    summ = tables_summary(blocks).collect()[0]
-    assert (summ["n_rows"], summ["n_cols"], summ["has_header"]) == (3, 2, True)
 
 
 def test_corpus_tables_explode(spark):
     pages = pages_df(spark, 120, num_partitions=4)
     blocks = parse_stage(pages)
     n_tables = blocks.filter("label = 'TABULAR'").count()
-    summ = tables_summary(blocks)
-    assert summ.count() == n_tables
-    assert summ.filter("n_rows < 1 or n_cols < 1").count() == 0
+    cells = table_cells(blocks)
+    assert cells.select("url", "table_path").distinct().count() == n_tables
+    assert cells.filter("row < 1 or col < 1").count() == 0

@@ -2,12 +2,9 @@
 frames (rule-by-rule goldens, SURVEY.md §7)."""
 
 import pyspark.sql.functions as F
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from origami_spark.kernels.parse import BLOCKS_SCHEMA
 from origami_spark.operators.layout import classify, drop_contained, merge_adjacent, refine
-from origami_spark.operators.order import xy_cut_1d
 
 
 def mkblocks(spark, rows):
@@ -137,53 +134,6 @@ def test_refine_multiple_urls_independent(spark):
     assert got.filter("url = 'b'").count() == 1
 
 
-# --- xy-cut parity implementation ---
-
-def test_xycut_disjoint_is_start_order():
-    spans = [(2, 50, 60), (0, 0, 10), (1, 20, 30)]
-    assert xy_cut_1d(spans) == [0, 1, 2]
-
-
-def test_xycut_overlap_group_falls_back():
-    spans = [(0, 0, 100), (1, 50, 150), (2, 140, 200)]
-    assert xy_cut_1d(spans) == [0, 1, 2]
-
-
-def test_xycut_separator_boost():
-    # widest gap is 30-60; separator sits in the narrower 70-90 gap and
-    # doubles its score (20*2=40 > 30) -> cut there first.  For disjoint
-    # 1-D spans the leaf order is unchanged (cut order only), so verify
-    # via the scoring path with an overlap group on one side.
-    spans = [(0, 0, 30), (1, 60, 70), (2, 90, 100)]
-    assert xy_cut_1d(spans, separators=[(72, 80)]) == [0, 1, 2]
-
-
-def test_xycut_separator_strength_weights_gap_choice():
-    """Strength-weighted boost: the gap holding the STRONGER separator
-    outranks both a wider bare gap and a gap with a weak separator
-    (thick-separator weighting, reference batch/detect/order.py:96-106).
-    Scores come from the real scoring function the recursion uses."""
-    from origami_spark.operators.order import (
-        _norm_separators,
-        separator_gap_score,
-        xy_cut_1d,
-    )
-
-    seps_raw = [(12, 15, 0.5), (62, 80, 4.0)]
-    # permutation invariant holds whatever the strengths
-    spans = [(0, 0, 10), (1, 20, 30), (2, 50, 60), (3, 90, 100)]
-    assert xy_cut_1d(spans, separators=seps_raw) == [0, 1, 2, 3]
-
-    seps = _norm_separators(seps_raw)
-    assert separator_gap_score(10, 20, seps) == 10 * 1.5   # weak separator
-    assert separator_gap_score(60, 90, seps) == 30 * 5.0   # strong wins
-    assert separator_gap_score(30, 50, seps) == 20 * 1.0   # bare gap
-    # a bare (start, end) separator defaults to strength 1.0 -> the
-    # historical constant x2 boost
-    assert separator_gap_score(
-        10, 20, _norm_separators([(12, 15)])) == 10 * 2.0
-
-
 def test_separator_strength_from_parse():
     """Parse emits strength: <hr size=N> uses the attribute, bare <hr>
     is 1.0, a textual rule line scales with glyph run length."""
@@ -195,21 +145,3 @@ def test_separator_strength_from_parse():
     assert [b.strength for b in seps] == [1.0, 3.0, 2.0]
 
 
-@settings(max_examples=200, deadline=None)
-@given(st.lists(st.tuples(st.integers(0, 1000), st.integers(0, 50)), max_size=30))
-def test_xycut_is_permutation(raw):
-    spans = [(i, s, s + w) for i, (s, w) in enumerate(raw)]
-    out = xy_cut_1d(spans)
-    assert sorted(out) == list(range(len(spans)))
-
-
-@settings(max_examples=100, deadline=None)
-@given(
-    st.lists(st.tuples(st.integers(0, 1000), st.integers(0, 50)), max_size=20),
-    st.lists(st.tuples(st.integers(0, 1000), st.integers(0, 20)), max_size=5),
-)
-def test_xycut_with_separators_still_permutation(raw, sep_raw):
-    spans = [(i, s, s + w) for i, (s, w) in enumerate(raw)]
-    seps = [(s, s + w) for (s, w) in sep_raw]
-    out = xy_cut_1d(spans, separators=seps)
-    assert sorted(out) == list(range(len(spans)))

@@ -1,6 +1,8 @@
 """Reachability: every ``origami_spark`` module is reached from a
 shipped entry point, or is listed in ``_KEEP`` with its reason; every
-defaulted parameter is set by some shipped call, or is listed in
+top-level function and class is named by shipped or package code, or
+is listed in ``_KEEP_FUNCTIONS`` with its reason; every defaulted
+parameter is set by some shipped call, or is listed in
 ``_KEEP_OPTIONS`` with its reason.
 
 Pure AST, no Spark.  The walk follows ``import`` / ``from ... import``
@@ -9,7 +11,8 @@ shipped entry points into ``origami_spark``.  A module that nothing
 ships reaches only its tests; it either gains a caller or is deleted
 together with them.  Likewise an option no caller sets is a
 configuration that no gate, job or benchmark runs: its default goes
-inline and the parameter goes.
+inline and the parameter goes.  A function only tests name is an
+operator that no gate, job or benchmark runs: it goes with its tests.
 """
 
 import ast
@@ -41,6 +44,29 @@ _KEEP = {
         "origami's evaluate.py",
 }
 
+# Top-level functions and classes outside ``_KEEP`` modules that only
+# tests name, kept on purpose.  Key: ``module.name``.
+_KEEP_FUNCTIONS = {
+    "origami_spark.operators.dedup.minhash_signatures":
+        "reference twin: test_minhash_kernel_matches_relational compares "
+        "minhash_signatures_kernel to it bit for bit",
+    "origami_spark.operators.dedup.simhash":
+        "reference twin: test_simhash_kernel_matches_relational compares "
+        "simhash_kernel to it bit for bit",
+    "origami_spark.operators.dedup.substring_fingerprints":
+        "reference twin of substring_fingerprints_kernel, compared row "
+        "for row in test_dedup",
+    "origami_spark.operators.similarity._ivf_topk_served_relational":
+        "reference twin: test_similarity compares ivf_topk_served to it "
+        "row for row",
+    "origami_spark.operators.sketch.kmv_set_ops":
+        "reference twin: test_kmv_set_ops_grouped_equivalence compares "
+        "kmv_set_ops_grouped to it",
+    "origami_spark.sources.corpus.generate_pages":
+        "the driver-side generator the goldens and the block-table pin "
+        "read (its output is pinned)",
+}
+
 # Defaulted parameters no shipped call sets, kept on purpose.  Key:
 # ``module.qualname(param)``.  Options of ``_KEEP`` modules may be set
 # by tests alone.
@@ -62,9 +88,6 @@ _KEEP_OPTIONS = {
         "reference twin of substring_fingerprints_kernel",
     "origami_spark.operators.dedup.substring_fingerprints(all_positions)":
         "reference twin of substring_fingerprints_kernel",
-    "origami_spark.operators.order.xy_cut_1d(separators)":
-        "origami's separator-aware gap scoring (ObstacleSampler), the "
-        "parity form of the 1-D XY-cut",
     "origami_spark.operators.similarity._ivf_topk_served_relational(k)":
         "reference twin of ivf_topk_served(k, nprobe)",
     "origami_spark.operators.similarity._ivf_topk_served_relational(nprobe)":
@@ -73,8 +96,6 @@ _KEEP_OPTIONS = {
         "data addressing: the run a resumed stage commits under",
     "origami_spark.plans.snapshots.read_snapshot(version)":
         "data addressing: time travel to a committed version",
-    "origami_spark.plans.snapshots.snapshot_diff(to_version)":
-        "data addressing: the upper version of a snapshot range",
     "origami_spark.session.get_spark(shuffle_partitions)":
         "deployment: the cluster's shuffle width",
     "origami_spark.streaming.ingest.stream_extract(available_now)":
@@ -156,6 +177,121 @@ def test_every_package_module_is_shipped_or_kept():
     modules = _modules()
     unreached = set(modules) - _reached(modules)
     assert unreached == set(_KEEP)
+
+
+def _names(node, skip=None) -> set:
+    """Names ``node`` refers to: every ``Name``, ``Attribute`` attr and
+    ``from ... import`` name, outside the subtree ``skip``.  Strings (an
+    ``__all__`` entry) refer to nothing.  Matching by bare name can
+    only over-accept."""
+    out = set()
+    for child in ast.iter_child_nodes(node):
+        if child is skip:
+            continue
+        if isinstance(child, ast.Name):
+            out.add(child.id)
+        elif isinstance(child, ast.Attribute):
+            out.add(child.attr)
+        elif isinstance(child, ast.ImportFrom):
+            out.update(a.name for a in child.names)
+        out |= _names(child, skip)
+    return out
+
+
+def _unnamed(package: dict, shipped: list, kept_modules=()) -> set:
+    """``module.name`` of every top-level ``def``/``class`` in
+    ``package`` (module -> source) outside ``kept_modules`` that no
+    source in ``shipped`` and no package code but its own body names."""
+    trees = {m: ast.parse(src) for m, src in package.items()}
+    named = {m: _names(t) for m, t in trees.items()}
+    shipped_names = set().union(*(_names(ast.parse(src)) for src in shipped))
+    unnamed = set()
+    for module, tree in trees.items():
+        if any(module == m or module.startswith(m + ".")
+               for m in kept_modules):
+            continue
+        elsewhere = shipped_names.union(
+            *(v for m, v in named.items() if m != module))
+        for node in tree.body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                 ast.ClassDef)) \
+                    and node.name not in elsewhere | _names(tree, node):
+                unnamed.add(f"{module}.{node.name}")
+    return unnamed
+
+
+def test_every_function_has_a_caller():
+    modules = _modules()
+    entries = {p for g in _ENTRY_GLOBS for p in _ROOT.glob(g)}
+    unnamed = _unnamed({m: p.read_text() for m, p in modules.items()},
+                       [p.read_text() for p in entries], _KEEP)
+    assert unnamed == set(_KEEP_FUNCTIONS)
+
+
+def test_function_guard_flags_a_test_only_function():
+    """Positive control: a planted function only tests name is flagged,
+    and so is one listed only in ``__all__`` or named only in its own
+    body; a module-attribute call, an import alias and a call from
+    other package code all count as callers."""
+    planted = {
+        "origami_spark.planted": """
+__all__ = ["by_attr", "by_alias", "exported", "test_only"]
+
+
+def _helper(df):
+    return df
+
+
+def by_attr(df):
+    return _helper(df)
+
+
+def by_alias(df):
+    return df
+
+
+def exported(df):
+    return df
+
+
+def test_only(df):
+    return df
+
+
+def recursive(n):
+    return recursive(n - 1) if n else 0
+
+
+class Sketch:
+    pass
+""",
+        "origami_spark.other": """
+from origami_spark.planted import Sketch
+
+Sketch()
+""",
+    }
+    shipped = ["""
+import origami_spark.planted as P
+from origami_spark.planted import by_alias as _b
+
+P.by_attr(df)
+_b(df)
+"""]
+    tests = "from origami_spark.planted import test_only\ntest_only(df)\n"
+    flagged = {"origami_spark.planted.exported",
+               "origami_spark.planted.test_only",
+               "origami_spark.planted.recursive"}
+    assert _unnamed(planted, shipped) == flagged
+    # a test is not a caller: counted as shipped, it would reach test_only
+    assert _unnamed(planted, [*shipped, tests]) \
+        == flagged - {"origami_spark.planted.test_only"}
+    # without its shipped call by_attr is flagged; its helper still is
+    # not, as long as by_attr's body names it
+    assert _unnamed(planted, [shipped[0].replace("P.by_attr(df)", "")]) \
+        == flagged | {"origami_spark.planted.by_attr"}
+    # a kept module's functions are not checked
+    assert _unnamed(planted, shipped, {"origami_spark.planted"}) == set()
 
 
 

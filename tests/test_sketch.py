@@ -135,24 +135,6 @@ def test_countmin_exact_when_wide(spark):
     assert all(r["cm_est"] == 3 for r in est.collect())
 
 
-def test_countmin_merge_is_sum(spark, zipf_items):
-    """Sketch union = summing counters (the shard-merge contract)."""
-    from origami_spark.operators.sketch import countmin_merge
-
-    half = len(zipf_items) // 2
-    a = spark.createDataFrame([(v,) for v in zipf_items[:half]], "v string")
-    b = spark.createDataFrame([(v,) for v in zipf_items[half:]], "v string")
-    merged = countmin_merge([
-        countmin_build(a, "v", width=64, depth=3),
-        countmin_build(b, "v", width=64, depth=3),
-    ])
-    whole = countmin_build(
-        spark.createDataFrame([(v,) for v in zipf_items], "v string"),
-        "v", width=64, depth=3)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect()))
-
-
 def test_kmv_merge_identity(spark, words_df):
     """kmv_merge over per-shard signatures is BIT-IDENTICAL to
     kmv_distinct over the concatenated input: any global k-minimum
@@ -192,24 +174,6 @@ def test_kmv_merge_grouped_identity(spark):
     merged = kmv_merge([sig_a, sig_b], k=32, by=["g"]).collect()
     whole = kmv_distinct(df, "v", k=32, by=["g"]).collect()
     assert sorted(map(tuple, merged)) == sorted(map(tuple, whole))
-
-
-def test_bloom_merge_identity(spark):
-    """Bloom union = distinct union of set positions; merged filter
-    equals the filter built over the concatenated keys, so merging
-    preserves the no-false-negative guarantee."""
-    from origami_spark.operators.sketch import bloom_merge
-
-    keys = [(f"k{i}",) for i in range(300)]
-    df = spark.createDataFrame(keys, "v string")
-    a, b = df.filter("v < 'k5'"), df.filter("v >= 'k5'")
-    merged = bloom_merge([bloom_build(a, "v", m=2048, d=4),
-                          bloom_build(b, "v", m=2048, d=4)])
-    whole = bloom_build(df, "v", m=2048, d=4)
-    assert (sorted(r["pos"] for r in merged.collect())
-            == sorted(r["pos"] for r in whole.collect()))
-    probe = bloom_probe(merged, df, "v", m=2048, d=4)
-    assert probe.filter("is_member = 0").count() == 0
 
 
 def test_countmin_weighted(spark):
@@ -298,20 +262,6 @@ def test_hist_clamps_out_of_range(spark):
         _hist_df(spark), "x", lo=0.0, hi=1000.0, bins=100).collect()}
     assert min(h) == 0 and max(h) == 99
     assert sum(h.values()) == 1002
-
-
-def test_hist_merge_is_sum(spark):
-    from origami_spark.operators.sketch import hist_build
-
-    from origami_spark.operators.sketch import hist_merge
-
-    df = _hist_df(spark)
-    a, b = df.filter("x < 500"), df.filter("x >= 500")
-    merged = hist_merge([hist_build(a, "x", 0.0, 1000.0, 50),
-                         hist_build(b, "x", 0.0, 1000.0, 50)])
-    whole = hist_build(df, "x", 0.0, 1000.0, 50)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect()))
 
 
 def test_hist_grouped_quantiles(spark):

@@ -78,14 +78,9 @@ def test_crash_on_first_run_recomputes_everything(spark, tmp_path):
     assert out.count() == 30
     assert out.groupBy("url").count().filter("count != 1").count() == 0
     assert [s["run_id"] for s in snapshots(wd, "s8_compose")] == ["r2"]
-    # the crashed run's orphan files linger in the raw dir until
-    # vacuumed; snapshot readers never saw them
-    from origami_spark.plans.snapshots import vacuum_stage
-
+    # the crashed run's orphan files linger in the raw dir; snapshot
+    # readers never see them
     assert spark.read.parquet(f"{wd}/s8_compose").count() == 60
-    removed = vacuum_stage(wd, "s8_compose")
-    assert removed
-    assert spark.read.parquet(f"{wd}/s8_compose").count() == 30
     assert read_snapshot(spark, wd, "s8_compose").count() == 30
 
 
@@ -131,14 +126,18 @@ def test_empty_source_stage_commits_cleanly(spark, tmp_path):
 
 
 def test_reset_removes_stale_snapshots(spark, tmp_path):
-    """reset_stages must drop the stage's manifests with the table —
-    stale manifests would reference deleted files forever."""
-    from origami_spark.plans.runner import reset_stages
+    """A stage reset drops the stage's manifests with the table (stale
+    manifests would reference deleted files forever); the next run
+    recomputes it from scratch as version 1."""
+    import shutil
+
+    from origami_spark.plans.snapshots import delete_snapshots
 
     wd = str(tmp_path / "wd")
     pages = pages_df(spark, 30, num_partitions=2).cache()
     extract_staged(spark, pages, wd, run_id="r1")
-    reset_stages(wd, ["s8_compose"])
+    shutil.rmtree(f"{wd}/s8_compose")
+    delete_snapshots(wd, "s8_compose")
     assert snapshots(wd, "s8_compose") == []
     out = extract_staged(spark, pages, wd, run_id="r2")
     assert out.count() == 30
@@ -216,29 +215,13 @@ def test_out_of_band_table_removal_recovers(spark, tmp_path):
     wd = str(tmp_path / "wd")
     pages = pages_df(spark, 20, num_partitions=2).cache()
     extract_staged(spark, pages, wd, run_id="r1")
-    shutil.rmtree(f"{wd}/s8_compose")  # out-of-band, bypassing reset_stages
+    shutil.rmtree(f"{wd}/s8_compose")  # out-of-band: manifests survive
 
     out = extract_staged(spark, pages, wd, run_id="r2")
     assert out.count() == 20
     # fresh history: one snapshot, readable, all rows present
     assert [s["version"] for s in snapshots(wd, "s8_compose")] == [1]
     assert read_snapshot(spark, wd, "s8_compose").count() == 20
-
-
-def test_reset_stages_drops_snapshots_without_table_dir(spark, tmp_path):
-    """reset_stages removes manifests even when the table dir is already
-    gone (removed out-of-band)."""
-    import shutil
-
-    from origami_spark.plans.runner import reset_stages
-
-    wd = str(tmp_path / "wd")
-    pages = pages_df(spark, 10, num_partitions=1).cache()
-    extract_staged(spark, pages, wd, run_id="r1")
-    shutil.rmtree(f"{wd}/s8_compose")
-    assert snapshots(wd, "s8_compose") != []  # stale manifests survive
-    reset_stages(wd, ["s8_compose"])
-    assert snapshots(wd, "s8_compose") == []
 
 
 def test_commit_without_hardlink_support(tmp_path, monkeypatch):
@@ -270,56 +253,6 @@ def test_commit_without_hardlink_support(tmp_path, monkeypatch):
             S.commit_snapshot(wd, "s1", "w2", [])
     finally:
         S.snapshots = orig
-
-
-def test_compact_stage_rewrites_head_keeps_time_travel(spark, tmp_path):
-    """Compaction rewrites the head into fewer files; older versions
-    still time-travel over the original files; expire + vacuum then
-    reclaims them and the head still reads."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from origami_spark.plans.runner import compact_stage, run_stage
-    from origami_spark.plans.snapshots import (
-        _data_files,
-        expire_snapshots,
-        read_snapshot,
-        snapshots,
-        vacuum_stage,
-    )
-
-    wd = str(tmp_path / "wd")
-    mk = lambda lo, hi: spark.range(lo, hi).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url"),
-        F.col("id").alias("v"))
-    run_stage(spark, "s", mk(0, 20), lambda d: d.repartition(6), wd,
-              run_id="r1")
-    run_stage(spark, "s", mk(0, 35), lambda d: d.repartition(6), wd,
-              run_id="r2")
-    path = os.path.join(wd, "s")
-    files_before = len(_data_files(path))
-    assert files_before >= 12
-
-    want = sorted(r["url"] for r in read_snapshot(spark, wd, "s").collect())
-    snap = compact_stage(spark, wd, "s")
-    assert snap["version"] == 3 and len(snap["manifest"]) <= 2
-
-    # head reads the compacted files, identical content
-    got = sorted(r["url"] for r in read_snapshot(spark, wd, "s").collect())
-    assert got == want
-    # time travel to the pre-compaction versions still works
-    assert read_snapshot(spark, wd, "s", version=1).count() == 20
-    assert read_snapshot(spark, wd, "s", version=2).count() == 35
-
-    # expire everything but the head, vacuum the unreferenced originals
-    assert expire_snapshots(wd, "s") == 2
-    removed = vacuum_stage(wd, "s")
-    assert len(removed) == files_before
-    assert [s["version"] for s in snapshots(wd, "s")] == [3]
-    assert sorted(r["url"]
-                  for r in read_snapshot(spark, wd, "s").collect()) == want
-    assert len(_data_files(path)) == len(snap["manifest"])
 
 
 def test_bucketed_workdir_from_older_engine_resumes_plain(spark, tmp_path):
@@ -370,105 +303,3 @@ def test_bucketed_workdir_from_older_engine_resumes_plain(spark, tmp_path):
     added = spark.read.parquet(*[os.path.join(path, f) for f in head["added"]])
     assert sorted(r["url"] for r in added.collect()) == sorted(
         f"u{i}" for i in range(20, 50))
-
-
-def test_expire_snapshots_keeps_head(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from origami_spark.plans.runner import run_stage
-    from origami_spark.plans.snapshots import expire_snapshots, snapshots
-
-    wd = str(tmp_path / "wd")
-    df = spark.range(5).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-    run_stage(spark, "s", df, lambda d: d, wd, run_id="r1")
-    assert expire_snapshots(wd, "s") == 0  # nothing to drop
-    assert [s["version"] for s in snapshots(wd, "s")] == [1]
-
-
-def test_compact_reclaim_removes_old_generation_immediately(spark, tmp_path):
-    """compact_stage then expire_snapshots + vacuum_stage leaves only
-    the compacted files on disk (raw-dir readers see one generation)
-    and only the head snapshot."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from origami_spark.plans.runner import compact_stage, run_stage
-    from origami_spark.plans.snapshots import (
-        _data_files,
-        expire_snapshots,
-        read_snapshot,
-        snapshots,
-        vacuum_stage,
-    )
-
-    wd = str(tmp_path / "wd")
-    df = spark.range(30).select(F.concat(F.lit("u"), F.col("id")).alias("url"))
-    run_stage(spark, "s", df, lambda d: d.repartition(5), wd, run_id="r1")
-    snap = compact_stage(spark, wd, "s")
-    expire_snapshots(wd, "s")
-    vacuum_stage(wd, "s")
-    path = os.path.join(wd, "s")
-    assert sorted(_data_files(path)) == sorted(snap["manifest"])
-    assert [x["version"] for x in snapshots(wd, "s")] == [snap["version"]]
-    assert read_snapshot(spark, wd, "s").count() == 30
-
-
-def test_snapshot_diff_reads_only_the_delta(spark, tmp_path):
-    import pyspark.sql.functions as F
-    import pytest
-
-    from origami_spark.plans.runner import run_stage
-    from origami_spark.plans.snapshots import snapshot_diff
-
-    wd = str(tmp_path / "wd")
-    mk = lambda lo, hi: spark.range(lo, hi).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url"))
-    run_stage(spark, "s", mk(0, 10), lambda d: d, wd, run_id="r1")
-    run_stage(spark, "s", mk(0, 25), lambda d: d, wd, run_id="r2")
-    run_stage(spark, "s", mk(0, 25), lambda d: d, wd, run_id="r3")  # no-op
-
-    delta = snapshot_diff(spark, wd, "s", from_version=1)
-    urls = sorted(r["url"] for r in delta.select("url").collect())
-    assert urls == sorted(f"u{i}" for i in range(10, 25))
-    assert snapshot_diff(spark, wd, "s", 1, 1).count() == 0
-    # fully-resumed r3 committed nothing new
-    from origami_spark.plans.snapshots import snapshots
-
-    head = snapshots(wd, "s")[-1]["version"]
-    assert snapshot_diff(spark, wd, "s", 2, head).count() == 0
-    with pytest.raises(ValueError):
-        snapshot_diff(spark, wd, "s", 99)
-    with pytest.raises(ValueError):
-        snapshot_diff(spark, wd, "s", 2, 1)
-
-
-def test_snapshot_diff_schema_and_rewrite_barrier(spark, tmp_path):
-    """The delta's schema matches read_snapshot (internal columns
-    dropped) whether empty or not, and a range spanning a rewrite
-    commit raises instead of re-ingesting the whole table."""
-    import pyspark.sql.functions as F
-    import pytest
-
-    from origami_spark.plans.runner import compact_stage, run_stage
-    from origami_spark.plans.snapshots import read_snapshot, snapshot_diff
-
-    wd = str(tmp_path / "wd")
-    mk = lambda hi: spark.range(hi).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url"))
-    run_stage(spark, "s", mk(8), lambda d: d, wd, run_id="r1")
-    run_stage(spark, "s", mk(20), lambda d: d, wd, run_id="r2")
-
-    head_cols = read_snapshot(spark, wd, "s").columns
-    assert snapshot_diff(spark, wd, "s", 1, 2).columns == head_cols
-    assert snapshot_diff(spark, wd, "s", 2, 2).columns == head_cols  # empty
-    # unionByName with the committed view must not raise
-    read_snapshot(spark, wd, "s").unionByName(
-        snapshot_diff(spark, wd, "s", 1, 2)).count()
-
-    compact_stage(spark, wd, "s")
-    with pytest.raises(ValueError, match="rewrite commit"):
-        snapshot_diff(spark, wd, "s", 1)
-    # diffs entirely after the rewrite work again
-    run_stage(spark, "s", mk(26), lambda d: d, wd, run_id="r4")
-    assert snapshot_diff(spark, wd, "s", 3).count() == 6
